@@ -226,15 +226,9 @@ HEADLINE = [
     "sql_region_orders",
     "dedup_jaccard_prefix",
     "dedup_tfidf_cosine",
-    "cohort_retention",
-    "funnel_conversion",
-    "json_props_stats",
     "retrieval_rrf",
-    "event_transitions",
     "table_profile",
     "length_outliers",
-    "attribution_last_touch",
-    "event_type_drift",
     "sql_priority_census",
     "kg_bgp_match",
     "kg_bgp_optional",
@@ -244,7 +238,6 @@ HEADLINE = [
     "cdc_apply",
     "cdc_audit",
     "pack_sequences",
-    "event_volume_anomaly",
     "dedup_incremental",
     "k_anonymity",
     "fk_integrity",
@@ -259,7 +252,6 @@ HEADLINE = [
     "kg_clustering_coeff",
     "sql_pricing_summary",
     "mad_outliers",
-    "event_seq_patterns",
     "scd2_build",
     "novelty_rate",
     "scd2_lookup",
@@ -275,7 +267,6 @@ HEADLINE = [
     "ks_drift",
     "label_balance",
     "fd_violations",
-    "user_cadence",
     "view_drift",
 ]
 

@@ -6755,91 +6755,6 @@ def dedup_tfidf_cosine_q(spark, sf_dir):
     return tfidf_cosine_pairs(_t(spark, sf_dir, "documents"), shingle_k=3)
 
 
-# -- Event-log analytics ------------------------------------------------------
-
-_COHORT_SQL = """
-WITH first AS (
-  SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day
-  FROM events GROUP BY 1)
-SELECT f.cohort_day,
-       date_diff('day', f.cohort_day, CAST(e.ts AS DATE))::BIGINT
-         AS day_offset,
-       count(DISTINCT e.user_id)::BIGINT AS n_users
-FROM events e JOIN first f ON f.user_id = e.user_id
-GROUP BY 1, 2
-"""
-
-
-@_register("cohort_retention", _COHORT_SQL)
-def cohort_retention_q(spark, sf_dir):
-    """Cohort retention census: users grouped by first-seen day,
-    distinct-active counted per integer day offset. One user-keyed
-    partial-agg min + one user-keyed join + one partial-aggregatable
-    count-distinct — no event x event self-join, integer day math
-    (datapipe/events.py cohort_retention)."""
-    from .datapipe.events import cohort_retention
-
-    return cohort_retention(_t(spark, sf_dir, "events"))
-
-
-_FUNNEL_SQL = """
-WITH anchors AS (
-  SELECT user_id, min(ts) AS t1 FROM events
-  WHERE event_type = 'signup' GROUP BY 1),
-conv AS (
-  SELECT DISTINCT e.user_id
-  FROM events e JOIN anchors a ON a.user_id = e.user_id
-  WHERE e.event_type = 'purchase'
-    AND e.ts >= a.t1 AND e.ts <= a.t1 + INTERVAL 7 DAY)
-SELECT (SELECT count(DISTINCT user_id) FROM events)::BIGINT AS n_users,
-       (SELECT count(*) FROM anchors)::BIGINT AS n_step1,
-       (SELECT count(*) FROM conv)::BIGINT AS n_converted,
-       (CASE WHEN (SELECT count(*) FROM anchors) = 0 THEN 0
-             ELSE ((SELECT count(*) FROM conv) * 1000000)
-                  // (SELECT count(*) FROM anchors) END)::BIGINT
-         AS conversion_ppm
-"""
-
-
-@_register("funnel_conversion", _FUNNEL_SQL)
-def funnel_conversion_q(spark, sf_dir):
-    """Funnel conversion signup -> purchase within 7 days: per-user
-    step-1 anchor is a partial-agg min; step-2 events join the
-    users-sized anchor table (never an event x event self-join) with
-    the window as a residual range predicate
-    (datapipe/events.py funnel_conversion)."""
-    from .datapipe.events import funnel_conversion
-
-    return funnel_conversion(_t(spark, sf_dir, "events"))
-
-
-_PROPS_SQL = """
-SELECT event_type,
-       count(*)::BIGINT AS n_events,
-       sum(CAST(json_extract_string(props, '$.k') AS BIGINT))::BIGINT
-         AS sum_k,
-       max(CAST(json_extract_string(props, '$.k') AS BIGINT))::BIGINT
-         AS max_k
-FROM events GROUP BY 1
-"""
-
-
-@_register("json_props_stats", _PROPS_SQL)
-def json_props_stats_q(spark, sf_dir):
-    """Semi-structured column extraction: pull an integer field out of
-    the JSON props string (get_json_object — row-local, codegen'd, no
-    UDF) and aggregate per event type. The path expression stays in the
-    scan stage, so at 100 TB this is one pass with column pruning to
-    (event_type, props)."""
-    ev = _t(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("long")
-    return ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum(k).cast("long").alias("sum_k"),
-        F.max(k).cast("long").alias("max_k"),
-    )
-
-
 _RRF_SQL = f"""
 WITH {_BM25_CHAIN},
 bm AS (SELECT qid, doc_id, rank FROM rk WHERE rank <= 10),
@@ -6955,91 +6870,6 @@ def retrieval_quality_q(spark, sf_dir):
     return retrieval_quality(bm, qrels, k=10, cut=5)
 
 
-_SEQPAT_SQL = """
-WITH ev AS (SELECT user_id AS u, event_type AS t, ts, event_id AS i
-            FROM events),
-fa AS (SELECT u, t AS a, min(struct_pack(ts := ts, i := i)) AS ka
-       FROM ev GROUP BY 1, 2),
-fb AS (SELECT ev.u, fa.a, ev.t AS b,
-              min(struct_pack(ts := ev.ts, i := ev.i)) AS kb
-       FROM ev JOIN fa ON fa.u = ev.u
-       WHERE struct_pack(ts := ev.ts, i := ev.i) > ka
-       GROUP BY 1, 2, 3),
-fc AS (SELECT DISTINCT ev.u, fb.a, fb.b, ev.t AS c
-       FROM ev JOIN fb ON fb.u = ev.u
-       WHERE struct_pack(ts := ev.ts, i := ev.i) > kb),
-nu AS (SELECT count(DISTINCT user_id)::BIGINT AS n_total FROM events)
-SELECT a, b, c, count(*)::BIGINT AS n_users,
-       ((count(*) * 1000000) // n_total)::BIGINT AS support_ppm
-FROM fc CROSS JOIN nu
-GROUP BY a, b, c, n_total
-"""
-
-
-@_register("event_seq_patterns", _SEQPAT_SQL)
-def event_seq_patterns_q(spark, sf_dir):
-    """Length-3 sequential-pattern user support over the event log —
-    PrefixSpan's 3-item tier with existence semantics, computed via
-    greedy-earliest chains (three user-keyed min(struct) stages bounded
-    by users × type-domain², never the cubic event-triple join)
-    (datapipe/events.py sequential_patterns)."""
-    from .datapipe.events import sequential_patterns
-
-    return sequential_patterns(_t(spark, sf_dir, "events"))
-
-
-_CADENCE_SQL = """
-WITH g AS (
-  SELECT user_id AS u, CAST(floor(epoch(ts)) AS BIGINT) AS t,
-         lead(CAST(floor(epoch(ts)) AS BIGINT))
-           OVER (PARTITION BY user_id ORDER BY ts, event_id) AS nxt
-  FROM events)
-SELECT u AS user_id, count(*)::BIGINT AS n_events,
-       (max(t) - min(t))::BIGINT AS span_s,
-       coalesce(min(nxt - t), 0)::BIGINT AS min_gap_s,
-       ((max(t) - min(t)) // greatest(count(*) - 1, 1))::BIGINT AS avg_gap_s,
-       coalesce(max(nxt - t), 0)::BIGINT AS max_gap_s
-FROM g GROUP BY u
-"""
-
-
-@_register("user_cadence", _CADENCE_SQL)
-def user_cadence_q(spark, sf_dir):
-    """Per-user inter-event cadence: count, active span, min/avg/max
-    gap in integer seconds — one user-partitioned lead() window (sort
-    bounded per user) + one partial aggregate
-    (datapipe/events.py user_cadence)."""
-    from .datapipe.events import user_cadence
-
-    return user_cadence(_t(spark, sf_dir, "events"))
-
-
-_TRANSITIONS_SQL = """
-WITH seq AS (
-  SELECT event_type AS from_type,
-         lead(event_type) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS to_type
-  FROM events),
-pairs AS (SELECT from_type, to_type, count(*)::BIGINT AS n
-          FROM seq WHERE to_type IS NOT NULL GROUP BY 1, 2),
-tot AS (SELECT from_type, sum(n)::BIGINT AS n_from FROM pairs GROUP BY 1)
-SELECT p.from_type, p.to_type, p.n,
-       ((p.n * 1000000) // t.n_from)::BIGINT AS p_ppm
-FROM pairs p JOIN tot t ON t.from_type = p.from_type
-"""
-
-
-@_register("event_transitions", _TRANSITIONS_SQL)
-def event_transitions_q(spark, sf_dir):
-    """First-order Markov transitions over per-user event sequences
-    with integer transition probabilities; event_id tiebreak makes the
-    sequence partition-invariant; one user-keyed window, no global
-    sort (datapipe/events.py event_transitions)."""
-    from .datapipe.events import event_transitions
-
-    return event_transitions(_t(spark, sf_dir, "events"))
-
-
 def _profile_sql() -> str:
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
     aggs = ["count(*)::BIGINT AS n"]
@@ -7100,66 +6930,6 @@ def length_outliers_q(spark, sf_dir):
     from .datapipe.textstats import length_outliers
 
     return length_outliers(_t(spark, sf_dir, "documents"), k_sigma2=2)
-
-
-_ATTRIB_SQL = """
-WITH tch AS (
-  SELECT event_type AS et,
-         last_value(CASE WHEN event_type <> 'purchase' THEN event_type END
-                    IGNORE NULLS)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           AS touch_type
-  FROM events),
-cr AS (SELECT touch_type, count(*)::BIGINT AS n_conversions
-       FROM tch WHERE et = 'purchase' AND touch_type IS NOT NULL
-       GROUP BY 1),
-tot AS (SELECT sum(n_conversions)::BIGINT AS n_total FROM cr)
-SELECT cr.touch_type, cr.n_conversions,
-       ((cr.n_conversions * 1000000) // tot.n_total)::BIGINT AS share_ppm
-FROM cr CROSS JOIN tot
-"""
-
-
-@_register("attribution_last_touch", _ATTRIB_SQL)
-def attribution_last_touch_q(spark, sf_dir):
-    """Last-touch conversion attribution: fill-forward of the most
-    recent non-conversion event per user (one ordered window with
-    ignore-nulls last_value, event_id tiebreak → partition-invariant),
-    credit tallies + integer shares
-    (datapipe/events.py attribution_last_touch)."""
-    from .datapipe.events import attribution_last_touch
-
-    return attribution_last_touch(_t(spark, sf_dir, "events"))
-
-
-_DRIFT_SQL = """
-WITH base AS (
-  SELECT event_type, CAST(ts AS DATE) AS day, count(*)::BIGINT AS n
-  FROM events GROUP BY 1, 2),
-dt AS (SELECT day, sum(n)::BIGINT AS n_day FROM base GROUP BY 1),
-tt AS (SELECT event_type, sum(n)::BIGINT AS n_type FROM base GROUP BY 1),
-tot AS (SELECT sum(n)::BIGINT AS n_total FROM base)
-SELECT b.event_type, b.day, b.n,
-       ((b.n * 1000000) // dt.n_day)::BIGINT AS daily_share_ppm,
-       ((tt.n_type * 1000000) // tot.n_total)::BIGINT AS overall_share_ppm,
-       abs((b.n * 1000000) // dt.n_day
-           - (tt.n_type * 1000000) // tot.n_total)::BIGINT AS drift_ppm
-FROM base b JOIN dt ON dt.day = b.day
-JOIN tt ON tt.event_type = b.event_type
-CROSS JOIN tot
-"""
-
-
-@_register("event_type_drift", _DRIFT_SQL)
-def event_type_drift_q(spark, sf_dir):
-    """Event-mix drift monitor: per-type daily share vs overall share
-    in integer ppm. One log scan feeds a (type x day) census; all
-    totals are aggregates of the census, broadcast back
-    (datapipe/events.py type_share_drift)."""
-    from .datapipe.events import type_share_drift
-
-    return type_share_drift(_t(spark, sf_dir, "events"))
 
 
 # second shared-string SQL-surface query: a selective date predicate that
@@ -7882,45 +7652,6 @@ def pack_sequences_q(spark, sf_dir):
 
 
 ORACLES["pack_sequences"] = _pack_oracle()
-
-
-# --- event-volume anomaly monitor ------------------------------------------
-
-_ANOM_W = 3
-_ANOM_K = 4
-
-_ANOM_SQL = f"""
-WITH base AS (
-  SELECT event_type, CAST(ts AS DATE) AS day, count(*)::BIGINT AS n
-  FROM events GROUP BY 1, 2),
-tr AS (
-  SELECT event_type, day, n,
-         sum(n) OVER w AS s, sum(n * n) OVER w AS s2, count(*) OVER w AS c
-  FROM base
-  WINDOW w AS (PARTITION BY event_type ORDER BY day
-               ROWS BETWEEN {_ANOM_W} PRECEDING AND 1 PRECEDING))
-SELECT event_type, day, n,
-       (s // c)::BIGINT AS trail_mean,
-       (s2 // c - (s // c) * (s // c))::BIGINT AS trail_var,
-       ((n - s // c) * (n - s // c))::BIGINT AS dev2,
-       (n - s // c) * (n - s // c)
-         > {_ANOM_K} * greatest(s2 // c - (s // c) * (s // c), 1) AS is_anomaly
-FROM tr WHERE c = {_ANOM_W}
-"""
-
-
-@_register("event_volume_anomaly", _ANOM_SQL)
-def event_volume_anomaly_q(spark, sf_dir):
-    """Ingest health-check: per (type, day) event counts tested against
-    the trailing-3-day integer moving moments ((n-mean)^2 > 4*var,
-    floor-arithmetic — engine-exact); the window runs over the tiny
-    (type x day) census partitioned by type, never the raw log
-    (datapipe/events.py volume_anomaly)."""
-    from .datapipe.events import volume_anomaly
-
-    return volume_anomaly(
-        _t(spark, sf_dir, "events"), window_days=_ANOM_W, k_sigma2=_ANOM_K
-    )
 
 
 # --- incremental (nightly-batch) near-dup check -----------------------------

@@ -667,21 +667,6 @@ def test_pack_sequences_distributed_prefix_sum(spark):
             assert "PartitionSpec: []" not in seg, seg
 
 
-def test_volume_anomaly_window_over_census_only(spark):
-    """The trailing-moments window must run over the (type, day) census
-    partitioned BY TYPE — a partial-agg groupBy below it, a non-empty
-    window partition spec, and no SinglePartition exchange."""
-    from genie_spark.datapipe.events import volume_anomaly
-
-    df = volume_anomaly(_t(spark, "events"))
-    plan = _plan(df)
-    assert "SinglePartition" not in plan, plan
-    assert "partial_count" in plan or "Partial" in plan, plan
-    for seg in plan.split("\n\n"):
-        if seg.startswith("(") and ") Window" in seg.split("\n")[0]:
-            assert "PartitionSpec: []" not in seg, seg
-
-
 def test_assoc_rules_no_cartesian(spark):
     """Pair generation must be the basket-keyed equi-join: no
     CartesianProduct / BroadcastNestedLoop anywhere except the 1-row
@@ -726,18 +711,6 @@ def test_mad_and_ranknorm_windows_census_partitioned(spark):
         for seg in plan.split("\n\n"):
             if seg.startswith("(") and ") Window" in seg.split("\n")[0]:
                 assert "PartitionSpec: []" not in seg, seg
-
-
-def test_seq_patterns_no_event_triple_join(spark):
-    """The greedy-earliest construction must keep every stage a
-    user-keyed equi-join + partial aggregate — no cartesian, and the
-    min(struct) folds must partial-aggregate (map-side combine)."""
-    from genie_spark.datapipe.events import sequential_patterns
-
-    df = sequential_patterns(_t(spark, "events"))
-    tree = _tree(df)
-    assert "CartesianProduct" not in tree, tree
-    assert "partial_min" in _plan(df) or "Partial" in _plan(df), _plan(df)
 
 
 def test_ivm_refresh_no_second_base_aggregation(spark):

@@ -235,15 +235,12 @@ HEADLINE = [
     "kg_bgp_negation",
     "zorder_layout",
     "bloom_join_prune",
-    "cdc_apply",
-    "cdc_audit",
     "pack_sequences",
     "dedup_incremental",
     "k_anonymity",
     "fk_integrity",
     "auc_eval",
     "retrieval_quality",
-    "ivm_refresh",
     "kneser_ney_bigram",
     "leakage_safe_split",
     "classifier_report",
@@ -252,9 +249,7 @@ HEADLINE = [
     "kg_clustering_coeff",
     "sql_pricing_summary",
     "mad_outliers",
-    "scd2_build",
     "novelty_rate",
-    "scd2_lookup",
     "vocab_growth",
     "class_term_lift",
     "rank_normalize",
@@ -267,7 +262,6 @@ HEADLINE = [
     "ks_drift",
     "label_balance",
     "fd_violations",
-    "view_drift",
 ]
 
 

@@ -7133,88 +7133,6 @@ FROM joined
 """
 
 
-_CDC_SRC_SQL = """
-snap AS (SELECT o_orderkey AS k, o_orderstatus AS pay
-         FROM orders WHERE o_orderkey % 4 <> 3),
-chg AS (
-  SELECT o_orderkey AS k, 'upsert' AS op,
-         'U' || o_orderpriority AS pay, o_orderdate AS ts,
-         o_orderkey AS cid
-  FROM orders WHERE o_orderkey % 3 = 0
-  UNION ALL
-  SELECT o_orderkey, 'delete', NULL,
-         o_orderdate + INTERVAL 1 DAY, o_orderkey + 1000000
-  FROM orders WHERE o_orderkey % 7 = 0),
-win AS (SELECT k, max(struct_pack(ts := ts, cid := cid,
-                                  op := op, pay := pay)) AS w
-        FROM chg GROUP BY k),
-wf AS (SELECT k, w.op AS op, w.pay AS cpay FROM win),
-mrg AS (SELECT coalesce(s.k, c.k) AS k, s.pay AS spay, c.op, c.cpay,
-               s.k IS NOT NULL AS snap_present
-        FROM snap s FULL OUTER JOIN wf c ON c.k = s.k),
-res AS (SELECT k, CASE WHEN op = 'upsert' THEN cpay ELSE spay END AS pay
-        FROM mrg WHERE (op IS NULL AND snap_present) OR op = 'upsert')
-"""
-
-
-def _cdc_changes(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    snap = o.filter(F.col("o_orderkey") % 4 != 3).select(
-        F.col("o_orderkey").alias("k"), F.col("o_orderstatus").alias("pay")
-    )
-    up = o.filter(F.col("o_orderkey") % 3 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.lit("upsert").alias("op"),
-        F.concat(F.lit("U"), F.col("o_orderpriority")).alias("pay"),
-        F.col("o_orderdate").alias("ts"),
-        F.col("o_orderkey").alias("change_id"),
-    )
-    dl = o.filter(F.col("o_orderkey") % 7 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.lit("delete").alias("op"),
-        F.lit(None).cast("string").alias("pay"),
-        F.expr("o_orderdate + INTERVAL 1 DAY").alias("ts"),
-        (F.col("o_orderkey") + 1000000).alias("change_id"),
-    )
-    return snap, up.unionByName(dl)
-
-
-@_register("cdc_apply", f"WITH {_CDC_SRC_SQL} SELECT k, pay FROM res")
-def cdc_apply_q(spark, sf_dir):
-    """MERGE INTO semantics: snapshot + change log (upserts + deletes,
-    deletes stamped later so they win overlaps) reconciled in one plan
-    — partial-agg struct-max fold to the winning change per key (no
-    per-key history sort), ONE full-outer join, row-local fate CASE
-    (datapipe/cdc.py apply_changes)."""
-    from .datapipe.cdc import apply_changes
-
-    snap, chg = _cdc_changes(spark, sf_dir)
-    return apply_changes(snap, chg, "k", "pay")
-
-
-@_register(
-    "cdc_audit",
-    f"""
-WITH {_CDC_SRC_SQL}
-SELECT (SELECT count(*) FROM snap)::BIGINT AS n_snapshot,
-       (SELECT count(*) FROM chg)::BIGINT AS n_changes,
-       (SELECT count(*) FROM res)::BIGINT AS n_result,
-       (SELECT count(*) FROM res
-        WHERE k NOT IN (SELECT k FROM snap))::BIGINT AS n_inserted,
-       (SELECT count(*) FROM snap
-        WHERE k NOT IN (SELECT k FROM res))::BIGINT AS n_deleted
-""",
-)
-def cdc_audit_q(spark, sf_dir):
-    """The MERGE INTO report row: snapshot/changes/result sizes plus
-    inserted and deleted key counts (anti-joins against the merged
-    result) (datapipe/cdc.py apply_changes_audit)."""
-    from .datapipe.cdc import apply_changes_audit
-
-    snap, chg = _cdc_changes(spark, sf_dir)
-    return apply_changes_audit(snap, chg, "k", "pay")
-
-
 _ASSOC_SQL = """
 WITH b AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS i FROM lineitem),
 keep AS (SELECT o FROM b GROUP BY o HAVING count(*) <= 64),
@@ -7290,81 +7208,6 @@ def kneser_ney_bigram_q(spark, sf_dir):
     from .datapipe.vocab import kneser_ney_bigrams
 
     return kneser_ney_bigrams(_t(spark, sf_dir, "documents"), min_count=3)
-
-
-_IVM_CHAIN = """
-snap AS (SELECT o_orderkey AS k, o_orderpriority AS grp,
-                CAST(floor(o_totalprice) AS BIGINT) AS val
-         FROM orders WHERE o_orderkey % 4 <> 3),
-chg AS (
-  SELECT o_orderkey AS k, 'upsert' AS op, 'P-' || o_orderstatus AS grp,
-         CAST(floor(o_totalprice / 2) AS BIGINT) AS val,
-         o_orderdate AS ts, o_orderkey AS cid
-  FROM orders WHERE o_orderkey % 3 = 0
-  UNION ALL
-  SELECT o_orderkey, 'delete', NULL, NULL,
-         o_orderdate + INTERVAL 1 DAY, o_orderkey + 1000000
-  FROM orders WHERE o_orderkey % 7 = 0),
-win AS (SELECT k, max(struct_pack(ts := ts, cid := cid, op := op,
-                                  grp := grp, val := val)) AS w
-        FROM chg GROUP BY k),
-wf AS (SELECT k, w.op AS op, w.grp AS cgrp, w.val AS cval FROM win),
-mrg AS (SELECT s.grp AS sgrp, s.val AS sval, c.op, c.cgrp, c.cval,
-               s.k IS NOT NULL AS snap_present
-        FROM snap s FULL OUTER JOIN wf c ON c.k = s.k),
-res AS (SELECT CASE WHEN op = 'upsert' THEN cgrp ELSE sgrp END AS grp,
-               CASE WHEN op = 'upsert' THEN cval ELSE sval END AS val
-        FROM mrg WHERE (op IS NULL AND snap_present) OR op = 'upsert')
-"""
-
-_IVM_SQL = f"""
-WITH {_IVM_CHAIN}
-SELECT grp, count(*)::BIGINT AS n_rows, sum(val)::BIGINT AS sum_val
-FROM res GROUP BY 1
-"""
-
-
-def _ivm_inputs(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    snap = o.filter(F.col("o_orderkey") % 4 != 3).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("grp"),
-        F.expr("CAST(floor(o_totalprice) AS BIGINT)").alias("val"),
-    )
-    up = o.filter(F.col("o_orderkey") % 3 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.lit("upsert").alias("op"),
-        F.concat(F.lit("P-"), F.col("o_orderstatus")).alias("grp"),
-        F.expr("CAST(floor(o_totalprice / 2) AS BIGINT)").alias("val"),
-        F.col("o_orderdate").alias("ts"),
-        F.col("o_orderkey").alias("change_id"),
-    )
-    dl = o.filter(F.col("o_orderkey") % 7 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.lit("delete").alias("op"),
-        F.lit(None).cast("string").alias("grp"),
-        F.lit(None).cast("long").alias("val"),
-        F.expr("o_orderdate + INTERVAL 1 DAY").alias("ts"),
-        (F.col("o_orderkey") + 1000000).alias("change_id"),
-    )
-    return snap, up.unionByName(dl)
-
-
-@_register("ivm_refresh", _IVM_SQL)
-def ivm_refresh_q(spark, sf_dir):
-    """Incremental materialized-view maintenance: the per-group
-    (count, sum) view refreshed from a CDC change log WITHOUT
-    re-aggregating the base table — winning change per key via the
-    partial-agg struct-max fold, old values via ONE changed-keys-sized
-    equi-join, row-local retract/add delta rows, per-group delta
-    partial-agg, one group-keyed patch join (zero-count groups drop).
-    The DuckDB oracle is the FULL recompute over the merged table, so
-    the hash match proves incremental == full
-    (datapipe/cdc.py incremental_view_refresh)."""
-    from .datapipe.cdc import incremental_view_refresh
-
-    snap, chg = _ivm_inputs(spark, sf_dir)
-    return incremental_view_refresh(snap, chg, "k", "grp", "val")
 
 
 _TERM_LIFT_SQL = """
@@ -7456,174 +7299,6 @@ def vocab_growth_q(spark, sf_dir):
     from .datapipe.dedup import vocab_growth
 
     return vocab_growth(_t(spark, sf_dir, "documents"))
-
-
-_SCD2_CHG_SQL = """
-chg2 AS (
-  SELECT o_orderkey AS k, 'upsert' AS op, 'V1-' || o_orderpriority AS pay,
-         o_orderdate AS ts, o_orderkey AS cid
-  FROM orders WHERE o_orderkey % 3 = 0
-  UNION ALL
-  SELECT o_orderkey, 'upsert', 'V2-' || o_orderstatus,
-         o_orderdate + INTERVAL 30 DAY, o_orderkey + 1000000
-  FROM orders WHERE o_orderkey % 6 = 0
-  UNION ALL
-  SELECT o_orderkey, 'delete', NULL,
-         o_orderdate + INTERVAL 60 DAY, o_orderkey + 2000000
-  FROM orders WHERE o_orderkey % 7 = 0)
-"""
-
-_SCD2_SQL = f"""
-WITH {_SCD2_CHG_SQL},
-led AS (SELECT k, op, pay, ts,
-               lead(ts) OVER (PARTITION BY k ORDER BY ts, cid) AS next_ts
-        FROM chg2)
-SELECT k, pay, ts AS valid_from, next_ts AS valid_to,
-       (next_ts IS NULL)::BIGINT AS is_current
-FROM led WHERE op = 'upsert'
-"""
-
-
-def _scd2_changes(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    v1 = o.filter(F.col("o_orderkey") % 3 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.lit("upsert").alias("op"),
-        F.concat(F.lit("V1-"), F.col("o_orderpriority")).alias("pay"),
-        F.col("o_orderdate").alias("ts"),
-        F.col("o_orderkey").alias("change_id"),
-    )
-    v2 = o.filter(F.col("o_orderkey") % 6 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.lit("upsert").alias("op"),
-        F.concat(F.lit("V2-"), F.col("o_orderstatus")).alias("pay"),
-        F.expr("o_orderdate + INTERVAL 30 DAY").alias("ts"),
-        (F.col("o_orderkey") + 1000000).alias("change_id"),
-    )
-    dl = o.filter(F.col("o_orderkey") % 7 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.lit("delete").alias("op"),
-        F.lit(None).cast("string").alias("pay"),
-        F.expr("o_orderdate + INTERVAL 60 DAY").alias("ts"),
-        (F.col("o_orderkey") + 2000000).alias("change_id"),
-    )
-    return v1.unionByName(v2).unionByName(dl)
-
-
-@_register("scd2_build", _SCD2_SQL)
-def scd2_build_q(spark, sf_dir):
-    """Type-2 slowly-changing dimension build: version rows with
-    [valid_from, valid_to) intervals from a multi-generation change
-    log (two upsert generations + deletes that close intervals) — one
-    key-partitioned lead() window bounded by per-key history length,
-    deterministic under ties via the (ts, change_id) total order
-    (datapipe/cdc.py scd2_build)."""
-    from .datapipe.cdc import scd2_build
-
-    return scd2_build(_scd2_changes(spark, sf_dir), "k", "pay")
-
-
-@_register(
-    "scd2_lookup",
-    f"""
-WITH {_SCD2_CHG_SQL},
-led AS (SELECT k, op, pay, ts,
-               lead(ts) OVER (PARTITION BY k ORDER BY ts, cid) AS next_ts
-        FROM chg2),
-dim AS (SELECT k, pay, ts AS valid_from, next_ts AS valid_to
-        FROM led WHERE op = 'upsert'),
-pr AS (SELECT o_orderkey AS k, o_orderdate + INTERVAL 45 DAY AS probe_ts
-       FROM orders WHERE o_orderkey % 3 = 0)
-SELECT pr.k, probe_ts, pay, valid_from, valid_to
-FROM pr JOIN dim ON dim.k = pr.k
-WHERE probe_ts >= valid_from
-  AND (valid_to IS NULL OR probe_ts < valid_to)
-""",
-)
-def scd2_lookup_q(spark, sf_dir):
-    """Point-in-time lookup against the SCD2 dimension: each probe
-    (key, ts at +45 days) lands in exactly one version's
-    [valid_from, valid_to) interval — probes whose key's generation-2
-    upsert already superseded v1 resolve to v2; probes after a delete
-    (gap) drop. One key-partitioned equi-join + row-local interval
-    predicate; SCD2 disjointness means no post-join dedup
-    (datapipe/cdc.py scd2_lookup, scd2_build)."""
-    from .datapipe.cdc import scd2_build, scd2_lookup
-
-    dim = scd2_build(_scd2_changes(spark, sf_dir), "k", "pay").drop(
-        "is_current"
-    )
-    o = _t(spark, sf_dir, "orders")
-    probes = o.filter(F.col("o_orderkey") % 3 == 0).select(
-        F.col("o_orderkey").alias("k"),
-        F.expr("o_orderdate + INTERVAL 45 DAY").alias("probe_ts"),
-    )
-    return scd2_lookup(dim, probes, "k").select(
-        "k", "probe_ts", "pay", "valid_from", "valid_to"
-    )
-
-
-@_register(
-    "view_drift",
-    f"""
-WITH {_IVM_CHAIN},
-new_v AS (SELECT grp, count(*)::BIGINT AS n_rows, sum(val)::BIGINT AS sum_val
-          FROM res GROUP BY 1),
-old_v AS (SELECT grp, count(*)::BIGINT AS n_rows, sum(val)::BIGINT AS sum_val
-          FROM snap GROUP BY 1)
-SELECT coalesce(o.grp, n.grp) AS grp,
-       coalesce(o.n_rows, 0)::BIGINT AS old_rows,
-       coalesce(n.n_rows, 0)::BIGINT AS new_rows,
-       coalesce(o.sum_val, 0)::BIGINT AS old_sum,
-       coalesce(n.sum_val, 0)::BIGINT AS new_sum,
-       ((coalesce(n.n_rows, 0) - coalesce(o.n_rows, 0)) * 1000000
-        // greatest(coalesce(o.n_rows, 0), 1))::BIGINT AS rows_delta_ppm
-FROM old_v o FULL OUTER JOIN new_v n ON n.grp = o.grp
-""",
-)
-def view_drift_q(spark, sf_dir):
-    """Materialized-view drift report across a CDC refresh — the
-    data-diff a pipeline logs per batch: per group, before/after row
-    and sum totals plus the signed row-count delta in ppm of the old
-    size (new/vanished groups included via the full-outer diff). The
-    new side is the INCREMENTAL refresh (cdc.incremental_view_refresh),
-    so this also continuously exercises IVM == full-recompute; the diff
-    itself is one group-keyed full-outer join of two view-sized
-    tables."""
-    from .datapipe.cdc import incremental_view_refresh
-
-    snap, chg = _ivm_inputs(spark, sf_dir)
-    new_v = incremental_view_refresh(snap, chg, "k", "grp", "val")
-    old_v = snap.groupBy("grp").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("val").cast("long").alias("sum_val"),
-    )
-    z = F.lit(0).cast("long")
-    o = old_v.select(
-        "grp", F.col("n_rows").alias("old_rows"),
-        F.col("sum_val").alias("old_sum"),
-    )
-    n = new_v.select(
-        "grp", F.col("n_rows").alias("new_rows"),
-        F.col("sum_val").alias("new_sum"),
-    )
-    return (
-        o.join(n, "grp", "full_outer")
-        .select(
-            "grp",
-            F.coalesce("old_rows", z).alias("old_rows"),
-            F.coalesce("new_rows", z).alias("new_rows"),
-            F.coalesce("old_sum", z).alias("old_sum"),
-            F.coalesce("new_sum", z).alias("new_sum"),
-        )
-        .withColumn(
-            "rows_delta_ppm",
-            F.expr(
-                "((new_rows - old_rows) * 1000000L)"
-                " div greatest(old_rows, 1L)"
-            ),
-        )
-    )
 
 
 # --- training-sequence packing census -------------------------------------

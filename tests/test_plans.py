@@ -713,18 +713,6 @@ def test_mad_and_ranknorm_windows_census_partitioned(spark):
                 assert "PartitionSpec: []" not in seg, seg
 
 
-def test_ivm_refresh_no_second_base_aggregation(spark):
-    """IVM must fold the change log with ONE partial-agg struct-max and
-    patch the view with ONE group-keyed join — no cartesian, exactly
-    one full-outer patch join in the tree."""
-    import __spark_entry__ as entry_mod
-
-    df = entry_mod.queries()["ivm_refresh"](spark, SF_DIR)
-    tree = _tree(df)
-    assert "CartesianProduct" not in tree, tree
-    assert tree.count("FullOuter") == 1, tree
-
-
 def test_kg_clustering_coeff_oriented_wedges(spark):
     """Per-vertex triangles must ride the degree-ordered wedge join:
     no cartesian; the triangle credit is an explode (Generate), not a

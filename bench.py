@@ -245,7 +245,6 @@ HEADLINE = [
     "leakage_safe_split",
     "classifier_report",
     "cohen_kappa",
-    "assoc_rules",
     "kg_clustering_coeff",
     "sql_pricing_summary",
     "mad_outliers",

@@ -7133,47 +7133,6 @@ FROM joined
 """
 
 
-_ASSOC_SQL = """
-WITH b AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS i FROM lineitem),
-keep AS (SELECT o FROM b GROUP BY o HAVING count(*) <= 64),
-bc AS (SELECT b.o, b.i FROM b JOIN keep ON keep.o = b.o),
-pr AS (SELECT x.i AS ia, y.i AS ib
-       FROM bc x JOIN bc y ON x.o = y.o AND x.i < y.i),
-c AS (SELECT ia, ib, count(*)::BIGINT AS n_ab FROM pr GROUP BY 1, 2
-      HAVING count(*) >= 2),
-itn AS (SELECT i, count(*)::BIGINT AS n_i FROM bc GROUP BY 1),
-nb AS (SELECT count(DISTINCT o)::BIGINT AS n_baskets FROM bc),
-dirs AS (SELECT ia AS ante, ib AS cons, n_ab FROM c
-         UNION ALL
-         SELECT ib, ia, n_ab FROM c)
-SELECT ante::BIGINT AS ante, cons::BIGINT AS cons, n_ab,
-       a.n_i AS n_ante, d.n_i AS n_cons,
-       ((n_ab * 1000000) // n_baskets)::BIGINT AS support_ppm,
-       ((n_ab * 1000000) // a.n_i)::BIGINT AS conf_ppm,
-       (((n_ab * 1000000) // a.n_i) * n_baskets // d.n_i)::BIGINT
-         AS lift_ppm
-FROM dirs JOIN itn a ON a.i = dirs.ante
-JOIN itn d ON d.i = dirs.cons
-CROSS JOIN nb
-"""
-
-
-@_register("assoc_rules", _ASSOC_SQL)
-def assoc_rules_q(spark, sf_dir):
-    """A-priori 2-itemset association rules over order baskets
-    (basket = order, item = part): directional support/confidence/lift
-    in integer ppm for every co-purchased pair with support >= 2.
-    Mega-baskets (> 64 items) drop before the quadratic pair self-join;
-    pair generation is a basket-keyed equi-join; rule assembly joins
-    are item-dimension-sized (datapipe/assoc.py association_rules)."""
-    from .datapipe.assoc import association_rules
-
-    return association_rules(
-        _t(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey",
-        min_pair_support=2, basket_cap=64,
-    )
-
-
 _KN_SQL = """
 WITH wf AS (
   SELECT list_filter(string_split(lower(text), ' '), t -> t <> '') AS w

@@ -667,23 +667,6 @@ def test_pack_sequences_distributed_prefix_sum(spark):
             assert "PartitionSpec: []" not in seg, seg
 
 
-def test_assoc_rules_no_cartesian(spark):
-    """Pair generation must be the basket-keyed equi-join: no
-    CartesianProduct / BroadcastNestedLoop anywhere except the 1-row
-    totals crossJoin (which Spark plans as a broadcast NLJ over one
-    row — allow exactly the totals join by checking the fact-side pair
-    join is a real equi-join)."""
-    import __spark_entry__ as entry_mod
-
-    df = entry_mod.queries()["assoc_rules"](spark, SF_DIR)
-    tree = _tree(df)
-    assert "CartesianProduct" not in tree, tree
-    # the o = o pair join must be a hash/sort-merge equi-join
-    assert ("SortMergeJoin" in tree) or ("ShuffledHashJoin" in tree) or (
-        "BroadcastHashJoin" in tree
-    ), tree
-
-
 def test_retrieval_quality_panel_sized_joins(spark):
     """The metrics stage must never re-shuffle the corpus: qrels/ranking
     joins are panel-keyed; the per-query tally is one aggregate; no

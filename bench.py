@@ -227,7 +227,6 @@ HEADLINE = [
     "dedup_jaccard_prefix",
     "dedup_tfidf_cosine",
     "retrieval_rrf",
-    "table_profile",
     "length_outliers",
     "sql_priority_census",
     "kg_bgp_match",
@@ -237,8 +236,6 @@ HEADLINE = [
     "bloom_join_prune",
     "pack_sequences",
     "dedup_incremental",
-    "k_anonymity",
-    "fk_integrity",
     "auc_eval",
     "retrieval_quality",
     "kneser_ney_bigram",
@@ -247,20 +244,13 @@ HEADLINE = [
     "cohen_kappa",
     "kg_clustering_coeff",
     "sql_pricing_summary",
-    "mad_outliers",
     "novelty_rate",
     "vocab_growth",
     "class_term_lift",
-    "rank_normalize",
     "source_mix_weights",
     "dedup_threshold_sweep",
-    "winsorized_stats",
-    "target_encode",
     "hard_negatives",
     "gate_ablation",
-    "ks_drift",
-    "label_balance",
-    "fd_violations",
 ]
 
 

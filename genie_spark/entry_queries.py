@@ -6870,41 +6870,6 @@ def retrieval_quality_q(spark, sf_dir):
     return retrieval_quality(bm, qrels, k=10, cut=5)
 
 
-def _profile_sql() -> str:
-    cols = ["doc_id", "text", "lang", "source", "n_chars"]
-    aggs = ["count(*)::BIGINT AS n"]
-    for c in cols:
-        aggs += [
-            f"sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END)::BIGINT"
-            f" AS {c}_nulls",
-            f"count(DISTINCT {c})::BIGINT AS {c}_nd",
-            f"CAST(min({c}) AS VARCHAR) AS {c}_min",
-            f"CAST(max({c}) AS VARCHAR) AS {c}_max",
-        ]
-    rows = " UNION ALL ".join(
-        f"SELECT '{c}' AS col_name, n AS n_rows, {c}_nulls AS n_null,"
-        f" {c}_nd AS n_distinct, {c}_min AS min_str, {c}_max AS max_str"
-        f" FROM agg"
-        for c in cols
-    )
-    return f"WITH agg AS (SELECT {', '.join(aggs)} FROM documents) {rows}"
-
-
-@_register("table_profile", None)
-def table_profile_q(spark, sf_dir):
-    """Deequ-style table profile of the documents table: per-column
-    row/null/distinct counts + stringified min/max, ALL columns in ONE
-    aggregation pass (single scan, single partial+final agg), pivoted
-    long row-locally with stack() — no per-column scans
-    (datapipe/profile.py table_profile)."""
-    from .datapipe.profile import table_profile
-
-    return table_profile(_t(spark, sf_dir, "documents"))
-
-
-ORACLES["table_profile"] = _profile_sql()
-
-
 _OUTLIERS_SQL = """
 WITH st AS (
   SELECT source,
@@ -7349,340 +7314,7 @@ def dedup_incremental_q(spark, sf_dir):
 ORACLES["dedup_incremental"] = _incr_oracle()
 
 
-# --- data-governance audits --------------------------------------------------
-
-_KANON_K = 5
-
-_KANON_SQL = f"""
-WITH g AS (
-  SELECT c_nationkey, c_mktsegment, count(*)::BIGINT AS n
-  FROM customer GROUP BY 1, 2),
-a AS (
-  SELECT sum(n)::BIGINT AS n_rows, count(*)::BIGINT AS n_groups,
-         sum(CASE WHEN n < {_KANON_K} THEN 1 ELSE 0 END)::BIGINT AS n_small_groups,
-         sum(CASE WHEN n < {_KANON_K} THEN n ELSE 0 END)::BIGINT AS n_rows_at_risk,
-         min(n)::BIGINT AS min_group_size
-  FROM g)
-SELECT *, (n_rows_at_risk * 1000000 // n_rows)::BIGINT AS risk_ppm FROM a
-"""
-
-
-@_register("k_anonymity", _KANON_SQL)
-def k_anonymity_q(spark, sf_dir):
-    """k-anonymity governance audit: equivalence classes of the
-    (c_nationkey, c_mktsegment) quasi-identifier pair with fewer than
-    k=5 members, and the rows at re-identification risk inside them.
-    One partial-agg groupBy to the QI census (bounded by the QI domain,
-    never the row count) + one tiny aggregate
-    (datapipe/profile.py k_anonymity)."""
-    from .datapipe.profile import k_anonymity
-
-    return k_anonymity(
-        _t(spark, sf_dir, "customer"), ["c_nationkey", "c_mktsegment"], k=_KANON_K
-    )
-
-
-_FK_SQL = """
-WITH
-ok AS (SELECT DISTINCT o_orderkey AS k FROM orders),
-pk AS (SELECT DISTINCT p_partkey AS k FROM part),
-ck AS (SELECT DISTINCT c_custkey AS k FROM customer WHERE c_acctbal >= 0),
-a AS (
-  SELECT 'lineitem.l_orderkey->orders' AS relation,
-         count(*)::BIGINT AS n_child,
-         sum(CASE WHEN ok.k IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_orphans
-  FROM lineitem LEFT JOIN ok ON l_orderkey = ok.k
-  UNION ALL
-  SELECT 'lineitem.l_partkey->part',
-         count(*)::BIGINT,
-         sum(CASE WHEN pk.k IS NULL THEN 1 ELSE 0 END)::BIGINT
-  FROM lineitem LEFT JOIN pk ON l_partkey = pk.k
-  UNION ALL
-  SELECT 'orders.o_custkey->customer_in_good_standing',
-         count(*)::BIGINT,
-         sum(CASE WHEN ck.k IS NULL THEN 1 ELSE 0 END)::BIGINT
-  FROM orders LEFT JOIN ck ON o_custkey = ck.k)
-SELECT *, (n_orphans * 1000000 // n_child)::BIGINT AS orphan_ppm FROM a
-"""
-
-
-@_register("fk_integrity", _FK_SQL)
-def fk_integrity_q(spark, sf_dir):
-    """Referential-integrity audit across the star schema: orphan-row
-    counts/ppm for lineitem->orders, lineitem->part, and
-    orders->customer where the customer dimension is cut to accounts in
-    good standing (c_acctbal >= 0) — the corrupted-dimension simulation
-    that makes the audit exercise nonzero orphans. Each edge is ONE
-    child scan with a broadcast DISTINCT-parent-keys left join + one
-    conditional count (datapipe/profile.py fk_orphans)."""
-    from .datapipe.profile import fk_orphans
-
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    a = fk_orphans(li, "l_orderkey", orders, "o_orderkey",
-                   "lineitem.l_orderkey->orders")
-    b = fk_orphans(li, "l_partkey", _t(spark, sf_dir, "part"), "p_partkey",
-                   "lineitem.l_partkey->part")
-    c = fk_orphans(
-        orders, "o_custkey",
-        _t(spark, sf_dir, "customer").filter(F.col("c_acctbal") >= 0),
-        "c_custkey", "orders.o_custkey->customer_in_good_standing")
-    return a.unionByName(b).unionByName(c)
-
-
 # --- ROC-AUC evaluation ------------------------------------------------------
-
-_MAD_SQL = """
-WITH cen AS (SELECT source, n_chars AS v, count(*)::BIGINT AS c
-             FROM documents GROUP BY 1, 2),
-tot AS (SELECT source, sum(c)::BIGINT AS n FROM cen GROUP BY 1),
-cum AS (SELECT source, v, c,
-               sum(c) OVER (PARTITION BY source ORDER BY v) AS cum
-        FROM cen),
-med AS (SELECT cum.source, min(v)::BIGINT AS med
-        FROM cum JOIN tot ON tot.source = cum.source
-        WHERE 2 * cum >= n GROUP BY 1),
-dev AS (SELECT d.source, d.doc_id, d.n_chars AS v,
-               abs(d.n_chars - med)::BIGINT AS ad, med
-        FROM documents d JOIN med ON med.source = d.source),
-dc AS (SELECT source, ad, count(*)::BIGINT AS c FROM dev GROUP BY 1, 2),
-dt AS (SELECT source, sum(c)::BIGINT AS n FROM dc GROUP BY 1),
-dcum AS (SELECT source, ad,
-                sum(c) OVER (PARTITION BY source ORDER BY ad) AS cum
-         FROM dc),
-mad AS (SELECT dcum.source, min(ad)::BIGINT AS mad
-        FROM dcum JOIN dt ON dt.source = dcum.source
-        WHERE 2 * cum >= n GROUP BY 1)
-SELECT dev.source, doc_id, v::BIGINT AS value, dev.med, mad.mad
-FROM dev JOIN mad ON mad.source = dev.source
-WHERE ad > 3 * greatest(mad, 1)
-"""
-
-
-@_register("mad_outliers", _MAD_SQL)
-def mad_outliers_q(spark, sf_dir):
-    """Robust per-source length outliers via median absolute deviation
-    (|x − median| > 3·max(MAD,1)) — the breakdown-point-0.5 complement
-    to the integer-moment z² test (length_outliers): a handful of
-    extreme docs cannot drag the cutoff the way they inflate a
-    variance. Both medians are exact census disc-percentiles (windows
-    over the per-group value DOMAIN, never raw rows); med/mad broadcast
-    back onto the scan (datapipe/profile.py mad_outliers)."""
-    from .datapipe.profile import mad_outliers
-
-    return mad_outliers(
-        _t(spark, sf_dir, "documents"), "source", "n_chars", "doc_id", k=3
-    )
-
-
-_FD_SQL = """
-WITH a AS (
-  SELECT 'part.p_partkey->p_brand' AS fd,
-         count(*)::BIGINT AS n_groups,
-         sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END)::BIGINT AS n_violating
-  FROM (SELECT p_partkey, count(DISTINCT p_brand) AS nd
-        FROM part GROUP BY 1)
-  UNION ALL
-  SELECT 'part.p_brand->p_type', count(*)::BIGINT,
-         sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END)::BIGINT
-  FROM (SELECT p_brand, count(DISTINCT p_type) AS nd FROM part GROUP BY 1)
-  UNION ALL
-  SELECT 'orders.o_custkey->o_orderpriority', count(*)::BIGINT,
-         sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END)::BIGINT
-  FROM (SELECT o_custkey, count(DISTINCT o_orderpriority) AS nd
-        FROM orders GROUP BY 1))
-SELECT fd, n_groups, n_violating,
-       ((n_violating * 1000000) // n_groups)::BIGINT AS violation_ppm
-FROM a
-"""
-
-
-@_register("fd_violations", _FD_SQL)
-def fd_violations_q(spark, sf_dir):
-    """Functional-dependency discovery audit across three candidate
-    FDs — a holding key FD (partkey→brand), a broken attribute FD
-    (brand→type), and a non-FD control (custkey→orderpriority):
-    violating-determinant counts and ppm, each ONE determinant-domain-
-    bounded groupBy + a 1-row aggregate, never a self-join
-    (datapipe/profile.py fd_violations)."""
-    from .datapipe.profile import fd_violations
-
-    part = _t(spark, sf_dir, "part")
-    orders = _t(spark, sf_dir, "orders")
-    a = fd_violations(part, "p_partkey", "p_brand",
-                      "part.p_partkey->p_brand")
-    b = fd_violations(part, "p_brand", "p_type", "part.p_brand->p_type")
-    c = fd_violations(orders, "o_custkey", "o_orderpriority",
-                      "orders.o_custkey->o_orderpriority")
-    return a.unionByName(b).unionByName(c)
-
-
-_KS_SQL = """
-WITH ca AS (SELECT n_chars AS value, count(*)::BIGINT AS c_a
-            FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
-cb AS (SELECT n_chars AS value, count(*)::BIGINT AS c_b
-       FROM documents WHERE doc_id % 2 = 1 GROUP BY 1),
-cen AS (SELECT coalesce(ca.value, cb.value) AS value,
-               coalesce(c_a, 0) AS c_a, coalesce(c_b, 0) AS c_b
-        FROM ca FULL OUTER JOIN cb ON cb.value = ca.value),
-cum AS (SELECT value,
-               sum(c_a) OVER (ORDER BY value) AS cum_a,
-               sum(c_b) OVER (ORDER BY value) AS cum_b
-        FROM cen),
-tot AS (SELECT sum(c_a)::BIGINT AS n_a, sum(c_b)::BIGINT AS n_b FROM cen),
-d AS (SELECT value, n_a, n_b,
-             abs(cum_a * n_b - cum_b * n_a) AS diff
-      FROM cum CROSS JOIN tot),
-mx AS (SELECT max(diff) AS max_diff FROM d)
-SELECT n_a, n_b,
-       (max_diff // greatest((n_a * n_b) // 1000000, 1))::BIGINT AS d_ppm,
-       min(value)::BIGINT AS at_value
-FROM d JOIN mx ON d.diff = mx.max_diff
-GROUP BY n_a, n_b, max_diff
-"""
-
-
-@_register("ks_drift", _KS_SQL)
-def ks_drift_q(spark, sf_dir):
-    """Two-sample Kolmogorov-Smirnov drift between the even- and
-    odd-id corpus halves on document length — integer-exact via the
-    cleared |cum_a·n_b − cum_b·n_a| form over the merged value census
-    (domain-bounded window, raw rows never sort), with the
-    deterministic smallest argmax value
-    (datapipe/profile.py ks_drift)."""
-    from .datapipe.profile import ks_drift
-
-    docs = _t(spark, sf_dir, "documents")
-    return ks_drift(
-        docs.filter(F.col("doc_id") % 2 == 0),
-        docs.filter(F.col("doc_id") % 2 == 1),
-        "n_chars",
-    )
-
-
-_LBAL_SQL = """
-WITH cen AS (SELECT source AS grp, lang AS lbl, count(*)::BIGINT AS c
-             FROM documents GROUP BY 1, 2),
-agg AS (SELECT grp, sum(c)::BIGINT AS n, count(*)::BIGINT AS n_labels,
-               max(c)::BIGINT AS top_c, sum(c * c)::BIGINT AS ss
-        FROM cen GROUP BY 1)
-SELECT grp AS source, n, n_labels,
-       ((top_c * 1000000) // n)::BIGINT AS top_share_ppm,
-       (1000000 - ss // greatest((n * n) // 1000000, 1))::BIGINT
-         AS simpson_ppm
-FROM agg
-"""
-
-
-@_register("label_balance", _LBAL_SQL)
-def label_balance_q(spark, sf_dir):
-    """Per-source language-balance audit: label count, top-label share,
-    and Simpson diversity (1 − Σ share², the entropy-free diversity
-    index) in integer ppm — two domain-bounded partial aggregations
-    (datapipe/profile.py label_balance)."""
-    from .datapipe.profile import label_balance
-
-    return label_balance(_t(spark, sf_dir, "documents"), "source", "lang")
-
-
-_RANKNORM_SQL = """
-WITH cen AS (SELECT source, n_chars AS v, count(*)::BIGINT AS c
-             FROM documents GROUP BY 1, 2),
-cum AS (SELECT source, v, c,
-               sum(c) OVER (PARTITION BY source ORDER BY v) - c AS below
-        FROM cen),
-tot AS (SELECT source, sum(c)::BIGINT AS n FROM cen GROUP BY 1)
-SELECT d.source, d.doc_id, d.n_chars::BIGINT AS value,
-       ((below * 1000000) // greatest(n - 1, 1))::BIGINT AS pct_ppm
-FROM documents d
-JOIN cum ON cum.source = d.source AND cum.v = d.n_chars
-JOIN tot ON tot.source = d.source
-"""
-
-
-@_register("rank_normalize", _RANKNORM_SQL)
-def rank_normalize_q(spark, sf_dir):
-    """Per-source percent-rank normalization of document lengths — the
-    quantile-feature transform, integer ppm with shared ties. The
-    ranking window runs over the per-source VALUE CENSUS (domain-
-    bounded, skew-safe) and joins back onto the scan; raw rows are
-    never sorted (datapipe/profile.py rank_normalize)."""
-    from .datapipe.profile import rank_normalize
-
-    return rank_normalize(
-        _t(spark, sf_dir, "documents"), "source", "n_chars", "doc_id"
-    )
-
-
-_WINSOR_SQL = """
-WITH cen AS (SELECT source, n_chars AS v, count(*)::BIGINT AS c
-             FROM documents GROUP BY 1, 2),
-tot AS (SELECT source, sum(c)::BIGINT AS n FROM cen GROUP BY 1),
-cum AS (SELECT source, v, c,
-               sum(c) OVER (PARTITION BY source ORDER BY v) AS cum
-        FROM cen),
-lo AS (SELECT cum.source, min(v)::BIGINT AS p_lo
-       FROM cum JOIN tot ON tot.source = cum.source
-       WHERE 100 * cum >= 10 * n GROUP BY 1),
-hi AS (SELECT cum.source, min(v)::BIGINT AS p_hi
-       FROM cum JOIN tot ON tot.source = cum.source
-       WHERE 100 * cum >= 90 * n GROUP BY 1),
-cl AS (SELECT d.source, lo.p_lo, hi.p_hi,
-              least(greatest(d.n_chars, p_lo), p_hi) AS cv
-       FROM documents d
-       JOIN lo ON lo.source = d.source
-       JOIN hi ON hi.source = d.source)
-SELECT source, count(*)::BIGINT AS n, p_lo, p_hi,
-       (sum(cv) // count(*))::BIGINT AS wins_mean
-FROM cl GROUP BY source, p_lo, p_hi
-"""
-
-
-@_register("winsorized_stats", _WINSOR_SQL)
-def winsorized_stats_q(spark, sf_dir):
-    """Per-source winsorized length summary: exact census p10/p90 cut
-    values + the clipped mean — the heavy-tail-tolerant location
-    estimate; two domain-bounded census percentiles, broadcast cuts,
-    one row-local clip + partial-agg sum
-    (datapipe/profile.py winsorized_stats, _disc_percentile)."""
-    from .datapipe.profile import winsorized_stats
-
-    return winsorized_stats(
-        _t(spark, sf_dir, "documents"), "source", "n_chars",
-        lo_pct=10, hi_pct=90,
-    )
-
-
-_TENC_SQL = """
-WITH base AS (SELECT o_orderpriority AS cat,
-                     CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y
-              FROM orders),
-cen AS (SELECT cat, count(*)::BIGINT AS n, sum(y)::BIGINT AS sum_y
-        FROM base GROUP BY 1),
-g AS (SELECT ((sum(y) * 1000000) // count(*))::BIGINT AS prior_ppm
-      FROM base)
-SELECT cat AS o_orderpriority, n, sum_y, prior_ppm,
-       ((sum_y * 1000000 + 10 * prior_ppm) // (n + 10))::BIGINT AS enc_ppm
-FROM cen CROSS JOIN g
-"""
-
-
-@_register("target_encode", _TENC_SQL)
-def target_encode_q(spark, sf_dir):
-    """Smoothed target encoding of order priority against the
-    fulfilled-order label: per-category (Σy·1e6 + m·prior_ppm)/(n+m)
-    with m = 10 and the broadcast global rate as prior — one category
-    census + one global aggregate, integer ppm
-    (datapipe/profile.py target_encode)."""
-    from .datapipe.profile import target_encode
-
-    o = _t(spark, sf_dir, "orders")
-    return target_encode(
-        o, "o_orderpriority",
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0),
-        smoothing=10,
-    )
-
 
 _AUC_SQL = """
 WITH s AS (

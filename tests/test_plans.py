@@ -679,23 +679,6 @@ def test_retrieval_quality_panel_sized_joins(spark):
     assert "BroadcastHashJoin" in tree, tree  # panel terms broadcast
 
 
-def test_mad_and_ranknorm_windows_census_partitioned(spark):
-    """The MAD and percent-rank census windows must partition by the
-    group column — an empty PartitionSpec would mean a global sort of
-    the census (and SinglePartition a global sort of rows)."""
-    from genie_spark.datapipe.profile import mad_outliers, rank_normalize
-
-    for df in (
-        mad_outliers(_t(spark, "documents"), "source", "n_chars", "doc_id"),
-        rank_normalize(_t(spark, "documents"), "source", "n_chars", "doc_id"),
-    ):
-        plan = _plan(df)
-        assert "SinglePartition" not in plan, plan
-        for seg in plan.split("\n\n"):
-            if seg.startswith("(") and ") Window" in seg.split("\n")[0]:
-                assert "PartitionSpec: []" not in seg, seg
-
-
 def test_kg_clustering_coeff_oriented_wedges(spark):
     """Per-vertex triangles must ride the degree-ordered wedge join:
     no cartesian; the triangle credit is an explode (Generate), not a

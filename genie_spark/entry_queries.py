@@ -7,10 +7,9 @@ same parquet tables (order-insensitive value-hash): identical column
 names, integer columns cast to bigint, floats rounded to 6 via the same
 formulas, and all hashing through the cross-engine ``h60`` primitive.
 
-Queries without an oracle entry (constrained generation, multimodal
-feature extraction) get the driver's rows-only check; their exactness is
-covered by the pytest parity suites instead (Spark vs pure-Python oracle,
-tests/test_spark_pipeline.py).
+The five constrained-generation queries have no static SQL here:
+``__spark_entry__.oracle_sql()`` adds their oracles, generated from the
+pure-Python twin (genie_spark/oracle_twin.py).
 """
 
 from __future__ import annotations
@@ -3876,63 +3875,6 @@ def repetition_stats(spark, sf_dir):
     )
 
 
-@_register(
-    "media_resize_plan",
-    """
-WITH m AS (
-  SELECT doc_id AS media_id,
-         ((doc_id % 64) * 16 + 64)::INT AS width,
-         ((doc_id % 48) * 16 + 64)::INT AS height
-  FROM documents WHERE doc_id % 3 = 0
-)
-SELECT media_id::BIGINT AS media_id, width::BIGINT AS width, height::BIGINT AS height,
-       ceil(width * least(256.0 / width, 256.0 / height, 1.0))::BIGINT AS out_width,
-       ceil(height * least(256.0 / width, 256.0 / height, 1.0))::BIGINT AS out_height
-FROM m
-""",
-)
-def media_resize_plan(spark, sf_dir):
-    """Aspect-preserving resize planning (JVM-side arithmetic; pixel
-    transform itself is the stubbed decode step)."""
-    from .datapipe.multimodal import media_from_docs, resize_images
-
-    media = media_from_docs(_t(spark, sf_dir, "documents"))
-    out = resize_images(media, max_side=256)
-    return out.select(
-        F.col("media_id").cast("bigint").alias("media_id"),
-        F.col("width").cast("bigint").alias("width"),
-        F.col("height").cast("bigint").alias("height"),
-        F.col("out_width").cast("bigint").alias("out_width"),
-        F.col("out_height").cast("bigint").alias("out_height"),
-    )
-
-
-@_register(
-    "media_frame_sample",
-    """
-WITH v AS (
-  SELECT doc_id AS media_id, (n_chars * 10)::INT AS duration_ms
-  FROM documents WHERE doc_id % 3 = 2
-)
-SELECT media_id::BIGINT AS media_id, duration_ms::BIGINT AS duration_ms,
-       unnest(range(0, greatest(duration_ms - 1, 0) + 1, 1000))::BIGINT AS frame_ts_ms
-FROM v
-""",
-)
-def media_frame_sample(spark, sf_dir):
-    """Video frame-sampling plan: one row per sampled timestamp (JVM
-    sequence+explode; the frame decode itself is the stub)."""
-    from .datapipe.multimodal import frame_sample_plan, media_from_docs
-
-    media = media_from_docs(_t(spark, sf_dir, "documents"))
-    out = frame_sample_plan(media, every_ms=1000)
-    return out.select(
-        F.col("media_id").cast("bigint").alias("media_id"),
-        F.col("duration_ms").cast("bigint").alias("duration_ms"),
-        F.col("frame_ts_ms").cast("bigint").alias("frame_ts_ms"),
-    )
-
-
 def _sampling_oracles():
     from .datapipe.sampling import residue_sql, unit_sql
 
@@ -4304,35 +4246,6 @@ def val_nll(spark, sf_dir):
         F.round(
             (F.sum(loss_u) / 1_000_000.0) / F.count(F.lit(1)), 6
         ).alias("loss_per_seq"),
-    )
-
-
-@_register(
-    "multimodal_features",
-    """
-SELECT doc_id::BIGINT AS media_id,
-       CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS media_type,
-       octet_length(encode(text))::BIGINT AS n_bytes,
-       round((('0x' || substr(md5(text || chr(1)), 1, 8))::UBIGINT / 4294967296.0)::REAL::DOUBLE, 6) AS f0
-FROM documents
-""",
-)
-def multimodal_features(spark, sf_dir):
-    """Binary-column media plumbing with the deterministic fake encoder
-    (real decode stubbed). The mapInPandas path runs over real binary
-    payloads; the oracle reproduces the md5 feature recipe in SQL because
-    the test payloads are utf-8 text bytes and the salt bytes are 1-based
-    (no NUL — see datapipe.multimodal._fake_features)."""
-    from .datapipe.multimodal import extract_features, media_from_docs
-
-    media = media_from_docs(_t(spark, sf_dir, "documents"))
-    feats = extract_features(media, deterministic_fake=True)
-    return feats.select(
-        "media_id", "media_type",
-        F.col("n_bytes").cast("bigint").alias("n_bytes"),
-        # features are float32 (real encoders emit fp32); round the
-        # DOUBLE widening of that value — the oracle does ::REAL::DOUBLE
-        F.round(F.element_at("features", 1).cast("double"), 6).alias("f0"),
     )
 
 

@@ -10,12 +10,6 @@ from genie_spark.datapipe.dedup import (
     ngram_jaccard_pairs,
     simhash_table,
 )
-from genie_spark.datapipe.multimodal import (
-    extract_features,
-    frame_sample_plan,
-    media_from_docs,
-    resize_images,
-)
 from genie_spark.datapipe.similarity import brute_force_topk, lsh_topk
 
 
@@ -177,42 +171,6 @@ def test_brute_force_vs_lsh_topk(spark):
     lsh = lsh_topk(emb, q, k=5, n_planes=3)
     got = [r["vec_id"] for r in lsh.collect()]
     assert got and got[0] == 7  # the query's own bucket contains it
-
-
-def test_multimodal_stub_raises_without_fake(spark, docs):
-    media = media_from_docs(
-        docs.withColumn("n_chars", F.length("text"))
-    )
-    with pytest.raises(Exception) as ei:
-        extract_features(media, deterministic_fake=False).collect()
-    assert "NotImplementedError" in str(ei.value) or "real media decode" in str(ei.value)
-
-
-def test_multimodal_fake_features_deterministic(spark, docs):
-    media = media_from_docs(docs.withColumn("n_chars", F.length("text"))).cache()
-    a = sorted(map(tuple, extract_features(media, deterministic_fake=True).collect()))
-    b = sorted(map(tuple, extract_features(media.repartition(3), deterministic_fake=True).collect()))
-    assert a == b
-    for row in a:
-        feats = row[3]
-        assert len(feats) == 8 and all(0.0 <= x < 1.0 for x in feats)
-    # byte-identical payloads (docs 0 and 2) → identical features
-    by_id = {r[0]: r[3] for r in a}
-    assert by_id[0] == by_id[2]
-
-
-def test_resize_and_frame_plans(spark, docs):
-    media = media_from_docs(docs.withColumn("n_chars", F.length("text")))
-    rs = resize_images(media, max_side=100).collect()
-    for r in rs:
-        assert max(r["out_width"], r["out_height"]) <= 100
-        assert r["out_width"] <= r["width"] and r["out_height"] <= r["height"]
-    fr = frame_sample_plan(media, every_ms=100)
-    rows = fr.collect()
-    if rows:
-        one = [r for r in rows if r["media_id"] == rows[0]["media_id"]]
-        ts = sorted(r["frame_ts_ms"] for r in one)
-        assert ts[0] == 0 and all(b - a == 100 for a, b in zip(ts, ts[1:]))
 
 
 def test_ivf_topk_recall_vs_brute(spark):

@@ -222,17 +222,13 @@ HEADLINE = [
     "bm25_topk",
     "phrase_search",
     "sketch_quantiles_by_source",
-    "corpus_cube",
-    "sql_region_orders",
     "dedup_jaccard_prefix",
     "dedup_tfidf_cosine",
     "retrieval_rrf",
     "length_outliers",
-    "sql_priority_census",
     "kg_bgp_match",
     "kg_bgp_optional",
     "kg_bgp_negation",
-    "zorder_layout",
     "bloom_join_prune",
     "pack_sequences",
     "dedup_incremental",
@@ -243,7 +239,6 @@ HEADLINE = [
     "classifier_report",
     "cohen_kappa",
     "kg_clustering_coeff",
-    "sql_pricing_summary",
     "novelty_rate",
     "vocab_growth",
     "class_term_lift",

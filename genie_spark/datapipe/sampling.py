@@ -502,54 +502,6 @@ def hopping_window_rates(
     )
 
 
-def zorder_key(
-    df: DataFrame,
-    col_a: str,
-    col_b: str,
-    bits: int = 16,
-    buckets: int = 64,
-) -> DataFrame:
-    """Z-order (Morton) layout key over two integer dimensions — the
-    lakehouse data-clustering primitive (Delta/Iceberg Z-ORDER): rows
-    written sorted by ``zkey`` cluster multi-dimensionally, so range
-    predicates on EITHER dimension prune most files. Each dimension is
-    min-max scaled to ``bits`` bits with integer arithmetic (the 1-row
-    bounds aggregate broadcasts), then bit-interleaved with an unrolled
-    shift/mask expression — pure row-local codegen'd column math, no
-    UDF, no shuffle beyond the bounds aggregate. Adds ``zkey`` and
-    ``zbucket`` (zkey div 2^(2*bits)/buckets — the write-partition
-    assignment)."""
-    lo_a, hi_a = f"min({col_a})", f"max({col_a})"
-    bounds = df.agg(
-        F.expr(f"cast({lo_a} as bigint)").alias("min_a"),
-        F.expr(f"cast({hi_a} as bigint)").alias("max_a"),
-        F.expr(f"cast(min({col_b}) as bigint)").alias("min_b"),
-        F.expr(f"cast(max({col_b}) as bigint)").alias("max_b"),
-    )
-    top = (1 << bits) - 1
-    sa = (
-        f"(({col_a} - min_a) * {top}L)"
-        f" div greatest(max_a - min_a, 1L)"
-    )
-    sb = (
-        f"(({col_b} - min_b) * {top}L)"
-        f" div greatest(max_b - min_b, 1L)"
-    )
-    inter = " + ".join(
-        f"((a16 >> {i}) & 1L) * {1 << (2 * i)}L"
-        f" + ((b16 >> {i}) & 1L) * {1 << (2 * i + 1)}L"
-        for i in range(bits)
-    )
-    cell = (1 << (2 * bits)) // int(buckets)
-    return (
-        df.crossJoin(F.broadcast(bounds))
-        .withColumn("a16", F.expr(sa))
-        .withColumn("b16", F.expr(sb))
-        .withColumn("zkey", F.expr(inter).cast("long"))
-        .withColumn("zbucket", F.expr(f"zkey div {cell}L").cast("long"))
-        .drop("min_a", "max_a", "min_b", "max_b", "a16", "b16")
-    )
-
 def pack_sequences(
     docs: DataFrame,
     seq_len: int,

@@ -6493,109 +6493,6 @@ def sketch_quantiles_by_source_q(spark, sf_dir):
 ORACLES["sketch_quantiles_by_source"] = _hist_quantiles_sql()
 
 
-_CUBE_SQL = """
-SELECT coalesce(source, '<all>') AS source,
-       coalesce(lang, '<all>') AS lang,
-       GROUPING(source, lang)::BIGINT AS gid,
-       count(*)::BIGINT AS n_docs,
-       sum(n_chars)::BIGINT AS total_chars,
-       (sum(n_chars) // count(*))::BIGINT AS mean_chars
-FROM documents
-GROUP BY CUBE(source, lang)
-"""
-
-
-@_register("corpus_cube", _CUBE_SQL)
-def corpus_cube_q(spark, sf_dir):
-    """OLAP CUBE over (source, lang): all four grouping levels of the
-    corpus census (doc count, total/mean chars) in ONE pass —
-    grouping-set expansion happens inside the aggregate's partial
-    phase, so at 100 TB this costs one scan + one shuffle instead of
-    four separate groupBys; grouping_id disambiguates the levels and
-    NULL group keys are folded to '<all>' so the output is
-    join-friendly."""
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        docs.cube("source", "lang")
-        .agg(
-            F.grouping_id().cast("long").alias("gid"),
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("total_chars"),
-            F.expr("sum(n_chars) div count(1)").cast("long").alias(
-                "mean_chars"
-            ),
-        )
-        .select(
-            F.coalesce(F.col("source"), F.lit("<all>")).alias("source"),
-            F.coalesce(F.col("lang"), F.lit("<all>")).alias("lang"),
-            "gid",
-            "n_docs",
-            "total_chars",
-            "mean_chars",
-        )
-    )
-
-
-# ONE string, two engines: runs verbatim on Spark SQL (the query) and
-# DuckDB (the oracle) — the ad-hoc SQL surface's parity demonstration.
-_SQL_REGION_ORDERS = """
-SELECT r_name, n_name,
-       count(DISTINCT o_orderkey) AS n_orders,
-       count(*) AS n_items,
-       CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
-FROM lineitem
-JOIN orders ON o_orderkey = l_orderkey
-JOIN customer ON c_custkey = o_custkey
-JOIN nation ON n_nationkey = c_nationkey
-JOIN region ON r_regionkey = n_regionkey
-GROUP BY r_name, n_name
-"""
-
-
-_SQL_PRICING = """
-SELECT l_returnflag, l_linestatus,
-       CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-       CAST(sum(CAST(floor(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-         AS sum_base_cents,
-       CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100)
-                     AS BIGINT)) AS BIGINT) AS sum_disc_cents,
-       CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount)
-                           * (1 + l_tax) * 100) AS BIGINT)) AS BIGINT)
-         AS sum_charge_cents,
-       CAST(count(*) AS BIGINT) AS n_rows
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-@_register("sql_pricing_summary", _SQL_PRICING)
-def sql_pricing_summary_q(spark, sf_dir):
-    """TPC-H Q1 pricing summary on the ad-hoc SQL surface, made
-    engine-exact by flooring each money expression to integer CENTS
-    per row before summing (double sums are order-divergent; per-row
-    IEEE products are identical in both engines, and
-    CAST(floor(x) AS BIGINT) sidesteps the Spark-truncates/DuckDB-
-    rounds cast trap). One scan, map-side partial aggregation, the
-    shipdate filter pushed to the parquet scan — the same ANSI string
-    runs verbatim in both engines (genie_spark/sql.py)."""
-    from .sql import sql
-
-    return sql(spark, sf_dir, _SQL_PRICING)
-
-
-@_register("sql_region_orders", _SQL_REGION_ORDERS)
-def sql_region_orders_q(spark, sf_dir):
-    """Ad-hoc SQL surface: the same ANSI string runs verbatim as the
-    Spark query AND the DuckDB oracle. Catalyst gets the full
-    declarative plan (dims broadcast, fact-side partial aggregation,
-    column pruning to 5 of 11 lineitem columns) from plain SQL text
-    over registered parquet views (genie_spark/sql.py)."""
-    from .sql import sql
-
-    return sql(spark, sf_dir, _SQL_REGION_ORDERS)
-
-
 def _prefix_jaccard_sql() -> str:
     # the oracle is the EXHAUSTIVE exact-Jaccard join — deliberately NOT a
     # mirror of the prefix-filtered plan, so a wrong prefix bound (lost
@@ -6810,31 +6707,6 @@ def length_outliers_q(spark, sf_dir):
     return length_outliers(_t(spark, sf_dir, "documents"), k_sigma2=2)
 
 
-# second shared-string SQL-surface query: a selective date predicate that
-# must reach the parquet scan as a pushed filter from plain SQL text.
-_SQL_PRIORITY_CENSUS = """
-SELECT o_orderpriority,
-       count(*) AS n_orders,
-       CAST(sum(CAST(floor(o_totalprice) AS BIGINT)) AS BIGINT) AS total_price_units,
-       count(DISTINCT o_custkey) AS n_customers
-FROM orders
-WHERE o_orderdate >= TIMESTAMP '1999-01-01 00:00:00'
-  AND o_orderdate < TIMESTAMP '2000-01-01 00:00:00'
-GROUP BY o_orderpriority
-"""
-
-
-@_register("sql_priority_census", _SQL_PRIORITY_CENSUS)
-def sql_priority_census_q(spark, sf_dir):
-    """SQL-surface query #2: a one-year order census whose date range
-    predicate Catalyst pushes into the parquet scan (PushedFilters,
-    plan-asserted) straight from ANSI text — the same string is the
-    DuckDB oracle (genie_spark/sql.py)."""
-    from .sql import sql
-
-    return sql(spark, sf_dir, _SQL_PRIORITY_CENSUS)
-
-
 @_register(
     "kg_bgp_match",
     f"""
@@ -6912,67 +6784,6 @@ def kg_bgp_negation_q(spark, sf_dir):
         [("?sup", "based_in", "?n")],
         negations=[("?sup", "located_in", "?r2")],
     )
-
-
-def _zorder_sql() -> str:
-    top = (1 << 16) - 1
-    inter = " + ".join(
-        f"((a16 >> {i}) & 1) * {1 << (2 * i)}"
-        f" + ((b16 >> {i}) & 1) * {1 << (2 * i + 1)}"
-        for i in range(16)
-    )
-    cell = (1 << 32) // 64
-    return f"""
-WITH src AS (
-  SELECT o_custkey AS ck,
-         date_diff('day', DATE '1995-01-01',
-                   CAST(o_orderdate AS DATE))::BIGINT AS d
-  FROM orders),
-bounds AS (SELECT min(ck)::BIGINT AS min_a, max(ck)::BIGINT AS max_a,
-                  min(d)::BIGINT AS min_b, max(d)::BIGINT AS max_b
-           FROM src),
-scaled AS (
-  SELECT ck, d,
-         ((ck - min_a) * {top}) // greatest(max_a - min_a, 1) AS a16,
-         ((d - min_b) * {top}) // greatest(max_b - min_b, 1) AS b16
-  FROM src CROSS JOIN bounds),
-z AS (SELECT ck, d, ({inter})::BIGINT AS zkey FROM scaled)
-SELECT (zkey // {cell})::BIGINT AS zbucket,
-       count(*)::BIGINT AS n,
-       min(ck)::BIGINT AS min_ck, max(ck)::BIGINT AS max_ck,
-       min(d)::BIGINT AS min_day, max(d)::BIGINT AS max_day
-FROM z GROUP BY 1
-"""
-
-
-@_register("zorder_layout", None)
-def zorder_layout_q(spark, sf_dir):
-    """Z-order (Morton) layout assignment over orders (custkey x
-    order-day): min-max integer scaling + unrolled bit interleave, all
-    row-local codegen'd column math; the per-zbucket census shows each
-    write bucket covering a tight rectangle in BOTH dimensions — the
-    multi-dimensional clustering that makes either-dimension range
-    predicates prune files at 100 TB
-    (datapipe/sampling.py zorder_key)."""
-    from .datapipe.sampling import zorder_key
-
-    src = _t(spark, sf_dir, "orders").select(
-        F.col("o_custkey").cast("long").alias("ck"),
-        F.datediff(
-            F.to_date("o_orderdate"), F.lit("1995-01-01").cast("date")
-        ).cast("long").alias("d"),
-    )
-    z = zorder_key(src, "ck", "d", bits=16, buckets=64)
-    return z.groupBy("zbucket").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.min("ck").cast("long").alias("min_ck"),
-        F.max("ck").cast("long").alias("max_ck"),
-        F.min("d").cast("long").alias("min_day"),
-        F.max("d").cast("long").alias("max_day"),
-    )
-
-
-ORACLES["zorder_layout"] = _zorder_sql()
 
 
 @_register("bloom_join_prune", None)

@@ -587,23 +587,6 @@ def test_sketch_builds_have_partial_aggregation(spark):
         assert tree.count("Exchange") == 1, tree
 
 
-def test_sql_surface_prunes_and_broadcasts(spark):
-    """The ad-hoc SQL surface must get full Catalyst treatment from
-    plain text: lineitem scan pruned to the referenced columns and
-    every dimension join broadcast (the fact side never shuffles on a
-    dim key)."""
-    import __spark_entry__ as entry_mod
-
-    df = entry_mod.queries()["sql_region_orders"](spark, SF_DIR)
-    plan = _plan(df)
-    tree = _tree(df)
-    # column pruning: the 11-column lineitem scan reads only 2
-    seg = [s for s in plan.split("(") if "lineitem.parquet" in s]
-    assert seg and "l_extendedprice" not in seg[0]
-    assert tree.count("BroadcastHashJoin") >= 3
-    assert "SortMergeJoin" not in tree
-
-
 def test_bm25_dimensions_broadcast(spark):
     """BM25's panel, df and stats tables must all broadcast — the
     posting (fact) side never shuffles on query content; and df must be
@@ -638,18 +621,6 @@ def test_phrase_search_prunes_before_shuffle(spark):
     plan = _plan(df)
     assert "LeftSemi" in plan
     assert "CartesianProduct" not in _tree(df)
-
-
-def test_sql_surface_pushes_date_filter(spark):
-    """The SQL surface's date range predicate must reach the parquet
-    reader as a pushed filter, not run as a post-scan Filter."""
-    import __spark_entry__ as entry_mod
-
-    df = entry_mod.queries()["sql_priority_census"](spark, SF_DIR)
-    plan = _plan(df)
-    seg = [s for s in plan.split("PushedFilters: [") if s is not plan]
-    pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
-    assert "o_orderdate" in pushed
 
 
 def test_pack_sequences_distributed_prefix_sum(spark):

@@ -119,9 +119,7 @@ HEADLINE = [
     "topk_per_group",
     "sessionize",
     "event_rates_hopping",
-    "asof_enrich",
     "skew_profile",
-    "range_band_join",
     "sentence_split",
     "sentence_split_bounded",
     "linearize_roundtrip",

@@ -570,102 +570,6 @@ def skew_profile_q(spark, sf_dir):
 
 
 @_register(
-    "asof_enrich",
-    """
-WITH aj_b AS (
-  SELECT user_id, epoch_us(ts) AS tus, 0 AS side,
-         event_id AS click_eid, value AS click_value,
-         NULL::BIGINT AS event_id
-  FROM events WHERE event_type = 'click'),
-aj_p AS (
-  SELECT user_id, epoch_us(ts) AS tus, 1 AS side,
-         NULL::BIGINT AS click_eid, NULL::DOUBLE AS click_value,
-         event_id
-  FROM events),
-aj_u AS (SELECT * FROM aj_b UNION ALL SELECT * FROM aj_p),
-aj_w AS (
-  SELECT user_id, tus, side, event_id,
-         last_value(click_eid IGNORE NULLS) OVER w AS click_eid,
-         last_value(click_value IGNORE NULLS) OVER w AS click_value,
-         last_value(CASE WHEN side = 0 THEN tus END IGNORE NULLS) OVER w
-           AS asof_ts
-  FROM aj_u
-  WINDOW w AS (PARTITION BY user_id
-               ORDER BY tus, side, click_eid, click_value
-               ROWS UNBOUNDED PRECEDING))
-SELECT event_id, user_id, tus, click_eid, click_value, asof_ts
-FROM aj_w WHERE side = 1
-""",
-)
-def asof_enrich_q(spark, sf_dir):
-    """AS-OF JOIN (pandas merge_asof / kdb aj semantics, distributed):
-    every event is enriched with the user's latest click AT OR BEFORE
-    it. Union-window formulation — NO join node: one key-partitioned
-    window carries each build row forward via running last-non-null
-    (datapipe/joins.py asof_join; the oracle runs the identical spec
-    through DuckDB's window engine rather than its native ASOF JOIN, so
-    the tie semantics are pinned by construction)."""
-    from .datapipe.joins import asof_join
-
-    ev = _t(spark, sf_dir, "events")
-    tus = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-    )
-    probe = ev.select("event_id", "user_id", tus.alias("tus"))
-    build = ev.filter(F.col("event_type") == "click").select(
-        "user_id",
-        tus.alias("tus"),
-        F.col("event_id").alias("click_eid"),
-        F.col("value").alias("click_value"),
-    )
-    out = asof_join(
-        probe, build, ["user_id"], ts_col="tus",
-        payload_cols=["click_eid", "click_value"],
-    )
-    return out.select(
-        "event_id", "user_id", "tus", "click_eid", "click_value", "asof_ts"
-    )
-
-
-_QTY_BANDS = [("low", 1, 11), ("mid", 8, 30), ("high", 25, 51)]
-
-
-@_register(
-    "range_band_join",
-    f"""
-WITH rb_bands AS (
-  SELECT * FROM (VALUES
-    {", ".join(f"('{n}', {lo}, {hi})" for n, lo, hi in _QTY_BANDS)}
-  ) t(band, lo, hi)),
-rb_p AS (SELECT l_quantity::INT AS value FROM lineitem)
-SELECT b.band,
-       count(*)::BIGINT AS n_rows,
-       sum(p.value)::BIGINT AS qty_sum
-FROM rb_p p JOIN rb_bands b ON p.value >= b.lo AND p.value < b.hi
-GROUP BY 1
-""",
-)
-def range_band_join_q(spark, sf_dir):
-    """RANGE (interval/band) JOIN without the cross-join-filter shape:
-    overlapping quantity tiers explode into fixed-width integer
-    buckets, probe rows equi-join on their single bucket, the exact
-    range predicate refines — candidate fan-out O(band/bucket), never
-    |probe|×|bands| (datapipe/joins.py range_join; the oracle is the
-    plain range-predicate join, the semantic spec)."""
-    from .datapipe.joins import range_join
-
-    li = _t(spark, sf_dir, "lineitem").select(
-        F.col("l_quantity").cast("int").alias("value")
-    )
-    bands = spark.createDataFrame(_QTY_BANDS, ["band", "lo", "hi"])
-    out = range_join(li, bands, "value", bucket_width=10)
-    return out.groupBy("band").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("value").cast("long").alias("qty_sum"),
-    )
-
-
-@_register(
     "event_rates_hopping",
     """
 WITH hw_b AS (

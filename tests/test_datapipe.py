@@ -469,52 +469,3 @@ def test_tfidf_top_terms_ranking(spark):
     assert top[2][0][1] == "cherry" and top[2][0][2] == 2 * 3 * 10**6
     # rank-2 term in doc 0: common (tf=3, idf 1e6)
     assert top[0][1][1] == "common" and top[0][1][2] == 3 * 10**6
-
-
-def test_asof_join_boundary_semantics(spark):
-    """Inclusive at equal timestamps, NULL when no earlier build row,
-    latest-wins across multiple earlier rows."""
-    from genie_spark.datapipe.joins import asof_join
-
-    probe = spark.createDataFrame(
-        [(1, 5, "p1"), (1, 10, "p2"), (1, 3, "p0"), (2, 7, "q1")],
-        ["k", "tus", "tag"],
-    )
-    build = spark.createDataFrame(
-        [(1, 5, 50.0), (1, 9, 90.0)], ["k", "tus", "val"]
-    )
-    got = {
-        r["tag"]: (r["val"], r["asof_ts"])
-        for r in asof_join(
-            probe, build, ["k"], ts_col="tus", payload_cols=["val"]
-        ).collect()
-    }
-    assert got == {
-        "p0": (None, None),     # before any build row
-        "p1": (50.0, 5),        # equal ts matches (inclusive)
-        "p2": (90.0, 9),        # latest of the two earlier rows
-        "q1": (None, None),     # key with no build rows at all
-    }
-
-
-def test_range_join_boundaries_and_bucket_spans(spark):
-    """lo inclusive / hi exclusive; bands wider than a bucket and bands
-    crossing bucket edges still match exactly (bucketization is a
-    candidate bound, not a semantics change)."""
-    from genie_spark.datapipe.joins import range_join
-
-    probe = spark.createDataFrame(
-        [(v,) for v in [1, 9, 10, 19, 20, 35]], ["value"]
-    )
-    bands = spark.createDataFrame(
-        [("a", 1, 10), ("b", 9, 21), ("c", 30, 40)], ["band", "lo", "hi"]
-    )
-    got = sorted(
-        (r["value"], r["band"])
-        for r in range_join(probe, bands, "value", bucket_width=10).collect()
-    )
-    assert got == [
-        (1, "a"), (9, "a"),          # hi=10 exclusive: 10 not in a
-        (9, "b"), (10, "b"), (19, "b"), (20, "b"),  # b spans 2 buckets
-        (35, "c"),
-    ]

@@ -83,7 +83,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_rounds: int = 25,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """Components of the undirected graph given as an edge list.
 
@@ -101,8 +100,7 @@ def connected_components(
         .distinct()
         .withColumn("lbl", F.col("id"))
     )
-    if use_local_checkpoint:
-        sym = sym.localCheckpoint(eager=False)
+    sym = sym.localCheckpoint(eager=False)
 
     for _ in range(max_rounds):
         # neighbor-min: aggregate each vertex's neighbors' labels, then
@@ -133,8 +131,7 @@ def connected_components(
                 "old_lbl",
             )
         )
-        if use_local_checkpoint:
-            new = new.localCheckpoint(eager=True)
+        new = new.localCheckpoint(eager=True)
         # convergence = NO label moved this round (labels only decrease,
         # so post-jump lbl == old_lbl iff both the neighbor step and the
         # jump were no-ops). A filter over the just-materialized blocks
@@ -1052,7 +1049,6 @@ def label_propagation_fixed(
     iterations: int = 3,
     src: str = "src",
     dst: str = "dst",
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     et al. 2007) made deterministic and engine-exact: a FIXED iteration
@@ -1079,11 +1075,10 @@ def label_propagation_fixed(
     sym = sym.union(
         sym.select(F.col("w").alias("u"), F.col("u").alias("w"))
     ).distinct()
-    if use_local_checkpoint:
-        # eager: the symmetrized edge set is re-joined every round, and
-        # under AQE a lazy checkpoint re-materializes the distinct
-        # shuffle per round (the pagerank_fixed lesson)
-        sym = sym.localCheckpoint(eager=True)
+    # eager: the symmetrized edge set is re-joined every round, and
+    # under AQE a lazy checkpoint re-materializes the distinct shuffle
+    # per round (the pagerank_fixed lesson)
+    sym = sym.localCheckpoint(eager=True)
     labels = (
         sym.select(F.col("u").alias("v")).distinct()
         .withColumn("lbl", F.col("v"))
@@ -1103,8 +1098,7 @@ def label_propagation_fixed(
             .agg(F.min(key).alias("_w"))
             .select("v", F.col("_w.l").alias("lbl"))
         )
-        if use_local_checkpoint:
-            labels = labels.localCheckpoint(eager=False)
+        labels = labels.localCheckpoint(eager=False)
     return labels.select(
         F.col("v").alias("id"), F.col("lbl").alias("community")
     )

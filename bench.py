@@ -458,32 +458,10 @@ def run_load_worker(sf_dir: str) -> None:
     measured on cores 0..N-1, copies of this worker keep cores N..4N-1
     busy with the SAME decode workload, so both levels see the chip in
     the same frequency/bandwidth state."""
-    import duckdb
-
-    from genie_spark.constraints import TagCodes
-    from genie_spark.decode import DeterministicScorer, generate_for_text
-    from genie_spark.extract import split_sentences
-    from genie_spark.tokenizer import WordTokenizer
-    from genie_spark.trie import trie_from_names
-
-    rows = duckdb.sql(
-        "SELECT text FROM read_parquet('"
-        + os.path.join(sf_dir, "documents.parquet")
-        + "') ORDER BY doc_id LIMIT 1000"
-    ).fetchall()
-    words = sorted({w for (t,) in rows for w in t.split() if len(w) >= 3})
-    ents = [w for w in words if len(w) >= 4]
-    rels = [w for w in words if len(w) == 3]
-    tok = WordTokenizer(ents + rels)
-    codes = TagCodes(tok)
-    ent_t, rel_t = trie_from_names(ents, tok), trie_from_names(rels, tok)
-    scorer = DeterministicScorer(tok)
-    sents = []
-    for (t,) in rows:
-        sents.extend(split_sentences(t.replace(" the ", ". the ")))
+    _hw_worker_setup(sf_dir)
+    n = len(_HW_CTX[0])
     while True:  # killed by the parent
-        for s in sents:
-            generate_for_text(s, scorer, tok, codes, ent_t, rel_t, num_beams=2)
+        _hw_worker_run((0, n))
 
 
 def measure_hw_ceiling(sf_dir: str, lo: int = 8, hi: int = 32) -> dict:

@@ -34,6 +34,40 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """``(a, b)`` with ``a < b``: the distinct undirected edges of a
+    directed edge list, self-loops dropped."""
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("a"),
+            F.greatest(F.col(src), F.col(dst)).alias("b"),
+        )
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _undirected_degree(und: DataFrame) -> DataFrame:
+    """``(v, deg)`` over an :func:`_undirected` edge set."""
+    return (
+        und.select(F.col("a").alias("v"))
+        .union(und.select(F.col("b").alias("v")))
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
+    )
+
+
+def _vertices(e: DataFrame) -> DataFrame:
+    """``(v)``: the distinct endpoints of a ``(src, dst)`` edge frame,
+    lazily checkpointed (it is re-joined every iteration)."""
+    return (
+        e.select(F.col("src").alias("v"))
+        .union(e.select(F.col("dst").alias("v")))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
 def pagerank_sql_chain(
     edges_cte: str = "e",
     iterations: int = 5,
@@ -237,12 +271,7 @@ def pagerank_fixed(
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).localCheckpoint(eager=True)
-    verts = (
-        e.select(F.col("src").alias("v"))
-        .union(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    verts = _vertices(e)
     outd = e.groupBy(F.col("src").alias("v")).agg(
         F.count(F.lit(1)).cast("long").alias("od")
     ).localCheckpoint(eager=False)
@@ -328,21 +357,8 @@ def triangle_count(
     triangle is counted exactly once: it has a unique lowest-(deg,id)
     apex whose two oriented out-edges form the wedge, closed by the
     (id-normalized) undirected edge between the other two vertices."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .union(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
+    und = _undirected(edges, src, dst).localCheckpoint(eager=False)
+    deg = _undirected_degree(und)
     da = deg.select(F.col("v").alias("a"), F.col("deg").alias("deg_a"))
     db = deg.select(F.col("v").alias("b"), F.col("deg").alias("deg_b"))
     a_first = (F.col("deg_a") < F.col("deg_b")) | (
@@ -402,14 +418,7 @@ def common_neighbors(
     linear-idf argument). Degrees in the Jaccard stay the TRUE degrees.
     Pass None to disable (small graphs / oracle parity at full
     semantics)."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(edges, src, dst)
     adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
@@ -1390,12 +1399,7 @@ def personalized_pagerank_fixed(
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).localCheckpoint(eager=True)
-    verts = (
-        e.select(F.col("src").alias("v"))
-        .union(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    verts = _vertices(e)
     sd = seeds.select(F.col(seed_col).alias("v")).distinct().localCheckpoint(
         eager=False
     )
@@ -1515,12 +1519,7 @@ def hits_fixed(
         # the defensive dedup is then a full redundant shuffle
         e = e.distinct()
     e = e.localCheckpoint(eager=True)
-    verts = (
-        e.select(F.col("src").alias("v"))
-        .union(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    verts = _vertices(e)
     h = verts.select("v", F.lit(scale).cast("long").alias("r"))
     a = None
     for _it in range(iterations):
@@ -1643,23 +1642,9 @@ def kcore_fixed(
     ``localCheckpoint`` keeps the unrolled lineage linear. The k-core
     is the standard KG-quality trim (drop weakly-attached crawl debris
     before embedding training)."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(edges, src, dst).localCheckpoint(eager=True)
     for _it in range(rounds):
-        deg = (
-            und.select(F.col("a").alias("v"))
-            .union(und.select(F.col("b").alias("v")))
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        )
-        keep = deg.filter(F.col("c") >= k).select("v")
+        keep = _undirected_degree(und).filter(F.col("deg") >= k).select("v")
         und = (
             und.join(keep.withColumnRenamed("v", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("v", "b"), "b", "left_semi")
@@ -1670,11 +1655,8 @@ def kcore_fixed(
         # is still cheap, a per-round cut pays ~0.8s RDD translation
         if _it % 2 == 1 or _it == rounds - 1:
             und = und.localCheckpoint(eager=False)
-    return (
-        und.select(F.col("a").alias("v"))
-        .union(und.select(F.col("b").alias("v")))
-        .groupBy(F.col("v").alias("entity"))
-        .agg(F.count(F.lit(1)).cast("long").alias("core_deg"))
+    return _undirected_degree(und).select(
+        F.col("v").alias("entity"), F.col("deg").alias("core_deg")
     )
 
 
@@ -2049,21 +2031,8 @@ def local_clustering(
     THREE corners via a row-local array explode — no second triangle
     pass — and the per-vertex tally joins the degree table on the
     vertex key."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .union(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
+    und = _undirected(edges, src, dst).localCheckpoint(eager=False)
+    deg = _undirected_degree(und)
     da = deg.select(F.col("v").alias("a"), F.col("deg").alias("deg_a"))
     db = deg.select(F.col("v").alias("b"), F.col("deg").alias("deg_b"))
     a_first = (F.col("deg_a") < F.col("deg_b")) | (

@@ -343,20 +343,18 @@ def k_hop(
     ).select(F.col("entity"), F.col("min_hop"))
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Global triangle count of the UNDIRECTED graph, one row
-    ``(n_triangles)``.
+def _triangles(edges: DataFrame, src: str, dst: str):
+    """``(deg, closed)`` of the UNDIRECTED graph: the degree table
+    ``(v, deg)`` and every triangle exactly once as ``(u, x, y)``.
 
     Degree-ordered orientation (the scalable formulation): every
     undirected edge is directed from its lower-(degree, id) endpoint to
     the higher one, which bounds oriented out-degree by O(sqrt(m)) and
     keeps the wedge join sub-quadratic on skewed (power-law) graphs —
     the naive id-ordered wedge join explodes on the head vertex. Each
-    triangle is counted exactly once: it has a unique lowest-(deg,id)
-    apex whose two oriented out-edges form the wedge, closed by the
-    (id-normalized) undirected edge between the other two vertices."""
+    triangle is found exactly once: it has a unique lowest-(deg,id)
+    apex ``u`` whose two oriented out-edges form the wedge ``(x, y)``,
+    closed by the (id-normalized) undirected edge between x and y."""
     und = _undirected(edges, src, dst).localCheckpoint(eager=False)
     deg = _undirected_degree(und)
     da = deg.select(F.col("v").alias("a"), F.col("deg").alias("deg_a"))
@@ -377,6 +375,16 @@ def triangle_count(
     closed = wedges.join(
         und, (F.col("x") == F.col("a")) & (F.col("y") == F.col("b"))
     )
+    return deg, closed.select("u", "x", "y")
+
+
+def triangle_count(
+    edges: DataFrame, src: str = "src", dst: str = "dst"
+) -> DataFrame:
+    """Global triangle count of the UNDIRECTED graph, one row
+    ``(n_triangles)``, over the degree-ordered wedge join of
+    :func:`_triangles`."""
+    _, closed = _triangles(edges, src, dst)
     return closed.agg(F.count(F.lit(1)).cast("bigint").alias("n_triangles"))
 
 
@@ -2025,32 +2033,13 @@ def local_clustering(
     ``cc(v) = 2·tri(v) / (deg(v)·(deg(v)−1))`` in integer ppm, for
     every vertex with degree >= 2 — (v, deg, n_tri, cc_ppm).
 
-    Same degree-ordered orientation as :func:`triangle_count` (each
+    Same degree-ordered wedge join as :func:`triangle_count` (each
     triangle closes exactly once, wedge join bounded O(sqrt(m)) per
     vertex on skewed graphs); each closed triangle then credits its
     THREE corners via a row-local array explode — no second triangle
     pass — and the per-vertex tally joins the degree table on the
     vertex key."""
-    und = _undirected(edges, src, dst).localCheckpoint(eager=False)
-    deg = _undirected_degree(und)
-    da = deg.select(F.col("v").alias("a"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("v").alias("b"), F.col("deg").alias("deg_b"))
-    a_first = (F.col("deg_a") < F.col("deg_b")) | (
-        (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
-    )
-    oriented = (
-        und.join(da, "a").join(db, "b")
-        .select(
-            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("w"),
-        )
-    )
-    o1 = oriented.select("u", F.col("w").alias("x"))
-    o2 = oriented.select("u", F.col("w").alias("y"))
-    wedges = o1.join(o2, "u").filter(F.col("x") < F.col("y"))
-    closed = wedges.join(
-        und, (F.col("x") == F.col("a")) & (F.col("y") == F.col("b"))
-    ).select("u", "x", "y")
+    deg, closed = _triangles(edges, src, dst)
     tc = (
         closed.select(
             F.explode(F.array(F.col("u"), F.col("x"), F.col("y"))).alias("v")

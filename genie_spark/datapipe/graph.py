@@ -272,12 +272,36 @@ def pagerank_fixed(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).localCheckpoint(eager=True)
     verts = _vertices(e)
+    return _rank_with_restart(
+        e, verts.select("v", F.lit(1).alias("_is")), verts.count(),
+        iterations, scale, damping_num, damping_den,
+    )
+
+
+def _rank_with_restart(
+    e: DataFrame,
+    flagged: DataFrame,
+    n_tele: int,
+    iterations: int,
+    scale: int,
+    damping_num: int,
+    damping_den: int,
+) -> DataFrame:
+    """The integer PageRank recurrence shared by :func:`pagerank_fixed`
+    and :func:`personalized_pagerank_fixed`. ``e`` is the checkpointed
+    ``(src, dst)`` edge frame; ``flagged`` is ``(v, _is)`` for every
+    vertex, with ``_is`` = 1 on the ``n_tele`` teleport targets and 0
+    elsewhere. Plain PageRank is the case where every vertex is a
+    target: ``_is`` = 1 and ``n_tele`` = |V| reduce the PPR recurrence
+    to the PageRank one term for term."""
     outd = e.groupBy(F.col("src").alias("v")).agg(
         F.count(F.lit(1)).cast("long").alias("od")
     ).localCheckpoint(eager=False)
-    n = verts.count()
-    tele = ((damping_den - damping_num) * scale) // (damping_den * n)
-    pr = verts.select("v", F.lit(scale // n).cast("long").alias("r"))
+    tele = ((damping_den - damping_num) * scale) // (damping_den * n_tele)
+    pr = flagged.select(
+        "v",
+        (F.col("_is") * F.lit(scale // n_tele)).cast("long").alias("r"),
+    )
     for _it in range(iterations):
         contrib = (
             e.join(pr.withColumnRenamed("v", "src"), "src")
@@ -290,14 +314,16 @@ def pagerank_fixed(
             .agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("d"))
         )
         pr = (
-            verts.join(inflow, "v", "left")
+            flagged.join(inflow, "v", "left")
             .crossJoin(dang)
             .select(
                 "v",
+                "_is",
                 (
-                    F.lit(tele).cast("long")
+                    F.col("_is").cast("long") * F.lit(tele).cast("long")
                     + F.expr(
-                        f"({damping_num}L * (coalesce(s, 0L) + (d div {n}L)))"
+                        f"({damping_num}L * (coalesce(s, 0L)"
+                        f" + (_is * (d div {n_tele}L))))"
                         f" div {damping_den}L"
                     )
                 ).alias("r"),
@@ -1407,52 +1433,15 @@ def personalized_pagerank_fixed(
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).localCheckpoint(eager=True)
-    verts = _vertices(e)
     sd = seeds.select(F.col(seed_col).alias("v")).distinct().localCheckpoint(
         eager=False
     )
-    outd = e.groupBy(F.col("src").alias("v")).agg(
-        F.count(F.lit(1)).cast("long").alias("od")
-    ).localCheckpoint(eager=False)
-    ns = sd.count()
-    tele = ((damping_den - damping_num) * scale) // (damping_den * ns)
-    flagged = verts.join(
+    flagged = _vertices(e).join(
         F.broadcast(sd.withColumn("_is", F.lit(1))), "v", "left"
     ).select("v", F.coalesce("_is", F.lit(0)).alias("_is"))
-    pr = flagged.select(
-        "v",
-        (F.col("_is") * F.lit(scale // ns)).cast("long").alias("r"),
+    return _rank_with_restart(
+        e, flagged, sd.count(), iterations, scale, damping_num, damping_den
     )
-    for _it in range(iterations):
-        contrib = (
-            e.join(pr.withColumnRenamed("v", "src"), "src")
-            .join(outd.withColumnRenamed("v", "src"), "src")
-            .select(F.col("dst").alias("v"), F.expr("r div od").alias("c"))
-        )
-        inflow = contrib.groupBy("v").agg(F.sum("c").cast("long").alias("s"))
-        dang = (
-            pr.join(outd, "v", "left_anti")
-            .agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("d"))
-        )
-        pr = (
-            flagged.join(inflow, "v", "left")
-            .crossJoin(dang)
-            .select(
-                "v",
-                "_is",
-                (
-                    F.col("_is").cast("long") * F.lit(tele).cast("long")
-                    + F.expr(
-                        f"({damping_num}L * (coalesce(s, 0L)"
-                        f" + (_is * (d div {ns}L))))"
-                        f" div {damping_den}L"
-                    )
-                ).alias("r"),
-            )
-        )
-        if _it % 2 == 1 or _it == iterations - 1:
-            pr = pr.localCheckpoint(eager=False)
-    return pr.select(F.col("v").alias("entity"), F.col("r").alias("rank_fp"))
 
 
 def ppr_sql_chain(

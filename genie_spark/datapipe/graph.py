@@ -1517,51 +1517,37 @@ def hits_fixed(
         e = e.distinct()
     e = e.localCheckpoint(eager=True)
     verts = _vertices(e)
+
+    def flow(scores, frm, to):
+        # L1-normalized mass each vertex receives along the frm -> to edges
+        raw = (
+            e.join(scores.withColumnRenamed("v", frm), frm)
+            .groupBy(F.col(to).alias("v"))
+            .agg(F.sum("r").cast("long").alias("s"))
+        )
+        tot = raw.agg(F.sum("s").cast("long").alias("t"))
+        return (
+            verts.join(raw, "v", "left")
+            .crossJoin(tot)
+            .select(
+                "v",
+                F.when(
+                    F.col("s").isNull(), F.lit(0).cast("long")
+                ).otherwise(
+                    F.expr(f"(s * {scale}L) div t")
+                ).alias("r"),
+            )
+        )
+
     h = verts.select("v", F.lit(scale).cast("long").alias("r"))
     a = None
     for _it in range(iterations):
-        araw = (
-            e.join(h.withColumnRenamed("v", "src"), "src")
-            .groupBy(F.col("dst").alias("v"))
-            .agg(F.sum("r").cast("long").alias("s"))
-        )
-        atot = araw.agg(F.sum("s").cast("long").alias("t"))
-        a = (
-            verts.join(araw, "v", "left")
-            .crossJoin(atot)
-            .select(
-                "v",
-                F.when(
-                    F.col("s").isNull(), F.lit(0).cast("long")
-                ).otherwise(
-                    F.expr(f"(s * {scale}L) div t")
-                ).alias("r"),
-            )
-        )
-        # one lineage cut per full iteration (on h below) bounds plan
-        # growth at ~9 refs; cutting a too just pays a second ~0.8s
-        # driver-side RDD translation per round
+        a = flow(h, "src", "dst")
+        # h is cut every iteration, a only once at the end: one cut per
+        # iteration already bounds the plan (see _iterate)
         if _it == iterations - 1:
             a = a.localCheckpoint(eager=False)
-        hraw = (
-            e.join(a.withColumnRenamed("v", "dst"), "dst")
-            .groupBy(F.col("src").alias("v"))
-            .agg(F.sum("r").cast("long").alias("s"))
-        )
-        htot = hraw.agg(F.sum("s").cast("long").alias("t"))
-        h = (
-            verts.join(hraw, "v", "left")
-            .crossJoin(htot)
-            .select(
-                "v",
-                F.when(
-                    F.col("s").isNull(), F.lit(0).cast("long")
-                ).otherwise(
-                    F.expr(f"(s * {scale}L) div t")
-                ).alias("r"),
-            )
-            .localCheckpoint(eager=False)
-        )
+        h = flow(a, "dst", "src").localCheckpoint(eager=False)
     return (
         h.withColumnRenamed("r", "hub_fp")
         .join(a.withColumnRenamed("r", "auth_fp"), "v")

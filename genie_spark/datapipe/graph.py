@@ -1175,6 +1175,24 @@ def label_propagation_fixed(
     )
 
 
+def _semi_naive(seen: DataFrame, grow, rounds: int) -> DataFrame:
+    """Semi-naive fixpoint: starting from the checkpointed fact set
+    ``seen`` (also the first delta), each of at most ``rounds`` rounds
+    derives ``new = grow(delta, seen, i)`` from the last round's delta
+    only and unions it into ``seen``; a round that derives nothing ends
+    the loop. ``new`` is checkpointed eagerly because it is used twice,
+    as the next delta and in the union, and its ``count()`` is the
+    convergence probe; the accumulator is cut lazily."""
+    delta = seen
+    for i in range(rounds):
+        new = grow(delta, seen, i).localCheckpoint(eager=True)
+        if new.count() == 0:
+            break
+        seen = seen.union(new).localCheckpoint(eager=False)
+        delta = new
+    return seen
+
+
 def transitive_closure(
     edges: DataFrame,
     max_hops: int = 12,
@@ -1196,11 +1214,9 @@ def transitive_closure(
     frontier's dst (delta is the small side once the frontier
     stabilizes — at web-KG diameters the closure converges in < 10
     rounds) + one left-anti join against the accumulated closure, both
-    partition-colocatable on the pair key. Lineage is cut per round
-    (eager localCheckpoint on the delta — it is reused twice: as the
-    next frontier and in the union; lazy on the accumulator), and the
-    per-round driver cost is one count() on the delta, the same
-    convergence probe as connected_components. Dense closures (the
+    partition-colocatable on the pair key. The loop, its lineage cuts
+    and its one-count() convergence probe are :func:`_semi_naive`'s,
+    shared with :func:`closure_delta`. Dense closures (the
     output can be quadratic on hub-heavy graphs) are the caller's
     contract: run it on layered / DAG-ish KGs (ontology subsumption,
     containment hierarchies), not on social graphs."""
@@ -1213,23 +1229,19 @@ def transitive_closure(
     seen = e.select(
         "src", "dst", F.lit(1).cast("int").alias("min_hops")
     ).localCheckpoint(eager=True)
-    delta = seen.select("src", "dst")
-    hop = 1
-    while hop < max_hops:
-        hop += 1
-        new = (
+
+    # seen starts at hop 1, so round i finds the pairs first reached at
+    # hop i + 2 (BFS order: each pair at its shortest distance)
+    def grow(delta, seen, i):
+        return (
             delta.join(e2, delta.dst == F.col("mid"))
             .select("src", F.col("nxt").alias("dst"))
             .distinct()
             .join(seen.select("src", "dst"), ["src", "dst"], "left_anti")
-            .select("src", "dst", F.lit(hop).cast("int").alias("min_hops"))
-            .localCheckpoint(eager=True)
+            .select("src", "dst", F.lit(i + 2).cast("int").alias("min_hops"))
         )
-        if new.count() == 0:
-            break
-        seen = seen.union(new).localCheckpoint(eager=False)
-        delta = new.select("src", "dst")
-    return seen
+
+    return _semi_naive(seen, grow, max_hops - 1)
 
 
 def closure_sql(edges_cte: str = "e", max_hops: int = 12) -> str:
@@ -1330,26 +1342,23 @@ def closure_delta(
     def not_known(df, known):
         return df.join(known.select("src", "dst"), ["src", "dst"], "left_anti")
 
-    # round 0: the new edges themselves (minus already-known pairs)
-    delta = not_known(
-        new_edges.select("src", "dst").distinct(), old_c
-    ).localCheckpoint(eager=True)
-    seen = delta
-    for _ in range(max_hops):
+    def grow(delta, seen, _i):
         # grow right: delta ∘ all_edges
         grown = (
             delta.join(e_all, delta.dst == F.col("mid"))
             .select("src", F.col("nxt").alias("dst"))
             .distinct()
         )
-        new = (
-            not_known(not_known(grown, old_c), seen)
-            .localCheckpoint(eager=True)
-        )
-        if new.count() == 0:
-            break
-        seen = seen.union(new).localCheckpoint(eager=False)
-        delta = new
+        return not_known(not_known(grown, old_c), seen)
+
+    # round 0: the new edges themselves (minus already-known pairs)
+    seen = _semi_naive(
+        not_known(
+            new_edges.select("src", "dst").distinct(), old_c
+        ).localCheckpoint(eager=True),
+        grow,
+        max_hops,
+    )
     # close left: old pairs reaching into any delta pair
     # (x →old u, (u, y) ∈ seen) — one join, then the final dedup
     left = (

@@ -1985,25 +1985,8 @@ def bgp_match(
     variables (SPARQL FILTER NOT EXISTS). Both compile to the join
     flavors Spark already optimizes; applied after the required
     patterns, negations before optionals."""
-    from pyspark.sql import functions as F
 
     def compile_one(ps, pp, po):
-        t = facts
-        rename = {}
-        for val, col in ((ps, s_col), (pp, r_col), (po, o_col)):
-            if val.startswith("?"):
-                v = val[1:]
-                if v in rename:
-                    t = t.filter(F.col(rename[v]) == F.col(col))
-                else:
-                    rename[v] = col
-            else:
-                t = t.filter(F.col(col) == val)
-        return t.select(*[F.col(c).alias(v) for v, c in rename.items()]), set(rename)
-
-    plan = None
-    bound: set = set()
-    for ps, pp, po in patterns:
         t = facts
         rename = {}
         for val, col in ((ps, s_col), (pp, r_col), (po, o_col)):
@@ -2015,13 +1998,18 @@ def bgp_match(
                     rename[v] = col
             else:
                 t = t.filter(F.col(col) == val)
-        t = t.select(*[F.col(c).alias(v) for v, c in rename.items()])
+        return t.select(*[F.col(c).alias(v) for v, c in rename.items()]), set(rename)
+
+    plan = None
+    bound: set = set()
+    for pat in patterns:
+        t, vs = compile_one(*pat)
         if plan is None:
             plan = t
         else:
-            shared = sorted(bound & set(rename))
+            shared = sorted(bound & vs)
             plan = plan.join(t, shared) if shared else plan.crossJoin(t)
-        bound |= set(rename)
+        bound |= vs
     for pat in negations or []:
         t, vs = compile_one(*pat)
         shared = sorted(bound & vs)

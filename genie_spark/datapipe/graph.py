@@ -699,6 +699,36 @@ def rule_confidence(
     )
 
 
+def _emb_arr(kind: str, name, dim: int, mod: int):
+    """array<long> exact-integer hash embedding of the Column ``name``:
+    element d is ``h60(kind \\x01 name \\x01 d) % mod``, d = 0..dim-1.
+    ``kind`` salts entities ("e") and relations ("r") apart."""
+    from .hashes import h60
+
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(dim - 1)),
+        lambda d: h60(
+            F.concat(
+                F.lit(kind + "\x01"),
+                name.cast("string"),
+                F.lit("\x01"),
+                d.cast("string"),
+            )
+        )
+        % mod,
+    )
+
+
+def _l1(sr, e):
+    """TransE L1 energy ``sum_d |sr[d] - e[d]|`` of two embedding
+    arrays, folded in dim order; ``sr`` is the per-dim s + r sum."""
+    return F.aggregate(
+        F.zip_with(sr, e, lambda a, b: F.abs(a - b)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
 def transe_energy(
     triples: DataFrame,
     dim: int = 8,
@@ -745,31 +775,6 @@ def transe_energy(
         ).cast("string"),
     )
 
-    def emb_arr(kind, name):
-        # array<long> per-dim embedding — element formula identical to
-        # transe_energy_col's emb(), so energies are integer-identical
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(dim - 1)),
-            lambda d: h60(
-                F.concat(
-                    F.lit(kind + "\x01"),
-                    name.cast("string"),
-                    F.lit("\x01"),
-                    d.cast("string"),
-                )
-            )
-            % mod,
-        )
-
-    def l1(sr_col, e_arr):
-        # sum_d |(s_d + r_d) - e_d| folded in dim order == the
-        # transe_energy_col fold exactly (integer adds are associative)
-        return F.aggregate(
-            F.zip_with(sr_col, e_arr, lambda a, b: F.abs(a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
     # Staged projections hash each slot ONCE per row. transe_energy_col
     # is the spec form, but inlining it three times (energy, energy_neg,
     # margin) re-evaluates every md5 inside interpreted HOFs (no CSE):
@@ -779,14 +784,15 @@ def transe_energy(
     staged = triples.select(
         s.alias("s"), r.alias("r"), o.alias("o"),
         F.zip_with(
-            emb_arr("e", s), emb_arr("r", r), lambda a, b: a + b
+            _emb_arr("e", s, dim, mod), _emb_arr("r", r, dim, mod),
+            lambda a, b: a + b,
         ).alias("_sr"),
-        emb_arr("e", o).alias("_oe"),
-        emb_arr("e", o_neg).alias("_ne"),
+        _emb_arr("e", o, dim, mod).alias("_oe"),
+        _emb_arr("e", o_neg, dim, mod).alias("_ne"),
     ).select(
         "s", "r", "o",
-        l1(F.col("_sr"), F.col("_oe")).cast("long").alias("energy"),
-        l1(F.col("_sr"), F.col("_ne")).cast("long").alias("energy_neg"),
+        _l1(F.col("_sr"), F.col("_oe")).cast("long").alias("energy"),
+        _l1(F.col("_sr"), F.col("_ne")).cast("long").alias("energy_neg"),
     )
     return staged.select(
         "s", "r", "o", "energy", "energy_neg",
@@ -854,30 +860,6 @@ def link_prediction_ranks(
 
     from .hashes import h60
 
-    def emb_arr(kind: str, name):
-        # array<long> per-dim hash embedding -- same element formula as
-        # transe_energy_col's emb(), so energies are integer-identical
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(dim - 1)),
-            lambda d: h60(
-                F.concat(
-                    F.lit(kind + "\x01"),
-                    name.cast("string"),
-                    F.lit("\x01"),
-                    d.cast("string"),
-                )
-            )
-            % mod,
-        )
-
-    def l1(sr_col, e_col):
-        # sum_d |(s_d + r_d) - e_d| == transe_energy_col exactly
-        return F.aggregate(
-            F.zip_with(sr_col, e_col, lambda a, b: F.abs(a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
     pos = triples.select(
         F.col(s_col).cast("string").alias("s"),
         F.col(r_col).cast("string").alias("r"),
@@ -905,20 +887,21 @@ def link_prediction_ranks(
         .select(
             "s", "r", "o",
             F.zip_with(
-                emb_arr("e", F.col("s")), emb_arr("r", F.col("r")),
+                _emb_arr("e", F.col("s"), dim, mod),
+                _emb_arr("r", F.col("r"), dim, mod),
                 lambda a, b: a + b,
             ).alias("_sr"),
-            emb_arr("e", F.col("o")).alias("_oe"),
+            _emb_arr("e", F.col("o"), dim, mod).alias("_oe"),
         )
         .select(
             "s", "r", "o", "_sr",
-            l1(F.col("_sr"), F.col("_oe")).cast("long").alias("_e_true"),
+            _l1(F.col("_sr"), F.col("_oe")).cast("long").alias("_e_true"),
         )
     )
     ents = (
         pos.select(F.col("o").alias("e"))
         .distinct()
-        .select("e", emb_arr("e", F.col("e")).alias("_ce"))
+        .select("e", _emb_arr("e", F.col("e"), dim, mod).alias("_ce"))
     )
 
     def beats(e_cand, obj_col):
@@ -932,7 +915,7 @@ def link_prediction_ranks(
         .filter(F.col("e") != F.col("o"))
         .select(
             "s", "r", "o", "e", "_e_true",
-            l1(F.col("_sr"), F.col("_ce")).cast("long").alias("_ec"),
+            _l1(F.col("_sr"), F.col("_ce")).cast("long").alias("_ec"),
         )
         .groupBy("s", "r", "o")
         .agg(F.sum(beats(F.col("_ec"), F.col("e"))).alias("_n_all"))
@@ -944,7 +927,7 @@ def link_prediction_ranks(
         .filter(F.col("_o_known") != F.col("o"))
         .select(
             "s", "r", "o", "_o_known", "_e_true",
-            l1(F.col("_sr"), emb_arr("e", F.col("_o_known")))
+            _l1(F.col("_sr"), _emb_arr("e", F.col("_o_known"), dim, mod))
             .cast("long").alias("_ec"),
         )
         .groupBy("s", "r", "o")

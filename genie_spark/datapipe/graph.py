@@ -775,10 +775,10 @@ def transe_energy(
         ).cast("string"),
     )
 
-    # Staged projections hash each slot ONCE per row. transe_energy_col
-    # is the spec form, but inlining it three times (energy, energy_neg,
-    # margin) re-evaluates every md5 inside interpreted HOFs (no CSE):
-    # ~12·dim md5/row vs 4·dim+1 here — same values, ~3× fewer md5s.
+    # Staged projections hash each slot ONCE per row. Inlining one energy
+    # expression three times (energy, energy_neg, margin) would re-evaluate
+    # every md5 inside interpreted HOFs (no CSE): ~12·dim md5/row vs
+    # 4·dim+1 here — same values, ~3× fewer md5s.
     # _sr is multi-referenced and non-cheap, so CollapseProject keeps the
     # barrier projections intact (same idiom as link_prediction_ranks).
     staged = triples.select(
@@ -797,32 +797,6 @@ def transe_energy(
     return staged.select(
         "s", "r", "o", "energy", "energy_neg",
         (F.col("energy_neg") - F.col("energy")).cast("long").alias("margin"),
-    )
-
-
-def transe_energy_col(s, r, obj, dim: int = 8, mod: int = 1000):
-    """The TransE L1 energy as a reusable row-local Column expression
-    over exact-integer hash embeddings (see :func:`transe_energy` for
-    the construction). ``s``/``r``/``obj`` are Columns; entities and
-    relations hash in disjoint kind-salted spaces."""
-    from .hashes import h60
-
-    def emb(kind: str, name, d):
-        return h60(
-            F.concat(
-                F.lit(kind + "\x01"),
-                name.cast("string"),
-                F.lit("\x01"),
-                d.cast("string"),
-            )
-        ) % mod
-
-    dims = F.sequence(F.lit(0), F.lit(dim - 1))
-    return F.aggregate(
-        dims,
-        F.lit(0).cast("long"),
-        lambda acc, d: acc
-        + F.abs(emb("e", s, d) + emb("r", r, d) - emb("e", obj, d)),
     )
 
 
@@ -870,9 +844,8 @@ def link_prediction_ranks(
     # test row, in dedicated projections so CollapseProject cannot
     # re-inline the hash transform into the |test| x |E| inner loop --
     # the md5 count is O((|E| + |test|) * dim), not O(|test| * |E| * dim)
-    # (288s -> seconds at sf0.1; values byte-identical to
-    # transe_energy_col, which remains the spec and the kg_transe_energy
-    # production form)
+    # (288s -> seconds at sf0.1; energies equal transe_energy's and the
+    # DuckDB oracle's _transe_energy_sql)
     # The test×candidates broadcast product below is COMPUTE-bound
     # (dim interpreted abs/add ops per candidate), so its partition count
     # must track cores, not bytes: AQE coalesces the byte-light distinct

@@ -1611,6 +1611,19 @@ def _kg_edges_df(spark, sf_dir) -> DataFrame:
     )
 
 
+def _kg_seeds_df(spark, sf_dir) -> DataFrame:
+    """Spark twin of the oracles' order seed set: DISTINCT ``v`` =
+    'O' || l_orderkey for every order key divisible by _KG_SEED_MOD."""
+    li = _t(spark, sf_dir, "lineitem")
+    return (
+        li.filter(F.col("l_orderkey") % _KG_SEED_MOD == 0)
+        .select(
+            F.concat(F.lit("O"), F.col("l_orderkey").cast("string")).alias("v")
+        )
+        .distinct()
+    )
+
+
 @_register(
     "kg_degree",
     f"""
@@ -1737,16 +1750,8 @@ def kg_ppr(spark, sf_dir):
     twin)."""
     from .datapipe.graph import personalized_pagerank_fixed
 
-    li = _t(spark, sf_dir, "lineitem")
-    seeds = (
-        li.filter(F.col("l_orderkey") % _KG_SEED_MOD == 0)
-        .select(
-            F.concat(F.lit("O"), F.col("l_orderkey").cast("string")).alias("v")
-        )
-        .distinct()
-    )
     return personalized_pagerank_fixed(
-        _kg_edges_df(spark, sf_dir), seeds,
+        _kg_edges_df(spark, sf_dir), _kg_seeds_df(spark, sf_dir),
         iterations=_PR_ITERS, scale=_PR_SCALE,
     )
 
@@ -1786,6 +1791,30 @@ _CLOSURE_EDGES_SQL = """
 """
 
 
+def _tagged_edges(df, a, ta, b, tb) -> DataFrame:
+    """``(src, dst)`` = (ta || a, tb || b) over ``df``'s rows."""
+    return df.select(
+        F.concat(F.lit(ta), F.col(a).cast("string")).alias("src"),
+        F.concat(F.lit(tb), F.col(b).cast("string")).alias("dst"),
+    )
+
+
+def _closure_edges_df(spark, sf_dir) -> DataFrame:
+    """Spark twin of _CLOSURE_EDGES_SQL — DISTINCT directed (src, dst)."""
+    li = _t(spark, sf_dir, "lineitem")
+    sup = _t(spark, sf_dir, "supplier")
+    nat = _t(spark, sf_dir, "nation")
+    return (
+        _tagged_edges(
+            li.filter(F.col("l_orderkey") % 7 == 0), "l_orderkey", "O", "l_partkey", "P"
+        )
+        .union(_tagged_edges(li, "l_partkey", "P", "l_suppkey", "S"))
+        .union(_tagged_edges(sup, "s_suppkey", "S", "s_nationkey", "N"))
+        .union(_tagged_edges(nat, "n_nationkey", "N", "n_regionkey", "R"))
+        .distinct()
+    )
+
+
 def _kg_closure_sql() -> str:
     from .datapipe.graph import closure_sql
 
@@ -1808,24 +1837,7 @@ def kg_closure(spark, sf_dir):
     (datapipe/graph.py transitive_closure)."""
     from .datapipe.graph import transitive_closure
 
-    li = _t(spark, sf_dir, "lineitem")
-    sup = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
-
-    def edge(df, a, ta, b, tb):
-        return df.select(
-            F.concat(F.lit(ta), F.col(a).cast("string")).alias("src"),
-            F.concat(F.lit(tb), F.col(b).cast("string")).alias("dst"),
-        )
-
-    edges = (
-        edge(li.filter(F.col("l_orderkey") % 7 == 0), "l_orderkey", "O", "l_partkey", "P")
-        .union(edge(li, "l_partkey", "P", "l_suppkey", "S"))
-        .union(edge(sup, "s_suppkey", "S", "s_nationkey", "N"))
-        .union(edge(nat, "n_nationkey", "N", "n_regionkey", "R"))
-        .distinct()
-    )
-    return transitive_closure(edges, max_hops=12)
+    return transitive_closure(_closure_edges_df(spark, sf_dir), max_hops=12)
 
 
 ORACLES["kg_closure"] = _kg_closure_sql()
@@ -1865,24 +1877,9 @@ def kg_closure_delta(spark, sf_dir):
     (datapipe/graph.py closure_delta)."""
     from .datapipe.graph import closure_delta, transitive_closure
 
-    li = _t(spark, sf_dir, "lineitem")
+    all_edges = _closure_edges_df(spark, sf_dir)
     sup = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
-
-    def edge(df, a, ta, b, tb):
-        return df.select(
-            F.concat(F.lit(ta), F.col(a).cast("string")).alias("src"),
-            F.concat(F.lit(tb), F.col(b).cast("string")).alias("dst"),
-        )
-
-    all_edges = (
-        edge(li.filter(F.col("l_orderkey") % 7 == 0), "l_orderkey", "O", "l_partkey", "P")
-        .union(edge(li, "l_partkey", "P", "l_suppkey", "S"))
-        .union(edge(sup, "s_suppkey", "S", "s_nationkey", "N"))
-        .union(edge(nat, "n_nationkey", "N", "n_regionkey", "R"))
-        .distinct()
-    )
-    new_edges = edge(
+    new_edges = _tagged_edges(
         sup.filter(F.col("s_suppkey") % 10 == 0), "s_suppkey", "S", "s_nationkey", "N"
     )
     old_edges = all_edges.join(new_edges, ["src", "dst"], "left_anti")
@@ -1979,15 +1976,7 @@ def kg_two_hop(spark, sf_dir):
     edge join per hop (datapipe/graph.py k_hop)."""
     from .datapipe.graph import k_hop
 
-    li = _t(spark, sf_dir, "lineitem")
-    seeds = (
-        li.filter(F.col("l_orderkey") % _KG_SEED_MOD == 0)
-        .select(
-            F.concat(F.lit("O"), F.col("l_orderkey").cast("string")).alias("v")
-        )
-        .distinct()
-    )
-    return k_hop(_kg_edges_df(spark, sf_dir), seeds, k=2)
+    return k_hop(_kg_edges_df(spark, sf_dir), _kg_seeds_df(spark, sf_dir), k=2)
 
 
 @_register(
@@ -5903,20 +5892,14 @@ def kg_sssp_q(spark, sf_dir):
     from .datapipe.graph import bellman_ford_fixed
     from .datapipe.hashes import h60
 
-    li = _t(spark, sf_dir, "lineitem")
-    seeds = (
-        li.filter(F.col("l_orderkey") % _KG_SEED_MOD == 0)
-        .select(
-            F.concat(F.lit("O"), F.col("l_orderkey").cast("string")).alias("v")
-        )
-        .distinct()
-    )
     e = _kg_edges_df(spark, sf_dir).withColumn(
         "w",
         F.lit(1).cast("long")
         + F.pmod(h60(F.concat("src", F.lit("|"), "dst")), F.lit(5)),
     )
-    return bellman_ford_fixed(e, seeds, rounds=_SSSP_ROUNDS, weight="w")
+    return bellman_ford_fixed(
+        e, _kg_seeds_df(spark, sf_dir), rounds=_SSSP_ROUNDS, weight="w"
+    )
 
 
 ORACLES["kg_sssp"] = _kg_sssp_sql()
@@ -5949,16 +5932,9 @@ def kg_random_walks_q(spark, sf_dir):
     (datapipe/graph.py random_walks_fixed)."""
     from .datapipe.graph import random_walks_fixed
 
-    li = _t(spark, sf_dir, "lineitem")
-    seeds = (
-        li.filter(F.col("l_orderkey") % _KG_SEED_MOD == 0)
-        .select(
-            F.concat(F.lit("O"), F.col("l_orderkey").cast("string")).alias("v")
-        )
-        .distinct()
-    )
     return random_walks_fixed(
-        _kg_edges_df(spark, sf_dir), seeds, steps=_WALK_STEPS
+        _kg_edges_df(spark, sf_dir), _kg_seeds_df(spark, sf_dir),
+        steps=_WALK_STEPS,
     )
 
 

@@ -98,7 +98,10 @@ def _pagerank_py(edges, iterations=5, scale=10**12, num=85, den=100):
 
 
 def test_pagerank_matches_python_twin(spark):
-    from genie_spark.datapipe.graph import pagerank_fixed
+    from genie_spark.datapipe.graph import (
+        pagerank_fixed,
+        personalized_pagerank_fixed,
+    )
 
     edges = [
         ("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"),
@@ -112,6 +115,13 @@ def test_pagerank_matches_python_twin(spark):
         for r in pagerank_fixed(df, iterations=5).collect()
     }
     assert got == _pagerank_py(edges, iterations=5)
+    # PPR with every vertex as a seed is plain PageRank, bit for bit
+    every = spark.createDataFrame([(v,) for v in got], ["v"])
+    ppr = {
+        r["entity"]: r["rank_fp"]
+        for r in personalized_pagerank_fixed(df, every, iterations=5).collect()
+    }
+    assert ppr == _pagerank_py(edges, iterations=5)
 
 
 def test_pagerank_partition_invariance(spark):
@@ -151,18 +161,29 @@ def test_k_hop_min_distance(spark):
 
 
 def test_triangle_count_known_graphs(spark):
-    from genie_spark.datapipe.graph import triangle_count
+    from genie_spark.datapipe.graph import local_clustering, triangle_count
+
+    def clustering(df):
+        return {
+            r["v"]: (r["deg"], r["n_tri"], r["cc_ppm"])
+            for r in local_clustering(df).collect()
+        }
 
     # K4 has 4 triangles; input direction/duplication must not matter
     k4 = [("a", "b"), ("a", "c"), ("a", "d"), ("c", "b"), ("b", "d"), ("c", "d"),
           ("b", "a")]  # duplicate reversed edge
     df = spark.createDataFrame(k4, ["src", "dst"])
     assert triangle_count(df).collect()[0]["n_triangles"] == 4
+    assert clustering(df) == {v: (3, 3, 1_000_000) for v in "abcd"}
     # triangle + pendant edge
     df2 = spark.createDataFrame(
         [("x", "y"), ("y", "z"), ("z", "x"), ("z", "w")], ["src", "dst"]
     )
     assert triangle_count(df2).collect()[0]["n_triangles"] == 1
+    # w has degree 1, so it has no coefficient
+    assert clustering(df2) == {
+        "x": (2, 1, 1_000_000), "y": (2, 1, 1_000_000), "z": (3, 1, 333_333),
+    }
 
 
 def test_nonconvergence_raises(spark):

@@ -994,21 +994,22 @@ def incremental_lsh_matches(
     threshold: float = 0.5,
 ) -> DataFrame:
     """Nightly-batch near-dup check: match NEW documents against an
-    EXISTING corpus — the incremental production shape (a crawl
-    pipeline never re-pairs the whole corpus; it collides tonight's
-    batch against the standing band-key index and appends survivors).
-    Returns one row per batch doc: (doc_id, n_index_matches,
-    best_est_jaccard) — best_est_jaccard is NULL for clean docs, so
+    EXISTING corpus — the incremental shape (the batch is collided
+    against the corpus's band keys; batch docs are never paired with
+    each other or the corpus with itself). Returns one row per batch
+    doc: (doc_id, n_index_matches, best_est_jaccard) —
+    best_est_jaccard is NULL for clean docs, so
     ``WHERE n_index_matches = 0`` is the append set.
 
-    Scale shape: the join is batch-bands x index-bands on
-    (band, bkey) — at 100 TB the index side is the MATERIALIZED
-    banded_keys table (bucketed on bkey, built once, appended per
-    night), so tonight's cost is |batch| band rows shuffled against a
-    bucket-pruned index read, never a corpus x corpus pairing; the
-    signature fetch for verification joins only the candidate ids.
-    Within-batch duplicates are a separate (tiny) lsh_candidate_pairs
-    over the batch alone, by policy."""
+    What a call computes: MinHash signatures and banded_keys for BOTH
+    sides, from the raw documents, on every call — there is no stored
+    index. The candidate join is batch-bands x index-bands on
+    (band, bkey), so it shuffles both band tables; the signature fetch
+    for verification joins only the candidate ids. Keeping the index
+    side as a materialized, bkey-bucketed banded_keys table would make
+    the per-batch cost |batch| band rows against a bucket-pruned read;
+    that is not implemented. Within-batch duplicates are a separate
+    (tiny) lsh_candidate_pairs over the batch alone, by policy."""
     rows_per_band = num_hashes // bands
     sig_old = minhash_signatures(index_docs, text_col, id_col, k, num_hashes)
     sig_new = minhash_signatures(batch_docs, text_col, id_col, k, num_hashes)

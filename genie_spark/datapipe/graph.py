@@ -1,32 +1,42 @@
-"""Distributed connected components — transitive duplicate clustering.
+"""Graph operators over the constructed knowledge graph.
 
-Candidate-pair generators (MinHash-LSH, SimHash, embedding-LSH —
-datapipe/dedup.py) emit an EDGE LIST of near-duplicate pairs. Keeping
-one document per *pair* under-deletes: if A~B and B~C but A!~C, pairwise
-keep-min retains both A and C even though the three form one duplicate
-cluster. Production web dedup (the CCNet / RefinedWeb / SlimPajama
-lineage) therefore runs connected components over the candidate graph
-and keeps one representative per component.
+The KG a GenIE run builds is a directed edge list and an (s, r, o) fact
+table. This module holds the Spark operators that run over them:
 
-The operator is min-label propagation with pointer jumping, the
-standard Spark formulation of the MapReduce CC algorithms (Kiveris et
-al., "Connected Components in MapReduce and Beyond", SoCC'14):
+* structure: connected components (also the duplicate clustering of
+  near-dup candidate pairs), label propagation, k-core, triangle count,
+  local clustering, degree;
+* ranking and paths: PageRank, personalized PageRank, HITS, k-hop,
+  Bellman-Ford, transitive closure and its incremental maintenance,
+  deterministic random walks;
+* completion and quality: common neighbours, resource allocation,
+  negative sampling, TransE energies and link-prediction ranks, rule
+  mining and rule-based inference, relation profiles, constraint
+  checks, entity summaries, basic-graph-pattern matching.
 
-* every vertex starts labeled with itself;
-* each round, a vertex takes the min label over itself + its neighbors
-  (one shuffle keyed on vertex), then labels are pointer-jumped
-  (``lbl := lbl(lbl)``, one shuffle keyed on label) — the jump is what
-  turns O(diameter) rounds into O(log n);
-* iterate until a round changes nothing.
+Ranks, scores and ratios are integer fixed-point with floor division,
+so results do not depend on partitioning and the DuckDB twins
+(``*_sql_chain``, ``closure_sql``) and the registry oracles reproduce
+them exactly.
 
-Scale notes (100 TB): each round is two shuffles over the EDGE list —
-near-dup graphs are sparse (edges ≪ corpus; most documents have no
-candidate at all and never enter the graph). Lineage is cut per round
-with ``localCheckpoint`` so the plan stays O(1) deep regardless of
-round count (on a real cluster prefer a reliable ``checkpoint`` dir —
-localCheckpoint pins executor blocks). The driver-side convergence test
-is one ``isEmpty`` on the changed-labels frame per round — the same
-loop structure GraphFrames' connectedComponents uses.
+Lineage policy. A lazily unrolled loop whose step references the
+previous state k times grows its plan as k^i between cuts, so the
+iterative operators cut it with ``localCheckpoint(eager=False)`` through
+:func:`_iterate`. Each cut costs ~0.8 s of driver-side RDD translation
+whatever the data size, so operators whose step references the state
+two to five times (PageRank, k-core, Bellman-Ford) cut every second
+step, where 4 to 25 references between cuts are still cheap; label
+propagation cuts every step. The last step is always cut, so callers get
+a bounded plan. An input a loop re-joins every step, such as its edge
+set, is checkpointed EAGERLY once: under AQE a lazy checkpoint
+re-materializes its subtree at every cut of a plan that uses it
+(pagerank_fixed at sf0.1 went from 20.7 s to 8.4 s with the eager edge
+cut). Connected components, HITS and random walks keep their own loops,
+because each does more than step one frame (a convergence probe that
+raises, two state frames, an accumulated union); the two semi-naive
+closures share :func:`_semi_naive`. On a real cluster a reliable ``checkpoint``
+directory is the safer cut, because localCheckpoint blocks die with
+their executor.
 """
 
 from __future__ import annotations
@@ -36,24 +46,8 @@ from pyspark.sql import DataFrame, functions as F
 
 def _iterate(state: DataFrame, step, n: int, every: int) -> DataFrame:
     """``n`` applications of ``step`` to ``state``, cutting the lineage
-    after every ``every``-th step and after the last one.
-
-    This is the module's lineage policy. A lazily unrolled loop whose
-    step references the previous state k times grows its plan as k^i
-    between cuts, so iterative operators cut it with
-    ``localCheckpoint(eager=False)``. Each cut costs ~0.8 s of
-    driver-side RDD translation whatever the data size, so operators
-    whose step references the state two to five times (PageRank, k-core,
-    Bellman-Ford) cut every second step, where 4 to 25 references
-    between cuts are still cheap; label propagation cuts every step. The
-    cut after the last step hands the caller a bounded plan. An input
-    the loop re-joins every step, such as the edge set, is checkpointed
-    EAGERLY once by the caller: under AQE a lazy checkpoint
-    re-materializes its subtree at every cut of a plan that uses it
-    (pagerank_fixed at sf0.1 went from 20.7 s to 8.4 s with the eager
-    edge cut). On a real cluster a reliable ``checkpoint`` directory is
-    the safer cut, because localCheckpoint blocks die with their
-    executor."""
+    after every ``every``-th step and after the last one (the lineage
+    policy is in the module docstring)."""
     for i in range(1, n + 1):
         state = step(state)
         if i % every == 0 or i == n:
@@ -153,7 +147,26 @@ def connected_components(
     DuckDB twin computes the same min over a recursive closure).
     Vertices absent from the edge list are their own singleton
     components; callers add them back with a left join + coalesce (see
-    ``components_with_singletons``)."""
+    ``components_with_singletons``).
+
+    Near-dup candidate generators (MinHash-LSH, SimHash, embedding-LSH —
+    datapipe/dedup.py) emit an edge list of pairs, and keeping one
+    document per *pair* under-deletes: if A~B and B~C but A!~C,
+    pairwise keep-min retains both A and C. Web dedup (the CCNet /
+    RefinedWeb / SlimPajama lineage) therefore keeps one representative
+    per component.
+
+    The operator is min-label propagation with pointer jumping, the
+    standard Spark formulation of the MapReduce CC algorithms (Kiveris
+    et al., "Connected Components in MapReduce and Beyond", SoCC'14):
+    every vertex starts labeled with itself; each round a vertex takes
+    the min label over itself + its neighbors (one shuffle keyed on
+    vertex), then labels are pointer-jumped (``lbl := lbl(lbl)``, one
+    shuffle keyed on label) — the jump turns O(diameter) rounds into
+    O(log n); it stops when a round changes nothing. Each round is two
+    shuffles over the sparse edge list, is cut per round, and its
+    convergence test is one ``isEmpty`` on the changed-labels frame —
+    the loop structure of GraphFrames' connectedComponents."""
     sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("w"))
     sym = sym.union(sym.select(F.col("w").alias("u"), F.col("u").alias("w")))
     labels = (
@@ -286,15 +299,8 @@ def pagerank_fixed(
     PR step — edges⋈ranks on src (the big join; ranks are
     vertex-sized), then a partial-aggregated groupBy on dst. The
     dangling total stays a 1-row lazy aggregate cross-joined in (no
-    driver collect). Lineage control (profiled at sf0.1, 20.7s →
-    8.4s): the derived edge set is checkpointed EAGERLY once — without
-    it every iteration re-derives it (4 scans + a distinct shuffle),
-    and under AQE each lazy-checkpoint call re-materializes that
-    subtree — and the rank frame is cut every SECOND iteration (each
-    iteration references the previous frame three times, so the plan
-    grows 3^k between cuts: 9 is cheap, unbounded is not, and each
-    lazy-checkpoint call costs ~0.8s of driver-side RDD translation
-    regardless of data size)."""
+    driver collect). The loop is :func:`_rank_with_restart`, shared
+    with :func:`personalized_pagerank_fixed`."""
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).localCheckpoint(eager=True)
@@ -1093,19 +1099,14 @@ def label_propagation_fixed(
 
     Scale shape (100 TB edge lists): per round ONE join keyed on vertex
     + two partial-aggregatable groupBys — the vote shuffle carries
-    (vertex, label, count) partial sums, never the raw neighbor list;
-    lineage is cut per round (localCheckpoint) so the plan stays O(1)
-    deep. Synchronous LPA can oscillate on bipartite structures — the
+    (vertex, label, count) partial sums, never the raw neighbor list.
+    Synchronous LPA can oscillate on bipartite structures — the
     fixed iteration count bounds that deterministically, as in the
     GraphFrames/Pregel formulation."""
     sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("w"))
     sym = sym.union(
         sym.select(F.col("w").alias("u"), F.col("u").alias("w"))
-    ).distinct()
-    # eager: the symmetrized edge set is re-joined every round, and
-    # under AQE a lazy checkpoint re-materializes the distinct shuffle
-    # per round (the pagerank_fixed lesson)
-    sym = sym.localCheckpoint(eager=True)
+    ).distinct().localCheckpoint(eager=True)
     labels = (
         sym.select(F.col("u").alias("v")).distinct()
         .withColumn("lbl", F.col("v"))
@@ -1420,9 +1421,8 @@ def personalized_pagerank_fixed(
     Returns ``(entity, rank_fp)`` for every vertex (zero off the
     reachable neighborhood). Same per-iteration shape as PageRank: one
     edges⋈ranks join + a partial-agg groupBy + a lazy 1-row dangling
-    aggregate + a broadcast seed-flag join; same lineage cadence too
-    (edge set checkpointed eagerly once, rank frame cut every second
-    iteration — see :func:`pagerank_fixed`)."""
+    aggregate + a broadcast seed-flag join, in the loop
+    :func:`_rank_with_restart` shared with :func:`pagerank_fixed`."""
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).localCheckpoint(eager=True)
@@ -1536,8 +1536,8 @@ def hits_fixed(
     a = None
     for _it in range(iterations):
         a = flow(h, "src", "dst")
-        # h is cut every iteration, a only once at the end: one cut per
-        # iteration already bounds the plan (see _iterate)
+        # one cut per iteration (on h) bounds the plan; a is cut only
+        # once, after the last iteration
         if _it == iterations - 1:
             a = a.localCheckpoint(eager=False)
         h = flow(a, "dst", "src").localCheckpoint(eager=False)
@@ -1614,8 +1614,7 @@ def kcore_fixed(
 
     Scale shape per round: one partial-agg degree groupBy (vertex-sized)
     + two left-semi joins pushing the survivor set back onto the edge
-    list — no edge-list shuffle grows across rounds, and
-    ``localCheckpoint`` keeps the unrolled lineage linear. The k-core
+    list — no edge-list shuffle grows across rounds. The k-core
     is the standard KG-quality trim (drop weakly-attached crawl debris
     before embedding training)."""
 
@@ -1685,7 +1684,7 @@ def bellman_ford_fixed(
     broadcastable when seeds reach few vertices; shuffled join once the
     frontier is graph-sized) + one partial-agg min groupBy; integer
     mins are exact and associative, so partition order can never move
-    an answer. Lineage cut per round."""
+    an answer."""
     w = F.col(weight).cast("long") if weight else F.lit(1).cast("long")
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w")

@@ -6893,8 +6893,8 @@ LEFT JOIN m ON m.new_id = d.doc_id
 def dedup_incremental_q(spark, sf_dir):
     """Nightly-batch near-dup check: the corpus split 80/20 by id hash
     into standing index vs tonight's batch; batch band keys collide
-    against the index's banded_keys table (the materialized form a
-    production pipeline keeps between runs), candidates verified by
+    against the index side's banded_keys, recomputed per call (no
+    stored index), candidates verified by
     signature-estimated Jaccard. One row per batch doc with its index
     match count — ``n_index_matches = 0`` is the append set
     (datapipe/dedup.py incremental_lsh_matches)."""

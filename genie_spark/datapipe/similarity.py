@@ -123,17 +123,6 @@ def _vec_dim(emb: DataFrame, vec_col: str, dim) -> int:
     return len(emb.select(vec_col).first()[0])
 
 
-def bucketed_embeddings(
-    emb: DataFrame,
-    n_planes: int = 4,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    dim: int = None,
-) -> DataFrame:
-    planes = hyperplanes(n_planes, _vec_dim(emb, vec_col, dim), seed)
-    return emb.withColumn("bucket", hyperplane_bucket_col(F.col(vec_col), planes))
-
-
 def query_bucket(query: Sequence[float], planes: List[List[int]]) -> int:
     qbucket = 0
     for p, coeffs in enumerate(planes):
@@ -152,37 +141,6 @@ def probe_buckets(qbucket: int, n_planes: int, multiprobe: int = 0) -> List[int]
     if multiprobe >= 1:
         buckets += [qbucket ^ (1 << p) for p in range(n_planes)]
     return sorted(set(buckets))
-
-
-def lsh_topk(
-    emb: DataFrame,
-    query: Sequence[float],
-    k: int = 10,
-    n_planes: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-    multiprobe: int = 0,
-) -> DataFrame:
-    """Scale-path ANN: probe only the query's hyperplane bucket (plus its
-    hamming-1 neighbors with ``multiprobe=1``). With 2^n_planes buckets
-    the scan shrinks ~2^n_planes× (partition pruning applies when the
-    table is written bucketed/partitioned by `bucket`)."""
-    dim = len(query)
-    planes = hyperplanes(n_planes, dim, seed)
-    probes = probe_buckets(query_bucket(query, planes), n_planes, multiprobe)
-    bucketed = emb.withColumn("bucket", hyperplane_bucket_col(F.col(vec_col), planes))
-    qlit = arr_lit(query)
-    return (
-        bucketed.filter(F.col("bucket").isin(probes))
-        .select(
-            F.col(id_col),
-            F.col("bucket"),
-            F.round(cosine_col(F.col(vec_col), qlit), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
 
 
 def materialize_lsh_buckets(
@@ -384,41 +342,13 @@ def ivf_topk_pruned(
     )
 
 
-def ivf_topk(
-    emb: DataFrame,
-    query: Sequence[float],
-    centroids: List[List[float]],
-    k: int = 10,
-    n_probe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Index-free IVF probe (assignment inline): correct but re-derives
-    the cell per row — use :func:`materialize_ivf_cells` +
-    :func:`ivf_topk_pruned` everywhere the table is probed more than
-    once."""
-    probe = ivf_probe_cells(query, centroids, n_probe)
-    qlit = arr_lit(query)
-    cells = emb.withColumn("cell", ivf_cell_col(F.col(vec_col), centroids))
-    return (
-        cells.filter(F.col("cell").isin(probe))
-        .select(
-            F.col(id_col),
-            F.col("cell"),
-            F.round(cosine_col(F.col(vec_col), qlit), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
-
-
 def ivf_topk_sql(
     query: Sequence[float],
     n_cells: int = 8,
     k: int = 10,
     n_probe: int = 2,
 ) -> str:
-    """DuckDB twin of :func:`ivf_centroids` + :func:`ivf_topk`, fully
+    """DuckDB twin of :func:`ivf_centroids` + :func:`ivf_topk_pruned`, fully
     data-derived (the centroid pick runs in SQL with the same hash order),
     so the one static oracle string is correct at every scale factor."""
     from .hashes import h60_sql
@@ -472,7 +402,7 @@ def ivf_kmeans_topk_sql(
     n_probe: int = 2,
     n_iters: int = 2,
 ) -> str:
-    """DuckDB twin of :func:`ivf_kmeans_centroids` + :func:`ivf_topk`:
+    """DuckDB twin of :func:`ivf_kmeans_centroids` + :func:`ivf_topk_pruned`:
     the Lloyd iterations unroll to one (assign → per-cell element-wise
     avg → coalesce-with-previous) CTE block each, fully data-derived, so
     the single static oracle string is correct at every scale factor."""
@@ -765,34 +695,6 @@ def pq_kmeans_codebooks(
     return books
 
 
-def pq_topk(
-    emb: DataFrame,
-    query: Sequence[float],
-    codebooks,
-    k: int = 10,
-    rerank: int = 0,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k: the query is NOT quantized; each
-    corpus vector contributes Σ_j dot(q_j, codeword_{j,code_j}), looked
-    up from the m × k_sub table computed once driver-side and inlined as
-    literals. The approximate cosine divides by the PQ norm
-    √(Σ_j ‖codeword‖²). Both sums are explicit fixed-order + chains (not
-    aggregates), so Spark and the DuckDB twin add in the same order.
-    Plan shape: row-local lookups + TakeOrderedAndProject — no shuffle,
-    no global sort."""
-    codes = pq_code_cols(F.col(vec_col), codebooks)
-    with_codes = emb.select(
-        F.col(id_col),
-        F.col(vec_col),
-        *[c.alias(f"_c{j}") for j, c in enumerate(codes)],
-    )
-    return _pq_adc_topk(
-        with_codes, query, codebooks, k, rerank, vec_col, id_col, "_c{}"
-    )
-
-
 def materialize_pq_codes(
     emb: DataFrame,
     codebooks,
@@ -824,13 +726,18 @@ def pq_topk_from_codes(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """ADC top-k against a :func:`materialize_pq_codes` table: the
-    per-query plan is literal-table lookups over the stored codes — the
-    corpus encode is paid once at index build, exactly the build/probe
-    split the IVF tier has."""
+    """Asymmetric-distance (ADC) top-k against a
+    :func:`materialize_pq_codes` table: the query is NOT quantized; each
+    stored row contributes Σ_j dot(q_j, codeword_{j,c_j}), looked up from
+    the m × k_sub table computed once driver-side and inlined as
+    literals. The approximate cosine divides by the PQ norm
+    √(Σ_j ‖codeword‖²). Both sums are explicit fixed-order + chains (not
+    aggregates), so Spark and the DuckDB twin add in the same order. The
+    corpus encode is paid once at index build; the per-query plan is
+    row-local lookups + TakeOrderedAndProject — no shuffle, no global
+    sort."""
     return _pq_adc_topk(
-        spark.read.parquet(path), query, codebooks, k, rerank, vec_col,
-        id_col, "c{}",
+        spark.read.parquet(path), query, codebooks, k, rerank, vec_col, id_col
     )
 
 
@@ -842,8 +749,9 @@ def _pq_adc_topk(
     rerank: int,
     vec_col: str,
     id_col: str,
-    code_fmt: str,
 ) -> DataFrame:
+    """ADC scoring over a frame carrying the stored codes ``c0..c{m-1}``
+    (see :func:`pq_topk_from_codes`), optionally re-ranked exactly."""
     m = len(codebooks)
     sub = len(codebooks[0][0])
     q = [float(x) for x in query]
@@ -854,8 +762,8 @@ def _pq_adc_topk(
         qj = q[j * sub:(j + 1) * sub]
         t_lit = arr_lit([round(_py_dot(qj, w), 9) for w in codebooks[j]])
         n_lit = arr_lit([round(_py_dot(w, w), 9) for w in codebooks[j]])
-        tj = F.element_at(t_lit, F.col(code_fmt.format(j)) + 1)
-        nj = F.element_at(n_lit, F.col(code_fmt.format(j)) + 1)
+        tj = F.element_at(t_lit, F.col(f"c{j}") + 1)
+        nj = F.element_at(n_lit, F.col(f"c{j}") + 1)
         adc = tj if adc is None else adc + tj
         n2 = nj if n2 is None else n2 + nj
     scored = with_codes.select(
@@ -938,37 +846,7 @@ def ivf_pq_topk_pruned(
     the pool only."""
     probe = ivf_probe_cells(query, centroids, n_probe)
     pruned = spark.read.parquet(path).filter(F.col("cell").isin(probe))
-    return _pq_adc_topk(
-        pruned, query, codebooks, k, rerank, vec_col, id_col, "c{}"
-    )
-
-
-def ivf_pq_topk(
-    emb: DataFrame,
-    query: Sequence[float],
-    centroids: List[List[float]],
-    codebooks,
-    k: int = 10,
-    n_probe: int = 2,
-    rerank: int = 0,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Index-free IVF-PQ (cell + codes derived inline): correct but
-    re-derives assignments per row — use :func:`materialize_ivf_pq` +
-    :func:`ivf_pq_topk_pruned` everywhere the table is probed more than
-    once."""
-    probe = ivf_probe_cells(query, centroids, n_probe)
-    codes = pq_code_cols(F.col(vec_col), codebooks)
-    pruned = emb.select(
-        F.col(id_col),
-        F.col(vec_col),
-        ivf_cell_col(F.col(vec_col), centroids).alias("cell"),
-        *[c.alias(f"c{j}") for j, c in enumerate(codes)],
-    ).filter(F.col("cell").isin(probe))
-    return _pq_adc_topk(
-        pruned, query, codebooks, k, rerank, vec_col, id_col, "c{}"
-    )
+    return _pq_adc_topk(pruned, query, codebooks, k, rerank, vec_col, id_col)
 
 
 def ivf_pq_topk_sql(
@@ -981,7 +859,7 @@ def ivf_pq_topk_sql(
     k: int = 10,
     rerank: int = 0,
 ) -> str:
-    """DuckDB twin of :func:`ivf_pq_topk`: the IVF assignment/probe CTEs
+    """DuckDB twin of :func:`ivf_pq_topk_pruned`: the IVF assignment/probe CTEs
     (same as :func:`ivf_topk_sql`), PQ encode restricted to the probed
     survivors (encoding is row-local, so codes are identical to a full-
     corpus encode), the fixed-order ADC chain, and the exact re-rank —
@@ -1094,7 +972,7 @@ def pq_topk_sql(
     rerank: int = 0,
 ) -> str:
     """DuckDB twin of :func:`pq_codebooks` + :func:`pq_code_cols` +
-    :func:`pq_topk`, fully data-derived (seed pick, per-subspace argmax
+    :func:`pq_topk_from_codes`, fully data-derived (seed pick, per-subspace argmax
     encode, 4-term fixed-order ADC chain), so the one static oracle
     string is correct at every scale factor."""
     from .hashes import h60_sql

@@ -10,7 +10,7 @@ from genie_spark.datapipe.dedup import (
     ngram_jaccard_pairs,
     simhash_table,
 )
-from genie_spark.datapipe.similarity import brute_force_topk, lsh_topk
+from genie_spark.datapipe.similarity import brute_force_topk
 
 
 @pytest.fixture(scope="module")
@@ -159,8 +159,13 @@ def test_quality_gate_reasons_and_pass(spark):
     assert out[2]["fail_reasons"] == "too_short;low_stopword;top_word;dup_3gram"
 
 
-def test_brute_force_vs_lsh_topk(spark):
+def test_brute_force_vs_lsh_topk(spark, tmp_path):
     import random
+
+    from genie_spark.datapipe.similarity import (
+        lsh_topk_pruned,
+        materialize_lsh_buckets,
+    )
 
     rng = random.Random(9)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(200)]
@@ -168,24 +173,21 @@ def test_brute_force_vs_lsh_topk(spark):
     q = rows[7][1]  # query near vector 7
     brute = brute_force_topk(emb, q, k=5)
     assert [r["vec_id"] for r in brute.collect()][0] == 7
-    lsh = lsh_topk(emb, q, k=5, n_planes=3)
+    path = str(tmp_path / "lsh")
+    materialize_lsh_buckets(emb, path, n_planes=3, dim=8)
+    lsh = lsh_topk_pruned(spark, path, q, k=5, n_planes=3)
     got = [r["vec_id"] for r in lsh.collect()]
     assert got and got[0] == 7  # the query's own bucket contains it
 
 
-def test_ivf_topk_recall_vs_brute(spark):
-    """IVF with a 2-cell probe over 8 cells must recover most of the exact
-    top-k when the corpus actually clusters (on unstructured noise — like
-    the synthetic embeddings table, mean pairwise cosine ≈ 0 — ANY coarse
-    quantizer degenerates to n_probe/n_cells recall, so the test builds
-    clustered vectors: 8 prototypes + deterministic per-vector jitter)."""
+def _clustered(spark):
+    """Clustered 16-dim corpus: 8 prototypes × 40 vectors with
+    deterministic per-vector jitter, plus the prototype function for
+    building queries. On unstructured noise (like the synthetic
+    embeddings table, mean pairwise cosine ≈ 0) ANY coarse quantizer
+    degenerates to n_probe/n_cells recall, so the ANN recall tests need
+    vectors that actually cluster."""
     import math
-
-    from genie_spark.datapipe.similarity import (
-        brute_force_topk,
-        ivf_centroids,
-        ivf_topk,
-    )
 
     dim, n_protos, per = 16, 8, 40
 
@@ -199,12 +201,39 @@ def test_ivf_topk_recall_vs_brute(spark):
             jitter = [0.15 * math.sin(2.1 * j + 0.9 * d + p) for d in range(dim)]
             rows.append((p * per + j, p, [b + e for b, e in zip(base, jitter)]))
     emb = spark.createDataFrame(rows, "vec_id int, label int, embedding array<float>")
+    return emb, proto
 
+
+def _ivf_probe(spark, emb, q, cents, path, **kw):
+    from genie_spark.datapipe.similarity import ivf_topk_pruned, materialize_ivf_cells
+
+    materialize_ivf_cells(emb, cents, path)
+    return ivf_topk_pruned(spark, path, q, cents, **kw)
+
+
+def _pq_probe(spark, emb, q, books, path, **kw):
+    from genie_spark.datapipe.similarity import materialize_pq_codes, pq_topk_from_codes
+
+    materialize_pq_codes(emb, books, path)
+    return pq_topk_from_codes(spark, path, q, books, **kw)
+
+
+def test_ivf_topk_recall_vs_brute(spark, tmp_path):
+    """IVF with a 2-cell probe over 8 cells must recover most of the exact
+    top-k when the corpus actually clusters (:func:`_clustered`)."""
+    from genie_spark.datapipe.similarity import ivf_centroids
+
+    emb, proto = _clustered(spark)
     q = [x + 0.05 for x in proto(3)]  # near prototype 3
     brute = {r["vec_id"]: r["cosine"] for r in brute_force_topk(emb, q, k=10).collect()}
     cents = ivf_centroids(emb, n_cells=8)
     assert len(cents) == 8
-    ivf = {r["vec_id"]: r["cosine"] for r in ivf_topk(emb, q, cents, k=10, n_probe=2).collect()}
+    ivf = {
+        r["vec_id"]: r["cosine"]
+        for r in _ivf_probe(
+            spark, emb, q, cents, str(tmp_path / "ivf"), k=10, n_probe=2
+        ).collect()
+    }
     assert len(ivf) == 10
     hits = set(ivf) & set(brute)
     assert len(hits) >= 8, f"IVF recall too low on clustered data: {len(hits)}/10"
@@ -212,39 +241,23 @@ def test_ivf_topk_recall_vs_brute(spark):
         assert ivf[vid] == brute[vid]
 
 
-def test_pq_rerank_recall_vs_brute(spark):
+def test_pq_rerank_recall_vs_brute(spark, tmp_path):
     """PQ (seeded codebooks, m=4) + ADC pool + exact re-rank must recover
     most of the exact top-k on clustered vectors (same constructed-corpus
     methodology as the IVF recall test — on unstructured noise ANY
     quantizer degenerates). Also: the re-ranked cosines must EQUAL the
     brute-force cosines for the common ids (the re-rank stage is exact)."""
-    import math
+    from genie_spark.datapipe.similarity import pq_codebooks
 
-    from genie_spark.datapipe.similarity import (
-        brute_force_topk,
-        pq_codebooks,
-        pq_topk,
-    )
-
-    dim, n_protos, per = 16, 8, 40
-
-    def proto(p):
-        return [math.sin(0.7 * p + 1.3 * d) for d in range(dim)]
-
-    rows = []
-    for p in range(n_protos):
-        base = proto(p)
-        for j in range(per):
-            jitter = [0.15 * math.sin(2.1 * j + 0.9 * d + p) for d in range(dim)]
-            rows.append((p * per + j, [b + e for b, e in zip(base, jitter)]))
-    emb = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
-
+    emb, proto = _clustered(spark)
     q = [x + 0.05 for x in proto(3)]
     brute = {r["vec_id"]: r["cosine"] for r in brute_force_topk(emb, q, k=10).collect()}
     books = pq_codebooks(emb, m=4, k_sub=16)
     rr = {
         r["vec_id"]: r["cosine"]
-        for r in pq_topk(emb, q, books, k=10, rerank=50).collect()
+        for r in _pq_probe(
+            spark, emb, q, books, str(tmp_path / "pq"), k=10, rerank=50
+        ).collect()
     }
     hits = set(rr) & set(brute)
     assert len(hits) >= 8, f"PQ+rerank recall too low on clustered data: {len(hits)}/10"
@@ -252,47 +265,37 @@ def test_pq_rerank_recall_vs_brute(spark):
         assert rr[vid] == brute[vid], "re-rank stage must be exact"
 
 
-def test_ivf_pq_recall_vs_brute(spark):
+def test_ivf_pq_recall_vs_brute(spark, tmp_path):
     """The composed IVF-PQ tier (coarse 2-of-8-cell probe + ADC over PQ
     codes + exact re-rank) must match the recall of the pure PQ+rerank
     path on the clustered fixture — the cell pruning may only drop
     vectors the coarse quantizer scatters, and with clustered data the
     query's neighbors share its cells. Re-ranked cosines must equal
     brute-force for the common ids (the re-rank stage is exact)."""
-    import math
-
     from genie_spark.datapipe.similarity import (
-        brute_force_topk,
         ivf_centroids,
-        ivf_pq_topk,
+        ivf_pq_topk_pruned,
+        materialize_ivf_pq,
         pq_codebooks,
-        pq_topk,
     )
 
-    dim, n_protos, per = 16, 8, 40
-
-    def proto(p):
-        return [math.sin(0.7 * p + 1.3 * d) for d in range(dim)]
-
-    rows = []
-    for p in range(n_protos):
-        base = proto(p)
-        for j in range(per):
-            jitter = [0.15 * math.sin(2.1 * j + 0.9 * d + p) for d in range(dim)]
-            rows.append((p * per + j, [b + e for b, e in zip(base, jitter)]))
-    emb = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
-
+    emb, proto = _clustered(spark)
     q = [x + 0.05 for x in proto(3)]
     brute = {r["vec_id"]: r["cosine"] for r in brute_force_topk(emb, q, k=10).collect()}
     cents = ivf_centroids(emb, n_cells=8)
     books = pq_codebooks(emb, m=4, k_sub=16)
     pq_hits = set(
-        r["vec_id"] for r in pq_topk(emb, q, books, k=10, rerank=50).collect()
+        r["vec_id"]
+        for r in _pq_probe(
+            spark, emb, q, books, str(tmp_path / "pq"), k=10, rerank=50
+        ).collect()
     ) & set(brute)
+    path = str(tmp_path / "ivfpq")
+    materialize_ivf_pq(emb, cents, books, path)
     got = {
         r["vec_id"]: r["cosine"]
-        for r in ivf_pq_topk(
-            emb, q, cents, books, k=10, n_probe=2, rerank=50
+        for r in ivf_pq_topk_pruned(
+            spark, path, q, cents, books, k=10, n_probe=2, rerank=50
         ).collect()
     }
     hits = set(got) & set(brute)
@@ -309,8 +312,6 @@ def test_pq_kmeans_reduces_quantization_error(spark):
     codebooks — the metric the refinement optimizes (ADC top-k ordering
     on tightly clustered corpora is noise-dominated either way; serving
     quality comes from the exact re-rank stage)."""
-    import math
-
     from genie_spark.datapipe.similarity import (
         arr2_lit,
         pq_code_cols,
@@ -318,18 +319,7 @@ def test_pq_kmeans_reduces_quantization_error(spark):
         pq_kmeans_codebooks,
     )
 
-    dim, n_protos, per = 16, 8, 40
-
-    def proto(p):
-        return [math.sin(0.7 * p + 1.3 * d) for d in range(dim)]
-
-    rows = []
-    for p in range(n_protos):
-        base = proto(p)
-        for j in range(per):
-            jitter = [0.15 * math.sin(2.1 * j + 0.9 * d + p) for d in range(dim)]
-            rows.append((p * per + j, [b + e for b, e in zip(base, jitter)]))
-    emb = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
+    emb, _ = _clustered(spark)
 
     def mse(books):
         sub = len(books[0][0])
@@ -357,34 +347,15 @@ def test_pq_kmeans_reduces_quantization_error(spark):
     assert two < one, (one, two)
 
 
-def test_ivf_kmeans_refinement_on_clustered_data(spark):
-    """Lloyd refinement on clustered vectors (same corpus construction as
-    test_ivf_topk_recall_vs_brute — unstructured noise degenerates ANY
-    coarse quantizer to n_probe/n_cells recall, so clusters are the only
-    meaningful testbed): refined centroids are deterministic, differ from
-    the raw seeds, and keep recall high."""
-    import math
+def test_ivf_kmeans_refinement_on_clustered_data(spark, tmp_path):
+    """Lloyd refinement on clustered vectors (:func:`_clustered` —
+    unstructured noise degenerates ANY coarse quantizer to
+    n_probe/n_cells recall, so clusters are the only meaningful
+    testbed): refined centroids are deterministic, differ from the raw
+    seeds, and keep recall high."""
+    from genie_spark.datapipe.similarity import ivf_centroids, ivf_kmeans_centroids
 
-    from genie_spark.datapipe.similarity import (
-        brute_force_topk,
-        ivf_centroids,
-        ivf_kmeans_centroids,
-        ivf_topk,
-    )
-
-    dim, n_protos, per = 16, 8, 40
-
-    def proto(p):
-        return [math.sin(0.7 * p + 1.3 * d) for d in range(dim)]
-
-    rows = []
-    for p in range(n_protos):
-        base = proto(p)
-        for j in range(per):
-            jitter = [0.15 * math.sin(2.1 * j + 0.9 * d + p) for d in range(dim)]
-            rows.append((p * per + j, p, [b + e for b, e in zip(base, jitter)]))
-    emb = spark.createDataFrame(rows, "vec_id int, label int, embedding array<float>")
-
+    emb, proto = _clustered(spark)
     seeds = ivf_centroids(emb, n_cells=8)
     km = ivf_kmeans_centroids(emb, n_cells=8, n_iters=2)
     km2 = ivf_kmeans_centroids(emb, n_cells=8, n_iters=2)
@@ -393,7 +364,12 @@ def test_ivf_kmeans_refinement_on_clustered_data(spark):
 
     q = [x + 0.05 for x in proto(3)]
     brute = {r["vec_id"] for r in brute_force_topk(emb, q, k=10).collect()}
-    km_hits = {r["vec_id"] for r in ivf_topk(emb, q, km, k=10, n_probe=2).collect()}
+    km_hits = {
+        r["vec_id"]
+        for r in _ivf_probe(
+            spark, emb, q, km, str(tmp_path / "ivfkm"), k=10, n_probe=2
+        ).collect()
+    }
     assert len(km_hits & brute) >= 8, f"k-means IVF recall: {len(km_hits & brute)}/10"
 
 

@@ -135,14 +135,16 @@ def test_plan_build_fires_no_jobs(spark):
     partition check reads the physical plan instead of df.rdd — no Spark
     job may fire before the action."""
     import __spark_entry__ as entry_mod
-    from genie_spark.datapipe.dedup import embedding_neardup_lsh_pairs
-    from genie_spark.datapipe.similarity import bucketed_embeddings
+    from genie_spark.datapipe.dedup import (
+        embedding_neardup_lsh_pairs,
+        hard_negative_pairs,
+    )
     from genie_spark.pipeline import extract_pipeline
 
     emb = _t(spark, "embeddings")
     pages = entry_mod._docs_as_pages(_t(spark, "documents"))
     before = _jobs_run(spark)
-    bucketed_embeddings(emb, dim=64)
+    hard_negative_pairs(emb, dim=64)
     embedding_neardup_lsh_pairs(emb, dim=64)
     extract_pipeline(spark, pages, ["alpha beta"], ["rel"])
     assert _jobs_run(spark) == before, "plan build ran a Spark job"

@@ -86,12 +86,30 @@ def brute_force_topk(
 ) -> DataFrame:
     """Baseline ANN oracle: cosine against a literal query vector, global
     top-k (ties broken by id for cross-engine determinism)."""
-    qlit = arr_lit(query)
-    scored = emb.select(
-        F.col(id_col),
-        F.round(cosine_col(F.col(vec_col), qlit), 6).alias("cosine"),
+    return _cosine_topk(emb, query, k, vec_col, id_col)
+
+
+def _cosine_topk(
+    df: DataFrame,
+    query: Sequence[float],
+    k: int,
+    vec_col: str,
+    id_col: str,
+    *extra: Column,
+) -> DataFrame:
+    """The tail every exact ANN stage ends with: ``(id, *extra, cosine)``
+    with the cosine to the literal query rounded to 6dp, then the top-k
+    by (cosine desc, id asc) — Spark's TakeOrderedAndProject, no global
+    sort."""
+    return (
+        df.select(
+            F.col(id_col),
+            *extra,
+            F.round(cosine_col(F.col(vec_col), arr_lit(query)), 6).alias("cosine"),
+        )
+        .orderBy(F.desc("cosine"), F.asc(id_col))
+        .limit(k)
     )
-    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
 
 
 def hyperplane_bucket_col(
@@ -178,17 +196,10 @@ def lsh_topk_pruned(
     dim = len(query)
     planes = hyperplanes(n_planes, dim, seed)
     probes = probe_buckets(query_bucket(query, planes), n_planes, multiprobe)
-    qlit = arr_lit(query)
-    bucketed = spark.read.parquet(path)
-    return (
-        bucketed.filter(F.col("bucket").isin(probes))
-        .select(
-            F.col(id_col),
-            F.col("bucket").cast("long").alias("bucket"),
-            F.round(cosine_col(F.col(vec_col), qlit), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
+    bucketed = spark.read.parquet(path).filter(F.col("bucket").isin(probes))
+    return _cosine_topk(
+        bucketed, query, k, vec_col, id_col,
+        F.col("bucket").cast("long").alias("bucket"),
     )
 
 
@@ -328,17 +339,9 @@ def ivf_topk_pruned(
     """Probe a materialized cell table: `cell IN probe` on the partition
     column prunes to n_probe directories; exact cosine inside."""
     probe = ivf_probe_cells(query, centroids, n_probe)
-    qlit = arr_lit(query)
-    cells = spark.read.parquet(path)
-    return (
-        cells.filter(F.col("cell").isin(probe))
-        .select(
-            F.col(id_col),
-            F.col("cell").cast("int").alias("cell"),
-            F.round(cosine_col(F.col(vec_col), qlit), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
+    cells = spark.read.parquet(path).filter(F.col("cell").isin(probe))
+    return _cosine_topk(
+        cells, query, k, vec_col, id_col, F.col("cell").cast("int").alias("cell")
     )
 
 
@@ -780,15 +783,7 @@ def _pq_adc_topk(
         pool = scored.orderBy(
             F.desc("adc_cosine"), F.asc(id_col)
         ).limit(rerank)
-        q_lit = arr_lit(q)
-        return (
-            pool.select(
-                F.col(id_col),
-                F.round(cosine_col(F.col(vec_col), q_lit), 6).alias("cosine"),
-            )
-            .orderBy(F.desc("cosine"), F.asc(id_col))
-            .limit(k)
-        )
+        return _cosine_topk(pool, q, k, vec_col, id_col)
     return scored.select(id_col, "adc_cosine").orderBy(
         F.desc("adc_cosine"), F.asc(id_col)
     ).limit(k)

@@ -453,6 +453,9 @@ def embedding_neardup_pairs(
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
+    # the threshold tests the EXACT cosine (the DuckDB twins do the same);
+    # only the reported value is rounded
+    cos = dot / (F.col("a._n") * F.col("b._n"))
     return (
         a.join(
             b,
@@ -460,12 +463,12 @@ def embedding_neardup_pairs(
             & (F.col("a._salt") == F.col("b._salt"))
             & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
+        .filter(cos >= F.lit(float(threshold)))
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
-            F.round(dot / (F.col("a._n") * F.col("b._n")), 6).alias("cosine"),
+            F.round(cos, 6).alias("cosine"),
         )
-        .filter(F.col("cosine") >= threshold)
     )
 
 

@@ -1206,16 +1206,16 @@ def semantic_dedup_sql(
 ) -> str:
     """DuckDB twin of :func:`semantic_dedup_survivors` — data-derived
     hash-seeded centroids (same pick as :func:`ivf_topk_sql`), the same
-    9dp-rounded argmax assignment, within-cell pairs at 6dp cosine, and
-    the keep-lowest-id anti-join."""
+    9dp-rounded argmax assignment, within-cell pairs whose exact cosine
+    reaches the threshold, and the keep-lowest-id anti-join."""
     from .hashes import h60_sql
 
-    def cos_sql(a: str, b: str, dp: int) -> str:
+    def cos_sql(a: str, b: str) -> str:
         return (
-            f"round(list_sum(list_transform(list_zip({a}, {b}),"
+            f"list_sum(list_transform(list_zip({a}, {b}),"
             f" p -> p[1]::DOUBLE * p[2]::DOUBLE))"
             f" / (sqrt(list_sum(list_transform({a}, x -> x::DOUBLE * x::DOUBLE)))"
-            f" * sqrt(list_sum(list_transform({b}, x -> x::DOUBLE * x::DOUBLE)))), {dp})"
+            f" * sqrt(list_sum(list_transform({b}, x -> x::DOUBLE * x::DOUBLE))))"
         )
 
     return f"""
@@ -1229,7 +1229,7 @@ assign AS (
   SELECT e.vec_id, e.embedding, c.cid,
          row_number() OVER (
            PARTITION BY e.vec_id
-           ORDER BY {cos_sql("e.embedding", "c.cvec", 9)} DESC, c.cid
+           ORDER BY round({cos_sql("e.embedding", "c.cvec")}, 9) DESC, c.cid
          ) AS rnk
   FROM embeddings e CROSS JOIN cents c
 ),
@@ -1237,7 +1237,7 @@ cells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rnk = 1),
 dropped AS (
   SELECT DISTINCT b.vec_id
   FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE {cos_sql("a.embedding", "b.embedding", 6)} >= {threshold}
+  WHERE {cos_sql("a.embedding", "b.embedding")} >= {threshold}
 )
 SELECT c.vec_id, c.cell FROM cells c
 ANTI JOIN dropped d ON d.vec_id = c.vec_id

@@ -373,6 +373,39 @@ def test_ivf_kmeans_refinement_on_clustered_data(spark, tmp_path):
     assert len(km_hits & brute) >= 8, f"k-means IVF recall: {len(km_hits & brute)}/10"
 
 
+def test_neardup_threshold_boundary_matches_oracles(spark):
+    """The near-dup threshold compares the EXACT cosine, in Spark and in
+    the DuckDB twins alike. This pair's cosine is 0.29999959…: it rounds
+    to 0.3 at 6dp but lies below a 0.3 threshold, so an engine that
+    filtered on the rounded value would keep a pair the other drops."""
+    import duckdb
+
+    import genie_spark.entry_queries as eq
+    from genie_spark.datapipe.dedup import embedding_neardup_pairs
+    from genie_spark.datapipe.similarity import (
+        ivf_centroids,
+        semantic_dedup_sql,
+        semantic_dedup_survivors,
+    )
+
+    vecs = [(1, 0, [1.0, 0.0]), (2, 0, [0.2999995946884155, 0.9539393186569214])]
+    emb = spark.createDataFrame(vecs, "vec_id long, label long, embedding array<float>")
+    con = duckdb.connect()
+    con.sql("CREATE TABLE embeddings (vec_id BIGINT, label BIGINT, embedding FLOAT[])")
+    con.executemany("INSERT INTO embeddings VALUES (?, ?, ?)", vecs)
+
+    pairs = embedding_neardup_pairs(emb, block_col="label", threshold=0.3)
+    spark_pairs = sorted(tuple(r) for r in pairs.collect())
+    duck_pairs = sorted(con.sql(eq.ORACLES["embedding_neardup"]).fetchall())
+    assert spark_pairs == duck_pairs == []
+
+    cents = ivf_centroids(emb, n_cells=1)  # one cell: the pair is compared
+    survivors = semantic_dedup_survivors(emb, cents, threshold=0.3)
+    spark_surv = sorted(tuple(r) for r in survivors.collect())
+    duck_surv = sorted(con.sql(semantic_dedup_sql(n_cells=1, threshold=0.3)).fetchall())
+    assert spark_surv == duck_surv == [(1, 0), (2, 0)]
+
+
 def test_substring_dup_stats_coverage(spark):
     from genie_spark.datapipe.dedup import substring_dup_stats
 

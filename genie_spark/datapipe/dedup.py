@@ -378,17 +378,19 @@ def embedding_neardup_lsh_pairs(
     n_planes with corpus size). High-cosine pairs land in the same bucket
     with probability (1 − θ/π)^n_planes, so the recall tradeoff is
     explicit and tunable."""
+    return _lsh_cosine_pairs(emb, vec_col, id_col, n_planes, threshold, seed, dim)
+
+
+def _lsh_cosine_pairs(
+    emb, vec_col, id_col, n_planes, threshold, seed, dim, **carry
+) -> DataFrame:
+    """:func:`_salted_cosine_pairs` blocked by the hyperplane-LSH bucket."""
     from .similarity import _vec_dim, hyperplane_bucket_col, hyperplanes
 
     planes = hyperplanes(n_planes, _vec_dim(emb, vec_col, dim), seed)
-    bucketed = emb.withColumn(
-        "_lshb", hyperplane_bucket_col(F.col(vec_col), planes)
-    )
-    cores = emb.sparkSession.sparkContext.defaultParallelism
-    return embedding_neardup_pairs(
-        bucketed, vec_col=vec_col, id_col=id_col, block_col="_lshb",
-        threshold=threshold,
-        salt=-(-cores * 8 // (1 << n_planes)),  # 8x-oversampled keys vs partitions (guide 2.5); 1 (no-op) once buckets >= 8x cores
+    return _salted_cosine_pairs(
+        emb, vec_col, id_col, hyperplane_bucket_col(F.col(vec_col), planes),
+        threshold, _block_salt(emb, 1 << n_planes), **carry,
     )
 
 
@@ -406,32 +408,63 @@ def embedding_neardup_pairs(
     accidental unblocked call on a corpus-sized frame is an all-pairs
     self-join, so there is no default — callers without a natural
     blocking column should use :func:`embedding_neardup_lsh_pairs`, which
-    derives one from the deterministic hyperplane-LSH signature."""
+    derives one from the deterministic hyperplane-LSH signature.
+    ``salt``: see :func:`_salted_cosine_pairs`."""
     if not block_col:
         raise ValueError(
             "embedding_neardup_pairs requires an explicit block_col "
             "(all-pairs without blocking is quadratic in the corpus); "
             "use embedding_neardup_lsh_pairs for the LSH-blocked default"
         )
+    return _salted_cosine_pairs(
+        emb, vec_col, id_col, F.col(block_col), threshold, salt
+    )
+
+
+def _block_salt(emb: DataFrame, n_blocks: int) -> int:
+    """Salt for a self-join over ``n_blocks`` blocks: 8× oversampled join
+    keys vs cores (guide 2.5); 1 (a no-op) once the blocks alone reach
+    8× the cores."""
+    cores = emb.sparkSession.sparkContext.defaultParallelism
+    return max(1, -(-cores * 8 // max(1, n_blocks)))
+
+
+def _salted_cosine_pairs(
+    emb: DataFrame,
+    vec_col: str,
+    id_col: str,
+    block: Column,
+    threshold: float,
+    salt: int,
+    **carry: Column,
+) -> DataFrame:
+    """The blocked self-join behind every embedding pair operator: pairs
+    ``id_a < id_b`` sharing a ``block`` value whose EXACT cosine reaches
+    ``threshold`` (the DuckDB twins compare the same unrounded value; only
+    the reported cosine is rounded to 6dp). Returns ``(id_a, id_b,
+    <name>_a, <name>_b for each carry column, cosine)``.
+
+    ``salt`` splits each block's pair generation across salt×|blocks|
+    join keys (guide-standard salting: a-side keyed by a deterministic id
+    hash, b-side exploded over all salts, so every within-block pair
+    still meets exactly once). The within-block dot products are the CPU
+    cost of this operator, and with |blocks| (e.g. 8 IVF cells or
+    2^n_planes buckets) below the core count the shuffle can't spread
+    them; :func:`_block_salt` picks the salt. At scale, where block
+    counts grow with the corpus and exceed the cluster's cores, salt
+    degenerates to 1 and the plan is unchanged. Results are identical
+    for any salt — it never appears in the output or the pair
+    condition."""
+    from .similarity import dot_col, norm_col
+
     v = F.col(vec_col)
-    norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x))
     base = emb.select(
         F.col(id_col),
-        F.col(block_col).alias("_blk"),
+        block.alias("_blk"),
         v.alias("_v"),
-        norm.alias("_n"),
+        norm_col(v).alias("_n"),
+        *[c.alias(name) for name, c in carry.items()],
     )
-    # ``salt`` splits each block's pair generation across salt×|blocks|
-    # join keys (guide-standard salting: a-side keyed by a deterministic
-    # id hash, b-side exploded over all salts, so every within-block pair
-    # still meets exactly once). The within-block dot products are the
-    # CPU cost of this operator, and with |blocks| (e.g. 8 IVF cells or
-    # 2^n_planes buckets) below the core count the shuffle can't spread
-    # them. Callers pass ceil(cores / n_blocks); at scale, where block
-    # counts grow with the corpus and exceed the cluster's cores, salt
-    # degenerates to 1 and the plan is unchanged. Results are identical
-    # for any salt — it never appears in the output or the pair
-    # condition.
     salt = max(1, int(salt))
     a_df = base.withColumn(
         "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt))
@@ -448,14 +481,7 @@ def embedding_neardup_pairs(
         a_df = a_df.repartition(cores, F.col("_blk"), F.col("_salt"))
         b_df = b_df.repartition(cores, F.col("_blk"), F.col("_salt"))
     a, b = a_df.alias("a"), b_df.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a._v"), F.col("b._v"), lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    # the threshold tests the EXACT cosine (the DuckDB twins do the same);
-    # only the reported value is rounded
-    cos = dot / (F.col("a._n") * F.col("b._n"))
+    cos = dot_col(F.col("a._v"), F.col("b._v")) / (F.col("a._n") * F.col("b._n"))
     return (
         a.join(
             b,
@@ -467,6 +493,11 @@ def embedding_neardup_pairs(
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
+            *[
+                F.col(f"{side}.{name}").alias(f"{name}_{side}")
+                for name in carry
+                for side in ("a", "b")
+            ],
             F.round(cos, 6).alias("cosine"),
         )
     )
@@ -1170,60 +1201,7 @@ def hard_negative_pairs(
     Scale shape: identical to embedding_neardup_lsh_pairs (bucketed
     all-pairs bounded by 2^n_planes blocking), plus one row-local label
     inequality — the label ride-along costs nothing."""
-    from .similarity import _vec_dim, hyperplane_bucket_col, hyperplanes
-
-    planes = hyperplanes(n_planes, _vec_dim(emb, vec_col, dim), seed)
-    v = F.col(vec_col)
-    norm = F.sqrt(
-        F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x)
-    )
-    base = emb.select(
-        F.col(id_col),
-        F.col(label_col).alias("_lbl"),
-        hyperplane_bucket_col(v, planes).alias("_blk"),
-        v.alias("_v"),
-        norm.alias("_n"),
-    )
-    # same salting as embedding_neardup_pairs: spread the within-block
-    # dot products over salt×|buckets| join keys; no-op once 2^n_planes
-    # exceeds the core count (result-invariant for any salt)
-    cores = emb.sparkSession.sparkContext.defaultParallelism
-    salt = max(1, -(-cores * 8 // (1 << n_planes)))
-    a_df = base.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt))
-    )
-    b_df = base.withColumn(
-        "_salt",
-        F.explode(F.sequence(F.lit(0).cast("long"), F.lit(salt - 1).cast("long"))),
-    )
-    if salt > 1:
-        # pin the salted partitioning (AQE would coalesce the byte-light
-        # inputs back to one task — see embedding_neardup_pairs)
-        a_df = a_df.repartition(cores, F.col("_blk"), F.col("_salt"))
-        b_df = b_df.repartition(cores, F.col("_blk"), F.col("_salt"))
-    a, b = a_df.alias("a"), b_df.alias("b")
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("a._v"), F.col("b._v"), lambda x, y: x.cast("double") * y
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = dot / (F.col("a._n") * F.col("b._n"))
-    return (
-        a.join(
-            b,
-            (F.col("a._blk") == F.col("b._blk"))
-            & (F.col("a._salt") == F.col("b._salt"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .filter(cos >= F.lit(float(threshold)))
-        .filter(F.col("a._lbl") != F.col("b._lbl"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a._lbl").alias("label_a"),
-            F.col("b._lbl").alias("label_b"),
-            F.round(cos, 6).alias("cosine"),
-        )
-    )
+    return _lsh_cosine_pairs(
+        emb, vec_col, id_col, n_planes, threshold, seed, dim,
+        label=F.col(label_col),
+    ).filter(F.col("label_a") != F.col("label_b"))

@@ -1182,7 +1182,7 @@ def semantic_dedup_survivors(
     deterministic stand-in for the paper's keep-one-per-group policy —
     it needs no extra pass over the pair set and both engines agree on
     it bit-for-bit. Returns ``(id, cell)``."""
-    from .dedup import embedding_neardup_pairs, spread_for_compute
+    from .dedup import _block_salt, embedding_neardup_pairs, spread_for_compute
 
     # cell assignment is n_cells × dim interpreted HOF ops per row —
     # compute-bound, so spread the single-split embeddings scan
@@ -1191,10 +1191,9 @@ def semantic_dedup_survivors(
         F.col(vec_col),
         ivf_cell_col(F.col(vec_col), centroids).alias("cell"),
     )
-    cores = emb.sparkSession.sparkContext.defaultParallelism
     pairs = embedding_neardup_pairs(
         cells, vec_col, id_col, block_col="cell", threshold=threshold,
-        salt=-(-cores * 8 // max(1, len(centroids))),  # 8x-oversampled keys vs partitions; 1 (no-op) once cells >= 8x cores
+        salt=_block_salt(emb, len(centroids)),
     )
     dropped = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return cells.join(dropped, id_col, "left_anti").select(id_col, "cell")

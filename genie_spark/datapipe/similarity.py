@@ -354,48 +354,12 @@ def ivf_topk_sql(
     """DuckDB twin of :func:`ivf_centroids` + :func:`ivf_topk_pruned`, fully
     data-derived (the centroid pick runs in SQL with the same hash order),
     so the one static oracle string is correct at every scale factor."""
-    from .hashes import h60_sql
-
     q = _q_vec_sql(query)
-
-    def cos_sql(a: str, b: str) -> str:
-        return (
-            f"round(list_sum(list_transform(list_zip({a}, {b}),"
-            f" p -> p[1]::DOUBLE * p[2]::DOUBLE))"
-            f" / (sqrt(list_sum(list_transform({a}, x -> x::DOUBLE * x::DOUBLE)))"
-            f" * sqrt(list_sum(list_transform({b}, x -> x::DOUBLE * x::DOUBLE)))), 9)"
-        )
-
     return f"""
-WITH cents AS (
-  SELECT embedding AS cvec,
-         row_number() OVER (ORDER BY {h60_sql("vec_id::VARCHAR")}, vec_id) - 1 AS cid
-  FROM embeddings
-  QUALIFY cid < {n_cells}
-),
-assign AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY {cos_sql("e.embedding", "c.cvec")} DESC, c.cid
-         ) AS rnk
-  FROM embeddings e CROSS JOIN cents c
-),
-cells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rnk = 1),
-probe AS (
-  SELECT cid FROM cents
-  ORDER BY {cos_sql(q, "cvec")} DESC, cid
-  LIMIT {n_probe}
-)
-SELECT vec_id, cell,
-       round(list_sum(list_transform(list_zip(embedding, {q}),
-                                     p -> p[1]::DOUBLE * p[2]::DOUBLE))
-             / (sqrt(list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)))
-                * sqrt(list_sum(list_transform({q}, x -> x * x)))), 6) AS cosine
-FROM cells WHERE cell IN (SELECT cid FROM probe)
-ORDER BY cosine DESC, vec_id ASC
-LIMIT {k}
-"""
+WITH {_seed_sql("cents", "embedding AS cvec", n_cells)},
+{_cells_sql("cents")},
+{_probe_sql(q, "cents", n_probe)}
+{_exact_topk_sql(q, k, "vec_id, cell", "cells WHERE cell IN (SELECT cid FROM probe)")}"""
 
 
 def ivf_kmeans_topk_sql(
@@ -409,37 +373,14 @@ def ivf_kmeans_topk_sql(
     the Lloyd iterations unroll to one (assign → per-cell element-wise
     avg → coalesce-with-previous) CTE block each, fully data-derived, so
     the single static oracle string is correct at every scale factor."""
-    from .hashes import h60_sql
-
     q = _q_vec_sql(query)
-
-    def cos_sql(a: str, b: str) -> str:
-        return (
-            f"round(list_sum(list_transform(list_zip({a}, {b}),"
-            f" p -> p[1]::DOUBLE * p[2]::DOUBLE))"
-            f" / (sqrt(list_sum(list_transform({a}, x -> x::DOUBLE * x::DOUBLE)))"
-            f" * sqrt(list_sum(list_transform({b}, x -> x::DOUBLE * x::DOUBLE)))), 9)"
-        )
-
     blocks = [
-        f"""cents0 AS (
-  SELECT list_transform(embedding, x -> x::DOUBLE) AS cvec,
-         row_number() OVER (ORDER BY {h60_sql("vec_id::VARCHAR")}, vec_id) - 1 AS cid
-  FROM embeddings
-  QUALIFY cid < {n_cells}
-)"""
+        _seed_sql("cents0", "list_transform(embedding, x -> x::DOUBLE) AS cvec", n_cells)
     ]
     for it in range(n_iters):
         prev, cur = f"cents{it}", f"cents{it + 1}"
         blocks.append(
-            f"""a{it} AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY {cos_sql("e.embedding", "c.cvec")} DESC, c.cid
-         ) AS rnk
-  FROM embeddings e CROSS JOIN {prev} c
-),
+            f"""{_assign_sql(f"a{it}", prev)},
 dm{it} AS (
   SELECT cid AS cell, dim, round(avg(val), 9) AS m
   FROM (SELECT cid, unnest(embedding)::DOUBLE AS val,
@@ -454,34 +395,11 @@ m{it} AS (SELECT cell, list(m ORDER BY dim) AS mvec FROM dm{it} GROUP BY 1),
 )"""
         )
     final = f"cents{n_iters}"
-    blocks.append(
-        f"""assign AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY {cos_sql("e.embedding", "c.cvec")} DESC, c.cid
-         ) AS rnk
-  FROM embeddings e CROSS JOIN {final} c
-),
-cells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rnk = 1),
-probe AS (
-  SELECT cid FROM {final}
-  ORDER BY {cos_sql(q, "cvec")} DESC, cid
-  LIMIT {n_probe}
-)"""
-    )
+    blocks.append(f"{_cells_sql(final)},\n{_probe_sql(q, final, n_probe)}")
     with_sql = ",\n".join(blocks)
     return f"""
 WITH {with_sql}
-SELECT vec_id, cell,
-       round(list_sum(list_transform(list_zip(embedding, {q}),
-                                     p -> p[1]::DOUBLE * p[2]::DOUBLE))
-             / (sqrt(list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)))
-                * sqrt(list_sum(list_transform({q}, x -> x * x)))), 6) AS cosine
-FROM cells WHERE cell IN (SELECT cid FROM probe)
-ORDER BY cosine DESC, vec_id ASC
-LIMIT {k}
-"""
+{_exact_topk_sql(q, k, "vec_id, cell", "cells WHERE cell IN (SELECT cid FROM probe)")}"""
 
 
 # ---------------------------------------------------------------------------
@@ -493,18 +411,144 @@ def _q_vec_sql(query: Sequence[float]) -> str:
     return "[" + ", ".join(f"{float(x)!r}" for x in query) + "]"
 
 
-def brute_force_topk_sql(query: Sequence[float], k: int = 10) -> str:
-    q = _q_vec_sql(query)
-    return f"""
-SELECT vec_id,
+# DuckDB fragments the oracle builders share, each spelled exactly once:
+# cosine pieces, the h60 seed pick, the IVF assign/probe, the PQ encode,
+# the ADC chain and the exact top-k / re-rank tails.
+
+
+def _dot_sql(a: str, b: str) -> str:
+    return f"list_sum(list_transform(list_zip({a}, {b}), p -> p[1]::DOUBLE * p[2]::DOUBLE))"
+
+
+def _n2_sql(a: str) -> str:
+    return f"list_sum(list_transform({a}, x -> x::DOUBLE * x::DOUBLE))"
+
+
+def _cos_sql(a: str, b: str, dp: int = None) -> str:
+    """Cosine of two list expressions; rounded to ``dp`` places if given."""
+    cos = f"{_dot_sql(a, b)} / (sqrt({_n2_sql(a)}) * sqrt({_n2_sql(b)}))"
+    return cos if dp is None else f"round({cos}, {dp})"
+
+
+def _slice_sql(expr: str, j: int, sub: int) -> str:
+    """The j-th ``sub``-wide PQ subvector of a list expression."""
+    return f"list_slice({expr}, {j * sub + 1}, {(j + 1) * sub})"
+
+
+def _seed_sql(name: str, vec: str, n: int) -> str:
+    """The n smallest-h60 corpus vectors as ``name(<vec>, cid)`` — the
+    deterministic pick of :func:`ivf_centroids`."""
+    from .hashes import h60_sql
+
+    return f"""{name} AS (
+  SELECT {vec},
+         row_number() OVER (ORDER BY {h60_sql("vec_id::VARCHAR")}, vec_id) - 1 AS cid
+  FROM embeddings
+  QUALIFY cid < {n}
+)"""
+
+
+def _assign_sql(name: str, cents: str) -> str:
+    """Rank every centroid of ``cents`` per vector by 9dp cosine (rnk = 1
+    is :func:`ivf_cell_col`'s cell)."""
+    return f"""{name} AS (
+  SELECT e.vec_id, e.embedding, c.cid,
+         row_number() OVER (
+           PARTITION BY e.vec_id
+           ORDER BY {_cos_sql("e.embedding", "c.cvec", 9)} DESC, c.cid
+         ) AS rnk
+  FROM embeddings e CROSS JOIN {cents} c
+)"""
+
+
+def _cells_sql(cents: str) -> str:
+    return (
+        _assign_sql("assign", cents)
+        + ",\ncells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rnk = 1)"
+    )
+
+
+def _probe_sql(q: str, cents: str, n_probe: int) -> str:
+    """The n_probe cells nearest the query (:func:`ivf_probe_cells`)."""
+    return f"""probe AS (
+  SELECT cid FROM {cents}
+  ORDER BY {_cos_sql(q, "cvec", 9)} DESC, cid
+  LIMIT {n_probe}
+)"""
+
+
+def _exact_topk_sql(q: str, k: int, cols: str, frm: str) -> str:
+    """Twin of :func:`_cosine_topk` over ``frm``."""
+    return f"""SELECT {cols},
        round(list_sum(list_transform(list_zip(embedding, {q}),
                                      p -> p[1]::DOUBLE * p[2]::DOUBLE))
              / (sqrt(list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)))
                 * sqrt(list_sum(list_transform({q}, x -> x * x)))), 6) AS cosine
-FROM embeddings
+FROM {frm}
 ORDER BY cosine DESC, vec_id ASC
 LIMIT {k}
 """
+
+
+def _pq_assign_sql(src: str, m: int, sub: int) -> str:
+    """Per-subspace encode of ``src`` against the ``seeds`` codebooks:
+    ``c{j}(vec_id, code)`` for j < m (:func:`pq_code_cols`)."""
+    return ",\n".join(
+        f"""a{j} AS (
+  SELECT e.vec_id, s.cid,
+         row_number() OVER (
+           PARTITION BY e.vec_id
+           ORDER BY round({_dot_sql(_slice_sql("e.embedding", j, sub), _slice_sql("s.svec", j, sub))}
+                    - 0.5 * {_n2_sql(_slice_sql("s.svec", j, sub))}, 9) DESC, s.cid
+         ) AS rnk
+  FROM {src} e CROSS JOIN seeds s
+),
+c{j} AS (SELECT vec_id, cid AS code FROM a{j} WHERE rnk = 1)"""
+        for j in range(m)
+    )
+
+
+def _adc_select_sql(query, sub: int, books, words) -> str:
+    """The fixed-order ADC chain over codes ``c0..c{m-1}``: subspace j
+    looks its codeword up in table ``books[j]`` (aliased ``s{j}``) and
+    reads it as ``words[j]``."""
+    q = _q_vec_sql(query)
+    qnorm = _py_dot(query, query) ** 0.5
+    m = len(books)
+    joins = " ".join(f"JOIN c{j} ON c{j}.vec_id = c0.vec_id" for j in range(1, m))
+    book_joins = " ".join(
+        f"JOIN {books[j]} s{j} ON s{j}.cid = c{j}.code" for j in range(m)
+    )
+    adc = " + ".join(
+        f"round({_dot_sql(_slice_sql(q, j, sub), words[j])}, 9)" for j in range(m)
+    )
+    n2 = " + ".join(f"round({_n2_sql(words[j])}, 9)" for j in range(m))
+    return f"""SELECT c0.vec_id,
+       round(({adc}) / ({qnorm!r} * sqrt({n2})), 6) AS adc_cosine
+FROM c0 {joins} {book_joins}
+ORDER BY adc_cosine DESC, c0.vec_id ASC"""
+
+
+def _pq_topk_sql(base: str, adc_select: str, query, k: int, rerank: int, src: str) -> str:
+    """Top-k of the ADC ranking, or with ``rerank`` its pool re-ranked by
+    exact cosine over the vectors in ``src`` (:func:`_pq_adc_topk`)."""
+    if not rerank:
+        return f"\n{base}\n{adc_select}\nLIMIT {k}\n"
+    return f"""
+{base},
+pool AS (
+  {adc_select}
+  LIMIT {rerank}
+)
+SELECT e.vec_id, {_cos_sql("e.embedding", _q_vec_sql(query), 6)} AS cosine
+FROM pool p JOIN {src} e ON e.vec_id = p.vec_id
+ORDER BY cosine DESC, e.vec_id ASC
+LIMIT {k}
+"""
+
+
+def brute_force_topk_sql(query: Sequence[float], k: int = 10) -> str:
+    return "\n" + _exact_topk_sql(_q_vec_sql(query), k, "vec_id", "embeddings")
 
 
 def _bucket_expr_sql(planes: List[List[int]], vec: str = "embedding") -> str:
@@ -528,21 +572,12 @@ def lsh_topk_sql(
 ) -> str:
     planes = hyperplanes(n_planes, dim, seed)
     probes = probe_buckets(query_bucket(query, planes), n_planes, multiprobe)
-    q = _q_vec_sql(query)
     in_list = ", ".join(str(b) for b in probes)
     return f"""
 WITH b AS (
   SELECT vec_id, embedding, ({_bucket_expr_sql(planes)})::BIGINT AS bucket FROM embeddings
 )
-SELECT vec_id, bucket,
-       round(list_sum(list_transform(list_zip(embedding, {q}),
-                                     p -> p[1]::DOUBLE * p[2]::DOUBLE))
-             / (sqrt(list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)))
-                * sqrt(list_sum(list_transform({q}, x -> x * x)))), 6) AS cosine
-FROM b WHERE bucket IN ({in_list})
-ORDER BY cosine DESC, vec_id ASC
-LIMIT {k}
-"""
+{_exact_topk_sql(_q_vec_sql(query), k, "vec_id, bucket", f"b WHERE bucket IN ({in_list})")}"""
 
 
 def embedding_neardup_lsh_sql(
@@ -550,19 +585,33 @@ def embedding_neardup_lsh_sql(
 ) -> str:
     """DuckDB twin of dedup.embedding_neardup_lsh_pairs: same hyperplane
     literals, same bucket-blocked all-pairs cosine."""
+    return _lsh_pairs_sql(n_planes, dim, threshold, seed, label=False)
+
+
+def _lsh_pairs_sql(
+    n_planes: int, dim: int, threshold: float, seed: int, label: bool
+) -> str:
+    """Twin of ``dedup._lsh_cosine_pairs``; ``label`` carries the label
+    column and keeps only pairs whose labels differ."""
     planes = hyperplanes(n_planes, dim, seed)
+    dot = "list_sum(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2]))"
+    lbl, lbl_cols, lbl_pred = (
+        (", label", "\n       a.label AS label_a, b.label AS label_b,",
+         "\n  AND a.label <> b.label")
+        if label else ("", "", "")
+    )
     return f"""
 WITH base AS (
-  SELECT vec_id,
+  SELECT vec_id{lbl},
          ({_bucket_expr_sql(planes)})::BIGINT AS bucket,
          list_transform(embedding, x -> x::DOUBLE) AS v,
          sqrt(list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE))) AS n
   FROM embeddings
 )
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       round(list_sum(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2])) / (a.n * b.n), 6) AS cosine
+SELECT a.vec_id AS id_a, b.vec_id AS id_b,{lbl_cols}
+       round({dot} / (a.n * b.n), 6) AS cosine
 FROM base a JOIN base b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE list_sum(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2])) / (a.n * b.n) >= {threshold}
+WHERE {dot} / (a.n * b.n) >= {threshold}{lbl_pred}
 """
 
 
@@ -859,103 +908,20 @@ def ivf_pq_topk_sql(
     survivors (encoding is row-local, so codes are identical to a full-
     corpus encode), the fixed-order ADC chain, and the exact re-rank —
     fully data-derived, correct at every scale factor."""
-    from .hashes import h60_sql
-
     sub = dim // m
-    q = _q_vec_sql(query)
-    qnorm = _py_dot(query, query) ** 0.5
-
-    def dot_sql(a: str, b: str) -> str:
-        return (
-            f"list_sum(list_transform(list_zip({a}, {b}),"
-            f" p -> p[1]::DOUBLE * p[2]::DOUBLE))"
-        )
-
-    def n2_sql(a: str) -> str:
-        return f"list_sum(list_transform({a}, x -> x::DOUBLE * x::DOUBLE))"
-
-    def cos9(a: str, b: str) -> str:
-        return f"round({dot_sql(a, b)} / (sqrt({n2_sql(a)}) * sqrt({n2_sql(b)})), 9)"
-
-    def sl(expr: str, j: int) -> str:
-        return f"list_slice({expr}, {j * sub + 1}, {(j + 1) * sub})"
-
-    assign = ",\n".join(
-        f"""a{j} AS (
-  SELECT e.vec_id, s.cid,
-         row_number() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY round({dot_sql(sl("e.embedding", j), sl("s.svec", j))}
-                    - 0.5 * {n2_sql(sl("s.svec", j))}, 9) DESC, s.cid
-         ) AS rnk
-  FROM surv e CROSS JOIN seeds s
-),
-c{j} AS (SELECT vec_id, cid AS code FROM a{j} WHERE rnk = 1)"""
-        for j in range(m)
-    )
-    joins = " ".join(
-        f"JOIN c{j} ON c{j}.vec_id = c0.vec_id" for j in range(1, m)
-    )
-    seed_joins = " ".join(
-        f"JOIN seeds s{j} ON s{j}.cid = c{j}.code" for j in range(m)
-    )
-    adc_chain = " + ".join(
-        f"round({dot_sql(sl(q, j), sl(f's{j}.svec', j))}, 9)" for j in range(m)
-    )
-    n2_chain = " + ".join(
-        f"round({n2_sql(sl(f's{j}.svec', j))}, 9)" for j in range(m)
-    )
-    base = f"""WITH cents AS (
-  SELECT embedding AS cvec,
-         row_number() OVER (ORDER BY {h60_sql("vec_id::VARCHAR")}, vec_id) - 1 AS cid
-  FROM embeddings
-  QUALIFY cid < {n_cells}
-),
-cassign AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY {cos9("e.embedding", "c.cvec")} DESC, c.cid
-         ) AS rnk
-  FROM embeddings e CROSS JOIN cents c
-),
-probe AS (
-  SELECT cid FROM cents
-  ORDER BY {cos9(q, "cvec")} DESC, cid
-  LIMIT {n_probe}
-),
+    base = f"""WITH {_seed_sql("cents", "embedding AS cvec", n_cells)},
+{_assign_sql("cassign", "cents")},
+{_probe_sql(_q_vec_sql(query), "cents", n_probe)},
 surv AS (
   SELECT vec_id, embedding FROM cassign
   WHERE rnk = 1 AND cid IN (SELECT cid FROM probe)
 ),
-seeds AS (
-  SELECT list_transform(embedding, x -> x::DOUBLE) AS svec,
-         row_number() OVER (ORDER BY {h60_sql("vec_id::VARCHAR")}, vec_id) - 1 AS cid
-  FROM embeddings
-  QUALIFY cid < {k_sub}
-),
-{assign}"""
-    adc_select = f"""SELECT c0.vec_id,
-       round(({adc_chain}) / ({qnorm!r} * sqrt({n2_chain})), 6) AS adc_cosine
-FROM c0 {joins} {seed_joins}
-ORDER BY adc_cosine DESC, c0.vec_id ASC"""
-    if not rerank:
-        return f"\n{base}\n{adc_select}\nLIMIT {k}\n"
-    exact = (
-        f"round({dot_sql('e.embedding', q)}"
-        f" / (sqrt({n2_sql('e.embedding')}) * sqrt({n2_sql(q)})), 6)"
+{_seed_sql("seeds", "list_transform(embedding, x -> x::DOUBLE) AS svec", k_sub)},
+{_pq_assign_sql("surv", m, sub)}"""
+    adc = _adc_select_sql(
+        query, sub, ["seeds"] * m, [_slice_sql(f"s{j}.svec", j, sub) for j in range(m)]
     )
-    return f"""
-{base},
-pool AS (
-  {adc_select}
-  LIMIT {rerank}
-)
-SELECT e.vec_id, {exact} AS cosine
-FROM pool p JOIN surv e ON e.vec_id = p.vec_id
-ORDER BY cosine DESC, e.vec_id ASC
-LIMIT {k}
-"""
+    return _pq_topk_sql(base, adc, query, k, rerank, "surv")
 
 
 def pq_topk_sql(
@@ -970,78 +936,13 @@ def pq_topk_sql(
     :func:`pq_topk_from_codes`, fully data-derived (seed pick, per-subspace argmax
     encode, 4-term fixed-order ADC chain), so the one static oracle
     string is correct at every scale factor."""
-    from .hashes import h60_sql
-
     sub = dim // m
-    q = _q_vec_sql(query)
-    qnorm = _py_dot(query, query) ** 0.5
-
-    def dot_sql(a: str, b: str) -> str:
-        return (
-            f"list_sum(list_transform(list_zip({a}, {b}),"
-            f" p -> p[1]::DOUBLE * p[2]::DOUBLE))"
-        )
-
-    def sl(expr: str, j: int) -> str:
-        return f"list_slice({expr}, {j * sub + 1}, {(j + 1) * sub})"
-
-    def n2_sql(a: str) -> str:
-        return f"list_sum(list_transform({a}, x -> x::DOUBLE * x::DOUBLE))"
-
-    # per-subspace assignment: rank codewords per (vec, subspace)
-    assign = ",\n".join(
-        f"""a{j} AS (
-  SELECT e.vec_id, s.cid,
-         row_number() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY round({dot_sql(sl("e.embedding", j), sl("s.svec", j))}
-                    - 0.5 * {n2_sql(sl("s.svec", j))}, 9) DESC, s.cid
-         ) AS rnk
-  FROM embeddings e CROSS JOIN seeds s
-),
-c{j} AS (SELECT vec_id, cid AS code FROM a{j} WHERE rnk = 1)"""
-        for j in range(m)
+    base = f"""WITH {_seed_sql("seeds", "list_transform(embedding, x -> x::DOUBLE) AS svec", k_sub)},
+{_pq_assign_sql("embeddings", m, sub)}"""
+    adc = _adc_select_sql(
+        query, sub, ["seeds"] * m, [_slice_sql(f"s{j}.svec", j, sub) for j in range(m)]
     )
-    joins = " ".join(
-        f"JOIN c{j} ON c{j}.vec_id = c0.vec_id" for j in range(1, m)
-    )
-    seed_joins = " ".join(
-        f"JOIN seeds s{j} ON s{j}.cid = c{j}.code" for j in range(m)
-    )
-    adc_chain = " + ".join(
-        f"round({dot_sql(sl(q, j), sl(f's{j}.svec', j))}, 9)" for j in range(m)
-    )
-    n2_chain = " + ".join(
-        f"round({n2_sql(sl(f's{j}.svec', j))}, 9)" for j in range(m)
-    )
-    base = f"""WITH seeds AS (
-  SELECT list_transform(embedding, x -> x::DOUBLE) AS svec,
-         row_number() OVER (ORDER BY {h60_sql("vec_id::VARCHAR")}, vec_id) - 1 AS cid
-  FROM embeddings
-  QUALIFY cid < {k_sub}
-),
-{assign}"""
-    adc_select = f"""SELECT c0.vec_id,
-       round(({adc_chain}) / ({qnorm!r} * sqrt({n2_chain})), 6) AS adc_cosine
-FROM c0 {joins} {seed_joins}
-ORDER BY adc_cosine DESC, c0.vec_id ASC"""
-    if not rerank:
-        return f"\n{base}\n{adc_select}\nLIMIT {k}\n"
-    exact = (
-        f"round({dot_sql('e.embedding', q)}"
-        f" / (sqrt({n2_sql('e.embedding')}) * sqrt({n2_sql(q)})), 6)"
-    )
-    return f"""
-{base},
-pool AS (
-  {adc_select}
-  LIMIT {rerank}
-)
-SELECT e.vec_id, {exact} AS cosine
-FROM pool p JOIN embeddings e ON e.vec_id = p.vec_id
-ORDER BY cosine DESC, e.vec_id ASC
-LIMIT {k}
-"""
+    return _pq_topk_sql(base, adc, query, k, rerank, "embeddings")
 
 
 def pq_kmeans_topk_sql(
@@ -1057,47 +958,21 @@ def pq_kmeans_topk_sql(
     coalesce-with-previous) CTE block each, fully data-derived — the
     same unrolling recipe as :func:`ivf_kmeans_topk_sql`, sliced per
     subspace."""
-    from .hashes import h60_sql
-
     sub = dim // m
-    q = _q_vec_sql(query)
-    qnorm = _py_dot(query, query) ** 0.5
-
-    def dot_sql(a: str, b: str) -> str:
-        return (
-            f"list_sum(list_transform(list_zip({a}, {b}),"
-            f" p -> p[1]::DOUBLE * p[2]::DOUBLE))"
-        )
-
-    def n2_sql(a: str) -> str:
-        return f"list_sum(list_transform({a}, x -> x::DOUBLE * x::DOUBLE))"
-
-    def esl(j: int) -> str:
-        return f"list_slice(e.embedding, {j * sub + 1}, {(j + 1) * sub})"
-
     blocks = [
-        f"""seeds AS (
-  SELECT list_transform(embedding, x -> x::DOUBLE) AS svec,
-         row_number() OVER (ORDER BY {h60_sql("vec_id::VARCHAR")}, vec_id) - 1 AS cid
-  FROM embeddings
-  QUALIFY cid < {k_sub}
-)"""
+        _seed_sql("seeds", "list_transform(embedding, x -> x::DOUBLE) AS svec", k_sub)
     ]
     for j in range(m):
+        esl = _slice_sql("e.embedding", j, sub)
+        rank = f"round({_dot_sql(esl, 'b.bvec')} - 0.5 * {_n2_sql('b.bvec')}, 9)"
         blocks.append(
-            f"sb{j}i0 AS (SELECT cid, "
-            f"list_slice(svec, {j * sub + 1}, {(j + 1) * sub}) AS bvec "
-            f"FROM seeds)"
+            f"sb{j}i0 AS (SELECT cid, {_slice_sql('svec', j, sub)} AS bvec FROM seeds)"
         )
         for it in range(n_iters):
             prev, cur = f"sb{j}i{it}", f"sb{j}i{it + 1}"
-            rank = (
-                f"round({dot_sql(esl(j), 'b.bvec')}"
-                f" - 0.5 * {n2_sql('b.bvec')}, 9)"
-            )
             blocks.append(
                 f"""a{j}x{it} AS (
-  SELECT e.vec_id, {esl(j)} AS sv, b.cid,
+  SELECT e.vec_id, {esl} AS sv, b.cid,
          row_number() OVER (
            PARTITION BY e.vec_id ORDER BY {rank} DESC, b.cid
          ) AS rnk
@@ -1116,43 +991,20 @@ mm{j}x{it} AS (SELECT code, list(mval ORDER BY dim) AS bvec FROM dm{j}x{it} GROU
   FROM {prev} p LEFT JOIN mm{j}x{it} mm ON p.cid = mm.code
 )"""
             )
-        final_book = f"sb{j}i{n_iters}"
-        rank = (
-            f"round({dot_sql(esl(j), 'b.bvec')}"
-            f" - 0.5 * {n2_sql('b.bvec')}, 9)"
-        )
         blocks.append(
             f"""fa{j} AS (
   SELECT e.vec_id, b.cid,
          row_number() OVER (
            PARTITION BY e.vec_id ORDER BY {rank} DESC, b.cid
          ) AS rnk
-  FROM embeddings e CROSS JOIN {final_book} b
+  FROM embeddings e CROSS JOIN sb{j}i{n_iters} b
 ),
 c{j} AS (SELECT vec_id, cid AS code FROM fa{j} WHERE rnk = 1)"""
         )
-    joins = " ".join(
-        f"JOIN c{j} ON c{j}.vec_id = c0.vec_id" for j in range(1, m)
+    adc = _adc_select_sql(
+        query, sub, [f"sb{j}i{n_iters}" for j in range(m)], [f"s{j}.bvec" for j in range(m)]
     )
-    seed_joins = " ".join(
-        f"JOIN sb{j}i{n_iters} s{j} ON s{j}.cid = c{j}.code" for j in range(m)
-    )
-    adc_chain = " + ".join(
-        f"round({dot_sql(f'list_slice({q}, {j * sub + 1}, {(j + 1) * sub})', f's{j}.bvec')}, 9)"
-        for j in range(m)
-    )
-    n2_chain = " + ".join(
-        f"round({n2_sql(f's{j}.bvec')}, 9)" for j in range(m)
-    )
-    with_sql = ",\n".join(blocks)
-    return f"""
-WITH {with_sql}
-SELECT c0.vec_id,
-       round(({adc_chain}) / ({qnorm!r} * sqrt({n2_chain})), 6) AS adc_cosine
-FROM c0 {joins} {seed_joins}
-ORDER BY adc_cosine DESC, c0.vec_id ASC
-LIMIT {k}
-"""
+    return _pq_topk_sql("WITH " + ",\n".join(blocks), adc, query, k, 0, "")
 
 
 # ---------------------------------------------------------------------------
@@ -1207,36 +1059,13 @@ def semantic_dedup_sql(
     hash-seeded centroids (same pick as :func:`ivf_topk_sql`), the same
     9dp-rounded argmax assignment, within-cell pairs whose exact cosine
     reaches the threshold, and the keep-lowest-id anti-join."""
-    from .hashes import h60_sql
-
-    def cos_sql(a: str, b: str) -> str:
-        return (
-            f"list_sum(list_transform(list_zip({a}, {b}),"
-            f" p -> p[1]::DOUBLE * p[2]::DOUBLE))"
-            f" / (sqrt(list_sum(list_transform({a}, x -> x::DOUBLE * x::DOUBLE)))"
-            f" * sqrt(list_sum(list_transform({b}, x -> x::DOUBLE * x::DOUBLE))))"
-        )
-
     return f"""
-WITH cents AS (
-  SELECT embedding AS cvec,
-         row_number() OVER (ORDER BY {h60_sql("vec_id::VARCHAR")}, vec_id) - 1 AS cid
-  FROM embeddings
-  QUALIFY cid < {n_cells}
-),
-assign AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY round({cos_sql("e.embedding", "c.cvec")}, 9) DESC, c.cid
-         ) AS rnk
-  FROM embeddings e CROSS JOIN cents c
-),
-cells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rnk = 1),
+WITH {_seed_sql("cents", "embedding AS cvec", n_cells)},
+{_cells_sql("cents")},
 dropped AS (
   SELECT DISTINCT b.vec_id
   FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE {cos_sql("a.embedding", "b.embedding")} >= {threshold}
+  WHERE {_cos_sql("a.embedding", "b.embedding")} >= {threshold}
 )
 SELECT c.vec_id, c.cell FROM cells c
 ANTI JOIN dropped d ON d.vec_id = c.vec_id
@@ -1328,14 +1157,7 @@ def lsh_recall_eval_sql(
     planes = hyperplanes(n_planes, dim, seed)
     b_e = _bucket_expr_sql(planes, "embedding")
     b_q = _bucket_expr_sql(planes, "qemb")
-    cos = (
-        "round(list_sum(list_transform(list_zip(embedding, qemb),"
-        " p -> p[1]::DOUBLE * p[2]::DOUBLE))"
-        " / (sqrt(list_sum(list_transform(embedding,"
-        " x -> x::DOUBLE * x::DOUBLE)))"
-        " * sqrt(list_sum(list_transform(qemb,"
-        " x -> x::DOUBLE * x::DOUBLE)))), 6)"
-    )
+    cos = _cos_sql("embedding", "qemb", 6)
     return f"""
 WITH re_q AS (
   SELECT vec_id AS qid, embedding AS qemb, {b_q.replace("embedding", "qemb")} AS qb
@@ -1371,19 +1193,4 @@ def hard_negatives_lsh_sql(
 ) -> str:
     """DuckDB twin of dedup.hard_negative_pairs: the
     embedding_neardup_lsh chain plus the label-inequality predicate."""
-    planes = hyperplanes(n_planes, dim, seed)
-    return f"""
-WITH base AS (
-  SELECT vec_id, label,
-         ({_bucket_expr_sql(planes)})::BIGINT AS bucket,
-         list_transform(embedding, x -> x::DOUBLE) AS v,
-         sqrt(list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE))) AS n
-  FROM embeddings
-)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       a.label AS label_a, b.label AS label_b,
-       round(list_sum(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2])) / (a.n * b.n), 6) AS cosine
-FROM base a JOIN base b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE list_sum(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2])) / (a.n * b.n) >= {threshold}
-  AND a.label <> b.label
-"""
+    return _lsh_pairs_sql(n_planes, dim, threshold, seed, label=True)

@@ -2147,22 +2147,44 @@ def ann_cosine_topk(spark, sf_dir):
     return brute_force_topk(_t(spark, sf_dir, "embeddings"), ANN_QUERY, k=_ANN_K)
 
 
+def _index(spark, sf_dir, family, name, build, *args, **kw) -> str:
+    """Path of one materialized ANN index of ``sf_dir``,
+    ``/tmp/genie_spark_<family>/<sf basename>_<name>``. Only when its
+    _SUCCESS marker is missing does it run ``build(embeddings, *args,
+    path=path, **kw)``, so the build amortizes across queries and
+    processes — the index-build/probe split a production deployment
+    has."""
+    base = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+    path = f"/tmp/genie_spark_{family}/{base}_{name}"
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        build(_t(spark, sf_dir, "embeddings"), *args, path=path, **kw)
+    return path
+
+
+_TRAINED: Dict[Callable, tuple] = {}
+
+
+def _trained(spark, sf_dir, train, **kw):
+    """Driver-side memo of ``train(embeddings, **kw)`` — an index's
+    Lloyd-refined centroids or codebooks — so repeated probes skip the
+    training scans. Holds the latest sf_dir per ``train``."""
+    hit = _TRAINED.get(train)
+    if hit is None or hit[0] != sf_dir:
+        hit = _TRAINED[train] = (sf_dir, train(_t(spark, sf_dir, "embeddings"), **kw))
+    return hit[1]
+
+
 _LSH_PLANES = 4
 
 
 def lsh_index(spark, sf_dir):
-    """Build (once per sf_dir, idempotent) the partitionBy(bucket) LSH
-    table under /tmp — same index-build/probe split as the IVF path."""
+    """The partitionBy(bucket) LSH table of ``sf_dir`` (see :func:`_index`)."""
     from .datapipe.similarity import materialize_lsh_buckets
 
-    base = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = f"/tmp/genie_spark_lsh/{base}_p{_LSH_PLANES}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        materialize_lsh_buckets(
-            _t(spark, sf_dir, "embeddings"), path, n_planes=_LSH_PLANES,
-            dim=len(ANN_QUERY),
-        )
-    return path
+    return _index(
+        spark, sf_dir, "lsh", f"p{_LSH_PLANES}", materialize_lsh_buckets,
+        n_planes=_LSH_PLANES, dim=len(ANN_QUERY),
+    )
 
 
 @_register("ann_lsh_topk", None)
@@ -2221,23 +2243,13 @@ _IVF_CELLS = 8
 _IVF_PROBE = 2
 
 
-def _ivf_index_dir(sf_dir: str) -> str:
-    base = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return f"/tmp/genie_spark_ivf/{base}_c{_IVF_CELLS}"
-
-
 def ivf_index(spark, sf_dir):
-    """Build (once per sf_dir, idempotent) the partitionBy(cell) IVF table
-    under /tmp and return (path, centroids). The _SUCCESS marker makes the
-    build amortize across processes — exactly the index-build/probe split
-    a production deployment has."""
+    """The partitionBy(cell) IVF table of ``sf_dir`` (see :func:`_index`)
+    and its hash-seeded centroids: ``(path, centroids)``."""
     from .datapipe.similarity import ivf_centroids, materialize_ivf_cells
 
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = ivf_centroids(emb, n_cells=_IVF_CELLS)
-    path = _ivf_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        materialize_ivf_cells(emb, cents, path)
+    cents = ivf_centroids(_t(spark, sf_dir, "embeddings"), n_cells=_IVF_CELLS)
+    path = _index(spark, sf_dir, "ivf", f"c{_IVF_CELLS}", materialize_ivf_cells, cents)
     return path, cents
 
 
@@ -2256,25 +2268,21 @@ def ann_ivf_topk(spark, sf_dir):
 
 
 _IVF_KM_ITERS = 2
-_KM_CENT_CACHE: Dict[str, list] = {}
 
 
 def ivf_kmeans_index(spark, sf_dir):
-    """Build (once per sf_dir) the Lloyd-refined centroid set and its
-    partitionBy(cell) table; centroids are cached driver-side so repeated
-    probes pay neither the k-means scans nor the assignment."""
+    """The Lloyd-refined centroid set (see :func:`_trained`) and its
+    partitionBy(cell) table, so repeated probes pay neither the k-means
+    scans nor the assignment: ``(path, centroids)``."""
     from .datapipe.similarity import ivf_kmeans_centroids, materialize_ivf_cells
 
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = _KM_CENT_CACHE.get(sf_dir)
-    if cents is None:
-        cents = ivf_kmeans_centroids(
-            emb, n_cells=_IVF_CELLS, n_iters=_IVF_KM_ITERS
-        )
-        _KM_CENT_CACHE[sf_dir] = cents
-    path = _ivf_index_dir(sf_dir) + f"_km{_IVF_KM_ITERS}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        materialize_ivf_cells(emb, cents, path)
+    cents = _trained(
+        spark, sf_dir, ivf_kmeans_centroids, n_cells=_IVF_CELLS, n_iters=_IVF_KM_ITERS
+    )
+    path = _index(
+        spark, sf_dir, "ivf", f"c{_IVF_CELLS}_km{_IVF_KM_ITERS}",
+        materialize_ivf_cells, cents,
+    )
     return path, cents
 
 
@@ -2303,19 +2311,13 @@ def _pq_books(spark, sf_dir):
 
 
 def pq_index(spark, sf_dir):
-    """Build (once per sf_dir, idempotent — _SUCCESS-gated like the IVF
-    index) the PQ codes table under /tmp and return (path, codebooks):
-    the corpus encode is paid at index build; every probe is literal
-    lookups over stored codes."""
+    """The PQ codes table of ``sf_dir`` (see :func:`_index`) and its
+    seeded codebooks: ``(path, codebooks)``. The corpus encode is paid at
+    index build; every probe is literal lookups over stored codes."""
     from .datapipe.similarity import materialize_pq_codes
 
     books = _pq_books(spark, sf_dir)
-    base = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = f"/tmp/genie_spark_ivf/{base}_pq{_PQ_M}x{_PQ_KSUB}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        materialize_pq_codes(
-            _t(spark, sf_dir, "embeddings"), books, path
-        )
+    path = _index(spark, sf_dir, "ivf", f"pq{_PQ_M}x{_PQ_KSUB}", materialize_pq_codes, books)
     return path, books
 
 
@@ -2336,27 +2338,22 @@ def ann_pq_topk(spark, sf_dir):
 
 
 _PQ_KM_ITERS = 1
-_PQ_KM_CACHE: Dict[str, list] = {}
 
 
 def pq_kmeans_index(spark, sf_dir):
-    """Lloyd-refined PQ index: per-subspace k-means codebooks (cached
-    driver-side — the refinement scans run once per corpus) + the
-    _SUCCESS-gated materialized codes table."""
+    """Lloyd-refined PQ index: per-subspace k-means codebooks (see
+    :func:`_trained` — the refinement scans run once per corpus) + the
+    materialized codes table: ``(path, codebooks)``."""
     from .datapipe.similarity import materialize_pq_codes, pq_kmeans_codebooks
 
-    books = _PQ_KM_CACHE.get(sf_dir)
-    if books is None:
-        books = pq_kmeans_codebooks(
-            _t(spark, sf_dir, "embeddings"),
-            m=_PQ_M, k_sub=_PQ_KSUB, n_iters=_PQ_KM_ITERS,
-        )
-        _PQ_KM_CACHE.clear()
-        _PQ_KM_CACHE[sf_dir] = books
-    base = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = f"/tmp/genie_spark_ivf/{base}_pqkm{_PQ_M}x{_PQ_KSUB}i{_PQ_KM_ITERS}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        materialize_pq_codes(_t(spark, sf_dir, "embeddings"), books, path)
+    books = _trained(
+        spark, sf_dir, pq_kmeans_codebooks,
+        m=_PQ_M, k_sub=_PQ_KSUB, n_iters=_PQ_KM_ITERS,
+    )
+    path = _index(
+        spark, sf_dir, "ivf", f"pqkm{_PQ_M}x{_PQ_KSUB}i{_PQ_KM_ITERS}",
+        materialize_pq_codes, books,
+    )
     return path, books
 
 
@@ -2389,21 +2386,17 @@ def ann_pq_rerank_topk(spark, sf_dir):
 
 
 def ivf_pq_index(spark, sf_dir):
-    """Build (once per sf_dir, _SUCCESS-gated) the composed IVF-PQ index:
+    """The composed IVF-PQ index of ``sf_dir`` (see :func:`_index`):
     coarse cell + m PQ codes assigned in one row-local scan, written
     partitionBy(cell). Returns (path, centroids, codebooks)."""
     from .datapipe.similarity import ivf_centroids, materialize_ivf_pq
 
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = ivf_centroids(emb, n_cells=_IVF_CELLS)
+    cents = ivf_centroids(_t(spark, sf_dir, "embeddings"), n_cells=_IVF_CELLS)
     books = _pq_books(spark, sf_dir)
-    base = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = (
-        f"/tmp/genie_spark_ivf/{base}_ivfpq_c{_IVF_CELLS}"
-        f"_pq{_PQ_M}x{_PQ_KSUB}"
+    path = _index(
+        spark, sf_dir, "ivf", f"ivfpq_c{_IVF_CELLS}_pq{_PQ_M}x{_PQ_KSUB}",
+        materialize_ivf_pq, cents, books,
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        materialize_ivf_pq(emb, cents, books, path)
     return path, cents, books
 
 

@@ -311,57 +311,6 @@ def simhash_table(
     )
 
 
-def simhash_neardup_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = SIMHASH_BITS,
-    max_hamming: int = 3,
-    bands: int = 4,
-) -> DataFrame:
-    """SimHash near-dups: pigeonhole blocking (hamming ≤ max_hamming with
-    `bands` > max_hamming blocks ⇒ at least one block identical) then the
-    exact hamming check via bit_count(xor). Returns (id_a, id_b, hamming)."""
-    assert bands > max_hamming, "pigeonhole requires bands > max_hamming"
-    sh = simhash_table(docs, text_col, id_col, bits)
-    band_bits = bits // bands
-    mask = (1 << band_bits) - 1
-    banded = sh.select(
-        id_col,
-        "simhash",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.shiftright(F.col("simhash"), b * band_bits)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("bkey"),
-                ),
-            )
-        ).alias("bb"),
-    ).select(id_col, "simhash", "bb.band", "bb.bkey")
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    return pairs
-
-
 def embedding_neardup_lsh_pairs(
     emb: DataFrame,
     vec_col: str = "embedding",

@@ -123,11 +123,3 @@ def minhash_perm(h: Column, a: int, b: int, c: int) -> Column:
     v1 = F.pmod(F.lit(a) * hi + F.lit(c), F.lit(MINHASH_M31))
     v2 = F.pmod(F.lit(b) * lo + F.lit(c), F.lit(MINHASH_M31))
     return v1 * F.lit(1 << 31) + v2
-
-
-def minhash_perm_sql(h_expr: str, a: int, b: int, c: int) -> str:
-    """DuckDB twin of :func:`minhash_perm`."""
-    return (
-        f"((({a} * (({h_expr}) >> 30) + {c}) % {MINHASH_M31}) * {1 << 31}"
-        f" + (({b} * (({h_expr}) & {_LO_MASK}) + {c}) % {MINHASH_M31}))"
-    )

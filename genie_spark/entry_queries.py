@@ -2134,12 +2134,6 @@ ANN_QUERY = [
 _ANN_K = 10
 
 
-def _ann_oracle():
-    from .datapipe.similarity import brute_force_topk_sql
-
-    return brute_force_topk_sql(ANN_QUERY, _ANN_K)
-
-
 @_register("ann_cosine_topk", None)
 def ann_cosine_topk(spark, sf_dir):
     from .datapipe.similarity import brute_force_topk

@@ -83,10 +83,6 @@ def split_sentences(text: str) -> List[str]:
     return out
 
 
-def extract_sentences(text: str) -> List[Tuple[int, str]]:
-    return list(enumerate(split_sentences(text)))
-
-
 def split_sentences_bounded(
     text: str, boundaries: List[Tuple[int, int]]
 ) -> List[str]:

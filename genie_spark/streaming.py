@@ -272,8 +272,8 @@ def stream_dedup_minhash(
     whole corpus per run; a continuous crawl instead wants each arriving
     document checked against everything EVER crawled. Signatures and band
     keys are computed row-local with the same Column expressions as the
-    batch path (minhash_signature_col — identical hashes, so streaming
-    and batch candidates agree); state lives per (band, band_hash) bucket
+    batch path (minhash_signature_col and banded_keys — identical
+    hashes, so streaming and batch candidates agree); state lives per (band, band_hash) bucket
     via ``applyInPandasWithState`` — the member-id list of that bucket.
     Each new document emits one (id_a, id_b) candidate row per existing
     member of any bucket it lands in; a pair colliding in several bands
@@ -290,7 +290,7 @@ def stream_dedup_minhash(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from .datapipe.dedup import minhash_signature_col, shingles_col
+    from .datapipe.dedup import banded_keys, minhash_signature_col, shingles_col
 
     if state_ttl and available_now:
         raise ValueError(
@@ -301,26 +301,9 @@ def stream_dedup_minhash(
     rows_per_band = num_hashes // bands
     docs = spark.readStream.schema(DOC_STREAM_SCHEMA).parquet(input_dir)
     sig = minhash_signature_col(shingles_col(F.col("text"), k), num_hashes)
-    banded = docs.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.md5(
-                        F.concat_ws(
-                            ",",
-                            F.transform(
-                                F.slice(sig, b * rows_per_band + 1, rows_per_band),
-                                lambda x: x.cast("string"),
-                            ),
-                        )
-                    ).alias("bkey"),
-                ),
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bkey")
+    banded = banded_keys(
+        docs.select("doc_id", sig.alias("sig")), "doc_id", bands, rows_per_band
+    )
 
     out_type = "id_a bigint, id_b bigint, band int"
     state_type = "members array<bigint>"

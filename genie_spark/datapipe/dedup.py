@@ -75,6 +75,20 @@ def minhash_signature_col(sh: Column, num_hashes: int = 16) -> Column:
     )
 
 
+def _declared_partitions(df: DataFrame) -> int:
+    """Partition count the physical plan DECLARES, without building the
+    RDD chain (``df.rdd`` on a 100-TB plan walks file listings and
+    disables AQE) and without running a job. Explicit repartitions /
+    exchanges report their count; scans and local relations report 0
+    (unknown partitioning)."""
+    try:
+        return int(
+            df._jdf.queryExecution().sparkPlan().outputPartitioning().numPartitions()
+        )
+    except Exception:  # non-classic backends: treat as unknown
+        return 0
+
+
 def spread_for_compute(docs: DataFrame, factor: int = 1) -> DataFrame:
     """Round-robin repartition to ``defaultParallelism × factor`` unless
     the plan already declares at least that partitioning. CPU-bound
@@ -82,22 +96,14 @@ def spread_for_compute(docs: DataFrame, factor: int = 1) -> DataFrame:
     track CORES, not input bytes: a single small parquet file splits into
     1-2 scan tasks (one row group = one task) and serializes the hash
     work on one core, and AQE coalesces byte-light shuffles the same way.
-    Same policy and probe as ``pipeline._declared_partitions`` for the
-    compute-bound decode stage: read the physical plan's DECLARED output
-    partitioning — a pure plan-analysis probe, no ``df.rdd`` (which walks
-    file listings and can execute stages under AQE), no job. Scans report
-    unknown (0) and get the balancing repartition — the safe default when
-    the downstream stage is compute-dominant, and the shuffle moves only
-    the rows this stage was going to read anyway, exactly once."""
-    spark = docs.sparkSession
-    target = spark.sparkContext.defaultParallelism * factor
-    try:
-        declared = int(
-            docs._jdf.queryExecution().sparkPlan().outputPartitioning().numPartitions()
-        )
-    except Exception:  # non-classic backends: treat as unknown
-        declared = 0
-    if declared < target:
+    Same policy and probe (:func:`_declared_partitions`) as
+    ``pipeline.extract_pipeline`` uses for the compute-bound decode
+    stage. Scans report unknown (0) and get the balancing repartition —
+    the safe default when the downstream stage is compute-dominant, and
+    the shuffle moves only the rows this stage was going to read anyway,
+    exactly once."""
+    target = docs.sparkSession.sparkContext.defaultParallelism * factor
+    if _declared_partitions(docs) < target:
         docs = docs.repartition(target)
     return docs
 

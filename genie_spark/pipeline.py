@@ -46,6 +46,7 @@ from pyspark.sql.types import (
 )
 
 from .constraints import TagCodes
+from .datapipe.dedup import _declared_partitions
 from .decode import DeterministicScorer, generate_for_text, top_valid_prediction
 from .extract import sentences_df
 from .tokenizer import WordTokenizer
@@ -402,20 +403,6 @@ class GenieExtractor:
                 yield out
 
         return df.mapInPandas(score, out_schema)
-
-
-def _declared_partitions(df: DataFrame) -> int:
-    """Partition count the physical plan DECLARES, without building the
-    RDD chain (``df.rdd`` on a 100-TB plan walks file listings and
-    disables AQE) and without running a job. Explicit repartitions /
-    exchanges report their count; scans and local relations report 0
-    (unknown partitioning)."""
-    try:
-        return int(
-            df._jdf.queryExecution().sparkPlan().outputPartitioning().numPartitions()
-        )
-    except Exception:  # non-classic backends: treat as unknown
-        return 0
 
 
 def extract_pipeline(

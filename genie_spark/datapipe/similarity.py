@@ -2,20 +2,29 @@
 
 Brute-force cosine top-k is the correctness baseline: one scan, row-local
 arithmetic (zip_with/aggregate — JVM codegen, no Python), then a global
-top-k (Spark's TakeOrdered — no full sort). The scale path is
-hyperplane-LSH bucketing: each vector gets a deterministic b-bit bucket;
-a query probes only its bucket (and optionally hamming-1 neighbors), so
-the scan cost drops by ~2^b while recall stays high for near-duplicate
-search. Hyperplane coefficients are seeded literals generated once (same
-constants inlined into the DuckDB oracle → bit-identical buckets).
+top-k (Spark's TakeOrdered — no full sort). Every approximate index has
+exactly one build and one probe — the index is written once and every
+query against it is partition pruning or lookups over stored columns:
 
-The IVF path splits index-build from probe: `materialize_ivf_cells`
-assigns each vector its nearest-centroid cell once and writes the corpus
-`partitionBy("cell")`; `ivf_topk_pruned` then reads only the probed cells
-via partition pruning — per-query cost is O(corpus / n_cells · n_probe),
-with the O(corpus) assignment amortized over every query against the
-index (a k-means refinement would change only the centroid list, not the
-plan shape).
+- hyperplane LSH: `materialize_lsh_buckets` writes `partitionBy("bucket")`;
+  `lsh_topk_pruned` reads the query's bucket (plus its hamming-1
+  neighbors with ``multiprobe=1``). Plane coefficients are seeded
+  literals, inlined into the DuckDB oracle too → bit-identical buckets.
+- IVF: `materialize_ivf_cells` assigns each vector its nearest centroid
+  (hash-seeded `ivf_centroids` or Lloyd-refined `ivf_kmeans_centroids`)
+  and writes `partitionBy("cell")`; `ivf_topk_pruned` reads the n_probe
+  nearest cells — per-query cost O(corpus / n_cells · n_probe).
+- PQ: `materialize_pq_codes` stores m codes per vector;
+  `pq_topk_from_codes` ranks by ADC and optionally re-ranks a pool by
+  exact cosine. IVF-PQ (`materialize_ivf_pq` + `ivf_pq_topk_pruned`)
+  composes the cell probe with the codes.
+
+Every exact stage ends in the one `_cosine_topk` tail. The DuckDB twins
+(`*_sql`) are assembled from one set of module-level fragments, so each
+cosine, seed pick, assignment and ADC chain is spelled once. The
+embedding pair operators (near-dup, hard negatives, the SemDeDup pairs
+here) share `dedup._salted_cosine_pairs`, which compares the exact cosine
+to the threshold in every engine.
 """
 
 from __future__ import annotations

@@ -378,8 +378,8 @@ def embedding_neardup_pairs(
 
 def _block_salt(emb: DataFrame, n_blocks: int) -> int:
     """Salt for a self-join over ``n_blocks`` blocks: 8× oversampled join
-    keys vs cores (guide 2.5); 1 (a no-op) once the blocks alone reach
-    8× the cores."""
+    keys vs cores; 1 (a no-op) once the blocks alone reach 8× the
+    cores."""
     cores = emb.sparkSession.sparkContext.defaultParallelism
     return max(1, -(-cores * 8 // max(1, n_blocks)))
 
@@ -400,7 +400,7 @@ def _salted_cosine_pairs(
     <name>_a, <name>_b for each carry column, cosine)``.
 
     ``salt`` splits each block's pair generation across salt×|blocks|
-    join keys (guide-standard salting: a-side keyed by a deterministic id
+    join keys (standard salting: a-side keyed by a deterministic id
     hash, b-side exploded over all salts, so every within-block pair
     still meets exactly once). The within-block dot products are the CPU
     cost of this operator, and with |blocks| (e.g. 8 IVF cells or

@@ -917,20 +917,27 @@ def ivf_pq_topk_sql(
     survivors (encoding is row-local, so codes are identical to a full-
     corpus encode), the fixed-order ADC chain, and the exact re-rank —
     fully data-derived, correct at every scale factor."""
-    sub = dim // m
-    base = f"""WITH {_seed_sql("cents", "embedding AS cvec", n_cells)},
+    head = f"""{_seed_sql("cents", "embedding AS cvec", n_cells)},
 {_assign_sql("cassign", "cents")},
 {_probe_sql(_q_vec_sql(query), "cents", n_probe)},
 surv AS (
   SELECT vec_id, embedding FROM cassign
   WHERE rnk = 1 AND cid IN (SELECT cid FROM probe)
 ),
-{_seed_sql("seeds", "list_transform(embedding, x -> x::DOUBLE) AS svec", k_sub)},
-{_pq_assign_sql("surv", m, sub)}"""
+"""
+    return _pq_seeded_sql(head, "surv", query, m, dim // m, k_sub, k, rerank)
+
+
+def _pq_seeded_sql(head, src, query, m, sub, k_sub, k, rerank) -> str:
+    """Seeded-codebook PQ over the vectors in ``src``: the seed pick, the
+    per-subspace encode, the ADC chain and the optional re-rank, after
+    the CTEs in ``head``."""
+    base = f"""WITH {head}{_seed_sql("seeds", "list_transform(embedding, x -> x::DOUBLE) AS svec", k_sub)},
+{_pq_assign_sql(src, m, sub)}"""
     adc = _adc_select_sql(
         query, sub, ["seeds"] * m, [_slice_sql(f"s{j}.svec", j, sub) for j in range(m)]
     )
-    return _pq_topk_sql(base, adc, query, k, rerank, "surv")
+    return _pq_topk_sql(base, adc, query, k, rerank, src)
 
 
 def pq_topk_sql(
@@ -945,13 +952,7 @@ def pq_topk_sql(
     :func:`pq_topk_from_codes`, fully data-derived (seed pick, per-subspace argmax
     encode, 4-term fixed-order ADC chain), so the one static oracle
     string is correct at every scale factor."""
-    sub = dim // m
-    base = f"""WITH {_seed_sql("seeds", "list_transform(embedding, x -> x::DOUBLE) AS svec", k_sub)},
-{_pq_assign_sql("embeddings", m, sub)}"""
-    adc = _adc_select_sql(
-        query, sub, ["seeds"] * m, [_slice_sql(f"s{j}.svec", j, sub) for j in range(m)]
-    )
-    return _pq_topk_sql(base, adc, query, k, rerank, "embeddings")
+    return _pq_seeded_sql("", "embeddings", query, m, dim // m, k_sub, k, rerank)
 
 
 def pq_kmeans_topk_sql(

@@ -273,8 +273,9 @@ def stream_dedup_minhash(
     document checked against everything EVER crawled. Signatures and band
     keys are computed row-local with the same Column expressions as the
     batch path (minhash_signature_col and banded_keys — identical
-    hashes, so streaming and batch candidates agree); state lives per (band, band_hash) bucket
-    via ``applyInPandasWithState`` — the member-id list of that bucket.
+    hashes, so streaming and batch candidates agree); state lives per
+    (band, band_hash) bucket via ``applyInPandasWithState`` — the
+    member-id list of that bucket.
     Each new document emits one (id_a, id_b) candidate row per existing
     member of any bucket it lands in; a pair colliding in several bands
     is emitted once per band, so readers take ``distinct()`` (same as the

@@ -1241,6 +1241,9 @@ def embedding_neardup(spark, sf_dir):
     )
 
 
+_EMB_DIM = 64
+
+
 @_register("embedding_neardup_lsh", None)
 def embedding_neardup_lsh(spark, sf_dir):
     """Corpus-safe near-dup default: hyperplane-LSH buckets as the
@@ -1250,7 +1253,7 @@ def embedding_neardup_lsh(spark, sf_dir):
 
     return embedding_neardup_lsh_pairs(
         _t(spark, sf_dir, "embeddings"), n_planes=4, threshold=0.3,
-        dim=len(ANN_QUERY),
+        dim=_EMB_DIM,
     )
 
 
@@ -1265,16 +1268,11 @@ def hard_negatives_q(spark, sf_dir):
 
     return hard_negative_pairs(
         _t(spark, sf_dir, "embeddings"), n_planes=4, threshold=0.3,
-        dim=len(ANN_QUERY),
+        dim=_EMB_DIM,
     )
 
 
-def _install_hard_negatives_oracle():
-    from .datapipe.similarity import hard_negatives_lsh_sql
-
-    ORACLES["hard_negatives"] = hard_negatives_lsh_sql(
-        n_planes=4, dim=len(ANN_QUERY), threshold=0.3
-    )
+_IVF_CELLS, _SEMDEDUP_T = 8, 0.3
 
 
 @_register("dedup_semantic", None)
@@ -1292,7 +1290,25 @@ def dedup_semantic(spark, sf_dir):
     return semantic_dedup_survivors(emb, cents, threshold=_SEMDEDUP_T)
 
 
-_SEMDEDUP_T = 0.3
+def _install_embedding_oracles():
+    from .datapipe.similarity import (
+        embedding_neardup_lsh_sql,
+        hard_negatives_lsh_sql,
+        semantic_dedup_sql,
+    )
+
+    ORACLES["embedding_neardup_lsh"] = embedding_neardup_lsh_sql(
+        n_planes=4, dim=_EMB_DIM, threshold=0.3
+    )
+    ORACLES["hard_negatives"] = hard_negatives_lsh_sql(
+        n_planes=4, dim=_EMB_DIM, threshold=0.3
+    )
+    ORACLES["dedup_semantic"] = semantic_dedup_sql(
+        n_cells=_IVF_CELLS, threshold=_SEMDEDUP_T
+    )
+
+
+_install_embedding_oracles()
 
 
 @_register("dedup_components", None)
@@ -2233,7 +2249,6 @@ def _install_recall_oracle():
 _install_recall_oracle()
 
 
-_IVF_CELLS = 8
 _IVF_PROBE = 2
 
 
@@ -2417,7 +2432,6 @@ def ann_ivf_pq_topk(spark, sf_dir):
 def _install_ann_oracles():
     from .datapipe.similarity import (
         brute_force_topk_sql,
-        embedding_neardup_lsh_sql,
         ivf_kmeans_topk_sql,
         ivf_topk_sql,
         lsh_topk_sql,
@@ -2437,9 +2451,6 @@ def _install_ann_oracles():
         ANN_QUERY, n_cells=_IVF_CELLS, k=_ANN_K, n_probe=_IVF_PROBE,
         n_iters=_IVF_KM_ITERS,
     )
-    ORACLES["embedding_neardup_lsh"] = embedding_neardup_lsh_sql(
-        n_planes=4, dim=64, threshold=0.3
-    )
     ORACLES["ann_pq_topk"] = pq_topk_sql(
         ANN_QUERY, m=_PQ_M, k_sub=_PQ_KSUB, dim=len(ANN_QUERY), k=_ANN_K
     )
@@ -2451,20 +2462,16 @@ def _install_ann_oracles():
         ANN_QUERY, m=_PQ_M, k_sub=_PQ_KSUB, dim=len(ANN_QUERY), k=_ANN_K,
         rerank=_PQ_RERANK,
     )
-    from .datapipe.similarity import ivf_pq_topk_sql, semantic_dedup_sql
+    from .datapipe.similarity import ivf_pq_topk_sql
 
     ORACLES["ann_ivf_pq_topk"] = ivf_pq_topk_sql(
         ANN_QUERY, n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
         m=_PQ_M, k_sub=_PQ_KSUB, dim=len(ANN_QUERY), k=_ANN_K,
         rerank=_PQ_RERANK,
     )
-    ORACLES["dedup_semantic"] = semantic_dedup_sql(
-        n_cells=_IVF_CELLS, threshold=_SEMDEDUP_T
-    )
 
 
 _install_ann_oracles()
-_install_hard_negatives_oracle()
 
 
 # -- text analysis ----------------------------------------------------------------

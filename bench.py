@@ -127,15 +127,6 @@ HEADLINE = [
     "dedup_minhash_lsh",
     "dedup_ngram_jaccard_dfcut",
     "dedup_simhash",
-    "ann_cosine_topk",
-    "ann_lsh_topk",
-    "ann_lsh_multiprobe_topk",
-    "ann_ivf_topk",
-    "ann_ivf_kmeans_topk",
-    "ann_pq_topk",
-    "ann_pq_kmeans_topk",
-    "ann_pq_rerank_topk",
-    "ann_recall_eval",
     "embedding_neardup_lsh",
     "lang_id",
     "quality_score",
@@ -162,7 +153,6 @@ HEADLINE = [
     "line_dedup_newline",
     "boilerplate_strip",
     "domain_blocklist",
-    "ann_ivf_pq_topk",
     "dedup_semantic",
     "dedup_components",
     "dedup_cluster_sizes",

@@ -2140,340 +2140,6 @@ def tfidf_top_terms_q(spark, sf_dir):
     )
 
 
-# -- similarity search ----------------------------------------------------------
-
-# fixed 64-dim literal query vector (independent of sf so the oracle SQL
-# is a constant string)
-ANN_QUERY = [
-    (1.0 if i % 3 == 0 else (0.5 if i % 3 == 1 else -0.25)) for i in range(64)
-]
-_ANN_K = 10
-
-
-@_register("ann_cosine_topk", None)
-def ann_cosine_topk(spark, sf_dir):
-    from .datapipe.similarity import brute_force_topk
-
-    return brute_force_topk(_t(spark, sf_dir, "embeddings"), ANN_QUERY, k=_ANN_K)
-
-
-def _index(spark, sf_dir, family, name, build, *args, **kw) -> str:
-    """Path of one materialized ANN index of ``sf_dir``,
-    ``/tmp/genie_spark_<family>/<sf basename>_<name>``. Only when its
-    _SUCCESS marker is missing does it run ``build(embeddings, *args,
-    path=path, **kw)``, so the build amortizes across queries and
-    processes — the index-build/probe split a production deployment
-    has."""
-    base = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = f"/tmp/genie_spark_{family}/{base}_{name}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        build(_t(spark, sf_dir, "embeddings"), *args, path=path, **kw)
-    return path
-
-
-_TRAINED: Dict[Callable, tuple] = {}
-
-
-def _trained(spark, sf_dir, train, **kw):
-    """Driver-side memo of ``train(embeddings, **kw)`` — an index's
-    Lloyd-refined centroids or codebooks — so repeated probes skip the
-    training scans. Holds the latest sf_dir per ``train``."""
-    hit = _TRAINED.get(train)
-    if hit is None or hit[0] != sf_dir:
-        hit = _TRAINED[train] = (sf_dir, train(_t(spark, sf_dir, "embeddings"), **kw))
-    return hit[1]
-
-
-_LSH_PLANES = 4
-
-
-def lsh_index(spark, sf_dir):
-    """The partitionBy(bucket) LSH table of ``sf_dir`` (see :func:`_index`)."""
-    from .datapipe.similarity import materialize_lsh_buckets
-
-    return _index(
-        spark, sf_dir, "lsh", f"p{_LSH_PLANES}", materialize_lsh_buckets,
-        n_planes=_LSH_PLANES, dim=len(ANN_QUERY),
-    )
-
-
-@_register("ann_lsh_topk", None)
-def ann_lsh_topk(spark, sf_dir):
-    """LSH ANN against the materialized bucket table: the probe is
-    partition pruning over 1 of 2^n_planes directories."""
-    from .datapipe.similarity import lsh_topk_pruned
-
-    return lsh_topk_pruned(
-        spark, lsh_index(spark, sf_dir), ANN_QUERY, k=_ANN_K,
-        n_planes=_LSH_PLANES,
-    )
-
-
-@_register("ann_lsh_multiprobe_topk", None)
-def ann_lsh_multiprobe_topk(spark, sf_dir):
-    """Hamming-1 multiprobe: the query bucket plus its n_planes neighbor
-    buckets — recovers near-hyperplane recall at (n_planes+1)/2^n_planes
-    of the full-scan cost."""
-    from .datapipe.similarity import lsh_topk_pruned
-
-    return lsh_topk_pruned(
-        spark, lsh_index(spark, sf_dir), ANN_QUERY, k=_ANN_K,
-        n_planes=_LSH_PLANES, multiprobe=1,
-    )
-
-
-@_register("ann_recall_eval", None)
-def ann_recall_eval(spark, sf_dir):
-    """Recall@10 of the hyperplane-LSH probe vs exact brute force over a
-    hash-drawn query panel from the corpus itself — the accuracy
-    accounting an approximate index owes its users. Ground truth is a
-    broadcast panel × corpus join; the approximate side joins on the
-    bucket key; integer-ppm recall per query
-    (datapipe/similarity.py lsh_recall_eval)."""
-    from .datapipe.similarity import lsh_recall_eval
-
-    return lsh_recall_eval(
-        _t(spark, sf_dir, "embeddings"), n_planes=_LSH_PLANES,
-        dim=len(ANN_QUERY), k=_ANN_K, query_mod=97,
-    )
-
-
-def _install_recall_oracle():
-    from .datapipe.similarity import lsh_recall_eval_sql
-
-    ORACLES["ann_recall_eval"] = lsh_recall_eval_sql(
-        n_planes=_LSH_PLANES, dim=len(ANN_QUERY), k=_ANN_K, query_mod=97
-    )
-
-
-_install_recall_oracle()
-
-
-_IVF_PROBE = 2
-
-
-def ivf_index(spark, sf_dir):
-    """The partitionBy(cell) IVF table of ``sf_dir`` (see :func:`_index`)
-    and its hash-seeded centroids: ``(path, centroids)``."""
-    from .datapipe.similarity import ivf_centroids, materialize_ivf_cells
-
-    cents = ivf_centroids(_t(spark, sf_dir, "embeddings"), n_cells=_IVF_CELLS)
-    path = _index(spark, sf_dir, "ivf", f"c{_IVF_CELLS}", materialize_ivf_cells, cents)
-    return path, cents
-
-
-@_register("ann_ivf_topk", None)
-def ann_ivf_topk(spark, sf_dir):
-    """IVF scale path: deterministic hash-sampled centroids; the corpus is
-    materialized partitionBy(cell) once, so the probe is partition pruning
-    over n_probe directories (PartitionFilters in the scan — asserted in
-    test_plans), not a full scan re-deriving assignments per query."""
-    from .datapipe.similarity import ivf_topk_pruned
-
-    path, cents = ivf_index(spark, sf_dir)
-    return ivf_topk_pruned(
-        spark, path, ANN_QUERY, cents, k=_ANN_K, n_probe=_IVF_PROBE
-    )
-
-
-_IVF_KM_ITERS = 2
-
-
-def ivf_kmeans_index(spark, sf_dir):
-    """The Lloyd-refined centroid set (see :func:`_trained`) and its
-    partitionBy(cell) table, so repeated probes pay neither the k-means
-    scans nor the assignment: ``(path, centroids)``."""
-    from .datapipe.similarity import ivf_kmeans_centroids, materialize_ivf_cells
-
-    cents = _trained(
-        spark, sf_dir, ivf_kmeans_centroids, n_cells=_IVF_CELLS, n_iters=_IVF_KM_ITERS
-    )
-    path = _index(
-        spark, sf_dir, "ivf", f"c{_IVF_CELLS}_km{_IVF_KM_ITERS}",
-        materialize_ivf_cells, cents,
-    )
-    return path, cents
-
-
-@_register("ann_ivf_kmeans_topk", None)
-def ann_ivf_kmeans_topk(spark, sf_dir):
-    """True k-means IVF: deterministic Lloyd-refined centroids (2 fixed
-    iterations, 9dp-rounded means — engine-exact), corpus materialized
-    partitionBy(cell), probe via partition pruning."""
-    from .datapipe.similarity import ivf_topk_pruned
-
-    path, cents = ivf_kmeans_index(spark, sf_dir)
-    return ivf_topk_pruned(
-        spark, path, ANN_QUERY, cents, k=_ANN_K, n_probe=_IVF_PROBE
-    )
-
-
-_PQ_M, _PQ_KSUB, _PQ_RERANK = 4, 32, 50
-
-
-def _pq_books(spark, sf_dir):
-    from .datapipe.similarity import pq_codebooks
-
-    return pq_codebooks(
-        _t(spark, sf_dir, "embeddings"), m=_PQ_M, k_sub=_PQ_KSUB
-    )
-
-
-def pq_index(spark, sf_dir):
-    """The PQ codes table of ``sf_dir`` (see :func:`_index`) and its
-    seeded codebooks: ``(path, codebooks)``. The corpus encode is paid at
-    index build; every probe is literal lookups over stored codes."""
-    from .datapipe.similarity import materialize_pq_codes
-
-    books = _pq_books(spark, sf_dir)
-    path = _index(spark, sf_dir, "ivf", f"pq{_PQ_M}x{_PQ_KSUB}", materialize_pq_codes, books)
-    return path, books
-
-
-@_register("ann_pq_topk", None)
-def ann_pq_topk(spark, sf_dir):
-    """Product-quantization ADC top-k: the memory-compression ANN tier
-    (m small codes replace the dim-float vector, ~128× smaller at
-    dim=64/m=4). Deterministic seeded codebooks, row-local encode,
-    fixed-order ADC chain, top-k via TakeOrderedAndProject. On the
-    UNSTRUCTURED synthetic embeddings any quantizer's recall degenerates
-    (same caveat as IVF — the hash gate checks engine-exactness here;
-    recall is proven on clustered vectors in
-    test_pq_rerank_recall_vs_brute)."""
-    from .datapipe.similarity import pq_topk_from_codes
-
-    path, books = pq_index(spark, sf_dir)
-    return pq_topk_from_codes(spark, path, ANN_QUERY, books, k=_ANN_K)
-
-
-_PQ_KM_ITERS = 1
-
-
-def pq_kmeans_index(spark, sf_dir):
-    """Lloyd-refined PQ index: per-subspace k-means codebooks (see
-    :func:`_trained` — the refinement scans run once per corpus) + the
-    materialized codes table: ``(path, codebooks)``."""
-    from .datapipe.similarity import materialize_pq_codes, pq_kmeans_codebooks
-
-    books = _trained(
-        spark, sf_dir, pq_kmeans_codebooks,
-        m=_PQ_M, k_sub=_PQ_KSUB, n_iters=_PQ_KM_ITERS,
-    )
-    path = _index(
-        spark, sf_dir, "ivf", f"pqkm{_PQ_M}x{_PQ_KSUB}i{_PQ_KM_ITERS}",
-        materialize_pq_codes, books,
-    )
-    return path, books
-
-
-@_register("ann_pq_kmeans_topk", None)
-def ann_pq_kmeans_topk(spark, sf_dir):
-    """True product quantization: per-subspace Lloyd-refined codebooks
-    (1 fixed iteration, 9dp-rounded means — engine-exact) + ADC over the
-    materialized codes. Refinement cuts quantization MSE ~3× on
-    clustered data and ~26% on the synthetic noise embeddings
-    (test_pq_kmeans_reduces_quantization_error); serving plan identical
-    to ann_pq_topk."""
-    from .datapipe.similarity import pq_topk_from_codes
-
-    path, books = pq_kmeans_index(spark, sf_dir)
-    return pq_topk_from_codes(spark, path, ANN_QUERY, books, k=_ANN_K)
-
-
-@_register("ann_pq_rerank_topk", None)
-def ann_pq_rerank_topk(spark, sf_dir):
-    """Two-stage PQ serving (the production shape): ADC prunes the corpus
-    to a 50-candidate pool from codes alone; exact cosine re-ranks the
-    pool only — full-precision vectors are read for 50 rows, not the
-    corpus, and quantization error stays out of the final ordering."""
-    from .datapipe.similarity import pq_topk_from_codes
-
-    path, books = pq_index(spark, sf_dir)
-    return pq_topk_from_codes(
-        spark, path, ANN_QUERY, books, k=_ANN_K, rerank=_PQ_RERANK
-    )
-
-
-def ivf_pq_index(spark, sf_dir):
-    """The composed IVF-PQ index of ``sf_dir`` (see :func:`_index`):
-    coarse cell + m PQ codes assigned in one row-local scan, written
-    partitionBy(cell). Returns (path, centroids, codebooks)."""
-    from .datapipe.similarity import ivf_centroids, materialize_ivf_pq
-
-    cents = ivf_centroids(_t(spark, sf_dir, "embeddings"), n_cells=_IVF_CELLS)
-    books = _pq_books(spark, sf_dir)
-    path = _index(
-        spark, sf_dir, "ivf", f"ivfpq_c{_IVF_CELLS}_pq{_PQ_M}x{_PQ_KSUB}",
-        materialize_ivf_pq, cents, books,
-    )
-    return path, cents, books
-
-
-@_register("ann_ivf_pq_topk", None)
-def ann_ivf_pq_topk(spark, sf_dir):
-    """IVF-PQ — the actual web-scale ANN serving shape: the coarse cell
-    probe prunes the corpus to n_probe partition directories
-    (PartitionFilters asserted in test_plans), ADC ranks the pruned rows
-    from their m stored codes (row-local literal-table lookups), and
-    exact cosine re-ranks only the 50-candidate pool. I/O is bounded by
-    the probe, memory by the codes, quantization error by the re-rank —
-    each tier verified engine-exact against the data-derived DuckDB
-    twin; recall parity with ann_pq_rerank_topk shown on the clustered
-    fixture (test_ivf_pq_recall_vs_brute)."""
-    from .datapipe.similarity import ivf_pq_topk_pruned
-
-    path, cents, books = ivf_pq_index(spark, sf_dir)
-    return ivf_pq_topk_pruned(
-        spark, path, ANN_QUERY, cents, books,
-        k=_ANN_K, n_probe=_IVF_PROBE, rerank=_PQ_RERANK,
-    )
-
-
-def _install_ann_oracles():
-    from .datapipe.similarity import (
-        brute_force_topk_sql,
-        ivf_kmeans_topk_sql,
-        ivf_topk_sql,
-        lsh_topk_sql,
-        pq_kmeans_topk_sql,
-        pq_topk_sql,
-    )
-
-    ORACLES["ann_cosine_topk"] = brute_force_topk_sql(ANN_QUERY, _ANN_K)
-    ORACLES["ann_lsh_topk"] = lsh_topk_sql(ANN_QUERY, _ANN_K, 4, 64)
-    ORACLES["ann_lsh_multiprobe_topk"] = lsh_topk_sql(
-        ANN_QUERY, _ANN_K, 4, 64, multiprobe=1
-    )
-    ORACLES["ann_ivf_topk"] = ivf_topk_sql(
-        ANN_QUERY, n_cells=_IVF_CELLS, k=_ANN_K, n_probe=_IVF_PROBE
-    )
-    ORACLES["ann_ivf_kmeans_topk"] = ivf_kmeans_topk_sql(
-        ANN_QUERY, n_cells=_IVF_CELLS, k=_ANN_K, n_probe=_IVF_PROBE,
-        n_iters=_IVF_KM_ITERS,
-    )
-    ORACLES["ann_pq_topk"] = pq_topk_sql(
-        ANN_QUERY, m=_PQ_M, k_sub=_PQ_KSUB, dim=len(ANN_QUERY), k=_ANN_K
-    )
-    ORACLES["ann_pq_kmeans_topk"] = pq_kmeans_topk_sql(
-        ANN_QUERY, m=_PQ_M, k_sub=_PQ_KSUB, dim=len(ANN_QUERY), k=_ANN_K,
-        n_iters=_PQ_KM_ITERS,
-    )
-    ORACLES["ann_pq_rerank_topk"] = pq_topk_sql(
-        ANN_QUERY, m=_PQ_M, k_sub=_PQ_KSUB, dim=len(ANN_QUERY), k=_ANN_K,
-        rerank=_PQ_RERANK,
-    )
-    from .datapipe.similarity import ivf_pq_topk_sql
-
-    ORACLES["ann_ivf_pq_topk"] = ivf_pq_topk_sql(
-        ANN_QUERY, n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
-        m=_PQ_M, k_sub=_PQ_KSUB, dim=len(ANN_QUERY), k=_ANN_K,
-        rerank=_PQ_RERANK,
-    )
-
-
-_install_ann_oracles()
-
-
 # -- text analysis ----------------------------------------------------------------
 
 def _stop_sql(lang: str) -> str:

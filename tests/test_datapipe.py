@@ -2,7 +2,6 @@
 test_oracle_parity.py — these cover properties and the non-SQL paths)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from genie_spark.datapipe.dedup import (
     exact_dedup,
@@ -10,7 +9,6 @@ from genie_spark.datapipe.dedup import (
     ngram_jaccard_pairs,
     simhash_table,
 )
-from genie_spark.datapipe.similarity import brute_force_topk
 
 
 @pytest.fixture(scope="module")
@@ -157,220 +155,6 @@ def test_quality_gate_reasons_and_pass(spark):
     assert out[1]["passed"] and out[1]["fail_reasons"] == ""
     assert not out[2]["passed"]
     assert out[2]["fail_reasons"] == "too_short;low_stopword;top_word;dup_3gram"
-
-
-def test_brute_force_vs_lsh_topk(spark, tmp_path):
-    import random
-
-    from genie_spark.datapipe.similarity import (
-        lsh_topk_pruned,
-        materialize_lsh_buckets,
-    )
-
-    rng = random.Random(9)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(200)]
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    q = rows[7][1]  # query near vector 7
-    brute = brute_force_topk(emb, q, k=5)
-    assert [r["vec_id"] for r in brute.collect()][0] == 7
-    path = str(tmp_path / "lsh")
-    materialize_lsh_buckets(emb, path, n_planes=3, dim=8)
-    lsh = lsh_topk_pruned(spark, path, q, k=5, n_planes=3)
-    got = [r["vec_id"] for r in lsh.collect()]
-    assert got and got[0] == 7  # the query's own bucket contains it
-
-
-def _clustered(spark):
-    """Clustered 16-dim corpus: 8 prototypes × 40 vectors with
-    deterministic per-vector jitter, plus the prototype function for
-    building queries. On unstructured noise (like the synthetic
-    embeddings table, mean pairwise cosine ≈ 0) ANY coarse quantizer
-    degenerates to n_probe/n_cells recall, so the ANN recall tests need
-    vectors that actually cluster."""
-    import math
-
-    dim, n_protos, per = 16, 8, 40
-
-    def proto(p):
-        return [math.sin(0.7 * p + 1.3 * d) for d in range(dim)]
-
-    rows = []
-    for p in range(n_protos):
-        base = proto(p)
-        for j in range(per):
-            jitter = [0.15 * math.sin(2.1 * j + 0.9 * d + p) for d in range(dim)]
-            rows.append((p * per + j, p, [b + e for b, e in zip(base, jitter)]))
-    emb = spark.createDataFrame(rows, "vec_id int, label int, embedding array<float>")
-    return emb, proto
-
-
-def _ivf_probe(spark, emb, q, cents, path, **kw):
-    from genie_spark.datapipe.similarity import ivf_topk_pruned, materialize_ivf_cells
-
-    materialize_ivf_cells(emb, cents, path)
-    return ivf_topk_pruned(spark, path, q, cents, **kw)
-
-
-def _pq_probe(spark, emb, q, books, path, **kw):
-    from genie_spark.datapipe.similarity import materialize_pq_codes, pq_topk_from_codes
-
-    materialize_pq_codes(emb, books, path)
-    return pq_topk_from_codes(spark, path, q, books, **kw)
-
-
-def test_ivf_topk_recall_vs_brute(spark, tmp_path):
-    """IVF with a 2-cell probe over 8 cells must recover most of the exact
-    top-k when the corpus actually clusters (:func:`_clustered`)."""
-    from genie_spark.datapipe.similarity import ivf_centroids
-
-    emb, proto = _clustered(spark)
-    q = [x + 0.05 for x in proto(3)]  # near prototype 3
-    brute = {r["vec_id"]: r["cosine"] for r in brute_force_topk(emb, q, k=10).collect()}
-    cents = ivf_centroids(emb, n_cells=8)
-    assert len(cents) == 8
-    ivf = {
-        r["vec_id"]: r["cosine"]
-        for r in _ivf_probe(
-            spark, emb, q, cents, str(tmp_path / "ivf"), k=10, n_probe=2
-        ).collect()
-    }
-    assert len(ivf) == 10
-    hits = set(ivf) & set(brute)
-    assert len(hits) >= 8, f"IVF recall too low on clustered data: {len(hits)}/10"
-    for vid in hits:
-        assert ivf[vid] == brute[vid]
-
-
-def test_pq_rerank_recall_vs_brute(spark, tmp_path):
-    """PQ (seeded codebooks, m=4) + ADC pool + exact re-rank must recover
-    most of the exact top-k on clustered vectors (same constructed-corpus
-    methodology as the IVF recall test — on unstructured noise ANY
-    quantizer degenerates). Also: the re-ranked cosines must EQUAL the
-    brute-force cosines for the common ids (the re-rank stage is exact)."""
-    from genie_spark.datapipe.similarity import pq_codebooks
-
-    emb, proto = _clustered(spark)
-    q = [x + 0.05 for x in proto(3)]
-    brute = {r["vec_id"]: r["cosine"] for r in brute_force_topk(emb, q, k=10).collect()}
-    books = pq_codebooks(emb, m=4, k_sub=16)
-    rr = {
-        r["vec_id"]: r["cosine"]
-        for r in _pq_probe(
-            spark, emb, q, books, str(tmp_path / "pq"), k=10, rerank=50
-        ).collect()
-    }
-    hits = set(rr) & set(brute)
-    assert len(hits) >= 8, f"PQ+rerank recall too low on clustered data: {len(hits)}/10"
-    for vid in hits:
-        assert rr[vid] == brute[vid], "re-rank stage must be exact"
-
-
-def test_ivf_pq_recall_vs_brute(spark, tmp_path):
-    """The composed IVF-PQ tier (coarse 2-of-8-cell probe + ADC over PQ
-    codes + exact re-rank) must match the recall of the pure PQ+rerank
-    path on the clustered fixture — the cell pruning may only drop
-    vectors the coarse quantizer scatters, and with clustered data the
-    query's neighbors share its cells. Re-ranked cosines must equal
-    brute-force for the common ids (the re-rank stage is exact)."""
-    from genie_spark.datapipe.similarity import (
-        ivf_centroids,
-        ivf_pq_topk_pruned,
-        materialize_ivf_pq,
-        pq_codebooks,
-    )
-
-    emb, proto = _clustered(spark)
-    q = [x + 0.05 for x in proto(3)]
-    brute = {r["vec_id"]: r["cosine"] for r in brute_force_topk(emb, q, k=10).collect()}
-    cents = ivf_centroids(emb, n_cells=8)
-    books = pq_codebooks(emb, m=4, k_sub=16)
-    pq_hits = set(
-        r["vec_id"]
-        for r in _pq_probe(
-            spark, emb, q, books, str(tmp_path / "pq"), k=10, rerank=50
-        ).collect()
-    ) & set(brute)
-    path = str(tmp_path / "ivfpq")
-    materialize_ivf_pq(emb, cents, books, path)
-    got = {
-        r["vec_id"]: r["cosine"]
-        for r in ivf_pq_topk_pruned(
-            spark, path, q, cents, books, k=10, n_probe=2, rerank=50
-        ).collect()
-    }
-    hits = set(got) & set(brute)
-    assert len(hits) >= len(pq_hits), (
-        f"IVF-PQ recall {len(hits)}/10 below PQ+rerank {len(pq_hits)}/10"
-    )
-    for vid in hits:
-        assert got[vid] == brute[vid], "re-rank stage must be exact"
-
-
-def test_pq_kmeans_reduces_quantization_error(spark):
-    """Per-subspace Lloyd refinement must strictly reduce the mean
-    quantization error (‖x − decode(encode(x))‖²) vs the seeded
-    codebooks — the metric the refinement optimizes (ADC top-k ordering
-    on tightly clustered corpora is noise-dominated either way; serving
-    quality comes from the exact re-rank stage)."""
-    from genie_spark.datapipe.similarity import (
-        arr2_lit,
-        pq_code_cols,
-        pq_codebooks,
-        pq_kmeans_codebooks,
-    )
-
-    emb, _ = _clustered(spark)
-
-    def mse(books):
-        sub = len(books[0][0])
-        codes = pq_code_cols(F.col("embedding"), books)
-        err = None
-        for j, c in enumerate(codes):
-            w = F.element_at(arr2_lit(books[j]), c + 1)
-            sl = F.slice("embedding", j * sub + 1, sub)
-            e = F.aggregate(
-                F.zip_with(
-                    sl, w,
-                    lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            err = e if err is None else err + e
-        return emb.select(F.avg(err)).collect()[0][0]
-
-    seeded = mse(pq_codebooks(emb, m=4, k_sub=16))
-    one = mse(pq_kmeans_codebooks(emb, m=4, k_sub=16, n_iters=1))
-    two = mse(pq_kmeans_codebooks(emb, m=4, k_sub=16, n_iters=2))
-    # measured: 0.583 -> 0.176 -> 0.104; assert with headroom
-    assert one < seeded * 0.6, (seeded, one)
-    assert two < one, (one, two)
-
-
-def test_ivf_kmeans_refinement_on_clustered_data(spark, tmp_path):
-    """Lloyd refinement on clustered vectors (:func:`_clustered` —
-    unstructured noise degenerates ANY coarse quantizer to
-    n_probe/n_cells recall, so clusters are the only meaningful
-    testbed): refined centroids are deterministic, differ from the raw
-    seeds, and keep recall high."""
-    from genie_spark.datapipe.similarity import ivf_centroids, ivf_kmeans_centroids
-
-    emb, proto = _clustered(spark)
-    seeds = ivf_centroids(emb, n_cells=8)
-    km = ivf_kmeans_centroids(emb, n_cells=8, n_iters=2)
-    km2 = ivf_kmeans_centroids(emb, n_cells=8, n_iters=2)
-    assert km == km2  # deterministic across invocations
-    assert km != seeds  # the refinement actually moved centroids
-
-    q = [x + 0.05 for x in proto(3)]
-    brute = {r["vec_id"] for r in brute_force_topk(emb, q, k=10).collect()}
-    km_hits = {
-        r["vec_id"]
-        for r in _ivf_probe(
-            spark, emb, q, km, str(tmp_path / "ivfkm"), k=10, n_probe=2
-        ).collect()
-    }
-    assert len(km_hits & brute) >= 8, f"k-means IVF recall: {len(km_hits & brute)}/10"
 
 
 def test_neardup_threshold_boundary_matches_oracles(spark):

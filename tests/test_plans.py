@@ -231,67 +231,6 @@ def test_quality_gate_single_scan_no_shuffle(spark):
     assert plan.count("Scan parquet") == 1
 
 
-def test_topk_no_global_sort(spark):
-    """Brute-force ANN top-k must use TakeOrderedAndProject, not a full
-    global Sort."""
-    import genie_spark.entry_queries as eq
-
-    plan = _plan(eq.QUERIES["ann_cosine_topk"](spark, SF_DIR))
-    assert "TakeOrderedAndProject" in plan
-
-
-def test_pq_adc_no_global_sort(spark):
-    """PQ ADC selection must be row-local encode + TakeOrderedAndProject
-    over the codes — no full corpus sort, no shuffle before the top-k."""
-    import genie_spark.entry_queries as eq
-
-    plan = _plan(eq.QUERIES["ann_pq_topk"](spark, SF_DIR))
-    assert "TakeOrderedAndProject" in plan
-
-
-def test_ivf_probe_prunes_partitions(spark):
-    """ann_ivf_topk must probe a materialized partitionBy(cell) table with
-    PartitionFilters on `cell` — not re-derive assignments over the full
-    corpus per query."""
-    import genie_spark.entry_queries as eq
-
-    df = eq.QUERIES["ann_ivf_topk"](spark, SF_DIR)
-    plan = _plan(df)
-    # the scan carries a partition filter on the cell column...
-    assert "PartitionFilters: [" in plan
-    pf = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
-    assert "cell" in pf and pf.strip() != ""
-    # ...and no centroid-cosine assignment appears in the probe plan
-    assert "array_max" not in plan
-
-
-def test_ivf_pq_probe_prunes_partitions(spark):
-    """ann_ivf_pq_topk probes the composed index: PartitionFilters on
-    `cell` (coarse probe), no per-row centroid or code assignment in the
-    serving plan (codes are stored), and the ADC pool selection is
-    TakeOrderedAndProject — no global sort."""
-    import genie_spark.entry_queries as eq
-
-    plan = _plan(eq.QUERIES["ann_ivf_pq_topk"](spark, SF_DIR))
-    assert "PartitionFilters: [" in plan
-    pf = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
-    assert "cell" in pf and pf.strip() != ""
-    assert "array_max" not in plan  # no inline assignment at probe time
-    assert "TakeOrderedAndProject" in plan
-
-
-def test_lsh_probe_prunes_partitions(spark):
-    """ann_lsh_topk must probe a materialized partitionBy(bucket) table
-    with PartitionFilters on `bucket` — same index-build/probe split as
-    the IVF path."""
-    import genie_spark.entry_queries as eq
-
-    plan = _plan(eq.QUERIES["ann_lsh_topk"](spark, SF_DIR))
-    assert "PartitionFilters: [" in plan
-    pf = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
-    assert "bucket" in pf and pf.strip() != ""
-
-
 def test_lm_surprisal_broadcasts_counts(spark):
     """The vocabulary count table must broadcast; the corpus token
     stream must never shuffle for the join (only the groupBy back to

@@ -207,12 +207,9 @@ HEADLINE = [
     "bpe_merges",
     "bpe_encode_stats",
     "sketch_distinct_by_source",
-    "bm25_topk",
-    "phrase_search",
     "sketch_quantiles_by_source",
     "dedup_jaccard_prefix",
     "dedup_tfidf_cosine",
-    "retrieval_rrf",
     "length_outliers",
     "kg_bgp_match",
     "kg_bgp_optional",
@@ -221,7 +218,6 @@ HEADLINE = [
     "pack_sequences",
     "dedup_incremental",
     "auc_eval",
-    "retrieval_quality",
     "kneser_ney_bigram",
     "leakage_safe_split",
     "classifier_report",

@@ -692,251 +692,6 @@ def collocation_lift(
     return out.orderBy(F.desc("lift_ppm"), F.asc("bigram")).limit(top_n)
 
 
-def bm25_topk(
-    docs: DataFrame,
-    queries: DataFrame,
-    top_k: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    qid_col: str = "qid",
-    qtext_col: str = "qtext",
-) -> DataFrame:
-    """BM25 retrieval (Robertson-Sparck Jones) for a query panel, made
-    integer-exact: k1 = 6/5 and b = 3/4 are kept RATIONAL and the
-    per-term score is cleared of denominators::
-
-        score_t = ridf * 44 * tf * avgdl // (20*avgdl*tf + 6*avgdl + 18*dl)
-
-    with ``ridf = N*1e6 // df`` standing in for the log IDF (log is
-    engine-divergent float; the linear inverse-df weight is the same
-    monotone rarity signal — documented deviation). ``avgdl`` is the
-    integer mean doc length. Returns the top ``top_k`` docs per query
-    by (score desc, doc_id asc): ``(qid, doc_id, score_ppm, rank)``.
-    ``ridf`` is saturated at 1e9 (terms rarer than 1-in-1000 docs score
-    as equally rare) so the numerator stays inside signed-64 at any
-    corpus size under ANSI mode.
-
-    Scale shape: postings (term, doc, tf) are ONE partial-agg groupBy
-    over the ONE corpus explosion; doc lengths are a second partial
-    agg over the postings (never a second scan); document frequencies
-    are computed only for the panel's terms (a full-vocabulary df
-    broadcast would be billions of rows at web scale — the semi-join
-    restriction keeps the broadcast panel-sized); the query panel is
-    broadcast onto the postings so the fact side never shuffles on
-    query content; per-query top-k is a qid-keyed window over only
-    the matching postings."""
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), " "),
-                lambda x: x != F.lit(""),
-            )
-        ).alias("t"),
-    )
-    postings = toks.groupBy("t", "doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("tf")
-    )
-    dl = postings.groupBy("doc_id").agg(
-        F.sum("tf").cast("long").alias("dl")
-    )
-    stats = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs")).crossJoin(
-        dl.agg(F.sum("dl").cast("long").alias("n_toks"))
-    ).select("n_docs", F.expr("n_toks div n_docs").alias("avgdl"))
-    qt = queries.select(
-        F.col(qid_col).alias("qid"),
-        F.explode(
-            F.array_distinct(
-                F.filter(
-                    F.split(F.lower(F.col(qtext_col)), " "),
-                    lambda x: x != F.lit(""),
-                )
-            )
-        ).alias("t"),
-    )
-    df_q = postings.join(
-        F.broadcast(qt.select("t").distinct()), "t", "left_semi"
-    ).groupBy("t").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    scored = (
-        postings.join(F.broadcast(qt), "t")
-        .join(dl, "doc_id")
-        .join(F.broadcast(df_q), "t")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "qid",
-            "doc_id",
-            F.expr(
-                "(least((n_docs * 1000000L) div df, 1000000000L)"
-                " * 44L * tf * avgdl)"
-                " div (20L * avgdl * tf + 6L * avgdl + 18L * dl)"
-            ).alias("s"),
-        )
-        .groupBy("qid", "doc_id")
-        .agg(F.sum("s").cast("long").alias("score_ppm"))
-    )
-    from pyspark.sql import Window
-
-    win = Window.partitionBy("qid").orderBy(
-        F.desc("score_ppm"), F.asc("doc_id")
-    )
-    return (
-        scored.select(
-            "qid", "doc_id", "score_ppm", F.row_number().over(win).alias("rank")
-        )
-        .filter(F.col("rank") <= top_k)
-    )
-
-
-def phrase_search(
-    docs: DataFrame,
-    phrases: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    phrase_col: str = "phrase",
-) -> DataFrame:
-    """Exact 2-gram phrase search through a positional inverted index.
-    ``phrases`` is a panel of space-separated two-word phrases; returns
-    one row per phrase: ``(phrase, n_docs, n_occurrences)`` — documents
-    containing the exact adjacent pair, and total adjacent occurrences.
-
-    Scale shape: positional postings (doc_id, pos, token) come from ONE
-    posexplode of the corpus; both sides of the adjacency self-join are
-    first restricted to panel terms by a broadcast semi-join (only
-    panel-term postings ever shuffle — the corpus-sized posting list is
-    pruned before the exchange); adjacency is a pure equi-join on
-    (doc_id, next_pos, token) so Spark can hash/sort-merge it without
-    range logic; the final per-phrase aggregate is partial-aggregatable."""
-    wq = F.filter(
-        F.split(F.lower(F.col(text_col)), " "), lambda x: x != F.lit("")
-    )
-    post = docs.select(
-        F.col(id_col).alias("doc_id"), F.posexplode(wq).alias("pos", "t")
-    )
-    pp = phrases.select(
-        F.col(phrase_col).alias("phrase"),
-        F.split(F.lower(F.col(phrase_col)), " ").alias("pw"),
-    ).select(
-        "phrase",
-        F.col("pw").getItem(0).alias("w1"),
-        F.col("pw").getItem(1).alias("w2"),
-    ).distinct()
-    terms = pp.select(F.col("w1").alias("t")).union(
-        pp.select(F.col("w2").alias("t"))
-    ).distinct()
-    post_p = post.join(F.broadcast(terms), "t", "left_semi")
-    left = (
-        post_p.join(F.broadcast(pp), post_p["t"] == pp["w1"])
-        .select(
-            "phrase", "w2", "doc_id", (F.col("pos") + 1).alias("pos2")
-        )
-    )
-    hits = left.join(
-        post_p.select(
-            F.col("doc_id").alias("doc_id"),
-            F.col("pos").alias("pos2"),
-            F.col("t").alias("w2"),
-        ),
-        ["doc_id", "pos2", "w2"],
-    )
-    return hits.groupBy("phrase").agg(
-        F.count_distinct("doc_id").cast("long").alias("n_docs"),
-        F.count(F.lit(1)).cast("long").alias("n_occurrences"),
-    )
-
-
-def coverage_topk(
-    docs: DataFrame,
-    queries: DataFrame,
-    top_k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    qid_col: str = "qid",
-    qtext_col: str = "qtext",
-) -> DataFrame:
-    """Term-coverage ranking: docs ranked per query by how many DISTINCT
-    query terms they contain (ties -> doc_id asc). The blunt recall-
-    oriented counterpart to BM25 for rank fusion. Same scale shape:
-    distinct (doc, term) pairs from one explosion, panel broadcast onto
-    them, per-query window over matches only."""
-    from pyspark.sql import Window
-
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.array_distinct(
-                F.filter(
-                    F.split(F.lower(F.col(text_col)), " "),
-                    lambda x: x != F.lit(""),
-                )
-            )
-        ).alias("t"),
-    )
-    qt = queries.select(
-        F.col(qid_col).alias("qid"),
-        F.explode(
-            F.array_distinct(
-                F.filter(
-                    F.split(F.lower(F.col(qtext_col)), " "),
-                    lambda x: x != F.lit(""),
-                )
-            )
-        ).alias("t"),
-    )
-    hits = (
-        toks.join(F.broadcast(qt), "t")
-        .groupBy("qid", "doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_hit"))
-    )
-    win = Window.partitionBy("qid").orderBy(F.desc("n_hit"), F.asc("doc_id"))
-    return hits.select(
-        "qid", "doc_id", "n_hit", F.row_number().over(win).alias("rank")
-    ).filter(F.col("rank") <= top_k)
-
-
-def rrf_fuse(
-    ranked_a: DataFrame,
-    ranked_b: DataFrame,
-    top_k: int = 5,
-    k: int = 60,
-) -> DataFrame:
-    """Reciprocal-rank fusion (Cormack et al., SIGIR'09) of two ranked
-    lists, integer-exact: contribution = ``1e6 div (k + rank)``, absent
-    from a list = 0. Inputs need (qid, doc_id, rank). Returns the fused
-    top ``top_k`` per query: (qid, doc_id, rrf_ppm, rank). Row-local
-    arithmetic over two already-tiny top-k tables + one qid-keyed
-    window — fusion cost is panel-sized, never corpus-sized."""
-    from pyspark.sql import Window
-
-    ka = int(k)
-    a = ranked_a.select(
-        "qid",
-        "doc_id",
-        F.expr(f"1000000L div ({ka}L + rank)").alias("c_a"),
-    )
-    b = ranked_b.select(
-        "qid",
-        "doc_id",
-        F.expr(f"1000000L div ({ka}L + rank)").alias("c_b"),
-    )
-    fused = (
-        a.join(b, ["qid", "doc_id"], "full_outer")
-        .select(
-            "qid",
-            "doc_id",
-            (
-                F.coalesce(F.col("c_a"), F.lit(0).cast("long"))
-                + F.coalesce(F.col("c_b"), F.lit(0).cast("long"))
-            ).alias("rrf_ppm"),
-        )
-    )
-    win = Window.partitionBy("qid").orderBy(
-        F.desc("rrf_ppm"), F.asc("doc_id")
-    )
-    return fused.select(
-        "qid", "doc_id", "rrf_ppm", F.row_number().over(win).alias("rank")
-    ).filter(F.col("rank") <= top_k)
-
-
 def length_outliers(
     docs: DataFrame,
     value_col: str = "n_chars",
@@ -978,134 +733,6 @@ def length_outliers(
             )
         )
         .select(group_col, id_col, "value", "mean", "var")
-    )
-
-
-# DCG rank discounts as integer ppm constants: disc(r) = round(1e6 /
-# log2(r + 1)). Computed ONCE here in Python and embedded as literals in
-# BOTH the Spark plan and the DuckDB oracle, so the two engines share the
-# exact same integers by construction (no cross-engine log() divergence).
-NDCG_DISC_PPM = [round(1_000_000 / __import__("math").log2(r + 1))
-                 for r in range(1, 11)]
-# ideal-DCG prefix sums: IDCG for a query with j relevant docs (capped
-# at the top-10 evaluation depth) is NDCG_IDCG_PPM[min(j, 10)]
-NDCG_IDCG_PPM = [0]
-for _d in NDCG_DISC_PPM:
-    NDCG_IDCG_PPM.append(NDCG_IDCG_PPM[-1] + _d)
-del _d
-
-
-def conjunctive_matches(
-    docs: DataFrame,
-    queries: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    qid_col: str = "qid",
-    qtext_col: str = "qtext",
-) -> DataFrame:
-    """Boolean conjunctive (AND) retrieval: (qid, doc_id) pairs where the
-    document contains EVERY distinct query term — the classic exact-match
-    ground truth used as qrels for ranking evaluation when no human
-    judgments exist. Same scale shape as bm25_topk: distinct (doc, term)
-    pairs come from ONE corpus explosion, the panel's terms broadcast
-    onto them (the corpus never shuffles on query content), and the
-    all-terms test is a panel-keyed count-distinct compared against the
-    broadcast per-query term count."""
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.array_distinct(
-                F.filter(
-                    F.split(F.lower(F.col(text_col)), " "),
-                    lambda x: x != F.lit(""),
-                )
-            )
-        ).alias("t"),
-    )
-    qt = queries.select(
-        F.col(qid_col).alias("qid"),
-        F.explode(
-            F.array_distinct(
-                F.filter(
-                    F.split(F.lower(F.col(qtext_col)), " "),
-                    lambda x: x != F.lit(""),
-                )
-            )
-        ).alias("t"),
-    )
-    nq = qt.groupBy("qid").agg(
-        F.count(F.lit(1)).cast("long").alias("n_terms")
-    )
-    return (
-        toks.join(F.broadcast(qt), "t")
-        .groupBy("qid", "doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_hit"))
-        .join(F.broadcast(nq), "qid")
-        .filter(F.col("n_hit") == F.col("n_terms"))
-        .select("qid", "doc_id")
-    )
-
-
-def retrieval_quality(
-    ranking: DataFrame,
-    qrels: DataFrame,
-    k: int = 10,
-    cut: int = 5,
-) -> DataFrame:
-    """Ranking-quality evaluation of a retrieval run against binary
-    qrels, integer-exact in ppm: per query reciprocal rank of the first
-    relevant hit (MRR numerator), precision@``cut``, recall@``k``, and
-    nDCG@``k`` with the shared NDCG_DISC_PPM integer discount table
-    (identical literals in the DuckDB twin, so no float log enters
-    either engine). Inputs: ``ranking`` (qid, doc_id, rank with rank
-    1-based) and ``qrels`` (qid, doc_id). Returns one row per query:
-    (qid, n_rel, rr_ppm, p_at_cut_ppm, recall_ppm, ndcg_ppm).
-
-    Scale shape: everything here is panel-sized — the ranking is
-    panel × k rows and qrels is bounded by the conjunctive-match
-    candidates; the single groupBy shuffles only those. The corpus-sized
-    work happened upstream in the ranker/qrels generation."""
-    if k > len(NDCG_DISC_PPM):
-        raise ValueError(f"k <= {len(NDCG_DISC_PPM)} (discount table)")
-    disc = ", ".join(f"{d}L" for d in NDCG_DISC_PPM[:k])
-    idcg = ", ".join(f"{s}L" for s in NDCG_IDCG_PPM[1 : k + 1])
-    nrel = qrels.groupBy("qid").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rel")
-    )
-    j = ranking.filter(F.col("rank") <= k).join(
-        qrels.select("qid", "doc_id", F.lit(1).cast("long").alias("rel")),
-        ["qid", "doc_id"],
-        "left",
-    ).select(
-        "qid",
-        F.col("rank").cast("long").alias("rank"),
-        F.coalesce(F.col("rel"), F.lit(0).cast("long")).alias("rel"),
-    )
-    per = j.groupBy("qid").agg(
-        F.min(F.when(F.col("rel") == 1, F.col("rank"))).alias("fr"),
-        F.sum(
-            F.when(F.col("rank") <= cut, F.col("rel")).otherwise(F.lit(0))
-        ).cast("long").alias(f"hits{cut}"),
-        F.sum("rel").cast("long").alias("hitsk"),
-        F.sum(
-            F.col("rel")
-            * F.expr(f"element_at(array({disc}), cast(rank as int))")
-        ).cast("long").alias("dcg"),
-    )
-    return per.join(nrel, "qid").select(
-        "qid",
-        "n_rel",
-        F.coalesce(
-            F.expr("1000000L div fr"), F.lit(0).cast("long")
-        ).alias("rr_ppm"),
-        F.expr(f"(hits{cut} * 1000000L) div {int(cut)}L").alias(
-            f"p_at_{cut}_ppm"
-        ),
-        F.expr("(hitsk * 1000000L) div n_rel").alias("recall_ppm"),
-        F.expr(
-            f"(dcg * 1000000L) div element_at(array({idcg}),"
-            f" cast(least(n_rel, {int(k)}L) as int))"
-        ).alias("ndcg_ppm"),
     )
 
 

@@ -5837,120 +5837,6 @@ def sketch_distinct_by_source_q(spark, sf_dir):
 ORACLES["sketch_distinct_by_source"] = _sketch_distinct_by_source_sql()
 
 
-# -- BM25 retrieval -----------------------------------------------------------
-
-# CTE chain shared by the BM25 oracle and the RRF-fusion oracle: defines
-# post/dl/st/qp/qt/dfr/sc/rk (rk = per-query BM25 ranking).
-_BM25_CHAIN = """tw AS (
-  SELECT doc_id,
-         unnest(list_filter(string_split(lower(text), ' '), t -> t <> '')) AS t
-  FROM documents),
-post AS (SELECT t, doc_id, count(*)::BIGINT AS tf FROM tw GROUP BY 1, 2),
-dl AS (SELECT doc_id, sum(tf)::BIGINT AS dl FROM post GROUP BY 1),
-st AS (SELECT (SELECT count(*) FROM documents)::BIGINT AS n_docs,
-              ((SELECT sum(dl) FROM dl)
-               // (SELECT count(*) FROM documents))::BIGINT AS avgdl),
-qp AS (SELECT doc_id AS qid,
-              array_to_string(
-                (list_filter(string_split(lower(text), ' '),
-                             t -> t <> ''))[1:3], ' ') AS qtext
-       FROM documents WHERE doc_id % 50 = 7),
-qt AS (SELECT DISTINCT qid, t FROM (
-         SELECT qid,
-                unnest(list_filter(string_split(lower(qtext), ' '),
-                                   t -> t <> '')) AS t
-         FROM qp)),
-dfr AS (SELECT t, count(*)::BIGINT AS df FROM post
-        WHERE t IN (SELECT t FROM qt) GROUP BY 1),
-sc AS (SELECT qt.qid, post.doc_id,
-              sum((least((st.n_docs * 1000000) // dfr.df, 1000000000)
-                   * 44 * post.tf * st.avgdl)
-                  // (20 * st.avgdl * post.tf + 6 * st.avgdl
-                      + 18 * dl.dl))::BIGINT AS score_ppm
-       FROM post JOIN qt ON qt.t = post.t
-       JOIN dl ON dl.doc_id = post.doc_id
-       JOIN dfr ON dfr.t = post.t
-       CROSS JOIN st
-       GROUP BY 1, 2),
-rk AS (SELECT qid, doc_id, score_ppm,
-              row_number() OVER (PARTITION BY qid
-                                 ORDER BY score_ppm DESC, doc_id ASC) AS rank
-       FROM sc)"""
-
-_BM25_SQL = f"""
-WITH {_BM25_CHAIN}
-SELECT qid, doc_id, score_ppm, rank FROM rk WHERE rank <= 5
-"""
-
-
-@_register("bm25_topk", _BM25_SQL)
-def bm25_topk_q(spark, sf_dir):
-    """BM25 top-5 retrieval over a deterministic query panel (every
-    50th doc's first 3 tokens — self-contained, no external data).
-    Integer-exact scoring: rational k1=6/5, b=3/4 cleared of
-    denominators, inverse-df rarity weight saturated at 1e9 in place
-    of log-IDF (log is engine-divergent float; documented deviation).
-    Postings/doc-length/df all derive from ONE corpus explosion; df is
-    computed only for panel terms so every dimension broadcast stays
-    panel-sized at web scale (datapipe/textstats.py bm25_topk)."""
-    from .datapipe.textstats import bm25_topk
-
-    docs = _t(spark, sf_dir, "documents")
-    wq = F.filter(
-        F.split(F.lower(F.col("text")), " "), lambda x: x != F.lit("")
-    )
-    panel = docs.filter(F.col("doc_id") % 50 == 7).select(
-        F.col("doc_id").alias("qid"),
-        F.array_join(F.slice(wq, 1, 3), " ").alias("qtext"),
-    )
-    return bm25_topk(docs, panel, top_k=5)
-
-
-_PHRASE_SQL = """
-WITH wf AS (
-  SELECT doc_id,
-         list_filter(string_split(lower(text), ' '), t -> t <> '') AS w
-  FROM documents),
-pox AS (SELECT doc_id,
-               unnest(list_transform(range(1, len(w) + 1),
-                                     i -> {'pos': i - 1, 't': w[i]})) AS p
-        FROM wf),
-po AS (SELECT doc_id, p.pos AS pos, p.t AS t FROM pox),
-qp AS (SELECT DISTINCT w[1] || ' ' || w[2] AS phrase, w[1] AS w1, w[2] AS w2
-       FROM wf WHERE doc_id % 101 = 13 AND len(w) >= 2),
-lft AS (SELECT qp.phrase, qp.w2, po.doc_id, po.pos + 1 AS pos2
-        FROM po JOIN qp ON po.t = qp.w1),
-hits AS (SELECT lft.phrase, lft.doc_id
-         FROM lft JOIN po b
-           ON b.doc_id = lft.doc_id AND b.pos = lft.pos2 AND b.t = lft.w2)
-SELECT phrase, count(DISTINCT doc_id)::BIGINT AS n_docs,
-       count(*)::BIGINT AS n_occurrences
-FROM hits GROUP BY phrase
-"""
-
-
-@_register("phrase_search", _PHRASE_SQL)
-def phrase_search_q(spark, sf_dir):
-    """Exact 2-gram phrase search over a corpus-derived panel (every
-    101st doc's leading bigram): positional inverted index from ONE
-    posexplode, both adjacency sides pruned to panel terms by broadcast
-    semi-join BEFORE any shuffle, adjacency as a pure equi-join on
-    (doc_id, next_pos, token) (datapipe/textstats.py phrase_search)."""
-    from .datapipe.textstats import phrase_search
-
-    docs = _t(spark, sf_dir, "documents")
-    wq = F.filter(
-        F.split(F.lower(F.col("text")), " "), lambda x: x != F.lit("")
-    )
-    panel = (
-        docs.filter(F.col("doc_id") % 101 == 13)
-        .select(wq.alias("w"))
-        .filter(F.size("w") >= 2)
-        .select(F.array_join(F.slice("w", 1, 2), " ").alias("phrase"))
-    )
-    return phrase_search(docs, panel)
-
-
 def _hist_quantiles_sql() -> str:
     from .datapipe.sketches import histogram_quantiles_grouped_sql
 
@@ -6103,121 +5989,6 @@ def dedup_tfidf_cosine_q(spark, sf_dir):
     from .datapipe.dedup import tfidf_cosine_pairs
 
     return tfidf_cosine_pairs(_t(spark, sf_dir, "documents"), shingle_k=3)
-
-
-_RRF_SQL = f"""
-WITH {_BM25_CHAIN},
-bm AS (SELECT qid, doc_id, rank FROM rk WHERE rank <= 10),
-tdx AS (SELECT DISTINCT doc_id, t FROM tw),
-cov AS (SELECT qt.qid, tdx.doc_id, count(*)::BIGINT AS n_hit
-        FROM tdx JOIN qt ON qt.t = tdx.t GROUP BY 1, 2),
-cvr AS (SELECT qid, doc_id,
-               row_number() OVER (PARTITION BY qid
-                                  ORDER BY n_hit DESC, doc_id ASC) AS rank
-        FROM cov),
-cv AS (SELECT qid, doc_id, rank FROM cvr WHERE rank <= 10),
-fused AS (
-  SELECT coalesce(bm.qid, cv.qid) AS qid,
-         coalesce(bm.doc_id, cv.doc_id) AS doc_id,
-         (coalesce(1000000 // (60 + bm.rank), 0)
-          + coalesce(1000000 // (60 + cv.rank), 0))::BIGINT AS rrf_ppm
-  FROM bm FULL OUTER JOIN cv
-    ON bm.qid = cv.qid AND bm.doc_id = cv.doc_id),
-frk AS (SELECT qid, doc_id, rrf_ppm,
-               row_number() OVER (PARTITION BY qid
-                                  ORDER BY rrf_ppm DESC, doc_id ASC) AS rank
-        FROM fused)
-SELECT qid, doc_id, rrf_ppm, rank FROM frk WHERE rank <= 5
-"""
-
-
-@_register("retrieval_rrf", _RRF_SQL)
-def retrieval_rrf_q(spark, sf_dir):
-    """Reciprocal-rank fusion of two retrieval signals over the shared
-    query panel: BM25 top-10 (precision-oriented) + distinct-term
-    coverage top-10 (recall-oriented), fused as 1e6 div (60+rank) with
-    absent-from-list = 0 — the standard integer-exact RRF. Fusion
-    itself is panel-sized row-local math + one qid window
-    (datapipe/textstats.py rrf_fuse, coverage_topk, bm25_topk)."""
-    from .datapipe.textstats import bm25_topk, coverage_topk, rrf_fuse
-
-    docs = _t(spark, sf_dir, "documents")
-    wq = F.filter(
-        F.split(F.lower(F.col("text")), " "), lambda x: x != F.lit("")
-    )
-    panel = docs.filter(F.col("doc_id") % 50 == 7).select(
-        F.col("doc_id").alias("qid"),
-        F.array_join(F.slice(wq, 1, 3), " ").alias("qtext"),
-    )
-    bm = bm25_topk(docs, panel, top_k=10).select("qid", "doc_id", "rank")
-    cv = coverage_topk(docs, panel, top_k=10).select("qid", "doc_id", "rank")
-    return rrf_fuse(bm, cv, top_k=5, k=60)
-
-
-def _retrieval_quality_sql() -> str:
-    # the discount/IDCG literals come from the SAME Python constants the
-    # Spark plan embeds — cross-engine identity by construction
-    from .datapipe.textstats import NDCG_DISC_PPM, NDCG_IDCG_PPM
-
-    disc = ", ".join(str(d) for d in NDCG_DISC_PPM)
-    idcg = ", ".join(str(s) for s in NDCG_IDCG_PPM[1:11])
-    return f"""
-WITH {_BM25_CHAIN},
-tdx AS (SELECT DISTINCT doc_id, t FROM tw),
-nq AS (SELECT qid, count(*)::BIGINT AS n_terms FROM qt GROUP BY 1),
-hit AS (SELECT qt.qid, tdx.doc_id, count(*)::BIGINT AS n_hit
-        FROM tdx JOIN qt ON qt.t = tdx.t GROUP BY 1, 2),
-qr AS (SELECT hit.qid, hit.doc_id FROM hit JOIN nq ON nq.qid = hit.qid
-       WHERE n_hit = n_terms),
-nrel AS (SELECT qid, count(*)::BIGINT AS n_rel FROM qr GROUP BY 1),
-j AS (SELECT rk.qid, rk.rank,
-             CASE WHEN qr.doc_id IS NULL THEN 0 ELSE 1 END AS rel
-      FROM rk LEFT JOIN qr ON qr.qid = rk.qid AND qr.doc_id = rk.doc_id
-      WHERE rk.rank <= 10),
-per AS (SELECT qid,
-               min(CASE WHEN rel = 1 THEN rank END) AS fr,
-               sum(CASE WHEN rank <= 5 THEN rel ELSE 0 END)::BIGINT AS hits5,
-               sum(rel * ([{disc}])[rank])::BIGINT AS dcg,
-               sum(rel)::BIGINT AS hitsk
-        FROM j GROUP BY 1)
-SELECT per.qid, nrel.n_rel,
-       coalesce(1000000 // fr, 0)::BIGINT AS rr_ppm,
-       ((hits5 * 1000000) // 5)::BIGINT AS p_at_5_ppm,
-       ((hitsk * 1000000) // n_rel)::BIGINT AS recall_ppm,
-       ((dcg * 1000000) // ([{idcg}])[least(n_rel, 10)])::BIGINT AS ndcg_ppm
-FROM per JOIN nrel ON nrel.qid = per.qid
-"""
-
-
-@_register("retrieval_quality", _retrieval_quality_sql())
-def retrieval_quality_q(spark, sf_dir):
-    """Ranking-quality evaluation of the BM25 run against conjunctive
-    exact-match qrels (docs containing ALL query terms — the
-    self-contained ground truth): per-query reciprocal rank, P@5,
-    recall@10, and nDCG@10, all integer ppm. The nDCG discount table is
-    round(1e6/log2(r+1)) computed ONCE in Python and embedded as the
-    same literals in both engines, so no float log is evaluated in
-    either (datapipe/textstats.py retrieval_quality,
-    conjunctive_matches; cf. reference metric surface
-    /root/reference/genie/utils/evaluation.py which stops at set
-    P/R/F1 — rank-aware eval is the retrieval-grade extension)."""
-    from .datapipe.textstats import (
-        bm25_topk,
-        conjunctive_matches,
-        retrieval_quality,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    wq = F.filter(
-        F.split(F.lower(F.col("text")), " "), lambda x: x != F.lit("")
-    )
-    panel = docs.filter(F.col("doc_id") % 50 == 7).select(
-        F.col("doc_id").alias("qid"),
-        F.array_join(F.slice(wq, 1, 3), " ").alias("qtext"),
-    )
-    bm = bm25_topk(docs, panel, top_k=10).select("qid", "doc_id", "rank")
-    qrels = conjunctive_matches(docs, panel)
-    return retrieval_quality(bm, qrels, k=10, cut=5)
 
 
 _OUTLIERS_SQL = """

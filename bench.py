@@ -138,8 +138,6 @@ HEADLINE = [
     "sample_stratified",
     "domain_cap",
     "split_assign",
-    "upsample_mix",
-    "token_windows",
     "shuffle_rank",
     "repetition_stats",
     "curation_pipeline",
@@ -163,7 +161,6 @@ HEADLINE = [
     "kg_two_hop",
     "kg_triangles",
     "dup_span_stats",
-    "importance_weights",
     "domain_stats",
     "tfidf_top_terms",
     "kg_common_neighbors",
@@ -215,10 +212,8 @@ HEADLINE = [
     "kg_bgp_optional",
     "kg_bgp_negation",
     "bloom_join_prune",
-    "pack_sequences",
     "dedup_incremental",
     "auc_eval",
-    "kneser_ney_bigram",
     "leakage_safe_split",
     "classifier_report",
     "cohen_kappa",
@@ -226,7 +221,6 @@ HEADLINE = [
     "novelty_rate",
     "vocab_growth",
     "class_term_lift",
-    "source_mix_weights",
     "dedup_threshold_sweep",
     "hard_negatives",
     "gate_ablation",

@@ -1,9 +1,8 @@
-"""Deterministic sampling / splitting / mixing for training-data curation.
+"""Deterministic sampling / splitting / ordering for training-data curation.
 
 LLM data pipelines need reproducible subsetting at corpus scale:
-train/val/test splits that never leak across reruns, per-source sampling
-rates ("mix 2 parts web to 1 part books"), and upsampling of scarce
-high-quality strata. Spark's built-in ``df.sample`` is seed-dependent on
+train/val/test splits that never leak across reruns and per-source
+sampling rates ("mix 2 parts web to 1 part books"). Spark's built-in ``df.sample`` is seed-dependent on
 partitioning (a repartitioned rerun samples DIFFERENT rows), so every
 operator here derives its randomness from a content hash of the row's id
 — row-local Column expressions, no RNG, no shuffle, identical at any
@@ -15,7 +14,7 @@ same h60 primitive the dedup/bootstrap operators use (hashes.py).
 
 from __future__ import annotations
 
-from typing import Dict, Optional
+from typing import Dict
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -123,49 +122,6 @@ def assign_split(
     return df.withColumn(out_col, expr)
 
 
-def upsample(
-    df: DataFrame,
-    weight: float,
-    id_col: str = "doc_id",
-    salt: str = "upsample",
-    copy_col: str = "copy",
-) -> DataFrame:
-    """Deterministic fractional upsampling (mixture weights > 1 for
-    scarce high-quality strata): every row appears ``floor(weight)``
-    times, plus one more with probability ``frac(weight)`` decided by
-    its hash-uniform. Row-local ``sequence`` + ``explode`` — the shuffle
-    cost is zero; the fan-out happens at the scan. ``copy_col`` numbers
-    the copies (0-based) so downstream shuffles can decorrelate them."""
-    if weight < 0:
-        raise ValueError("weight must be >= 0")
-    base = int(weight)
-    frac = float(weight) - base
-    n = F.lit(base) + (
-        (_unit(F.col(id_col), salt) < frac).cast("int") if frac > 0 else F.lit(0)
-    )
-    return (
-        df.withColumn("_n", n)
-        .filter(F.col("_n") > 0)
-        .withColumn(copy_col, F.explode(F.sequence(F.lit(0), F.col("_n") - 1)))
-        .drop("_n")
-    )
-
-
-def mixture_weights(
-    proportions: Dict[str, float], temperature: float = 1.0
-) -> Dict[str, float]:
-    """Temperature-flattened source mixing (the multilingual-sampling
-    rule p_i^(1/T) / Σ p_j^(1/T)): T=1 keeps natural proportions, T>1
-    upweights the tail. Returns per-source sampling weights normalized
-    to sum 1 — feed the result to :func:`stratified_sample` (values ≤ 1)
-    or scale and feed to :func:`upsample`."""
-    if temperature <= 0:
-        raise ValueError("temperature must be > 0")
-    powered = {k: float(v) ** (1.0 / temperature) for k, v in proportions.items()}
-    z = sum(powered.values())
-    return {k: v / z for k, v in powered.items()}
-
-
 def shuffle_order(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -189,178 +145,6 @@ def shuffle_order(
 
     ranked, _ = _distributed_rank(keyed, ["_sh", id_col], out_col)
     return ranked.drop("_sh")
-
-
-def token_windows(
-    df: DataFrame,
-    max_tokens: int,
-    stride: Optional[int] = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Context-window packing prep: split each document's whitespace
-    tokens into windows of ``max_tokens`` (optionally overlapping by
-    ``max_tokens - stride``), one output row per window with
-    (win_idx, win_start, n_win_tokens, window text). Pure higher-order
-    functions over the split array — row-local, codegen'd, no Python,
-    no shuffle; the explode fans out at the scan."""
-    stride = stride or max_tokens
-    if stride <= 0 or max_tokens <= 0:
-        raise ValueError("max_tokens and stride must be > 0")
-    toks = F.split(F.col(text_col), "\\s+")
-    n = F.size(toks)
-    # window starts: 0, stride, 2*stride, ... < n (empty docs get none)
-    starts = F.when(
-        n > 0, F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)), F.lit(stride))
-    ).otherwise(F.array().cast("array<int>"))
-    wins = F.transform(
-        starts,
-        lambda s: F.struct(
-            s.cast("long").alias("win_start"),
-            F.array_join(F.slice(toks, s + 1, max_tokens), " ").alias("window"),
-            F.least(n - s, F.lit(max_tokens)).cast("long").alias("n_win_tokens"),
-        ),
-    )
-    return (
-        df.withColumn("_wins", wins)
-        .select(
-            F.col(id_col),
-            F.posexplode("_wins").alias("win_idx", "w"),
-        )
-        .select(
-            id_col,
-            F.col("win_idx").cast("long").alias("win_idx"),
-            F.col("w.win_start").alias("win_start"),
-            F.col("w.n_win_tokens").alias("n_win_tokens"),
-            F.col("w.window").alias("window"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# DSIR-style importance weights (Xie et al. 2023, arXiv:2302.03169,
-# "Data Selection for Language Models via Importance Resampling"): score
-# every raw document by how target-domain-like its hashed n-gram feature
-# distribution is, then resample the corpus by the weights. The
-# published estimator sums per-feature LOG likelihood ratios; log() is
-# not bit-identical across engines (libm vs java.lang.Math), so the
-# oracled form here sums the smoothed likelihood RATIOS in integer
-# fixed-point — floor divisions of exact integer counts, associative
-# integer sums, deterministic under any partitioning or scan order (the
-# same discipline as split_thresholds / pagerank_fixed). The ranking it
-# induces is a monotone-comparable domain-affinity score; callers who
-# want the paper-exact log estimator pass log_ratio=True (floats,
-# NOT oracle-comparable across engines).
-# ---------------------------------------------------------------------------
-
-
-def importance_weights(
-    raw: DataFrame,
-    target: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    buckets: int = 4096,
-    scale: int = 10**4,
-    log_ratio: bool = False,
-) -> DataFrame:
-    """Per-document domain-affinity weights against a target corpus.
-
-    Features are whitespace tokens hashed into ``buckets`` via h60 — the
-    hashed-ngram generative model of DSIR. With add-1 smoothing::
-
-        score(b)  = ((ct[b]+1) * (Nr+B) * scale) // ((cr[b]+1) * (Nt+B))
-        weight(d) = sum over d's tokens of score(bucket(token))
-
-    Returns ``(id, n_feats, weight_fp)``; weight_fp is in units of
-    1/scale, length-unnormalized (divide by n_feats downstream for a
-    per-token affinity). With ``log_ratio=True`` the per-feature term is
-    ``ln`` of the smoothed ratio summed as doubles — the paper's
-    estimator, for production use where cross-engine bit-equality
-    doesn't apply.
-
-    Scale shape (100 TB): two token-level partial-agg groupBys build the
-    feature tables (≤ ``buckets`` rows each — broadcast-sized by
-    construction), the totals are 1-row lazy aggregates, and scoring is
-    one broadcast join per token batch + an integer per-doc sum. The
-    corpus is scanned twice (once to count, once to score) and never
-    shuffled on content. Integer bounds: (ct+1)*(Nr+B)*scale must stay
-    inside int64 — at web scale lower ``scale`` or bucket the counts
-    per-shard (documented; asserted small-scale by the ANSI-mode
-    overflow gate Spark runs under)."""
-    from .hashes import h60
-
-    def feats(df):
-        return df.select(
-            F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("tok")
-        ).select(
-            id_col, F.pmod(h60(F.col("tok")), F.lit(buckets)).alias("b")
-        )
-
-    rf = feats(raw)
-    tf = feats(target)
-    cr = rf.groupBy("b").agg(F.count(F.lit(1)).cast("long").alias("cr"))
-    ct = tf.groupBy("b").agg(F.count(F.lit(1)).cast("long").alias("ct"))
-    nr = rf.agg(F.count(F.lit(1)).cast("long").alias("nr"))
-    nt = tf.agg(F.count(F.lit(1)).cast("long").alias("nt"))
-    ftab = (
-        cr.join(ct, "b", "left")
-        .crossJoin(nr)
-        .crossJoin(nt)
-        .select(
-            "b",
-            F.coalesce("ct", F.lit(0)).alias("ct"),
-            "cr", "nr", "nt",
-        )
-    )
-    if log_ratio:
-        score = F.log(
-            ((F.col("ct") + 1) * (F.col("nr") + buckets))
-            / ((F.col("cr") + 1) * (F.col("nt") + buckets))
-        ).alias("score")
-        agg = F.sum("score").alias("weight")
-    else:
-        score = F.expr(
-            f"((ct + 1L) * (nr + {buckets}L) * {scale}L)"
-            f" div ((cr + 1L) * (nt + {buckets}L))"
-        ).alias("score")
-        agg = F.sum("score").cast("long").alias("weight_fp")
-    scored = rf.join(F.broadcast(ftab.select("b", score)), "b")
-    return scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("long").alias("n_feats"), agg
-    )
-
-
-def importance_weights_sql(
-    raw_table: str = "documents",
-    target_where: str = "doc_id % 13 = 0",
-    id_col: str = "doc_id",
-    buckets: int = 4096,
-    scale: int = 10**4,
-) -> str:
-    """DuckDB twin of :func:`importance_weights` (integer form), with the
-    target corpus expressed as a predicate over the raw table."""
-    from .hashes import h60_sql
-
-    b_expr = h60_sql("tok") + f" % {buckets}"
-    return f"""
-WITH rf AS (SELECT {id_col}, {b_expr} AS b
-            FROM (SELECT {id_col}, unnest(string_split(text, ' ')) AS tok
-                  FROM {raw_table})),
-tf AS (SELECT {id_col}, b FROM rf WHERE {target_where}),
-cr AS (SELECT b, count(*)::BIGINT AS cr FROM rf GROUP BY b),
-ct AS (SELECT b, count(*)::BIGINT AS ct FROM tf GROUP BY b),
-nr AS (SELECT count(*)::BIGINT AS nr FROM rf),
-nt AS (SELECT count(*)::BIGINT AS nt FROM tf),
-ftab AS (SELECT cr.b,
-                ((coalesce(ct.ct, 0) + 1) * (nr.nr + {buckets}) * {scale})
-                // ((cr.cr + 1) * (nt.nt + {buckets})) AS score
-         FROM cr LEFT JOIN ct ON ct.b = cr.b CROSS JOIN nr CROSS JOIN nt)
-SELECT rf.{id_col}::BIGINT AS {id_col},
-       count(*)::BIGINT AS n_feats,
-       sum(ftab.score)::BIGINT AS weight_fp
-FROM rf JOIN ftab ON ftab.b = rf.b
-GROUP BY rf.{id_col}
-"""
 
 
 def sessionize(
@@ -499,145 +283,4 @@ def hopping_window_rates(
     return win.groupBy("win_start_us", "event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.sum("_v_ppm").cast("long").alias("value_sum_ppm"),
-    )
-
-
-def pack_sequences(
-    docs: DataFrame,
-    seq_len: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    salt: str = "pack",
-) -> DataFrame:
-    """GPT-style training-sequence packing census: concatenate every
-    document's whitespace tokens in the deterministic epoch order
-    (:func:`shuffle_order` hash ordering) and cut the stream every
-    ``seq_len`` tokens — the standard pretraining packer (documents DO
-    span sequence boundaries; the EOD token between docs is the
-    tokenizer's concern, not the packer's). Returns one row per
-    training sequence that has at least one document STARTING in it:
-    (seq_id, n_docs_started, n_tokens_started, n_crossing) where
-    n_crossing counts started docs that spill into a later sequence —
-    the packing-efficiency/attention-fragmentation census an LLM data
-    pipeline reads before writing shards.
-
-    Token counts are the ws_tokens formula shared with
-    textstats.token_counts (oracle-proven cross-engine); offsets are a
-    FULLY DISTRIBUTED prefix sum — range-repartition by the hash order
-    key, per-partition running sum, plus broadcast per-partition
-    offsets (the metrics._distributed_rank construction generalized
-    from rank to weighted cumsum) — so the plan carries no
-    SinglePartition exchange and the sequence ids are identical at any
-    parallelism. Output is total_tokens/seq_len sized."""
-    from pyspark.sql import Window
-
-    if seq_len <= 0:
-        raise ValueError("seq_len must be > 0")
-    L = int(seq_len)
-    keyed = docs.select(
-        F.col(id_col),
-        F.size(F.split(F.trim(F.col(text_col)), "\\s+")).cast("long").alias("_n"),
-        h60_salted(F.col(id_col).cast("string"), F.lit(salt)).alias("_h"),
-    )
-    parts = keyed.repartitionByRange("_h", id_col).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy("_h", id_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    parts = parts.withColumn("_local", F.sum("_n").over(w))
-    sizes = parts.groupBy("_pid").agg(F.sum("_n").alias("_cnt"))
-    # prefix-sum over <= shuffle-partitions rows: broadcast non-equi
-    # self-join, no global-orderBy window (see metrics._distributed_rank)
-    offs = (
-        sizes.alias("a")
-        .join(F.broadcast(sizes.alias("b")), F.col("b._pid") < F.col("a._pid"), "left")
-        .groupBy(F.col("a._pid").alias("_pid"))
-        .agg(F.coalesce(F.sum("b._cnt"), F.lit(0)).alias("_off"))
-    )
-    ends = (
-        parts.join(F.broadcast(offs), "_pid")
-        .withColumn("_end", (F.col("_off") + F.col("_local")).cast("long"))
-        .filter(F.col("_n") > 0)
-    )
-    d = ends.select(
-        F.expr(f"(_end - _n) div {L}L").alias("seq_id"),
-        "_n",
-        F.expr(
-            f"CASE WHEN (_end - 1L) div {L}L > (_end - _n) div {L}L"
-            " THEN 1L ELSE 0L END"
-        ).alias("_x"),
-    )
-    return d.groupBy("seq_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs_started"),
-        F.sum("_n").cast("long").alias("n_tokens_started"),
-        F.sum("_x").cast("long").alias("n_crossing"),
-    )
-
-
-def pack_sequences_sql(
-    seq_len: int, table: str = "documents", salt: str = "pack"
-) -> str:
-    """DuckDB twin of :func:`pack_sequences` (single-node window cumsum
-    stands in for the distributed prefix sum — same order key, same
-    integer arithmetic)."""
-    L = int(seq_len)
-    h = h60_salted_sql("doc_id::VARCHAR", repr(salt))
-    return f"""
-WITH n AS (
-  SELECT doc_id, {h} AS h,
-         len(string_split_regex(trim(text), '\\s+'))::BIGINT AS n
-  FROM {table}),
-c AS (
-  SELECT doc_id, n,
-         sum(n) OVER (ORDER BY h, doc_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS e
-  FROM n),
-d AS (
-  SELECT (e - n) // {L} AS seq_id, n,
-         CASE WHEN (e - 1) // {L} > (e - n) // {L} THEN 1 ELSE 0 END AS x
-  FROM c WHERE n > 0)
-SELECT seq_id::BIGINT AS seq_id, count(*)::BIGINT AS n_docs_started,
-       sum(n)::BIGINT AS n_tokens_started, sum(x)::BIGINT AS n_crossing
-FROM d GROUP BY 1
-"""
-
-
-def source_mix_weights(
-    docs: DataFrame,
-    group_col: str = "source",
-) -> DataFrame:
-    """Temperature-based mixture reweighting across sources (the
-    multilingual/multi-domain sampling trick — weights ∝ n^α flattens
-    the head so small sources are not drowned): α = 1/2, kept
-    integer-exact because ``floor(sqrt(n))`` of a signed-64 count is
-    the correctly-rounded IEEE value in both engines — no float enters
-    the SHARE arithmetic. Returns one row per source: (source, n_docs,
-    w = floor(sqrt(n_docs)), weight_ppm = w·1e6 div Σw, upsample_ppm =
-    the per-doc sampling multiplier weight_ppm·N div (n_docs·1e6)
-    scaled ppm — i.e. how much each source's documents are over/under-
-    sampled relative to uniform).
-
-    Scale shape: one partial-agg count per source (source-domain-
-    bounded), one broadcast total — the whole operator is
-    dimension-sized."""
-    cnt = docs.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs")
-    ).withColumn(
-        "w", F.expr("CAST(floor(sqrt(CAST(n_docs AS DOUBLE))) AS BIGINT)")
-    )
-    tot = cnt.agg(
-        F.sum("w").cast("long").alias("sw"),
-        F.sum("n_docs").cast("long").alias("nt"),
-    )
-    return cnt.crossJoin(F.broadcast(tot)).select(
-        group_col,
-        "n_docs",
-        "w",
-        F.expr("(w * 1000000L) div sw").alias("weight_ppm"),
-        F.expr("((w * 1000000L) div sw) * nt div n_docs").alias(
-            "upsample_ppm"
-        ),
     )

@@ -282,74 +282,3 @@ def bpe_encode_sql(
          (SELECT {nsym} FROM benc{merges}) AS n_symbols_after)"""
     )
     return ",\n".join(parts)
-
-
-def kneser_ney_bigrams(
-    docs: DataFrame,
-    min_count: int = 3,
-    text_col: str = "text",
-) -> DataFrame:
-    """Interpolated Kneser-Ney bigram probabilities (Kneser & Ney 1995;
-    Chen & Goodman 1998) with absolute discount d = 1/2, integer-exact
-    in ppm — the n-gram LM estimator whose continuation counts are the
-    canonical "novel-context" statistic for corpus analysis::
-
-        p_kn(w2|w1) = (c12 - d)/c1  +  (d * N1+(w1,.)/c1) * N1+(.,w2)/N1+(.,.)
-
-    With d = 1/2 both terms clear to integer arithmetic; each term is
-    ppm-floored separately (term2's two-step floor // (2*c1) // Nall
-    keeps every intermediate far inside signed-64 at any corpus size —
-    the single-fraction form overflows on the denominator product at
-    ~1e12-count heads). The DuckDB twin computes the IDENTICAL split
-    formula, so floors match bit-for-bit. Returns observed bigrams with
-    n12 >= min_count: (w1, w2, n12, pkn_ppm).
-
-    Scale shape: bigram occurrences come from ONE corpus scan
-    (zip_with of the shifted token array, row-local); all four count
-    tables (c12, left totals + left fanout, right continuation fanout,
-    distinct-bigram total) are partial-agg groupBys OVER THE BIGRAM-TYPE
-    table, never re-reading the corpus; the final assembly shuffles the
-    vocab-bounded type table twice (w1, then w2) — Catalyst reuses the
-    w1 partitioning from the c1 aggregate."""
-    toks = docs.select(
-        F.expr(
-            f"filter(split(lower({text_col}), ' '), t -> t != '')"
-        ).alias("w")
-    )
-    bg = toks.select(
-        F.explode(
-            F.expr(
-                "zip_with(slice(w, 1, size(w) - 1),"
-                "         slice(w, 2, size(w) - 1),"
-                "         (a, b) -> struct(a AS w1, b AS w2))"
-            )
-        ).alias("b")
-    ).select(F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
-    c12 = bg.groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).cast("long").alias("n12")
-    )
-    lft = c12.groupBy("w1").agg(
-        F.sum("n12").cast("long").alias("c1"),
-        F.count(F.lit(1)).cast("long").alias("n1p"),
-    )
-    rgt = c12.groupBy("w2").agg(
-        F.count(F.lit(1)).cast("long").alias("n1pc")
-    )
-    tot = c12.agg(F.count(F.lit(1)).cast("long").alias("nall"))
-    return (
-        c12.filter(F.col("n12") >= int(min_count))
-        .join(lft, "w1")
-        .join(rgt, "w2")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "w1",
-            "w2",
-            "n12",
-            (
-                F.expr("((2L * n12 - 1L) * 1000000L) div (2L * c1)")
-                + F.expr(
-                    "((n1p * n1pc * 1000000L) div (2L * c1)) div nall"
-                )
-            ).alias("pkn_ppm"),
-        )
-    )

@@ -1379,33 +1379,6 @@ def dedup_cluster_sizes(spark, sf_dir):
     )
 
 
-_MIX_SQL = """
-WITH cnt AS (SELECT source, count(*)::BIGINT AS n_docs
-             FROM documents GROUP BY 1),
-cw AS (SELECT source, n_docs, CAST(floor(sqrt(n_docs)) AS BIGINT) AS w
-       FROM cnt),
-tot AS (SELECT sum(w)::BIGINT AS sw, sum(n_docs)::BIGINT AS nt FROM cw)
-SELECT source, n_docs, w,
-       ((w * 1000000) // sw)::BIGINT AS weight_ppm,
-       (((w * 1000000) // sw) * nt // n_docs)::BIGINT AS upsample_ppm
-FROM cw CROSS JOIN tot
-"""
-
-
-@_register("source_mix_weights", _MIX_SQL)
-def source_mix_weights_q(spark, sf_dir):
-    """Temperature-based source mixture reweighting (weights ∝ n^0.5 —
-    the head-flattening sampling trick for multi-domain corpora),
-    integer-exact because floor(sqrt(bigint)) is the correctly-rounded
-    IEEE value in both engines; per-source share and relative
-    over/under-sampling multiplier in ppm. Entirely dimension-sized:
-    one per-source count + one broadcast total
-    (datapipe/sampling.py source_mix_weights)."""
-    from .datapipe.sampling import source_mix_weights
-
-    return source_mix_weights(_t(spark, sf_dir, "documents"), "source")
-
-
 _SWEEP_PPM = [250000, 500000, 625000, 750000, 875000, 1000000]
 
 
@@ -2966,32 +2939,6 @@ def domain_stats(spark, sf_dir):
     return domain_quality_stats(_t(spark, sf_dir, "documents"))
 
 
-def _importance_oracle():
-    from .datapipe.sampling import importance_weights_sql
-
-    return importance_weights_sql(
-        "documents", target_where="doc_id % 13 = 0"
-    )
-
-
-@_register("importance_weights", None)
-def importance_weights_q(spark, sf_dir):
-    """DSIR-style importance weights (arXiv:2302.03169): hashed-token
-    likelihood-ratio affinity of every raw doc to a target domain (every
-    13th doc stands in for the target corpus). Oracled in integer
-    fixed-point (the log estimator is engine-divergent — see
-    sampling.importance_weights); feature tables are broadcast-sized by
-    construction, the corpus is never shuffled on content."""
-    from .datapipe.sampling import importance_weights
-
-    docs = _t(spark, sf_dir, "documents")
-    target = docs.filter(F.col("doc_id") % 13 == 0)
-    return importance_weights(docs, target)
-
-
-ORACLES["importance_weights"] = _importance_oracle()
-
-
 _LINE_WORDS = 8
 
 
@@ -3434,7 +3381,6 @@ def _sampling_oracles():
     return {
         "u_strata": unit_sql("doc_id", "strata"),
         "r_split": residue_sql("doc_id", "split"),
-        "u_up": unit_sql("doc_id", "upsample"),
     }
 
 
@@ -3496,29 +3442,6 @@ def split_assign(spark, sf_dir):
         {"train": 0.1, "val": 0.1, "test": 0.8},
     )
     return out.select(F.col("doc_id").cast("bigint").alias("doc_id"), "split")
-
-
-@_register(
-    "upsample_mix",
-    f"""
-SELECT doc_id::BIGINT AS doc_id, unnest(range(n))::BIGINT AS copy
-FROM (
-  SELECT doc_id, 2 + (({_SAMPLING_U['u_up']}) < 0.5)::INT AS n
-  FROM documents WHERE lang = 'de'
-)
-""",
-)
-def upsample_mix(spark, sf_dir):
-    """Deterministic fractional upsampling (weight 2.5: every row twice,
-    half the rows a third time) — zero-shuffle explode fan-out."""
-    from .datapipe.sampling import upsample
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("lang") == "de")
-    out = upsample(docs, 2.5)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("copy").cast("bigint").alias("copy"),
-    )
 
 
 def _shuffle_h_sql():
@@ -3605,38 +3528,6 @@ def curation_pipeline(spark, sf_dir):
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "quality_score",
         "split",
-    )
-
-
-@_register(
-    "token_windows",
-    """
-WITH t AS (
-  SELECT doc_id, string_split_regex(text, '\\s+') AS toks FROM documents
-),
-w AS (
-  SELECT doc_id, toks,
-         unnest(range(0, CASE WHEN len(toks) = 0 THEN 0 ELSE len(toks) END, 30)) AS win_start
-  FROM t
-)
-SELECT doc_id::BIGINT AS doc_id,
-       (win_start / 30)::BIGINT AS win_idx,
-       win_start::BIGINT AS win_start,
-       least(len(toks) - win_start, 40)::BIGINT AS n_win_tokens,
-       array_to_string(list_slice(toks, win_start + 1, win_start + 40), ' ') AS window
-FROM w
-""",
-)
-def token_windows_q(spark, sf_dir):
-    """Context-window packing prep: overlapping max-40-token windows at
-    stride 30, one row per window — row-local HOFs, no Python."""
-    from .datapipe.sampling import token_windows
-
-    return token_windows(
-        _t(spark, sf_dir, "documents"), max_tokens=40, stride=30
-    ).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "win_idx", "win_start", "n_win_tokens", "window",
     )
 
 
@@ -3818,9 +3709,9 @@ def _lm_oracle():
 def lm_surprisal_q(spark, sf_dir):
     """CCNet-style LM quality filter (Wenzek et al. 2020): per-document
     cross-entropy in EXACT integer bits against a unigram LM estimated
-    from the reference slice (every 13th doc — the 'Wikipedia' stand-in,
-    same convention as importance_weights). Count table broadcast;
-    groupBy back to doc_id partial-aggregates map-side."""
+    from the reference slice (every 13th doc — the 'Wikipedia' stand-in).
+    Count table broadcast; groupBy back to doc_id partial-aggregates
+    map-side."""
     from .datapipe.textstats import lm_surprisal_bits
 
     docs = _t(spark, sf_dir, "documents")
@@ -6133,42 +6024,6 @@ FROM joined
 """
 
 
-_KN_SQL = """
-WITH wf AS (
-  SELECT list_filter(string_split(lower(text), ' '), t -> t <> '') AS w
-  FROM documents),
-bgx AS (SELECT unnest(list_transform(range(1, len(w)),
-                                     i -> {'w1': w[i], 'w2': w[i + 1]})) AS b
-        FROM wf),
-c12 AS (SELECT b.w1 AS w1, b.w2 AS w2, count(*)::BIGINT AS n12
-        FROM bgx GROUP BY 1, 2),
-lft AS (SELECT w1, sum(n12)::BIGINT AS c1, count(*)::BIGINT AS n1p
-        FROM c12 GROUP BY 1),
-rgt AS (SELECT w2, count(*)::BIGINT AS n1pc FROM c12 GROUP BY 1),
-tot AS (SELECT count(*)::BIGINT AS nall FROM c12)
-SELECT c12.w1, c12.w2, c12.n12,
-       (((2 * n12 - 1) * 1000000) // (2 * c1)
-        + ((n1p * n1pc * 1000000) // (2 * c1)) // nall)::BIGINT AS pkn_ppm
-FROM c12 JOIN lft ON lft.w1 = c12.w1
-JOIN rgt ON rgt.w2 = c12.w2
-CROSS JOIN tot
-WHERE n12 >= 3
-"""
-
-
-@_register("kneser_ney_bigram", _KN_SQL)
-def kneser_ney_bigram_q(spark, sf_dir):
-    """Interpolated Kneser-Ney bigram LM estimation with d = 1/2,
-    integer ppm: discounted bigram term + continuation-count backoff
-    (the novel-context statistic), both floors computed by the
-    identical split formula in Spark and DuckDB. One corpus scan to
-    bigram occurrences; all count tables are partial-agg groupBys over
-    the bigram-TYPE table (datapipe/vocab.py kneser_ney_bigrams)."""
-    from .datapipe.vocab import kneser_ney_bigrams
-
-    return kneser_ney_bigrams(_t(spark, sf_dir, "documents"), min_count=3)
-
-
 _TERM_LIFT_SQL = """
 WITH tw AS (
   SELECT lang AS cls,
@@ -6258,34 +6113,6 @@ def vocab_growth_q(spark, sf_dir):
     from .datapipe.dedup import vocab_growth
 
     return vocab_growth(_t(spark, sf_dir, "documents"))
-
-
-# --- training-sequence packing census -------------------------------------
-
-_PACK_LEN = 256
-
-
-def _pack_oracle() -> str:
-    from .datapipe.sampling import pack_sequences_sql
-
-    return pack_sequences_sql(_PACK_LEN, "documents", "pack")
-
-
-@_register("pack_sequences", None)
-def pack_sequences_q(spark, sf_dir):
-    """GPT-style pretraining packer census: the corpus token stream in
-    the deterministic epoch order, cut every 256 tokens; per training
-    sequence the docs starting there, their token mass, and how many
-    spill across the boundary (packing efficiency / attention
-    fragmentation). Prefix sum is fully distributed — range-partition
-    + per-partition running sum + broadcast offsets, no
-    SinglePartition exchange (datapipe/sampling.py pack_sequences)."""
-    from .datapipe.sampling import pack_sequences
-
-    return pack_sequences(_t(spark, sf_dir, "documents"), _PACK_LEN)
-
-
-ORACLES["pack_sequences"] = _pack_oracle()
 
 
 # --- incremental (nightly-batch) near-dup check -----------------------------

@@ -178,11 +178,10 @@ def test_multinomial_bootstrap_fully_distributed(spark):
 
 def test_sampling_ops_shuffle_free(spark):
     """The curation operators must be pure row-local plans: no Exchange
-    anywhere — sampling is a Filter, splitting a Project, upsampling and
-    windowing explode at the scan."""
+    anywhere — sampling is a Filter, splitting a Project."""
     import genie_spark.entry_queries as eq
 
-    for name in ("sample_stratified", "split_assign", "upsample_mix", "token_windows"):
+    for name in ("sample_stratified", "split_assign"):
         plan = _tree(eq.QUERIES[name](spark, SF_DIR))
         assert "Exchange" not in plan, f"{name} shuffles:\n{plan}"
 
@@ -537,21 +536,6 @@ def test_prefix_jaccard_no_global_rank(spark):
 
     df = entry_mod.queries()["dedup_jaccard_prefix"](spark, SF_DIR)
     assert "rangepartitioning" not in _plan(df).lower()
-
-
-def test_pack_sequences_distributed_prefix_sum(spark):
-    """The packer's cumulative token offsets must come from the
-    range-partition + broadcast-offsets construction: no global-window
-    cumsum (empty PartitionSpec) anywhere, and at most the one 1-row
-    SinglePartition aggregate."""
-    from genie_spark.datapipe.sampling import pack_sequences
-
-    df = pack_sequences(_t(spark, "documents"), 256)
-    plan = _plan(df)
-    assert plan.count("SinglePartition") <= 1, plan
-    for seg in plan.split("\n\n"):
-        if seg.startswith("(") and ") Window" in seg.split("\n")[0]:
-            assert "PartitionSpec: []" not in seg, seg
 
 
 def test_kg_clustering_coeff_oriented_wedges(spark):

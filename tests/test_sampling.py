@@ -1,15 +1,12 @@
-"""Deterministic sampling / splitting / packing operator semantics."""
+"""Deterministic sampling / splitting / ordering operator semantics."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from genie_spark.datapipe.sampling import (
     assign_split,
-    mixture_weights,
     sample_fraction,
     stratified_sample,
-    token_windows,
-    upsample,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -89,34 +86,6 @@ def test_stratified_sample_rates_per_stratum(spark, docs):
     assert langs == {"en"}
     n_en = docs.filter(F.col("lang") == "en").count()
     assert out.count() == n_en  # fraction 1.0 keeps every row
-
-
-def test_upsample_counts_and_copy_numbering(spark, docs):
-    base = docs.limit(50).cache()
-    n = base.count()
-    out = upsample(base, 2.5, copy_col="copy").cache()
-    total = out.count()
-    # every row twice, plus ~half a third time
-    assert 2 * n <= total <= 3 * n
-    per = out.groupBy("doc_id").agg(
-        F.count("*").alias("k"), F.collect_set("copy").alias("copies")
-    )
-    for r in per.collect():
-        assert r["k"] in (2, 3)
-        assert sorted(r["copies"]) == list(range(r["k"]))
-    # integer weight is exact
-    assert upsample(base, 2.0).count() == 2 * n
-    assert upsample(base, 0.0).count() == 0
-
-
-def test_mixture_weights_temperature():
-    p = {"web": 0.9, "books": 0.1}
-    assert mixture_weights(p, 1.0) == pytest.approx(p)
-    flat = mixture_weights(p, 100.0)
-    assert abs(flat["web"] - flat["books"]) < 0.02  # T→∞ flattens
-    assert sum(flat.values()) == pytest.approx(1.0)
-    with pytest.raises(ValueError):
-        mixture_weights(p, 0.0)
 
 
 def test_shuffle_order_is_stable_dense_permutation(spark, docs):
@@ -216,79 +185,3 @@ def test_contact_flags_semantics(spark):
     assert out[2]["n_urls"] == 2 and out[2]["n_emails"] == 0
     assert out[3]["n_emails"] == 0 and out[3]["n_urls"] == 0 and not out[3]["has_contact"]
     assert out[4]["n_emails"] == 2 and out[4]["n_urls"] == 1
-
-
-def test_token_windows_reconstruction(spark, docs):
-    base = docs.limit(20).cache()
-    # stride == max_tokens: windows partition the token stream exactly
-    wins = token_windows(base, max_tokens=7, stride=7).collect()
-    texts = {r["doc_id"]: r["text"] for r in base.collect()}
-    by_doc = {}
-    for r in sorted(wins, key=lambda r: (r["doc_id"], r["win_idx"])):
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    for doc_id, rows in by_doc.items():
-        toks = texts[doc_id].split()
-        joined = " ".join(r["window"] for r in rows).split()
-        assert joined == toks, doc_id
-        assert [r["win_start"] for r in rows] == [7 * i for i in range(len(rows))]
-        assert sum(r["n_win_tokens"] for r in rows) == len(toks)
-    # overlapping windows: each window's tokens match the slice
-    over = token_windows(base, max_tokens=10, stride=6).collect()
-    for r in over:
-        toks = texts[r["doc_id"]].split()
-        s = r["win_start"]
-        assert r["window"].split() == toks[s : s + 10]
-
-
-def test_importance_weights_matches_python_twin(spark):
-    from genie_spark.datapipe.hashes import h60
-    from genie_spark.datapipe.sampling import importance_weights
-    import hashlib
-
-    rows = [
-        (0, "cat dog cat fish"),
-        (1, "dog dog bird"),
-        (2, "cat cat cat cat"),
-        (3, "fish bird fish"),
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    target = docs.filter("doc_id % 2 = 0")
-    B, SCALE = 64, 10**4
-    got = {
-        r["doc_id"]: (r["n_feats"], r["weight_fp"])
-        for r in importance_weights(docs, target, buckets=B, scale=SCALE).collect()
-    }
-
-    def bucket(tok):
-        return int(hashlib.md5(tok.encode()).hexdigest()[:15], 16) % B
-
-    cr, ct = {}, {}
-    for i, t in rows:
-        for tok in t.split(" "):
-            b = bucket(tok)
-            cr[b] = cr.get(b, 0) + 1
-            if i % 2 == 0:
-                ct[b] = ct.get(b, 0) + 1
-    nr, nt = sum(cr.values()), sum(ct.values())
-    want = {}
-    for i, t in rows:
-        toks = [bucket(x) for x in t.split(" ")]
-        w = sum(
-            ((ct.get(b, 0) + 1) * (nr + B) * SCALE) // ((cr[b] + 1) * (nt + B))
-            for b in toks
-        )
-        want[i] = (len(toks), w)
-    assert got == want
-
-
-def test_importance_weights_log_ratio_ranks_target_like_docs_higher(spark):
-    from genie_spark.datapipe.sampling import importance_weights
-
-    rows = [(i, "alpha beta " * 10) for i in range(0, 6, 2)] + [
-        (i, "gamma delta " * 10) for i in range(1, 6, 2)
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    target = docs.filter("doc_id % 2 = 0")  # the alpha-beta docs
-    out = importance_weights(docs, target, log_ratio=True).collect()
-    w = {r["doc_id"]: r["weight"] / r["n_feats"] for r in out}
-    assert min(w[i] for i in (0, 2, 4)) > max(w[i] for i in (1, 3, 5))

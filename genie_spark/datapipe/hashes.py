@@ -9,8 +9,8 @@ the first 15 hex digits of md5 (both engines agree byte-for-byte on md5;
 * Spark:  ``conv(substring(md5(x), 1, 15), 16, 10) :: bigint``
 * DuckDB: ``('0x' || substr(md5(x), 1, 15)) :: UBIGINT :: BIGINT``
 
-At production scale, swap in ``xxhash64`` (JVM-intrinsic, no hex
-round-trip) via ``h_fast`` — identical plan shape, not oracle-comparable.
+Hashes that no oracle ever sees (salts, chunk keys) call Spark's
+``xxhash64`` directly: it is cheaper but has no DuckDB twin.
 """
 
 from __future__ import annotations
@@ -26,12 +26,6 @@ def h60(col: Column) -> Column:
 
 def h60_salted(col: Column, salt: Column) -> Column:
     return h60(F.concat(salt.cast("string"), F.lit("\x01"), col))
-
-
-def h_fast(col: Column) -> Column:
-    """Production-path hash (xxhash64): ~5× cheaper than md5, JVM
-    whole-stage-codegen intrinsic. Not DuckDB-reproducible."""
-    return F.xxhash64(col)
 
 
 def h60_sql(expr: str) -> str:

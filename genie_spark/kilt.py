@@ -1,4 +1,4 @@
-"""KILT-style evaluation-table operators: projection P1 and filters F1–F7.
+"""KILT-style evaluation-table operators: filters F1–F5 and F7.
 
 The reference applies these at dataset-load time in Python
 (reference: genie/datamodule/datasets.py:92-201). Here they are pure
@@ -79,15 +79,3 @@ def filter_triples_on_relations(
     subset — used by the metric groupings."""
     rel_arr = F.array(*[F.lit(r) for r in rels])
     return F.filter(triples, lambda t: F.array_contains(rel_arr, t["r"]))
-
-
-def project_kilt(df: DataFrame) -> DataFrame:
-    """P1 (datasets.py:92-124): the model-facing projection —
-    (id, input, target, id_triples). Catalyst prunes everything else out
-    of the scan."""
-    return df.select("id", "input", "target", "id_triples")
-
-
-def debug_limit(df: DataFrame, n: int = 40) -> DataFrame:
-    """F6 (datasets.py:269-270)."""
-    return df.limit(n)

@@ -763,7 +763,7 @@ def transe_energy(
     expression over a sequence literal — zero shuffle, zero UDF, full
     whole-stage codegen; dim*3 md5 calls per row is the entire cost.
     Real float embeddings swap the hash for an `array<float>` lookup
-    join (ann tier); the energy expression is unchanged."""
+    join; the energy expression is unchanged."""
     from .hashes import h60
 
     s, r, o = F.col(s_col), F.col(r_col), F.col(o_col)

@@ -44,7 +44,7 @@ def hyperplanes(n_planes: int, dim: int, seed: int = 42) -> List[List[int]]:
 def arr_lit(vals: Sequence[float]) -> Column:
     """array<double> literal via ONE parsed SQL expression. Building the
     same array from nested F.array(F.lit(...)) costs one py4j round-trip
-    per element — ~6s of pure driver latency for a 32×16 codebook,
+    per element — ~6s of pure driver latency for a 32×16 literal,
     measured; repr(float)+'D' round-trips every double exactly."""
     return F.expr("array(" + ",".join(f"{float(x)!r}D" for x in vals) + ")")
 

@@ -28,7 +28,7 @@ non-negative operands used here); no float sums anywhere, so partition
 order can never move a digit.
 
 The reference (epfl-dlab/GenIE) has no sketch tier; this extends the
-training-data toolkit the same way the dedup/ANN modules do.
+training-data toolkit the same way the dedup/similarity modules do.
 """
 
 from __future__ import annotations

@@ -2,11 +2,12 @@
 
 LLM data pipelines need reproducible subsetting at corpus scale:
 train/val/test splits that never leak across reruns and per-source
-sampling rates ("mix 2 parts web to 1 part books"). Spark's built-in ``df.sample`` is seed-dependent on
-partitioning (a repartitioned rerun samples DIFFERENT rows), so every
-operator here derives its randomness from a content hash of the row's id
-— row-local Column expressions, no RNG, no shuffle, identical at any
-parallelism and re-expressible in DuckDB for the oracle gate.
+sampling rates ("mix 2 parts web to 1 part books"). Spark's built-in
+``df.sample`` is seed-dependent on partitioning (a repartitioned rerun
+samples DIFFERENT rows), so every operator here derives its randomness
+from a content hash of the row's id — row-local Column expressions, no
+RNG, no shuffle, identical at any parallelism and re-expressible in
+DuckDB for the oracle gate.
 
 The uniform for row i under salt s is ``h60(s ␁ i) mod 1e6 / 1e6`` — the
 same h60 primitive the dedup/bootstrap operators use (hashes.py).

@@ -13,9 +13,8 @@ embedding pair operators:
   hash-seeded centroid (`ivf_centroids`); SemDeDup
   (`semantic_dedup_survivors`) compares pairs only within a cell.
 
-The DuckDB twins (`*_sql`) are assembled from one set of module-level
-fragments, so each cosine, seed pick and assignment is spelled once. The
-pair operators share `dedup._salted_cosine_pairs`, which compares the
+The DuckDB twins (`*_sql`) inline the same plane and centroid literals
+and the same rounding. The pair operators share `dedup._salted_cosine_pairs`, which compares the
 exact cosine to the threshold in every engine.
 """
 
@@ -150,10 +149,6 @@ def ivf_cell_col(vec_col: Column, centroids: List[List[float]]) -> Column:
 # ---------------------------------------------------------------------------
 
 
-# DuckDB fragments the oracle builders share, each spelled exactly once:
-# cosine pieces, the h60 seed pick and the IVF assignment.
-
-
 def _dot_sql(a: str, b: str) -> str:
     return f"list_sum(list_transform(list_zip({a}, {b}), p -> p[1]::DOUBLE * p[2]::DOUBLE))"
 
@@ -168,45 +163,12 @@ def _cos_sql(a: str, b: str, dp: int = None) -> str:
     return cos if dp is None else f"round({cos}, {dp})"
 
 
-def _seed_sql(name: str, vec: str, n: int) -> str:
-    """The n smallest-h60 corpus vectors as ``name(<vec>, cid)`` — the
-    deterministic pick of :func:`ivf_centroids`."""
-    from .hashes import h60_sql
-
-    return f"""{name} AS (
-  SELECT {vec},
-         row_number() OVER (ORDER BY {h60_sql("vec_id::VARCHAR")}, vec_id) - 1 AS cid
-  FROM embeddings
-  QUALIFY cid < {n}
-)"""
-
-
-def _assign_sql(name: str, cents: str) -> str:
-    """Rank every centroid of ``cents`` per vector by 9dp cosine (rnk = 1
-    is :func:`ivf_cell_col`'s cell)."""
-    return f"""{name} AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY {_cos_sql("e.embedding", "c.cvec", 9)} DESC, c.cid
-         ) AS rnk
-  FROM embeddings e CROSS JOIN {cents} c
-)"""
-
-
-def _cells_sql(cents: str) -> str:
-    return (
-        _assign_sql("assign", cents)
-        + ",\ncells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rnk = 1)"
-    )
-
-
-def _bucket_expr_sql(planes: List[List[int]], vec: str = "embedding") -> str:
+def _bucket_expr_sql(planes: List[List[int]]) -> str:
     terms = []
     for p, coeffs in enumerate(planes):
         plane = "[" + ", ".join(f"{float(c)!r}" for c in coeffs) + "]"
         terms.append(
-            f"(CASE WHEN list_sum(list_transform(list_zip({vec}, {plane}),"
+            f"(CASE WHEN list_sum(list_transform(list_zip(embedding, {plane}),"
             f" p -> p[1]::DOUBLE * p[2])) > 0 THEN {1 << p} ELSE 0 END)"
         )
     return " + ".join(terms)
@@ -299,9 +261,24 @@ def semantic_dedup_sql(
     hash-seeded centroids (same pick as :func:`ivf_centroids`), the same
     9dp-rounded argmax assignment, within-cell pairs whose exact cosine
     reaches the threshold, and the keep-lowest-id anti-join."""
+    from .hashes import h60_sql
+
     return f"""
-WITH {_seed_sql("cents", "embedding AS cvec", n_cells)},
-{_cells_sql("cents")},
+WITH cents AS (
+  SELECT embedding AS cvec,
+         row_number() OVER (ORDER BY {h60_sql("vec_id::VARCHAR")}, vec_id) - 1 AS cid
+  FROM embeddings
+  QUALIFY cid < {n_cells}
+),
+assign AS (
+  SELECT e.vec_id, e.embedding, c.cid,
+         row_number() OVER (
+           PARTITION BY e.vec_id
+           ORDER BY {_cos_sql("e.embedding", "c.cvec", 9)} DESC, c.cid
+         ) AS rnk
+  FROM embeddings e CROSS JOIN cents c
+),
+cells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rnk = 1),
 dropped AS (
   SELECT DISTINCT b.vec_id
   FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id

@@ -23,52 +23,50 @@ from .triples import format_triples_col
 
 
 def filter_matching_status(
-    df: DataFrame, allowed: Sequence[str] = ("title",), col: str = "instance_matching_status"
+    df: DataFrame, allowed: Sequence[str] = ("title",)
 ) -> DataFrame:
     """F1 (datasets.py:157-169): keep samples whose instance matching
     status is in the allowed set ({'title'} or {'title','label'})."""
-    return df.filter(F.col(col).isin(list(allowed)))
+    return df.filter(F.col("instance_matching_status").isin(list(allowed)))
 
 
 def filter_relations_drop(
-    df: DataFrame, drop: Sequence[str], triples_col: str = "surface_triples"
+    df: DataFrame, drop: Sequence[str]
 ) -> DataFrame:
     """F2 (datasets.py:171-185): drop the whole sample if ANY triple's
     relation is in the drop set."""
     drop_arr = F.array(*[F.lit(r) for r in drop])
     return df.filter(
-        ~F.exists(F.col(triples_col), lambda t: F.array_contains(drop_arr, t["r"]))
+        ~F.exists(F.col("surface_triples"), lambda t: F.array_contains(drop_arr, t["r"]))
     )
 
 
 def filter_relations_keep(
-    df: DataFrame, keep: Sequence[str], triples_col: str = "surface_triples"
+    df: DataFrame, keep: Sequence[str]
 ) -> DataFrame:
     """F3 (datasets.py:187-201): drop the sample if any triple's relation
     falls OUTSIDE the keep set."""
     keep_arr = F.array(*[F.lit(r) for r in keep])
     return df.filter(
-        F.forall(F.col(triples_col), lambda t: F.array_contains(keep_arr, t["r"]))
+        F.forall(F.col("surface_triples"), lambda t: F.array_contains(keep_arr, t["r"]))
     )
 
 
 def drop_ignored_relations(
     df: DataFrame,
     ignore: Sequence[str],
-    triples_col: str = "surface_triples",
-    target_col: str = "target",
 ) -> DataFrame:
     """F4+F5+re-linearize (datasets.py:106-123, 263-267): remove individual
     triples whose relation is ignored, re-format the target string, and
     drop samples whose triple set became empty."""
     ignore_arr = F.array(*[F.lit(r) for r in ignore])
     kept = F.filter(
-        F.col(triples_col), lambda t: ~F.array_contains(ignore_arr, t["r"])
+        F.col("surface_triples"), lambda t: ~F.array_contains(ignore_arr, t["r"])
     )
     return (
-        df.withColumn(triples_col, kept)
-        .filter(F.size(F.col(triples_col)) > 0)
-        .withColumn(target_col, format_triples_col(F.col(triples_col)))
+        df.withColumn("surface_triples", kept)
+        .filter(F.size(F.col("surface_triples")) > 0)
+        .withColumn("target", format_triples_col(F.col("surface_triples")))
     )
 
 

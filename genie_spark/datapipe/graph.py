@@ -31,10 +31,11 @@ a bounded plan. An input a loop re-joins every step, such as its edge
 set, is checkpointed EAGERLY once: under AQE a lazy checkpoint
 re-materializes its subtree at every cut of a plan that uses it
 (pagerank_fixed at sf0.1 went from 20.7 s to 8.4 s with the eager edge
-cut). Connected components, HITS and random walks keep their own loops,
-because each does more than step one frame (a convergence probe that
-raises, two state frames, an accumulated union); the two semi-naive
-closures share :func:`_semi_naive`. On a real cluster a reliable ``checkpoint``
+cut); HITS steps its hub frame through :func:`_iterate` and finishes
+with one authority and one hub step. Only connected components and
+random walks keep their own loops, because each does more than step one
+frame (a convergence probe that raises, an accumulated union); the two
+semi-naive closures share :func:`_semi_naive`. On a real cluster a reliable ``checkpoint``
 directory is the safer cut, because localCheckpoint blocks die with
 their executor.
 """
@@ -93,8 +94,6 @@ def pagerank_sql_chain(
     edges_cte: str = "e",
     iterations: int = 5,
     scale: int = 10**12,
-    damping_num: int = 85,
-    damping_den: int = 100,
 ) -> str:
     """DuckDB twin of :func:`pagerank_fixed`: the same integer
     fixed-point recurrence unrolled as one CTE chain per iteration.
@@ -103,7 +102,7 @@ def pagerank_sql_chain(
     caller selects from ``pr{iterations}``. Every divide is DuckDB
     ``//`` (floor) on BIGINT — bit-identical to Spark's ``div`` for the
     non-negative operands used here; sums are cast back from HUGEINT."""
-    tele = f"(({damping_den - damping_num}::BIGINT * {scale}) // ({damping_den} * (SELECT n FROM nn)))"
+    tele = f"((15::BIGINT * {scale}) // (100 * (SELECT n FROM nn)))"
     parts = [
         f"verts AS (SELECT src AS v FROM {edges_cte} UNION SELECT dst FROM {edges_cte})",
         "nn AS (SELECT count(*)::BIGINT AS n FROM verts)",
@@ -126,8 +125,8 @@ def pagerank_sql_chain(
         parts.append(
             f"""pr{i} AS (
   SELECT v.v, ({tele}
-    + ({damping_num}::BIGINT * (coalesce(i{i}.s, 0)
-       + ((SELECT d FROM dang{i}) // (SELECT n FROM nn)))) // {damping_den}) AS r
+    + (85::BIGINT * (coalesce(i{i}.s, 0)
+       + ((SELECT d FROM dang{i}) // (SELECT n FROM nn)))) // 100) AS r
   FROM verts v LEFT JOIN inf{i} i{i} ON i{i}.v = v.v)"""
         )
     return ",\n".join(parts)
@@ -244,16 +243,16 @@ def components_with_singletons(
     )
 
 
-def degree_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def degree_stats(edges: DataFrame) -> DataFrame:
     """Per-entity in/out/total degree over a DISTINCT directed edge list.
 
     Two partial-aggregatable groupBys + one full outer join — the whole
     plan is map-side-combinable, so at 100 TB the shuffle carries one
     row per (vertex, side), not per edge."""
-    o = edges.groupBy(F.col(src).alias("entity")).agg(
+    o = edges.groupBy(F.col("src").alias("entity")).agg(
         F.count(F.lit(1)).alias("out_deg")
     )
-    i = edges.groupBy(F.col(dst).alias("entity")).agg(
+    i = edges.groupBy(F.col("dst").alias("entity")).agg(
         F.count(F.lit(1)).alias("in_deg")
     )
     return (
@@ -273,10 +272,6 @@ def pagerank_fixed(
     edges: DataFrame,
     iterations: int = 5,
     scale: int = 10**12,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Fixed-iteration PageRank in INTEGER fixed-point arithmetic.
 
@@ -302,12 +297,12 @@ def pagerank_fixed(
     driver collect). The loop is :func:`_rank_with_restart`, shared
     with :func:`personalized_pagerank_fixed`."""
     e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
+        "src", "dst"
     ).localCheckpoint(eager=True)
     verts = _vertices(e)
     return _rank_with_restart(
         e, verts.select("v", F.lit(1).alias("_is")), verts.count(),
-        iterations, scale, damping_num, damping_den,
+        iterations, scale,
     )
 
 
@@ -317,8 +312,6 @@ def _rank_with_restart(
     n_tele: int,
     iterations: int,
     scale: int,
-    damping_num: int,
-    damping_den: int,
 ) -> DataFrame:
     """The integer PageRank recurrence shared by :func:`pagerank_fixed`
     and :func:`personalized_pagerank_fixed`. ``e`` is the checkpointed
@@ -330,7 +323,7 @@ def _rank_with_restart(
     outd = e.groupBy(F.col("src").alias("v")).agg(
         F.count(F.lit(1)).cast("long").alias("od")
     ).localCheckpoint(eager=False)
-    tele = ((damping_den - damping_num) * scale) // (damping_den * n_tele)
+    tele = (15 * scale) // (100 * n_tele)
     pr = flagged.select(
         "v",
         (F.col("_is") * F.lit(scale // n_tele)).cast("long").alias("r"),
@@ -356,9 +349,9 @@ def _rank_with_restart(
                 (
                     F.col("_is").cast("long") * F.lit(tele).cast("long")
                     + F.expr(
-                        f"({damping_num}L * (coalesce(s, 0L)"
+                        f"(85L * (coalesce(s, 0L)"
                         f" + (_is * (d div {n_tele}L))))"
-                        f" div {damping_den}L"
+                        " div 100L"
                     )
                 ).alias("r"),
             )
@@ -368,26 +361,19 @@ def _rank_with_restart(
     return pr.select(F.col("v").alias("entity"), F.col("r").alias("rank_fp"))
 
 
-def k_hop(
-    edges: DataFrame,
-    seeds: DataFrame,
-    k: int = 2,
-    src: str = "src",
-    dst: str = "dst",
-    seed_col: str = "v",
-) -> DataFrame:
+def k_hop(edges: DataFrame, seeds: DataFrame, k: int = 2) -> DataFrame:
     """Entities within ``k`` directed hops of the seed set, each labeled
     with its MINIMUM hop distance. Frontier-expansion BFS: hop i+1 is
     one join of the hop-i frontier against the edge list; the final
     min-hop groupBy dedupes multi-path reachability. For fixed small k
     the lazy unroll is linear in k (each frontier feeds only the next),
     so no lineage cuts are needed."""
-    levels = [seeds.select(F.col(seed_col).alias("v")).distinct()]
+    levels = [seeds.select("v").distinct()]
     for _ in range(k):
         frontier = levels[-1]
         nxt = (
-            edges.join(frontier.withColumnRenamed("v", src), src)
-            .select(F.col(dst).alias("v"))
+            edges.join(frontier.withColumnRenamed("v", "src"), "src")
+            .select(F.col("dst").alias("v"))
             .distinct()
         )
         levels.append(nxt)
@@ -452,24 +438,19 @@ def component_dedup(
     vertices: DataFrame,
     edges: DataFrame,
     id_col: str,
-    src: str = "id_a",
-    dst: str = "id_b",
 ) -> DataFrame:
     """Keep exactly ONE vertex per duplicate component — the minimum id,
     which by construction equals the component label, so survivorship is
     the filter ``id == component``: no extra shuffle beyond the
     component computation itself."""
-    tagged = components_with_singletons(vertices, edges, id_col, src, dst)
+    tagged = components_with_singletons(vertices, edges, id_col, "id_a", "id_b")
     return tagged.filter(F.col(id_col) == F.col("component")).select(id_col)
 
 
 def common_neighbors(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     min_common: int = 2,
     hub_cap: int | None = None,
-    jaccard_scale: int = 10**6,
 ) -> DataFrame:
     """Link-prediction features over the UNDIRECTED graph: for every
     vertex pair sharing ≥ ``min_common`` neighbors, the common-neighbor
@@ -486,11 +467,11 @@ def common_neighbors(
     linear-idf argument). Degrees in the Jaccard stay the TRUE degrees.
     Pass None to disable (small graphs / oracle parity at full
     semantics)."""
-    und = _undirected(edges, src, dst)
+    und = _undirected(edges, "src", "dst")
     adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
-    return _pairs_from_adj(adj, min_common, hub_cap, jaccard_scale)
+    return _pairs_from_adj(adj, min_common, hub_cap)
 
 
 def common_neighbors_bipartite(
@@ -498,8 +479,6 @@ def common_neighbors_bipartite(
     center: str,
     side: str,
     min_common: int = 2,
-    hub_cap: int | None = None,
-    jaccard_scale: int = 10**6,
 ) -> DataFrame:
     """Bipartite common-neighbor features: pairs of ``side`` vertices
     sharing ≥ ``min_common`` distinct ``center`` neighbors (e.g. orders
@@ -510,14 +489,13 @@ def common_neighbors_bipartite(
     adj = edges.select(
         F.col(center).alias("u"), F.col(side).alias("v")
     ).distinct()
-    return _pairs_from_adj(adj, min_common, hub_cap, jaccard_scale)
+    return _pairs_from_adj(adj, min_common, None)
 
 
 def _pairs_from_adj(
     adj: DataFrame,
     min_common: int,
     hub_cap: int | None,
-    jaccard_scale: int,
 ) -> DataFrame:
     """Shared wedge-join core over a (center u, member v) adjacency:
     count per (v1, v2) pair of shared centers, filter, attach true
@@ -544,7 +522,7 @@ def _pairs_from_adj(
         .select(
             "id_a", "id_b", "common",
             F.expr(
-                f"(common * {jaccard_scale}L) div (deg_a + deg_b - common)"
+                "(common * 1000000L) div (deg_a + deg_b - common)"
             ).alias("jaccard_ppm"),
         )
     )
@@ -554,9 +532,6 @@ def negative_samples(
     triples: DataFrame,
     k: int = 3,
     side: str = "o",
-    s_col: str = "s",
-    r_col: str = "r",
-    o_col: str = "o",
 ) -> DataFrame:
     """Filtered negative sampling for KG-embedding training (the
     corruption scheme of TransE, Bordes et al. 2013, in the 'filtered'
@@ -581,15 +556,11 @@ def negative_samples(
 
     from .hashes import h60
 
-    if side not in (s_col, o_col, "s", "o"):
+    if side not in ("s", "o"):
         raise ValueError(f"side must be 's' or 'o', got {side!r}")
-    corrupt_col = o_col if side in (o_col, "o") else s_col
 
-    pos = triples.select(
-        F.col(s_col).alias("s"), F.col(r_col).alias("r"), F.col(o_col).alias("o")
-    ).distinct()
-    slot = "o" if corrupt_col == o_col else "s"
-    ents = pos.select(F.col(slot).alias("e")).distinct()
+    pos = triples.select("s", "r", "o").distinct()
+    ents = pos.select(F.col(side).alias("e")).distinct()
     idx_ents = ents.select(
         "e", (F.row_number().over(Window.orderBy("e")) - 1).cast("long").alias("_idx")
     )
@@ -606,16 +577,16 @@ def negative_samples(
                    F.col("_n")),
         )
         .join(broadcast(idx_ents), "_idx")
-        .filter(F.col("e") != F.col(slot))
+        .filter(F.col("e") != F.col(side))
     )
-    neg_name = f"{slot}_neg"
-    keep = ("s", "r") if slot == "o" else ("r", "o")
+    neg_name = f"{side}_neg"
+    keep = ("s", "r") if side == "o" else ("r", "o")
     cand = cand.select(
         *keep, F.col("e").alias(neg_name), F.col("j").cast("long").alias("j")
     )
     # filtered setting: a corrupted triple that happens to be a true
     # positive is removed, not emitted as a (false) negative
-    if slot == "o":
+    if side == "o":
         cond = (
             (cand["s"] == pos["s"]) & (cand["r"] == pos["r"])
             & (cand[neg_name] == pos["o"])
@@ -628,13 +599,7 @@ def negative_samples(
     return cand.join(pos, cond, "left_anti")
 
 
-def relation_profile(
-    triples: DataFrame,
-    scale: int = 10**6,
-    s_col: str = "s",
-    r_col: str = "r",
-    o_col: str = "o",
-) -> DataFrame:
+def relation_profile(triples: DataFrame) -> DataFrame:
     """Ontology-grade relation statistics: per relation, the triple /
     subject / object counts plus functionality and inverse-functionality
     in integer ppm (fun(r) = #subjects / #triples — the quantity AMIE's
@@ -646,28 +611,21 @@ def relation_profile(
     count(DISTINCT) phases expand but stay keyed on r); integer ppm via
     the split_thresholds discipline — no float division."""
     return (
-        triples.groupBy(F.col(r_col).alias("r"))
+        triples.groupBy("r")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_triples"),
-            F.countDistinct(F.col(s_col)).cast("long").alias("n_subjects"),
-            F.countDistinct(F.col(o_col)).cast("long").alias("n_objects"),
+            F.countDistinct(F.col("s")).cast("long").alias("n_subjects"),
+            F.countDistinct(F.col("o")).cast("long").alias("n_objects"),
         )
         .select(
             "r", "n_triples", "n_subjects", "n_objects",
-            F.expr(f"n_subjects * {scale}L div n_triples").alias("functionality_ppm"),
-            F.expr(f"n_objects * {scale}L div n_triples").alias("inv_functionality_ppm"),
+            F.expr("n_subjects * 1000000L div n_triples").alias("functionality_ppm"),
+            F.expr("n_objects * 1000000L div n_triples").alias("inv_functionality_ppm"),
         )
     )
 
 
-def rule_confidence(
-    triples: DataFrame,
-    min_support: int = 1,
-    scale: int = 10**6,
-    s_col: str = "s",
-    r_col: str = "r",
-    o_col: str = "o",
-) -> DataFrame:
+def rule_confidence(triples: DataFrame) -> DataFrame:
     """1-hop Horn-rule mining: for every ordered relation pair the
     standard confidence of ``r_body(x, y) => r_head(x, y)`` —
     support = #(x, y) pairs asserted under BOTH relations,
@@ -682,7 +640,7 @@ def rule_confidence(
     output is ~|facts| × avg-multiplicity, never quadratic in entities;
     the groupBy (body, head) output is |relations|² at most."""
     pairs = triples.select(
-        F.col(s_col).alias("s"), F.col(o_col).alias("o"), F.col(r_col).alias("r")
+        "s", "o", "r"
     ).distinct()
     body_n = pairs.groupBy(F.col("r").alias("r_body")).agg(
         F.count(F.lit(1)).cast("long").alias("n_body")
@@ -694,13 +652,12 @@ def rule_confidence(
         .filter(F.col("r_body") != F.col("r_head"))
         .groupBy("r_body", "r_head")
         .agg(F.count(F.lit(1)).cast("long").alias("support"))
-        .filter(F.col("support") >= min_support)
     )
     return (
         support.join(F.broadcast(body_n), "r_body")
         .select(
             "r_body", "r_head", "support", "n_body",
-            F.expr(f"support * {scale}L div n_body").alias("confidence_ppm"),
+            F.expr("support * 1000000L div n_body").alias("confidence_ppm"),
         )
     )
 
@@ -740,9 +697,6 @@ def transe_energy(
     dim: int = 8,
     mod: int = 1000,
     neg_mod: int = 100_000,
-    s_col: str = "s",
-    r_col: str = "r",
-    o_col: str = "o",
 ) -> DataFrame:
     """TransE energy scoring (Bordes et al. 2013) over deterministic
     hash-embeddings, with a per-triple corrupted-object margin — the
@@ -766,7 +720,7 @@ def transe_energy(
     join; the energy expression is unchanged."""
     from .hashes import h60
 
-    s, r, o = F.col(s_col), F.col(r_col), F.col(o_col)
+    s, r, o = F.col("s"), F.col("r"), F.col("o")
     o_neg = F.concat(
         F.lit("neg_"),
         (
@@ -932,10 +886,6 @@ def link_prediction(
     dim: int = 8,
     mod: int = 1000,
     test_mod: int = 200,
-    ks=(1, 3, 10),
-    s_col: str = "s",
-    r_col: str = "r",
-    o_col: str = "o",
 ) -> DataFrame:
     """Per-relation link-prediction metrics over
     :func:`link_prediction_ranks`: test count, MRR and Hits@k in
@@ -943,13 +893,12 @@ def link_prediction(
     sum. One partial-aggregatable groupBy on relation."""
     ranks = link_prediction_ranks(
         triples, dim=dim, mod=mod, test_mod=test_mod,
-        s_col=s_col, r_col=r_col, o_col=o_col,
     )
     hits = [
-        F.expr(f"(1000000L * sum(if(rank <= {int(k)}, 1L, 0L))) div count(1)")
+        F.expr(f"(1000000L * sum(if(rank <= {k}, 1L, 0L))) div count(1)")
         .cast("long")
-        .alias(f"hits{int(k)}_ppm")
-        for k in ks
+        .alias(f"hits{k}_ppm")
+        for k in (1, 3, 10)
     ]
     return ranks.groupBy("r").agg(
         F.count(F.lit(1)).cast("long").alias("n_test"),
@@ -964,10 +913,6 @@ def link_prediction(
 def chain_rule_confidence(
     triples: DataFrame,
     min_support: int = 1,
-    scale: int = 10**6,
-    s_col: str = "s",
-    r_col: str = "r",
-    o_col: str = "o",
 ) -> DataFrame:
     """2-hop Horn-rule (chain-rule) mining — the AMIE shape proper:
     for relation triples (r1, r2, r_head) the CWA confidence of
@@ -987,7 +932,7 @@ def chain_rule_confidence(
     (x, y, r1, r2) before the head join, so the head join moves paths,
     not path multiplicities; both groupBys partial-aggregate."""
     facts = triples.select(
-        F.col(s_col).alias("s"), F.col(r_col).alias("r"), F.col(o_col).alias("o")
+        "s", "r", "o"
     ).distinct()
     hop1 = facts.select(
         F.col("s").alias("x"), F.col("o").alias("z"), F.col("r").alias("r1")
@@ -1010,17 +955,11 @@ def chain_rule_confidence(
     )
     return support.join(F.broadcast(body_n), ["r1", "r2"]).select(
         "r1", "r2", "r_head", "support", "n_body",
-        F.expr(f"support * {scale}L div n_body").alias("confidence_ppm"),
+        F.expr("support * 1000000L div n_body").alias("confidence_ppm"),
     )
 
 
-def constraint_violations(
-    triples: DataFrame,
-    functional_rels,
-    s_col: str = "s",
-    r_col: str = "r",
-    o_col: str = "o",
-) -> DataFrame:
+def constraint_violations(triples: DataFrame, functional_rels) -> DataFrame:
     """Property-constraint checking, the KG-quality gate of
     Wikidata-style schemas: for relations DECLARED functional
     (single-value constraint), every subject holding more than one
@@ -1036,7 +975,7 @@ def constraint_violations(
     rels = sorted(set(functional_rels))
     if not rels:
         raise ValueError("functional_rels must be non-empty")
-    s, r, o = F.col(s_col), F.col(r_col), F.col(o_col)
+    s, r, o = F.col("s"), F.col("r"), F.col("o")
     return (
         triples.filter(r.isin(rels))
         .groupBy(s.alias("s"), r.alias("r"))
@@ -1080,8 +1019,6 @@ def lpa_sql_chain(edges_cte: str = "e", iterations: int = 3) -> str:
 def label_propagation_fixed(
     edges: DataFrame,
     iterations: int = 3,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     et al. 2007) made deterministic and engine-exact: a FIXED iteration
@@ -1103,7 +1040,7 @@ def label_propagation_fixed(
     Synchronous LPA can oscillate on bipartite structures — the
     fixed iteration count bounds that deterministically, as in the
     GraphFrames/Pregel formulation."""
-    sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("w"))
+    sym = edges.select(F.col("src").alias("u"), F.col("dst").alias("w"))
     sym = sym.union(
         sym.select(F.col("w").alias("u"), F.col("u").alias("w"))
     ).distinct().localCheckpoint(eager=True)
@@ -1150,12 +1087,7 @@ def _semi_naive(seen: DataFrame, grow, rounds: int) -> DataFrame:
     return seen
 
 
-def transitive_closure(
-    edges: DataFrame,
-    max_hops: int = 12,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def transitive_closure(edges: DataFrame, max_hops: int = 12) -> DataFrame:
     """Reachability closure of the directed graph: every pair
     ``(src, dst, min_hops)`` such that dst is reachable from src, with
     the MINIMUM hop count. Semi-naive datalog evaluation (the textbook
@@ -1178,7 +1110,7 @@ def transitive_closure(
     contract: run it on layered / DAG-ish KGs (ontology subsumption,
     containment hierarchies), not on social graphs."""
     e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        edges.select("src", "dst")
         .distinct()
         .localCheckpoint(eager=False)
     )
@@ -1331,9 +1263,6 @@ def rule_based_inference(
     triples: DataFrame,
     min_confidence_ppm: int = 300_000,
     min_support: int = 5,
-    s_col: str = "s",
-    r_col: str = "r",
-    o_col: str = "o",
 ) -> DataFrame:
     """KB COMPLETION by mined rules — the application half of the AMIE
     loop (:func:`chain_rule_confidence` mines; this infers): every
@@ -1352,7 +1281,7 @@ def rule_based_inference(
     known-fact anti-join and the best-rule groupBy are keyed on the
     candidate fact. Nothing moves at |facts|² anywhere."""
     facts = triples.select(
-        F.col(s_col).alias("s"), F.col(r_col).alias("r"), F.col(o_col).alias("o")
+        "s", "r", "o"
     ).distinct().localCheckpoint(eager=False)
     rules = chain_rule_confidence(facts, min_support=min_support).filter(
         F.col("confidence_ppm") >= min_confidence_ppm
@@ -1402,11 +1331,6 @@ def personalized_pagerank_fixed(
     seeds: DataFrame,
     iterations: int = 5,
     scale: int = 10**12,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    src: str = "src",
-    dst: str = "dst",
-    seed_col: str = "v",
 ) -> DataFrame:
     """Personalized PageRank (random walk with restart to a SEED set) in
     the same INTEGER fixed-point discipline as :func:`pagerank_fixed` —
@@ -1424,16 +1348,16 @@ def personalized_pagerank_fixed(
     aggregate + a broadcast seed-flag join, in the loop
     :func:`_rank_with_restart` shared with :func:`pagerank_fixed`."""
     e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
+        "src", "dst"
     ).localCheckpoint(eager=True)
-    sd = seeds.select(F.col(seed_col).alias("v")).distinct().localCheckpoint(
+    sd = seeds.select("v").distinct().localCheckpoint(
         eager=False
     )
     flagged = _vertices(e).join(
         F.broadcast(sd.withColumn("_is", F.lit(1))), "v", "left"
     ).select("v", F.coalesce("_is", F.lit(0)).alias("_is"))
     return _rank_with_restart(
-        e, flagged, sd.count(), iterations, scale, damping_num, damping_den
+        e, flagged, sd.count(), iterations, scale
     )
 
 
@@ -1442,15 +1366,13 @@ def ppr_sql_chain(
     seeds_cte: str = "sds",
     iterations: int = 5,
     scale: int = 10**12,
-    damping_num: int = 85,
-    damping_den: int = 100,
 ) -> str:
     """DuckDB twin of :func:`personalized_pagerank_fixed` (unrolled CTE
     chain; caller selects from ``ppr{iterations}``). ``seeds_cte`` must
     hold DISTINCT seed vertices in column ``v``."""
     tele = (
-        f"(({damping_den - damping_num}::BIGINT * {scale})"
-        f" // ({damping_den} * (SELECT n FROM pns)))"
+        f"((15::BIGINT * {scale})"
+        f" // (100 * (SELECT n FROM pns)))"
     )
     parts = [
         f"verts AS (SELECT src AS v FROM {edges_cte} UNION SELECT dst FROM {edges_cte})",
@@ -1477,9 +1399,9 @@ def ppr_sql_chain(
         parts.append(
             f"""ppr{i} AS (
   SELECT f.v, (f.isd * {tele}
-    + ({damping_num}::BIGINT * (coalesce(i{i}.s, 0)
+    + (85::BIGINT * (coalesce(i{i}.s, 0)
        + (f.isd * ((SELECT d FROM pdang{i}) // (SELECT n FROM pns)))))
-      // {damping_den})::BIGINT AS r
+      // 100)::BIGINT AS r
   FROM pfl f LEFT JOIN pinf{i} i{i} ON i{i}.v = f.v)"""
         )
     return ",\n".join(parts)
@@ -1488,9 +1410,6 @@ def ppr_sql_chain(
 def hits_fixed(
     edges: DataFrame,
     iterations: int = 3,
-    scale: int = 10**6,
-    src: str = "src",
-    dst: str = "dst",
     dedup_edges: bool = True,
 ) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999) in INTEGER fixed-point
@@ -1501,9 +1420,9 @@ def hits_fixed(
     normalized out-flow of authority mass — two edges⋈scores joins +
     two partial-agg groupBys + two lazy 1-row totals; lineage cut per
     iteration. Returns ``(entity, hub_fp, auth_fp)`` in units of
-    1/scale. ``scale`` stays at 1e6 so raw·scale fits signed-64 even at
-    web in-degrees (raw ≤ scale·deg)."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    1/scale. The scale is 1e6 so raw·scale fits signed-64 even at web
+    in-degrees (raw ≤ scale·deg)."""
+    e = edges.select("src", "dst")
     if dedup_edges:
         # pass dedup_edges=False when the input is already distinct —
         # the defensive dedup is then a full redundant shuffle
@@ -1527,20 +1446,20 @@ def hits_fixed(
                 F.when(
                     F.col("s").isNull(), F.lit(0).cast("long")
                 ).otherwise(
-                    F.expr(f"(s * {scale}L) div t")
+                    F.expr("(s * 1000000L) div t")
                 ).alias("r"),
             )
         )
 
-    h = verts.select("v", F.lit(scale).cast("long").alias("r"))
-    a = None
-    for _it in range(iterations):
-        a = flow(h, "src", "dst")
-        # one cut per iteration (on h) bounds the plan; a is cut only
-        # once, after the last iteration
-        if _it == iterations - 1:
-            a = a.localCheckpoint(eager=False)
-        h = flow(a, "dst", "src").localCheckpoint(eager=False)
+    # one cut per iteration (on h) bounds the plan; a is cut only once,
+    # after the last iteration
+    h = _iterate(
+        verts.select("v", F.lit(10**6).cast("long").alias("r")),
+        lambda h: flow(flow(h, "src", "dst"), "dst", "src"),
+        iterations - 1, every=1,
+    )
+    a = flow(h, "src", "dst").localCheckpoint(eager=False)
+    h = flow(a, "dst", "src").localCheckpoint(eager=False)
     return (
         h.withColumnRenamed("r", "hub_fp")
         .join(a.withColumnRenamed("r", "auth_fp"), "v")
@@ -1548,9 +1467,7 @@ def hits_fixed(
     )
 
 
-def hits_sql_chain(
-    edges_cte: str = "e", iterations: int = 3, scale: int = 10**6
-) -> str:
+def hits_sql_chain(edges_cte: str = "e", iterations: int = 3) -> str:
     """DuckDB twin of :func:`hits_fixed` (unrolled CTE chain; caller
     selects entity/hub_fp/auth_fp from ``hsel``)."""
     # every CTE is MATERIALIZED: the a/h frames are each referenced
@@ -1560,7 +1477,7 @@ def hits_sql_chain(
     # as kcore_sql_chain
     parts = [
         f"hverts AS MATERIALIZED (SELECT src AS v FROM {edges_cte} UNION SELECT dst FROM {edges_cte})",
-        f"h0 AS MATERIALIZED (SELECT v, {scale}::BIGINT AS r FROM hverts)",
+        "h0 AS MATERIALIZED (SELECT v, 1000000::BIGINT AS r FROM hverts)",
     ]
     for i in range(1, iterations + 1):
         p = f"h{i - 1}"
@@ -1573,7 +1490,7 @@ def hits_sql_chain(
         parts.append(
             f"""a{i} AS MATERIALIZED (
   SELECT v.v, CASE WHEN ar.s IS NULL THEN 0
-    ELSE (ar.s * {scale}) // (SELECT t FROM at{i}) END::BIGINT AS r
+    ELSE (ar.s * 1000000) // (SELECT t FROM at{i}) END::BIGINT AS r
   FROM hverts v LEFT JOIN ar{i} ar ON ar.v = v.v)"""
         )
         parts.append(
@@ -1585,7 +1502,7 @@ def hits_sql_chain(
         parts.append(
             f"""h{i} AS MATERIALIZED (
   SELECT v.v, CASE WHEN hr.s IS NULL THEN 0
-    ELSE (hr.s * {scale}) // (SELECT t FROM ht{i}) END::BIGINT AS r
+    ELSE (hr.s * 1000000) // (SELECT t FROM ht{i}) END::BIGINT AS r
   FROM hverts v LEFT JOIN hr{i} hr ON hr.v = v.v)"""
         )
     parts.append(
@@ -1596,13 +1513,7 @@ def hits_sql_chain(
     return ",\n".join(parts)
 
 
-def kcore_fixed(
-    edges: DataFrame,
-    k: int = 2,
-    rounds: int = 8,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def kcore_fixed(edges: DataFrame, k: int = 2, rounds: int = 8) -> DataFrame:
     """k-core decomposition by fixed-round peeling (Seidman 1983; the
     Matula-Beck peel made engine-exact): repeatedly delete vertices of
     undirected degree < ``k`` and the edges they carry. Runs EXACTLY
@@ -1626,7 +1537,7 @@ def kcore_fixed(
             .select("a", "b")
         )
 
-    und = _undirected(edges, src, dst).localCheckpoint(eager=True)
+    und = _undirected(edges, "src", "dst").localCheckpoint(eager=True)
     und = _iterate(und, peel, rounds, every=2)
     return _undirected_degree(und).select(
         F.col("v").alias("entity"), F.col("deg").alias("core_deg")
@@ -1667,9 +1578,6 @@ def bellman_ford_fixed(
     seeds: DataFrame,
     rounds: int = 6,
     weight: str = None,
-    src: str = "src",
-    dst: str = "dst",
-    seed_col: str = "v",
 ) -> DataFrame:
     """Multi-source shortest paths over integer edge weights by
     fixed-round Bellman-Ford relaxation — the relational SSSP. Each
@@ -1687,10 +1595,10 @@ def bellman_ford_fixed(
     an answer."""
     w = F.col(weight).cast("long") if weight else F.lit(1).cast("long")
     e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w")
+        "src", "dst", w.alias("w")
     ).localCheckpoint(eager=True)
     dist = seeds.select(
-        F.col(seed_col).alias("v"), F.lit(0).cast("long").alias("d")
+        "v", F.lit(0).cast("long").alias("d")
     ).distinct()
 
     def relax(dist):
@@ -1735,9 +1643,6 @@ def random_walks_fixed(
     edges: DataFrame,
     seeds: DataFrame,
     steps: int = 4,
-    src: str = "src",
-    dst: str = "dst",
-    seed_col: str = "v",
 ) -> DataFrame:
     """Deterministic random-walk corpus (the DeepWalk/node2vec training
     -data generator, p=q=1): one walk per seed, ``steps`` transitions;
@@ -1757,7 +1662,7 @@ def random_walks_fixed(
     state per walk is O(1)."""
     from .hashes import affine_mix, h60
 
-    adj = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).distinct()
+    adj = edges.select(F.col("src").alias("s"), F.col("dst").alias("t")).distinct()
     from pyspark.sql import Window
 
     ranked = adj.select(
@@ -1770,7 +1675,7 @@ def random_walks_fixed(
     od = ranked.groupBy("s").agg(
         F.count(F.lit(1)).cast("long").alias("od")
     ).localCheckpoint(eager=False)
-    cur = seeds.select(F.col(seed_col).alias("walk_id")).distinct().select(
+    cur = seeds.select(F.col("v").alias("walk_id")).distinct().select(
         "walk_id",
         F.lit(0).cast("int").alias("step"),
         F.col("walk_id").alias("entity"),
@@ -1834,13 +1739,7 @@ def random_walks_sql_chain(
     return ",\n".join(parts)
 
 
-def entity_summary(
-    facts: DataFrame,
-    top_k: int = 2,
-    s: str = "s",
-    r: str = "r",
-    o: str = "o",
-) -> DataFrame:
+def entity_summary(facts: DataFrame, top_k: int = 2) -> DataFrame:
     """Entity summarization: per subject, the ``top_k`` most
     INFORMATIVE facts, informativeness = relation rarity (global
     relation frequency ascending — the IDF intuition: 'located_in' on
@@ -1854,7 +1753,7 @@ def entity_summary(
     bounded output (top_k per subject), never a global sort."""
     from pyspark.sql import Window
 
-    fd = facts.select(F.col(s).alias("s"), F.col(r).alias("r"), F.col(o).alias("o")).distinct()
+    fd = facts.select("s", "r", "o").distinct()
     rel_n = fd.groupBy("r").agg(F.count(F.lit(1)).cast("long").alias("rel_n"))
     win = Window.partitionBy("s").orderBy(
         F.asc("rel_n"), F.asc("r"), F.asc("o")
@@ -1866,15 +1765,7 @@ def entity_summary(
     )
 
 
-def resource_allocation_index(
-    facts: DataFrame,
-    pairs: DataFrame,
-    scale: int = 10**6,
-    s: str = "s",
-    o: str = "o",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
+def resource_allocation_index(facts: DataFrame, pairs: DataFrame) -> DataFrame:
     """Resource-Allocation link-prediction index (Zhou, Lü & Zhang
     2009) for a CANDIDATE PAIR PANEL: ``RA(x,y) = Σ_{z ∈ Γout(x) ∩
     Γout(y)} scale // deg_in(z)`` in integer units of 1/scale — the
@@ -1890,11 +1781,11 @@ def resource_allocation_index(
     broadcast in-degree annotate, one partial-agg groupBy. The panel
     is whatever upstream candidate generation (LSH, ANN, co-citation
     df-cut) produced."""
-    fd = facts.select(F.col(s).alias("s"), F.col(o).alias("o")).distinct()
+    fd = facts.select("s", "o").distinct()
     deg = fd.groupBy(F.col("o").alias("z")).agg(
         F.count(F.lit(1)).cast("long").alias("dz")
     )
-    p = pairs.select(F.col(x_col).alias("x"), F.col(y_col).alias("y")).distinct()
+    p = pairs.select("x", "y").distinct()
     wedges = (
         p.join(fd.select(F.col("s").alias("x"), F.col("o").alias("z")), "x")
         .join(fd.select(F.col("s").alias("y"), F.col("o").alias("z")), ["y", "z"])
@@ -1904,20 +1795,12 @@ def resource_allocation_index(
         .groupBy("x", "y")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_common"),
-            F.sum(F.expr(f"{scale}L div dz")).cast("long").alias("ra_fp"),
+            F.sum(F.expr("1000000L div dz")).cast("long").alias("ra_fp"),
         )
     )
 
 
-def bgp_match(
-    facts,
-    patterns,
-    s_col: str = "s",
-    r_col: str = "r",
-    o_col: str = "o",
-    optionals=None,
-    negations=None,
-):
+def bgp_match(facts, patterns, optionals=None, negations=None):
     """SPARQL-style basic-graph-pattern matcher: compile a list of
     triple patterns ``(s, p, o)`` — strings starting with ``?`` are
     variables, anything else a constant — into a DataFrame join plan
@@ -1944,7 +1827,7 @@ def bgp_match(
     def compile_one(ps, pp, po):
         t = facts
         rename = {}
-        for val, col in ((ps, s_col), (pp, r_col), (po, o_col)):
+        for val, col in ((ps, "s"), (pp, "r"), (po, "o")):
             if val.startswith("?"):
                 v = val[1:]
                 if v in rename:  # repeated var within the pattern

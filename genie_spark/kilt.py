@@ -30,9 +30,7 @@ def filter_matching_status(
     return df.filter(F.col("instance_matching_status").isin(list(allowed)))
 
 
-def filter_relations_drop(
-    df: DataFrame, drop: Sequence[str]
-) -> DataFrame:
+def filter_relations_drop(df: DataFrame, drop: Sequence[str]) -> DataFrame:
     """F2 (datasets.py:171-185): drop the whole sample if ANY triple's
     relation is in the drop set."""
     drop_arr = F.array(*[F.lit(r) for r in drop])
@@ -41,9 +39,7 @@ def filter_relations_drop(
     )
 
 
-def filter_relations_keep(
-    df: DataFrame, keep: Sequence[str]
-) -> DataFrame:
+def filter_relations_keep(df: DataFrame, keep: Sequence[str]) -> DataFrame:
     """F3 (datasets.py:187-201): drop the sample if any triple's relation
     falls OUTSIDE the keep set."""
     keep_arr = F.array(*[F.lit(r) for r in keep])
@@ -52,10 +48,7 @@ def filter_relations_keep(
     )
 
 
-def drop_ignored_relations(
-    df: DataFrame,
-    ignore: Sequence[str],
-) -> DataFrame:
+def drop_ignored_relations(df: DataFrame, ignore: Sequence[str]) -> DataFrame:
     """F4+F5+re-linearize (datasets.py:106-123, 263-267): remove individual
     triples whose relation is ignored, re-format the target string, and
     drop samples whose triple set became empty."""

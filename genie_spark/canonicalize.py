@@ -192,7 +192,6 @@ def write_graph(
     graph: DataFrame,
     path: str,
     mode: str = "append",
-    partition_by: Optional[str] = "pred",
     table: Optional[str] = None,
 ) -> str:
     """Materialize the graph table. With an Iceberg runtime and ``table``
@@ -207,20 +206,11 @@ def write_graph(
         table or "genie.graph",
         path,
         mode=mode,
-        partition_by=partition_by,
+        partition_by="pred",
     )
 
 
-def fuzzy_candidates(
-    mentions: DataFrame,
-    catalog: DataFrame,
-    max_block_df: int = 1_000_000,
-    mention_col: str = "mention",
-    mention_id_col: str = "mention_id",
-    name_col: str = "name",
-    id_col: str = "id",
-    max_dist: Optional[int] = None,
-) -> DataFrame:
+def fuzzy_candidates(mentions: DataFrame, catalog: DataFrame) -> DataFrame:
     """Blocked + scored fuzzy-link candidate pairs — the shared first
     two stages of :func:`fuzzy_link` (token blocking with a df-cut,
     then full-string Levenshtein), WITHOUT the per-mention argmin.
@@ -231,38 +221,24 @@ def fuzzy_candidates(
     thresholded candidate graph (transitive clustering over every pair
     with dist <= t), whereas entity LINKING keeps only the argmin.
 
-    ``max_dist``: when the caller only wants pairs within a distance
-    bound, passing it here prunes BEFORE the DP scoring:
-    |len(a) - len(b)| <= lev(a, b), so pairs whose length gap exceeds
-    the bound drop on a row-local length compare (cheap), and the
-    surviving pairs score through Spark 4's thresholded
-    ``levenshtein(l, r, t)`` (the JVM early-exits the DP once the band
-    exceeds t and returns -1, which the filter then drops). Same result
-    set as post-filtering full scores — measured 37.7s -> seconds on
-    the sf0.1 ER query, where hub-token blocking admits ~15M pairs but
-    almost none are within distance 1.
-
     Scale shape (100 TB): the token-blocking join shuffles on the token
     key with the df-cut bounding per-key fan-out; scoring is row-local.
     No all-pairs stage anywhere. Internally everything up to scoring
     runs over DISTINCT SURFACE FORMS (:func:`fuzzy_candidate_strings`)
     — duplicate catalog listings / repeated mention strings score once
     — and the result expands back to ids with two equi-joins."""
-    spairs = fuzzy_candidate_strings(
-        mentions, catalog, max_block_df,
-        mention_col, name_col, id_col, max_dist=max_dist,
-    )
+    spairs = fuzzy_candidate_strings(mentions, catalog)
     return (
-        spairs.join(mentions.select(mention_id_col, mention_col), mention_col)
+        spairs.join(mentions.select("mention_id", "mention"), "mention")
         .join(
             catalog.select(
-                F.col(id_col).alias("entity_id"),
-                F.col(name_col).alias("entity_name"),
+                F.col("id").alias("entity_id"),
+                F.col("name").alias("entity_name"),
             ),
             "entity_name",
         )
         .select(
-            mention_id_col, mention_col, "dist", "entity_id", "entity_name"
+            "mention_id", "mention", "dist", "entity_id", "entity_name"
         )
     )
 
@@ -271,9 +247,6 @@ def fuzzy_candidate_strings(
     mentions: DataFrame,
     catalog: DataFrame,
     max_block_df: int = 1_000_000,
-    mention_col: str = "mention",
-    name_col: str = "name",
-    id_col: str = "id",
     max_dist: Optional[int] = None,
 ) -> DataFrame:
     """The string-level core of fuzzy candidate generation: blocked +
@@ -294,10 +267,10 @@ def fuzzy_candidate_strings(
     through Spark 4's thresholded ``levenshtein(l, r, t)`` (JVM
     early-exit, -1 past the bound). Same result set as post-filtering
     full scores."""
-    dnames = catalog.groupBy(F.col(name_col).alias("_name")).agg(
+    dnames = catalog.groupBy(F.col("name").alias("_name")).agg(
         F.count(F.lit(1)).cast("long").alias("_n_ids")
     )
-    dmen = mentions.select(F.col(mention_col).alias("_mention")).distinct()
+    dmen = mentions.select(F.col("mention").alias("_mention")).distinct()
 
     def toks(df, keyc):
         return (
@@ -333,7 +306,7 @@ def fuzzy_candidate_strings(
     else:
         lev = F.levenshtein(F.col("_mention"), F.col("_name"))
     scored = cand.select(
-        F.col("_mention").alias(mention_col),
+        F.col("_mention").alias("mention"),
         F.col("_name").alias("entity_name"),
         lev.cast("long").alias("dist"),
     )
@@ -349,10 +322,6 @@ def fuzzy_link(
     mentions: DataFrame,
     catalog: DataFrame,
     max_block_df: int = 1_000_000,
-    mention_col: str = "mention",
-    mention_id_col: str = "mention_id",
-    name_col: str = "name",
-    id_col: str = "id",
 ) -> DataFrame:
     """Approximate entity linking for surface forms exact-match (J1,
     surface_to_id) cannot resolve — the standard blocked-ER shape
@@ -386,16 +355,13 @@ def fuzzy_link(
     one row per distinct (mention, name) pair, never the expanded
     candidate set. Mention ids fan back in with one equi-join at the
     end."""
-    spairs = fuzzy_candidate_strings(
-        mentions, catalog, max_block_df,
-        mention_col, name_col, id_col,
-    )
+    spairs = fuzzy_candidate_strings(mentions, catalog, max_block_df)
     name_min_id = catalog.groupBy(
-        F.col(name_col).alias("entity_name")
-    ).agg(F.min(F.col(id_col)).alias("_min_id"))
+        F.col("name").alias("entity_name")
+    ).agg(F.min(F.col("id")).alias("_min_id"))
     best = (
         spairs.join(name_min_id, "entity_name")
-        .groupBy(mention_col)
+        .groupBy("mention")
         .agg(
             F.min(
                 F.struct(
@@ -407,10 +373,10 @@ def fuzzy_link(
         )
     )
     return best.join(
-        mentions.select(mention_id_col, mention_col), mention_col
+        mentions.select("mention_id", "mention"), "mention"
     ).select(
-        mention_id_col,
-        mention_col,
+        "mention_id",
+        "mention",
         F.col("_b.dist").alias("dist"),
         F.col("_b.entity_id").alias("entity_id"),
         F.col("_b.entity_name").alias("entity_name"),
@@ -422,10 +388,6 @@ def resolve_entities(
     catalog: DataFrame,
     max_dist: int = 1,
     max_block_df: int = 1_000_000,
-    mention_col: str = "mention",
-    mention_id_col: str = "mention_id",
-    name_col: str = "name",
-    id_col: str = "id",
 ) -> DataFrame:
     """Collective entity resolution: transitive clustering over the
     THRESHOLDED fuzzy-candidate graph. Where :func:`fuzzy_link` keeps
@@ -452,25 +414,24 @@ def resolve_entities(
     from .datapipe.graph import connected_components
 
     spairs = fuzzy_candidate_strings(
-        mentions, catalog, max_block_df,
-        mention_col, name_col, id_col, max_dist=max_dist,
+        mentions, catalog, max_block_df, max_dist=max_dist
     )
     # string-level quotient edges: kind-tagged so a mention string that
     # equals a catalog name stays two distinct quotient nodes
     sedges = spairs.select(
-        F.concat(F.lit("m\x01"), F.col(mention_col)).alias("id_a"),
+        F.concat(F.lit("m\x01"), F.col("mention")).alias("id_a"),
         F.concat(F.lit("e\x01"), F.col("entity_name")).alias("id_b"),
     ).distinct()
     scomp = connected_components(sedges).withColumnRenamed("id", "key")
     nodes = (
         mentions.select(
-            F.concat(F.lit("M"), F.col(mention_id_col).cast("string")).alias("node"),
-            F.concat(F.lit("m\x01"), F.col(mention_col)).alias("key"),
+            F.concat(F.lit("M"), F.col("mention_id").cast("string")).alias("node"),
+            F.concat(F.lit("m\x01"), F.col("mention")).alias("key"),
         )
         .union(
             catalog.select(
-                F.concat(F.lit("E"), F.col(id_col).cast("string")).alias("node"),
-                F.concat(F.lit("e\x01"), F.col(name_col)).alias("key"),
+                F.concat(F.lit("E"), F.col("id").cast("string")).alias("node"),
+                F.concat(F.lit("e\x01"), F.col("name")).alias("key"),
             )
         )
         .distinct()
@@ -492,13 +453,7 @@ def resolve_entities(
     )
 
 
-def fuse_latest(
-    assertions: DataFrame,
-    s_col: str = "s",
-    r_col: str = "r",
-    o_col: str = "o",
-    ts_col: str = "ts",
-) -> DataFrame:
+def fuse_latest(assertions: DataFrame) -> DataFrame:
     """Knowledge fusion over timestamped assertions: latest-object-wins
     per (subject, relation) plus conflict accounting — the temporal step
     after materialize_graph when the same fact is re-extracted from
@@ -513,12 +468,12 @@ def fuse_latest(
     the one aggregation."""
     return (
         assertions.groupBy(
-            F.col(s_col).alias("s"), F.col(r_col).alias("r")
+            "s", "r"
         )
         .agg(
-            F.max(F.struct(F.col(ts_col).alias("ts"), F.col(o_col).alias("o"))).alias("_w"),
+            F.max(F.struct("ts", "o")).alias("_w"),
             F.count(F.lit(1)).cast("long").alias("n_assertions"),
-            F.countDistinct(F.col(o_col)).cast("long").alias("n_objects"),
+            F.countDistinct(F.col("o")).cast("long").alias("n_objects"),
         )
         .select(
             "s",
@@ -532,12 +487,7 @@ def fuse_latest(
     )
 
 
-def fuse_vote(
-    assertions: DataFrame,
-    s_col: str = "s",
-    r_col: str = "r",
-    o_col: str = "o",
-) -> DataFrame:
+def fuse_vote(assertions: DataFrame) -> DataFrame:
     """Knowledge fusion by majority vote: per (subject, relation) the
     object asserted by the most sources wins (ties break to the
     greatest object — deterministic), with margin accounting. The
@@ -555,9 +505,9 @@ def fuse_vote(
     margin_ppm = winner votes in ppm of all votes (integer floor-div,
     oracle-exact); 1_000_000 means unanimous."""
     votes = assertions.groupBy(
-        F.col(s_col).alias("s"),
-        F.col(r_col).alias("r"),
-        F.col(o_col).alias("o"),
+        "s",
+        "r",
+        "o",
     ).agg(F.count(F.lit(1)).cast("long").alias("n_votes"))
     return (
         votes.groupBy("s", "r")
@@ -578,12 +528,7 @@ def fuse_vote(
     )
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    key_cols: tuple = ("s", "r"),
-    val_col: str = "o_latest",
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Diff two fused-graph snapshots (e.g. :func:`fuse_latest` outputs
     from two crawl cuts): per (subject, relation) key, status is
     'added' (key only in new), 'removed' (only in old), 'changed'
@@ -596,12 +541,12 @@ def snapshot_diff(
     text, no fact table. Callers normally filter status != 'unchanged'
     (the diff is small relative to the graph; the filter happens after
     the join because 'unchanged' needs both sides to decide)."""
-    keys = list(key_cols)
+    keys = ["s", "r"]
     o = old.select(
-        *keys, F.col(val_col).alias("o_old"), F.lit(1).alias("_in_old")
+        *keys, F.col("o_latest").alias("o_old"), F.lit(1).alias("_in_old")
     )
     n = new.select(
-        *keys, F.col(val_col).alias("o_new"), F.lit(1).alias("_in_new")
+        *keys, F.col("o_latest").alias("o_new"), F.lit(1).alias("_in_new")
     )
     return o.join(n, keys, "full_outer").select(
         *keys,
@@ -615,14 +560,7 @@ def snapshot_diff(
     )
 
 
-def triple_evidence(
-    assertions: DataFrame,
-    s_col: str = "s",
-    r_col: str = "r",
-    o_col: str = "o",
-    ts_col: str = "ts",
-    src_col: str = "src",
-) -> DataFrame:
+def triple_evidence(assertions: DataFrame) -> DataFrame:
     """Provenance/evidence aggregation per distinct triple: how many
     assertions and distinct sources back it, its first/last sighting,
     and a deterministic representative source (min) — the evidence set
@@ -635,25 +573,19 @@ def triple_evidence(
     (count, min, max, countDistinct) map-side combines; no second
     shuffle, no window."""
     return assertions.groupBy(
-        F.col(s_col).alias("s"),
-        F.col(r_col).alias("r"),
-        F.col(o_col).alias("o"),
+        "s",
+        "r",
+        "o",
     ).agg(
         F.count(F.lit(1)).cast("long").alias("n_assertions"),
-        F.countDistinct(F.col(src_col)).cast("long").alias("n_sources"),
-        F.min(F.col(ts_col)).alias("first_ts"),
-        F.max(F.col(ts_col)).alias("last_ts"),
-        F.min(F.col(src_col)).alias("src_sample"),
+        F.countDistinct(F.col("src")).cast("long").alias("n_sources"),
+        F.min(F.col("ts")).alias("first_ts"),
+        F.max(F.col("ts")).alias("last_ts"),
+        F.min(F.col("src")).alias("src_sample"),
     )
 
 
-def fuse_weighted(
-    assertions: DataFrame,
-    s_col: str = "s",
-    r_col: str = "r",
-    o_col: str = "o",
-    w_col: str = "w",
-) -> DataFrame:
+def fuse_weighted(assertions: DataFrame) -> DataFrame:
     """Weight-aware knowledge fusion: per (subject, relation) the
     object with the greatest TOTAL integer weight wins (source-trust /
     quality-score voting; ties break to the greatest object). Same
@@ -662,10 +594,10 @@ def fuse_weighted(
     second moves one row per distinct object. margin_ppm = winner
     weight in ppm of all weight (integer floor-div)."""
     sums = assertions.groupBy(
-        F.col(s_col).alias("s"),
-        F.col(r_col).alias("r"),
-        F.col(o_col).alias("o"),
-    ).agg(F.sum(F.col(w_col)).cast("long").alias("w_sum"))
+        "s",
+        "r",
+        "o",
+    ).agg(F.sum(F.col("w")).cast("long").alias("w_sum"))
     return (
         sums.groupBy("s", "r")
         .agg(
@@ -685,13 +617,7 @@ def fuse_weighted(
     )
 
 
-def link_prior(
-    catalog: DataFrame,
-    support: DataFrame,
-    name_col: str = "name",
-    id_col: str = "id",
-    support_col: str = "support",
-) -> DataFrame:
+def link_prior(catalog: DataFrame, support: DataFrame) -> DataFrame:
     """Commonness-prior entity disambiguation — the popularity baseline
     of entity linking (the P(entity|mention) prior of Wikipedia-anchor
     linkers): for every surface form the candidate with the highest KG
@@ -708,11 +634,11 @@ def link_prior(
     groupBy on the surface form decides every winner — partial-agg
     map-side, no window over facts, no collect."""
     cand = catalog.select(
-        F.col(name_col).alias("name"), F.col(id_col).cast("long").alias("id")
+        "name", F.col("id").cast("long").alias("id")
     ).join(
         support.select(
-            F.col(id_col).cast("long").alias("id"),
-            F.col(support_col).cast("long").alias("support"),
+            F.col("id").cast("long").alias("id"),
+            F.col("support").cast("long").alias("support"),
         ),
         "id",
         "left",
@@ -720,7 +646,7 @@ def link_prior(
     neg = F.lit(0).cast("long") - F.coalesce(
         F.col("support"), F.lit(0).cast("long")
     )
-    key = F.struct(neg.alias("ns"), F.col("id").alias("id"))
+    key = F.struct(neg.alias("ns"), "id")
     return (
         cand.groupBy("name")
         .agg(
@@ -736,13 +662,7 @@ def link_prior(
     )
 
 
-def fact_intervals(
-    assertions: DataFrame,
-    s_col: str = "s",
-    r_col: str = "r",
-    o_col: str = "o",
-    ts_col: str = "ts",
-) -> DataFrame:
+def fact_intervals(assertions: DataFrame) -> DataFrame:
     """Temporal fact VERSIONING: collapse the timestamped assertion
     stream into validity intervals per (subject, relation) — each run of
     consecutive assertions of the same object becomes one version
@@ -764,30 +684,30 @@ def fact_intervals(
     already keyed); no global sort anywhere."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(s_col, r_col).orderBy(ts_col, o_col)
+    w = Window.partitionBy("s", "r").orderBy("ts", "o")
     chg = F.when(
-        F.lag(o_col).over(w).isNull()
-        | (F.col(o_col) != F.lag(o_col).over(w)),
+        F.lag("o").over(w).isNull()
+        | (F.col("o") != F.lag("o").over(w)),
         1,
     ).otherwise(0)
     ver = (
-        assertions.select(s_col, r_col, o_col, ts_col)
+        assertions.select("s", "r", "o", "ts")
         .withColumn("_chg", chg)
         .withColumn(
             "_ver",
             F.sum("_chg").over(w.rowsBetween(Window.unboundedPreceding, 0)),
         )
     )
-    runs = ver.groupBy(s_col, r_col, "_ver").agg(
-        F.min(o_col).alias(o_col),
-        F.min(ts_col).alias("_from"),
+    runs = ver.groupBy("s", "r", "_ver").agg(
+        F.min("o").alias("o"),
+        F.min("ts").alias("_from"),
         F.count(F.lit(1)).cast("long").alias("n_assertions"),
     )
-    wv = Window.partitionBy(s_col, r_col).orderBy("_ver")
+    wv = Window.partitionBy("s", "r").orderBy("_ver")
     return runs.withColumn("_to", F.lead("_from").over(wv)).select(
-        s_col,
-        r_col,
-        o_col,
+        "s",
+        "r",
+        "o",
         F.col("_ver").cast("long").alias("version"),
         F.unix_timestamp("_from").cast("bigint").alias("valid_from_epoch"),
         F.unix_timestamp("_to").cast("bigint").alias("valid_to_epoch"),
@@ -795,13 +715,7 @@ def fact_intervals(
     )
 
 
-def asof_snapshot(
-    intervals: DataFrame,
-    at_epoch: int,
-    s_col: str = "s",
-    r_col: str = "r",
-    o_col: str = "o",
-) -> DataFrame:
+def asof_snapshot(intervals: DataFrame, at_epoch: int) -> DataFrame:
     """Time-travel query over :func:`fact_intervals` output: the graph
     AS OF ``at_epoch`` — the version whose interval covers the instant
     (valid_from ≤ t < valid_to, open current intervals included). A pure
@@ -814,9 +728,9 @@ def asof_snapshot(
         (F.col("valid_from_epoch") <= t)
         & (F.col("valid_to_epoch").isNull() | (F.col("valid_to_epoch") > t))
     ).select(
-        s_col,
-        r_col,
-        o_col,
+        "s",
+        "r",
+        "o",
         (t - F.col("valid_from_epoch")).cast("bigint").alias("valid_for_s"),
     )
 

@@ -38,15 +38,13 @@ def shingles_col(text: Column, k: int = 3) -> Column:
     return F.when(n >= k, F.array_distinct(make)).otherwise(F.array(F.concat_ws(" ", w)))
 
 
-def exact_dedup(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact dedup: md5 the text, keep the smallest id per hash. Returns
     (text_hash, keep_id, n_dups). One shuffle on the 128-bit hash."""
     return (
-        docs.select(F.md5(F.col(text_col)).alias("text_hash"), F.col(id_col))
+        docs.select(F.md5(F.col("text")).alias("text_hash"), F.col("doc_id"))
         .groupBy("text_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("n_dups"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_dups"))
     )
 
 
@@ -89,8 +87,8 @@ def _declared_partitions(df: DataFrame) -> int:
         return 0
 
 
-def spread_for_compute(docs: DataFrame, factor: int = 1) -> DataFrame:
-    """Round-robin repartition to ``defaultParallelism × factor`` unless
+def spread_for_compute(docs: DataFrame) -> DataFrame:
+    """Round-robin repartition to ``defaultParallelism`` partitions unless
     the plan already declares at least that partitioning. CPU-bound
     row-local stages (hashing every shingle) need partition count to
     track CORES, not input bytes: a single small parquet file splits into
@@ -102,7 +100,7 @@ def spread_for_compute(docs: DataFrame, factor: int = 1) -> DataFrame:
     the safe default when the downstream stage is compute-dominant, and
     the shuffle moves only the rows this stage was going to read anyway,
     exactly once."""
-    target = docs.sparkSession.sparkContext.defaultParallelism * factor
+    target = docs.sparkSession.sparkContext.defaultParallelism
     if _declared_partitions(docs) < target:
         docs = docs.repartition(target)
     return docs
@@ -182,7 +180,6 @@ def minhash_jaccard_pairs(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
@@ -191,7 +188,7 @@ def minhash_jaccard_pairs(
     signature-estimated Jaccard ≥ threshold. Returns
     (id_a, id_b, est_jaccard)."""
     rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(docs, text_col, id_col, k, num_hashes).cache()
+    sigs = minhash_signatures(docs, text_col, id_col, 3, num_hashes).cache()
     cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band)
     sa = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
@@ -215,9 +212,6 @@ def minhash_jaccard_pairs(
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
     threshold: float = 0.5,
     max_df: Optional[int] = None,
 ) -> DataFrame:
@@ -233,7 +227,7 @@ def ngram_jaccard_pairs(
     contributes at most max_df·(max_df−1)/2 pairs. ``max_df=None``
     preserves the exact-Jaccard semantics for small corpora."""
     sh = spread_for_compute(docs).select(
-        F.col(id_col), F.explode(shingles_col(F.col(text_col), k)).alias("shingle")
+        F.col("doc_id"), F.explode(shingles_col(F.col("text"), 3)).alias("shingle")
     ).distinct()
     if max_df is not None:
         rare = (
@@ -243,15 +237,15 @@ def ngram_jaccard_pairs(
             .select("shingle")
         )
         sh = sh.join(rare, "shingle", "left_semi")
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n"))
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
     common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .agg(F.count("*").alias("n_common"))
     )
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("n_b"))
+    na = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"))
+    nb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"))
     return (
         common.join(na, "id_a").join(nb, "id_b")
         .withColumn(
@@ -309,21 +303,16 @@ def simhash_col(text: Column, bits: int = SIMHASH_BITS) -> Column:
     )
 
 
-def simhash_table(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = SIMHASH_BITS
-) -> DataFrame:
+def simhash_table(docs: DataFrame) -> DataFrame:
     return spread_for_compute(docs).select(
-        F.col(id_col), simhash_col(F.col(text_col), bits).alias("simhash")
+        F.col("doc_id"), simhash_col(F.col("text"), SIMHASH_BITS).alias("simhash")
     )
 
 
 def embedding_neardup_lsh_pairs(
     emb: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     n_planes: int = 4,
     threshold: float = 0.95,
-    seed: int = 42,
     dim: int = None,
 ) -> DataFrame:
     """Embedding near-dup with a REAL blocking key: vectors are bucketed
@@ -333,7 +322,7 @@ def embedding_neardup_lsh_pairs(
     n_planes with corpus size). High-cosine pairs land in the same bucket
     with probability (1 − θ/π)^n_planes, so the recall tradeoff is
     explicit and tunable."""
-    return _lsh_cosine_pairs(emb, vec_col, id_col, n_planes, threshold, seed, dim)
+    return _lsh_cosine_pairs(emb, "embedding", "vec_id", n_planes, threshold, 42, dim)
 
 
 def _lsh_cosine_pairs(
@@ -495,14 +484,12 @@ def decontaminate(
 def decontaminated(
     docs: DataFrame,
     eval_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 8,
 ) -> DataFrame:
     """The clean corpus: ``docs`` minus every document flagged by
     :func:`decontaminate` (left-anti on the contaminated ids)."""
-    hits = decontaminate(docs, eval_docs, text_col, id_col, n).select(id_col)
-    return docs.join(hits, id_col, "left_anti")
+    hits = decontaminate(docs, eval_docs, "text", "doc_id", n).select("doc_id")
+    return docs.join(hits, "doc_id", "left_anti")
 
 
 def _positioned_grams(
@@ -526,8 +513,6 @@ def _positioned_grams(
 
 def substring_dup_stats(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 8,
     min_count: int = 2,
 ) -> DataFrame:
@@ -546,7 +531,7 @@ def substring_dup_stats(
     join on gram touching only duplicated grams; coverage is an
     explode(sequence) over FLAGGED positions only, then a
     count-distinct per doc. No all-pairs comparison anywhere."""
-    tg = _positioned_grams(docs, text_col, id_col, n)
+    tg = _positioned_grams(docs, "text", "doc_id", n)
     dup = (
         tg.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -554,21 +539,21 @@ def substring_dup_stats(
         .select("gram")
     )
     covered = tg.join(dup, "gram").select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.sequence(
                 F.col("pos"), F.least(F.col("pos") + F.lit(n - 1), F.col("n_tok"))
             )
         ).alias("t"),
     )
-    per_doc = covered.groupBy(id_col).agg(
+    per_doc = covered.groupBy("doc_id").agg(
         F.count_distinct("t").alias("n_dup_tokens")
     )
     base = docs.select(
-        F.col(id_col), F.size(F.split(F.col(text_col), " ")).alias("n_tokens")
+        F.col("doc_id"), F.size(F.split(F.col("text"), " ")).alias("n_tokens")
     )
-    return base.join(per_doc, id_col, "left").select(
-        F.col(id_col),
+    return base.join(per_doc, "doc_id", "left").select(
+        F.col("doc_id"),
         F.col("n_tokens").cast("bigint").alias("n_tokens"),
         F.coalesce("n_dup_tokens", F.lit(0)).cast("bigint").alias("n_dup_tokens"),
         F.round(
@@ -664,7 +649,6 @@ def boilerplate_strip(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    line_words: int = 8,
     split: Optional[str] = None,
     min_df: int = 3,
 ) -> DataFrame:
@@ -685,7 +669,7 @@ def boilerplate_strip(
     that reuses the df groupBy's hash partitioning (no second content
     shuffle of the corpus text). Reassembly shuffles kept lines once on
     doc id; order restored via array_sort, no global sort."""
-    lines = lines_col(F.col(text_col), line_words, split)
+    lines = lines_col(F.col(text_col), 8, split)
     joiner = split if split is not None else " "
     ex = docs.select(
         F.col(id_col), F.posexplode(lines).alias("pos", "line")
@@ -720,13 +704,7 @@ def boilerplate_strip(
     )
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    w: int = 4,
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, k: int = 3, w: int = 4) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD'03 — the MOSS algorithm): hash every word ``k``-gram, slide a
     ``w``-hash window, select each window's MINIMUM hash (RIGHTMOST on
@@ -744,7 +722,7 @@ def winnow_fingerprints(
     banded by construction, never all-pairs."""
     from .hashes import h60
 
-    wd = words_col(F.col(text_col))
+    wd = words_col(F.col("text"))
     n = F.size(wd)
     grams = F.when(
         n >= k,
@@ -752,13 +730,13 @@ def winnow_fingerprints(
             F.sequence(F.lit(1), n - F.lit(k - 1)),
             lambda i: F.concat_ws(" ", F.slice(wd, i, k)),
         ),
-    ).otherwise(F.array(F.col(text_col)))
+    ).otherwise(F.array(F.col("text")))
     # materialize the hash array in its OWN projection: the window lambda
     # below references it ~4x per window, and CollapseProject would
     # otherwise inline (and codegen would re-evaluate) the md5-per-gram
     # transform inside every reference — measured 53s -> ~2s at sf0.01
     hashed = spread_for_compute(docs).select(
-        F.col(id_col), F.transform(grams, h60).alias("_hs")
+        F.col("doc_id"), F.transform(grams, h60).alias("_hs")
     )
     hs = F.col("_hs")
     m = F.size(hs)
@@ -777,17 +755,14 @@ def winnow_fingerprints(
         F.sequence(F.lit(1), F.greatest(m - F.lit(w - 1), F.lit(1))), pick
     )
     return (
-        hashed.select(F.col(id_col), F.explode(sel).alias("s"))
-        .select(id_col, F.col("s.pos").alias("pos"), F.col("s.fp").alias("fp"))
+        hashed.select(F.col("doc_id"), F.explode(sel).alias("s"))
+        .select("doc_id", F.col("s.pos").alias("pos"), F.col("s.fp").alias("fp"))
         .distinct()
     )
 
 
 def prefix_jaccard_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
     threshold_ppm: int = 500000,
 ) -> DataFrame:
     """Exact-Jaccard near-dup pairs via AllPairs/PPJoin prefix filtering
@@ -814,8 +789,8 @@ def prefix_jaccard_pairs(
     # sides and the size census, so an added repartition re-executes
     # with every reference (measured 6.0s -> 7.7s with it)
     sh = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(shingles_col(F.col(text_col), k)).alias("shingle"),
+        "doc_id",
+        F.explode(shingles_col(F.col("text"), 3)).alias("shingle"),
     ).distinct()
     dfq = sh.groupBy("shingle").agg(
         F.count(F.lit(1)).cast("long").alias("df")
@@ -873,18 +848,10 @@ def prefix_jaccard_pairs(
     )
 
 
-def tfidf_cosine_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_df: int = 50,
-    rarity_cap: int = 100,
-    threshold_cos2_ppm: int = 250000,
-    shingle_k: int = 0,
-) -> DataFrame:
+def tfidf_cosine_pairs(docs: DataFrame, shingle_k: int = 0) -> DataFrame:
     """Weighted (TF-IDF-style) sparse cosine similarity join — the
     frequency-aware complement to the set-semantics Jaccard tiers:
-    per-term weight ``w = tf * min(n_docs div df, rarity_cap)`` (a
+    per-term weight ``w = tf * min(n_docs div df, 100)`` (a
     linear, capped rarity signal in place of float log-IDF — same
     monotone ordering, engine-exact). Pairs are scored by squared
     cosine in ppm, computed with ONLY integer math::
@@ -896,8 +863,8 @@ def tfidf_cosine_pairs(
     with tf,rarity <= 1e2 — inside signed-64, documented bound).
 
     Scale shape: candidate generation is the df-cut posting self-join
-    (terms in > max_df docs are dropped BEFORE the join, stopword
-    semantics, hottest key bounded at max_df^2 pairs); weights, norms
+    (terms in > 50 docs are dropped BEFORE the join, stopword
+    semantics, hottest key bounded at 50^2 pairs); weights, norms
     and dots are all partial-aggregatable groupBys over one corpus
     explosion; no row-at-a-time Python anywhere.
 
@@ -909,17 +876,17 @@ def tfidf_cosine_pairs(
     (same reason the Jaccard tiers shingle)."""
     if shingle_k > 0:
         toks = spread_for_compute(docs).select(
-            F.col(id_col).alias("doc_id"),
+            "doc_id",
             F.explode(
-                shingles_col(F.col(text_col), shingle_k)
+                shingles_col(F.col("text"), shingle_k)
             ).alias("t"),
         )
     else:
         toks = spread_for_compute(docs).select(
-            F.col(id_col).alias("doc_id"),
+            "doc_id",
             F.explode(
                 F.filter(
-                    F.split(F.lower(F.col(text_col)), " "),
+                    F.split(F.lower(F.col("text")), " "),
                     lambda x: x != F.lit(""),
                 )
             ).alias("t"),
@@ -930,7 +897,7 @@ def tfidf_cosine_pairs(
     n_docs = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     dfq = postings.groupBy("t").agg(
         F.count(F.lit(1)).cast("long").alias("df")
-    ).filter(F.col("df") <= max_df)
+    ).filter(F.col("df") <= 50)
     w = (
         postings.join(dfq, "t")
         .crossJoin(F.broadcast(n_docs))
@@ -938,7 +905,7 @@ def tfidf_cosine_pairs(
             "t",
             "doc_id",
             F.expr(
-                f"tf * least(n_docs div df, {int(rarity_cap)}L)"
+                "tf * least(n_docs div df, 100L)"
             ).alias("w"),
         )
     )
@@ -969,15 +936,12 @@ def tfidf_cosine_pairs(
                 "((dot * 1000000L) div ss_a) * dot div ss_b"
             ).alias("cos2_ppm"),
         )
-        .filter(F.col("cos2_ppm") >= int(threshold_cos2_ppm))
+        .filter(F.col("cos2_ppm") >= 250000)
     )
 
 def incremental_lsh_matches(
     index_docs: DataFrame,
     batch_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
@@ -1000,22 +964,22 @@ def incremental_lsh_matches(
     that is not implemented. Within-batch duplicates are a separate
     (tiny) lsh_candidate_pairs over the batch alone, by policy."""
     rows_per_band = num_hashes // bands
-    sig_old = minhash_signatures(index_docs, text_col, id_col, k, num_hashes)
-    sig_new = minhash_signatures(batch_docs, text_col, id_col, k, num_hashes)
-    bo = banded_keys(sig_old, id_col, bands, rows_per_band).select(
-        F.col(id_col).alias("old_id"), "band", "bkey"
+    sig_old = minhash_signatures(index_docs, "text", "doc_id", 3, num_hashes)
+    sig_new = minhash_signatures(batch_docs, "text", "doc_id", 3, num_hashes)
+    bo = banded_keys(sig_old, "doc_id", bands, rows_per_band).select(
+        F.col("doc_id").alias("old_id"), "band", "bkey"
     )
-    bn = banded_keys(sig_new, id_col, bands, rows_per_band).select(
-        F.col(id_col).alias("new_id"), "band", "bkey"
+    bn = banded_keys(sig_new, "doc_id", bands, rows_per_band).select(
+        F.col("doc_id").alias("new_id"), "band", "bkey"
     )
     cand = bn.join(bo, ["band", "bkey"]).select("new_id", "old_id").distinct()
     est = (
         cand.join(
-            sig_new.select(F.col(id_col).alias("new_id"), F.col("sig").alias("sig_n")),
+            sig_new.select(F.col("doc_id").alias("new_id"), F.col("sig").alias("sig_n")),
             "new_id",
         )
         .join(
-            sig_old.select(F.col(id_col).alias("old_id"), F.col("sig").alias("sig_o")),
+            sig_old.select(F.col("doc_id").alias("old_id"), F.col("sig").alias("sig_o")),
             "old_id",
         )
         .withColumn(
@@ -1035,10 +999,10 @@ def incremental_lsh_matches(
         F.round(F.max("ej"), 6).alias("best_est_jaccard"),
     )
     return (
-        batch_docs.select(F.col(id_col).alias("new_id"))
+        batch_docs.select(F.col("doc_id").alias("new_id"))
         .join(matches, "new_id", "left")
         .select(
-            F.col("new_id").alias(id_col),
+            F.col("new_id").alias("doc_id"),
             F.coalesce("n_index_matches", F.lit(0).cast("long")).alias(
                 "n_index_matches"
             ),
@@ -1047,12 +1011,7 @@ def incremental_lsh_matches(
     )
 
 
-def ngram_novelty(
-    ref_docs: DataFrame,
-    new_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def ngram_novelty(ref_docs: DataFrame, new_docs: DataFrame) -> DataFrame:
     """N-gram novelty audit of a candidate corpus slice against a
     reference slice — the freshness number a data-acquisition pipeline
     reports before paying to ingest a new crawl: per new document, how
@@ -1067,18 +1026,18 @@ def ngram_novelty(
     doc gets a defined novelty."""
     refg = (
         spread_for_compute(ref_docs).select(
-            F.explode(shingles_col(F.col(text_col))).alias("g")
+            F.explode(shingles_col(F.col("text"))).alias("g")
         )
         .distinct()
         .withColumn("seen", F.lit(1))
     )
     newg = spread_for_compute(new_docs).select(
-        F.col(id_col),
-        F.explode(shingles_col(F.col(text_col))).alias("g"),
+        F.col("doc_id"),
+        F.explode(shingles_col(F.col("text"))).alias("g"),
     )
     per = (
         newg.join(refg, "g", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_grams"),
             F.sum(
@@ -1087,19 +1046,14 @@ def ngram_novelty(
         )
     )
     return per.select(
-        id_col,
+        "doc_id",
         "n_grams",
         "n_novel",
         F.expr("(n_novel * 1000000L) div n_grams").alias("novelty_ppm"),
     )
 
 
-def vocab_growth(
-    docs: DataFrame,
-    n_buckets: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def vocab_growth(docs: DataFrame) -> DataFrame:
     """Vocabulary-growth (Heaps'-law saturation) curve: how many NEW
     distinct 3-shingles each successive corpus decile contributes, in
     deterministic doc_id order — the saturation signal that tells an
@@ -1109,20 +1063,20 @@ def vocab_growth(
     Scale shape: first occurrence per shingle is ONE partial-agg
     min(doc_id) groupBy over the exploded grams; the decile label is a
     row-local integer expression against the broadcast max-id; the
-    final cumulative window runs over n_buckets rows (a constant), so
+    final cumulative window runs over 10 decile rows (a constant), so
     its SinglePartition exchange is bucket-sized, never data-sized."""
     from pyspark.sql import Window
 
     sh = spread_for_compute(docs).select(
-        F.col(id_col),
-        F.explode(shingles_col(F.col(text_col))).alias("g"),
+        F.col("doc_id"),
+        F.explode(shingles_col(F.col("text"))).alias("g"),
     )
-    fs = sh.groupBy("g").agg(F.min(id_col).cast("long").alias("first_doc"))
-    mx = docs.agg((F.max(id_col) + 1).cast("long").alias("m"))
+    fs = sh.groupBy("g").agg(F.min("doc_id").cast("long").alias("first_doc"))
+    mx = docs.agg((F.max("doc_id") + 1).cast("long").alias("m"))
     dg = (
         fs.crossJoin(F.broadcast(mx))
         .select(
-            F.expr(f"(first_doc * {int(n_buckets)}L) div m").alias("decile")
+            F.expr("(first_doc * 10L) div m").alias("decile")
         )
         .groupBy("decile")
         .agg(F.count(F.lit(1)).cast("long").alias("n_new_grams"))
@@ -1139,12 +1093,8 @@ def vocab_growth(
 
 def hard_negative_pairs(
     emb: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    label_col: str = "label",
     n_planes: int = 4,
     threshold: float = 0.3,
-    seed: int = 42,
     dim: int = None,
 ) -> DataFrame:
     """Hard-negative mining for embedding/contrastive training: pairs
@@ -1157,6 +1107,6 @@ def hard_negative_pairs(
     all-pairs bounded by 2^n_planes blocking), plus one row-local label
     inequality — the label ride-along costs nothing."""
     return _lsh_cosine_pairs(
-        emb, vec_col, id_col, n_planes, threshold, seed, dim,
-        label=F.col(label_col),
+        emb, "embedding", "vec_id", n_planes, threshold, 42, dim,
+        label=F.col("label"),
     ).filter(F.col("label_a") != F.col("label_b"))

@@ -40,10 +40,10 @@ def lang_scores_col(text: Column):
     return scores
 
 
-def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """(id, score_en/de/fr/es, lang_guess)."""
-    scores = lang_scores_col(F.col(text_col))
-    cols = [F.col(id_col)] + [s.alias(f"score_{l}") for l, s in sorted(scores.items())]
+    scores = lang_scores_col(F.col("text"))
+    cols = [F.col("doc_id")] + [s.alias(f"score_{l}") for l, s in sorted(scores.items())]
     out = docs.select(*cols)
     guess = F.lit("unknown")
     best = F.lit(-1.0)
@@ -91,28 +91,26 @@ def _quality_cols(t: Column) -> "dict[str, Column]":
     }
 
 
-def quality_features(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_features(docs: DataFrame) -> DataFrame:
     """Length / punctuation-ratio / stopword-ratio / mean-word-length
     features + a composite quality score in [0,1]."""
-    cols = _quality_cols(F.col(text_col))
+    cols = _quality_cols(F.col("text"))
     return docs.select(
-        F.col(id_col), *[c.alias(name) for name, c in cols.items()]
+        F.col("doc_id"), *[c.alias(name) for name, c in cols.items()]
     )
 
 
-def token_counts(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """Whitespace tokens vs BPE-ish regex tokens (word runs + punct)."""
-    t = F.col(text_col)
+    t = F.col("text")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(F.split(F.trim(t), "\\s+")).alias("ws_tokens"),
         F.size(F.regexp_extract_all(t, F.lit(TOKEN_PATTERN), 0)).alias("re_tokens"),
     )
 
 
-def repetition_features(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_features(docs: DataFrame) -> DataFrame:
     """Intra-document repetition signals (the Gopher-style rep filters
     used to drop boilerplate/spam before LLM training): duplicate word
     n-gram fractions for n=2,3 (1 − distinct/total over the doc's own
@@ -120,9 +118,9 @@ def repetition_features(
     row-local higher-order functions — zero shuffle, codegen'd, and
     filter-composable (``dup_3gram_frac < 0.2 AND top_word_frac < 0.3``
     prunes at the scan)."""
-    cols = _repetition_cols(F.col(text_col))
+    cols = _repetition_cols(F.col("text"))
     return docs.select(
-        F.col(id_col), *[c.alias(name) for name, c in cols.items()]
+        F.col("doc_id"), *[c.alias(name) for name, c in cols.items()]
     )
 
 
@@ -170,9 +168,7 @@ EMAIL_PATTERN = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
 URL_PATTERN = "https?://[A-Za-z0-9./_-]+"
 
 
-def contact_flags(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def contact_flags(docs: DataFrame) -> DataFrame:
     """PII / contact-surface flags for curation policy filters: per-doc
     email and URL match counts plus a has_contact boolean. Row-local
     regexp_extract_all — zero shuffle; the boolean composes into scan
@@ -180,11 +176,11 @@ def contact_flags(
     Deliberately pattern-conservative (RE2-safe, no \\S/\\w class
     divergence) so the counts are engine-exact; a production deployment
     layers jurisdiction-specific pattern packs on the same shape."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_emails = F.size(F.regexp_extract_all(t, F.lit(EMAIL_PATTERN), 0))
     n_urls = F.size(F.regexp_extract_all(t, F.lit(URL_PATTERN), 0))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_emails.alias("n_emails"),
         n_urls.alias("n_urls"),
         ((n_emails > 0) | (n_urls > 0)).alias("has_contact"),
@@ -200,21 +196,19 @@ def redact_col(t: Column) -> Column:
     )
 
 
-def redact_contacts(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def redact_contacts(docs: DataFrame) -> DataFrame:
     """PII redaction (the write-side companion of ``contact_flags``):
     replace every email with ``<EMAIL>`` and every URL with ``<URL>``.
     Emails are replaced first; the URL pattern cannot match the inserted
     ``<EMAIL>`` token and the email pattern cannot match inside a URL
     (no ``@``), so the two passes are order-exact. Row-local
     regexp_replace — zero shuffle, one scan at any corpus size."""
-    t = F.col(text_col)
+    t = F.col("text")
     clean = redact_col(t)
     n_emails = F.size(F.regexp_extract_all(t, F.lit(EMAIL_PATTERN), 0))
     n_urls = F.size(F.regexp_extract_all(t, F.lit(URL_PATTERN), 0))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         clean.alias("clean_text"),
         n_emails.alias("n_redacted_emails"),
         n_urls.alias("n_redacted_urls"),
@@ -270,17 +264,7 @@ def gate_passed_col(t: Column, **thresholds) -> Column:
     )
 
 
-def quality_gate(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_words: int = 20,
-    max_words: int = 90,
-    max_punct_ratio: float = 0.1,
-    min_stopword_ratio: float = 0.02,
-    max_top_word_frac: float = 0.2,
-    max_dup_3gram_frac: float = 0.1,
-) -> DataFrame:
+def quality_gate(docs: DataFrame) -> DataFrame:
     """Composite keep/drop gate over the quality + repetition features —
     the single-pass filter a curation pipeline actually runs (Gopher-style
     document filtering). Both feature families are row-local Column
@@ -293,9 +277,9 @@ def quality_gate(
     # reference measurably slows the scan (6.4s vs ~4s at sf0.1).
     # CollapseProject keeps multi-referenced non-trivial aliases
     # materialized, so the outer expressions are cheap column refs.
-    cols = {**_quality_cols(F.col(text_col)), **_repetition_cols(F.col(text_col))}
+    cols = {**_quality_cols(F.col("text")), **_repetition_cols(F.col("text"))}
     feat = docs.select(
-        F.col(id_col), *[c.alias(name) for name, c in cols.items()]
+        F.col("doc_id"), *[c.alias(name) for name, c in cols.items()]
     )
     reasons = gate_reasons_col(
         n_words=F.col("n_words"),
@@ -303,15 +287,9 @@ def quality_gate(
         stopword_ratio=F.col("stopword_ratio"),
         top_word_frac=F.col("top_word_frac"),
         dup_3gram_frac=F.col("dup_3gram_frac"),
-        min_words=min_words,
-        max_words=max_words,
-        max_punct_ratio=max_punct_ratio,
-        min_stopword_ratio=min_stopword_ratio,
-        max_top_word_frac=max_top_word_frac,
-        max_dup_3gram_frac=max_dup_3gram_frac,
     )
     return feat.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "n_words",
         "quality_score",
         "top_word_frac",
@@ -321,10 +299,8 @@ def quality_gate(
     )
 
 
-def fingerprints(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3
-) -> DataFrame:
-    """Rolling-hash document fingerprint: min/max h60 over word k-shingles
+def fingerprints(docs: DataFrame) -> DataFrame:
+    """Rolling-hash document fingerprint: min/max h60 over word 3-shingles
     (winnowing-lite) + full-text md5. Row-local."""
     from .dedup import shingles_col
 
@@ -337,30 +313,25 @@ def fingerprints(
     # twice and double every shingle md5 (interpreted HOFs get no CSE)
     mm = F.explode(
         F.transform(
-            F.array(F.transform(shingles_col(F.col(text_col), k), lambda s: h60(s))),
+            F.array(F.transform(shingles_col(F.col("text"), 3), lambda s: h60(s))),
             lambda h: F.struct(
                 F.array_min(h).alias("mn"), F.array_max(h).alias("mx")
             ),
         )
     )
     return spread_for_compute(docs).select(
-        F.col(id_col),
+        F.col("doc_id"),
         mm.alias("_m"),
-        F.md5(F.col(text_col)).alias("fp_md5"),
+        F.md5(F.col("text")).alias("fp_md5"),
     ).select(
-        id_col,
+        "doc_id",
         F.col("_m.mn").alias("fp_min"),
         F.col("_m.mx").alias("fp_max"),
         "fp_md5",
     )
 
 
-def domain_quality_stats(
-    docs: DataFrame,
-    domain_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def domain_quality_stats(docs: DataFrame) -> DataFrame:
     """Per-domain corpus profile (the RefinedWeb/CCNet-style curation
     view: which hosts contribute how much text at what quality). One
     partial-aggregated groupBy on the domain — counts and token totals
@@ -369,13 +340,13 @@ def domain_quality_stats(
     before summing, so no float accumulation order can flutter the
     result (the split_thresholds integer-ppm discipline). max is
     order-independent for doubles and stays float."""
-    feats = quality_features(docs, text_col, id_col).select(
-        id_col, "n_words", "quality_score"
+    feats = quality_features(docs).select(
+        "doc_id", "n_words", "quality_score"
     )
-    base = docs.select(F.col(id_col), F.col(domain_col).alias("domain"))
+    base = docs.select(F.col("doc_id"), F.col("source").alias("domain"))
     q_fp = F.floor(F.col("quality_score") * 1e6).cast("long")
     return (
-        base.join(feats, id_col)
+        base.join(feats, "doc_id")
         .groupBy("domain")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -395,8 +366,6 @@ def tfidf_top_terms(
     docs: DataFrame,
     k: int = 3,
     scale: int = 10**6,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Top-``k`` most characteristic terms per document by tf×idf with a
     LINEAR inverse document frequency in integer fixed-point::
@@ -422,9 +391,9 @@ def tfidf_top_terms(
     # so the scan+explode subtree executes twice — an added repartition
     # multiplies instead of amortizing (measured 0.6s -> 3.4s)
     toks = docs.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("term")
+        F.col("doc_id"), F.explode(F.split(F.col("text"), " ")).alias("term")
     )
-    tf = toks.groupBy(id_col, "term").agg(
+    tf = toks.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
     )
     df_t = tf.groupBy("term").agg(
@@ -435,26 +404,21 @@ def tfidf_top_terms(
         tf.join(df_t, "term")
         .crossJoin(n_docs)
         .select(
-            id_col, "term", "tf",
+            "doc_id", "term", "tf",
             F.expr(f"tf * ((nd * {scale}L) div df)").alias("score_fp"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("score_fp").desc(), F.col("term").asc()
     )
     return (
         scored.withColumn("rnk", F.row_number().over(w).cast("int"))
         .filter(F.col("rnk") <= k)
-        .select(id_col, "term", "tf", "score_fp", "rnk")
+        .select("doc_id", "term", "tf", "score_fp", "rnk")
     )
 
 
-def lm_surprisal_bits(
-    docs: DataFrame,
-    ref: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def lm_surprisal_bits(docs: DataFrame, ref: DataFrame) -> DataFrame:
     """CCNet-style reference-LM quality signal (Wenzek et al. 2020 score
     docs by the perplexity of a Wikipedia-trained LM; cf.
     cc_net/perplexity.py): per-document cross-entropy against a unigram
@@ -480,8 +444,8 @@ def lm_surprisal_bits(
     reference corpus is scanned once; no corpus-vs-corpus shuffle."""
     toks = lambda df: (
         df.select(
-            F.col(id_col),
-            F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("tok"),
+            F.col("doc_id"),
+            F.explode(F.split(F.lower(F.col("text")), " ")).alias("tok"),
         ).filter(F.col("tok") != "")
     )
     ref_toks = toks(ref)
@@ -492,23 +456,23 @@ def lm_surprisal_bits(
         .join(F.broadcast(cnt), "tok", "left")
         .crossJoin(F.broadcast(tot))
         .select(
-            id_col,
+            "doc_id",
             F.when(F.col("c").isNull(), F.lit(1)).otherwise(F.lit(0))
             .cast("long").alias("oov"),
             (F.length(F.bin(F.expr("tprime div (coalesce(c, 0L) + 1L)"))) - 1)
             .cast("long").alias("bits"),
         )
     )
-    per_doc = scored.groupBy(id_col).agg(
+    per_doc = scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),
         F.sum("oov").cast("long").alias("oov_tokens"),
         F.sum("bits").cast("long").alias("sum_bits"),
     )
     return (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
+        docs.select("doc_id")
+        .join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_tokens", F.lit(0)).cast("long").alias("n_tokens"),
             F.coalesce("oov_tokens", F.lit(0)).cast("long").alias("oov_tokens"),
             F.coalesce("sum_bits", F.lit(0)).cast("long").alias("sum_bits"),
@@ -522,42 +486,39 @@ def lm_surprisal_bits(
 def lm_surprisal_sql(
     table: str = "documents",
     ref_where: str = "doc_id % 13 = 0",
-    id_col: str = "doc_id",
 ) -> str:
     """DuckDB twin of :func:`lm_surprisal_bits` — same integer-bits
     formula over the same single-space split."""
     return f"""
 WITH lm_toks AS (
-  SELECT {id_col}, unnest(string_split(lower(text), ' ')) AS tok FROM {table}
+  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM {table}
 ),
-lm_tf AS (SELECT {id_col}, tok FROM lm_toks WHERE tok <> ''),
-lm_ref AS (SELECT tok FROM lm_tf WHERE {ref_where.replace(id_col, id_col)}),
+lm_tf AS (SELECT doc_id, tok FROM lm_toks WHERE tok <> ''),
+lm_ref AS (SELECT tok FROM lm_tf WHERE {ref_where}),
 lm_cnt AS (SELECT tok, count(*)::BIGINT AS c FROM lm_ref GROUP BY tok),
 lm_tot AS (SELECT count(*)::BIGINT + 1 AS tprime FROM lm_ref),
 lm_scored AS (
-  SELECT t.{id_col},
+  SELECT t.doc_id,
          CASE WHEN c.c IS NULL THEN 1 ELSE 0 END AS oov,
          length(bin(tprime // (coalesce(c.c, 0) + 1))) - 1 AS bits
   FROM lm_tf t LEFT JOIN lm_cnt c USING (tok) CROSS JOIN lm_tot
 ),
 lm_doc AS (
-  SELECT {id_col}, count(*)::BIGINT AS n_tokens,
+  SELECT doc_id, count(*)::BIGINT AS n_tokens,
          sum(oov)::BIGINT AS oov_tokens, sum(bits)::BIGINT AS sum_bits
-  FROM lm_scored GROUP BY {id_col}
+  FROM lm_scored GROUP BY doc_id
 )
-SELECT d.{id_col},
+SELECT d.doc_id,
        coalesce(s.n_tokens, 0)::BIGINT AS n_tokens,
        coalesce(s.oov_tokens, 0)::BIGINT AS oov_tokens,
        coalesce(s.sum_bits, 0)::BIGINT AS sum_bits,
        (coalesce(s.sum_bits, 0) * 1000000 // greatest(coalesce(s.n_tokens, 0), 1))::BIGINT
          AS mean_bits_ppm
-FROM {table} d LEFT JOIN lm_doc s USING ({id_col})
+FROM {table} d LEFT JOIN lm_doc s USING (doc_id)
 """
 
 
-def length_deciles(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def length_deciles(docs: DataFrame) -> DataFrame:
     """EXACT decile boundaries of the corpus word-length distribution —
     the cutoffs curation uses to pick min/max-length filters. One row
     per decile q in 1..9: ``(decile, value)`` where value is the word
@@ -575,9 +536,9 @@ def length_deciles(
     from ..metrics import _distributed_rank
 
     keyed = docs.select(
-        F.col(id_col), F.size(F.split(F.col(text_col), " ")).alias("v")
+        F.col("doc_id"), F.size(F.split(F.col("text"), " ")).alias("v")
     )
-    ranked, total = _distributed_rank(keyed, ["v", id_col], "_rk")
+    ranked, total = _distributed_rank(keyed, ["v", "doc_id"], "_rk")
     pos = total.select(
         F.explode(F.expr("sequence(1, 9)")).alias("decile"), F.col("_n")
     ).select(
@@ -590,11 +551,7 @@ def length_deciles(
     )
 
 
-def bigram_counts(
-    docs: DataFrame,
-    text_col: str = "text",
-    top_n: int = 100,
-) -> DataFrame:
+def bigram_counts(docs: DataFrame, top_n: int = 100) -> DataFrame:
     """Corpus-wide ADJACENT word-pair (bigram) counts, top ``top_n`` by
     (count desc, bigram asc — the deterministic tiebreak). This is the
     inner-loop count of tokenizer/BPE training and of n-gram LM
@@ -607,7 +564,7 @@ def bigram_counts(
     combine map-side); top-n is TakeOrderedAndProject, never a global
     sort."""
     w = F.filter(
-        F.split(F.lower(F.col(text_col)), " "), lambda x: x != F.lit("")
+        F.split(F.lower(F.col("text")), " "), lambda x: x != F.lit("")
     )
     pairs = F.when(
         F.size(w) >= 2,
@@ -631,7 +588,6 @@ def bigram_counts(
 
 def collocation_lift(
     docs: DataFrame,
-    text_col: str = "text",
     top_n: int = 20,
     min_count: int = 5,
 ) -> DataFrame:
@@ -653,7 +609,7 @@ def collocation_lift(
     bounded); total-token count rides along as a lazy 1-row cross
     join; top-n is TakeOrderedAndProject."""
     w = F.filter(
-        F.split(F.lower(F.col(text_col)), " "), lambda x: x != F.lit("")
+        F.split(F.lower(F.col("text")), " "), lambda x: x != F.lit("")
     )
     pairs = F.when(
         F.size(w) >= 2,
@@ -692,13 +648,7 @@ def collocation_lift(
     return out.orderBy(F.desc("lift_ppm"), F.asc("bigram")).limit(top_n)
 
 
-def length_outliers(
-    docs: DataFrame,
-    value_col: str = "n_chars",
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    k_sigma2: int = 4,
-) -> DataFrame:
+def length_outliers(docs: DataFrame, k_sigma2: int = 4) -> DataFrame:
     """Per-group outlier flags on an integer metric: doc is an outlier
     when ``(x - mean)^2 > k_sigma2 * var`` with mean and variance both
     computed in INTEGER floor arithmetic (mean = sum div n, var =
@@ -713,26 +663,26 @@ def length_outliers(
     range, so the squared terms stay inside signed-64 regardless of
     group row counts (the naive n-scaled form n*x - sum overflows at
     ~1e9-row groups)."""
-    v = F.col(value_col).cast("long")
-    stats = docs.groupBy(group_col).agg(
+    v = F.col("n_chars").cast("long")
+    stats = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(v).cast("long").alias("s1"),
         F.sum(v * v).cast("long").alias("s2"),
     ).select(
-        group_col,
+        "source",
         F.expr("s1 div n").alias("mean"),
         F.expr("(s2 div n) - (s1 div n) * (s1 div n)").alias("var"),
     )
     return (
-        docs.select(group_col, id_col, v.alias("value"))
-        .join(F.broadcast(stats), group_col)
+        docs.select("source", "doc_id", v.alias("value"))
+        .join(F.broadcast(stats), "source")
         .filter(
             F.expr(
                 f"(value - mean) * (value - mean)"
                 f" > {int(k_sigma2)}L * greatest(var, 1L)"
             )
         )
-        .select(group_col, id_col, "value", "mean", "var")
+        .select("source", "doc_id", "value", "mean", "var")
     )
 
 
@@ -741,7 +691,6 @@ def class_term_lift(
     class_col: str,
     min_df: int = 5,
     top_k: int = 10,
-    text_col: str = "text",
 ) -> DataFrame:
     """Discriminative vocabulary per class: for each (class, term), the
     lift of the term's in-class rate over its corpus rate, integer ppm
@@ -762,7 +711,7 @@ def class_term_lift(
         F.col(class_col).alias("cls"),
         F.explode(
             F.filter(
-                F.split(F.lower(F.col(text_col)), " "),
+                F.split(F.lower(F.col("text")), " "),
                 lambda x: x != F.lit(""),
             )
         ).alias("t"),
@@ -802,9 +751,7 @@ GATE_CHECKS = [
 ]
 
 
-def gate_ablation(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def gate_ablation(docs: DataFrame) -> DataFrame:
     """Per-filter ablation of the quality gate — the diagnostics a
     curation run reports to justify each check: for every gate
     criterion, how many docs trip it at all (n_failed) and how many
@@ -816,7 +763,7 @@ def gate_ablation(
     one partial-agg groupBy over 6 groups with the corpus total
     broadcast. Membership tests split fail_reasons on ';' — exact, no
     substring aliasing between check names."""
-    qg = quality_gate(docs, text_col=text_col, id_col=id_col).select(
+    qg = quality_gate(docs).select(
         "fail_reasons"
     )
     tot = qg.agg(F.count(F.lit(1)).cast("long").alias("n_total"))

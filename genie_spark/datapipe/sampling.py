@@ -44,24 +44,17 @@ def residue_sql(id_expr: str, salt: str) -> str:
     return f"(({h60_salted_sql(id_expr, repr(salt))}) % {_GRAIN})"
 
 
-def sample_fraction(
-    df: DataFrame,
-    fraction: float,
-    id_col: str = "doc_id",
-    salt: str = "sample",
-) -> DataFrame:
+def sample_fraction(df: DataFrame, fraction: float) -> DataFrame:
     """Keep a deterministic ``fraction`` of rows: row survives iff its
     hash-uniform < fraction. Rerun-stable, partitioning-independent, and
     a pure Filter (pushes past projections; no shuffle, no state)."""
-    return df.filter(_unit(F.col(id_col), salt) < fraction)
+    return df.filter(_unit(F.col("doc_id"), "sample") < fraction)
 
 
 def stratified_sample(
     df: DataFrame,
     fractions: Dict[str, float],
     strata_col: str,
-    id_col: str = "doc_id",
-    salt: str = "strata",
     default_fraction: float = 0.0,
 ) -> DataFrame:
     """Per-stratum sampling rates (e.g. per source or per language):
@@ -72,7 +65,7 @@ def stratified_sample(
     frac = F.lit(float(default_fraction))
     for k, v in sorted(fractions.items()):
         frac = F.when(F.col(strata_col) == k, F.lit(float(v))).otherwise(frac)
-    return df.filter(_unit(F.col(id_col), salt) < frac)
+    return df.filter(_unit(F.col("doc_id"), "strata") < frac)
 
 
 def split_thresholds(weights: Dict[str, float]):
@@ -99,7 +92,6 @@ def assign_split(
     weights: Dict[str, float],
     id_col: str = "doc_id",
     salt: str = "split",
-    out_col: str = "split",
 ) -> DataFrame:
     """Disjoint, exhaustive train/val/test assignment: the [0,1) line is
     cut into consecutive intervals sized by the normalized weights, in
@@ -120,41 +112,30 @@ def assign_split(
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
     last = cuts[-1][0]
     expr = F.lit(last) if expr is None else expr.otherwise(last)
-    return df.withColumn(out_col, expr)
+    return df.withColumn("split", expr)
 
 
-def shuffle_order(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    salt: str = "shuffle",
-    epoch: int = 0,
-    out_col: str = "shuffle_rank",
-) -> DataFrame:
+def shuffle_order(df: DataFrame, epoch: int = 0) -> DataFrame:
     """Reproducible global training order: every row gets a dense 0-based
-    rank under the hash ordering ``(h60(salt-epoch ␁ id), id)`` — a
+    ``shuffle_rank`` under the hash ordering
+    ``(h60(shuffle-epoch ␁ id), id)`` — a
     deterministic permutation of the corpus that changes per epoch but is
     identical across reruns, cluster sizes, and partitionings (the
     property torch-style seeded shuffles lose the moment the data layout
     changes). Ranks come from the fully distributed range-partition rank
     (metrics._distributed_rank) — no single-partition sort; writing the
-    result sorted by ``out_col`` (or bucketing on ``floor(rank/batch)``)
+    result sorted by ``shuffle_rank`` (or bucketing on ``floor(rank/batch)``)
     materializes the epoch's batch order."""
     keyed = df.withColumn(
-        "_sh", h60_salted(F.col(id_col).cast("string"), F.lit(f"{salt}-{int(epoch)}"))
+        "_sh", h60_salted(F.col("doc_id").cast("string"), F.lit(f"shuffle-{int(epoch)}"))
     )
     from ..metrics import _distributed_rank
 
-    ranked, _ = _distributed_rank(keyed, ["_sh", id_col], out_col)
+    ranked, _ = _distributed_rank(keyed, ["_sh", "doc_id"], "shuffle_rank")
     return ranked.drop("_sh")
 
 
-def sessionize(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    gap_minutes: int = 30,
-) -> DataFrame:
+def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Gap-based sessionization: consecutive events of the same user
     belong to one session while the inter-event gap stays ≤
     ``gap_minutes``; a larger gap starts a new session. The classic
@@ -182,11 +163,11 @@ def sessionize(
     # epoch_us(ts) on naive timestamps exactly
     tus = F.expr(
         "timestampdiff(MICROSECOND, "
-        f"TIMESTAMP_NTZ '1970-01-01 00:00:00', `{ts_col}`)"
+        "TIMESTAMP_NTZ '1970-01-01 00:00:00', `ts`)"
     )
-    w = Window.partitionBy(user_col).orderBy("tus", id_col)
+    w = Window.partitionBy("user_id").orderBy("tus", "event_id")
     gap_us = int(gap_minutes) * 60 * 1_000_000
-    ev = events.select(F.col(user_col), F.col(id_col), tus.alias("tus"))
+    ev = events.select(F.col("user_id"), F.col("event_id"), tus.alias("tus"))
     flagged = ev.withColumn("prev", F.lag("tus").over(w)).withColumn(
         "ns",
         F.when(
@@ -199,7 +180,7 @@ def sessionize(
         "session_idx",
         F.sum("ns").over(w.rowsBetween(Window.unboundedPreceding, 0)),
     )
-    return sess.groupBy(user_col, "session_idx").agg(
+    return sess.groupBy("user_id", "session_idx").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.min("tus").cast("long").alias("start_us"),
         F.max("tus").cast("long").alias("end_us"),
@@ -210,10 +191,8 @@ def sessionize(
 def group_cap(
     df: DataFrame,
     group_col: str = "source",
-    id_col: str = "doc_id",
     k: int = 50,
     salt: str = "cap",
-    out_col: str = "grp_rank",
 ) -> DataFrame:
     """Deterministic per-group QUOTA cap: keep at most ``k`` rows per
     group, chosen by the salted-hash order (h60(salt ␁ id), id) — the
@@ -222,7 +201,7 @@ def group_cap(
     :func:`stratified_sample` (per-group FRACTION), the quota is an
     absolute count, and the hash order makes the kept set rerun- and
     partitioning-stable (a torch-style random choice is neither).
-    Returns the surviving rows + their 1-based ``out_col`` rank.
+    Returns the surviving rows + their 1-based ``grp_rank``.
 
     Scale shape: ONE window partitioned by group (no global sort); the
     rank shuffle keys on the group — a skewed mega-domain bounds at its
@@ -232,11 +211,11 @@ def group_cap(
     set."""
     from pyspark.sql import Window
 
-    key = h60_salted(F.col(id_col).cast("string"), F.lit(salt))
-    w = Window.partitionBy(group_col).orderBy(key, F.col(id_col))
+    key = h60_salted(F.col("doc_id").cast("string"), F.lit(salt))
+    w = Window.partitionBy(group_col).orderBy(key, F.col("doc_id"))
     return (
-        df.withColumn(out_col, F.row_number().over(w))
-        .filter(F.col(out_col) <= k)
+        df.withColumn("grp_rank", F.row_number().over(w))
+        .filter(F.col("grp_rank") <= k)
     )
 
 
@@ -244,9 +223,6 @@ def hopping_window_rates(
     events: DataFrame,
     window_minutes: int = 30,
     hop_minutes: int = 15,
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    value_col: str = "value",
 ) -> DataFrame:
     """Overlapping (hopping) time-window aggregation of the event log:
     per (window start, event type) the event count and value sum, with
@@ -264,12 +240,12 @@ def hopping_window_rates(
     n_win = int(window_minutes // hop_minutes)
     tus = F.expr(
         "timestampdiff(MICROSECOND, "
-        f"TIMESTAMP_NTZ '1970-01-01 00:00:00', `{ts_col}`)"
+        "TIMESTAMP_NTZ '1970-01-01 00:00:00', `ts`)"
     )
     base = events.select(
         tus.alias("_tus"),
-        F.col(type_col).alias("event_type"),
-        F.round(F.col(value_col) * 1_000_000).cast("long").alias("_v_ppm"),
+        "event_type",
+        F.round(F.col("value") * 1_000_000).cast("long").alias("_v_ppm"),
     )
     win = base.select(
         F.explode(

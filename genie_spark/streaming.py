@@ -51,8 +51,6 @@ def stream_extract(
     output_dir: str,
     ent_names: List[str],
     rel_names: List[str],
-    lang: Optional[str] = "en",
-    num_beams: int = 2,
     available_now: bool = True,
 ):
     """Start (and with ``available_now`` run to completion) the streaming
@@ -62,10 +60,9 @@ def stream_extract(
     ``output_dir/_checkpoint`` (restart-safe: processed files are never
     re-read; an interrupted batch is replayed into the same directory).
     """
-    extractor = GenieExtractor(spark, ent_names, rel_names, num_beams=num_beams)
+    extractor = GenieExtractor(spark, ent_names, rel_names, num_beams=2)
     pages = read_page_stream(spark, input_dir)
-    if lang is not None:
-        pages = pages.filter(F.col("lang") == lang)
+    pages = pages.filter(F.col("lang") == "en")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         sents = sentences_df(batch_df, text_col="text").select(
@@ -93,14 +90,12 @@ def stream_page_rates(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
-    window: str = "1 hour",
-    watermark: str = "1 hour",
     max_files_per_trigger: Optional[int] = 1,
     available_now: bool = True,
 ):
     """Watermarked windowed aggregation over the crawl stream: pages per
-    (event-time window, lang), tolerating late arrivals up to
-    ``watermark``. Append mode emits a window only once the watermark
+    (one-hour event-time window, lang), tolerating late arrivals up to
+    one hour. Append mode emits a window only once the watermark
     passes its end — exactly-once finalized counts, safe to join
     downstream. One file per micro-batch by default so event time (and
     the watermark) advances deterministically during an availableNow
@@ -109,8 +104,8 @@ def stream_page_rates(
         spark, input_dir, max_files_per_trigger=max_files_per_trigger
     )
     rates = (
-        pages.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), "lang")
+        pages.withWatermark("warc_ts", "1 hour")
+        .groupBy(F.window("warc_ts", "1 hour").alias("w"), "lang")
         .agg(F.count("*").alias("n_pages"))
         .select(
             F.col("w.start").alias("win_start"),
@@ -258,13 +253,7 @@ def stream_dedup_minhash(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
-    k: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
     available_now: bool = True,
-    state_ttl: Optional[str] = None,
-    trigger_interval: str = "500 milliseconds",
-    max_bucket_members: Optional[int] = None,
 ):
     """Cross-batch NEAR-dup: streaming MinHash+LSH candidate pairs.
 
@@ -281,39 +270,22 @@ def stream_dedup_minhash(
     is emitted once per band, so readers take ``distinct()`` (same as the
     batch path's final distinct).
 
-    Scale levers: state is ONLY ids (no text, no signatures) keyed by the
-    same shuffle key as the batch join; ``state_ttl`` ages out cold
-    buckets (same sliding semantics as stream_dedup_exact);
-    ``max_bucket_members`` caps hot boilerplate buckets — further
-    arrivals in a full bucket emit pairs against the retained members
-    only (explicit recall tradeoff, mirroring AQE-skew-join territory in
-    batch mode)."""
+    Scale: state is ONLY ids (no text, no signatures) keyed by the same
+    shuffle key as the batch join. Signatures use 3-shingles and 16
+    hashes in 4 bands."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from .datapipe.dedup import banded_keys, minhash_signature_col, shingles_col
 
-    if state_ttl and available_now:
-        raise ValueError(
-            "state_ttl needs a continuous processing-time trigger "
-            "(ProcessingTimeTimeout does not fire under availableNow); "
-            "pass available_now=False and stop the returned query"
-        )
-    rows_per_band = num_hashes // bands
     docs = spark.readStream.schema(DOC_STREAM_SCHEMA).parquet(input_dir)
-    sig = minhash_signature_col(shingles_col(F.col("text"), k), num_hashes)
-    banded = banded_keys(
-        docs.select("doc_id", sig.alias("sig")), "doc_id", bands, rows_per_band
-    )
+    sig = minhash_signature_col(shingles_col(F.col("text"), 3), 16)
+    banded = banded_keys(docs.select("doc_id", sig.alias("sig")), "doc_id", 4, 4)
 
     out_type = "id_a bigint, id_b bigint, band int"
     state_type = "members array<bigint>"
-    ttl_ms = _ttl_ms(state_ttl) if state_ttl else None
 
     def collide(key, pdf_iter, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
         members = list(state.get[0]) if state.exists else []
         known = set(members)
         band = int(key[0])
@@ -327,12 +299,9 @@ def stream_dedup_minhash(
             pairs.extend(
                 (min(nid, m), max(nid, m), band) for m in members
             )
-            if max_bucket_members is None or len(members) < max_bucket_members:
-                members.append(nid)
-                known.add(nid)
+            members.append(nid)
+            known.add(nid)
         state.update((members,))
-        if ttl_ms:
-            state.setTimeoutDuration(ttl_ms)
         if pairs:
             yield pd.DataFrame(pairs, columns=["id_a", "id_b", "band"])
 
@@ -341,9 +310,7 @@ def stream_dedup_minhash(
         out_type,
         state_type,
         "append",
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl
-        else GroupStateTimeout.NoTimeout,
+        GroupStateTimeout.NoTimeout,
     )
     writer = (
         out.writeStream.format("parquet")
@@ -355,7 +322,7 @@ def stream_dedup_minhash(
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
         return q
-    return writer.trigger(processingTime=trigger_interval).start()
+    return writer.trigger(processingTime="500 milliseconds").start()
 
 
 def state_metrics(query) -> dict:
@@ -424,7 +391,6 @@ def stream_fuse_latest(
     input_dir: str,
     output_dir: str,
     available_now: bool = True,
-    trigger_interval: str = "500 milliseconds",
 ):
     """Stateful streaming knowledge fusion: the continuous-crawl form of
     :func:`genie_spark.canonicalize.fuse_latest`. Each micro-batch of
@@ -500,7 +466,7 @@ def stream_fuse_latest(
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
         return q
-    return writer.trigger(processingTime=trigger_interval).start()
+    return writer.trigger(processingTime="500 milliseconds").start()
 
 
 def stream_distant_supervision(
@@ -509,7 +475,6 @@ def stream_distant_supervision(
     kb: "DataFrame",
     output_dir: str,
     available_now: bool = True,
-    trigger_interval: str = "500 milliseconds",
 ):
     """Streaming distant-supervision alignment: the continuous-crawl
     form of :func:`genie_spark.datapipe.align.distant_supervision`.
@@ -552,7 +517,7 @@ def stream_distant_supervision(
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
         return q
-    return writer.trigger(processingTime=trigger_interval).start()
+    return writer.trigger(processingTime="500 milliseconds").start()
 
 
 EVENT_STREAM_SCHEMA = "event_id bigint, ts timestamp, user_id bigint"
@@ -563,8 +528,6 @@ def stream_sessionize(
     input_dir: str,
     output_dir: str,
     gap_minutes: int = 30,
-    available_now: bool = True,
-    trigger_interval: str = "500 milliseconds",
 ):
     """Stateful streaming sessionization: the continuous form of
     :func:`genie_spark.datapipe.sampling.sessionize`. Per-user state is
@@ -635,11 +598,9 @@ def stream_sessionize(
         .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
         .outputMode("append")
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.trigger(processingTime=trigger_interval).start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
 
 
 def stream_cms_sketch(
@@ -648,8 +609,6 @@ def stream_cms_sketch(
     output_dir: str,
     depth: int = 4,
     width: int = 1024,
-    max_files_per_trigger: Optional[int] = 1,
-    available_now: bool = True,
 ):
     """Live count-min sketch over the document stream: the running
     hot-token frequency table, continuously refreshed.
@@ -671,11 +630,10 @@ def stream_cms_sketch(
     batching-insensitive."""
     from .datapipe.sketches import cms_sketch
 
-    docs = spark.readStream.schema(DOC_STREAM_SCHEMA)
-    if max_files_per_trigger:
-        docs = docs.option("maxFilesPerTrigger", max_files_per_trigger)
     toks = (
-        docs.parquet(input_dir)
+        spark.readStream.schema(DOC_STREAM_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(input_dir)
         .select(F.explode(F.split("text", " ")).alias("t"))
         .filter(F.col("t") != "")
     )
@@ -690,8 +648,6 @@ def stream_cms_sketch(
         .foreachBatch(publish)
         .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q

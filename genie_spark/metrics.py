@@ -141,13 +141,11 @@ def macro_metrics(
     df: DataFrame,
     pred: str = "pred",
     target: str = "target",
-    recall_only: bool = False,
     target_relations_only: bool = False,
 ) -> DataFrame:
     """A2 — per-relation micro scores + unweighted macro mean
     (evaluation.py:67-78). Returns one row: (macro_precision,
-    macro_recall, macro_f1, n_relations); with ``recall_only`` (FewRel
-    mode, results_full.yaml:76-80) just (macro_recall, n_relations).
+    macro_recall, macro_f1, n_relations).
 
     ``target_relations_only`` selects the reference's averaging set —
     MacroMetricsEvaluator restricts to relations with ≥1 TARGET
@@ -162,11 +160,6 @@ def macro_metrics(
     scored = per_rel.select(
         "rel", p.alias("precision"), r.alias("recall"), f1.alias("f1")
     )
-    if recall_only:
-        return scored.agg(
-            F.avg("recall").alias("macro_recall"),
-            F.count("*").alias("n_relations"),
-        )
     return scored.agg(
         F.avg("precision").alias("macro_precision"),
         F.avg("recall").alias("macro_recall"),
@@ -187,12 +180,7 @@ def per_relation_metrics(
     )
 
 
-def bucket_metrics(
-    df: DataFrame,
-    train_rel_counts: DataFrame,
-    pred: str = "pred",
-    target: str = "target",
-) -> DataFrame:
+def bucket_metrics(df: DataFrame, train_rel_counts: DataFrame) -> DataFrame:
     """A3 — micro metrics per log2-bucket of each relation's train-set
     occurrence count (reference BucketEvaluator, evaluators.py:153-203;
     bucket id = floor(log2(count)), plot_helpers.py:50-56). Relations
@@ -201,7 +189,7 @@ def bucket_metrics(
     ``train_rel_counts``: DataFrame(rel, count) — typically
     ``train.select(explode(...)).groupBy(rel).count()`` (A6).
     """
-    per_rel = _per_relation_counts(df, pred, target)
+    per_rel = _per_relation_counts(df, "pred", "target")
     buckets = train_rel_counts.select(
         F.col("rel"),
         F.floor(F.log2(F.col("count"))).cast("long").alias("bucket"),
@@ -222,17 +210,12 @@ def bucket_metrics(
     )
 
 
-def zero_shot_metrics(
-    df: DataFrame,
-    rel_groups: DataFrame,
-    pred: str = "pred",
-    target: str = "target",
-) -> DataFrame:
+def zero_shot_metrics(df: DataFrame, rel_groups: DataFrame) -> DataFrame:
     """A4 — micro metrics per relation group (reference
     MicroMetricsZSEvaluator, evaluators.py:206-263: groups like
     dropped / ignored / seen). ``rel_groups``: DataFrame(rel, group);
     relations missing from the mapping score under group 'seen'."""
-    per_rel = _per_relation_counts(df, pred, target)
+    per_rel = _per_relation_counts(df, "pred", "target")
     joined = per_rel.join(F.broadcast(rel_groups), "rel", "left").fillna(
         {"group": "seen"}
     )
@@ -263,9 +246,6 @@ for _k in range(5):
 def bootstrap_micro(
     df: DataFrame,
     n_runs: int = 50,
-    id_col: str = "id",
-    pred: str = "pred",
-    target: str = "target",
     hash_mode: str = "xxhash",
 ) -> DataFrame:
     """A5 — bootstrap CI over samples (reference get_bootstrap_score,
@@ -277,7 +257,7 @@ def bootstrap_micro(
     hash_mode='xxhash' is the production path (JVM intrinsic);
     'md5' derives the uniform from the DuckDB-reproducible h60 so the
     whole query is oracle-checkable."""
-    counts = _counts(df, pred, target).select(id_col, "n_correct", "n_pred", "n_target")
+    counts = _counts(df, "pred", "target").select("id", "n_correct", "n_pred", "n_target")
     # row-local run fan-out (explode of a literal sequence) — no crossJoin
     # stage, the partial agg under groupBy(run) still bounds the shuffle at
     # n_runs × partitions counter rows. The fan-out stage is compute-bound
@@ -291,9 +271,9 @@ def bootstrap_micro(
     if hash_mode == "md5":
         from .datapipe.hashes import h60_salted
 
-        h = h60_salted(F.col(id_col).cast("string"), F.col("run"))
+        h = h60_salted(F.col("id").cast("string"), F.col("run"))
     else:
-        h = F.xxhash64(F.col(id_col), F.col("run"))
+        h = F.xxhash64(F.col("id"), F.col("run"))
     u = F.pmod(h, F.lit(1_000_000)) / 1_000_000.0
     cdf = POISSON1_CDF
     w = F.when(u < cdf[0], 0)
@@ -367,9 +347,6 @@ def _distributed_rank(df: DataFrame, id_col, out_col: str = "j"):
 def bootstrap_micro_multinomial(
     df: DataFrame,
     n_runs: int = 50,
-    id_col: str = "id",
-    pred: str = "pred",
-    target: str = "target",
     hash_mode: str = "md5",
 ) -> DataFrame:
     """A5 exact mode — the reference's estimator
@@ -389,15 +366,15 @@ def bootstrap_micro_multinomial(
     offsets — no global sort, no driver action), and n reaches the modulo
     as a broadcast 1-row scalar, so the whole query is one Spark plan that
     scales past eval-table inputs."""
-    counts = _counts(df, pred, target).select(
-        id_col, "n_correct", "n_pred", "n_target"
+    counts = _counts(df, "pred", "target").select(
+        "id", "n_correct", "n_pred", "n_target"
     )
     # NOTE: the plan references this frame several times (rank, partition
     # sizes, total, broadcast join side). .persist() was tried and
     # measured SLOWER end-to-end (10.4s vs 6.3s min-of-N at sf0.1):
     # AQE's runtime exchange reuse already deduplicates the heavy
     # subtrees, so the cache only added build + memory-store overhead.
-    indexed, total = _distributed_rank(counts, id_col)
+    indexed, total = _distributed_rank(counts, "id")
     # the draw fan-out below is compute-bound (one md5 per sample + the
     # affine remix per draw, then an n×n_runs-row partial agg); spread it
     # to the core count — AQE coalesces the byte-light rank output to a
@@ -455,26 +432,19 @@ def relation_occurrences(
     )
 
 
-def relation_coverage(
-    df: DataFrame, pred: str = "pred", target: str = "target"
-) -> DataFrame:
+def relation_coverage(df: DataFrame) -> DataFrame:
     """A8 — distinct target relations never predicted (reference
     evaluators.py:31-37): left-anti join of distinct sets."""
-    trg = df.select(F.explode(F.col(target)).alias("t")).select(
+    trg = df.select(F.explode(F.col("target")).alias("t")).select(
         F.col("t.r").alias("rel")
     ).distinct()
-    prd = df.select(F.explode(F.col(pred)).alias("t")).select(
+    prd = df.select(F.explode(F.col("pred")).alias("t")).select(
         F.col("t.r").alias("rel")
     ).distinct()
     return trg.join(prd, "rel", "left_anti")
 
 
-def calibration_bins(
-    samples: DataFrame,
-    conf_col: str = "conf_ppm",
-    acc_col: str = "acc_ppm",
-    bins: int = 10,
-) -> DataFrame:
+def calibration_bins(samples: DataFrame, bins: int = 10) -> DataFrame:
     """Reliability-diagram binning — the per-bin ingredients of Expected
     Calibration Error (Naeini et al. 2015; Guo et al. 2017): samples
     carry an integer-ppm confidence and an integer-ppm accuracy; each
@@ -489,12 +459,12 @@ def calibration_bins(
     if bins < 1 or 1_000_000 % bins:
         raise ValueError(f"bins must divide 1000000, got {bins}")
     width = 1_000_000 // bins
-    b = F.expr(f"least({bins - 1}L, {conf_col} div {width}L)")
+    b = F.expr(f"least({bins - 1}L, conf_ppm div {width}L)")
     return (
         samples.select(
             b.cast("long").alias("bin"),
-            F.col(conf_col).cast("long").alias("_c"),
-            F.col(acc_col).cast("long").alias("_a"),
+            F.col("conf_ppm").cast("long").alias("_c"),
+            F.col("acc_ppm").cast("long").alias("_a"),
         )
         .groupBy("bin")
         .agg(

@@ -42,9 +42,7 @@ from .hashes import h60, h60_sql
 _SPLIT = " "
 
 
-def doc_tokens(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def doc_tokens(docs: DataFrame) -> DataFrame:
     """Distinct (doc_id, tok) mention table — the one corpus shuffle
     every alignment consumer shares. No spread repartition here:
     consumers reference this subtree from several join sides, so an
@@ -52,8 +50,8 @@ def doc_tokens(
     0.9s -> 2.2s with it)."""
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(F.split(F.lower(F.col(text_col)), _SPLIT)).alias("tok"),
+            "doc_id",
+            F.explode(F.split(F.lower(F.col("text")), _SPLIT)).alias("tok"),
         )
         .filter(F.col("tok") != "")
         .distinct()
@@ -118,20 +116,14 @@ al_kb AS (
 )"""
 
 
-def distant_supervision(
-    tokens: DataFrame, kb: DataFrame, broadcast_kb: bool = True
-) -> DataFrame:
+def distant_supervision(tokens: DataFrame, kb: DataFrame) -> DataFrame:
     """Document-level distant-supervision alignment: one row per
     (doc_id, s_name, r, o_name) where the document mentions BOTH
     endpoint entities of a KB triple. Inverted-index shape: mentions
     join KB on the subject name, then a second mention join on
     (doc_id, object name) — no text re-scan, no corpus × KB product.
-
-    ``broadcast_kb=True`` is right for dimension-sized KBs; pass False
-    for a Wikidata-scale KB and let the subject join shuffle on the
-    name key (the second join is corpus-keyed either way)."""
-    kb_side = F.broadcast(kb) if broadcast_kb else kb
-    subj_hits = tokens.join(kb_side, tokens.tok == kb.s_name).select(
+    The KB side is broadcast: it is dimension-sized."""
+    subj_hits = tokens.join(F.broadcast(kb), tokens.tok == kb.s_name).select(
         "doc_id", "s_name", "r", "o_name"
     )
     obj_mentions = tokens.select("doc_id", F.col("tok").alias("o_name"))
@@ -140,9 +132,7 @@ def distant_supervision(
     )
 
 
-def doc_token_positions(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def doc_token_positions(docs: DataFrame) -> DataFrame:
     """(doc_id, tok, pos) mention table with pos = 1-based index of the
     token's FIRST occurrence in the single-space split (empties occupy
     a position but emit no row — matching DuckDB's
@@ -151,8 +141,8 @@ def doc_token_positions(
     both dedups mentions and picks min(pos)."""
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.posexplode(F.split(F.lower(F.col(text_col)), _SPLIT)).alias(
+            "doc_id",
+            F.posexplode(F.split(F.lower(F.col("text")), _SPLIT)).alias(
                 "pos0", "tok"
             ),
         )
@@ -163,7 +153,7 @@ def doc_token_positions(
 
 
 def distant_supervision_spans(
-    positions: DataFrame, kb: DataFrame, broadcast_kb: bool = True
+    positions: DataFrame, kb: DataFrame
 ) -> DataFrame:
     """Span-anchored distant supervision — the actual REBEL-style
     training-example emitter: one row per (doc_id, KB triple) whose
@@ -174,8 +164,7 @@ def distant_supervision_spans(
     view of the same join. Identical two-join inverted-index shape,
     positions ride along for free (picked up in the same aggregations
     that dedup mentions)."""
-    kb_side = F.broadcast(kb) if broadcast_kb else kb
-    subj_hits = positions.join(kb_side, positions.tok == kb.s_name).select(
+    subj_hits = positions.join(F.broadcast(kb), positions.tok == kb.s_name).select(
         "doc_id", "s_name", "r", "o_name", F.col("pos").alias("s_pos")
     )
     obj_mentions = positions.select(
@@ -254,12 +243,7 @@ def entity_cooccurrence(tokens: DataFrame, n_docs_df: DataFrame) -> DataFrame:
     )
 
 
-def sentence_tokens(
-    sents: DataFrame,
-    doc_col: str = "doc_id",
-    sent_col: str = "sent_idx",
-    text_col: str = "input",
-) -> DataFrame:
+def sentence_tokens(sents: DataFrame) -> DataFrame:
     """Distinct (doc_id, sent_idx, tok) mention table over sentence
     rows (extract.sentences_df output) — the sentence-grain sibling of
     :func:`doc_tokens`. Trailing/embedded periods strip from tokens
@@ -267,9 +251,9 @@ def sentence_tokens(
     keep matching catalog names."""
     return (
         sents.select(
-            F.col(doc_col).alias("doc_id"),
-            F.col(sent_col).alias("sent_idx"),
-            F.explode(F.split(F.lower(F.col(text_col)), _SPLIT)).alias("tok0"),
+            "doc_id",
+            "sent_idx",
+            F.explode(F.split(F.lower(F.col("input")), _SPLIT)).alias("tok0"),
         )
         .select(
             "doc_id",
@@ -282,7 +266,7 @@ def sentence_tokens(
 
 
 def distant_supervision_sentences(
-    stoks: DataFrame, kb: DataFrame, broadcast_kb: bool = True
+    stoks: DataFrame, kb: DataFrame
 ) -> DataFrame:
     """Sentence-bounded distant supervision — the actual REBEL
     construction semantics: a KB triple is supported only where BOTH
@@ -291,8 +275,7 @@ def distant_supervision_sentences(
     assumption operates at this grain). Same two-join inverted-index
     shape as the doc-level form, keyed on (doc, sentence); aggregates
     to per-triple sentence and document support counts."""
-    kb_side = F.broadcast(kb) if broadcast_kb else kb
-    subj = stoks.join(kb_side, stoks.tok == kb.s_name).select(
+    subj = stoks.join(F.broadcast(kb), stoks.tok == kb.s_name).select(
         "doc_id", "sent_idx", "s_name", "r", "o_name"
     )
     obj = stoks.select("doc_id", "sent_idx", F.col("tok").alias("o_name"))

@@ -765,9 +765,6 @@ def link_prediction_ranks(
     dim: int = 8,
     mod: int = 1000,
     test_mod: int = 200,
-    s_col: str = "s",
-    r_col: str = "r",
-    o_col: str = "o",
 ) -> DataFrame:
     """Filtered link-prediction ranking (the Bordes et al. 2013 eval
     protocol in the 'filtered' setting of Sun et al. 2019): for each
@@ -795,9 +792,9 @@ def link_prediction_ranks(
     from .hashes import h60
 
     pos = triples.select(
-        F.col(s_col).cast("string").alias("s"),
-        F.col(r_col).cast("string").alias("r"),
-        F.col(o_col).cast("string").alias("o"),
+        F.col("s").cast("string").alias("s"),
+        F.col("r").cast("string").alias("r"),
+        F.col("o").cast("string").alias("o"),
     ).distinct()
     tkey = F.concat_ws("\x01", F.col("s"), F.col("r"), F.col("o"))
     # _sr = per-dim (s_emb + r_emb) and _e_true from it: one md5 sweep per

@@ -100,12 +100,7 @@ def _vec_dim(emb: DataFrame, vec_col: str, dim) -> int:
 # ---------------------------------------------------------------------------
 
 
-def ivf_centroids(
-    emb: DataFrame,
-    n_cells: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> List[List[float]]:
+def ivf_centroids(emb: DataFrame, n_cells: int = 8) -> List[List[float]]:
     """Deterministic centroid pick: the n_cells corpus vectors with the
     smallest md5-derived hash of their id — stable across runs/engines,
     no RNG, no iteration. Collected to the driver (n_cells × dim floats,
@@ -113,13 +108,13 @@ def ivf_centroids(
     from .hashes import h60
 
     rows = (
-        emb.select(id_col, vec_col)
-        .withColumn("_h", h60(F.col(id_col).cast("string")))
-        .orderBy("_h", id_col)
+        emb.select("vec_id", "embedding")
+        .withColumn("_h", h60(F.col("vec_id").cast("string")))
+        .orderBy("_h", "vec_id")
         .limit(n_cells)
         .collect()
     )
-    return [[float(x) for x in r[vec_col]] for r in rows]
+    return [[float(x) for x in r["embedding"]] for r in rows]
 
 
 def _cent_cos(vec_col: Column, cent: Sequence[float]) -> Column:
@@ -175,19 +170,19 @@ def _bucket_expr_sql(planes: List[List[int]]) -> str:
 
 
 def embedding_neardup_lsh_sql(
-    n_planes: int, dim: int, threshold: float, seed: int = 42
+    n_planes: int, dim: int, threshold: float
 ) -> str:
     """DuckDB twin of dedup.embedding_neardup_lsh_pairs: same hyperplane
     literals, same bucket-blocked all-pairs cosine."""
-    return _lsh_pairs_sql(n_planes, dim, threshold, seed, label=False)
+    return _lsh_pairs_sql(n_planes, dim, threshold, label=False)
 
 
 def _lsh_pairs_sql(
-    n_planes: int, dim: int, threshold: float, seed: int, label: bool
+    n_planes: int, dim: int, threshold: float, label: bool
 ) -> str:
     """Twin of ``dedup._lsh_cosine_pairs``; ``label`` carries the label
     column and keeps only pairs whose labels differ."""
-    planes = hyperplanes(n_planes, dim, seed)
+    planes = hyperplanes(n_planes, dim, 42)
     dot = "list_sum(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2]))"
     lbl, lbl_cols, lbl_pred = (
         (", label", "\n       a.label AS label_a, b.label AS label_b,",
@@ -224,8 +219,6 @@ def semantic_dedup_survivors(
     emb: DataFrame,
     centroids: List[List[float]],
     threshold: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Vectors that SURVIVE semantic dedup: assign each vector its
     cluster (argmax cosine over the centroid literals, ties to the lower
@@ -241,16 +234,16 @@ def semantic_dedup_survivors(
     # cell assignment is n_cells × dim interpreted HOF ops per row —
     # compute-bound, so spread the single-split embeddings scan
     cells = spread_for_compute(emb).select(
-        F.col(id_col),
-        F.col(vec_col),
-        ivf_cell_col(F.col(vec_col), centroids).alias("cell"),
+        F.col("vec_id"),
+        F.col("embedding"),
+        ivf_cell_col(F.col("embedding"), centroids).alias("cell"),
     )
     pairs = embedding_neardup_pairs(
-        cells, vec_col, id_col, block_col="cell", threshold=threshold,
+        cells, "embedding", "vec_id", block_col="cell", threshold=threshold,
         salt=_block_salt(emb, len(centroids)),
     )
-    dropped = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return cells.join(dropped, id_col, "left_anti").select(id_col, "cell")
+    dropped = pairs.select(F.col("id_b").alias("vec_id")).distinct()
+    return cells.join(dropped, "vec_id", "left_anti").select("vec_id", "cell")
 
 
 def semantic_dedup_sql(
@@ -289,9 +282,7 @@ ANTI JOIN dropped d ON d.vec_id = c.vec_id
 """
 
 
-def hard_negatives_lsh_sql(
-    n_planes: int, dim: int, threshold: float, seed: int = 42
-) -> str:
+def hard_negatives_lsh_sql(n_planes: int, dim: int, threshold: float) -> str:
     """DuckDB twin of dedup.hard_negative_pairs: the
     embedding_neardup_lsh chain plus the label-inequality predicate."""
-    return _lsh_pairs_sql(n_planes, dim, threshold, seed, label=True)
+    return _lsh_pairs_sql(n_planes, dim, threshold, label=True)

@@ -66,11 +66,7 @@ def _apply_merge(seq, l, r):
     return F.replace(F.replace(seq, pat, rep), pat, rep)
 
 
-def bpe_learn_merges(
-    docs: DataFrame,
-    merges: int = 6,
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_learn_merges(docs: DataFrame, merges: int = 6) -> DataFrame:
     """Learn ``merges`` BPE merges over the corpus word-frequency
     table; returns the merge table ``(step, left, right, merged,
     pair_cnt)``, one row per round in learned order.
@@ -85,7 +81,7 @@ def bpe_learn_merges(
     Assumes every round has at least one pair with count >= 1 (true
     unless the vocabulary is fully merged — bound ``merges``
     accordingly)."""
-    wf = word_freq(docs, text_col).localCheckpoint(eager=True)
+    wf = word_freq(docs, "text").localCheckpoint(eager=True)
     sq = wf.select("cnt", _spaced_chars(F.col("word")).alias("seq"))
     merge_rows = None
     for i in range(1, merges + 1):
@@ -126,11 +122,7 @@ def bpe_learn_merges(
     return merge_rows
 
 
-def bpe_sql_chain(
-    docs_cte: str = "documents",
-    merges: int = 6,
-    text_col: str = "text",
-) -> str:
+def bpe_sql_chain(docs_cte: str = "documents", merges: int = 6) -> str:
     """DuckDB twin of :func:`bpe_learn_merges`: emits
     ``bwf/bsq0/../bsq{merges}`` + per-round ``bpc{i}/btp{i}`` CTEs and a
     final ``bmerges`` with the merge-table rows. All MATERIALIZED (each
@@ -138,7 +130,7 @@ def bpe_sql_chain(
     parts = [
         f"""bwf AS MATERIALIZED (
   SELECT word, count(*)::BIGINT AS cnt FROM (
-    SELECT unnest(list_filter(string_split(lower({text_col}), ' '),
+    SELECT unnest(list_filter(string_split(lower(text), ' '),
                               t -> t <> '')) AS word
     FROM {docs_cte}) GROUP BY word)""",
         """bsq0 AS MATERIALIZED (
@@ -205,7 +197,6 @@ def bpe_encode_stats(
     docs: DataFrame,
     merge_table: DataFrame,
     merges: int,
-    text_col: str = "text",
 ) -> DataFrame:
     """Apply a learned merge table to the corpus (in step order, the
     same two-pass replace as training) and report the encoding effect:
@@ -219,7 +210,7 @@ def bpe_encode_stats(
 
     # the merge chain below is merges × string-replaces per document —
     # compute-bound row-local work; spread the single-split scan
-    seq0 = spread_for_compute(docs).select(_doc_seq(F.col(text_col)).alias("seq"))
+    seq0 = spread_for_compute(docs).select(_doc_seq(F.col("text")).alias("seq"))
     before = seq0.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(_symbol_count(F.col("seq"))).cast("long").alias("n_symbols_before"),
@@ -248,17 +239,13 @@ def bpe_encode_stats(
     )
 
 
-def bpe_encode_sql(
-    docs_cte: str = "documents",
-    merges: int = 6,
-    text_col: str = "text",
-) -> str:
+def bpe_encode_sql(docs_cte: str = "documents", merges: int = 6) -> str:
     """DuckDB twin of :func:`bpe_encode_stats`, composing on the
     ``btp{i}`` merge CTEs of :func:`bpe_sql_chain`: emits
     ``benc0..benc{merges}/bstat``."""
     parts = [
         f"""benc0 AS MATERIALIZED (
-  SELECT ' ' || regexp_replace(replace(lower({text_col}), ' ', ' | '),
+  SELECT ' ' || regexp_replace(replace(lower(text), ' ', ' | '),
                                '([^ |])', '\\1 ', 'g') AS seq
   FROM {docs_cte})""",
     ]

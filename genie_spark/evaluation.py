@@ -7,8 +7,8 @@ bootstrapped) and genie/utils/evaluators.py:20-63 / 65-140
 (MicroMetricsEvaluator / MacroMetricsEvaluator), replacing the per-sample
 Python loops with the metric aggregations from :mod:`genie_spark.metrics`.
 The per-dataset configuration shapes of configs/evaluation/results_full.yaml
-map directly: ``metrics=('recall',)`` is the FewRel block
-(:76-80), ``num_bootstrap_samples`` the evaluator field.
+map directly: ``num_bootstrap_samples`` is the evaluator field; the
+recall-only FewRel block (:76-80) is ``metrics.micro_metrics(recall_only=True)``.
 """
 
 from __future__ import annotations
@@ -29,36 +29,28 @@ from .metrics import (
 _METRICS = ("precision", "recall", "f1")
 
 
-def _restrict(df: DataFrame, rels: Sequence[str], pred: str, target: str) -> DataFrame:
+def _restrict(df: DataFrame, rels: Sequence[str]) -> DataFrame:
     """F7 on both sides (evaluation.py:29-30,34-36)."""
-    from pyspark.sql import functions as F  # noqa: F401
-
     return df.withColumn(
-        pred, filter_triples_on_relations(df[pred], rels)
-    ).withColumn(target, filter_triples_on_relations(df[target], rels))
+        "pred", filter_triples_on_relations(df["pred"], rels)
+    ).withColumn("target", filter_triples_on_relations(df["target"], rels))
 
 
 def evaluate_micro(
     df: DataFrame,
-    metrics: Sequence[str] = _METRICS,
     relations_to_consider: Optional[Sequence[str]] = None,
     num_bootstrap_samples: Optional[int] = None,
     bootstrap_mode: str = "multinomial",
-    pred: str = "pred",
-    target: str = "target",
 ) -> Dict[str, object]:
     """get_metrics for the micro evaluator: returns
     {metric: score} — or {metric: (mean, std)} when bootstrapped
     (evaluation.py:44-50). ``bootstrap_mode='multinomial'`` is the
     reference's exact estimator; 'poisson' the one-pass approximation."""
-    for m in metrics:
-        if m not in _METRICS:
-            raise ValueError(f"unknown metric {m!r}")
     if relations_to_consider is not None:
-        df = _restrict(df, list(relations_to_consider), pred, target)
+        df = _restrict(df, list(relations_to_consider))
     if num_bootstrap_samples is None:
-        row = micro_metrics(df, pred, target).first()
-        return {m: float(row[m]) for m in metrics}
+        row = micro_metrics(df).first()
+        return {m: float(row[m]) for m in _METRICS}
     boot = (
         bootstrap_micro_multinomial
         if bootstrap_mode == "multinomial"
@@ -66,43 +58,29 @@ def evaluate_micro(
     )
     rows = {
         r["metric"]: (float(r["mean"]), float(r["std"]))
-        for r in boot(df, n_runs=num_bootstrap_samples, pred=pred, target=target).collect()
+        for r in boot(df, n_runs=num_bootstrap_samples).collect()
     }
-    return {m: rows[m] for m in metrics}
+    return {m: rows[m] for m in _METRICS}
 
 
-def evaluate_macro(
-    df: DataFrame,
-    metrics: Sequence[str] = _METRICS,
-    pred: str = "pred",
-    target: str = "target",
-) -> Tuple[Dict[str, float], DataFrame]:
+def evaluate_macro(df: DataFrame) -> Tuple[Dict[str, float], DataFrame]:
     """MacroMetricsEvaluator (evaluators.py:65-140): per-relation micro
     scores over relations with ≥1 target occurrence, macro-averaged.
     Returns ({metric: macro score}, per-relation DataFrame) — the
     reference's (macro_scores, group_name2metrics) pair."""
-    row = macro_metrics(df, pred, target, target_relations_only=True).first()
-    macro = {m: float(row[f"macro_{m}"]) for m in metrics}
-    per_rel = per_relation_metrics(df, pred, target).filter("n_target > 0")
+    row = macro_metrics(df, target_relations_only=True).first()
+    macro = {m: float(row[f"macro_{m}"]) for m in _METRICS}
+    per_rel = per_relation_metrics(df).filter("n_target > 0")
     return macro, per_rel
 
 
 def evaluate_dataset(
     df: DataFrame,
-    metrics: Sequence[str] = _METRICS,
-    relations_to_consider: Optional[Sequence[str]] = None,
     num_bootstrap_samples: Optional[int] = None,
-    pred: str = "pred",
-    target: str = "target",
 ) -> Dict[str, object]:
     """One results_full.yaml dataset block: micro (optionally
     bootstrapped) + macro, keyed like the reference's evaluator names."""
     out: Dict[str, object] = {}
-    out["micro"] = evaluate_micro(
-        df, metrics, relations_to_consider, num_bootstrap_samples,
-        pred=pred, target=target,
-    )
-    if relations_to_consider is not None:
-        df = _restrict(df, list(relations_to_consider), pred, target)
-    out["macro"], _ = evaluate_macro(df, metrics, pred=pred, target=target)
+    out["micro"] = evaluate_micro(df, num_bootstrap_samples=num_bootstrap_samples)
+    out["macro"], _ = evaluate_macro(df)
     return out

@@ -26,16 +26,14 @@ from .triples import triple_key_col
 
 
 
-def _counts(
-    df: DataFrame, pred: str = "pred", target: str = "target"
-) -> DataFrame:
+def _counts(df: DataFrame) -> DataFrame:
     """Per-sample n_correct / n_pred / n_target (reference
     triplet_set_f1.py:14-20). Set semantics via array_distinct +
     array_intersect on flat s␞r␞o string keys: string element type takes
     Spark's fast hash-set intersect path, while struct elements fall back
     to interpreted ordering (~2× slower measured at sf0.1)."""
-    p = F.array_distinct(triple_key_col(F.col(pred)))
-    t = F.array_distinct(triple_key_col(F.col(target)))
+    p = F.array_distinct(triple_key_col(F.col("pred")))
+    t = F.array_distinct(triple_key_col(F.col("target")))
     return df.withColumn("n_correct", F.size(F.array_intersect(p, t))).withColumn(
         "n_pred", F.size(p)
     ).withColumn("n_target", F.size(t))
@@ -53,12 +51,7 @@ def _prf(correct: Column, pred: Column, target: Column):
     return precision, recall, f1
 
 
-def micro_metrics(
-    df: DataFrame,
-    pred: str = "pred",
-    target: str = "target",
-    recall_only: bool = False,
-) -> DataFrame:
+def micro_metrics(df: DataFrame, recall_only: bool = False) -> DataFrame:
     """A1 — global micro precision / recall / F1: one row
     (precision, recall, f1, n_correct, n_pred, n_target).
 
@@ -67,7 +60,7 @@ def micro_metrics(
     one gold triple per sample, so extra predicted facts cannot be judged
     — precision and F1 are suppressed and only (recall, n_correct,
     n_target) is reported."""
-    agg = _counts(df, pred, target).agg(
+    agg = _counts(df).agg(
         F.sum("n_correct").alias("n_correct"),
         F.sum("n_pred").alias("n_pred"),
         F.sum("n_target").alias("n_target"),
@@ -81,9 +74,7 @@ def micro_metrics(
     )
 
 
-def _per_relation_counts(
-    df: DataFrame, pred: str = "pred", target: str = "target"
-) -> DataFrame:
+def _per_relation_counts(df: DataFrame) -> DataFrame:
     """Per-relation micro counts: restrict both sets to each relation that
     appears in either side of a sample, then count (reference
     MacroMetricsEvaluator, evaluators.py:65-147).
@@ -101,8 +92,8 @@ def _per_relation_counts(
     re-splitting the joined key (which disagrees with x['r'] when a field
     contains the separator or is NULL) can never split one relation's
     counts across groups."""
-    p = F.array_distinct(F.col(pred))
-    t = F.array_distinct(F.col(target))
+    p = F.array_distinct(F.col("pred"))
+    t = F.array_distinct(F.col("target"))
     t_keys = triple_key_col(t)
     one_key = lambda x: F.element_at(triple_key_col(F.array(x)), 1)
     both = F.filter(p, lambda x: F.array_contains(t_keys, one_key(x)))
@@ -139,8 +130,6 @@ def _per_relation_counts(
 
 def macro_metrics(
     df: DataFrame,
-    pred: str = "pred",
-    target: str = "target",
     target_relations_only: bool = False,
 ) -> DataFrame:
     """A2 — per-relation micro scores + unweighted macro mean
@@ -153,7 +142,7 @@ def macro_metrics(
     a hallucinated pred-only relation does not add a zero-F1 group to the
     mean. The default (False) averages over relations appearing on either
     side — stricter, and the semantics the round-1 oracles pinned."""
-    per_rel = _per_relation_counts(df, pred, target)
+    per_rel = _per_relation_counts(df)
     if target_relations_only:
         per_rel = per_rel.filter(F.col("n_target") > 0)
     p, r, f1 = _prf(F.col("n_correct"), F.col("n_pred"), F.col("n_target"))
@@ -168,11 +157,9 @@ def macro_metrics(
     )
 
 
-def per_relation_metrics(
-    df: DataFrame, pred: str = "pred", target: str = "target"
-) -> DataFrame:
+def per_relation_metrics(df: DataFrame) -> DataFrame:
     """Per-relation micro P/R/F1 table (the rows A2 averages)."""
-    per_rel = _per_relation_counts(df, pred, target)
+    per_rel = _per_relation_counts(df)
     p, r, f1 = _prf(F.col("n_correct"), F.col("n_pred"), F.col("n_target"))
     return per_rel.select(
         "rel", p.alias("precision"), r.alias("recall"), f1.alias("f1"),
@@ -189,7 +176,7 @@ def bucket_metrics(df: DataFrame, train_rel_counts: DataFrame) -> DataFrame:
     ``train_rel_counts``: DataFrame(rel, count) — typically
     ``train.select(explode(...)).groupBy(rel).count()`` (A6).
     """
-    per_rel = _per_relation_counts(df, "pred", "target")
+    per_rel = _per_relation_counts(df)
     buckets = train_rel_counts.select(
         F.col("rel"),
         F.floor(F.log2(F.col("count"))).cast("long").alias("bucket"),
@@ -215,7 +202,7 @@ def zero_shot_metrics(df: DataFrame, rel_groups: DataFrame) -> DataFrame:
     MicroMetricsZSEvaluator, evaluators.py:206-263: groups like
     dropped / ignored / seen). ``rel_groups``: DataFrame(rel, group);
     relations missing from the mapping score under group 'seen'."""
-    per_rel = _per_relation_counts(df, "pred", "target")
+    per_rel = _per_relation_counts(df)
     joined = per_rel.join(F.broadcast(rel_groups), "rel", "left").fillna(
         {"group": "seen"}
     )
@@ -257,7 +244,7 @@ def bootstrap_micro(
     hash_mode='xxhash' is the production path (JVM intrinsic);
     'md5' derives the uniform from the DuckDB-reproducible h60 so the
     whole query is oracle-checkable."""
-    counts = _counts(df, "pred", "target").select("id", "n_correct", "n_pred", "n_target")
+    counts = _counts(df).select("id", "n_correct", "n_pred", "n_target")
     # row-local run fan-out (explode of a literal sequence) — no crossJoin
     # stage, the partial agg under groupBy(run) still bounds the shuffle at
     # n_runs × partitions counter rows. The fan-out stage is compute-bound
@@ -366,7 +353,7 @@ def bootstrap_micro_multinomial(
     offsets — no global sort, no driver action), and n reaches the modulo
     as a broadcast 1-row scalar, so the whole query is one Spark plan that
     scales past eval-table inputs."""
-    counts = _counts(df, "pred", "target").select(
+    counts = _counts(df).select(
         "id", "n_correct", "n_pred", "n_target"
     )
     # NOTE: the plan references this frame several times (rank, partition

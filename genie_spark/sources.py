@@ -234,19 +234,15 @@ CATALOG_SCHEMA = StructType(
 INVALID_NAME_TOKENS = (" <",)
 
 
-def filter_invalid_names(
-    catalog: DataFrame, tokens: Tuple[str, ...] = INVALID_NAME_TOKENS
-) -> DataFrame:
+def filter_invalid_names(catalog: DataFrame) -> DataFrame:
     """F10: drop catalog entries whose name contains any invalid token."""
     out = catalog
-    for t in tokens:
+    for t in INVALID_NAME_TOKENS:
         out = out.filter(~F.col("name").contains(t))
     return out
 
 
-def read_catalog(
-    spark: SparkSession, path: str, assert_unique: bool = True
-) -> DataFrame:
+def read_catalog(spark: SparkSession, path: str) -> DataFrame:
     """S6 + X8 + F10: {wikidata_id, information} JSONL → (id, name,
     provenance) dimension, preferring en_title over en_label
     (surface_forms_utils.py:250-262, 297-308), special-token names
@@ -264,10 +260,9 @@ def read_catalog(
             .alias("provenance"),
         ).filter(F.col("name").isNotNull())
     )
-    if assert_unique:
-        dups = dim.groupBy("id").count().filter(F.col("count") > 1).limit(1).collect()
-        if dups:
-            raise ValueError(f"duplicate catalog id: {dups[0]['id']}")
+    dups = dim.groupBy("id").count().filter(F.col("count") > 1).limit(1).collect()
+    if dups:
+        raise ValueError(f"duplicate catalog id: {dups[0]['id']}")
     return dim
 
 
@@ -276,7 +271,6 @@ def write_bucketed(
     table: str,
     key: str,
     buckets: int,
-    sort: bool = True,
     mode: str = "overwrite",
 ) -> None:
     """Bucketed parquet sink: pays the shuffle ONCE at write time so
@@ -288,7 +282,8 @@ def write_bucketed(
     again. Bucket metadata lives in the session catalog, hence
     ``saveAsTable`` (path-based ``save`` silently drops bucketing —
     Spark writes plain files and later reads see no bucket spec)."""
-    writer = df.write.format("parquet").mode(mode).bucketBy(buckets, key)
-    if sort:
-        writer = writer.sortBy(key)
-    writer.saveAsTable(table)
+    (
+        df.write.format("parquet").mode(mode)
+        .bucketBy(buckets, key).sortBy(key)
+        .saveAsTable(table)
+    )

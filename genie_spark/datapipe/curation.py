@@ -27,7 +27,6 @@ from .urls import dedup_by_url
 
 def dedup_pages_by_url(
     pages: DataFrame,
-    url_col: str = "url",
     ts_col: Optional[str] = None,
 ) -> DataFrame:
     """Row-level companion of :func:`dedup_by_url`: returns the surviving
@@ -38,19 +37,18 @@ def dedup_pages_by_url(
     row per (url, ts) — the crawl-table grain)."""
     keep = "latest" if ts_col is not None else "first"
     kept = dedup_by_url(
-        pages, url_col=url_col, id_col=url_col, keep=keep, ts_col=ts_col
-    ).select(F.col("keep_id").alias(url_col))
-    out = pages.join(kept, url_col, "left_semi")
+        pages, id_col="url", keep=keep, ts_col=ts_col
+    ).select(F.col("keep_id").alias("url"))
+    out = pages.join(kept, "url", "left_semi")
     if ts_col is not None:
-        newest = out.groupBy(url_col).agg(F.max(ts_col).alias(ts_col))
-        out = out.join(newest, [url_col, ts_col], "left_semi")
+        newest = out.groupBy("url").agg(F.max(ts_col).alias(ts_col))
+        out = out.join(newest, ["url", ts_col], "left_semi")
     return out
 
 
 def decontaminated_stream(
     pages_stream: DataFrame,
     eval_docs: DataFrame,
-    text_col: str = "text",
     n: int = 8,
 ) -> DataFrame:
     """Streaming decontamination: drop every arriving page that shares an
@@ -67,10 +65,10 @@ def decontaminated_stream(
     from .dedup import shingles_col
 
     eg = eval_docs.select(
-        F.explode(shingles_col(F.col(text_col), n)).alias("gram")
+        F.explode(shingles_col(F.col("text"), n)).alias("gram")
     ).distinct()
     withg = pages_stream.withColumn(
-        "_grams", shingles_col(F.col(text_col), n)
+        "_grams", shingles_col(F.col("text"), n)
     )
     return withg.join(
         F.broadcast(eg), F.expr("array_contains(_grams, gram)"), "left_anti"
@@ -88,22 +86,20 @@ def curate_pages(
     dedup_lines: bool = False,
     strip_boilerplate: bool = False,
     boilerplate_min_df: int = 3,
-    text_col: str = "text",
-    url_col: str = "url",
 ) -> DataFrame:
     """Apply the enabled curation stages in production order. Returns the
     curated pages with the same schema (text rewritten in place by the
     redaction / line-dedup stages; pages dropped by the filter stages)."""
     if url_dedup:
-        pages = dedup_pages_by_url(pages, url_col=url_col, ts_col=ts_col)
+        pages = dedup_pages_by_url(pages, ts_col=ts_col)
     if eval_docs is not None:
         hits = decontaminate(
-            pages, eval_docs, text_col=text_col, id_col=url_col
-        ).select(url_col)
-        pages = pages.join(hits, url_col, "left_anti")
+            pages, eval_docs, id_col="url"
+        ).select("url")
+        pages = pages.join(hits, "url", "left_anti")
     if gate:
         # row-local filter form — no join, composes into the scan
-        pages = pages.filter(gate_passed_col(F.col(text_col)))
+        pages = pages.filter(gate_passed_col(F.col("text")))
     if neardup_cc:
         # transitive near-dup clustering over the survivors: MinHash-LSH
         # candidate pairs -> connected components -> keep one page per
@@ -114,21 +110,21 @@ def curate_pages(
         from .dedup import minhash_jaccard_pairs
         from .graph import component_dedup
 
-        pairs = minhash_jaccard_pairs(pages, text_col=text_col, id_col=url_col)
-        keep = component_dedup(pages.select(url_col), pairs, url_col)
-        pages = pages.join(keep, url_col, "left_semi")
+        pairs = minhash_jaccard_pairs(pages, id_col="url")
+        keep = component_dedup(pages.select("url"), pairs, "url")
+        pages = pages.join(keep, "url", "left_semi")
     if redact:
         # row-local in-place rewrite — no join
-        pages = pages.withColumn(text_col, redact_col(F.col(text_col)))
+        pages = pages.withColumn("text", redact_col(F.col("text")))
     if dedup_lines:
-        ld = line_dedup(pages, text_col=text_col, id_col=url_col).select(
-            url_col, "clean_text"
+        ld = line_dedup(pages, id_col="url").select(
+            "url", "clean_text"
         )
         pages = (
-            pages.join(ld, url_col)
-            .withColumn(text_col, F.col("clean_text"))
+            pages.join(ld, "url")
+            .withColumn("text", F.col("clean_text"))
             .drop("clean_text")
-            .filter(F.length(text_col) > 0)
+            .filter(F.length("text") > 0)
         )
     if strip_boilerplate:
         # corpus-frequency boilerplate removal AFTER line dedup: lines in
@@ -138,13 +134,13 @@ def curate_pages(
         from .dedup import boilerplate_strip
 
         bs = boilerplate_strip(
-            pages, text_col=text_col, id_col=url_col,
+            pages, id_col="url",
             min_df=boilerplate_min_df,
-        ).select(url_col, "clean_text")
+        ).select("url", "clean_text")
         pages = (
-            pages.join(bs, url_col)
-            .withColumn(text_col, F.col("clean_text"))
+            pages.join(bs, "url")
+            .withColumn("text", F.col("clean_text"))
             .drop("clean_text")
-            .filter(F.length(text_col) > 0)
+            .filter(F.length("text") > 0)
         )
     return pages

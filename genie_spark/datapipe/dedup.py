@@ -178,7 +178,6 @@ def lsh_candidate_pairs(
 
 def minhash_jaccard_pairs(
     docs: DataFrame,
-    text_col: str = "text",
     id_col: str = "doc_id",
     num_hashes: int = 16,
     bands: int = 4,
@@ -188,7 +187,7 @@ def minhash_jaccard_pairs(
     signature-estimated Jaccard ≥ threshold. Returns
     (id_a, id_b, est_jaccard)."""
     rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(docs, text_col, id_col, 3, num_hashes).cache()
+    sigs = minhash_signatures(docs, "text", id_col, 3, num_hashes).cache()
     cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band)
     sa = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
@@ -585,7 +584,6 @@ def lines_col(
 
 def line_dedup(
     docs: DataFrame,
-    text_col: str = "text",
     id_col: str = "doc_id",
     line_words: int = 8,
     split: Optional[str] = None,
@@ -606,7 +604,7 @@ def line_dedup(
     row). Reassembly shuffles kept lines once on the doc id; line order
     is restored via array_sort over (pos, line) structs, not a global
     sort."""
-    lines = lines_col(F.col(text_col), line_words, split)
+    lines = lines_col(F.col("text"), line_words, split)
     joiner = split if split is not None else " "
     ex = docs.select(
         F.col(id_col), F.posexplode(lines).alias("pos", "line")
@@ -647,7 +645,6 @@ def line_dedup(
 
 def boilerplate_strip(
     docs: DataFrame,
-    text_col: str = "text",
     id_col: str = "doc_id",
     split: Optional[str] = None,
     min_df: int = 3,
@@ -669,7 +666,7 @@ def boilerplate_strip(
     that reuses the df groupBy's hash partitioning (no second content
     shuffle of the corpus text). Reassembly shuffles kept lines once on
     doc id; order restored via array_sort, no global sort."""
-    lines = lines_col(F.col(text_col), 8, split)
+    lines = lines_col(F.col("text"), 8, split)
     joiner = split if split is not None else " "
     ex = docs.select(
         F.col(id_col), F.posexplode(lines).alias("pos", "line")

@@ -298,38 +298,36 @@ def bloom_hits(
 
 def bloom_sql_chain(
     members_cte: str, col: str, bits: int = 1 << 18, k: int = 5,
-    prefix: str = "bl",
 ) -> str:
-    """DuckDB twin: emits ``{prefix}_pos/{prefix}_map``; probe with the
+    """DuckDB twin: emits ``bl_pos/bl_map``; probe with the
     same position formula joined on ``w`` and the mask test."""
     h = h60_sql(col)
     mix = affine_mix_sql(f"({h})", "i")
-    return f"""{prefix}_pos AS (
+    return f"""bl_pos AS (
   SELECT (({mix}) % {bits}) AS pos FROM {members_cte}, range({k}) t(i)),
-{prefix}_map AS (
+bl_map AS (
   SELECT pos // 62 AS w, bit_or(1::BIGINT << (pos % 62)::INT) AS m
-  FROM {prefix}_pos GROUP BY 1)"""
+  FROM bl_pos GROUP BY 1)"""
 
 
 def bloom_probe_sql(
     probes_cte: str, col: str, bits: int = 1 << 18, k: int = 5,
-    prefix: str = "bl",
 ) -> str:
     """DuckDB twin of :func:`bloom_hits` over ``{probes_cte}``: emits
-    ``{prefix}_hits(item)`` — probe items whose k positions are all
+    ``bl_hits(item)`` — probe items whose k positions are all
     set."""
     h = h60_sql(col)
     mix = affine_mix_sql(f"({h})", "i")
-    return f"""{prefix}_pp AS (
+    return f"""bl_pp AS (
   SELECT {col} AS item, (({mix}) % {bits}) AS pos
   FROM {probes_cte}, range({k}) t(i)),
-{prefix}_hits AS (
+bl_hits AS (
   SELECT item FROM (
     SELECT item,
            count(*) FILTER (WHERE
              (m & (1::BIGINT << (pos % 62)::INT)) = (1::BIGINT << (pos % 62)::INT)
            ) AS n_set
-    FROM {prefix}_pp JOIN {prefix}_map ON {prefix}_map.w = pos // 62
+    FROM bl_pp JOIN bl_map ON bl_map.w = pos // 62
     GROUP BY item)
   WHERE n_set = {k})"""
 
@@ -492,7 +490,6 @@ def bloom_pruned_join(
     fact_key: str,
     dim_key: str,
     bits: int = 1 << 14,
-    k: int = 5,
 ) -> DataFrame:
     """Runtime-filter join: broadcast a Bloom bitmap of the dimension's
     keys and pre-filter the fact table BEFORE the equi-join — the
@@ -509,9 +506,9 @@ def bloom_pruned_join(
     shuffled on key content before the cut)."""
     fs = facts.withColumn("__k", F.col(fact_key).cast("string"))
     ds = dim.withColumn("__k", F.col(dim_key).cast("string"))
-    bmp = bloom_bitmap(ds.select("__k"), "__k", bits=bits, k=k)
+    bmp = bloom_bitmap(ds.select("__k"), "__k", bits=bits)
     maybe = bloom_hits(
-        fs.select("__k").distinct(), "__k", bmp, bits=bits, k=k
+        fs.select("__k").distinct(), "__k", bmp, bits=bits
     )
     survivors = fs.join(F.broadcast(maybe), "__k", "left_semi")
     return survivors.join(ds, "__k").drop("__k")

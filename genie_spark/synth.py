@@ -194,8 +194,8 @@ def catalogs_df(spark: SparkSession) -> Tuple[DataFrame, DataFrame]:
     return ents, rels
 
 
-def pages_df(spark: SparkSession, n: int, seed: int = SEED, partitions: int = 0) -> DataFrame:
-    """Distributed deterministic page table: content is f(seed, id), built
+def pages_df(spark: SparkSession, n: int) -> DataFrame:
+    """Distributed deterministic page table: content is f(SEED, id), built
     via mapInPandas over spark.range so generation itself scales out and is
     partition-invariant."""
     ents = unique_entity_names(make_entities())
@@ -205,17 +205,14 @@ def pages_df(spark: SparkSession, n: int, seed: int = SEED, partitions: int = 0)
         import pandas as pd
 
         for pdf in batches:
-            rows = [make_page(int(i), ents, rels, seed) for i in pdf["id"]]
+            rows = [make_page(int(i), ents, rels, SEED) for i in pdf["id"]]
             yield pd.DataFrame(rows)
 
-    rng = spark.range(n)
-    if partitions:
-        rng = rng.repartition(partitions)
-    return rng.mapInPandas(gen, PAGES_SCHEMA)
+    return spark.range(n).mapInPandas(gen, PAGES_SCHEMA)
 
 
-def pages_local(n: int, seed: int = SEED) -> List[dict]:
+def pages_local(n: int) -> List[dict]:
     """Driver-side twin of pages_df for oracle/parity tests."""
     ents = unique_entity_names(make_entities())
     rels = sorted(RELATIONS)
-    return [make_page(i, ents, rels, seed) for i in range(n)]
+    return [make_page(i, ents, rels, SEED) for i in range(n)]

@@ -46,7 +46,6 @@ def annotate_kilt(
     df: DataFrame,
     ent_catalog: DataFrame,
     rel_catalog: DataFrame,
-    id_col: str = "id",
 ) -> DataFrame:
     """(id, input, id_triples) + catalogs → the KILT table.
 
@@ -58,7 +57,7 @@ def annotate_kilt(
     via an 'en_label' provenance, else title; the instance status is the
     weakest triple status; the linearized ``target`` is null for no_match
     instances."""
-    base = df.select(F.col(id_col).cast("string").alias("id"), "input", "id_triples")
+    base = df.select(F.col("id").cast("string").alias("id"), "input", "id_triples")
     ex = base.select(
         "id", F.posexplode_outer("id_triples").alias("pos", "t")
     ).select("id", "pos", F.col("t.s").alias("s"), F.col("t.r").alias("r"), F.col("t.o").alias("o"))

@@ -104,12 +104,7 @@ def dedup_by_url(
     )
 
 
-def blocklist_filter(
-    docs: DataFrame,
-    rules: DataFrame,
-    host_col: str = "host",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def blocklist_filter(docs: DataFrame, rules: DataFrame) -> DataFrame:
     """Domain-blocklist verdicts with SUBDOMAIN (suffix) matching — the
     crawl-filtering form: a rule ``src1.com`` blocks ``src1.com`` AND
     every ``*.src1.com``. Each host explodes into its label-suffix
@@ -127,22 +122,22 @@ def blocklist_filter(
     on the suffix (broadcastable when the blocklist is small, still a
     plain shuffle join when it is not — not assumed); the verdict
     groupBy folds back to one row per doc."""
-    w = F.split(F.col(host_col), "\\.")
+    w = F.split(F.col("host"), "\\.")
     suffixes = F.transform(
         F.sequence(F.lit(1), F.size(w)),
         lambda i: F.array_join(F.slice(w, i, F.size(w) - i + 1), "."),
     )
     ex = docs.select(
-        F.col(id_col), F.col(host_col), F.explode(suffixes).alias("suf")
+        F.col("doc_id"), F.col("host"), F.explode(suffixes).alias("suf")
     )
     hits = (
         ex.join(rules.select(F.col("rule").alias("suf"), "rule"), "suf")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.min("rule").alias("rule"))
     )
-    return docs.select(id_col, host_col).join(hits, id_col, "left").select(
-        F.col(id_col),
-        F.col(host_col),
+    return docs.select("doc_id", "host").join(hits, "doc_id", "left").select(
+        F.col("doc_id"),
+        F.col("host"),
         F.col("rule").isNotNull().alias("blocked"),
         "rule",
     )

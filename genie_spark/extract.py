@@ -244,13 +244,11 @@ def bounded_units_col(text: Column, bounds: Column) -> Column:
     )
 
 
-def sentences_bounded_df(
-    pages: DataFrame, text_col: str = "text", bounds_col: str = "boundaries"
-) -> DataFrame:
+def sentences_bounded_df(pages: DataFrame) -> DataFrame:
     """Annotated pages(…, text, boundaries) → one row per unit
     (…, sent_idx, input) with boundary-aware merging — the KILT-table
     rebuild path for gold-annotated sources."""
-    units = bounded_units_col(F.col(text_col), F.col(bounds_col))
+    units = bounded_units_col(F.col("text"), F.col("boundaries"))
     return (
         pages.withColumn("_units", units)
         .select("*", F.posexplode("_units").alias("sent_idx", "input"))

@@ -64,7 +64,7 @@ def format_linearization(triples: Sequence[Tuple[str, str, str]]) -> str:
 # ---------------------------------------------------------------------------
 
 
-def parse_triples_col(col: Column, dedup: bool = True) -> Column:
+def parse_triples_col(col: Column) -> Column:
     """Column[string] → Column[array<struct<s,r,o>>], same semantics as
     :func:`parse_linearization`, expressed with higher-order functions so it
     stays inside whole-stage codegen (no UDF)."""
@@ -84,7 +84,7 @@ def parse_triples_col(col: Column, dedup: bool = True) -> Column:
             ),
         ),
     ).otherwise(F.array().cast("array<struct<s:string,r:string,o:string>>"))
-    return F.array_distinct(triples) if dedup else triples
+    return F.array_distinct(triples)
 
 
 def format_triples_col(col: Column) -> Column:

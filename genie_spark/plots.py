@@ -72,7 +72,7 @@ def _axis_left(parts: List[str], lo: float, hi: float, label: str) -> None:
     )
 
 
-def _axis_right(parts: List[str], hi: float, label: str = "Frequency") -> None:
+def _axis_right(parts: List[str], hi: float) -> None:
     for i in range(6):
         v = hi * i / 5
         y = MT + PH - PH * i / 5
@@ -88,7 +88,7 @@ def _axis_right(parts: List[str], hi: float, label: str = "Frequency") -> None:
     parts.append(
         f'<text x="{W - 12}" y="{MT + PH / 2:.1f}" font-size="12" '
         f'text-anchor="middle" '
-        f'transform="rotate(90 {W - 12} {MT + PH / 2:.1f})">{escape(label)}</text>'
+        f'transform="rotate(90 {W - 12} {MT + PH / 2:.1f})">Frequency</text>'
     )
 
 
@@ -186,19 +186,14 @@ def svg_twinx_bucket_bar(
     left_y: Mapping,
     right_y: Mapping,
     left_label: str,
-    bucket_ids: Sequence[int] | None = None,
-    left_lim: Tuple[float, float] = (0.0, 1.0),
 ) -> str:
     """Twin of plot_twinx_barplot_with_train_dist: paired bars per
     bucket — metric (red, left axis) and distribution (blue, right
     axis) — plus error bars when (mean, std) pairs are supplied."""
-    if bucket_ids is None:
-        bucket_ids = sorted(
-            {int(k) for k in left_y} | {int(k) for k in right_y}
-        )
+    bucket_ids = sorted({int(k) for k in left_y} | {int(k) for k in right_y})
     means, errs = _split_mean_err(left_y, bucket_ids)
     dist = _dist_values(right_y, bucket_ids)
-    lo, hi = left_lim
+    lo, hi = 0.0, 1.0
     r_hi = _nice_max(max(dist) if dist else 1.0)
 
     parts: List[str] = []
@@ -239,7 +234,6 @@ def svg_twinx_bucket_line(
     left_label: str,
     series_labels: Sequence[str] | None = None,
     bucket_ids: Sequence[int] | None = None,
-    left_lim: Tuple[float, float] = (0.0, 1.0),
 ) -> str:
     """Twin of plot_twinx_line_with_train_dist: one marker line per
     series over the distribution bars. The reference driver passes
@@ -256,7 +250,7 @@ def svg_twinx_bucket_line(
             for i in range(len(left_ys))
         ]
     dist = _dist_values(right_y, bucket_ids)
-    lo, hi = left_lim
+    lo, hi = 0.0, 1.0
     r_hi = _nice_max(max(dist) if dist else 1.0)
     colors = ["#b22", "#282", "#b60", "#628"]
 
@@ -308,7 +302,6 @@ def render_bucket_plots(
     bucket_obj: Mapping,
     out_dir: str,
     metrics: Sequence[str] = ("precision", "recall", "f1"),
-    model_name: str = "genie-spark",
 ) -> Dict[str, List[str]]:
     """The evaluate_from_file plot sink: for each metric in the bucket
     results object (the bucket_results.json shape — {metric: {bucket:
@@ -329,7 +322,7 @@ def render_bucket_plots(
             (
                 "line",
                 svg_twinx_bucket_line(
-                    [scores], dist, m, series_labels=[model_name]
+                    [scores], dist, m, series_labels=["genie-spark"]
                 ),
             ),
         ):

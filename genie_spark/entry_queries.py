@@ -2816,15 +2816,15 @@ def redact_contacts_q(spark, sf_dir):
     )
 
 
-def _grams_sql(k: int, arr: str = "w") -> str:
-    """DuckDB expression: distinct word ``k``-grams of list column ``arr``
+def _grams_sql(k: int) -> str:
+    """DuckDB expression: distinct word ``k``-grams of list column ``w``
     with the whole-text fallback for short docs — the twin of
     ``dedup.shingles_col(text, k)``."""
     return (
-        f"CASE WHEN len({arr}) >= {k} THEN list_distinct(list_transform("
-        f"range(1, len({arr}) - {k - 2}), i -> array_to_string("
-        f"list_slice({arr}, i, i + {k - 1}), ' ')))"
-        f" ELSE [array_to_string({arr}, ' ')] END"
+        f"CASE WHEN len(w) >= {k} THEN list_distinct(list_transform("
+        f"range(1, len(w) - {k - 2}), i -> array_to_string("
+        f"list_slice(w, i, i + {k - 1}), ' ')))"
+        f" ELSE [array_to_string(w, ' ')] END"
     )
 
 

@@ -10,8 +10,10 @@ genie/models/genie_base_pl.py:275-297, is not idempotent). Design:
   depends only on the data — never on cluster size or input split — so a
   resume at different parallelism processes exactly the complete remainder.
 * Each chunk's output lands under ``out/chunk=<k>/`` in one atomic write;
-  a ``_lineage`` table records (chunk, n_docs, n_sentences, n_triples,
-  wall_s, docs_per_s, finished_ts) one row per completed chunk.
+  a ``_lineage`` table records (chunk, n_docs, n_rows, n_triples,
+  wall_s, docs_per_s, finished_ts) one row per completed chunk. The
+  counts are the chunk's own; ``wall_s`` and ``docs_per_s`` are those of
+  the commit group the chunk was processed in.
 * Resume = anti-join the chunk list against ``_lineage`` — already-done
   chunks are never rescanned (partition pruning on the chunk column for
   readers). On Iceberg the same layout maps to partitioned appends +
@@ -106,7 +108,11 @@ def run_checkpointed(
         group = todo[i : i + chunks_per_job]
         t0 = time.time()
         subset = chunked.filter(F.col("chunk").isin(group))
-        n_docs = subset.count()
+        docs_by_chunk = {
+            int(row["chunk"]): row["count"]
+            for row in subset.groupBy("chunk").count().collect()
+        }
+        n_docs = sum(docs_by_chunk.values())
         out = process(subset)
         out.write.mode("append").partitionBy("chunk").parquet(
             os.path.join(out_path, "data")
@@ -122,7 +128,6 @@ def run_checkpointed(
             )
             .collect()
         )
-        per_chunk_docs = n_docs / max(len(group), 1)
         by_chunk = {int(row["chunk"]): row for row in stats}
         # every chunk in the group gets a record — an empty chunk (no rows
         # hashed into it) is COMPLETE, not pending, or resume would rescan
@@ -133,7 +138,7 @@ def run_checkpointed(
                 out_path,
                 {
                     "chunk": c,
-                    "n_docs": int(per_chunk_docs),
+                    "n_docs": docs_by_chunk.get(c, 0),
                     "n_rows": int(row["n_rows"]) if row else 0,
                     "n_triples": int(row["n_triples"] or 0) if row else 0,
                     "wall_s": round(wall, 3),

@@ -119,3 +119,36 @@ def test_orphaned_data_rolled_back_on_resume(spark, process, tmp_path):
     n = got.count()
     n_distinct = got.select("url", "sent_idx").distinct().count()
     assert n == n_distinct, f"orphaned chunk data duplicated: {n} vs {n_distinct}"
+
+
+def test_lineage_counts_are_per_chunk(spark, process, tmp_path):
+    """Every lineage record's n_docs, n_rows and n_triples equal a recount
+    of that chunk's input pages and written rows — not a group average
+    (chunk sizes within a commit group differ)."""
+    import os
+
+    out = str(tmp_path / "graph_out")
+    pages = synth.pages_df(spark, N_PAGES).cache()
+    run_checkpointed(spark, pages, process, out, n_chunks=N_CHUNKS, chunks_per_job=3)
+
+    docs = {
+        r["chunk"]: r["count"]
+        for r in with_chunk(pages, n_chunks=N_CHUNKS).groupBy("chunk").count().collect()
+    }
+    written = {
+        r["chunk"]: (r["n_rows"], r["n_triples"])
+        for r in spark.read.parquet(os.path.join(out, "data"))
+        .groupBy("chunk")
+        .agg(
+            F.count("*").alias("n_rows"),
+            F.sum(F.size("pred_triples")).alias("n_triples"),
+        )
+        .collect()
+    }
+    assert len(set(docs.values())) > 1, "chunk sizes must differ for this check"
+    records = lineage_df(spark, out).collect()
+    assert sorted(r["chunk"] for r in records) == list(range(N_CHUNKS))
+    for r in records:
+        c = r["chunk"]
+        assert r["n_docs"] == docs.get(c, 0), c
+        assert (r["n_rows"], r["n_triples"]) == written.get(c, (0, 0)), c

@@ -92,7 +92,7 @@ def main(argv=None) -> dict:
     if rels is not None:
         from genie_spark.evaluation import _restrict
 
-        df = _restrict(df, list(rels), "pred", "target")
+        df = _restrict(df, list(rels))
     macro, per_rel = evaluate_macro(df)
 
     os.makedirs(args.output_dir, exist_ok=True)

@@ -1573,7 +1573,11 @@ def _kg_edges_df(spark, sf_dir) -> DataFrame:
     # form at least got two). The repartition moves only the three
     # pruned key columns, once; consumers that reference the edge
     # subtree k times (k_hop, walks) re-execute it k times, so the map
-    # stage must be parallel.
+    # stage must be parallel. spread_for_compute sees every scan as
+    # undeclared (0 partitions) and always inserts the repartition: at
+    # production scale a many-row-group lineitem scan is already split
+    # into many tasks, so there the repartition is expected to be
+    # redundant, but it is cheap (three key columns, one shuffle).
     from .datapipe.dedup import spread_for_compute
 
     li_pairs = spread_for_compute(

@@ -1765,7 +1765,7 @@ def entity_summary(facts: DataFrame, top_k: int = 2) -> DataFrame:
 def resource_allocation_index(facts: DataFrame, pairs: DataFrame) -> DataFrame:
     """Resource-Allocation link-prediction index (Zhou, Lü & Zhang
     2009) for a CANDIDATE PAIR PANEL: ``RA(x,y) = Σ_{z ∈ Γout(x) ∩
-    Γout(y)} scale // deg_in(z)`` in integer units of 1/scale — the
+    Γout(y)} 1e6 // deg_in(z)`` in integer units of 1e-6 — the
     degree-weighted upgrade of the common-neighbors count (hubs shared
     by everyone contribute ~0). Adamic-Adar's 1/log(deg) needs float
     log; the RA 1/deg form is the integer-exact member of the same

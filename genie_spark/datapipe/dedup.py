@@ -108,14 +108,12 @@ def spread_for_compute(docs: DataFrame) -> DataFrame:
 
 def minhash_signatures(
     docs: DataFrame,
-    text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 3,
     num_hashes: int = 16,
 ) -> DataFrame:
     return spread_for_compute(docs).select(
         F.col(id_col),
-        minhash_signature_col(shingles_col(F.col(text_col), k), num_hashes).alias("sig"),
+        minhash_signature_col(shingles_col(F.col("text")), num_hashes).alias("sig"),
     )
 
 
@@ -187,7 +185,7 @@ def minhash_jaccard_pairs(
     signature-estimated Jaccard ≥ threshold. Returns
     (id_a, id_b, est_jaccard)."""
     rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(docs, "text", id_col, 3, num_hashes).cache()
+    sigs = minhash_signatures(docs, id_col=id_col, num_hashes=num_hashes).cache()
     cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band)
     sa = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
@@ -226,7 +224,7 @@ def ngram_jaccard_pairs(
     contributes at most max_df·(max_df−1)/2 pairs. ``max_df=None``
     preserves the exact-Jaccard semantics for small corpora."""
     sh = spread_for_compute(docs).select(
-        F.col("doc_id"), F.explode(shingles_col(F.col("text"), 3)).alias("shingle")
+        F.col("doc_id"), F.explode(shingles_col(F.col("text"))).alias("shingle")
     ).distinct()
     if max_df is not None:
         rare = (
@@ -339,8 +337,6 @@ def _lsh_cosine_pairs(
 
 def embedding_neardup_pairs(
     emb: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     block_col: Optional[str] = None,
     threshold: float = 0.95,
     salt: int = 1,
@@ -360,7 +356,7 @@ def embedding_neardup_pairs(
             "use embedding_neardup_lsh_pairs for the LSH-blocked default"
         )
     return _salted_cosine_pairs(
-        emb, vec_col, id_col, F.col(block_col), threshold, salt
+        emb, "embedding", "vec_id", F.col(block_col), threshold, salt
     )
 
 
@@ -449,7 +445,6 @@ def _salted_cosine_pairs(
 def decontaminate(
     docs: DataFrame,
     eval_docs: DataFrame,
-    text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 8,
 ) -> DataFrame:
@@ -468,10 +463,10 @@ def decontaminate(
     (docs shorter than ``n`` words contribute their whole text, so exact
     copies of short eval items are still caught)."""
     tg = spread_for_compute(docs).select(
-        F.col(id_col), F.explode(shingles_col(F.col(text_col), n)).alias("gram")
+        F.col(id_col), F.explode(shingles_col(F.col("text"), n)).alias("gram")
     )
     eg = eval_docs.select(
-        F.explode(shingles_col(F.col(text_col), n)).alias("gram")
+        F.explode(shingles_col(F.col("text"), n)).alias("gram")
     ).distinct()
     return (
         tg.join(F.broadcast(eg), "gram")
@@ -487,7 +482,7 @@ def decontaminated(
 ) -> DataFrame:
     """The clean corpus: ``docs`` minus every document flagged by
     :func:`decontaminate` (left-anti on the contaminated ids)."""
-    hits = decontaminate(docs, eval_docs, "text", "doc_id", n).select("doc_id")
+    hits = decontaminate(docs, eval_docs, n=n).select("doc_id")
     return docs.join(hits, "doc_id", "left_anti")
 
 
@@ -666,7 +661,7 @@ def boilerplate_strip(
     that reuses the df groupBy's hash partitioning (no second content
     shuffle of the corpus text). Reassembly shuffles kept lines once on
     doc id; order restored via array_sort, no global sort."""
-    lines = lines_col(F.col("text"), 8, split)
+    lines = lines_col(F.col("text"), split=split)
     joiner = split if split is not None else " "
     ex = docs.select(
         F.col(id_col), F.posexplode(lines).alias("pos", "line")
@@ -787,7 +782,7 @@ def prefix_jaccard_pairs(
     # with every reference (measured 6.0s -> 7.7s with it)
     sh = docs.select(
         "doc_id",
-        F.explode(shingles_col(F.col("text"), 3)).alias("shingle"),
+        F.explode(shingles_col(F.col("text"))).alias("shingle"),
     ).distinct()
     dfq = sh.groupBy("shingle").agg(
         F.count(F.lit(1)).cast("long").alias("df")
@@ -961,12 +956,12 @@ def incremental_lsh_matches(
     that is not implemented. Within-batch duplicates are a separate
     (tiny) lsh_candidate_pairs over the batch alone, by policy."""
     rows_per_band = num_hashes // bands
-    sig_old = minhash_signatures(index_docs, "text", "doc_id", 3, num_hashes)
-    sig_new = minhash_signatures(batch_docs, "text", "doc_id", 3, num_hashes)
-    bo = banded_keys(sig_old, "doc_id", bands, rows_per_band).select(
+    sig_old = minhash_signatures(index_docs, num_hashes=num_hashes)
+    sig_new = minhash_signatures(batch_docs, num_hashes=num_hashes)
+    bo = banded_keys(sig_old, bands=bands, rows_per_band=rows_per_band).select(
         F.col("doc_id").alias("old_id"), "band", "bkey"
     )
-    bn = banded_keys(sig_new, "doc_id", bands, rows_per_band).select(
+    bn = banded_keys(sig_new, bands=bands, rows_per_band=rows_per_band).select(
         F.col("doc_id").alias("new_id"), "band", "bkey"
     )
     cand = bn.join(bo, ["band", "bkey"]).select("new_id", "old_id").distinct()

@@ -224,14 +224,12 @@ def components_with_singletons(
     vertices: DataFrame,
     edges: DataFrame,
     id_col: str,
-    src: str = "id_a",
-    dst: str = "id_b",
 ) -> DataFrame:
     """Every vertex gets a component: edge-connected vertices share
     their min-reachable id, untouched vertices are their own singleton.
     One broadcast-sized join when the component table is small relative
     to the corpus (near-dup graphs); Catalyst/AQE picks the strategy."""
-    comp = connected_components(edges, src, dst)
+    comp = connected_components(edges)
     return (
         vertices.join(
             comp.withColumnRenamed("id", id_col), id_col, "left"
@@ -443,7 +441,7 @@ def component_dedup(
     which by construction equals the component label, so survivorship is
     the filter ``id == component``: no extra shuffle beyond the
     component computation itself."""
-    tagged = components_with_singletons(vertices, edges, id_col, "id_a", "id_b")
+    tagged = components_with_singletons(vertices, edges, id_col)
     return tagged.filter(F.col(id_col) == F.col("component")).select(id_col)
 
 

@@ -182,7 +182,7 @@ def _lsh_pairs_sql(
 ) -> str:
     """Twin of ``dedup._lsh_cosine_pairs``; ``label`` carries the label
     column and keeps only pairs whose labels differ."""
-    planes = hyperplanes(n_planes, dim, 42)
+    planes = hyperplanes(n_planes, dim)
     dot = "list_sum(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2]))"
     lbl, lbl_cols, lbl_pred = (
         (", label", "\n       a.label AS label_a, b.label AS label_b,",
@@ -239,7 +239,7 @@ def semantic_dedup_survivors(
         ivf_cell_col(F.col("embedding"), centroids).alias("cell"),
     )
     pairs = embedding_neardup_pairs(
-        cells, "embedding", "vec_id", block_col="cell", threshold=threshold,
+        cells, block_col="cell", threshold=threshold,
         salt=_block_salt(emb, len(centroids)),
     )
     dropped = pairs.select(F.col("id_b").alias("vec_id")).distinct()

@@ -35,13 +35,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def word_freq(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_freq(docs: DataFrame) -> DataFrame:
     """(word, cnt) — the BPE training input. One partial-agg groupBy."""
     return (
         docs.select(
             F.explode(
                 F.filter(
-                    F.split(F.lower(F.col(text_col)), " "),
+                    F.split(F.lower(F.col("text")), " "),
                     lambda x: x != F.lit(""),
                 )
             ).alias("word")
@@ -81,7 +81,7 @@ def bpe_learn_merges(docs: DataFrame, merges: int = 6) -> DataFrame:
     Assumes every round has at least one pair with count >= 1 (true
     unless the vocabulary is fully merged — bound ``merges``
     accordingly)."""
-    wf = word_freq(docs, "text").localCheckpoint(eager=True)
+    wf = word_freq(docs).localCheckpoint(eager=True)
     sq = wf.select("cnt", _spaced_chars(F.col("word")).alias("seq"))
     merge_rows = None
     for i in range(1, merges + 1):

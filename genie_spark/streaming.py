@@ -279,8 +279,8 @@ def stream_dedup_minhash(
     from .datapipe.dedup import banded_keys, minhash_signature_col, shingles_col
 
     docs = spark.readStream.schema(DOC_STREAM_SCHEMA).parquet(input_dir)
-    sig = minhash_signature_col(shingles_col(F.col("text"), 3), 16)
-    banded = banded_keys(docs.select("doc_id", sig.alias("sig")), "doc_id", 4, 4)
+    sig = minhash_signature_col(shingles_col(F.col("text")))
+    banded = banded_keys(docs.select("doc_id", sig.alias("sig")))
 
     out_type = "id_a bigint, id_b bigint, band int"
     state_type = "members array<bigint>"

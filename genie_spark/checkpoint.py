@@ -16,8 +16,8 @@ genie/models/genie_base_pl.py:275-297, is not idempotent). Design:
   the commit group the chunk was processed in.
 * Resume = anti-join the chunk list against ``_lineage`` — already-done
   chunks are never rescanned (partition pruning on the chunk column for
-  readers). On Iceberg the same layout maps to partitioned appends +
-  snapshot metadata; locally it is Parquet directories, same semantics.
+  readers). Output is always Parquet directories; the sink does not go
+  through the Iceberg layer.
 
 At 100 TB with n_chunks ≈ 10k, each chunk is ~10 GB — large enough to
 amortize job overhead, small enough that a preemption loses minutes.
@@ -27,32 +27,45 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
-from typing import Callable, List, Optional
+from typing import Callable, Dict, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_DIR = "_lineage"
+_RECORD = re.compile(r"chunk_(\d+)\.json")
 
 
 def with_chunk(df: DataFrame, key: str = "url", n_chunks: int = 16) -> DataFrame:
     return df.withColumn("chunk", F.pmod(F.xxhash64(F.col(key)), F.lit(n_chunks)))
 
 
-def completed_chunks(spark: SparkSession, out_path: str) -> List[int]:
+def _lineage_files(out_path: str) -> Dict[int, str]:
+    """chunk -> committed record path. Only ``chunk_<k>.json`` names
+    count: a ``.tmp`` left by a kill before the ``os.replace`` is not a
+    commit, whatever it holds."""
     path = os.path.join(out_path, LINEAGE_DIR)
-    if not os.path.exists(path):
-        return []
-    rows = spark.read.json(path).select("chunk").distinct().collect()
-    return sorted(r["chunk"] for r in rows)
+    if not os.path.isdir(path):
+        return {}
+    found = {}
+    for name in os.listdir(path):
+        m = _RECORD.fullmatch(name)
+        if m:
+            found[int(m.group(1))] = os.path.join(path, name)
+    return found
+
+
+def completed_chunks(spark: SparkSession, out_path: str) -> List[int]:
+    return sorted(_lineage_files(out_path))
 
 
 def lineage_df(spark: SparkSession, out_path: str) -> Optional[DataFrame]:
-    path = os.path.join(out_path, LINEAGE_DIR)
-    if not os.path.exists(path):
+    files = _lineage_files(out_path)
+    if not files:
         return None
-    return spark.read.json(path)
+    return spark.read.json(list(files.values()))
 
 
 def _append_lineage(out_path: str, record: dict) -> None:
@@ -71,8 +84,8 @@ def _clean_uncommitted(out_path: str, todo_chunks) -> None:
     a naive resume would duplicate (observed: kill -TERM mid-run left
     chunk=4,5 data without lineage; re-run re-emitted them → 254 rows for
     a 193-row corpus). The lineage record is the commit point; anything
-    outside it is rolled back here. On Iceberg the same rollback is a
-    snapshot expire of the uncommitted append."""
+    outside it is rolled back here by deleting the chunk's Parquet
+    directory."""
     import shutil
 
     data = os.path.join(out_path, "data")

@@ -46,35 +46,6 @@ def dedup_pages_by_url(
     return out
 
 
-def decontaminated_stream(
-    pages_stream: DataFrame,
-    eval_docs: DataFrame,
-    n: int = 8,
-) -> DataFrame:
-    """Streaming decontamination: drop every arriving page that shares an
-    ``n``-gram with the (static) eval set. The batch form
-    (:func:`~genie_spark.datapipe.dedup.decontaminate`) explodes the
-    corpus side and anti-joins its own hit list — a stream-stream self
-    join, which Structured Streaming forbids. This form is row-preserving
-    instead: each page carries its gram array and is LEFT-ANTI joined
-    against the broadcast static eval grams on an ``array_contains``
-    condition (stream ⋈ static anti joins are supported), so a page is
-    dropped iff any eval gram occurs in it. Cost is O(|eval grams|) per
-    page worst-case (broadcast nested loop) — fine for eval-set-sized
-    right sides; a crawl-scale right side belongs in the batch path."""
-    from .dedup import shingles_col
-
-    eg = eval_docs.select(
-        F.explode(shingles_col(F.col("text"), n)).alias("gram")
-    ).distinct()
-    withg = pages_stream.withColumn(
-        "_grams", shingles_col(F.col("text"), n)
-    )
-    return withg.join(
-        F.broadcast(eg), F.expr("array_contains(_grams, gram)"), "left_anti"
-    ).drop("_grams")
-
-
 def curate_pages(
     pages: DataFrame,
     url_dedup: bool = False,

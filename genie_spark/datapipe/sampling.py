@@ -226,13 +226,12 @@ def hopping_window_rates(
 ) -> DataFrame:
     """Overlapping (hopping) time-window aggregation of the event log:
     per (window start, event type) the event count and value sum, with
-    window size ``window_minutes`` advancing every ``hop_minutes`` —
-    the batch twin of the streaming windowed aggregation
-    (streaming.stream_page_rates), kept ENGINE-EXACT by doing the
-    window assignment in integer epoch-microsecond arithmetic instead
-    of engine-native window functions (Spark's F.window and DuckDB's
-    time_bucket draw boundaries differently around epoch offsets; the
-    explicit floor math cannot disagree). Each event explodes into
+    window size ``window_minutes`` advancing every ``hop_minutes``,
+    kept ENGINE-EXACT by doing the window assignment in integer
+    epoch-microsecond arithmetic instead of engine-native window
+    functions (Spark's F.window and DuckDB's time_bucket draw boundaries
+    differently around epoch offsets; the explicit floor math cannot
+    disagree). Each event explodes into
     window/hop overlapping windows (a constant ≤ size/hop fan-out),
     then ONE partial-aggregatable groupBy. Value sums are ppm-quantized
     integers (determinism discipline: float sums are order-dependent)."""

@@ -189,8 +189,8 @@ def contact_flags(docs: DataFrame) -> DataFrame:
 
 def redact_col(t: Column) -> Column:
     """The redacted-text expression (emails → ``<EMAIL>``, URLs →
-    ``<URL>``) — row-local, so it composes into streaming selects and
-    in-place column rewrites without a join."""
+    ``<URL>``) — row-local, so it composes into in-place column
+    rewrites without a join."""
     return F.regexp_replace(
         F.regexp_replace(t, EMAIL_PATTERN, "<EMAIL>"), URL_PATTERN, "<URL>"
     )
@@ -230,7 +230,7 @@ def gate_reasons_col(
 ) -> Column:
     """The ordered fail_reasons expression over already-computed feature
     columns (empty string = passed). Pure Column math, so it composes
-    into streaming selects and scan-predicate filters."""
+    into selects and scan-predicate filters."""
     checks = [
         ("too_short", n_words < min_words),
         ("too_long", n_words > max_words),
@@ -246,8 +246,8 @@ def gate_reasons_col(
 
 def gate_passed_col(t: Column, **thresholds) -> Column:
     """Single-expression keep/drop boolean over the raw text column —
-    the filter form of :func:`quality_gate` for streams and cascade
-    stages that only need the verdict (row-local, join-free). Recomputes
+    the filter form of :func:`quality_gate` for cascade stages that
+    only need the verdict (row-local, join-free). Recomputes
     the feature expressions inline; use :func:`quality_gate` when the
     feature values themselves are needed."""
     cols = {**_quality_cols(t), **_repetition_cols(t)}

@@ -1,10 +1,11 @@
 """Iceberg integration: the production table layer, guarded for sandboxes.
 
 The north-rule deployment writes pages/extractions/graph to Apache Iceberg
-tables. This sandbox has no iceberg-spark runtime jar, so every entry point
-degrades to the Parquet-directory layout with identical partitioning and
-the same commit semantics (chunk lineage in checkpoint.py ≙ Iceberg
-snapshot log). On a cluster, enable with:
+tables. Without the iceberg-spark runtime jar every entry point degrades
+to the Parquet-directory layout with identical partitioning. (Resumable
+runs, checkpoint.py, write Parquet directories only; their commit point
+is the chunk lineage record, not an Iceberg snapshot.) On a cluster,
+enable with:
 
     spark-submit \
       --packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<ver> \
@@ -75,36 +76,3 @@ def read_table(
     if iceberg_available(spark):
         return spark.read.table(identifier)
     return spark.read.parquet(path_fallback)
-
-
-def current_snapshot_id(spark: SparkSession, identifier: str) -> Optional[int]:
-    """Latest snapshot id of the table — record this in chunk lineage at
-    each commit point so resume knows where to roll back to. None without
-    the runtime or for an empty table."""
-    if not iceberg_available(spark):
-        return None
-    row = (
-        spark.sql(
-            f"SELECT snapshot_id FROM {identifier}.snapshots "
-            f"ORDER BY committed_at DESC LIMIT 1"
-        ).first()
-    )
-    return row[0] if row else None
-
-
-def rollback_uncommitted(
-    spark: SparkSession, identifier: str, committed_snapshot_id: Optional[int]
-) -> None:
-    """Iceberg counterpart of checkpoint._clean_uncommitted: restore the
-    table to the last snapshot RECORDED IN LINEAGE, discarding snapshots
-    committed after it (data written without a lineage record). No-op
-    without the runtime — the Parquet path rolls back by deleting
-    unrecorded chunk dirs. (expire_snapshots would do the opposite: keep
-    the possibly-orphan latest snapshot and delete the history needed to
-    roll back.)"""
-    if not iceberg_available(spark) or committed_snapshot_id is None:
-        return
-    spark.sql(
-        f"CALL genie.system.rollback_to_snapshot(table => '{identifier}', "
-        f"snapshot_id => {int(committed_snapshot_id)})"
-    )

@@ -1,11 +1,14 @@
 """Resumable checkpointing: kill-and-rerun must neither duplicate nor drop
 chunks (SURVEY.md §5.2 resumability test)."""
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
 from genie_spark import synth
 from genie_spark.checkpoint import (
+    LINEAGE_DIR,
     completed_chunks,
     lineage_df,
     run_checkpointed,
@@ -94,14 +97,12 @@ def test_third_run_is_noop(spark, process, tmp_path):
     assert run_checkpointed(spark, pages, process, out, n_chunks=N_CHUNKS) == []
 
 
-def test_orphaned_data_rolled_back_on_resume(spark, process, tmp_path):
-    """A crash BETWEEN the data append and the lineage write leaves
-    partition files with no commit record; resume must roll them back,
-    not duplicate them (regression: observed 254 rows for a 193-row corpus
-    after a SIGTERM mid-run)."""
+def _resume_over_orphan(spark, process, out, lineage):
+    """Write chunk 0's data with no committed lineage record, leave
+    ``lineage`` (file name -> text; None = no directory) in ``_lineage``,
+    then resume: the orphan must be rolled back, not duplicated."""
     import os
 
-    out = str(tmp_path / "graph_out")
     pages = synth.pages_df(spark, N_PAGES).cache()
 
     # simulate the crash: write one chunk's data WITHOUT its lineage record
@@ -110,7 +111,14 @@ def test_orphaned_data_rolled_back_on_resume(spark, process, tmp_path):
     orphan.write.mode("append").partitionBy("chunk").parquet(
         os.path.join(out, "data")
     )
+    if lineage is not None:
+        lin_dir = os.path.join(out, LINEAGE_DIR)
+        os.makedirs(lin_dir)
+        for name, text in lineage.items():
+            with open(os.path.join(lin_dir, name), "w") as f:
+                f.write(text)
     assert completed_chunks(spark, out) == []  # no commit record
+    assert lineage_df(spark, out) is None
 
     run_checkpointed(
         spark, pages, process, out, n_chunks=N_CHUNKS, chunks_per_job=N_CHUNKS
@@ -119,6 +127,34 @@ def test_orphaned_data_rolled_back_on_resume(spark, process, tmp_path):
     n = got.count()
     n_distinct = got.select("url", "sent_idx").distinct().count()
     assert n == n_distinct, f"orphaned chunk data duplicated: {n} vs {n_distinct}"
+
+
+def test_orphaned_data_rolled_back_on_resume(spark, process, tmp_path):
+    """A crash BETWEEN the data append and the lineage write leaves
+    partition files with no commit record; resume must roll them back,
+    not duplicate them (regression: observed 254 rows for a 193-row corpus
+    after a SIGTERM mid-run)."""
+    _resume_over_orphan(spark, process, str(tmp_path / "graph_out"), None)
+
+
+_RECORD_0 = json.dumps({"chunk": 0, "n_docs": 4, "n_rows": 9, "n_triples": 3,
+                        "wall_s": 1.0, "docs_per_s": 4.0, "finished_ts": 0.0})
+
+
+@pytest.mark.parametrize(
+    "lineage",
+    [
+        {},  # killed right after makedirs
+        {"chunk_0.json.tmp": _RECORD_0[:20]},  # killed mid-write
+        {"chunk_0.json.tmp": _RECORD_0 + "\n"},  # killed before os.replace
+    ],
+    ids=["empty", "torn_tmp", "complete_tmp"],
+)
+def test_torn_lineage_is_not_a_commit(spark, process, tmp_path, lineage):
+    """The same crash with a partly written ``_lineage`` beside the orphan
+    data: anything short of a renamed ``chunk_<k>.json`` is not a commit,
+    so resume neither fails on it nor skips the chunk."""
+    _resume_over_orphan(spark, process, str(tmp_path / "graph_out"), lineage)
 
 
 def test_lineage_counts_are_per_chunk(spark, process, tmp_path):

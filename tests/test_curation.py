@@ -4,7 +4,6 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from genie_spark.datapipe.curation import curate_pages, dedup_pages_by_url
 
@@ -62,71 +61,6 @@ def test_curate_pages_decontaminate_and_redact(spark, pages):
     assert "<EMAIL>" in rows["https://h/p9"]
     assert "<URL>" in rows["https://h/p9"]
     assert "a@b.io" not in rows["https://h/p9"]
-
-
-def test_streaming_gate_and_redact(spark, tmp_path):
-    """The gate and redaction forms are pure Column expressions, so they
-    compose directly onto a readStream — stateless streaming curation
-    with no stream-stream join."""
-    from genie_spark.datapipe.textstats import gate_passed_col, redact_col
-
-    in_dir = str(tmp_path / "stream_in")
-    out_dir = str(tmp_path / "stream_out")
-    ck_dir = str(tmp_path / "ck")
-    rows = [
-        ("u1", "the data is good and it has many plain words for the gate "
-               "to like in a normal document with a@b.io inside"),
-        ("u2", "spam spam spam spam spam spam"),  # gate drops
-    ]
-    spark.createDataFrame(rows, "url string, text string").write.mode(
-        "overwrite"
-    ).parquet(in_dir)
-    stream = (
-        spark.readStream.schema("url string, text string").parquet(in_dir)
-        .filter(gate_passed_col(F.col("text")))
-        .withColumn("text", redact_col(F.col("text")))
-    )
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", out_dir).option("checkpointLocation", ck_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = {r["url"]: r["text"] for r in spark.read.parquet(out_dir).collect()}
-    assert set(got) == {"u1"}
-    assert "<EMAIL>" in got["u1"] and "a@b.io" not in got["u1"]
-
-
-def test_streaming_decontaminate(spark, tmp_path):
-    """Stream-static anti-join decontamination: arriving pages sharing an
-    n-gram with the static eval set are dropped; clean pages pass with
-    their schema intact (the helper's gram column must not leak)."""
-    from genie_spark.datapipe.curation import decontaminated_stream
-
-    in_dir = str(tmp_path / "din")
-    out_dir = str(tmp_path / "dout")
-    ck_dir = str(tmp_path / "dck")
-    rows = [
-        ("u1", "the quick brown fox jumps over a lazy dog and naps"),
-        ("u2", "completely unrelated words fill this entire page here now"),
-    ]
-    spark.createDataFrame(rows, "url string, text string").write.mode(
-        "overwrite"
-    ).parquet(in_dir)
-    eval_docs = spark.createDataFrame(
-        [("e1", "quick brown fox jumps over a lazy dog")], ["url", "text"]
-    )
-    stream = spark.readStream.schema("url string, text string").parquet(in_dir)
-    q = (
-        decontaminated_stream(stream, eval_docs, n=8)
-        .writeStream.format("parquet")
-        .option("path", out_dir).option("checkpointLocation", ck_dir)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    out = spark.read.parquet(out_dir)
-    assert [r["url"] for r in out.collect()] == ["u2"]
-    assert set(out.columns) == {"url", "text"}
 
 
 def test_run_pipeline_e2e_with_curation(spark, tmp_path):

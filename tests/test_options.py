@@ -14,6 +14,10 @@ The census here is pure ``ast`` (no Spark):
 
 Deployment settings (table names, paths, URIs, write modes) are kept as
 options on purpose: they are listed in ``EXEMPT`` with their reason.
+
+A second ``ast`` check asks the same of whole modules: every ``genie_spark``
+module must be imported by some non-test file, or be listed in
+``UNREACHED_EXEMPT`` with its reason.
 """
 from __future__ import annotations
 
@@ -104,6 +108,74 @@ def test_exempt_entries_are_live():
     _total, unset = census()
     stale = sorted(set(EXEMPT) - set(unset))
     assert not stale, f"exempt entries that are gone or now passed: {stale}"
+
+
+# genie_spark modules no non-test file imports -> why they stay.
+UNREACHED_EXEMPT: dict[str, str] = {
+    "genie_spark.toy_bpe":
+        "the executable stand-in for the HuggingFace stack that "
+        "test_hf_adapter runs where transformers is not installed",
+}
+
+
+def _module_name(path: Path) -> str:
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _is_test(path: Path) -> bool:
+    rel = path.relative_to(ROOT)
+    return rel.parts[0] == "tests" or rel.name.startswith("test_")
+
+
+def unreached_modules() -> list[str]:
+    """``genie_spark`` modules that no non-test ``.py`` file imports.
+
+    An import of ``a.b.c`` also reaches its packages ``a.b`` and ``a``;
+    ``from a import x`` reaches ``a.x`` when that is a module. Relative
+    imports resolve against the importing file's package.
+    """
+    modules = {_module_name(p) for p in PACKAGE.rglob("*.py")
+               if not SKIP_DIRS.intersection(p.relative_to(ROOT).parts)}
+    reached: set[str] = set()
+
+    def reach(importer: str, name: str) -> None:
+        parts = name.split(".")
+        for i in range(1, len(parts) + 1):
+            target = ".".join(parts[:i])
+            if target != importer:
+                reached.add(target)
+
+    for path in _py_files():
+        if _is_test(path):
+            continue
+        importer = _module_name(path)
+        package = importer if path.name == "__init__.py" else importer.rpartition(".")[0]
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                for alias in node.names:
+                    reach(importer, alias.name)
+            elif isinstance(node, ast.ImportFrom):
+                base = node.module or ""
+                if node.level:
+                    anchor = package.split(".")
+                    anchor = anchor[:len(anchor) - (node.level - 1)]
+                    base = ".".join(anchor + ([base] if base else []))
+                reach(importer, base)
+                for alias in node.names:
+                    if f"{base}.{alias.name}" in modules:
+                        reach(importer, f"{base}.{alias.name}")
+    return sorted(modules - reached)
+
+
+def test_every_module_has_a_non_test_importer():
+    unreached = unreached_modules()
+    missing = [m for m in unreached if m not in UNREACHED_EXEMPT]
+    assert not missing, (
+        f"genie_spark modules only tests import (delete them, or exempt "
+        f"one with its reason): {', '.join(missing)}")
+    stale = sorted(set(UNREACHED_EXEMPT) - set(unreached))
+    assert not stale, f"exempt modules that are gone or now imported: {stale}"
 
 
 if __name__ == "__main__":

@@ -111,7 +111,6 @@ HEADLINE = [
     "macro_by_relation",
     "macro_mean",
     "bucket_metrics",
-    "bootstrap_micro",
     "bootstrap_micro_multinomial",
     "canonicalize_join",
     "annotate_id_triples",

@@ -52,8 +52,6 @@ def main(argv=None) -> dict:
     ap.add_argument("--relations", help="relation-set jsonl (one name per line)")
     ap.add_argument("--bootstrap", type=int, default=None,
                     help="bootstrap resamples for micro CIs (reference: 50)")
-    ap.add_argument("--bootstrap-mode", choices=["multinomial", "poisson"],
-                    default="multinomial")
     ap.add_argument("--train-split",
                     help="train-split jsonl (KILT or testing-output format); "
                     "enables the Bucket evaluator")
@@ -87,7 +85,6 @@ def main(argv=None) -> dict:
         df,
         relations_to_consider=rels,
         num_bootstrap_samples=args.bootstrap,
-        bootstrap_mode=args.bootstrap_mode,
     )
     if rels is not None:
         from genie_spark.evaluation import _restrict
@@ -124,7 +121,7 @@ def main(argv=None) -> dict:
         # one count aggregation; both KILT and testing-output shapes
         # expose the parsed target triples through read_testing_output
         train = read_testing_output(spark, args.train_split)
-        counts = relation_occurrences(train, "target")
+        counts = relation_occurrences(train)
         brows = sorted(
             bucket_metrics(df, counts).collect(), key=lambda r: r["bucket"]
         )

@@ -20,8 +20,6 @@ from typing import Callable, Dict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .metrics import POISSON1_CDF
-
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: Dict[str, str] = {}
 
@@ -339,68 +337,6 @@ def micro_recall_only(spark, sf_dir):
 
 _N_BOOT = 20
 
-
-@_register(
-    "bootstrap_micro",
-    f"""
-WITH {_TRIPLES_SQL},
-per_order AS (
-  SELECT o.l_orderkey,
-         coalesce(c.n, 0) AS n_correct, coalesce(p.n, 0) AS n_pred, coalesce(t.n, 0) AS n_target
-  FROM (SELECT l_orderkey FROM trg UNION SELECT l_orderkey FROM prd) o
-  LEFT JOIN (SELECT l_orderkey, count(*) n FROM trg JOIN prd USING (l_orderkey, l_returnflag, l_partkey) GROUP BY 1) c USING (l_orderkey)
-  LEFT JOIN (SELECT l_orderkey, count(*) n FROM prd GROUP BY 1) p USING (l_orderkey)
-  LEFT JOIN (SELECT l_orderkey, count(*) n FROM trg GROUP BY 1) t USING (l_orderkey)
-),
-runs AS (SELECT unnest(generate_series(0, {_N_BOOT - 1})) AS run),
-weighted AS (
-  SELECT r.run, po.n_correct, po.n_pred, po.n_target,
-         (('0x' || substr(md5(r.run::VARCHAR || chr(1) || po.l_orderkey::VARCHAR), 1, 15))::UBIGINT::BIGINT % 1000000) / 1000000.0 AS u
-  FROM per_order po CROSS JOIN runs r
-),
-w AS (
-  SELECT run, n_correct, n_pred, n_target,
-         CASE WHEN u < {POISSON1_CDF[0]!r} THEN 0
-              WHEN u < {POISSON1_CDF[1]!r} THEN 1
-              WHEN u < {POISSON1_CDF[2]!r} THEN 2
-              WHEN u < {POISSON1_CDF[3]!r} THEN 3
-              WHEN u < {POISSON1_CDF[4]!r} THEN 4
-              ELSE 5 END AS wt
-  FROM weighted
-),
-per_run AS (
-  SELECT run, sum(n_correct * wt) AS c, sum(n_pred * wt) AS p, sum(n_target * wt) AS t
-  FROM w GROUP BY 1
-),
-scored AS (
-  SELECT CASE WHEN p = 0 THEN 0.0 ELSE c::DOUBLE / p END AS precision,
-         CASE WHEN t = 0 THEN 0.0 ELSE c::DOUBLE / t END AS recall,
-         CASE WHEN (CASE WHEN p = 0 THEN 0.0 ELSE c::DOUBLE / p END)
-                 + (CASE WHEN t = 0 THEN 0.0 ELSE c::DOUBLE / t END) = 0 THEN 0.0
-              ELSE 2 * (CASE WHEN p = 0 THEN 0.0 ELSE c::DOUBLE / p END)
-                     * (CASE WHEN t = 0 THEN 0.0 ELSE c::DOUBLE / t END)
-                   / ((CASE WHEN p = 0 THEN 0.0 ELSE c::DOUBLE / p END)
-                      + (CASE WHEN t = 0 THEN 0.0 ELSE c::DOUBLE / t END)) END AS f1
-  FROM per_run
-)
-SELECT 'precision' AS metric, round(avg(precision), 6) AS mean, round(stddev_pop(precision), 6) AS std FROM scored
-UNION ALL
-SELECT 'recall', round(avg(recall), 6), round(stddev_pop(recall), 6) FROM scored
-UNION ALL
-SELECT 'f1', round(avg(f1), 6), round(stddev_pop(f1), 6) FROM scored
-""",
-)
-def bootstrap_micro_q(spark, sf_dir):
-    from .metrics import bootstrap_micro
-
-    df = bootstrap_micro(
-        _pred_target_df(spark, sf_dir), n_runs=_N_BOOT, hash_mode="md5"
-    )
-    return df.select(
-        "metric", F.round("mean", 6).alias("mean"), F.round("std", 6).alias("std")
-    )
-
-
 _PRF_CASES = """
   SELECT CASE WHEN p = 0 THEN 0.0 ELSE c::DOUBLE / p END AS precision,
          CASE WHEN t = 0 THEN 0.0 ELSE c::DOUBLE / t END AS recall,
@@ -460,13 +396,11 @@ SELECT 'f1', round(avg(f1), 6), round(stddev_samp(f1), 6) FROM scored
 )
 def bootstrap_micro_multinomial_q(spark, sf_dir):
     """Exact multinomial bootstrap (reference evaluation.py:12-26 estimator
-    form: n draws with replacement per run, sample std) beside the Poisson
-    approximation — deterministic hash draws, no RNG."""
+    form: n draws with replacement per run, sample std) — deterministic
+    hash draws, no RNG."""
     from .metrics import bootstrap_micro_multinomial
 
-    df = bootstrap_micro_multinomial(
-        _pred_target_df(spark, sf_dir), n_runs=_N_BOOT, hash_mode="md5"
-    )
+    df = bootstrap_micro_multinomial(_pred_target_df(spark, sf_dir), n_runs=_N_BOOT)
     return df.select(
         "metric", F.round("mean", 6).alias("mean"), F.round("std", 6).alias("std")
     )

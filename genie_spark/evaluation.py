@@ -3,7 +3,8 @@ configs as composable DataFrame calls.
 
 Mirrors genie/utils/evaluation.py:33-56 (get_metrics: optional relation
 restriction applied to BOTH sides, then each requested metric, optionally
-bootstrapped) and genie/utils/evaluators.py:20-63 / 65-140
+bootstrapped with the reference's multinomial resampling,
+get_bootstrap_score :12-26) and genie/utils/evaluators.py:20-63 / 65-140
 (MicroMetricsEvaluator / MacroMetricsEvaluator), replacing the per-sample
 Python loops with the metric aggregations from :mod:`genie_spark.metrics`.
 The per-dataset configuration shapes of configs/evaluation/results_full.yaml
@@ -19,7 +20,6 @@ from pyspark.sql import DataFrame
 
 from .kilt import filter_triples_on_relations
 from .metrics import (
-    bootstrap_micro,
     bootstrap_micro_multinomial,
     macro_metrics,
     micro_metrics,
@@ -40,25 +40,20 @@ def evaluate_micro(
     df: DataFrame,
     relations_to_consider: Optional[Sequence[str]] = None,
     num_bootstrap_samples: Optional[int] = None,
-    bootstrap_mode: str = "multinomial",
 ) -> Dict[str, object]:
     """get_metrics for the micro evaluator: returns
     {metric: score} — or {metric: (mean, std)} when bootstrapped
-    (evaluation.py:44-50). ``bootstrap_mode='multinomial'`` is the
-    reference's exact estimator; 'poisson' the one-pass approximation."""
+    (evaluation.py:44-50) by the reference's multinomial resampling
+    (:func:`metrics.bootstrap_micro_multinomial`)."""
     if relations_to_consider is not None:
         df = _restrict(df, list(relations_to_consider))
     if num_bootstrap_samples is None:
         row = micro_metrics(df).first()
         return {m: float(row[m]) for m in _METRICS}
-    boot = (
-        bootstrap_micro_multinomial
-        if bootstrap_mode == "multinomial"
-        else bootstrap_micro
-    )
     rows = {
         r["metric"]: (float(r["mean"]), float(r["std"]))
-        for r in boot(df, n_runs=num_bootstrap_samples).collect()
+        for r in bootstrap_micro_multinomial(
+            df, n_runs=num_bootstrap_samples).collect()
     }
     return {m: rows[m] for m in _METRICS}
 

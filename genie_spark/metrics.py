@@ -22,6 +22,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .datapipe.hashes import affine_mix, h60
 from .triples import triple_key_col
 
 
@@ -218,78 +219,6 @@ def zero_shot_metrics(df: DataFrame, rel_groups: DataFrame) -> DataFrame:
     )
 
 
-import math as _math
-
-# Poisson(1) inverse-CDF thresholds for the one-pass bootstrap (k ≤ 4
-# covers 99.6% of mass; the tail clamps to 5). Module-level so the DuckDB
-# oracle SQL can inline the exact same literals.
-POISSON1_CDF = []
-_acc = 0.0
-for _k in range(5):
-    _acc += _math.exp(-1.0) / _math.factorial(_k)
-    POISSON1_CDF.append(_acc)
-
-
-def bootstrap_micro(
-    df: DataFrame,
-    n_runs: int = 50,
-    hash_mode: str = "xxhash",
-) -> DataFrame:
-    """A5 — bootstrap CI over samples (reference get_bootstrap_score,
-    evaluation.py:12-26, 50 resamples). One-pass deterministic
-    poissonization: each (sample, run) gets weight ~ Poisson(1) derived
-    from a hash of (id, run) — no Python RNG, no repeated scans, identical
-    across parallelism levels. Returns (metric, mean, std).
-
-    hash_mode='xxhash' is the production path (JVM intrinsic);
-    'md5' derives the uniform from the DuckDB-reproducible h60 so the
-    whole query is oracle-checkable."""
-    counts = _counts(df).select("id", "n_correct", "n_pred", "n_target")
-    # row-local run fan-out (explode of a literal sequence) — no crossJoin
-    # stage, the partial agg under groupBy(run) still bounds the shuffle at
-    # n_runs × partitions counter rows. The fan-out stage is compute-bound
-    # (n_runs hashes per sample), so spread it to the core count first:
-    # AQE coalesces the byte-light upstream join output to a few
-    # partitions and would run the n×n_runs hashing nearly single-task.
-    counts = counts.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    runs = counts.withColumn(
-        "run", F.explode(F.sequence(F.lit(0), F.lit(n_runs - 1)))
-    )
-    if hash_mode == "md5":
-        from .datapipe.hashes import h60_salted
-
-        h = h60_salted(F.col("id").cast("string"), F.col("run"))
-    else:
-        h = F.xxhash64(F.col("id"), F.col("run"))
-    u = F.pmod(h, F.lit(1_000_000)) / 1_000_000.0
-    cdf = POISSON1_CDF
-    w = F.when(u < cdf[0], 0)
-    for k in range(1, 5):
-        w = w.when(u < cdf[k], k)
-    w = w.otherwise(5)
-    per_run = runs.withColumn("w", w).groupBy("run").agg(
-        F.sum(F.col("n_correct") * F.col("w")).alias("c"),
-        F.sum(F.col("n_pred") * F.col("w")).alias("p"),
-        F.sum(F.col("n_target") * F.col("w")).alias("t"),
-    )
-    p, r, f1 = _prf(F.col("c"), F.col("p"), F.col("t"))
-    scored = per_run.select(p.alias("precision"), r.alias("recall"), f1.alias("f1"))
-    # single aggregation over the n_runs rows, then unpivot — an earlier
-    # form unioned three separate agg plans, recomputing the whole
-    # upstream (fan-out + groupBy) once per metric
-    stats = scored.agg(
-        F.avg("precision").alias("ap"), F.stddev_pop("precision").alias("sp"),
-        F.avg("recall").alias("ar"), F.stddev_pop("recall").alias("sr"),
-        F.avg("f1").alias("af"), F.stddev_pop("f1").alias("sf"),
-    )
-    return stats.select(
-        F.expr(
-            "stack(3, 'precision', ap, sp, 'recall', ar, sr, 'f1', af, sf)"
-            " as (metric, mean, std)"
-        )
-    )
-
-
 def _distributed_rank(df: DataFrame, id_col, out_col: str = "j"):
     """Global 0-based rank by ``id_col`` with NO single-partition sort and
     no driver-side action: range-repartition by id (disjoint, ordered key
@@ -334,15 +263,12 @@ def _distributed_rank(df: DataFrame, id_col, out_col: str = "j"):
 def bootstrap_micro_multinomial(
     df: DataFrame,
     n_runs: int = 50,
-    hash_mode: str = "md5",
 ) -> DataFrame:
-    """A5 exact mode — the reference's estimator
+    """A5 — the reference's bootstrap estimator
     (get_bootstrap_score, evaluation.py:12-26): each run resamples exactly
     n datapoints WITH replacement (`random.choices(range(n), k=n)` ⇒ a
     multinomial weight vector summing to n), scores micro P/R/F1 per run,
     and reports mean + SAMPLE std (torch.Tensor.std is Bessel-corrected).
-    The Poisson path (:func:`bootstrap_micro`) approximates the weights
-    independently per sample; this one preserves the exact per-run total.
 
     Deterministic seeding without a Python RNG: draw j of run r picks
     sample index affine_mix(h60(j), r) mod n — one md5 per SAMPLE plus
@@ -369,15 +295,10 @@ def bootstrap_micro_multinomial(
     src = indexed.select("j").repartition(
         df.sparkSession.sparkContext.defaultParallelism
     )
-    if hash_mode == "md5":
-        from .datapipe.hashes import affine_mix, h60
-
-        # base hash BEFORE the run fan-out: one md5 per sample, then only
-        # the cheap salt-keyed remix per (sample, run) draw
-        src = src.withColumn("_h", h60(F.col("j").cast("string")))
-        h = affine_mix(F.col("_h"), F.col("run"))
-    else:
-        h = F.xxhash64(F.col("j"), F.col("run"))
+    # base hash BEFORE the run fan-out: one md5 per sample, then only the
+    # cheap salt-keyed remix per (sample, run) draw
+    src = src.withColumn("_h", h60(F.col("j").cast("string")))
+    h = affine_mix(F.col("_h"), F.col("run"))
     draws = src.withColumn(
         "run", F.explode(F.sequence(F.lit(0), F.lit(n_runs - 1)))
     ).crossJoin(F.broadcast(total))
@@ -406,13 +327,11 @@ def bootstrap_micro_multinomial(
     )
 
 
-def relation_occurrences(
-    df: DataFrame, triples_col: str = "target"
-) -> DataFrame:
-    """A6 — relation occurrence counts (reference
-    KiltDataset.get_rel_occurrence_stats, datasets.py:78-90)."""
+def relation_occurrences(df: DataFrame) -> DataFrame:
+    """A6 — relation occurrence counts over the ``target`` triples
+    (reference KiltDataset.get_rel_occurrence_stats, datasets.py:78-90)."""
     return (
-        df.select(F.explode(F.col(triples_col)).alias("t"))
+        df.select(F.explode(F.col("target")).alias("t"))
         .select(F.col("t.r").alias("rel"))
         .groupBy("rel")
         .count()

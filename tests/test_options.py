@@ -1,19 +1,31 @@
-"""Every defaulted parameter of a module-level ``genie_spark`` function must
-be passed by some call site in the repo.
+"""Every defaulted parameter of a ``genie_spark`` function, constructor or
+method must be passed by some call site in the repo, with a value other
+than its default.
 
 A default that no caller overrides is a constant wearing an option's
 clothes: it is a configuration no test, oracle or benchmark has ever run.
 The census here is pure ``ast`` (no Spark):
 
-* the functions are the top-level ``def``s of every ``genie_spark`` module;
-* a call matches a function by its last name (``f(...)`` or ``m.f(...)``),
-  and its positional arguments map onto the parameters in order;
+* the definitions are the top-level ``def``s of every ``genie_spark``
+  module, the ``__init__`` of every top-level class (matched by the class
+  name) and every other method of those classes (matched by attribute
+  name, ``x.m(...)``); a method's leading ``self``/``cls`` is not a
+  parameter;
+* a call matches a function or class by its last name (``f(...)`` or
+  ``m.f(...)``), and its positional arguments map onto the parameters in
+  order;
+* an argument whose ``ast`` equals the parameter's default (the same
+  literal, the same constant name) does not pass it;
 * a call with ``*args`` or ``**kwargs`` counts as passing every parameter;
 * call sites are every ``.py`` file of the repo (library, scripts,
   ``perfbench/``, ``tests/``, ``examples/``).
 
+Matching by name only ever adds callers: a collision such as
+``F.transform`` can mark a parameter as passed, never invent a finding.
+
 Deployment settings (table names, paths, URIs, write modes) are kept as
-options on purpose: they are listed in ``EXEMPT`` with their reason.
+options on purpose: they are listed in ``EXEMPT`` with their reason, as
+are the parameters only the frozen benchmark harness sets.
 
 A second ``ast`` check asks the same of whole modules: every ``genie_spark``
 module must be imported by some non-test file, or be listed in
@@ -28,7 +40,11 @@ ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "genie_spark"
 SKIP_DIRS = {".git", "__pycache__", "spark-warehouse", ".perfbench_work"}
 
+_PERFBENCH = ("set by perfbench/, the benchmark harness, which changes "
+              "only with the benchmark")
+
 # (module, function, parameter) -> why it stays an option nobody sets.
+# Constructors are keyed by the class name, methods by ``Class.method``.
 EXEMPT: dict[tuple[str, str, str], str] = {
     ("genie_spark.canonicalize", "write_graph", "table"):
         "deployment setting: the catalog table the graph is committed to",
@@ -36,7 +52,14 @@ EXEMPT: dict[tuple[str, str, str], str] = {
         "deployment setting: the URI namespace of the exported graph",
     ("genie_spark.sources", "write_bucketed", "mode"):
         "deployment setting: the write mode of the bucketed sink",
+    ("genie_spark.checkpoint", "run_checkpointed", "key"): _PERFBENCH,
+    ("genie_spark.datapipe.graph", "bellman_ford_sql_chain", "seeds_cte"):
+        _PERFBENCH,
+    ("genie_spark.datapipe.graph", "random_walks_sql_chain", "seeds_cte"):
+        _PERFBENCH,
 }
+
+Definition = tuple[str, str, list[str], dict[str, ast.expr]]
 
 
 def _py_files():
@@ -45,53 +68,90 @@ def _py_files():
             yield p
 
 
-def _defaulted(fn: ast.FunctionDef) -> tuple[list[str], list[str]]:
-    """(positional parameter names in order, names that carry a default)."""
+def _signature(fn: ast.FunctionDef, method: bool
+               ) -> tuple[list[str], dict[str, ast.expr]]:
+    """(positional parameter names in order, name -> default expression).
+
+    A method drops its leading ``self``/``cls``, which no call spells out.
+    """
     a = fn.args
     positional = [x.arg for x in a.posonlyargs + a.args]
-    with_default = positional[len(positional) - len(a.defaults):] if a.defaults else []
-    with_default += [k.arg for k, d in zip(a.kwonlyargs, a.kw_defaults)
-                     if d is not None]
-    return positional, with_default
+    defaults = dict(zip(positional[len(positional) - len(a.defaults):],
+                        a.defaults))
+    defaults.update((k.arg, d) for k, d in zip(a.kwonlyargs, a.kw_defaults)
+                    if d is not None)
+    if method and positional and positional[0] in ("self", "cls"):
+        positional = positional[1:]
+    return positional, defaults
 
 
-def census() -> tuple[int, list[tuple[str, str, str]]]:
-    """(number of defaulted parameters, sorted unset (module, fn, param))."""
-    functions: dict[str, list[tuple[str, list[str], list[str]]]] = {}
-    total = 0
+def _definitions() -> tuple[dict[str, list[Definition]],
+                            dict[str, list[Definition]]]:
+    """(functions and classes by name, methods by name); each definition is
+    (module, qualified name, positional parameters, defaults)."""
+    by_name: dict[str, list[Definition]] = {}
+    by_attr: dict[str, list[Definition]] = {}
     for path in sorted(PACKAGE.rglob("*.py")):
         module = ".".join(path.relative_to(ROOT).with_suffix("").parts)
         for node in ast.parse(path.read_text()).body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                positional, defaulted = _defaulted(node)
-                if defaulted:
-                    functions.setdefault(node.name, []).append(
-                        (module, positional, defaulted))
-                    total += len(defaulted)
+                positional, defaults = _signature(node, method=False)
+                if defaults:
+                    by_name.setdefault(node.name, []).append(
+                        (module, node.name, positional, defaults))
+            elif isinstance(node, ast.ClassDef):
+                for fn in node.body:
+                    if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        continue
+                    positional, defaults = _signature(fn, method=True)
+                    if not defaults:
+                        continue
+                    if fn.name == "__init__":
+                        by_name.setdefault(node.name, []).append(
+                            (module, node.name, positional, defaults))
+                    else:
+                        by_attr.setdefault(fn.name, []).append(
+                            (module, f"{node.name}.{fn.name}", positional,
+                             defaults))
+    return by_name, by_attr
 
-    passed: dict[str, set[str]] = {name: set() for name in functions}
+
+def _passes(arg: ast.expr, default: ast.expr) -> bool:
+    """An argument spelling out the default does not set the option."""
+    return ast.dump(arg) != ast.dump(default)
+
+
+def census() -> tuple[int, list[tuple[str, str, str]]]:
+    """(number of defaulted parameters, sorted unset (module, name, param))."""
+    by_name, by_attr = _definitions()
+    total = sum(len(d[3]) for defs in (*by_name.values(), *by_attr.values())
+                for d in defs)
+    passed: set[tuple[str, str, str]] = set()
     for path in _py_files():
         for node in ast.walk(ast.parse(path.read_text())):
             if not isinstance(node, ast.Call):
                 continue
             f = node.func
-            name = f.id if isinstance(f, ast.Name) else (
-                f.attr if isinstance(f, ast.Attribute) else None)
-            if name not in functions:
+            if isinstance(f, ast.Name):
+                defs = by_name.get(f.id, [])
+            elif isinstance(f, ast.Attribute):
+                defs = by_name.get(f.attr, []) + by_attr.get(f.attr, [])
+            else:
                 continue
             splat = any(isinstance(a, ast.Starred) for a in node.args) or any(
                 k.arg is None for k in node.keywords)
-            for _module, positional, defaulted in functions[name]:
-                if splat:
-                    passed[name].update(defaulted)
-                else:
-                    passed[name].update(positional[:len(node.args)])
-                    passed[name].update(k.arg for k in node.keywords)
+            for module, qual, positional, defaults in defs:
+                given = list(zip(positional, node.args)) + [
+                    (k.arg, k.value) for k in node.keywords]
+                passed.update(
+                    (module, qual, p) for p, default in defaults.items()
+                    if splat or any(name == p and _passes(arg, default)
+                                    for name, arg in given))
 
-    unset = sorted((module, name, p)
-                   for name, defs in functions.items()
-                   for module, _pos, defaulted in defs
-                   for p in defaulted if p not in passed[name])
+    unset = sorted((module, qual, p)
+                   for defs in (*by_name.values(), *by_attr.values())
+                   for module, qual, _pos, defaults in defs
+                   for p in defaults if (module, qual, p) not in passed)
     return total, unset
 
 

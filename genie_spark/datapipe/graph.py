@@ -359,15 +359,15 @@ def _rank_with_restart(
     return pr.select(F.col("v").alias("entity"), F.col("r").alias("rank_fp"))
 
 
-def k_hop(edges: DataFrame, seeds: DataFrame, k: int = 2) -> DataFrame:
-    """Entities within ``k`` directed hops of the seed set, each labeled
+def k_hop(edges: DataFrame, seeds: DataFrame) -> DataFrame:
+    """Entities within two directed hops of the seed set, each labeled
     with its MINIMUM hop distance. Frontier-expansion BFS: hop i+1 is
     one join of the hop-i frontier against the edge list; the final
-    min-hop groupBy dedupes multi-path reachability. For fixed small k
-    the lazy unroll is linear in k (each frontier feeds only the next),
-    so no lineage cuts are needed."""
+    min-hop groupBy dedupes multi-path reachability. The lazy unroll is
+    linear in the hop count (each frontier feeds only the next), so no
+    lineage cuts are needed."""
     levels = [seeds.select("v").distinct()]
-    for _ in range(k):
+    for _ in range(2):
         frontier = levels[-1]
         nxt = (
             edges.join(frontier.withColumnRenamed("v", "src"), "src")
@@ -445,73 +445,33 @@ def component_dedup(
     return tagged.filter(F.col(id_col) == F.col("component")).select(id_col)
 
 
-def common_neighbors(
-    edges: DataFrame,
-    min_common: int = 2,
-    hub_cap: int | None = None,
-) -> DataFrame:
-    """Link-prediction features over the UNDIRECTED graph: for every
-    vertex pair sharing ≥ ``min_common`` neighbors, the common-neighbor
-    count and integer-ppm Jaccard ``(common*scale) // (deg_a + deg_b -
-    common)``. The classic candidate generator for entity-alias /
-    missing-edge proposals over a constructed KG.
-
-    Scale shape (100 TB): candidate pairs come from the wedge self-join
-    keyed on the shared neighbor — cost is sum over vertices of
-    degree², which a Zipfian hub vertex turns quadratic. ``hub_cap``
-    excludes vertices with degree > cap from acting as the SHARED
-    neighbor (their wedge fan-out); production link prediction applies
-    exactly this cut (a hub's endorsement carries no signal — the
-    linear-idf argument). Degrees in the Jaccard stay the TRUE degrees.
-    Pass None to disable (small graphs / oracle parity at full
-    semantics)."""
-    und = _undirected(edges, "src", "dst")
-    adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    return _pairs_from_adj(adj, min_common, hub_cap)
-
-
 def common_neighbors_bipartite(
     edges: DataFrame,
     center: str,
     side: str,
-    min_common: int = 2,
 ) -> DataFrame:
     """Bipartite common-neighbor features: pairs of ``side`` vertices
-    sharing ≥ ``min_common`` distinct ``center`` neighbors (e.g. orders
-    sharing parts, documents sharing entities, users sharing items).
-    Same wedge core and Jaccard semantics as :func:`common_neighbors`,
-    with the center/side roles fixed by the bipartite structure instead
-    of symmetrization."""
+    sharing at least two distinct ``center`` neighbors (e.g. orders
+    sharing parts, documents sharing entities, users sharing items), with
+    the common-neighbor count and integer-ppm Jaccard ``(common*scale) //
+    (deg_a + deg_b - common)`` — the classic candidate generator for
+    entity-alias / missing-edge proposals over a constructed KG.
+
+    Scale shape: candidate pairs come from the wedge self-join keyed on
+    the shared center, so cost is the sum over centers of degree²; the
+    true member degrees attach after the pair count."""
     adj = edges.select(
         F.col(center).alias("u"), F.col(side).alias("v")
     ).distinct()
-    return _pairs_from_adj(adj, min_common, None)
-
-
-def _pairs_from_adj(
-    adj: DataFrame,
-    min_common: int,
-    hub_cap: int | None,
-) -> DataFrame:
-    """Shared wedge-join core over a (center u, member v) adjacency:
-    count per (v1, v2) pair of shared centers, filter, attach true
-    degrees, integer-ppm Jaccard."""
     deg = adj.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    centers = adj
-    if hub_cap is not None:
-        cdeg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("cd"))
-        ok = cdeg.filter(F.col("cd") <= hub_cap).select("u")
-        centers = adj.join(ok, "u")
-    n1 = centers.select("u", F.col("v").alias("x"))
-    n2 = centers.select("u", F.col("v").alias("y"))
+    n1 = adj.select("u", F.col("v").alias("x"))
+    n2 = adj.select("u", F.col("v").alias("y"))
     pairs = (
         n1.join(n2, "u")
         .filter(F.col("x") < F.col("y"))
         .groupBy(F.col("x").alias("id_a"), F.col("y").alias("id_b"))
         .agg(F.count(F.lit(1)).cast("long").alias("common"))
-        .filter(F.col("common") >= min_common)
+        .filter(F.col("common") >= 2)
     )
     da = deg.select(F.col("v").alias("id_a"), F.col("deg").alias("deg_a"))
     db = deg.select(F.col("v").alias("id_b"), F.col("deg").alias("deg_b"))
@@ -526,23 +486,19 @@ def _pairs_from_adj(
     )
 
 
-def negative_samples(
-    triples: DataFrame,
-    k: int = 3,
-    side: str = "o",
-) -> DataFrame:
+def negative_samples(triples: DataFrame, k: int = 3) -> DataFrame:
     """Filtered negative sampling for KG-embedding training (the
     corruption scheme of TransE, Bordes et al. 2013, in the 'filtered'
     setting of Sun et al. 2019): each positive (s, r, o) yields up to
-    ``k`` corrupted triples with the ``side`` entity replaced by a
+    ``k`` corrupted triples with the object replaced by a
     deterministically hash-drawn entity, then accidental positives and
     self-corruptions are removed.
 
-    Draw j of a positive replaces the corrupted side with
+    Draw j of a positive replaces the object with
     ``entities[h60(j \\x01 s \\x02 r \\x02 o) mod N]`` where entities is
-    the distinct ``side``-slot universe indexed by rank — no RNG, so the
+    the distinct object universe indexed by rank — no RNG, so the
     sample is rerun- and partition-stable (the split_thresholds
-    discipline). Returns ``(s, r, o_neg|s_neg, j)``.
+    discipline). Returns ``(s, r, o_neg, j)``.
 
     Scale shape (100 TB of triples): the entity universe is
     dimension-sized — its rank index is a single-partition window on the
@@ -554,11 +510,8 @@ def negative_samples(
 
     from .hashes import h60
 
-    if side not in ("s", "o"):
-        raise ValueError(f"side must be 's' or 'o', got {side!r}")
-
     pos = triples.select("s", "r", "o").distinct()
-    ents = pos.select(F.col(side).alias("e")).distinct()
+    ents = pos.select(F.col("o").alias("e")).distinct()
     idx_ents = ents.select(
         "e", (F.row_number().over(Window.orderBy("e")) - 1).cast("long").alias("_idx")
     )
@@ -575,25 +528,17 @@ def negative_samples(
                    F.col("_n")),
         )
         .join(broadcast(idx_ents), "_idx")
-        .filter(F.col("e") != F.col(side))
+        .filter(F.col("e") != F.col("o"))
     )
-    neg_name = f"{side}_neg"
-    keep = ("s", "r") if side == "o" else ("r", "o")
     cand = cand.select(
-        *keep, F.col("e").alias(neg_name), F.col("j").cast("long").alias("j")
+        "s", "r", F.col("e").alias("o_neg"), F.col("j").cast("long").alias("j")
     )
     # filtered setting: a corrupted triple that happens to be a true
     # positive is removed, not emitted as a (false) negative
-    if side == "o":
-        cond = (
-            (cand["s"] == pos["s"]) & (cand["r"] == pos["r"])
-            & (cand[neg_name] == pos["o"])
-        )
-    else:
-        cond = (
-            (cand[neg_name] == pos["s"]) & (cand["r"] == pos["r"])
-            & (cand["o"] == pos["o"])
-        )
+    cond = (
+        (cand["s"] == pos["s"]) & (cand["r"] == pos["r"])
+        & (cand["o_neg"] == pos["o"])
+    )
     return cand.join(pos, cond, "left_anti")
 
 
@@ -1128,10 +1073,11 @@ def transitive_closure(edges: DataFrame, max_hops: int = 12) -> DataFrame:
     return _semi_naive(seen, grow, max_hops - 1)
 
 
-def closure_sql(edges_cte: str = "e", max_hops: int = 12) -> str:
-    """DuckDB twin of :func:`transitive_closure`: a bounded
-    ``WITH RECURSIVE`` reachability walk (UNION ALL + hop guard — the
-    guard terminates cyclic inputs exactly like max_hops) followed by
+def closure_sql(edges_cte: str = "e") -> str:
+    """DuckDB twin of :func:`transitive_closure` at its default
+    ``max_hops=12``: a bounded ``WITH RECURSIVE`` reachability walk
+    (UNION ALL + hop guard — the guard terminates cyclic inputs exactly
+    like max_hops) followed by
     the min-hop group-by. Returned as the RECURSIVE cte-list fragment;
     the caller prefixes ``WITH RECURSIVE <edges>,`` and selects from
     ``reach_min``."""
@@ -1140,7 +1086,7 @@ def closure_sql(edges_cte: str = "e", max_hops: int = 12) -> str:
   UNION ALL
   SELECT r.src, t.dst, r.h + 1
   FROM reach r JOIN {edges_cte} t ON r.dst = t.src
-  WHERE r.h < {max_hops}
+  WHERE r.h < 12
 ),
 reach_min AS (
   SELECT src, dst, min(h)::INT AS min_hops FROM reach GROUP BY src, dst
@@ -1734,8 +1680,8 @@ def random_walks_sql_chain(
     return ",\n".join(parts)
 
 
-def entity_summary(facts: DataFrame, top_k: int = 2) -> DataFrame:
-    """Entity summarization: per subject, the ``top_k`` most
+def entity_summary(facts: DataFrame) -> DataFrame:
+    """Entity summarization: per subject, the two most
     INFORMATIVE facts, informativeness = relation rarity (global
     relation frequency ascending — the IDF intuition: 'located_in' on
     2/3 of suppliers says less than a rare relation). Deterministic
@@ -1745,7 +1691,7 @@ def entity_summary(facts: DataFrame, top_k: int = 2) -> DataFrame:
     Scale shape: relation frequencies are ONE partial-agg groupBy to a
     relation-vocabulary-sized table (broadcast side of the annotate
     join); the per-subject rank is one window shuffle keyed on s —
-    bounded output (top_k per subject), never a global sort."""
+    bounded output (two per subject), never a global sort."""
     from pyspark.sql import Window
 
     fd = facts.select("s", "r", "o").distinct()
@@ -1756,7 +1702,7 @@ def entity_summary(facts: DataFrame, top_k: int = 2) -> DataFrame:
     return (
         fd.join(F.broadcast(rel_n), "r")
         .select("s", "r", "o", "rel_n", F.row_number().over(win).alias("rank"))
-        .filter(F.col("rank") <= top_k)
+        .filter(F.col("rank") <= 2)
     )
 
 

@@ -1747,7 +1747,7 @@ def _kg_closure_sql() -> str:
 
     return (
         f"WITH RECURSIVE {_CLOSURE_EDGES_SQL},\n"
-        + closure_sql("cl_edges", max_hops=12)
+        + closure_sql("cl_edges")
         + "\nSELECT src, dst, min_hops FROM reach_min"
     )
 
@@ -1903,7 +1903,7 @@ def kg_two_hop(spark, sf_dir):
     edge join per hop (datapipe/graph.py k_hop)."""
     from .datapipe.graph import k_hop
 
-    return k_hop(_kg_edges_df(spark, sf_dir), _kg_seeds_df(spark, sf_dir), k=2)
+    return k_hop(_kg_edges_df(spark, sf_dir), _kg_seeds_df(spark, sf_dir))
 
 
 @_register(
@@ -2004,17 +2004,14 @@ def kg_common_neighbors(spark, sf_dir):
     order–part incidence: order pairs sharing ≥ 2 distinct parts, with
     common-neighbor count and integer-ppm Jaccard — the classic
     missing-edge / entity-alias proposal generator for a constructed
-    KG. Wedge self-join keyed on the shared part; hub_cap available for
-    Zipfian centers (unbound here — the oracle carries full semantics)
+    KG. Wedge self-join keyed on the shared part
     (datapipe/graph.py common_neighbors_bipartite)."""
     from .datapipe.graph import common_neighbors_bipartite
 
     li = _t(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("part"), F.col("l_orderkey").alias("order_")
     )
-    return common_neighbors_bipartite(
-        li, center="part", side="order_", min_common=2
-    )
+    return common_neighbors_bipartite(li, center="part", side="order_")
 
 
 _TFIDF_K = 3
@@ -3998,7 +3995,7 @@ def kg_negative_samples_q(spark, sf_dir):
         )
         .distinct()
     )
-    out = negative_samples(trg, k=_NEG_K, side="o")
+    out = negative_samples(trg, k=_NEG_K)
     return out.select(
         F.col("s").cast("bigint").alias("s"),
         "r",
@@ -5454,7 +5451,7 @@ def kg_entity_summary_q(spark, sf_dir):
     top-k output, no global sort (datapipe/graph.py entity_summary)."""
     from .datapipe.graph import entity_summary
 
-    return entity_summary(_chain_facts_df(spark, sf_dir), top_k=2)
+    return entity_summary(_chain_facts_df(spark, sf_dir))
 
 
 @_register(

@@ -156,7 +156,7 @@ def test_k_hop_min_distance(spark):
         [("s", "a"), ("a", "t"), ("s", "t"), ("t", "z")], ["src", "dst"]
     )
     seeds = spark.createDataFrame([("s",)], ["v"])
-    got = {r["entity"]: r["min_hop"] for r in k_hop(edges, seeds, k=2).collect()}
+    got = {r["entity"]: r["min_hop"] for r in k_hop(edges, seeds).collect()}
     assert got == {"s": 0, "a": 1, "t": 1, "z": 2}
 
 
@@ -194,40 +194,6 @@ def test_nonconvergence_raises(spark):
         connected_components(edges, max_rounds=1)
 
 
-def test_common_neighbors_counts_and_jaccard(spark):
-    from genie_spark.datapipe.graph import common_neighbors
-
-    # square a-b-c-d-a: opposite corners share exactly 2 neighbors
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d"), ("d", "a")], ["src", "dst"]
-    )
-    out = {
-        (r["id_a"], r["id_b"]): (r["common"], r["jaccard_ppm"])
-        for r in common_neighbors(edges, min_common=2).collect()
-    }
-    # deg(all) = 2; jaccard = 2/(2+2-2) = 1.0 -> 1_000_000 ppm
-    assert out == {("a", "c"): (2, 10**6), ("b", "d"): (2, 10**6)}
-
-
-def test_common_neighbors_hub_cap_excludes_center(spark):
-    from genie_spark.datapipe.graph import common_neighbors
-
-    # star center h connects x,y,z; plus x-w, y-w (w shares via both)
-    edges = [("h", "x"), ("h", "y"), ("h", "z"), ("x", "w"), ("y", "w")]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    full = {
-        (r["id_a"], r["id_b"]): r["common"]
-        for r in common_neighbors(df, min_common=2).collect()
-    }
-    assert full[("x", "y")] == 2  # via h and w
-    capped = {
-        (r["id_a"], r["id_b"]): r["common"]
-        for r in common_neighbors(df, min_common=2, hub_cap=2).collect()
-    }
-    # h (deg 3) no longer acts as a center: x,y share only w
-    assert ("x", "y") not in capped
-
-
 def test_common_neighbors_bipartite_sides(spark):
     from genie_spark.datapipe.graph import common_neighbors_bipartite
 
@@ -240,7 +206,7 @@ def test_common_neighbors_bipartite_sides(spark):
     out = {
         (r["id_a"], r["id_b"]): (r["common"], r["jaccard_ppm"])
         for r in common_neighbors_bipartite(
-            edges, center="part", side="order_", min_common=2
+            edges, center="part", side="order_"
         ).collect()
     }
     # deg(o1)=deg(o2)=2 -> jaccard 2/2

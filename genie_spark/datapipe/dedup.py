@@ -259,8 +259,9 @@ def ngram_jaccard_pairs(
 SIMHASH_BITS = 16
 
 
-def simhash_col(text: Column, bits: int = SIMHASH_BITS) -> Column:
-    """Per-doc SimHash over word tokens: bit i of the signature is the sign
+def simhash_col(text: Column) -> Column:
+    """Per-doc ``SIMHASH_BITS``-bit SimHash over word tokens: bit i of the
+    signature is the sign
     of Σ_tokens (±1 by bit i of h60(token)). Row-local HOF aggregate —
     no explode, no shuffle. Bit positions are unrolled at plan-build time
     (shift amounts must be literals in Spark).
@@ -277,20 +278,20 @@ def simhash_col(text: Column, bits: int = SIMHASH_BITS) -> Column:
                 F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, F.lit(1))
                 .otherwise(F.lit(-1))
                 .cast("long")
-                for i in range(bits)
+                for i in range(SIMHASH_BITS)
             ]
         )
 
     sums = F.aggregate(
         hs,
-        F.array_repeat(F.lit(0).cast("long"), bits),
+        F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS),
         lambda acc, h: F.zip_with(acc, bit_signs(h), lambda a_, d: a_ + d),
     )
-    # sums_i > 0 → add 2^i; pow stays exact (bits ≤ 32 « double mantissa)
+    # sums_i > 0 → add 2^i; pow stays exact (16 bits « double mantissa)
     return F.aggregate(
         F.zip_with(
             sums,
-            F.sequence(F.lit(0), F.lit(bits - 1)),
+            F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1)),
             lambda s, i: F.when(
                 s > 0, F.pow(F.lit(2.0), i.cast("double")).cast("long")
             ).otherwise(F.lit(0).cast("long")),
@@ -302,36 +303,34 @@ def simhash_col(text: Column, bits: int = SIMHASH_BITS) -> Column:
 
 def simhash_table(docs: DataFrame) -> DataFrame:
     return spread_for_compute(docs).select(
-        F.col("doc_id"), simhash_col(F.col("text"), SIMHASH_BITS).alias("simhash")
+        F.col("doc_id"), simhash_col(F.col("text")).alias("simhash")
     )
 
 
 def embedding_neardup_lsh_pairs(
     emb: DataFrame,
-    n_planes: int = 4,
     threshold: float = 0.95,
     dim: int = None,
 ) -> DataFrame:
     """Embedding near-dup with a REAL blocking key: vectors are bucketed
-    by the deterministic hyperplane-LSH signature first, then the all-
-    pairs cosine runs within buckets only — the corpus-safe default
-    (2^n_planes buckets cut the quadratic term ~4^n_planes×; raise
-    n_planes with corpus size). High-cosine pairs land in the same bucket
-    with probability (1 − θ/π)^n_planes, so the recall tradeoff is
-    explicit and tunable."""
-    return _lsh_cosine_pairs(emb, "embedding", "vec_id", n_planes, threshold, 42, dim)
+    by the deterministic 4-plane hyperplane-LSH signature first, then the
+    all-pairs cosine runs within buckets only — the corpus-safe default
+    (2^4 buckets cut the quadratic term ~4^4×). High-cosine pairs land in
+    the same bucket with probability (1 − θ/π)^4, so the recall tradeoff
+    is explicit."""
+    return _lsh_cosine_pairs(emb, threshold, dim)
 
 
-def _lsh_cosine_pairs(
-    emb, vec_col, id_col, n_planes, threshold, seed, dim, **carry
-) -> DataFrame:
-    """:func:`_salted_cosine_pairs` blocked by the hyperplane-LSH bucket."""
+def _lsh_cosine_pairs(emb, threshold, dim, **carry) -> DataFrame:
+    """:func:`_salted_cosine_pairs` over ``(vec_id, embedding)`` blocked by
+    the 4-plane hyperplane-LSH bucket (plane seed 42)."""
     from .similarity import _vec_dim, hyperplane_bucket_col, hyperplanes
 
-    planes = hyperplanes(n_planes, _vec_dim(emb, vec_col, dim), seed)
+    planes = hyperplanes(4, _vec_dim(emb, "embedding", dim), 42)
     return _salted_cosine_pairs(
-        emb, vec_col, id_col, hyperplane_bucket_col(F.col(vec_col), planes),
-        threshold, _block_salt(emb, 1 << n_planes), **carry,
+        emb, "embedding", "vec_id",
+        hyperplane_bucket_col(F.col("embedding"), planes),
+        threshold, _block_salt(emb, 1 << 4), **carry,
     )
 
 
@@ -505,16 +504,12 @@ def _positioned_grams(
     ).select(id_col, "n_tok", F.col("g.pos").alias("pos"), F.col("g.gram").alias("gram"))
 
 
-def substring_dup_stats(
-    docs: DataFrame,
-    n: int = 8,
-    min_count: int = 2,
-) -> DataFrame:
+def substring_dup_stats(docs: DataFrame, n: int = 8) -> DataFrame:
     """Exact-substring duplication profile (Lee et al. 2022,
     arXiv:2107.06499 "Deduplicating Training Data Makes Language Models
     Better") — the suffix-array ExactSubstr criterion re-expressed as
     the bounded word-n-gram form that distributes: an n-gram is
-    DUPLICATED if it occurs ≥ ``min_count`` times corpus-wide (any doc,
+    DUPLICATED if it occurs at least twice corpus-wide (any doc,
     any position — within-doc repetition counts, as in the suffix-array
     semantics); a token is duplicated if covered by any duplicated gram.
     Returns one row per doc: ``(id, n_tokens, n_dup_tokens, dup_ratio)``.
@@ -529,7 +524,7 @@ def substring_dup_stats(
     dup = (
         tg.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") >= min_count)
+        .filter(F.col("cnt") >= 2)
         .select("gram")
     )
     covered = tg.join(dup, "gram").select(
@@ -696,13 +691,13 @@ def boilerplate_strip(
     )
 
 
-def winnow_fingerprints(docs: DataFrame, k: int = 3, w: int = 4) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
-    SIGMOD'03 — the MOSS algorithm): hash every word ``k``-gram, slide a
-    ``w``-hash window, select each window's MINIMUM hash (RIGHTMOST on
-    ties, the paper's rule), dedupe selections. Guarantees any shared
-    run of ≥ w+k-1 words between two documents shares ≥1 fingerprint,
-    while storing only ~2/(w+1) of the gram hashes — the
+    SIGMOD'03 — the MOSS algorithm): hash every word k-gram (k = 3),
+    slide a w-hash window (w = 4), select each window's MINIMUM hash
+    (RIGHTMOST on ties, the paper's rule), dedupe selections. Guarantees
+    any shared run of ≥ w+k-1 words between two documents shares ≥1
+    fingerprint, while storing only ~2/(w+1) of the gram hashes — the
     position-robust middle ground between exact-hash dedup (brittle)
     and full MinHash (positionless). Returns ``(id, pos, fp)`` rows —
     join fp against fp to find local overlaps.
@@ -714,6 +709,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = 3, w: int = 4) -> DataFrame:
     banded by construction, never all-pairs."""
     from .hashes import h60
 
+    k, w = 3, 4
     wd = words_col(F.col("text"))
     n = F.size(wd)
     grams = F.when(
@@ -753,11 +749,8 @@ def winnow_fingerprints(docs: DataFrame, k: int = 3, w: int = 4) -> DataFrame:
     )
 
 
-def prefix_jaccard_pairs(
-    docs: DataFrame,
-    threshold_ppm: int = 500000,
-) -> DataFrame:
-    """Exact-Jaccard near-dup pairs via AllPairs/PPJoin prefix filtering
+def prefix_jaccard_pairs(docs: DataFrame) -> DataFrame:
+    """Exact-Jaccard (t = 0.5) near-dup pairs via AllPairs/PPJoin prefix filtering
     (Bayardo et al., WWW'07): order every doc's shingles by global
     rarity (df asc, shingle asc) and self-join only the per-doc PREFIX
     of length ``|d| - ceil(t*|d|) + 1`` — any pair with Jaccard >= t is
@@ -776,7 +769,7 @@ def prefix_jaccard_pairs(
     shingle-keyed join. All threshold math is integer ppm."""
     from pyspark.sql import Window
 
-    t = int(threshold_ppm)
+    t = 500000  # the Jaccard threshold in ppm
     # no spread: the shingle subtree below is referenced by both join
     # sides and the size census, so an added repartition re-executes
     # with every reference (measured 6.0s -> 7.7s with it)
@@ -1083,22 +1076,16 @@ def vocab_growth(docs: DataFrame) -> DataFrame:
     )
 
 
-def hard_negative_pairs(
-    emb: DataFrame,
-    n_planes: int = 4,
-    threshold: float = 0.3,
-    dim: int = None,
-) -> DataFrame:
+def hard_negative_pairs(emb: DataFrame, dim: int = None) -> DataFrame:
     """Hard-negative mining for embedding/contrastive training: pairs
-    that LOOK alike (cosine >= threshold, found via the same
+    that LOOK alike (cosine >= 0.3, found via the same
     deterministic hyperplane-LSH blocking as the near-dup tier) but
     carry DIFFERENT labels — exactly the pairs a metric-learning loss
     needs most. Returns (id_a, id_b, label_a, label_b, cosine).
 
     Scale shape: identical to embedding_neardup_lsh_pairs (bucketed
-    all-pairs bounded by 2^n_planes blocking), plus one row-local label
+    all-pairs bounded by 2^4 blocking), plus one row-local label
     inequality — the label ride-along costs nothing."""
-    return _lsh_cosine_pairs(
-        emb, "embedding", "vec_id", n_planes, threshold, 42, dim,
-        label=F.col("label"),
-    ).filter(F.col("label_a") != F.col("label_b"))
+    return _lsh_cosine_pairs(emb, 0.3, dim, label=F.col("label")).filter(
+        F.col("label_a") != F.col("label_b")
+    )

@@ -1186,8 +1186,7 @@ def embedding_neardup_lsh(spark, sf_dir):
     from .datapipe.dedup import embedding_neardup_lsh_pairs
 
     return embedding_neardup_lsh_pairs(
-        _t(spark, sf_dir, "embeddings"), n_planes=4, threshold=0.3,
-        dim=_EMB_DIM,
+        _t(spark, sf_dir, "embeddings"), threshold=0.3, dim=_EMB_DIM
     )
 
 
@@ -1200,10 +1199,7 @@ def hard_negatives_q(spark, sf_dir):
     free ride-along (datapipe/dedup.py hard_negative_pairs)."""
     from .datapipe.dedup import hard_negative_pairs
 
-    return hard_negative_pairs(
-        _t(spark, sf_dir, "embeddings"), n_planes=4, threshold=0.3,
-        dim=_EMB_DIM,
-    )
+    return hard_negative_pairs(_t(spark, sf_dir, "embeddings"), dim=_EMB_DIM)
 
 
 _IVF_CELLS, _SEMDEDUP_T = 8, 0.3
@@ -2328,7 +2324,7 @@ def winnow_fps_q(spark, sf_dir):
     (datapipe/dedup.py winnow_fingerprints)."""
     from .datapipe.dedup import winnow_fingerprints
 
-    return winnow_fingerprints(_t(spark, sf_dir, "documents"), k=3, w=4)
+    return winnow_fingerprints(_t(spark, sf_dir, "documents"))
 
 
 @_register(
@@ -2828,9 +2824,7 @@ def dup_span_stats(spark, sf_dir):
     count, flag join, per-doc distinct-coverage)."""
     from .datapipe.dedup import substring_dup_stats
 
-    return substring_dup_stats(
-        _t(spark, sf_dir, "documents"), n=_DUP_SPAN_N, min_count=2
-    )
+    return substring_dup_stats(_t(spark, sf_dir, "documents"), n=_DUP_SPAN_N)
 
 
 @_register(
@@ -5774,9 +5768,7 @@ def dedup_jaccard_prefix_q(spark, sf_dir):
     (datapipe/dedup.py prefix_jaccard_pairs)."""
     from .datapipe.dedup import prefix_jaccard_pairs
 
-    return prefix_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), threshold_ppm=500000
-    )
+    return prefix_jaccard_pairs(_t(spark, sf_dir, "documents"))
 
 
 ORACLES["dedup_jaccard_prefix"] = _prefix_jaccard_sql()

@@ -202,7 +202,7 @@ def test_substring_dup_stats_coverage(spark):
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
     out = {
         r["doc_id"]: (r["n_tokens"], r["n_dup_tokens"], r["dup_ratio"])
-        for r in substring_dup_stats(docs, n=4, min_count=2).collect()
+        for r in substring_dup_stats(docs, n=4).collect()
     }
     assert out[0] == (7, 4, round(4 / 7, 6))
     assert out[1] == (7, 4, round(4 / 7, 6))
@@ -219,7 +219,7 @@ def test_substring_dup_stats_within_doc_repetition(spark):
     )
     out = {
         r["doc_id"]: r["n_dup_tokens"]
-        for r in substring_dup_stats(docs, n=3, min_count=2).collect()
+        for r in substring_dup_stats(docs, n=3).collect()
     }
     assert out[0] == 6  # both 'a b c' spans, 6 distinct covered tokens
     assert out[1] == 0

@@ -470,7 +470,7 @@ def test_winnow_hash_array_not_reinlined(spark):
     guard."""
     from genie_spark.datapipe.dedup import winnow_fingerprints
 
-    df = winnow_fingerprints(_t(spark, "documents"), k=3, w=4)
+    df = winnow_fingerprints(_t(spark, "documents"))
     plan = _plan(df)
     assert plan.count("md5") <= 2, plan[:4000]
 

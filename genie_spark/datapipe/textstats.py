@@ -483,18 +483,16 @@ def lm_surprisal_bits(docs: DataFrame, ref: DataFrame) -> DataFrame:
     )
 
 
-def lm_surprisal_sql(
-    table: str = "documents",
-    ref_where: str = "doc_id % 13 = 0",
-) -> str:
+def lm_surprisal_sql() -> str:
     """DuckDB twin of :func:`lm_surprisal_bits` — same integer-bits
-    formula over the same single-space split."""
-    return f"""
+    formula over the same single-space split — scoring ``documents``
+    against the reference LM of its ``doc_id % 13 = 0`` rows."""
+    return """
 WITH lm_toks AS (
-  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM {table}
+  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents
 ),
 lm_tf AS (SELECT doc_id, tok FROM lm_toks WHERE tok <> ''),
-lm_ref AS (SELECT tok FROM lm_tf WHERE {ref_where}),
+lm_ref AS (SELECT tok FROM lm_tf WHERE doc_id % 13 = 0),
 lm_cnt AS (SELECT tok, count(*)::BIGINT AS c FROM lm_ref GROUP BY tok),
 lm_tot AS (SELECT count(*)::BIGINT + 1 AS tprime FROM lm_ref),
 lm_scored AS (
@@ -514,7 +512,7 @@ SELECT d.doc_id,
        coalesce(s.sum_bits, 0)::BIGINT AS sum_bits,
        (coalesce(s.sum_bits, 0) * 1000000 // greatest(coalesce(s.n_tokens, 0), 1))::BIGINT
          AS mean_bits_ppm
-FROM {table} d LEFT JOIN lm_doc s USING (doc_id)
+FROM documents d LEFT JOIN lm_doc s USING (doc_id)
 """
 
 
@@ -551,8 +549,8 @@ def length_deciles(docs: DataFrame) -> DataFrame:
     )
 
 
-def bigram_counts(docs: DataFrame, top_n: int = 100) -> DataFrame:
-    """Corpus-wide ADJACENT word-pair (bigram) counts, top ``top_n`` by
+def bigram_counts(docs: DataFrame) -> DataFrame:
+    """Corpus-wide ADJACENT word-pair (bigram) counts, top 100 by
     (count desc, bigram asc — the deterministic tiebreak). This is the
     inner-loop count of tokenizer/BPE training and of n-gram LM
     estimation — positional adjacency, not the doc-level set
@@ -582,15 +580,11 @@ def bigram_counts(docs: DataFrame, top_n: int = 100) -> DataFrame:
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc("bigram"))
-        .limit(top_n)
+        .limit(100)
     )
 
 
-def collocation_lift(
-    docs: DataFrame,
-    top_n: int = 20,
-    min_count: int = 5,
-) -> DataFrame:
+def collocation_lift(docs: DataFrame) -> DataFrame:
     """Collocation mining: adjacent bigrams ranked by integer PMI-lift
     ``observed/expected = (c_xy / c_x) * (N / c_y)`` in ppm — the
     multiword-expression detector (Church & Hanks 1990's PMI with the
@@ -598,10 +592,10 @@ def collocation_lift(
     and rank-equivalent). Computed as ``((c_xy*1e6) // c_x) * N //
     c_y``: since ``c_xy <= c_x`` the first factor is <= 1e6, so the
     product stays inside signed-64 even at 100 TB counts (a single
-    ``N*c_xy*1e6`` numerator would overflow at web scale). ``min_count``
-    suppresses the hapax noise PMI is notorious for. Returns top
-    ``top_n`` by (lift desc, bigram asc): ``(bigram, c_xy, c_x, c_y,
-    lift_ppm)``.
+    ``N*c_xy*1e6`` numerator would overflow at web scale). A minimum
+    bigram count of 5 suppresses the hapax noise PMI is notorious for.
+    Returns the top 20 by (lift desc, bigram asc): ``(bigram, c_xy, c_x,
+    c_y, lift_ppm)``.
 
     Scale shape: pair generation row-local; bigram and unigram counts
     are each ONE partial-agg groupBy; the two unigram joins key on the
@@ -631,7 +625,7 @@ def collocation_lift(
         docs.select(F.explode(pairs).alias("p"))
         .groupBy(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
         .agg(F.count(F.lit(1)).cast("long").alias("c_xy"))
-        .filter(F.col("c_xy") >= min_count)
+        .filter(F.col("c_xy") >= 5)
     )
     out = (
         pc.join(uc.select(F.col("t").alias("w1"), F.col("c").alias("c_x")), "w1")
@@ -645,7 +639,7 @@ def collocation_lift(
             F.expr("((c_xy * 1000000L) div c_x) * n div c_y").alias("lift_ppm"),
         )
     )
-    return out.orderBy(F.desc("lift_ppm"), F.asc("bigram")).limit(top_n)
+    return out.orderBy(F.desc("lift_ppm"), F.asc("bigram")).limit(20)
 
 
 def length_outliers(docs: DataFrame, k_sigma2: int = 4) -> DataFrame:
@@ -686,19 +680,14 @@ def length_outliers(docs: DataFrame, k_sigma2: int = 4) -> DataFrame:
     )
 
 
-def class_term_lift(
-    docs: DataFrame,
-    class_col: str,
-    min_df: int = 5,
-    top_k: int = 10,
-) -> DataFrame:
+def class_term_lift(docs: DataFrame, class_col: str) -> DataFrame:
     """Discriminative vocabulary per class: for each (class, term), the
     lift of the term's in-class rate over its corpus rate, integer ppm
     — ``lift = (tf_c / n_c) / (tf / n)`` computed as the shared
     two-step floor ``((tf_c * 1e6) div tf) * n div n_c`` so every
     intermediate stays inside signed-64 at any corpus size. Returns the
-    ``top_k`` terms per class by (lift desc, term asc) among terms with
-    corpus df >= ``min_df``: (cls, t, tf_c, tf, lift_ppm, rank).
+    top 10 terms per class by (lift desc, term asc) among terms with
+    corpus count >= 5: (cls, t, tf_c, tf, lift_ppm, rank).
 
     Scale shape: ONE corpus explosion feeds both the (class, term) and
     the term census (partial-agg groupBys); token totals are two tiny
@@ -720,7 +709,7 @@ def class_term_lift(
         F.count(F.lit(1)).cast("long").alias("tf_c")
     )
     tt = ct.groupBy("t").agg(F.sum("tf_c").cast("long").alias("tf")).filter(
-        F.col("tf") >= int(min_df)
+        F.col("tf") >= 5
     )
     nc = ct.groupBy("cls").agg(F.sum("tf_c").cast("long").alias("n_c"))
     na = tt.agg(F.sum("tf").cast("long").alias("n_all"))
@@ -741,7 +730,7 @@ def class_term_lift(
             ).alias("lift_ppm"),
         )
         .withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= int(top_k))
+        .filter(F.col("rank") <= 10)
     )
 
 

@@ -2348,7 +2348,7 @@ def bigram_counts_q(spark, sf_dir):
     (datapipe/textstats.py bigram_counts)."""
     from .datapipe.textstats import bigram_counts
 
-    return bigram_counts(_t(spark, sf_dir, "documents"), top_n=100)
+    return bigram_counts(_t(spark, sf_dir, "documents"))
 
 
 @_register(
@@ -3631,7 +3631,7 @@ def val_nll(spark, sf_dir):
 def _lm_oracle():
     from .datapipe.textstats import lm_surprisal_sql
 
-    return lm_surprisal_sql("documents", ref_where="doc_id % 13 = 0")
+    return lm_surprisal_sql()
 
 
 @_register("lm_surprisal", None)
@@ -5529,9 +5529,7 @@ def collocations_q(spark, sf_dir):
     (datapipe/textstats.py collocation_lift)."""
     from .datapipe.textstats import collocation_lift
 
-    return collocation_lift(
-        _t(spark, sf_dir, "documents"), top_n=20, min_count=5
-    )
+    return collocation_lift(_t(spark, sf_dir, "documents"))
 
 
 # -- Tokenizer vocabulary induction (distributed BPE) ------------------------
@@ -5982,9 +5980,7 @@ def class_term_lift_q(spark, sf_dir):
     census (datapipe/textstats.py class_term_lift)."""
     from .datapipe.textstats import class_term_lift
 
-    return class_term_lift(
-        _t(spark, sf_dir, "documents"), "lang", min_df=5, top_k=10
-    )
+    return class_term_lift(_t(spark, sf_dir, "documents"), "lang")
 
 
 _NOVELTY_SQL = f"""

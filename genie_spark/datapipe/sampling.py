@@ -135,10 +135,10 @@ def shuffle_order(df: DataFrame, epoch: int = 0) -> DataFrame:
     return ranked.drop("_sh")
 
 
-def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Gap-based sessionization: consecutive events of the same user
-    belong to one session while the inter-event gap stays ≤
-    ``gap_minutes``; a larger gap starts a new session. The classic
+    belong to one session while the inter-event gap stays ≤ 30
+    minutes; a larger gap starts a new session. The classic
     two-window formulation: a per-user lag marks session starts, a
     per-user running sum numbers them. Returns one row per session:
     ``(user, session_idx, n_events, start_us, end_us, duration_us)``
@@ -166,7 +166,7 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
         "TIMESTAMP_NTZ '1970-01-01 00:00:00', `ts`)"
     )
     w = Window.partitionBy("user_id").orderBy("tus", "event_id")
-    gap_us = int(gap_minutes) * 60 * 1_000_000
+    gap_us = 30 * 60 * 1_000_000
     ev = events.select(F.col("user_id"), F.col("event_id"), tus.alias("tus"))
     flagged = ev.withColumn("prev", F.lag("tus").over(w)).withColumn(
         "ns",
@@ -188,14 +188,9 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     )
 
 
-def group_cap(
-    df: DataFrame,
-    group_col: str = "source",
-    k: int = 50,
-    salt: str = "cap",
-) -> DataFrame:
-    """Deterministic per-group QUOTA cap: keep at most ``k`` rows per
-    group, chosen by the salted-hash order (h60(salt ␁ id), id) — the
+def group_cap(df: DataFrame) -> DataFrame:
+    """Deterministic per-``source`` QUOTA cap: keep at most 50 rows per
+    source, chosen by the salted-hash order (h60('cap' ␁ id), id) — the
     domain-capping step of pretraining mixes (bound any single domain's
     share regardless of its crawl volume). Unlike
     :func:`stratified_sample` (per-group FRACTION), the quota is an
@@ -205,38 +200,32 @@ def group_cap(
 
     Scale shape: ONE window partitioned by group (no global sort); the
     rank shuffle keys on the group — a skewed mega-domain bounds at its
-    own row count and is then cut to k. For quantile-grade skew,
+    own row count and is then cut to 50. For quantile-grade skew,
     pre-filter with an approximate per-group count and sample_fraction
     first; the exact window pass then runs on the bounded survivor
     set."""
     from pyspark.sql import Window
 
-    key = h60_salted(F.col("doc_id").cast("string"), F.lit(salt))
-    w = Window.partitionBy(group_col).orderBy(key, F.col("doc_id"))
+    key = h60_salted(F.col("doc_id").cast("string"), F.lit("cap"))
+    w = Window.partitionBy("source").orderBy(key, F.col("doc_id"))
     return (
         df.withColumn("grp_rank", F.row_number().over(w))
-        .filter(F.col("grp_rank") <= k)
+        .filter(F.col("grp_rank") <= 50)
     )
 
 
-def hopping_window_rates(
-    events: DataFrame,
-    window_minutes: int = 30,
-    hop_minutes: int = 15,
-) -> DataFrame:
+def hopping_window_rates(events: DataFrame) -> DataFrame:
     """Overlapping (hopping) time-window aggregation of the event log:
     per (window start, event type) the event count and value sum, with
-    window size ``window_minutes`` advancing every ``hop_minutes``,
+    30-minute windows advancing every 15 minutes,
     kept ENGINE-EXACT by doing the window assignment in integer
     epoch-microsecond arithmetic instead of engine-native window
     functions (Spark's F.window and DuckDB's time_bucket draw boundaries
     differently around epoch offsets; the explicit floor math cannot
-    disagree). Each event explodes into
-    window/hop overlapping windows (a constant ≤ size/hop fan-out),
-    then ONE partial-aggregatable groupBy. Value sums are ppm-quantized
+    disagree). Each event explodes into the two windows that overlap
+    it, then ONE partial-aggregatable groupBy. Value sums are ppm-quantized
     integers (determinism discipline: float sums are order-dependent)."""
-    hop_us = int(hop_minutes) * 60 * 1_000_000
-    n_win = int(window_minutes // hop_minutes)
+    hop_us = 15 * 60 * 1_000_000
     tus = F.expr(
         "timestampdiff(MICROSECOND, "
         "TIMESTAMP_NTZ '1970-01-01 00:00:00', `ts`)"
@@ -249,7 +238,7 @@ def hopping_window_rates(
     win = base.select(
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(n_win - 1)),
+                F.sequence(F.lit(0), F.lit(1)),
                 lambda i: (F.floor(F.col("_tus") / hop_us) - i) * hop_us,
             )
         ).alias("win_start_us"),

@@ -529,9 +529,7 @@ def event_rates_hopping_q(spark, sf_dir):
     (datapipe/sampling.py hopping_window_rates)."""
     from .datapipe.sampling import hopping_window_rates
 
-    return hopping_window_rates(
-        _t(spark, sf_dir, "events"), window_minutes=30, hop_minutes=15
-    )
+    return hopping_window_rates(_t(spark, sf_dir, "events"))
 
 
 @_register(
@@ -568,7 +566,7 @@ def sessionize_q(spark, sf_dir):
     cross-engine exactness (datapipe/sampling.py sessionize)."""
     from .datapipe.sampling import sessionize
 
-    out = sessionize(_t(spark, sf_dir, "events"), gap_minutes=30)
+    out = sessionize(_t(spark, sf_dir, "events"))
     return out.select(
         "user_id",
         F.col("session_idx").cast("bigint").alias("session_idx"),
@@ -2289,9 +2287,7 @@ def domain_cap_q(spark, sf_dir):
     (datapipe/sampling.py group_cap)."""
     from .datapipe.sampling import group_cap
 
-    out = group_cap(
-        _t(spark, sf_dir, "documents"), group_col="source", k=50, salt="cap"
-    )
+    out = group_cap(_t(spark, sf_dir, "documents"))
     return out.select("doc_id", "source", F.col("grp_rank").cast("int").alias("grp_rank"))
 
 

@@ -440,7 +440,7 @@ def test_sessionize_single_exchange(spark):
     the final groupBy all reuse the same hash partitioning."""
     from genie_spark.datapipe.sampling import sessionize
 
-    df = sessionize(_t(spark, "events"), gap_minutes=30)
+    df = sessionize(_t(spark, "events"))
     tree = _tree(df)
     assert tree.count("Exchange") == 1, tree
 

@@ -397,10 +397,8 @@ def histogram_quantiles_grouped(
     df: DataFrame,
     value_col: str,
     group_cols: list,
-    width: int = 64,
-    percentiles: tuple = (50, 90),
 ) -> DataFrame:
-    """Approximate per-group percentiles from a fixed-width integer
+    """Approximate per-group p50 and p90 from a 64-wide integer
     histogram — the bounded-state replacement for a per-group sort.
     State per group is ``#occupied buckets`` (≤ domain/width) instead
     of every row: at 100 TB a per-group exact percentile is a full
@@ -412,10 +410,10 @@ def histogram_quantiles_grouped(
     of the smallest bucket whose cumulative count reaches
     ``ceil(p*n/100)`` (integer form ``(p*n + 99) div 100``). All
     arithmetic is integer, so the DuckDB twin is digit-identical.
-    Returns group_cols + ``est_p{p}`` per requested percentile."""
+    Returns group_cols + ``est_p50``, ``est_p90``."""
     from pyspark.sql import Window
 
-    w = int(width)
+    w = 64
     hist = df.select(
         *group_cols,
         F.expr(f"cast({value_col} as bigint) div {w}").alias("b"),
@@ -440,7 +438,7 @@ def histogram_quantiles_grouped(
         ).cast("long").alias("n"),
     )
     aggs = []
-    for p in percentiles:
+    for p in (50, 90):
         kp = f"(({p}L * n + 99L) div 100L)"
         aggs.append(
             F.min(
@@ -457,17 +455,15 @@ def histogram_quantiles_grouped_sql(
     src: str,
     value_col: str,
     group_col: str,
-    width: int = 64,
-    percentiles: tuple = (50, 90),
 ) -> str:
     """DuckDB CTE chain mirroring :func:`histogram_quantiles_grouped`:
-    defines ``hq_e(k, est_p{p}...)``. ``src`` must expose
+    defines ``hq_e(k, est_p50, est_p90)``. ``src`` must expose
     (group_col, value_col)."""
-    w = int(width)
+    w = 64
     ests = ",\n       ".join(
         f"min(CASE WHEN cum >= (({p} * n + 99) // 100)"
         f" THEN b * {w} + {w // 2} END)::BIGINT AS est_p{p}"
-        for p in percentiles
+        for p in (50, 90)
     )
     return f"""hq_h AS (
   SELECT {group_col} AS k, ({value_col}::BIGINT // {w}) AS b,
@@ -489,7 +485,6 @@ def bloom_pruned_join(
     dim: DataFrame,
     fact_key: str,
     dim_key: str,
-    bits: int = 1 << 14,
 ) -> DataFrame:
     """Runtime-filter join: broadcast a Bloom bitmap of the dimension's
     keys and pre-filter the fact table BEFORE the equi-join — the
@@ -501,11 +496,12 @@ def bloom_pruned_join(
 
     Returns the bloom-surviving fact rows inner-joined to the dim —
     both key columns stringified for the cross-engine hash family.
-    Bitmap is ``bits/62`` rows regardless of dim size; the fact side
-    is filtered row-locally against the broadcast bitmap (never
-    shuffled on key content before the cut)."""
+    The bitmap has 2^14 bits (``2^14/62`` rows) regardless of dim size;
+    the fact side is filtered row-locally against the broadcast bitmap
+    (never shuffled on key content before the cut)."""
     fs = facts.withColumn("__k", F.col(fact_key).cast("string"))
     ds = dim.withColumn("__k", F.col(dim_key).cast("string"))
+    bits = 1 << 14
     bmp = bloom_bitmap(ds.select("__k"), "__k", bits=bits)
     maybe = bloom_hits(
         fs.select("__k").distinct(), "__k", bmp, bits=bits

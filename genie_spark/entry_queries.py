@@ -5656,7 +5656,7 @@ def _hist_quantiles_sql() -> str:
 
     return f"""
 WITH dv AS (SELECT source, n_chars FROM documents),
-{histogram_quantiles_grouped_sql('dv', 'n_chars', 'source', 64, (50, 90))},
+{histogram_quantiles_grouped_sql('dv', 'n_chars', 'source')},
 xr AS (
   SELECT source AS k, n_chars::BIGINT AS v,
          row_number() OVER (PARTITION BY source ORDER BY n_chars) AS rn,
@@ -5690,9 +5690,7 @@ def sketch_quantiles_by_source_q(spark, sf_dir):
     from .datapipe.sketches import histogram_quantiles_grouped
 
     docs = _t(spark, sf_dir, "documents")
-    est = histogram_quantiles_grouped(
-        docs, "n_chars", ["source"], width=64, percentiles=(50, 90)
-    )
+    est = histogram_quantiles_grouped(docs, "n_chars", ["source"])
     xr = docs.select(
         "source",
         F.col("n_chars").cast("long").alias("v"),
@@ -5923,7 +5921,7 @@ def bloom_join_prune_q(spark, sf_dir):
     dim = _t(spark, sf_dir, "part").filter(F.col("p_size") <= 12).select(
         "p_partkey", "p_size"
     )
-    j = bloom_pruned_join(li, dim, "l_partkey", "p_partkey", bits=1 << 14)
+    j = bloom_pruned_join(li, dim, "l_partkey", "p_partkey")
     return j.agg(
         F.count(F.lit(1)).cast("long").alias("n_joined"),
         F.sum(F.expr("cast(floor(l_quantity) as bigint)"))

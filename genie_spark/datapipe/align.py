@@ -58,14 +58,13 @@ def doc_tokens(docs: DataFrame) -> DataFrame:
     )
 
 
-def pseudo_kb(
-    tokens: DataFrame, n_relations: int = 3, keep_mod: int = 5
-) -> DataFrame:
+def pseudo_kb(tokens: DataFrame, keep_mod: int = 5) -> DataFrame:
     """Deterministic pseudo-KB over the corpus vocabulary: ordered
     token pairs (a < b) kept when h60(a\\x01b) % keep_mod == 0, with the
-    relation drawn from an independently salted hash. Stands in for the
-    real KB (Wikidata at production scale) in tests/benchmarks — the
-    alignment operators themselves are KB-agnostic. The vocabulary
+    relation (one of ``rel_0..rel_2``) drawn from an independently
+    salted hash. Stands in for the real KB (Wikidata at production
+    scale) in tests/benchmarks — the alignment operators themselves are
+    KB-agnostic. The vocabulary
     distinct is one shuffle over the mention table; the pair generation
     is vocabulary × vocabulary, fine for catalog-sized vocabularies
     (real KBs arrive as a table and skip this step entirely)."""
@@ -80,39 +79,35 @@ def pseudo_kb(
         .filter(h60(pair_key) % keep_mod == 0)
         .withColumn(
             "r",
-            F.concat(F.lit("rel_"), (h60(rel_key) % n_relations).cast("string")),
+            F.concat(F.lit("rel_"), (h60(rel_key) % 3).cast("string")),
         )
         .select("s_name", "r", "o_name")
     )
 
 
-def pseudo_kb_sql(
-    docs_table: str = "documents",
-    text_expr: str = "text",
-    n_relations: int = 3,
-    keep_mod: int = 5,
-) -> str:
-    """DuckDB CTE chain twin of :func:`doc_tokens` + :func:`pseudo_kb`.
-    Emits CTEs ``al_tok`` (distinct doc_id, tok) and ``al_kb``
-    (s_name, r, o_name); the caller composes them into a WITH clause."""
+def pseudo_kb_sql() -> str:
+    """DuckDB CTE chain twin of :func:`doc_tokens` + :func:`pseudo_kb`
+    (``keep_mod=5``) over ``documents.text``. Emits CTEs ``al_tok``
+    (distinct doc_id, tok) and ``al_kb`` (s_name, r, o_name); the caller
+    composes them into a WITH clause."""
     pair = "(s_name || chr(1) || o_name)"
     rel = f"('r' || chr(2) || {pair})"
     return f"""
 al_tok AS (
   SELECT DISTINCT doc_id, tok FROM (
-    SELECT doc_id, unnest(string_split(lower({text_expr}), ' ')) AS tok
-    FROM {docs_table}
+    SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
+    FROM documents
   ) WHERE tok <> ''
 ),
 al_vocab AS (SELECT DISTINCT tok FROM al_tok),
 al_kb AS (
-  SELECT s_name, 'rel_' || ({h60_sql(rel)} % {n_relations})::varchar AS r,
+  SELECT s_name, 'rel_' || ({h60_sql(rel)} % 3)::varchar AS r,
          o_name
   FROM (
     SELECT a.tok AS s_name, b.tok AS o_name
     FROM al_vocab a CROSS JOIN al_vocab b WHERE a.tok < b.tok
   )
-  WHERE {h60_sql(pair)} % {keep_mod} = 0
+  WHERE {h60_sql(pair)} % 5 = 0
 )"""
 
 

@@ -4076,7 +4076,7 @@ def kg_rule_confidence_q(spark, sf_dir):
 def _align_sql() -> str:
     from .datapipe.align import pseudo_kb_sql
 
-    return pseudo_kb_sql("documents", "text", n_relations=3, keep_mod=5)
+    return pseudo_kb_sql()
 
 
 @_register(
@@ -4121,7 +4121,7 @@ def distant_supervision_q(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     tokens = doc_tokens(docs)
-    kb = pseudo_kb(tokens, n_relations=3, keep_mod=5)
+    kb = pseudo_kb(tokens)
     n_docs_df = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     return distant_support(distant_supervision(tokens, kb), n_docs_df)
 
@@ -4399,7 +4399,7 @@ def distant_supervision_spans_q(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents")
-    kb = pseudo_kb(doc_tokens(docs), n_relations=3, keep_mod=5)
+    kb = pseudo_kb(doc_tokens(docs))
     positions = doc_token_positions(docs)
     return distant_supervision_spans(positions, kb)
 
@@ -5088,7 +5088,7 @@ def distant_supervision_sentences_q(spark, sf_dir):
     from .extract import sentences_df
 
     docs = _t(spark, sf_dir, "documents")
-    kb = pseudo_kb(doc_tokens(docs), n_relations=3, keep_mod=5)
+    kb = pseudo_kb(doc_tokens(docs))
     seeded = docs.select(
         "doc_id",
         F.replace(F.col("text"), F.lit(" the "), F.lit(". the ")).alias("text"),

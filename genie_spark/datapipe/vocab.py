@@ -122,17 +122,17 @@ def bpe_learn_merges(docs: DataFrame, merges: int = 6) -> DataFrame:
     return merge_rows
 
 
-def bpe_sql_chain(docs_cte: str = "documents", merges: int = 6) -> str:
-    """DuckDB twin of :func:`bpe_learn_merges`: emits
+def bpe_sql_chain(merges: int = 6) -> str:
+    """DuckDB twin of :func:`bpe_learn_merges` over ``documents``: emits
     ``bwf/bsq0/../bsq{merges}`` + per-round ``bpc{i}/btp{i}`` CTEs and a
     final ``bmerges`` with the merge-table rows. All MATERIALIZED (each
     round references the previous sequence table several times)."""
     parts = [
-        f"""bwf AS MATERIALIZED (
+        """bwf AS MATERIALIZED (
   SELECT word, count(*)::BIGINT AS cnt FROM (
     SELECT unnest(list_filter(string_split(lower(text), ' '),
                               t -> t <> '')) AS word
-    FROM {docs_cte}) GROUP BY word)""",
+    FROM documents) GROUP BY word)""",
         """bsq0 AS MATERIALIZED (
   SELECT cnt, ' ' || regexp_replace(word, '(.)', '\\1 ', 'g') AS seq
   FROM bwf)""",
@@ -239,15 +239,15 @@ def bpe_encode_stats(
     )
 
 
-def bpe_encode_sql(docs_cte: str = "documents", merges: int = 6) -> str:
-    """DuckDB twin of :func:`bpe_encode_stats`, composing on the
-    ``btp{i}`` merge CTEs of :func:`bpe_sql_chain`: emits
-    ``benc0..benc{merges}/bstat``."""
+def bpe_encode_sql(merges: int = 6) -> str:
+    """DuckDB twin of :func:`bpe_encode_stats` over ``documents``,
+    composing on the ``btp{i}`` merge CTEs of :func:`bpe_sql_chain`:
+    emits ``benc0..benc{merges}/bstat``."""
     parts = [
-        f"""benc0 AS MATERIALIZED (
+        """benc0 AS MATERIALIZED (
   SELECT ' ' || regexp_replace(replace(lower(text), ' ', ' | '),
                                '([^ |])', '\\1 ', 'g') AS seq
-  FROM {docs_cte})""",
+  FROM documents)""",
     ]
     for i in range(1, merges + 1):
         l_, r_ = f"(SELECT l FROM btp{i})", f"(SELECT r FROM btp{i})"

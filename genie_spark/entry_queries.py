@@ -5537,7 +5537,7 @@ def _bpe_sql() -> str:
     from .datapipe.vocab import bpe_sql_chain
 
     return f"""
-WITH {bpe_sql_chain('documents', _BPE_MERGES)}
+WITH {bpe_sql_chain(_BPE_MERGES)}
 SELECT step, "left", "right", merged, pair_cnt FROM bmerges
 """
 
@@ -5565,8 +5565,8 @@ def _bpe_encode_sql() -> str:
     from .datapipe.vocab import bpe_encode_sql, bpe_sql_chain
 
     return f"""
-WITH {bpe_sql_chain('documents', _BPE_MERGES)},
-{bpe_encode_sql('documents', _BPE_MERGES)}
+WITH {bpe_sql_chain(_BPE_MERGES)},
+{bpe_encode_sql(_BPE_MERGES)}
 SELECT n_docs, n_symbols_before, n_symbols_after,
        ((n_symbols_after * 1000000) // n_symbols_before)::BIGINT
          AS compression_ppm

@@ -735,11 +735,9 @@ def asof_snapshot(intervals: DataFrame, at_epoch: int) -> DataFrame:
     )
 
 
-def key_skew_profile(
-    df: DataFrame, key_col: str, top_n: int = 20
-) -> DataFrame:
-    """Shuffle-skew diagnosis for a prospective join/agg key: the
-    ``top_n`` heaviest keys with count, corpus share (integer ppm) and
+def key_skew_profile(df: DataFrame, key_col: str) -> DataFrame:
+    """Shuffle-skew diagnosis for a prospective join/agg key: the 20
+    heaviest keys with count, corpus share (integer ppm) and
     hot-key ratio (count ÷ mean key load, ppm) — the numbers that decide
     whether a key needs salting (dedup_triples salt_buckets) or AQE
     skew-join before a 100 TB shuffle keyed on it. ONE partial-agg
@@ -752,7 +750,7 @@ def key_skew_profile(
         F.sum("cnt").cast("long").alias("_total"),
         F.count(F.lit(1)).cast("long").alias("_nkeys"),
     )
-    top = counts.orderBy(F.desc("cnt"), F.asc("key")).limit(top_n)
+    top = counts.orderBy(F.desc("cnt"), F.asc("key")).limit(20)
     return top.crossJoin(F.broadcast(totals)).select(
         "key",
         "cnt",

@@ -500,7 +500,7 @@ def skew_profile_q(spark, sf_dir):
     keyed = li.select(
         F.concat(F.lit("P"), F.col("l_partkey").cast("string")).alias("k")
     )
-    return key_skew_profile(keyed, "k", top_n=20)
+    return key_skew_profile(keyed, "k")
 
 
 @_register(

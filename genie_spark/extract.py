@@ -140,12 +140,12 @@ def html_to_text_col(html: Column) -> Column:
     return F.regexp_replace(text, "\\n+$", "")
 
 
-def sentences_df(pages: DataFrame, text_col: str = "text") -> DataFrame:
+def sentences_df(pages: DataFrame) -> DataFrame:
     """pages(url, ..., text) → one row per sentence:
     (url, sent_idx, input) with the same semantics as
     :func:`split_sentences`. Pure higher-order functions + one generator
     expression — stays inside whole-stage codegen, no Python."""
-    paras = F.filter(F.split(F.col(text_col), "\n"), lambda p: F.length(p) > 0)
+    paras = F.filter(F.split(F.col("text"), "\n"), lambda p: F.length(p) > 0)
     sents = F.flatten(
         F.transform(paras, lambda p: F.split(p, SENT_SPLIT_PATTERN))
     )

@@ -437,7 +437,7 @@ def extract_pipeline(
     """
     if lang is not None:
         pages = pages.filter(F.col("lang") == lang)
-    sents = sentences_df(pages, text_col="text").select(
+    sents = sentences_df(pages).select(
         "url", "warc_ts", "sent_idx", "input"
     )
     if partitions is None:

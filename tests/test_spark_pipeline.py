@@ -306,7 +306,7 @@ def test_sentence_split_twins_hostile_whitespace(spark):
         [(f"u{i}", t) for i, t in enumerate(texts)], ["url", "text"]
     )
     got: dict = {}
-    for r in sentences_df(df, "text").select("url", "sent_idx", "input").collect():
+    for r in sentences_df(df).select("url", "sent_idx", "input").collect():
         got.setdefault(r["url"], []).append((r["sent_idx"], r["input"]))
     for i, t in enumerate(texts):
         want = list(enumerate(split_sentences(t)))

@@ -62,13 +62,12 @@ def normalize_url_sql(url_expr: str) -> str:
 
 def dedup_by_url(
     pages: DataFrame,
-    url_col: str = "url",
     id_col: str = "doc_id",
     keep: str = "first",
     ts_col: str = None,
 ) -> DataFrame:
-    """URL-keyed dedup: normalize, keep one representative per normalized
-    URL. Returns (norm_url, keep_id, n_dups) — one hash-groupBy over
+    """URL-keyed dedup: normalize the ``url`` column, keep one
+    representative per normalized URL. Returns (norm_url, keep_id, n_dups) — one hash-groupBy over
     short strings, the same scale shape as exact text dedup but without
     touching document content.
 
@@ -85,7 +84,7 @@ def dedup_by_url(
     """
     if keep not in ("first", "latest"):
         raise ValueError(f"keep must be 'first' or 'latest', got {keep!r}")
-    cols = [normalize_url_col(F.col(url_col)).alias("norm_url"), F.col(id_col)]
+    cols = [normalize_url_col(F.col("url")).alias("norm_url"), F.col(id_col)]
     if keep == "latest":
         if ts_col is None:
             raise ValueError("keep='latest' requires ts_col")

@@ -2498,9 +2498,7 @@ def dedup_url(spark, sf_dir):
     to one key (n_dups=2 everywhere, canonical vid kept)."""
     from .datapipe.urls import dedup_by_url
 
-    out = dedup_by_url(
-        _url_variants_df(spark, sf_dir), url_col="url", id_col="vid"
-    )
+    out = dedup_by_url(_url_variants_df(spark, sf_dir), id_col="vid")
     return out.select(
         "norm_url",
         F.col("keep_id").cast("bigint").alias("keep_id"),
@@ -2530,9 +2528,7 @@ def dedup_url_latest(spark, sf_dir):
     from .datapipe.urls import dedup_by_url
 
     variants = _url_variants_df(spark, sf_dir, with_ts=True)
-    out = dedup_by_url(
-        variants, url_col="url", id_col="vid", keep="latest", ts_col="ts"
-    )
+    out = dedup_by_url(variants, id_col="vid", keep="latest", ts_col="ts")
     return out.select(
         "norm_url",
         F.col("keep_id").cast("bigint").alias("keep_id"),
@@ -2570,7 +2566,7 @@ def dedup_cascade(spark, sf_dir):
     from .datapipe.urls import dedup_by_url
 
     variants = _url_variants_df(spark, sf_dir, with_text=True)
-    kept = dedup_by_url(variants, url_col="url", id_col="vid").select("keep_id")
+    kept = dedup_by_url(variants, id_col="vid").select("keep_id")
     survivors = variants.join(
         kept, variants["vid"] == kept["keep_id"], "left_semi"
     ).select(F.col("vid").alias("doc_id"), "text")
@@ -2598,7 +2594,7 @@ def dedup_cascade_cc(spark, sf_dir):
     from .datapipe.urls import dedup_by_url
 
     variants = _url_variants_df(spark, sf_dir, with_text=True)
-    kept = dedup_by_url(variants, url_col="url", id_col="vid").select("keep_id")
+    kept = dedup_by_url(variants, id_col="vid").select("keep_id")
     survivors = variants.join(
         kept, variants["vid"] == kept["keep_id"], "left_semi"
     ).select(F.col("vid").alias("doc_id"), "text")

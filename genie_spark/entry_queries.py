@@ -1126,12 +1126,13 @@ def dedup_ngram_jaccard_dfcut(spark, sf_dir):
     )
 
 
-def _simhash_sql(bits: int = 16) -> str:
+def _simhash_sql() -> str:
+    """DuckDB twin of the 16-bit ``dedup.simhash_col``."""
     sums = ",\n         ".join(
         f"sum(CASE WHEN ({_h60_sql('word')} >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS s{i}"
-        for i in range(bits)
+        for i in range(16)
     )
-    val = " + ".join(f"(CASE WHEN s{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(bits))
+    val = " + ".join(f"(CASE WHEN s{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(16))
     return f"""
 WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
 sums AS (
@@ -1143,7 +1144,7 @@ SELECT doc_id, ({val})::BIGINT AS simhash FROM sums
 """
 
 
-@_register("dedup_simhash", _simhash_sql(16))
+@_register("dedup_simhash", _simhash_sql())
 def dedup_simhash(spark, sf_dir):
     from .datapipe.dedup import simhash_table
 

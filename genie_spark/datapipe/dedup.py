@@ -323,10 +323,10 @@ def embedding_neardup_lsh_pairs(
 
 def _lsh_cosine_pairs(emb, threshold, dim, **carry) -> DataFrame:
     """:func:`_salted_cosine_pairs` over ``(vec_id, embedding)`` blocked by
-    the 4-plane hyperplane-LSH bucket (plane seed 42)."""
+    the 4-plane hyperplane-LSH bucket."""
     from .similarity import _vec_dim, hyperplane_bucket_col, hyperplanes
 
-    planes = hyperplanes(4, _vec_dim(emb, "embedding", dim), 42)
+    planes = hyperplanes(4, _vec_dim(emb, "embedding", dim))
     return _salted_cosine_pairs(
         emb, "embedding", "vec_id",
         hyperplane_bucket_col(F.col("embedding"), planes),

@@ -33,10 +33,11 @@ def _plane_sign(seed: int, plane: int, dim: int) -> int:
     return 1 if int(h[:2], 16) % 2 == 0 else -1
 
 
-def hyperplanes(n_planes: int, dim: int, seed: int = 42) -> List[List[int]]:
-    """n_planes × dim ±1 matrix; inline these constants into both engines."""
+def hyperplanes(n_planes: int, dim: int) -> List[List[int]]:
+    """n_planes × dim ±1 matrix (seed 42); inline these constants into both
+    engines."""
     return [
-        [_plane_sign(seed, p, d) for d in range(dim)] for p in range(n_planes)
+        [_plane_sign(42, p, d) for d in range(dim)] for p in range(n_planes)
     ]
 
 

@@ -62,7 +62,7 @@ def entry(spark: SparkSession) -> DataFrame:
     docs = _load(spark, SF_DEFAULT, "documents")
     pages = _docs_as_pages(docs)
     ents, rels = _corpus_catalogs(docs)
-    return extract_pipeline(spark, pages, ents, rels, lang="en", num_beams=2)
+    return extract_pipeline(spark, pages, ents, rels, lang="en")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -88,9 +88,7 @@ def _gen_job(spark, sf_dir: str, replicate: int, extractor=None):
     pages = entry_mod._docs_as_pages(docs)
     if extractor is None:
         extractor = _extractor(spark, sf_dir)
-    out = extract_pipeline(
-        spark, pages, [], [], lang="en", num_beams=2, extractor=extractor
-    )
+    out = extract_pipeline(spark, pages, [], [], lang="en", extractor=extractor)
     return out, n_docs
 
 
@@ -413,13 +411,11 @@ def run_gen_only(sf_dir: str, cpus: int, replicate: int) -> dict:
     _sink(
         extract_pipeline(
             spark, entry_mod._docs_as_pages(warm_docs), [], [],
-            lang="en", num_beams=2, extractor=extractor,
+            lang="en", extractor=extractor,
         )
     )
     t0 = time.time()
-    out = extract_pipeline(
-        spark, pages, [], [], lang="en", num_beams=2, extractor=extractor
-    )
+    out = extract_pipeline(spark, pages, [], [], lang="en", extractor=extractor)
     _sink(out)
     dt = time.time() - t0
     spark.stop()

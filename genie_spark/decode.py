@@ -240,7 +240,7 @@ class UniformScorer:
     scorer_factory the pipeline tests inject to prove scorer selection
     reaches executors."""
 
-    def __init__(self, tokenizer=None):
+    def __init__(self, tokenizer):
         self.tok = tokenizer
 
     def context(self, text):
@@ -514,15 +514,14 @@ def sequence_nll(
     codes: TagCodes,
     entities_trie,
     relations_trie,
-    epsilon: float = 0.1,
 ) -> Tuple[float, float, int, float]:
     """A9 — forced scoring of a target token sequence: per-token NLL under
     the scorer's full-vocabulary log-softmax, with the reference's
     label-smoothed combination (label_smoothed_nll_loss,
     genie/models/utils.py:6-54, as driven by validation_step,
     genie_base_pl.py:168-192): nll = Σ −lp(target_t); smooth =
-    Σ_t Σ_vocab −lp; loss = (1−ε)·nll + ε/(V−1)·smooth, both normalized
-    by the token count. The reference computes this only inside
+    Σ_t Σ_vocab −lp; loss = (1−ε)·nll + ε/(V−1)·smooth with ε = 0.1,
+    both normalized by the token count. The reference computes this only inside
     torch training/validation; here it is an eval-time operator (sequence
     confidence / reranking signal) that any scorer satisfying the
     protocol can drive. Returns (nll_sum, smooth_sum, n_tokens,
@@ -545,6 +544,7 @@ def sequence_nll(
         state.push(t)
         prefix.append(t)
     n = len(target_tokens)
+    epsilon = 0.1
     eps_i = epsilon / (len(vocab) - 1)
     loss = ((1.0 - epsilon) * nll + eps_i * smooth) / n if n else 0.0
     return nll, smooth, n, loss

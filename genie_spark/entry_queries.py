@@ -3495,9 +3495,7 @@ def _flagship_extraction(spark, sf_dir, constrained=True):
             spark, ents, rels, num_beams=2, constrained=constrained
         )
         extractors[constrained] = ex
-    out = extract_pipeline(
-        spark, pages, ents, rels, lang="en", num_beams=2, extractor=ex
-    )
+    out = extract_pipeline(spark, pages, ents, rels, lang="en", extractor=ex)
     return ex, out
 
 

@@ -160,7 +160,6 @@ class GenieExtractor:
         ent_names: Optional[List[str]] = None,
         rel_names: Optional[List[str]] = None,
         num_beams: int = 2,
-        max_length: int = 96,
         length_penalty: float = 0.0,
         bos_first: bool = False,
         num_return_sequences: Optional[int] = None,
@@ -201,7 +200,6 @@ class GenieExtractor:
           all of the above.
         """
         self.num_beams = num_beams
-        self.max_length = max_length
         # search width vs returned beams (reference hf_generation_params:
         # num_beams=10, num_return_sequences=2); None = return all beams
         self.num_return_sequences = num_return_sequences
@@ -299,7 +297,7 @@ class GenieExtractor:
     def transform(self, df: DataFrame, text_col: str = "input") -> DataFrame:
         """df(..., text_col) → df + beams + prediction + pred_triples."""
         bc = self._bc
-        num_beams, max_length = self.num_beams, self.max_length
+        num_beams = self.num_beams
         length_penalty, bos_first = self.length_penalty, self.bos_first
         n_ret = self.num_return_sequences
         constrained = self.constrained
@@ -330,7 +328,7 @@ class GenieExtractor:
                 for text in pdf[text_col]:
                     beams = generate_for_text(
                         text, scorer, tok, codes, ent, rel,
-                        num_beams=num_beams, max_length=max_length,
+                        num_beams=num_beams, max_length=96,
                         length_penalty=length_penalty, bos_first=bos_first,
                         num_return_sequences=n_ret, free_vocab=fv,
                     )
@@ -348,19 +346,14 @@ class GenieExtractor:
             "pred_triples", parse_triples_col(F.coalesce(F.col("prediction"), F.lit("")))
         )
 
-    def score_targets(
-        self,
-        df: DataFrame,
-        text_col: str = "input",
-        target_col: str = "prediction",
-        epsilon: float = 0.1,
-    ) -> DataFrame:
+    def score_targets(self, df: DataFrame) -> DataFrame:
         """A9 — forced target scoring as a DataFrame transform (reference:
         label-smoothed NLL in validation_step, genie_base_pl.py:168-192 /
         utils.py:6-54, lifted out of torch into the scorer protocol).
         Appends nll_sum, smooth_sum, n_tokens, loss (per-token,
-        label-smoothed) for each row's target linearization — NULL target
-        rows get NULL scores. Row-local like generation: no cross-row
+        label-smoothed with epsilon 0.1) for each row's ``prediction``
+        linearization given its ``input`` text — NULL target rows get
+        NULL scores. Row-local like generation: no cross-row
         state, partition-invariant, same broadcast stack and per-worker
         cache as transform()."""
         from pyspark.sql.types import IntegerType
@@ -384,14 +377,14 @@ class GenieExtractor:
             eos = tok.eos_token_id
             for pdf in batches:
                 nlls, smooths, ns, losses = [], [], [], []
-                for text, target in zip(pdf[text_col], pdf[target_col]):
+                for text, target in zip(pdf["input"], pdf["prediction"]):
                     if target is None:
                         nlls.append(None); smooths.append(None)
                         ns.append(None); losses.append(None)
                         continue
                     ids = tok.encode_pieces(target) + [eos]
                     nll, smooth, n, loss = sequence_nll(
-                        text, ids, scorer, tok, codes, ent, rel, epsilon=epsilon
+                        text, ids, scorer, tok, codes, ent, rel
                     )
                     nlls.append(nll); smooths.append(smooth)
                     ns.append(n); losses.append(loss)
@@ -411,7 +404,6 @@ def extract_pipeline(
     ent_names: List[str],
     rel_names: List[str],
     lang: Optional[str] = "en",
-    num_beams: int = 2,
     partitions: Optional[int] = None,
     extractor: Optional[GenieExtractor] = None,
 ) -> DataFrame:
@@ -446,5 +438,5 @@ def extract_pipeline(
     if partitions:
         # balance decode compute, not bytes: hash on (url, sent_idx)
         sents = sents.repartition(partitions, "url", "sent_idx")
-    ex = extractor or GenieExtractor(spark, ent_names, rel_names, num_beams=num_beams)
+    ex = extractor or GenieExtractor(spark, ent_names, rel_names)
     return ex.transform(sents)

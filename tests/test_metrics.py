@@ -286,7 +286,7 @@ def test_sequence_nll_forced_scoring():
     pred = top_valid_prediction(beams)
     ids = tok.encode_pieces(pred) + [tok.eos_token_id]
     nll, smooth, n, loss = sequence_nll(
-        text, ids, scorer, tok, codes, ent_t, rel_t, epsilon=0.1
+        text, ids, scorer, tok, codes, ent_t, rel_t
     )
     assert n == len(ids) and nll > 0 and smooth > nll
     # formula: loss = ((1-eps)*nll + eps/(V-1)*smooth) / n

@@ -91,7 +91,7 @@ def test_pipeline_matches_driver_oracle(spark, pages, catalogs):
     byte-identical to the single-process reference decoder run over the
     same sentences (SURVEY.md §5.2 golden test)."""
     ents, rels = catalogs
-    out = extract_pipeline(spark, pages, ents, rels, num_beams=2).cache()
+    out = extract_pipeline(spark, pages, ents, rels).cache()
     got = {(r["url"], r["sent_idx"]): r for r in out.collect()}
 
     tok = WordTokenizer(ents + rels)
@@ -163,7 +163,7 @@ def test_pr_agreement_with_reference_decoder(spark, pages, catalogs):
     from genie_spark.metrics import micro_metrics
 
     ents, rels = catalogs
-    out = extract_pipeline(spark, pages, ents, rels, num_beams=2)
+    out = extract_pipeline(spark, pages, ents, rels)
     spark_rows = {
         (r["url"], r["sent_idx"]): [(t["s"], t["r"], t["o"]) for t in r["pred_triples"]]
         for r in out.collect()

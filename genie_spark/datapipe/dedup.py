@@ -261,10 +261,9 @@ SIMHASH_BITS = 16
 
 def simhash_col(text: Column) -> Column:
     """Per-doc ``SIMHASH_BITS``-bit SimHash over word tokens: bit i of the
-    signature is the sign
-    of Σ_tokens (±1 by bit i of h60(token)). Row-local HOF aggregate —
-    no explode, no shuffle. Bit positions are unrolled at plan-build time
-    (shift amounts must be literals in Spark).
+    signature is the sign of Σ_tokens (±1 by bit i of h60(token)).
+    Row-local HOF aggregate — no explode, no shuffle. Bit positions are
+    unrolled at plan-build time (shift amounts must be literals in Spark).
 
     Each token is md5-hashed ONCE into an array, then the per-bit ±1 fold
     runs over the integer hashes — the earlier form re-evaluated h60 inside
@@ -750,8 +749,8 @@ def winnow_fingerprints(docs: DataFrame) -> DataFrame:
 
 
 def prefix_jaccard_pairs(docs: DataFrame) -> DataFrame:
-    """Exact-Jaccard (t = 0.5) near-dup pairs via AllPairs/PPJoin prefix filtering
-    (Bayardo et al., WWW'07): order every doc's shingles by global
+    """Exact-Jaccard (t = 0.5) near-dup pairs via AllPairs/PPJoin prefix
+    filtering (Bayardo et al., WWW'07): order every doc's shingles by global
     rarity (df asc, shingle asc) and self-join only the per-doc PREFIX
     of length ``|d| - ceil(t*|d|) + 1`` — any pair with Jaccard >= t is
     guaranteed to share a prefix shingle, so candidate generation sees

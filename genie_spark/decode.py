@@ -521,8 +521,8 @@ def sequence_nll(
     genie/models/utils.py:6-54, as driven by validation_step,
     genie_base_pl.py:168-192): nll = Σ −lp(target_t); smooth =
     Σ_t Σ_vocab −lp; loss = (1−ε)·nll + ε/(V−1)·smooth with ε = 0.1,
-    both normalized by the token count. The reference computes this only inside
-    torch training/validation; here it is an eval-time operator (sequence
+    both normalized by the token count. The reference computes this only
+    inside torch training/validation; here it is an eval-time operator (sequence
     confidence / reranking signal) that any scorer satisfying the
     protocol can drive. Returns (nll_sum, smooth_sum, n_tokens,
     loss_per_token)."""

@@ -170,20 +170,16 @@ def _bucket_expr_sql(planes: List[List[int]]) -> str:
     return " + ".join(terms)
 
 
-def embedding_neardup_lsh_sql(
-    n_planes: int, dim: int, threshold: float
-) -> str:
+def embedding_neardup_lsh_sql(dim: int, threshold: float) -> str:
     """DuckDB twin of dedup.embedding_neardup_lsh_pairs: same hyperplane
     literals, same bucket-blocked all-pairs cosine."""
-    return _lsh_pairs_sql(n_planes, dim, threshold, label=False)
+    return _lsh_pairs_sql(dim, threshold, label=False)
 
 
-def _lsh_pairs_sql(
-    n_planes: int, dim: int, threshold: float, label: bool
-) -> str:
-    """Twin of ``dedup._lsh_cosine_pairs``; ``label`` carries the label
-    column and keeps only pairs whose labels differ."""
-    planes = hyperplanes(n_planes, dim)
+def _lsh_pairs_sql(dim: int, threshold: float, label: bool) -> str:
+    """Twin of ``dedup._lsh_cosine_pairs`` (4 planes); ``label`` carries
+    the label column and keeps only pairs whose labels differ."""
+    planes = hyperplanes(4, dim)
     dot = "list_sum(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2]))"
     lbl, lbl_cols, lbl_pred = (
         (", label", "\n       a.label AS label_a, b.label AS label_b,",
@@ -283,7 +279,8 @@ ANTI JOIN dropped d ON d.vec_id = c.vec_id
 """
 
 
-def hard_negatives_lsh_sql(n_planes: int, dim: int, threshold: float) -> str:
+def hard_negatives_lsh_sql(dim: int) -> str:
     """DuckDB twin of dedup.hard_negative_pairs: the
-    embedding_neardup_lsh chain plus the label-inequality predicate."""
-    return _lsh_pairs_sql(n_planes, dim, threshold, label=True)
+    embedding_neardup_lsh chain at cosine 0.3 plus the label-inequality
+    predicate."""
+    return _lsh_pairs_sql(dim, 0.3, label=True)

@@ -1227,11 +1227,9 @@ def _install_embedding_oracles():
     )
 
     ORACLES["embedding_neardup_lsh"] = embedding_neardup_lsh_sql(
-        n_planes=4, dim=_EMB_DIM, threshold=0.3
+        dim=_EMB_DIM, threshold=0.3
     )
-    ORACLES["hard_negatives"] = hard_negatives_lsh_sql(
-        n_planes=4, dim=_EMB_DIM, threshold=0.3
-    )
+    ORACLES["hard_negatives"] = hard_negatives_lsh_sql(dim=_EMB_DIM)
     ORACLES["dedup_semantic"] = semantic_dedup_sql(
         n_cells=_IVF_CELLS, threshold=_SEMDEDUP_T
     )

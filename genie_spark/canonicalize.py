@@ -210,39 +210,6 @@ def write_graph(
     )
 
 
-def fuzzy_candidates(mentions: DataFrame, catalog: DataFrame) -> DataFrame:
-    """Blocked + scored fuzzy-link candidate pairs — the shared first
-    two stages of :func:`fuzzy_link` (token blocking with a df-cut,
-    then full-string Levenshtein), WITHOUT the per-mention argmin.
-    Returns one row per surviving (mention, entity) pair:
-    (mention_id, mention, dist, entity_id, entity_name).
-
-    Exposed separately because entity RESOLUTION consumes the whole
-    thresholded candidate graph (transitive clustering over every pair
-    with dist <= t), whereas entity LINKING keeps only the argmin.
-
-    Scale shape (100 TB): the token-blocking join shuffles on the token
-    key with the df-cut bounding per-key fan-out; scoring is row-local.
-    No all-pairs stage anywhere. Internally everything up to scoring
-    runs over DISTINCT SURFACE FORMS (:func:`fuzzy_candidate_strings`)
-    — duplicate catalog listings / repeated mention strings score once
-    — and the result expands back to ids with two equi-joins."""
-    spairs = fuzzy_candidate_strings(mentions, catalog)
-    return (
-        spairs.join(mentions.select("mention_id", "mention"), "mention")
-        .join(
-            catalog.select(
-                F.col("id").alias("entity_id"),
-                F.col("name").alias("entity_name"),
-            ),
-            "entity_name",
-        )
-        .select(
-            "mention_id", "mention", "dist", "entity_id", "entity_name"
-        )
-    )
-
-
 def fuzzy_candidate_strings(
     mentions: DataFrame,
     catalog: DataFrame,

@@ -450,8 +450,7 @@ def decontaminate(
     check): flag every training document sharing at least one word
     ``n``-gram with the held-out evaluation set. Returns
     (id, n_hit_grams) — one row per CONTAMINATED doc with its count of
-    distinct shared n-grams; anti-join the ids to drop them
-    (:func:`decontaminated`).
+    distinct shared n-grams; anti-join the ids to drop them.
 
     Scale shape: the eval side is collapsed to DISTINCT n-grams and
     broadcast (eval sets are ~1e3–1e6 grams vs a 10^12-doc corpus), so
@@ -471,17 +470,6 @@ def decontaminate(
         .groupBy(id_col)
         .agg(F.count_distinct("gram").alias("n_hit_grams"))
     )
-
-
-def decontaminated(
-    docs: DataFrame,
-    eval_docs: DataFrame,
-    n: int = 8,
-) -> DataFrame:
-    """The clean corpus: ``docs`` minus every document flagged by
-    :func:`decontaminate` (left-anti on the contaminated ids)."""
-    hits = decontaminate(docs, eval_docs, n=n).select("doc_id")
-    return docs.join(hits, "doc_id", "left_anti")
 
 
 def _positioned_grams(

@@ -44,13 +44,6 @@ def residue_sql(id_expr: str, salt: str) -> str:
     return f"(({h60_salted_sql(id_expr, repr(salt))}) % {_GRAIN})"
 
 
-def sample_fraction(df: DataFrame, fraction: float) -> DataFrame:
-    """Keep a deterministic ``fraction`` of rows: row survives iff its
-    hash-uniform < fraction. Rerun-stable, partitioning-independent, and
-    a pure Filter (pushes past projections; no shuffle, no state)."""
-    return df.filter(_unit(F.col("doc_id"), "sample") < fraction)
-
-
 def stratified_sample(
     df: DataFrame,
     fractions: Dict[str, float],
@@ -201,8 +194,8 @@ def group_cap(df: DataFrame) -> DataFrame:
     Scale shape: ONE window partitioned by group (no global sort); the
     rank shuffle keys on the group — a skewed mega-domain bounds at its
     own row count and is then cut to 50. For quantile-grade skew,
-    pre-filter with an approximate per-group count and sample_fraction
-    first; the exact window pass then runs on the bounded survivor
+    pre-filter with an approximate per-group count and
+    :func:`stratified_sample` first; the exact window pass then runs on the bounded survivor
     set."""
     from pyspark.sql import Window
 

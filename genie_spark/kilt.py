@@ -1,4 +1,5 @@
-"""KILT-style evaluation-table operators: filters F1–F5 and F7.
+"""KILT-style evaluation-table operators: filters F1, F2, F4, F5 and F7
+(the relations-keep filter F3 has no caller here).
 
 The reference applies these at dataset-load time in Python
 (reference: genie/datamodule/datasets.py:92-201). Here they are pure
@@ -36,15 +37,6 @@ def filter_relations_drop(df: DataFrame, drop: Sequence[str]) -> DataFrame:
     drop_arr = F.array(*[F.lit(r) for r in drop])
     return df.filter(
         ~F.exists(F.col("surface_triples"), lambda t: F.array_contains(drop_arr, t["r"]))
-    )
-
-
-def filter_relations_keep(df: DataFrame, keep: Sequence[str]) -> DataFrame:
-    """F3 (datasets.py:187-201): drop the sample if any triple's relation
-    falls OUTSIDE the keep set."""
-    keep_arr = F.array(*[F.lit(r) for r in keep])
-    return df.filter(
-        F.forall(F.col("surface_triples"), lambda t: F.array_contains(keep_arr, t["r"]))
     )
 
 

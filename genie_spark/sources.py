@@ -264,26 +264,3 @@ def read_catalog(spark: SparkSession, path: str) -> DataFrame:
     if dups:
         raise ValueError(f"duplicate catalog id: {dups[0]['id']}")
     return dim
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    buckets: int,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed parquet sink: pays the shuffle ONCE at write time so
-    every later equi-join or aggregation on ``key`` is exchange-free.
-    Two tables bucketed on the same key with the same bucket count
-    sort-merge-join with ZERO Exchange in the plan (asserted in
-    test_plans.py) — at 100 TB this is the difference between
-    re-shuffling the fact table on every join and never shuffling it
-    again. Bucket metadata lives in the session catalog, hence
-    ``saveAsTable`` (path-based ``save`` silently drops bucketing —
-    Spark writes plain files and later reads see no bucket spec)."""
-    (
-        df.write.format("parquet").mode(mode)
-        .bucketBy(buckets, key).sortBy(key)
-        .saveAsTable(table)
-    )

@@ -13,7 +13,6 @@ from genie_spark.kilt import (
     drop_ignored_relations,
     filter_matching_status,
     filter_relations_drop,
-    filter_relations_keep,
 )
 from genie_spark.metrics import (
     bucket_metrics,
@@ -149,7 +148,6 @@ def test_filter_matching_status(spark, kilt_df):
 
 def test_filter_relations_drop_keep(spark, kilt_df):
     assert {r["id"] for r in filter_relations_drop(kilt_df, ["r3"]).collect()} == {1, 2}
-    assert {r["id"] for r in filter_relations_keep(kilt_df, ["r1", "r3"]).collect()} == {1, 3, 4}
 
 
 def test_drop_ignored_relations_relinearizes(spark, kilt_df):

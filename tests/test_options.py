@@ -50,8 +50,6 @@ EXEMPT: dict[tuple[str, str, str], str] = {
         "deployment setting: the catalog table the graph is committed to",
     ("genie_spark.triples", "ntriple_col", "base"):
         "deployment setting: the URI namespace of the exported graph",
-    ("genie_spark.sources", "write_bucketed", "mode"):
-        "deployment setting: the write mode of the bucketed sink",
     ("genie_spark.checkpoint", "run_checkpointed", "key"): _PERFBENCH,
     ("genie_spark.datapipe.graph", "bellman_ford_sql_chain", "seeds_cte"):
         _PERFBENCH,

@@ -382,8 +382,6 @@ def test_distant_supervision_broadcasts_kb_no_cartesian(spark):
 def test_er_edges_blocked_not_all_pairs(spark):
     """Entity resolution's candidate stage must contain no cartesian
     product and no broadcast-nested-loop over the catalog."""
-    from genie_spark.canonicalize import resolve_entities
-
     part = _t(spark, "part")
     catalog = part.select(
         F.col("p_partkey").alias("id"), F.lower("p_name").alias("name")
@@ -393,45 +391,13 @@ def test_er_edges_blocked_not_all_pairs(spark):
         F.regexp_replace(F.lower("p_name"), "a", "").alias("mention"),
     )
     # plan-shape check on the EDGE subtree (components iterate eagerly,
-    # so assert on the candidate stage, not the full closure)
-    from genie_spark.canonicalize import fuzzy_candidates
+    # so assert on the candidate stage that fuzzy_link shares, not the
+    # full closure)
+    from genie_spark.canonicalize import fuzzy_candidate_strings
 
-    tree = _tree(fuzzy_candidates(mentions, catalog))
+    tree = _tree(fuzzy_candidate_strings(mentions, catalog))
     assert "CartesianProduct" not in tree
     assert "BroadcastNestedLoopJoin" not in tree
-
-
-def test_bucketed_join_and_agg_are_exchange_free(spark, tmp_path):
-    """write_bucketed pre-shuffles once: a self-key SMJ of two tables
-    bucketed on the same key and a groupBy on the bucket key must both
-    plan with ZERO Exchange (the 100 TB co-located-join story)."""
-    from genie_spark.sources import write_bucketed
-
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        facts = spark.range(0, 2000).select(
-            (F.col("id") % 97).alias("k"), F.col("id").alias("v")
-        )
-        dims = spark.range(0, 97).select(
-            F.col("id").alias("k"), (F.col("id") * 10).alias("w")
-        )
-        write_bucketed(facts, "bkt_facts", "k", 4)
-        write_bucketed(dims, "bkt_dims", "k", 4)
-
-        joined = spark.table("bkt_facts").join(spark.table("bkt_dims"), "k")
-        jplan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in jplan, jplan
-        assert joined.count() == 2000
-
-        agg = spark.table("bkt_facts").groupBy("k").count()
-        aplan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in aplan, aplan
-        assert agg.count() == 97
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-        spark.sql("DROP TABLE IF EXISTS bkt_facts")
-        spark.sql("DROP TABLE IF EXISTS bkt_dims")
 
 
 def test_sessionize_single_exchange(spark):

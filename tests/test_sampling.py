@@ -5,7 +5,6 @@ from pyspark.sql import functions as F
 
 from genie_spark.datapipe.sampling import (
     assign_split,
-    sample_fraction,
     stratified_sample,
 )
 
@@ -15,21 +14,6 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet")
-
-
-def test_sample_fraction_deterministic_and_partition_invariant(spark, docs):
-    a = {r["doc_id"] for r in sample_fraction(docs, 0.3).select("doc_id").collect()}
-    b = {
-        r["doc_id"]
-        for r in sample_fraction(docs.repartition(13), 0.3).select("doc_id").collect()
-    }
-    assert a == b and 0 < len(a) < docs.count()
-    # monotone: a smaller fraction is a subset of a larger one (same salt)
-    c = {r["doc_id"] for r in sample_fraction(docs, 0.1).select("doc_id").collect()}
-    assert c <= a
-    # rough rate sanity (hash-uniform): within ±40% relative of target
-    n = docs.count()
-    assert 0.6 * 0.3 * n < len(a) < 1.4 * 0.3 * n
 
 
 def test_assign_split_disjoint_exhaustive_and_growth_stable(spark, docs):

@@ -18,7 +18,7 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .hashes import h60, h60_salted, minhash_params, minhash_perm
+from .hashes import h60, minhash_params, minhash_perm
 
 
 def words_col(text: Column) -> Column:

@@ -17,8 +17,6 @@ form — no join, no shuffle, whole-stage codegen.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 

@@ -311,8 +311,6 @@ class GenieExtractor:
         in_cols = [f.name for f in df.schema.fields]
 
         def gen(batches: Iterator) -> Iterator:
-            import pandas as pd
-
             tok, codes, ent, rel, scorer = _worker_setup(bc.value)
             if constrained:
                 fv = None

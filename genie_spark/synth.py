@@ -19,11 +19,9 @@ import random
 from typing import Dict, Iterator, List, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
-    LongType,
     StringType,
     StructField,
     StructType,

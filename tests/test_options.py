@@ -34,6 +34,7 @@ module must be imported by some non-test file, or be listed in
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -57,7 +58,18 @@ EXEMPT: dict[tuple[str, str, str], str] = {
         _PERFBENCH,
 }
 
-Definition = tuple[str, str, list[str], dict[str, ast.expr]]
+# (module, function, parameter) -> why it stays an option every caller sets
+# to the same value: the unset ones above, and two only perfbench spells out.
+ONE_VALUE_EXEMPT: dict[tuple[str, str, str], str] = {
+    **EXEMPT,
+    ("genie_spark.canonicalize", "write_graph", "mode"):
+        "deployment setting: the write mode of the graph sink",
+    ("genie_spark.datapipe.graph", "hits_fixed", "dedup_edges"): _PERFBENCH,
+}
+
+# (module, qualified name, positional parameters, keyword-only parameters,
+#  name -> default expression)
+Definition = tuple[str, str, list[str], list[str], dict[str, ast.expr]]
 
 
 def _py_files():
@@ -67,8 +79,9 @@ def _py_files():
 
 
 def _signature(fn: ast.FunctionDef, method: bool
-               ) -> tuple[list[str], dict[str, ast.expr]]:
-    """(positional parameter names in order, name -> default expression).
+               ) -> tuple[list[str], list[str], dict[str, ast.expr]]:
+    """(positional parameter names in order, keyword-only names,
+    name -> default expression).
 
     A method drops its leading ``self``/``cls``, which no call spells out.
     """
@@ -80,51 +93,67 @@ def _signature(fn: ast.FunctionDef, method: bool
                     if d is not None)
     if method and positional and positional[0] in ("self", "cls"):
         positional = positional[1:]
-    return positional, defaults
+    return positional, [k.arg for k in a.kwonlyargs], defaults
 
 
 def _definitions() -> tuple[dict[str, list[Definition]],
                             dict[str, list[Definition]]]:
-    """(functions and classes by name, methods by name); each definition is
-    (module, qualified name, positional parameters, defaults)."""
+    """(functions and classes by name, methods by name)."""
     by_name: dict[str, list[Definition]] = {}
     by_attr: dict[str, list[Definition]] = {}
     for path in sorted(PACKAGE.rglob("*.py")):
         module = ".".join(path.relative_to(ROOT).with_suffix("").parts)
         for node in ast.parse(path.read_text()).body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                positional, defaults = _signature(node, method=False)
-                if defaults:
-                    by_name.setdefault(node.name, []).append(
-                        (module, node.name, positional, defaults))
+                by_name.setdefault(node.name, []).append(
+                    (module, node.name, *_signature(node, method=False)))
             elif isinstance(node, ast.ClassDef):
                 for fn in node.body:
                     if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
                         continue
-                    positional, defaults = _signature(fn, method=True)
-                    if not defaults:
-                        continue
+                    sig = _signature(fn, method=True)
                     if fn.name == "__init__":
                         by_name.setdefault(node.name, []).append(
-                            (module, node.name, positional, defaults))
+                            (module, node.name, *sig))
                     else:
                         by_attr.setdefault(fn.name, []).append(
-                            (module, f"{node.name}.{fn.name}", positional,
-                             defaults))
+                            (module, f"{node.name}.{fn.name}", *sig))
     return by_name, by_attr
 
 
-def _passes(arg: ast.expr, default: ast.expr) -> bool:
-    """An argument spelling out the default does not set the option."""
-    return ast.dump(arg) != ast.dump(default)
+def _bind(call: ast.Call, positional: list[str], kwonly: list[str],
+          defaults: dict[str, ast.expr]) -> dict[str, ast.expr | None]:
+    """Parameter -> the argument's ``ast`` at this call, the default's when
+    the call leaves it out, or None when a splat may carry it (or a
+    required parameter is missing, as in a name collision).
+
+    A ``*args`` at position i stands for the positional parameters from i
+    on; a ``**kwargs`` only for the parameters no explicit argument binds.
+    """
+    star = next((i for i, a in enumerate(call.args)
+                 if isinstance(a, ast.Starred)), None)
+    given = dict(zip(positional, call.args[:star]))
+    given.update((k.arg, k.value) for k in call.keywords if k.arg)
+    kw_splat = any(k.arg is None for k in call.keywords)
+    bound: dict[str, ast.expr | None] = {}
+    for i, p in enumerate(positional + kwonly):
+        if p in given:
+            bound[p] = given[p]
+        elif kw_splat or star is not None and star <= i < len(positional):
+            bound[p] = None
+        else:
+            bound[p] = defaults.get(p)
+    return bound
 
 
-def census() -> tuple[int, list[tuple[str, str, str]]]:
-    """(number of defaulted parameters, sorted unset (module, name, param))."""
+def _call_sites() -> dict[tuple[str, str, str], list[ast.expr | None]]:
+    """(module, name, parameter) -> its value at every matching call site
+    (see :func:`_bind`), for every parameter of every definition."""
     by_name, by_attr = _definitions()
-    total = sum(len(d[3]) for defs in (*by_name.values(), *by_attr.values())
-                for d in defs)
-    passed: set[tuple[str, str, str]] = set()
+    values = {(module, qual, p): []
+              for defs in (*by_name.values(), *by_attr.values())
+              for module, qual, positional, kwonly, _d in defs
+              for p in positional + kwonly}
     for path in _py_files():
         for node in ast.walk(ast.parse(path.read_text())):
             if not isinstance(node, ast.Call):
@@ -136,21 +165,59 @@ def census() -> tuple[int, list[tuple[str, str, str]]]:
                 defs = by_name.get(f.attr, []) + by_attr.get(f.attr, [])
             else:
                 continue
-            splat = any(isinstance(a, ast.Starred) for a in node.args) or any(
-                k.arg is None for k in node.keywords)
-            for module, qual, positional, defaults in defs:
-                given = list(zip(positional, node.args)) + [
-                    (k.arg, k.value) for k in node.keywords]
-                passed.update(
-                    (module, qual, p) for p, default in defaults.items()
-                    if splat or any(name == p and _passes(arg, default)
-                                    for name, arg in given))
+            for module, qual, positional, kwonly, defaults in defs:
+                for p, v in _bind(node, positional, kwonly, defaults).items():
+                    values[(module, qual, p)].append(v)
+    return values
 
-    unset = sorted((module, qual, p)
-                   for defs in (*by_name.values(), *by_attr.values())
-                   for module, qual, _pos, defaults in defs
-                   for p in defaults if (module, qual, p) not in passed)
-    return total, unset
+
+def _defaults() -> dict[tuple[str, str, str], ast.expr]:
+    by_name, by_attr = _definitions()
+    return {(module, qual, p): d
+            for defs in (*by_name.values(), *by_attr.values())
+            for module, qual, _pos, _kw, defaults in defs
+            for p, d in defaults.items()}
+
+
+def census() -> tuple[int, list[tuple[str, str, str]]]:
+    """(number of defaulted parameters, sorted unset (module, name, param)).
+
+    A defaulted parameter is unset when no call site passes it a value
+    other than its default (an argument spelling out the default does not
+    set the option; a splat that may carry it does).
+    """
+    defaults = _defaults()
+    values = _call_sites()
+    unset = sorted(key for key, d in defaults.items()
+                   if all(v is not None and ast.dump(v) == ast.dump(d)
+                          for v in values[key]))
+    return len(defaults), unset
+
+
+_CONSTANT_NAME = re.compile(r"_?[A-Z][A-Z0-9_]*")
+
+
+def _constant(expr: ast.expr | None) -> bool:
+    """A literal (``ast.literal_eval`` accepts it: numbers, negated numbers,
+    strings, ``None``, containers of those) or a module constant name."""
+    if isinstance(expr, ast.Name):
+        return bool(_CONSTANT_NAME.fullmatch(expr.id))
+    try:
+        ast.literal_eval(expr)
+    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+        return False
+    return True
+
+
+def one_valued() -> tuple[int, list[tuple[str, str, str]]]:
+    """(number of parameters, sorted (module, name, param) that every call
+    site, tests included, sets to the same constant)."""
+    values = _call_sites()
+    found = sorted(
+        key for key, vs in values.items()
+        if vs and all(_constant(v) for v in vs)
+        and len({ast.dump(v) for v in vs}) == 1)
+    return len(values), found
 
 
 def test_every_defaulted_parameter_is_passed():
@@ -162,10 +229,25 @@ def test_every_defaulted_parameter_is_passed():
         + ", ".join(f"{m}.{f}({p})" for m, f, p in missing))
 
 
+def test_every_parameter_takes_two_values():
+    _total, found = one_valued()
+    missing = [u for u in found if u not in ONE_VALUE_EXEMPT]
+    assert not missing, (
+        f"{len(missing)} parameters every call site sets to the same "
+        f"constant (make them constants in the body, or exempt a "
+        f"deployment setting): "
+        + ", ".join(f"{m}.{f}({p})" for m, f, p in missing))
+
+
 def test_exempt_entries_are_live():
     _total, unset = census()
     stale = sorted(set(EXEMPT) - set(unset))
     assert not stale, f"exempt entries that are gone or now passed: {stale}"
+    _total, found = one_valued()
+    stale = sorted(set(ONE_VALUE_EXEMPT) - set(found))
+    assert not stale, (
+        f"one-value exempt entries that are gone or now take two values: "
+        f"{stale}")
 
 
 # genie_spark modules no non-test file imports -> why they stay.
@@ -236,14 +318,68 @@ def test_every_module_has_a_non_test_importer():
     assert not stale, f"exempt modules that are gone or now imported: {stale}"
 
 
+def _imports(node: ast.AST, scope: ast.AST):
+    """(import statement, the innermost function or module holding it)."""
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, (ast.Import, ast.ImportFrom)):
+            yield child, scope
+        yield from _imports(child, child if isinstance(
+            child, (ast.FunctionDef, ast.AsyncFunctionDef)) else scope)
+
+
+def unused_imports() -> list[tuple[str, str]]:
+    """(module, name) for every name a ``genie_spark`` module imports and
+    never reads.
+
+    An import inside a function must be read in that function; a
+    module-level one anywhere in the module. Package ``__init__`` files
+    (whose imports are re-exports), ``from __future__`` and a line marked
+    ``# noqa`` (an availability probe such as ``import torch``) are
+    skipped.
+    """
+    unused = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        source = path.read_text()
+        lines = source.splitlines()
+        tree = ast.parse(source)
+        for node, scope in _imports(tree, tree):
+            if (getattr(node, "module", None) == "__future__"
+                    or "# noqa" in lines[node.lineno - 1]):
+                continue
+            read = {n.id for n in ast.walk(scope) if isinstance(n, ast.Name)}
+            for alias in node.names:
+                name = alias.asname or alias.name.split(".")[0]
+                if name != "*" and name not in read:
+                    unused.append((_module_name(path), name))
+    return unused
+
+
+def test_every_import_is_used():
+    unused = unused_imports()
+    assert not unused, "imports never read: " + ", ".join(
+        f"{m}: {n}" for m, n in unused)
+
+
 if __name__ == "__main__":
     total, unset = census()
-    by_module: dict[str, int] = {}
-    for m, _f, _p in unset:
-        by_module[m] = by_module.get(m, 0) + 1
+    n_params, one = one_valued()
     print(f"defaulted={total} unset={len(unset)} "
           f"exempt={sum(u in EXEMPT for u in unset)}")
-    for m, n in sorted(by_module.items(), key=lambda kv: -kv[1]):
+    print(f"parameters={n_params} one-valued={len(one)} "
+          f"exempt={sum(u in ONE_VALUE_EXEMPT for u in one)}")
+    print("module: unset/exempt one-valued/exempt")
+    for m in sorted({k[0] for k in unset + one}):
+        u = [k for k in unset if k[0] == m]
+        o = [k for k in one if k[0] == m]
+        print(f"  {m}: {len(u)}/{sum(k in EXEMPT for k in u)} "
+              f"{len(o)}/{sum(k in ONE_VALUE_EXEMPT for k in o)}")
+    for tag, keys, exempt in (("unset", unset, EXEMPT),
+                              ("one-valued", one, ONE_VALUE_EXEMPT)):
+        print(f"{tag}:")
+        for m, f, p in keys:
+            print(f"{'E' if (m, f, p) in exempt else ' '} {m}.{f}({p})")
+    print(f"unused imports: {len(unused_imports())}")
+    for m, n in unused_imports():
         print(f"  {m}: {n}")
-    for m, f, p in unset:
-        print(f"{'E' if (m, f, p) in EXEMPT else ' '} {m}.{f}({p})")

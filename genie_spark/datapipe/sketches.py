@@ -40,17 +40,22 @@ from .hashes import affine_mix, affine_mix_sql, h60, h60_sql
 
 H_RANGE = 1 << 60  # h60 output range [0, 2^60)
 
+# The registry's sketch sizes: the SQL twins are built at these, and the
+# Spark entries pass them to the sketch builders.
+DSK_BUCKETS = 256
+DSKG_BUCKETS = 64
+CMS_DEPTH, CMS_WIDTH = 4, 1024
+BLOOM_BITS, BLOOM_K = 1 << 16, 5
+
 
 # ---------------------------------------------------------------------------
 # 1. Distinct-count estimation: stochastic-averaging min-hash sketch
 # ---------------------------------------------------------------------------
 
 
-def minhash_distinct_sketch(
-    items: DataFrame, col: str, buckets: int = 256
-) -> DataFrame:
+def minhash_distinct_sketch(items: DataFrame, buckets: int = 256) -> DataFrame:
     """The sketch itself: ``(bucket, vmin)`` — per-bucket minimum of the
-    bucket-stripped hash. ``buckets`` must be a power of two (bucket =
+    bucket-stripped hash of the ``t`` column. ``buckets`` must be a power of two (bucket =
     low bits, value = high bits, so value stays uniform on
     ``[0, 2^60/buckets)``).
 
@@ -61,7 +66,7 @@ def minhash_distinct_sketch(
     if buckets & (buckets - 1):
         raise ValueError("buckets must be a power of two")
     shift = buckets.bit_length() - 1
-    h = h60(F.col(col))
+    h = h60(F.col("t"))
     return (
         items.select(
             h.bitwiseAND(F.lit(buckets - 1).cast("long")).alias("bucket"),
@@ -115,15 +120,15 @@ def distinct_estimate(sketch: DataFrame, buckets: int = 256) -> DataFrame:
     )
 
 
-def distinct_sketch_sql(
-    items_cte: str, col: str, buckets: int = 256
-) -> str:
-    """DuckDB twin of sketch+estimate: emits CTEs ``dsk_h/dsk_b/dsk_e``;
-    select ``est_distinct`` from ``dsk_e``."""
+def distinct_sketch_sql() -> str:
+    """DuckDB twin of sketch+estimate over ``tk(t)`` at ``DSK_BUCKETS``:
+    emits CTEs ``dsk_h/dsk_b/dsk_e``; select ``est_distinct`` from
+    ``dsk_e``."""
+    buckets = DSK_BUCKETS
     shift = buckets.bit_length() - 1
     extra, rp, m2r = _dsk_params(buckets)
-    h = h60_sql(col)
-    return f"""dsk_h AS (SELECT {h} AS h FROM {items_cte}),
+    h = h60_sql("t")
+    return f"""dsk_h AS (SELECT {h} AS h FROM tk),
 dsk_b AS (SELECT h & {buckets - 1} AS bucket, min(h >> {shift}) AS vmin
           FROM dsk_h GROUP BY 1),
 dsk_s AS (SELECT sum(vmin >> {extra})::BIGINT AS s,
@@ -139,9 +144,10 @@ dsk_e AS (SELECT (({buckets} * {rp} * ({buckets} - z))
 
 
 def cms_sketch(
-    items: DataFrame, col: str, depth: int = 4, width: int = 1024
+    items: DataFrame, depth: int = 4, width: int = 1024
 ) -> DataFrame:
-    """Count-min sketch of item frequencies: ``(j, b, cnt)`` cells,
+    """Count-min sketch of the ``t`` column's item frequencies:
+    ``(j, b, cnt)`` cells,
     ``depth x width`` rows total. Row ``j`` hashes each item to bucket
     ``affine_mix(h60(item), j) mod width`` — one md5 per item, then
     pure-arithmetic derived hashes per row (the MinHash-family trick).
@@ -157,7 +163,7 @@ def cms_sketch(
     # j — `depth` md5s per item instead of one
     cells = F.flatten(
         F.transform(
-            F.array(h60(F.col(col))),
+            F.array(h60(F.col("t"))),
             lambda h: F.transform(
                 F.sequence(F.lit(0), F.lit(depth - 1)),
                 lambda j: F.struct(
@@ -177,11 +183,10 @@ def cms_sketch(
 def cms_estimate(
     sketch: DataFrame,
     probes: DataFrame,
-    col: str,
     depth: int = 4,
     width: int = 1024,
 ) -> DataFrame:
-    """Point-query the sketch: per probe key, the CMS estimate is
+    """Point-query the sketch: per probe key ``t``, the CMS estimate is
     ``min over j of cnt[j][b_j(key)]`` — one-sided (>= true count; cells
     only ever over-count via collisions). Probe keys absent from the
     sketched corpus would need a missing-cell -> 0 fill; callers here
@@ -189,7 +194,7 @@ def cms_estimate(
 
     Scale shape: the sketch is ``depth*width`` rows — broadcast side of
     the join; probes are never shuffled."""
-    base = h60(F.col(col))
+    base = h60(F.col("t"))
     cells = F.transform(
         F.sequence(F.lit(0), F.lit(depth - 1)),
         lambda j: F.struct(
@@ -198,27 +203,26 @@ def cms_estimate(
         ),
     )
     probe_cells = probes.select(
-        F.col(col), F.explode(cells).alias("c")
-    ).select(col, F.col("c.j").alias("j"), F.col("c.b").alias("b"))
+        "t", F.explode(cells).alias("c")
+    ).select("t", F.col("c.j").alias("j"), F.col("c.b").alias("b"))
     return (
         probe_cells.join(F.broadcast(sketch), ["j", "b"])
-        .groupBy(col)
+        .groupBy("t")
         .agg(F.min("cnt").cast("long").alias("cms_cnt"))
     )
 
 
-def cms_sql_chain(
-    items_cte: str, col: str, depth: int = 4, width: int = 1024
-) -> str:
-    """DuckDB twin of :func:`cms_sketch`: emits ``cms_h/cms_cells``;
-    probe by joining on ``(j, b)`` with the same
-    ``affine_mix_sql(h, j) % width`` bucket formula."""
-    h = h60_sql(col)
+def cms_sql_chain() -> str:
+    """DuckDB twin of :func:`cms_sketch` over ``tk(t)`` at ``CMS_DEPTH x
+    CMS_WIDTH``: emits ``cms_h/cms_cells``; probe by joining on
+    ``(j, b)`` with the same ``affine_mix_sql(h, j) % CMS_WIDTH`` bucket
+    formula."""
+    h = h60_sql("t")
     mix = affine_mix_sql("h", "j")
-    return f"""cms_h AS (SELECT {h} AS h FROM {items_cte}),
+    return f"""cms_h AS (SELECT {h} AS h FROM tk),
 cms_cells AS (
-  SELECT j::INT AS j, ({mix}) % {width} AS b, count(*)::BIGINT AS cnt
-  FROM cms_h, range({depth}) t(j) GROUP BY 1, 2)"""
+  SELECT j::INT AS j, ({mix}) % {CMS_WIDTH} AS b, count(*)::BIGINT AS cnt
+  FROM cms_h, range({CMS_DEPTH}) t(j) GROUP BY 1, 2)"""
 
 
 # ---------------------------------------------------------------------------
@@ -296,31 +300,28 @@ def bloom_hits(
     )
 
 
-def bloom_sql_chain(
-    members_cte: str, col: str, bits: int = 1 << 18, k: int = 5,
-) -> str:
-    """DuckDB twin: emits ``bl_pos/bl_map``; probe with the
+def bloom_sql_chain() -> str:
+    """DuckDB twin of :func:`bloom_bitmap` over ``eg(gram)`` at
+    ``BLOOM_BITS``/``BLOOM_K``: emits ``bl_pos/bl_map``; probe with the
     same position formula joined on ``w`` and the mask test."""
-    h = h60_sql(col)
+    h = h60_sql("gram")
     mix = affine_mix_sql(f"({h})", "i")
     return f"""bl_pos AS (
-  SELECT (({mix}) % {bits}) AS pos FROM {members_cte}, range({k}) t(i)),
+  SELECT (({mix}) % {BLOOM_BITS}) AS pos FROM eg, range({BLOOM_K}) t(i)),
 bl_map AS (
   SELECT pos // 62 AS w, bit_or(1::BIGINT << (pos % 62)::INT) AS m
   FROM bl_pos GROUP BY 1)"""
 
 
-def bloom_probe_sql(
-    probes_cte: str, col: str, bits: int = 1 << 18, k: int = 5,
-) -> str:
-    """DuckDB twin of :func:`bloom_hits` over ``{probes_cte}``: emits
-    ``bl_hits(item)`` — probe items whose k positions are all
+def bloom_probe_sql() -> str:
+    """DuckDB twin of :func:`bloom_hits` over ``cg(gram)``: emits
+    ``bl_hits(item)`` — probe items whose ``BLOOM_K`` positions are all
     set."""
-    h = h60_sql(col)
+    h = h60_sql("gram")
     mix = affine_mix_sql(f"({h})", "i")
     return f"""bl_pp AS (
-  SELECT {col} AS item, (({mix}) % {bits}) AS pos
-  FROM {probes_cte}, range({k}) t(i)),
+  SELECT gram AS item, (({mix}) % {BLOOM_BITS}) AS pos
+  FROM cg, range({BLOOM_K}) t(i)),
 bl_hits AS (
   SELECT item FROM (
     SELECT item,
@@ -329,45 +330,40 @@ bl_hits AS (
            ) AS n_set
     FROM bl_pp JOIN bl_map ON bl_map.w = pos // 62
     GROUP BY item)
-  WHERE n_set = {k})"""
+  WHERE n_set = {BLOOM_K})"""
 
 
-def minhash_distinct_sketch_grouped(
-    items: DataFrame, col: str, keys: list, buckets: int = 64
-) -> DataFrame:
-    """Per-group distinct sketch: ``(*keys, bucket, vmin)`` — the
-    GROUP BY form of :func:`minhash_distinct_sketch` (one sketch per
-    key, e.g. distinct tokens per domain). Still ONE partial-agg
-    groupBy; state is ``buckets`` rows per group instead of the
-    per-group distinct-value shuffle."""
-    if buckets & (buckets - 1):
-        raise ValueError("buckets must be a power of two")
-    shift = buckets.bit_length() - 1
-    h = h60(F.col(col))
+def minhash_distinct_sketch_grouped(items: DataFrame) -> DataFrame:
+    """Per-source distinct sketch of ``t``: ``(source, bucket, vmin)`` —
+    the GROUP BY form of :func:`minhash_distinct_sketch` (one sketch per
+    crawl domain) at ``DSKG_BUCKETS``. Still ONE partial-agg groupBy;
+    state is ``DSKG_BUCKETS`` rows per group instead of the per-group
+    distinct-value shuffle."""
+    shift = DSKG_BUCKETS.bit_length() - 1
+    h = h60(F.col("t"))
     return (
         items.select(
-            *[F.col(k) for k in keys],
-            h.bitwiseAND(F.lit(buckets - 1).cast("long")).alias("bucket"),
+            "source",
+            h.bitwiseAND(F.lit(DSKG_BUCKETS - 1).cast("long")).alias("bucket"),
             F.shiftright(h, shift).alias("v"),
         )
-        .groupBy(*keys, "bucket")
+        .groupBy("source", "bucket")
         .agg(F.min("v").alias("vmin"))
     )
 
 
-def distinct_estimate_grouped(
-    sketch: DataFrame, keys: list, buckets: int = 64
-) -> DataFrame:
-    """Per-group estimate ``(*keys, est_distinct)`` — same
+def distinct_estimate_grouped(sketch: DataFrame) -> DataFrame:
+    """Per-source estimate ``(source, est_distinct)`` — same
     empty-bucket-corrected inversion as :func:`distinct_estimate`,
-    aggregated per key."""
+    aggregated per source."""
+    buckets = DSKG_BUCKETS
     extra, rp, _ = _dsk_params(buckets)
-    s = sketch.groupBy(*keys).agg(
+    s = sketch.groupBy("source").agg(
         F.sum(F.shiftright("vmin", extra)).alias("s"),
         (F.lit(buckets).cast("long") - F.count(F.lit(1))).alias("z"),
     )
     return s.select(
-        *keys,
+        "source",
         F.expr(
             f"({buckets}L * {rp}L * ({buckets}L - z))"
             f" div (s + {rp}L * z + 1L)"
@@ -375,14 +371,14 @@ def distinct_estimate_grouped(
     )
 
 
-def distinct_sketch_grouped_sql(
-    items_cte: str, col: str, key: str, buckets: int = 64
-) -> str:
-    """DuckDB twin: emits ``dskg_h/dskg_b/dskg_e`` keyed on ``key``."""
+def distinct_sketch_grouped_sql() -> str:
+    """DuckDB twin over ``tks(source, t)``: emits ``dskg_h/dskg_b/dskg_e``
+    keyed on ``source``."""
+    buckets = DSKG_BUCKETS
     shift = buckets.bit_length() - 1
     extra, rp, _ = _dsk_params(buckets)
-    h = h60_sql(col)
-    return f"""dskg_h AS (SELECT {key} AS k, {h} AS h FROM {items_cte}),
+    h = h60_sql("t")
+    return f"""dskg_h AS (SELECT source AS k, {h} AS h FROM tks),
 dskg_b AS (SELECT k, h & {buckets - 1} AS bucket, min(h >> {shift}) AS vmin
            FROM dskg_h GROUP BY 1, 2),
 dskg_s AS (SELECT k, sum(vmin >> {extra})::BIGINT AS s,
@@ -393,13 +389,9 @@ dskg_e AS (SELECT k, (({buckets} * {rp} * ({buckets} - z))
            FROM dskg_s)"""
 
 
-def histogram_quantiles_grouped(
-    df: DataFrame,
-    value_col: str,
-    group_cols: list,
-) -> DataFrame:
-    """Approximate per-group p50 and p90 from a 64-wide integer
-    histogram — the bounded-state replacement for a per-group sort.
+def histogram_quantiles_grouped(df: DataFrame) -> DataFrame:
+    """Approximate per-source p50 and p90 of ``n_chars`` from a 64-wide
+    integer histogram — the bounded-state replacement for a per-group sort.
     State per group is ``#occupied buckets`` (≤ domain/width) instead
     of every row: at 100 TB a per-group exact percentile is a full
     shuffle-sort of the fact table, while the histogram is ONE
@@ -410,27 +402,27 @@ def histogram_quantiles_grouped(
     of the smallest bucket whose cumulative count reaches
     ``ceil(p*n/100)`` (integer form ``(p*n + 99) div 100``). All
     arithmetic is integer, so the DuckDB twin is digit-identical.
-    Returns group_cols + ``est_p50``, ``est_p90``."""
+    Returns ``source``, ``est_p50``, ``est_p90``."""
     from pyspark.sql import Window
 
     w = 64
     hist = df.select(
-        *group_cols,
-        F.expr(f"cast({value_col} as bigint) div {w}").alias("b"),
-    ).groupBy(*group_cols, "b").agg(
+        "source",
+        F.expr(f"cast(n_chars as bigint) div {w}").alias("b"),
+    ).groupBy("source", "b").agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )
     win = (
-        Window.partitionBy(*group_cols)
+        Window.partitionBy("source")
         .orderBy("b")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cum = hist.select(
-        *group_cols,
+        "source",
         "b",
         F.sum("c").over(win).cast("long").alias("cum"),
         F.sum("c").over(
-            Window.partitionBy(*group_cols)
+            Window.partitionBy("source")
             .orderBy("b")
             .rowsBetween(
                 Window.unboundedPreceding, Window.unboundedFollowing
@@ -448,17 +440,12 @@ def histogram_quantiles_grouped(
                 )
             ).cast("long").alias(f"est_p{p}")
         )
-    return cum.groupBy(*group_cols).agg(*aggs)
+    return cum.groupBy("source").agg(*aggs)
 
 
-def histogram_quantiles_grouped_sql(
-    src: str,
-    value_col: str,
-    group_col: str,
-) -> str:
-    """DuckDB CTE chain mirroring :func:`histogram_quantiles_grouped`:
-    defines ``hq_e(k, est_p50, est_p90)``. ``src`` must expose
-    (group_col, value_col)."""
+def histogram_quantiles_grouped_sql() -> str:
+    """DuckDB CTE chain mirroring :func:`histogram_quantiles_grouped`
+    over ``dv(source, n_chars)``: defines ``hq_e(k, est_p50, est_p90)``."""
     w = 64
     ests = ",\n       ".join(
         f"min(CASE WHEN cum >= (({p} * n + 99) // 100)"
@@ -466,9 +453,9 @@ def histogram_quantiles_grouped_sql(
         for p in (50, 90)
     )
     return f"""hq_h AS (
-  SELECT {group_col} AS k, ({value_col}::BIGINT // {w}) AS b,
+  SELECT source AS k, (n_chars::BIGINT // {w}) AS b,
          count(*)::BIGINT AS c
-  FROM {src} GROUP BY 1, 2),
+  FROM dv GROUP BY 1, 2),
 hq_c AS (
   SELECT k, b,
          sum(c) OVER (PARTITION BY k ORDER BY b
@@ -480,12 +467,7 @@ hq_e AS (
   FROM hq_c GROUP BY k)"""
 
 
-def bloom_pruned_join(
-    facts: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str,
-) -> DataFrame:
+def bloom_pruned_join(facts: DataFrame, dim: DataFrame) -> DataFrame:
     """Runtime-filter join: broadcast a Bloom bitmap of the dimension's
     keys and pre-filter the fact table BEFORE the equi-join — the
     pattern that keeps a selective dim join from shuffling the whole
@@ -494,13 +476,14 @@ def bloom_pruned_join(
     cost wasted probe rows, which the exact join then drops); the
     oracle runs the plain join to prove it.
 
-    Returns the bloom-surviving fact rows inner-joined to the dim —
-    both key columns stringified for the cross-engine hash family.
+    Returns the bloom-surviving lineitem rows inner-joined to the part
+    dim on ``l_partkey = p_partkey`` — both keys stringified for the
+    cross-engine hash family.
     The bitmap has 2^14 bits (``2^14/62`` rows) regardless of dim size;
     the fact side is filtered row-locally against the broadcast bitmap
     (never shuffled on key content before the cut)."""
-    fs = facts.withColumn("__k", F.col(fact_key).cast("string"))
-    ds = dim.withColumn("__k", F.col(dim_key).cast("string"))
+    fs = facts.withColumn("__k", F.col("l_partkey").cast("string"))
+    ds = dim.withColumn("__k", F.col("p_partkey").cast("string"))
     bits = 1 << 14
     bmp = bloom_bitmap(ds.select("__k"), "__k", bits=bits)
     maybe = bloom_hits(

@@ -5105,9 +5105,6 @@ ORACLES["distant_supervision_sentences"] = ORACLES[
 # arithmetic over the cross-engine h60/affine_mix hash family, so the
 # DuckDB oracle reproduces the sketch contents bit-for-bit.
 
-_DSK_BUCKETS = 256
-
-
 def _tok_sql() -> str:
     return (
         "tokx AS (SELECT unnest(string_split(text, ' ')) AS t FROM documents),\n"
@@ -5125,15 +5122,15 @@ def _tok_df(spark, sf_dir) -> DataFrame:
 
 
 def _sketch_distinct_sql() -> str:
-    from .datapipe.sketches import distinct_sketch_sql
+    from .datapipe.sketches import DSK_BUCKETS, distinct_sketch_sql
 
     return f"""
 WITH {_tok_sql()},
-{distinct_sketch_sql('tk', 't', _DSK_BUCKETS)},
+{distinct_sketch_sql()},
 ex AS (SELECT count(DISTINCT t)::BIGINT AS exact_distinct FROM tk)
 SELECT est_distinct, exact_distinct,
        ((abs(est_distinct - exact_distinct) * 1000000) // exact_distinct)::BIGINT AS err_ppm,
-       {_DSK_BUCKETS}::BIGINT AS n_buckets
+       {DSK_BUCKETS}::BIGINT AS n_buckets
 FROM dsk_e, ex
 """
 
@@ -5147,11 +5144,15 @@ def sketch_distinct_q(spark, sf_dir):
     the sketch is duplication-insensitive and mergeable). The exact
     side rides along as the audit (datapipe/sketches.py
     minhash_distinct_sketch)."""
-    from .datapipe.sketches import distinct_estimate, minhash_distinct_sketch
+    from .datapipe.sketches import (
+        DSK_BUCKETS,
+        distinct_estimate,
+        minhash_distinct_sketch,
+    )
 
     tok = _tok_df(spark, sf_dir)
     est = distinct_estimate(
-        minhash_distinct_sketch(tok, "t", _DSK_BUCKETS), _DSK_BUCKETS
+        minhash_distinct_sketch(tok, DSK_BUCKETS), DSK_BUCKETS
     )
     exact = tok.agg(F.count_distinct("t").cast("bigint").alias("exact_distinct"))
     return est.crossJoin(exact).select(
@@ -5160,28 +5161,28 @@ def sketch_distinct_q(spark, sf_dir):
         F.expr(
             "(abs(est_distinct - exact_distinct) * 1000000L) div exact_distinct"
         ).alias("err_ppm"),
-        F.lit(_DSK_BUCKETS).cast("bigint").alias("n_buckets"),
+        F.lit(DSK_BUCKETS).cast("bigint").alias("n_buckets"),
     )
 
 
 ORACLES["sketch_distinct"] = _sketch_distinct_sql()
 
 
-_CMS_DEPTH, _CMS_WIDTH, _CMS_TOP = 4, 1024, 20
+_CMS_TOP = 20
 
 
 def _cms_heavy_hitters_sql() -> str:
     from .datapipe.hashes import affine_mix_sql, h60_sql
-    from .datapipe.sketches import cms_sql_chain
+    from .datapipe.sketches import CMS_DEPTH, CMS_WIDTH, cms_sql_chain
 
     mix = affine_mix_sql("(" + h60_sql("t") + ")", "j")
     return f"""
 WITH {_tok_sql()},
-{cms_sql_chain('tk', 't', _CMS_DEPTH, _CMS_WIDTH)},
+{cms_sql_chain()},
 top AS (SELECT t, count(*)::BIGINT AS exact_cnt FROM tk GROUP BY t
         ORDER BY exact_cnt DESC, t LIMIT {_CMS_TOP}),
-pc AS (SELECT top.t, top.exact_cnt, j::INT AS j, ({mix}) % {_CMS_WIDTH} AS b
-       FROM top, range({_CMS_DEPTH}) r(j))
+pc AS (SELECT top.t, top.exact_cnt, j::INT AS j, ({mix}) % {CMS_WIDTH} AS b
+       FROM top, range({CMS_DEPTH}) r(j))
 SELECT pc.t AS token, pc.exact_cnt,
        min(c.cnt)::BIGINT AS cms_cnt,
        (min(c.cnt) - pc.exact_cnt)::BIGINT AS overcount
@@ -5199,17 +5200,17 @@ def cms_heavy_hitters_q(spark, sf_dir):
     whose state never grows with key cardinality (datapipe/sketches.py
     cms_sketch/cms_estimate). The exact top-20 rides along as audit;
     ties broken by token so both engines pick the same set."""
-    from .datapipe.sketches import cms_estimate, cms_sketch
+    from .datapipe.sketches import CMS_DEPTH, CMS_WIDTH, cms_estimate, cms_sketch
 
     tok = _tok_df(spark, sf_dir)
-    sk = cms_sketch(tok, "t", _CMS_DEPTH, _CMS_WIDTH)
+    sk = cms_sketch(tok, CMS_DEPTH, CMS_WIDTH)
     top = (
         tok.groupBy("t")
         .agg(F.count(F.lit(1)).cast("bigint").alias("exact_cnt"))
         .orderBy(F.desc("exact_cnt"), F.asc("t"))
         .limit(_CMS_TOP)
     )
-    est = cms_estimate(sk, top.select("t"), "t", _CMS_DEPTH, _CMS_WIDTH)
+    est = cms_estimate(sk, top.select("t"), CMS_DEPTH, CMS_WIDTH)
     return top.join(est, "t").select(
         F.col("t").alias("token"),
         "exact_cnt",
@@ -5221,9 +5222,6 @@ def cms_heavy_hitters_q(spark, sf_dir):
 ORACLES["cms_heavy_hitters"] = _cms_heavy_hitters_sql()
 
 
-_BLOOM_BITS, _BLOOM_K = 1 << 16, 5
-
-
 def _bloom_decontaminate_sql() -> str:
     from .datapipe.sketches import bloom_probe_sql, bloom_sql_chain
 
@@ -5232,8 +5230,8 @@ WITH tw AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
 cg AS (SELECT DISTINCT unnest({_grams_sql(_DECONTAM_N)}) AS gram FROM tw),
 ev AS (SELECT list_slice(w, 1, 12) AS w FROM tw WHERE doc_id % 37 = 0),
 eg AS (SELECT DISTINCT unnest({_grams_sql(_DECONTAM_N)}) AS gram FROM ev),
-{bloom_sql_chain('eg', 'gram', _BLOOM_BITS, _BLOOM_K)},
-{bloom_probe_sql('cg', 'gram', _BLOOM_BITS, _BLOOM_K)},
+{bloom_sql_chain()},
+{bloom_probe_sql()},
 tot AS (SELECT count(*)::BIGINT AS n_probe_grams FROM cg),
 bh AS (SELECT count(*)::BIGINT AS n_bloom_hits FROM bl_hits),
 th AS (SELECT count(*)::BIGINT AS n_true_hits FROM cg JOIN eg USING (gram))
@@ -5258,7 +5256,7 @@ def bloom_decontaminate_q(spark, sf_dir):
     broadcast growing with the eval set (datapipe/sketches.py
     bloom_bitmap/bloom_hits)."""
     from .datapipe.dedup import shingles_col
-    from .datapipe.sketches import bloom_bitmap, bloom_hits
+    from .datapipe.sketches import BLOOM_BITS, BLOOM_K, bloom_bitmap, bloom_hits
 
     docs = _t(spark, sf_dir, "documents")
     cg = docs.select(
@@ -5270,8 +5268,8 @@ def bloom_decontaminate_q(spark, sf_dir):
     eg = eval_docs.select(
         F.explode(shingles_col(F.col("text"), _DECONTAM_N)).alias("gram")
     ).distinct()
-    bm = bloom_bitmap(eg, "gram", _BLOOM_BITS, _BLOOM_K)
-    hits = bloom_hits(cg, "gram", bm, _BLOOM_BITS, _BLOOM_K)
+    bm = bloom_bitmap(eg, "gram", BLOOM_BITS, BLOOM_K)
+    hits = bloom_hits(cg, "gram", bm, BLOOM_BITS, BLOOM_K)
     tot = cg.agg(F.count(F.lit(1)).cast("bigint").alias("n_probe_grams"))
     bh = hits.agg(F.count(F.lit(1)).cast("bigint").alias("n_bloom_hits"))
     th = cg.join(eg, "gram", "left_semi").agg(
@@ -5585,9 +5583,6 @@ def bpe_encode_stats_q(spark, sf_dir):
 ORACLES["bpe_encode_stats"] = _bpe_encode_sql()
 
 
-_DSKG_BUCKETS = 64
-
-
 def _sketch_distinct_by_source_sql() -> str:
     from .datapipe.sketches import distinct_sketch_grouped_sql
 
@@ -5595,7 +5590,7 @@ def _sketch_distinct_by_source_sql() -> str:
 WITH tokx AS (
   SELECT source, unnest(string_split(text, ' ')) AS t FROM documents),
 tks AS (SELECT source, t FROM tokx WHERE t <> ''),
-{distinct_sketch_grouped_sql('tks', 't', 'source', _DSKG_BUCKETS)},
+{distinct_sketch_grouped_sql()},
 ex AS (SELECT source AS k, count(DISTINCT t)::BIGINT AS exact_distinct
        FROM tks GROUP BY source)
 SELECT e.k AS source, e.est_distinct, x.exact_distinct,
@@ -5622,11 +5617,7 @@ def sketch_distinct_by_source_q(spark, sf_dir):
     toks = docs.select(
         "source", F.explode(F.split("text", " ")).alias("t")
     ).filter(F.col("t") != "")
-    est = distinct_estimate_grouped(
-        minhash_distinct_sketch_grouped(toks, "t", ["source"], _DSKG_BUCKETS),
-        ["source"],
-        _DSKG_BUCKETS,
-    )
+    est = distinct_estimate_grouped(minhash_distinct_sketch_grouped(toks))
     exact = toks.groupBy("source").agg(
         F.count_distinct("t").cast("bigint").alias("exact_distinct")
     )
@@ -5649,7 +5640,7 @@ def _hist_quantiles_sql() -> str:
 
     return f"""
 WITH dv AS (SELECT source, n_chars FROM documents),
-{histogram_quantiles_grouped_sql('dv', 'n_chars', 'source')},
+{histogram_quantiles_grouped_sql()},
 xr AS (
   SELECT source AS k, n_chars::BIGINT AS v,
          row_number() OVER (PARTITION BY source ORDER BY n_chars) AS rn,
@@ -5683,7 +5674,7 @@ def sketch_quantiles_by_source_q(spark, sf_dir):
     from .datapipe.sketches import histogram_quantiles_grouped
 
     docs = _t(spark, sf_dir, "documents")
-    est = histogram_quantiles_grouped(docs, "n_chars", ["source"])
+    est = histogram_quantiles_grouped(docs)
     xr = docs.select(
         "source",
         F.col("n_chars").cast("long").alias("v"),
@@ -5914,7 +5905,7 @@ def bloom_join_prune_q(spark, sf_dir):
     dim = _t(spark, sf_dir, "part").filter(F.col("p_size") <= 12).select(
         "p_partkey", "p_size"
     )
-    j = bloom_pruned_join(li, dim, "l_partkey", "p_partkey")
+    j = bloom_pruned_join(li, dim)
     return j.agg(
         F.count(F.lit(1)).cast("long").alias("n_joined"),
         F.sum(F.expr("cast(floor(l_quantity) as bigint)"))

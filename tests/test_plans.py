@@ -487,7 +487,7 @@ def test_sketch_builds_have_partial_aggregation(spark):
     toks = _t(spark, "documents").select(
         F.explode(F.split("text", " ")).alias("t")
     )
-    for df in (minhash_distinct_sketch(toks, "t", 256), cms_sketch(toks, "t")):
+    for df in (minhash_distinct_sketch(toks, 256), cms_sketch(toks)):
         tree = _tree(df)
         assert tree.count("HashAggregate") >= 2, tree
         assert tree.count("Exchange") == 1, tree

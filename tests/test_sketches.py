@@ -39,10 +39,10 @@ def items(spark):
 def test_distinct_estimate_duplication_insensitive(spark, items):
     buckets = 256
     est_dup = distinct_estimate(
-        minhash_distinct_sketch(items, "t", buckets), buckets
+        minhash_distinct_sketch(items, buckets), buckets
     ).collect()[0][0]
     est_uniq = distinct_estimate(
-        minhash_distinct_sketch(items.distinct(), "t", buckets), buckets
+        minhash_distinct_sketch(items.distinct(), buckets), buckets
     ).collect()[0][0]
     assert est_dup == est_uniq  # min absorbs repeats exactly
 
@@ -52,34 +52,34 @@ def test_distinct_estimate_error_bound(spark, items):
     # that the occupancy correction holds in the SPARSE regime too
     # (n < m), where the uncorrected estimator was off 5x
     est = distinct_estimate(
-        minhash_distinct_sketch(items, "t", 256), 256
+        minhash_distinct_sketch(items, 256), 256
     ).collect()[0][0]
     assert abs(est - 2000) / 2000 < 0.15
     sparse = items.distinct().limit(100)
     est_s = distinct_estimate(
-        minhash_distinct_sketch(sparse, "t", 256), 256
+        minhash_distinct_sketch(sparse, 256), 256
     ).collect()[0][0]
     assert abs(est_s - 100) / 100 < 0.3
 
 
 def test_distinct_sketch_rejects_non_power_of_two(spark, items):
     with pytest.raises(ValueError):
-        minhash_distinct_sketch(items, "t", 100)
+        minhash_distinct_sketch(items, 100)
 
 
 def test_cms_one_sided_and_exact_when_wide(spark, items):
     exact = items.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
     # undersized width: collisions guaranteed (2000 keys into 128 buckets)
-    sk = cms_sketch(items, "t", depth=4, width=128)
-    est = cms_estimate(sk, exact.select("t"), "t", depth=4, width=128)
+    sk = cms_sketch(items, depth=4, width=128)
+    est = cms_estimate(sk, exact.select("t"), depth=4, width=128)
     joined = exact.join(est, "t").select("c", "cms_cnt").collect()
     assert len(joined) == 2000
     assert all(r.cms_cnt >= r.c for r in joined)  # one-sided, no exception
     assert any(r.cms_cnt > r.c for r in joined)  # collisions really occur
     # oversized width: few keys, no observable overcount for the probes
     few = items.filter(F.col("t").isin("key-0", "key-1", "key-2"))
-    sk2 = cms_sketch(few, "t", depth=4, width=4096)
-    est2 = cms_estimate(sk2, few.select("t").distinct(), "t", depth=4, width=4096)
+    sk2 = cms_sketch(few, depth=4, width=4096)
+    est2 = cms_estimate(sk2, few.select("t").distinct(), depth=4, width=4096)
     ex2 = few.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
     assert all(
         r.cms_cnt == r.c for r in ex2.join(est2, "t").collect()
@@ -113,8 +113,8 @@ def test_sketch_plans_partial_aggregate(spark, items):
     # HashAggregate spans around ONE Exchange) — the shape that makes
     # them cheap at scale
     for df in (
-        minhash_distinct_sketch(items, "t", 256),
-        cms_sketch(items, "t", 4, 1024),
+        minhash_distinct_sketch(items, 256),
+        cms_sketch(items, 4, 1024),
         bloom_bitmap(items, "t", 1 << 14, 5),
     ):
         plan = df._jdf.queryExecution().executedPlan().toString()

@@ -106,6 +106,11 @@ def spread_for_compute(docs: DataFrame) -> DataFrame:
     return docs
 
 
+# The registry's MinHash near-dup configuration: signature length, LSH
+# bands and the estimated-Jaccard cut.
+MINHASH_N, MINHASH_BANDS, MINHASH_T = 16, 4, 0.5
+
+
 def minhash_signatures(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -327,7 +332,7 @@ def _lsh_cosine_pairs(emb, threshold, dim, **carry) -> DataFrame:
 
     planes = hyperplanes(4, _vec_dim(emb, "embedding", dim))
     return _salted_cosine_pairs(
-        emb, "embedding", "vec_id",
+        emb,
         hyperplane_bucket_col(F.col("embedding"), planes),
         threshold, _block_salt(emb, 1 << 4), **carry,
     )
@@ -353,9 +358,7 @@ def embedding_neardup_pairs(
             "(all-pairs without blocking is quadratic in the corpus); "
             "use embedding_neardup_lsh_pairs for the LSH-blocked default"
         )
-    return _salted_cosine_pairs(
-        emb, "embedding", "vec_id", F.col(block_col), threshold, salt
-    )
+    return _salted_cosine_pairs(emb, F.col(block_col), threshold, salt)
 
 
 def _block_salt(emb: DataFrame, n_blocks: int) -> int:
@@ -368,15 +371,13 @@ def _block_salt(emb: DataFrame, n_blocks: int) -> int:
 
 def _salted_cosine_pairs(
     emb: DataFrame,
-    vec_col: str,
-    id_col: str,
     block: Column,
     threshold: float,
     salt: int,
     **carry: Column,
 ) -> DataFrame:
     """The blocked self-join behind every embedding pair operator: pairs
-    ``id_a < id_b`` sharing a ``block`` value whose EXACT cosine reaches
+    of ``vec_id`` values ``id_a < id_b`` sharing a ``block`` value whose EXACT cosine reaches
     ``threshold`` (the DuckDB twins compare the same unrounded value; only
     the reported cosine is rounded to 6dp). Returns ``(id_a, id_b,
     <name>_a, <name>_b for each carry column, cosine)``.
@@ -394,9 +395,9 @@ def _salted_cosine_pairs(
     condition."""
     from .similarity import dot_col, norm_col
 
-    v = F.col(vec_col)
+    v = F.col("embedding")
     base = emb.select(
-        F.col(id_col),
+        F.col("vec_id"),
         block.alias("_blk"),
         v.alias("_v"),
         norm_col(v).alias("_n"),
@@ -404,7 +405,7 @@ def _salted_cosine_pairs(
     )
     salt = max(1, int(salt))
     a_df = base.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt))
+        "_salt", F.pmod(F.xxhash64(F.col("vec_id")), F.lit(salt))
     )
     b_df = base.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0).cast("long"), F.lit(salt - 1).cast("long")))
@@ -424,12 +425,12 @@ def _salted_cosine_pairs(
             b,
             (F.col("a._blk") == F.col("b._blk"))
             & (F.col("a._salt") == F.col("b._salt"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
         .filter(cos >= F.lit(float(threshold)))
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
             *[
                 F.col(f"{side}.{name}").alias(f"{name}_{side}")
                 for name in carry
@@ -472,13 +473,11 @@ def decontaminate(
     )
 
 
-def _positioned_grams(
-    docs: DataFrame, text_col: str, id_col: str, n: int
-) -> DataFrame:
-    """One row per (doc, start position, word n-gram), 1-based positions.
+def _positioned_grams(docs: DataFrame, n: int) -> DataFrame:
+    """One row per (doc_id, start position, word n-gram), 1-based positions.
     Short docs (< n words) contribute their whole text at position 1 —
     consistent with :func:`shingles_col`. Row-local, no shuffle."""
-    w = F.split(F.col(text_col), " ")
+    w = F.split(F.col("text"), " ")
     n_tok = F.size(w)
     grams = F.transform(
         F.sequence(F.lit(1), F.greatest(n_tok - F.lit(n - 1), F.lit(1))),
@@ -487,8 +486,8 @@ def _positioned_grams(
         ),
     )
     return spread_for_compute(docs).select(
-        F.col(id_col), n_tok.alias("n_tok"), F.explode(grams).alias("g")
-    ).select(id_col, "n_tok", F.col("g.pos").alias("pos"), F.col("g.gram").alias("gram"))
+        "doc_id", n_tok.alias("n_tok"), F.explode(grams).alias("g")
+    ).select("doc_id", "n_tok", F.col("g.pos").alias("pos"), F.col("g.gram").alias("gram"))
 
 
 def substring_dup_stats(docs: DataFrame, n: int = 8) -> DataFrame:
@@ -507,7 +506,7 @@ def substring_dup_stats(docs: DataFrame, n: int = 8) -> DataFrame:
     join on gram touching only duplicated grams; coverage is an
     explode(sequence) over FLAGGED positions only, then a
     count-distinct per doc. No all-pairs comparison anywhere."""
-    tg = _positioned_grams(docs, "text", "doc_id", n)
+    tg = _positioned_grams(docs, n)
     dup = (
         tg.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -820,7 +819,7 @@ def prefix_jaccard_pairs(docs: DataFrame) -> DataFrame:
     )
 
 
-def tfidf_cosine_pairs(docs: DataFrame, shingle_k: int = 0) -> DataFrame:
+def tfidf_cosine_pairs(docs: DataFrame) -> DataFrame:
     """Weighted (TF-IDF-style) sparse cosine similarity join — the
     frequency-aware complement to the set-semantics Jaccard tiers:
     per-term weight ``w = tf * min(n_docs div df, 100)`` (a
@@ -840,29 +839,14 @@ def tfidf_cosine_pairs(docs: DataFrame, shingle_k: int = 0) -> DataFrame:
     and dots are all partial-aggregatable groupBys over one corpus
     explosion; no row-at-a-time Python anywhere.
 
-    ``shingle_k > 0`` switches the feature space from unigrams to word
-    k-shingles (distinct per doc, tf folds to 1 → pure rarity-weighted
-    cosine). Use it when the unigram vocabulary is small relative to
-    the corpus — every unigram's df then grows past any cut and the
-    unigram score degenerates, while shingles stay rare at any scale
-    (same reason the Jaccard tiers shingle)."""
-    if shingle_k > 0:
-        toks = spread_for_compute(docs).select(
-            "doc_id",
-            F.explode(
-                shingles_col(F.col("text"), shingle_k)
-            ).alias("t"),
-        )
-    else:
-        toks = spread_for_compute(docs).select(
-            "doc_id",
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col("text")), " "),
-                    lambda x: x != F.lit(""),
-                )
-            ).alias("t"),
-        )
+    The features are word 3-shingles (distinct per doc, so tf folds to
+    1 → pure rarity-weighted cosine), not unigrams: when the unigram
+    vocabulary is small relative to the corpus every unigram's df grows
+    past any cut and the unigram score degenerates, while shingles stay
+    rare at any scale (same reason the Jaccard tiers shingle)."""
+    toks = spread_for_compute(docs).select(
+        "doc_id", F.explode(shingles_col(F.col("text"), 3)).alias("t")
+    )
     postings = toks.groupBy("t", "doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
     )
@@ -912,11 +896,7 @@ def tfidf_cosine_pairs(docs: DataFrame, shingle_k: int = 0) -> DataFrame:
     )
 
 def incremental_lsh_matches(
-    index_docs: DataFrame,
-    batch_docs: DataFrame,
-    num_hashes: int = 16,
-    bands: int = 4,
-    threshold: float = 0.5,
+    index_docs: DataFrame, batch_docs: DataFrame
 ) -> DataFrame:
     """Nightly-batch near-dup check: match NEW documents against an
     EXISTING corpus — the incremental shape (the batch is collided
@@ -924,7 +904,9 @@ def incremental_lsh_matches(
     each other or the corpus with itself). Returns one row per batch
     doc: (doc_id, n_index_matches, best_est_jaccard) —
     best_est_jaccard is NULL for clean docs, so
-    ``WHERE n_index_matches = 0`` is the append set.
+    ``WHERE n_index_matches = 0`` is the append set. Signatures, bands and
+    the Jaccard cut are the registry's ``MINHASH_N``/``MINHASH_BANDS``/
+    ``MINHASH_T``.
 
     What a call computes: MinHash signatures and banded_keys for BOTH
     sides, from the raw documents, on every call — there is no stored
@@ -935,13 +917,15 @@ def incremental_lsh_matches(
     the per-batch cost |batch| band rows against a bucket-pruned read;
     that is not implemented. Within-batch duplicates are a separate
     (tiny) lsh_candidate_pairs over the batch alone, by policy."""
-    rows_per_band = num_hashes // bands
-    sig_old = minhash_signatures(index_docs, num_hashes=num_hashes)
-    sig_new = minhash_signatures(batch_docs, num_hashes=num_hashes)
-    bo = banded_keys(sig_old, bands=bands, rows_per_band=rows_per_band).select(
-        F.col("doc_id").alias("old_id"), "band", "bkey"
-    )
-    bn = banded_keys(sig_new, bands=bands, rows_per_band=rows_per_band).select(
+    rows_per_band = MINHASH_N // MINHASH_BANDS
+    sig_old = minhash_signatures(index_docs, num_hashes=MINHASH_N)
+    sig_new = minhash_signatures(batch_docs, num_hashes=MINHASH_N)
+    bo = banded_keys(
+        sig_old, bands=MINHASH_BANDS, rows_per_band=rows_per_band
+    ).select(F.col("doc_id").alias("old_id"), "band", "bkey")
+    bn = banded_keys(
+        sig_new, bands=MINHASH_BANDS, rows_per_band=rows_per_band
+    ).select(
         F.col("doc_id").alias("new_id"), "band", "bkey"
     )
     cand = bn.join(bo, ["band", "bkey"]).select("new_id", "old_id").distinct()
@@ -962,9 +946,9 @@ def incremental_lsh_matches(
                     lambda m: m,
                 )
             )
-            / F.lit(float(num_hashes)),
+            / F.lit(float(MINHASH_N)),
         )
-        .filter(F.col("ej") >= threshold)
+        .filter(F.col("ej") >= MINHASH_T)
     )
     matches = est.groupBy("new_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_index_matches"),

@@ -20,6 +20,8 @@ from typing import Callable, Dict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .datapipe.dedup import MINHASH_BANDS, MINHASH_N, MINHASH_T
+
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: Dict[str, str] = {}
 
@@ -999,17 +1001,12 @@ def dedup_exact(spark, sf_dir):
     )
 
 
-_MINHASH_N = 16
-_MINHASH_BANDS = 4
-_MINHASH_T = 0.5
-
-
 def _minhash_params_sql() -> str:
     from .datapipe.hashes import minhash_params
 
     vals = ", ".join(
         f"({j}, {a}, {b}, {c})"
-        for j, (a, b, c) in enumerate(minhash_params(_MINHASH_N))
+        for j, (a, b, c) in enumerate(minhash_params(MINHASH_N))
     )
     return f"(VALUES {vals}) AS v(j, a, b, c)"
 
@@ -1030,9 +1027,9 @@ mh AS (
 sig AS (SELECT doc_id, list(mv ORDER BY j) AS sig FROM mh GROUP BY 1),
 banded AS (
   SELECT doc_id, b.band,
-         md5(array_to_string(sig[b.band * {_MINHASH_N // _MINHASH_BANDS} + 1 :
-                                 (b.band + 1) * {_MINHASH_N // _MINHASH_BANDS}], ',')) AS bkey
-  FROM sig CROSS JOIN (SELECT unnest(generate_series(0, {_MINHASH_BANDS - 1})) AS band) b
+         md5(array_to_string(sig[b.band * {MINHASH_N // MINHASH_BANDS} + 1 :
+                                 (b.band + 1) * {MINHASH_N // MINHASH_BANDS}], ',')) AS bkey
+  FROM sig CROSS JOIN (SELECT unnest(generate_series(0, {MINHASH_BANDS - 1})) AS band) b
 )"""
 
 
@@ -1046,14 +1043,14 @@ cand AS (
 ),
 est AS (
   SELECT c.id_a, c.id_b,
-         len(list_filter(list_zip(sa.sig, sb.sig), p -> p[1] = p[2]))::DOUBLE / {_MINHASH_N} AS ej
+         len(list_filter(list_zip(sa.sig, sb.sig), p -> p[1] = p[2]))::DOUBLE / {MINHASH_N} AS ej
   FROM cand c JOIN sig sa ON c.id_a = sa.doc_id JOIN sig sb ON c.id_b = sb.doc_id
 )"""
 
 
 _MINHASH_ORACLE = (
     f"WITH {_minhash_chain_sql('documents')}\n"
-    f"SELECT id_a, id_b, round(ej, 6) AS est_jaccard FROM est WHERE ej >= {_MINHASH_T}"
+    f"SELECT id_a, id_b, round(ej, 6) AS est_jaccard FROM est WHERE ej >= {MINHASH_T}"
 )
 
 
@@ -1063,9 +1060,9 @@ def dedup_minhash_lsh(spark, sf_dir):
 
     return minhash_jaccard_pairs(
         _t(spark, sf_dir, "documents"),
-        num_hashes=_MINHASH_N,
-        bands=_MINHASH_BANDS,
-        threshold=_MINHASH_T,
+        num_hashes=MINHASH_N,
+        bands=MINHASH_BANDS,
+        threshold=MINHASH_T,
     )
 
 
@@ -1253,8 +1250,8 @@ def dedup_components(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_jaccard_pairs(
-        docs, num_hashes=_MINHASH_N, bands=_MINHASH_BANDS,
-        threshold=_MINHASH_T,
+        docs, num_hashes=MINHASH_N, bands=MINHASH_BANDS,
+        threshold=MINHASH_T,
     )
     return components_with_singletons(
         docs.select("doc_id"), pairs, "doc_id"
@@ -1264,9 +1261,9 @@ def dedup_components(spark, sf_dir):
 ORACLES["dedup_components"] = (
     f"WITH RECURSIVE {_minhash_chain_sql('documents')},\n"
     f"""edges AS (
-  SELECT id_a AS u, id_b AS w FROM est WHERE ej >= {_MINHASH_T}
+  SELECT id_a AS u, id_b AS w FROM est WHERE ej >= {MINHASH_T}
   UNION ALL
-  SELECT id_b, id_a FROM est WHERE ej >= {_MINHASH_T}
+  SELECT id_b, id_a FROM est WHERE ej >= {MINHASH_T}
 ),
 reach(v, r) AS (
   SELECT u, u FROM edges
@@ -1293,8 +1290,8 @@ def dedup_cluster_sizes(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_jaccard_pairs(
-        docs, num_hashes=_MINHASH_N, bands=_MINHASH_BANDS,
-        threshold=_MINHASH_T,
+        docs, num_hashes=MINHASH_N, bands=MINHASH_BANDS,
+        threshold=MINHASH_T,
     )
     comp = components_with_singletons(docs.select("doc_id"), pairs, "doc_id")
     sizes = comp.groupBy("component").agg(
@@ -1335,7 +1332,7 @@ def dedup_threshold_sweep_q(spark, sf_dir):
 
     est = minhash_jaccard_pairs(
         _t(spark, sf_dir, "documents"),
-        num_hashes=_MINHASH_N, bands=_MINHASH_BANDS, threshold=0.0,
+        num_hashes=MINHASH_N, bands=MINHASH_BANDS, threshold=0.0,
     )
     th = F.explode(
         F.expr("array(" + ", ".join(f"{t}L" for t in _SWEEP_PPM) + ")")
@@ -1376,8 +1373,8 @@ def leakage_safe_split(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_jaccard_pairs(
-        docs, num_hashes=_MINHASH_N, bands=_MINHASH_BANDS,
-        threshold=_MINHASH_T,
+        docs, num_hashes=MINHASH_N, bands=MINHASH_BANDS,
+        threshold=MINHASH_T,
     )
     comp = components_with_singletons(docs.select("doc_id"), pairs, "doc_id")
     out = assign_split(
@@ -1399,9 +1396,9 @@ def _leakage_safe_split_sql() -> str:
     return (
         f"WITH RECURSIVE {_minhash_chain_sql('documents')},\n"
         f"""edges AS (
-  SELECT id_a AS u, id_b AS w FROM est WHERE ej >= {_MINHASH_T}
+  SELECT id_a AS u, id_b AS w FROM est WHERE ej >= {MINHASH_T}
   UNION ALL
-  SELECT id_b, id_a FROM est WHERE ej >= {_MINHASH_T}
+  SELECT id_b, id_a FROM est WHERE ej >= {MINHASH_T}
 ),
 reach(v, r) AS (
   SELECT u, u FROM edges
@@ -1427,9 +1424,9 @@ ORACLES["leakage_safe_split"] = _leakage_safe_split_sql()
 ORACLES["dedup_cluster_sizes"] = (
     f"WITH RECURSIVE {_minhash_chain_sql('documents')},\n"
     f"""edges AS (
-  SELECT id_a AS u, id_b AS w FROM est WHERE ej >= {_MINHASH_T}
+  SELECT id_a AS u, id_b AS w FROM est WHERE ej >= {MINHASH_T}
   UNION ALL
-  SELECT id_b, id_a FROM est WHERE ej >= {_MINHASH_T}
+  SELECT id_b, id_a FROM est WHERE ej >= {MINHASH_T}
 ),
 reach(v, r) AS (
   SELECT u, u FROM edges
@@ -2549,7 +2546,7 @@ docs2 AS (
   FROM variants v JOIN kept k ON v.vid = k.keep_id
 ),
 {_minhash_chain_sql('docs2')}
-SELECT id_a, id_b, round(ej, 6) AS est_jaccard FROM est WHERE ej >= {_MINHASH_T}
+SELECT id_a, id_b, round(ej, 6) AS est_jaccard FROM est WHERE ej >= {MINHASH_T}
 """
 
 
@@ -2571,9 +2568,9 @@ def dedup_cascade(spark, sf_dir):
     ).select(F.col("vid").alias("doc_id"), "text")
     return minhash_jaccard_pairs(
         survivors,
-        num_hashes=_MINHASH_N,
-        bands=_MINHASH_BANDS,
-        threshold=_MINHASH_T,
+        num_hashes=MINHASH_N,
+        bands=MINHASH_BANDS,
+        threshold=MINHASH_T,
     )
 
 
@@ -2598,8 +2595,8 @@ def dedup_cascade_cc(spark, sf_dir):
         kept, variants["vid"] == kept["keep_id"], "left_semi"
     ).select(F.col("vid").alias("doc_id"), "text")
     pairs = minhash_jaccard_pairs(
-        survivors, num_hashes=_MINHASH_N, bands=_MINHASH_BANDS,
-        threshold=_MINHASH_T,
+        survivors, num_hashes=MINHASH_N, bands=MINHASH_BANDS,
+        threshold=MINHASH_T,
     )
     lab = components_with_singletons(
         survivors.select("doc_id"), pairs, "doc_id"
@@ -2624,9 +2621,9 @@ docs2 AS (
 ),
 {_minhash_chain_sql('docs2')},
 edges AS (
-  SELECT id_a AS u, id_b AS w FROM est WHERE ej >= {_MINHASH_T}
+  SELECT id_a AS u, id_b AS w FROM est WHERE ej >= {MINHASH_T}
   UNION ALL
-  SELECT id_b, id_a FROM est WHERE ej >= {_MINHASH_T}
+  SELECT id_b, id_a FROM est WHERE ej >= {MINHASH_T}
 ),
 reach(v, r) AS (
   SELECT u, u FROM edges
@@ -5782,7 +5779,7 @@ def dedup_tfidf_cosine_q(spark, sf_dir):
     tfidf_cosine_pairs)."""
     from .datapipe.dedup import tfidf_cosine_pairs
 
-    return tfidf_cosine_pairs(_t(spark, sf_dir, "documents"), shingle_k=3)
+    return tfidf_cosine_pairs(_t(spark, sf_dir, "documents"))
 
 
 _OUTLIERS_SQL = """
@@ -6034,12 +6031,12 @@ cand AS (
 est AS (
   SELECT c.new_id,
          len(list_filter(list_zip(sn.sig, so.sig),
-                         p -> p[1] = p[2]))::DOUBLE / {_MINHASH_N} AS ej
+                         p -> p[1] = p[2]))::DOUBLE / {MINHASH_N} AS ej
   FROM cand c JOIN sig sn ON c.new_id = sn.doc_id
               JOIN sig so ON c.old_id = so.doc_id),
 m AS (SELECT new_id, count(*)::BIGINT AS n_index_matches,
              round(max(ej), 6) AS best_est_jaccard
-      FROM est WHERE ej >= {_MINHASH_T} GROUP BY 1)
+      FROM est WHERE ej >= {MINHASH_T} GROUP BY 1)
 SELECT d.doc_id,
        coalesce(m.n_index_matches, 0)::BIGINT AS n_index_matches,
        m.best_est_jaccard
@@ -6065,13 +6062,7 @@ def dedup_incremental_q(spark, sf_dir):
         F.pmod(h60_salted(F.col("doc_id").cast("string"), F.lit("incr")), F.lit(1000))
         < 800
     )
-    return incremental_lsh_matches(
-        docs.filter(is_old),
-        docs.filter(~is_old),
-        num_hashes=_MINHASH_N,
-        bands=_MINHASH_BANDS,
-        threshold=_MINHASH_T,
-    )
+    return incremental_lsh_matches(docs.filter(is_old), docs.filter(~is_old))
 
 
 ORACLES["dedup_incremental"] = _incr_oracle()

@@ -330,7 +330,7 @@ def _lsh_cosine_pairs(emb, threshold, dim, **carry) -> DataFrame:
     the 4-plane hyperplane-LSH bucket."""
     from .similarity import _vec_dim, hyperplane_bucket_col, hyperplanes
 
-    planes = hyperplanes(4, _vec_dim(emb, "embedding", dim))
+    planes = hyperplanes(_vec_dim(emb, dim))
     return _salted_cosine_pairs(
         emb,
         hyperplane_bucket_col(F.col("embedding"), planes),

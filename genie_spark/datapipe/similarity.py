@@ -27,18 +27,20 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _plane_sign(seed: int, plane: int, dim: int) -> int:
-    """Deterministic ±1 coefficient from md5 — reproducible anywhere."""
-    h = hashlib.md5(f"{seed}:{plane}:{dim}".encode()).hexdigest()
+# The vector width of the ``embeddings`` table.
+EMB_DIM = 64
+
+
+def _plane_sign(plane: int, dim: int) -> int:
+    """Deterministic ±1 coefficient from md5 (seed 42) — reproducible
+    anywhere."""
+    h = hashlib.md5(f"42:{plane}:{dim}".encode()).hexdigest()
     return 1 if int(h[:2], 16) % 2 == 0 else -1
 
 
-def hyperplanes(n_planes: int, dim: int) -> List[List[int]]:
-    """n_planes × dim ±1 matrix (seed 42); inline these constants into both
-    engines."""
-    return [
-        [_plane_sign(42, p, d) for d in range(dim)] for p in range(n_planes)
-    ]
+def hyperplanes(dim: int) -> List[List[int]]:
+    """4 × dim ±1 matrix; inline these constants into both engines."""
+    return [[_plane_sign(p, d) for d in range(dim)] for p in range(4)]
 
 
 def arr_lit(vals: Sequence[float]) -> Column:
@@ -85,13 +87,14 @@ def hyperplane_bucket_col(
     return bucket
 
 
-def _vec_dim(emb: DataFrame, vec_col: str, dim) -> int:
-    """Resolve the embedding dimensionality. Callers should pass ``dim``
-    (schema metadata or pipeline config) — the fallback probe runs one
-    extra Spark job at plan-build time, which a 100-TB plan should not."""
+def _vec_dim(emb: DataFrame, dim) -> int:
+    """Resolve the ``embedding`` dimensionality. Callers should pass
+    ``dim`` (schema metadata or pipeline config) — the fallback probe runs
+    one extra Spark job at plan-build time, which a 100-TB plan should
+    not."""
     if dim is not None:
         return int(dim)
-    return len(emb.select(vec_col).first()[0])
+    return len(emb.select("embedding").first()[0])
 
 
 # ---------------------------------------------------------------------------
@@ -170,16 +173,17 @@ def _bucket_expr_sql(planes: List[List[int]]) -> str:
     return " + ".join(terms)
 
 
-def embedding_neardup_lsh_sql(dim: int, threshold: float) -> str:
+def embedding_neardup_lsh_sql() -> str:
     """DuckDB twin of dedup.embedding_neardup_lsh_pairs: same hyperplane
     literals, same bucket-blocked all-pairs cosine."""
-    return _lsh_pairs_sql(dim, threshold, label=False)
+    return _lsh_pairs_sql(label=False)
 
 
-def _lsh_pairs_sql(dim: int, threshold: float, label: bool) -> str:
-    """Twin of ``dedup._lsh_cosine_pairs`` (4 planes); ``label`` carries
-    the label column and keeps only pairs whose labels differ."""
-    planes = hyperplanes(4, dim)
+def _lsh_pairs_sql(label: bool) -> str:
+    """Twin of ``dedup._lsh_cosine_pairs`` (4 planes over ``EMB_DIM``,
+    cosine 0.3); ``label`` carries the label column and keeps only pairs
+    whose labels differ."""
+    planes = hyperplanes(EMB_DIM)
     dot = "list_sum(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2]))"
     lbl, lbl_cols, lbl_pred = (
         (", label", "\n       a.label AS label_a, b.label AS label_b,",
@@ -197,7 +201,7 @@ WITH base AS (
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,{lbl_cols}
        round({dot} / (a.n * b.n), 6) AS cosine
 FROM base a JOIN base b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE {dot} / (a.n * b.n) >= {threshold}{lbl_pred}
+WHERE {dot} / (a.n * b.n) >= 0.3{lbl_pred}
 """
 
 
@@ -279,8 +283,7 @@ ANTI JOIN dropped d ON d.vec_id = c.vec_id
 """
 
 
-def hard_negatives_lsh_sql(dim: int) -> str:
+def hard_negatives_lsh_sql() -> str:
     """DuckDB twin of dedup.hard_negative_pairs: the
-    embedding_neardup_lsh chain at cosine 0.3 plus the label-inequality
-    predicate."""
-    return _lsh_pairs_sql(dim, 0.3, label=True)
+    embedding_neardup_lsh chain plus the label-inequality predicate."""
+    return _lsh_pairs_sql(label=True)

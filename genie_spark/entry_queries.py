@@ -1171,18 +1171,16 @@ def embedding_neardup(spark, sf_dir):
     )
 
 
-_EMB_DIM = 64
-
-
 @_register("embedding_neardup_lsh", None)
 def embedding_neardup_lsh(spark, sf_dir):
     """Corpus-safe near-dup default: hyperplane-LSH buckets as the
     blocking key, so the within-block all-pairs term is bounded by the
     bucket size, not the corpus size."""
     from .datapipe.dedup import embedding_neardup_lsh_pairs
+    from .datapipe.similarity import EMB_DIM
 
     return embedding_neardup_lsh_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=0.3, dim=_EMB_DIM
+        _t(spark, sf_dir, "embeddings"), threshold=0.3, dim=EMB_DIM
     )
 
 
@@ -1194,8 +1192,9 @@ def hard_negatives_q(spark, sf_dir):
     blocking as the embedding near-dup tier; the label predicate is a
     free ride-along (datapipe/dedup.py hard_negative_pairs)."""
     from .datapipe.dedup import hard_negative_pairs
+    from .datapipe.similarity import EMB_DIM
 
-    return hard_negative_pairs(_t(spark, sf_dir, "embeddings"), dim=_EMB_DIM)
+    return hard_negative_pairs(_t(spark, sf_dir, "embeddings"), dim=EMB_DIM)
 
 
 _IVF_CELLS, _SEMDEDUP_T = 8, 0.3
@@ -1223,10 +1222,8 @@ def _install_embedding_oracles():
         semantic_dedup_sql,
     )
 
-    ORACLES["embedding_neardup_lsh"] = embedding_neardup_lsh_sql(
-        dim=_EMB_DIM, threshold=0.3
-    )
-    ORACLES["hard_negatives"] = hard_negatives_lsh_sql(dim=_EMB_DIM)
+    ORACLES["embedding_neardup_lsh"] = embedding_neardup_lsh_sql()
+    ORACLES["hard_negatives"] = hard_negatives_lsh_sql()
     ORACLES["dedup_semantic"] = semantic_dedup_sql(
         n_cells=_IVF_CELLS, threshold=_SEMDEDUP_T
     )

@@ -2108,7 +2108,7 @@ def confusion_matrix_q(spark, sf_dir):
     (metrics.py confusion_matrix)."""
     from .metrics import confusion_matrix
 
-    return confusion_matrix(_lang_eval_df(spark, sf_dir), "lang", "lang_guess")
+    return confusion_matrix(_lang_eval_df(spark, sf_dir))
 
 
 @_register(
@@ -2139,9 +2139,7 @@ def classifier_report_q(spark, sf_dir):
     enters either engine (metrics.py classification_report)."""
     from .metrics import classification_report
 
-    return classification_report(
-        _lang_eval_df(spark, sf_dir), "lang", "lang_guess"
-    )
+    return classification_report(_lang_eval_df(spark, sf_dir))
 
 
 @_register(
@@ -2172,7 +2170,7 @@ def cohen_kappa_q(spark, sf_dir):
     inside signed-64 at ~3e9 rows (metrics.py cohen_kappa)."""
     from .metrics import cohen_kappa
 
-    return cohen_kappa(_lang_eval_df(spark, sf_dir), "lang", "lang_guess")
+    return cohen_kappa(_lang_eval_df(spark, sf_dir))
 
 
 @_register(
@@ -6116,4 +6114,4 @@ def auc_eval_q(spark, sf_dir):
         .cast("long")
         .alias("y"),
     )
-    return auc_by_group(samples, "grp", "score", "y")
+    return auc_by_group(samples)

@@ -382,13 +382,9 @@ def calibration_bins(samples: DataFrame, bins: int = 10) -> DataFrame:
     )
 
 
-def auc_by_group(
-    samples: DataFrame,
-    group_col: str,
-    score_col: str,
-    label_col: str,
-) -> DataFrame:
-    """Tie-corrected ROC-AUC per group, integer-exact: the Mann-Whitney
+def auc_by_group(samples: DataFrame) -> DataFrame:
+    """Tie-corrected ROC-AUC per ``grp`` of the ``score`` column against
+    the 0/1 label ``y``, integer-exact: the Mann-Whitney
     rank-sum formulation over the (group, score) census. With midranks
     doubled to stay integral, 2*midrank(s) = 2*cum_before(s) + c(s) + 1
     and AUC = (2*sum_pos(midrank) - n_pos*(n_pos+1)) / (2*n_pos*n_neg);
@@ -406,9 +402,9 @@ def auc_by_group(
 
     cen = (
         samples.select(
-            F.col(group_col).alias("grp"),
-            F.col(score_col).cast("long").alias("score"),
-            F.col(label_col).cast("long").alias("_y"),
+            "grp",
+            F.col("score").cast("long").alias("score"),
+            F.col("y").cast("long").alias("_y"),
         )
         .groupBy("grp", "score")
         .agg(
@@ -442,26 +438,24 @@ def auc_by_group(
 
 # --- multiclass classifier evaluation ---------------------------------------
 
-def confusion_matrix(
-    df: DataFrame, true_col: str, pred_col: str
-) -> DataFrame:
-    """Multiclass confusion census ``(true, pred, n)`` — ONE partial-agg
+def confusion_matrix(df: DataFrame) -> DataFrame:
+    """Multiclass confusion census ``(true_cls, pred_cls, n)`` of the
+    true ``lang`` against the predicted ``lang_guess`` — ONE partial-agg
     groupBy bounded by the class-domain square, never the row count."""
     return df.groupBy(
-        F.col(true_col).alias("true_cls"), F.col(pred_col).alias("pred_cls")
+        F.col("lang").alias("true_cls"), F.col("lang_guess").alias("pred_cls")
     ).agg(F.count(F.lit(1)).cast("long").alias("n"))
 
 
-def classification_report(
-    df: DataFrame, true_col: str, pred_col: str
-) -> DataFrame:
-    """Per-class precision/recall/F1 in integer ppm, keyed on the TRUE
+def classification_report(df: DataFrame) -> DataFrame:
+    """Per-class precision/recall/F1 of :func:`confusion_matrix` in
+    integer ppm, keyed on the TRUE
     class domain: (cls, n_true, n_pred, tp, precision_ppm, recall_ppm,
     f1_ppm). F1 folds exactly to ``2·tp / (n_true + n_pred)`` so it
     stays a single integer division — no float harmonic mean. All
     inputs come from the confusion census, so every join here is
     class-domain-sized (broadcast) regardless of corpus size."""
-    cm = confusion_matrix(df, true_col, pred_col)
+    cm = confusion_matrix(df)
     tt = cm.groupBy(F.col("true_cls").alias("cls")).agg(
         F.sum("n").cast("long").alias("n_true")
     )
@@ -498,16 +492,16 @@ def classification_report(
     )
 
 
-def cohen_kappa(df: DataFrame, true_col: str, pred_col: str) -> DataFrame:
-    """Cohen's kappa (inter-annotator / classifier-vs-gold chance-
-    corrected agreement) as ONE row: (n, agree, po_ppm, pe_ppm,
+def cohen_kappa(df: DataFrame) -> DataFrame:
+    """Cohen's kappa of :func:`confusion_matrix` (inter-annotator /
+    classifier-vs-gold chance-corrected agreement) as ONE row: (n, agree, po_ppm, pe_ppm,
     kappa_ppm). Integer-exact via the cleared form
     ``kappa = (agree·N − Σ t_k·p_k) / (N² − Σ t_k·p_k)``; the ppm
     scaling divides the DENOMINATOR by 1e6 first (identical formula in
     the DuckDB twin) so no intermediate exceeds N² — signed-64-safe to
     N ≈ 3e9 rows. Everything derives from the class-domain-sized
     confusion census."""
-    cm = confusion_matrix(df, true_col, pred_col)
+    cm = confusion_matrix(df)
     tt = cm.groupBy(F.col("true_cls").alias("cls")).agg(
         F.sum("n").cast("long").alias("n_true")
     )

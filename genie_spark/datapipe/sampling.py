@@ -25,16 +25,17 @@ from .hashes import h60_salted, h60_salted_sql
 _GRAIN = 1_000_000
 
 
-def _unit(id_col: Column, salt: str) -> Column:
-    """Deterministic uniform in [0, 1) at 1e-6 grain from (salt, id)."""
-    return F.pmod(h60_salted(id_col.cast("string"), F.lit(salt)), F.lit(_GRAIN)) / float(
+def _unit(id_col: Column) -> Column:
+    """Deterministic uniform in [0, 1) at 1e-6 grain from (salt "strata",
+    id)."""
+    return F.pmod(h60_salted(id_col.cast("string"), F.lit("strata")), F.lit(_GRAIN)) / float(
         _GRAIN
     )
 
 
-def unit_sql(id_expr: str, salt: str) -> str:
-    """DuckDB twin of :func:`_unit`."""
-    return f"(({h60_salted_sql(id_expr, repr(salt))}) % {_GRAIN}) / {_GRAIN}.0"
+def unit_sql() -> str:
+    """DuckDB twin of :func:`_unit` over ``doc_id``."""
+    return f"(({h60_salted_sql('doc_id', repr('strata'))}) % {_GRAIN}) / {_GRAIN}.0"
 
 
 def residue_sql(id_expr: str, salt: str) -> str:
@@ -47,18 +48,17 @@ def residue_sql(id_expr: str, salt: str) -> str:
 def stratified_sample(
     df: DataFrame,
     fractions: Dict[str, float],
-    strata_col: str,
     default_fraction: float = 0.0,
 ) -> DataFrame:
-    """Per-stratum sampling rates (e.g. per source or per language):
-    ``fractions[stratum]`` of each stratum survives, unlisted strata get
+    """Per-language sampling rates: ``fractions[lang]`` of each ``lang``
+    stratum survives, unlisted strata get
     ``default_fraction``. One row-local CASE over the hash-uniform — the
     idiomatic replacement for ``sampleBy`` (whose output depends on
     partition layout)."""
     frac = F.lit(float(default_fraction))
     for k, v in sorted(fractions.items()):
-        frac = F.when(F.col(strata_col) == k, F.lit(float(v))).otherwise(frac)
-    return df.filter(_unit(F.col("doc_id"), "strata") < frac)
+        frac = F.when(F.col("lang") == k, F.lit(float(v))).otherwise(frac)
+    return df.filter(_unit(F.col("doc_id")) < frac)
 
 
 def split_thresholds(weights: Dict[str, float]):

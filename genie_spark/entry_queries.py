@@ -3291,7 +3291,7 @@ def _sampling_oracles():
     from .datapipe.sampling import residue_sql, unit_sql
 
     return {
-        "u_strata": unit_sql("doc_id", "strata"),
+        "u_strata": unit_sql(),
         "r_split": residue_sql("doc_id", "split"),
     }
 
@@ -3327,7 +3327,6 @@ def sample_stratified(spark, sf_dir):
     out = stratified_sample(
         _t(spark, sf_dir, "documents"),
         {"en": 0.5, "de": 0.25},
-        strata_col="lang",
         default_fraction=0.1,
     )
     return out.select(F.col("doc_id").cast("bigint").alias("doc_id"), "lang")

@@ -64,7 +64,7 @@ def test_split_thresholds_integer_grain_boundaries(spark, docs):
 
 def test_stratified_sample_rates_per_stratum(spark, docs):
     out = stratified_sample(
-        docs, {"en": 1.0, "de": 0.0}, strata_col="lang", default_fraction=0.0
+        docs, {"en": 1.0, "de": 0.0}, default_fraction=0.0
     )
     langs = {r["lang"] for r in out.select("lang").distinct().collect()}
     assert langs == {"en"}

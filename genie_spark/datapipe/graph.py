@@ -445,14 +445,9 @@ def component_dedup(
     return tagged.filter(F.col(id_col) == F.col("component")).select(id_col)
 
 
-def common_neighbors_bipartite(
-    edges: DataFrame,
-    center: str,
-    side: str,
-) -> DataFrame:
-    """Bipartite common-neighbor features: pairs of ``side`` vertices
-    sharing at least two distinct ``center`` neighbors (e.g. orders
-    sharing parts, documents sharing entities, users sharing items), with
+def common_neighbors_bipartite(edges: DataFrame) -> DataFrame:
+    """Bipartite common-neighbor features: pairs of ``order_`` vertices
+    sharing at least two distinct ``part`` neighbors, with
     the common-neighbor count and integer-ppm Jaccard ``(common*scale) //
     (deg_a + deg_b - common)`` — the classic candidate generator for
     entity-alias / missing-edge proposals over a constructed KG.
@@ -461,7 +456,7 @@ def common_neighbors_bipartite(
     the shared center, so cost is the sum over centers of degree²; the
     true member degrees attach after the pair count."""
     adj = edges.select(
-        F.col(center).alias("u"), F.col(side).alias("v")
+        F.col("part").alias("u"), F.col("order_").alias("v")
     ).distinct()
     deg = adj.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("deg"))
     n1 = adj.select("u", F.col("v").alias("x"))
@@ -1073,19 +1068,19 @@ def transitive_closure(edges: DataFrame, max_hops: int = 12) -> DataFrame:
     return _semi_naive(seen, grow, max_hops - 1)
 
 
-def closure_sql(edges_cte: str = "e") -> str:
+def closure_sql() -> str:
     """DuckDB twin of :func:`transitive_closure` at its default
     ``max_hops=12``: a bounded ``WITH RECURSIVE`` reachability walk
     (UNION ALL + hop guard — the guard terminates cyclic inputs exactly
     like max_hops) followed by
     the min-hop group-by. Returned as the RECURSIVE cte-list fragment;
-    the caller prefixes ``WITH RECURSIVE <edges>,`` and selects from
-    ``reach_min``."""
-    return f"""reach AS (
-  SELECT src, dst, 1 AS h FROM {edges_cte}
+    the caller prefixes ``WITH RECURSIVE cl_edges(src, dst) AS (...),``
+    and selects from ``reach_min``."""
+    return """reach AS (
+  SELECT src, dst, 1 AS h FROM cl_edges
   UNION ALL
   SELECT r.src, t.dst, r.h + 1
-  FROM reach r JOIN {edges_cte} t ON r.dst = t.src
+  FROM reach r JOIN cl_edges t ON r.dst = t.src
   WHERE r.h < 12
 ),
 reach_min AS (
@@ -1200,11 +1195,12 @@ def closure_delta(
     return not_known(seen.union(left).distinct(), old_c)
 
 
-def rule_based_inference(
-    triples: DataFrame,
-    min_confidence_ppm: int = 300_000,
-    min_support: int = 5,
-) -> DataFrame:
+# The bars a mined chain rule clears before it infers facts: confidence
+# in ppm and support in body paths.
+RULE_MIN_CONF, RULE_MIN_SUP = 300_000, 5
+
+
+def rule_based_inference(triples: DataFrame) -> DataFrame:
     """KB COMPLETION by mined rules — the application half of the AMIE
     loop (:func:`chain_rule_confidence` mines; this infers): every
     body path (x →r1 z →r2 y) of a rule that cleared the confidence and
@@ -1224,8 +1220,8 @@ def rule_based_inference(
     facts = triples.select(
         "s", "r", "o"
     ).distinct().localCheckpoint(eager=False)
-    rules = chain_rule_confidence(facts, min_support=min_support).filter(
-        F.col("confidence_ppm") >= min_confidence_ppm
+    rules = chain_rule_confidence(facts, min_support=RULE_MIN_SUP).filter(
+        F.col("confidence_ppm") >= RULE_MIN_CONF
     )
     hop1 = facts.select(
         F.col("s").alias("x"), F.col("o").alias("z"), F.col("r").alias("r1")

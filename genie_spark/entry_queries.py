@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .datapipe.dedup import MINHASH_BANDS, MINHASH_N, MINHASH_T
+from .datapipe.graph import RULE_MIN_CONF, RULE_MIN_SUP
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: Dict[str, str] = {}
@@ -1734,7 +1735,7 @@ def _kg_closure_sql() -> str:
 
     return (
         f"WITH RECURSIVE {_CLOSURE_EDGES_SQL},\n"
-        + closure_sql("cl_edges")
+        + closure_sql()
         + "\nSELECT src, dst, min_hops FROM reach_min"
     )
 
@@ -1998,7 +1999,7 @@ def kg_common_neighbors(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("part"), F.col("l_orderkey").alias("order_")
     )
-    return common_neighbors_bipartite(li, center="part", side="order_")
+    return common_neighbors_bipartite(li)
 
 
 _TFIDF_K = 3
@@ -4948,10 +4949,6 @@ def _chain_facts_df(spark, sf_dir):
     return facts
 
 
-_RULE_MIN_CONF = 300_000
-_RULE_MIN_SUP = 5
-
-
 @_register(
     "kg_rule_infer",
     f"""
@@ -4969,8 +4966,8 @@ ri_rules AS (
   SELECT s.r1, s.r2, s.r_head,
          (s.support * 1000000 // b.n_body)::BIGINT AS confidence_ppm
   FROM ri_sup s JOIN ri_body b USING (r1, r2)
-  WHERE s.support >= {_RULE_MIN_SUP}
-    AND (s.support * 1000000 // b.n_body) >= {_RULE_MIN_CONF}),
+  WHERE s.support >= {RULE_MIN_SUP}
+    AND (s.support * 1000000 // b.n_body) >= {RULE_MIN_CONF}),
 ri_cand AS (
   SELECT p.x, r.r_head, p.y, r.r1, r.r2, r.confidence_ppm
   FROM ri_paths p JOIN ri_rules r USING (r1, r2)
@@ -4997,11 +4994,7 @@ def kg_rule_infer_q(spark, sf_dir):
     (datapipe/graph.py rule_based_inference)."""
     from .datapipe.graph import rule_based_inference
 
-    return rule_based_inference(
-        _chain_facts_df(spark, sf_dir),
-        min_confidence_ppm=_RULE_MIN_CONF,
-        min_support=_RULE_MIN_SUP,
-    )
+    return rule_based_inference(_chain_facts_df(spark, sf_dir))
 
 
 @_register(

@@ -205,9 +205,7 @@ def test_common_neighbors_bipartite_sides(spark):
     )
     out = {
         (r["id_a"], r["id_b"]): (r["common"], r["jaccard_ppm"])
-        for r in common_neighbors_bipartite(
-            edges, center="part", side="order_"
-        ).collect()
+        for r in common_neighbors_bipartite(edges).collect()
     }
     # deg(o1)=deg(o2)=2 -> jaccard 2/2
     assert out == {("o1", "o2"): (2, 10**6)}

@@ -682,15 +682,21 @@ def fact_intervals(assertions: DataFrame) -> DataFrame:
     )
 
 
-def asof_snapshot(intervals: DataFrame, at_epoch: int) -> DataFrame:
+# The snapshot instant: mid-1995, inside the registry's assertion window
+# (facts before 1996), so the snapshot mixes closed and still-open
+# versions.
+ASOF_EPOCH = 804556800  # 1995-07-01 00:00:00 UTC
+
+
+def asof_snapshot(intervals: DataFrame) -> DataFrame:
     """Time-travel query over :func:`fact_intervals` output: the graph
-    AS OF ``at_epoch`` — the version whose interval covers the instant
+    AS OF ``ASOF_EPOCH`` — the version whose interval covers the instant
     (valid_from ≤ t < valid_to, open current intervals included). A pure
     row-local filter over the materialized interval table: snapshot
     reconstruction costs a scan, never a re-fusion of the assertion
     log — the point of storing intervals. Returns one (s, r, o) per key
     valid at t, plus how long the fact had been valid by then."""
-    t = F.lit(int(at_epoch)).cast("bigint")
+    t = F.lit(ASOF_EPOCH).cast("bigint")
     return intervals.filter(
         (F.col("valid_from_epoch") <= t)
         & (F.col("valid_to_epoch").isNull() | (F.col("valid_to_epoch") > t))
@@ -702,15 +708,15 @@ def asof_snapshot(intervals: DataFrame, at_epoch: int) -> DataFrame:
     )
 
 
-def key_skew_profile(df: DataFrame, key_col: str) -> DataFrame:
-    """Shuffle-skew diagnosis for a prospective join/agg key: the 20
-    heaviest keys with count, corpus share (integer ppm) and
+def key_skew_profile(df: DataFrame) -> DataFrame:
+    """Shuffle-skew diagnosis for a prospective join/agg key ``k``: the
+    20 heaviest keys with count, corpus share (integer ppm) and
     hot-key ratio (count ÷ mean key load, ppm) — the numbers that decide
     whether a key needs salting (dedup_triples salt_buckets) or AQE
     skew-join before a 100 TB shuffle keyed on it. ONE partial-agg
     groupBy + a TakeOrderedAndProject + two broadcast 1-row joins; never
     a global sort, never a second scan."""
-    counts = df.groupBy(F.col(key_col).alias("key")).agg(
+    counts = df.groupBy(F.col("k").alias("key")).agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
     )
     totals = counts.agg(

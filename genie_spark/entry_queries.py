@@ -20,6 +20,7 @@ from typing import Callable, Dict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .canonicalize import ASOF_EPOCH
 from .datapipe.dedup import MINHASH_BANDS, MINHASH_N, MINHASH_T
 from .datapipe.graph import RULE_MIN_CONF, RULE_MIN_SUP
 
@@ -503,7 +504,7 @@ def skew_profile_q(spark, sf_dir):
     keyed = li.select(
         F.concat(F.lit("P"), F.col("l_partkey").cast("string")).alias("k")
     )
-    return key_skew_profile(keyed, "k")
+    return key_skew_profile(keyed)
 
 
 @_register(
@@ -3759,11 +3760,6 @@ def kg_fact_intervals_q(spark, sf_dir):
     )
 
 
-# mid-1995 instant: inside the assertion window (facts < _CUT) so the
-# snapshot mixes closed and still-open versions
-_ASOF_EPOCH = 804556800  # 1995-07-01 00:00:00 UTC
-
-
 @_register(
     "kg_asof_snapshot",
     f"""
@@ -3794,9 +3790,9 @@ fi_iv AS (
   FROM fi_runs
 )
 SELECT s::BIGINT AS s, r, o::BIGINT AS o,
-       ({_ASOF_EPOCH} - vf)::BIGINT AS valid_for_s
+       ({ASOF_EPOCH} - vf)::BIGINT AS valid_for_s
 FROM fi_iv
-WHERE vf <= {_ASOF_EPOCH} AND (vt IS NULL OR vt > {_ASOF_EPOCH})
+WHERE vf <= {ASOF_EPOCH} AND (vt IS NULL OR vt > {ASOF_EPOCH})
 """,
 )
 def kg_asof_snapshot_q(spark, sf_dir):
@@ -3816,7 +3812,7 @@ def kg_asof_snapshot_q(spark, sf_dir):
             F.col("l_shipdate").alias("ts"),
         )
     )
-    out = asof_snapshot(iv, _ASOF_EPOCH)
+    out = asof_snapshot(iv)
     return out.select(
         F.col("s").cast("bigint").alias("s"), "r",
         F.col("o").cast("bigint").alias("o"), "valid_for_s",

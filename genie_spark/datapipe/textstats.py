@@ -642,9 +642,9 @@ def collocation_lift(docs: DataFrame) -> DataFrame:
     return out.orderBy(F.desc("lift_ppm"), F.asc("bigram")).limit(20)
 
 
-def length_outliers(docs: DataFrame, k_sigma2: int = 4) -> DataFrame:
-    """Per-group outlier flags on an integer metric: doc is an outlier
-    when ``(x - mean)^2 > k_sigma2 * var`` with mean and variance both
+def length_outliers(docs: DataFrame) -> DataFrame:
+    """Per-source outlier flags on ``n_chars``: doc is an outlier
+    when ``(x - mean)^2 > 2 * var`` with mean and variance both
     computed in INTEGER floor arithmetic (mean = sum div n, var =
     (sum(x^2) div n) - mean^2) — deterministic across engines, no float
     moments. Returns only the outliers: (group, id, value, mean, var).
@@ -672,18 +672,17 @@ def length_outliers(docs: DataFrame, k_sigma2: int = 4) -> DataFrame:
         .join(F.broadcast(stats), "source")
         .filter(
             F.expr(
-                f"(value - mean) * (value - mean)"
-                f" > {int(k_sigma2)}L * greatest(var, 1L)"
+                "(value - mean) * (value - mean) > 2L * greatest(var, 1L)"
             )
         )
         .select("source", "doc_id", "value", "mean", "var")
     )
 
 
-def class_term_lift(docs: DataFrame, class_col: str) -> DataFrame:
-    """Discriminative vocabulary per class: for each (class, term), the
-    lift of the term's in-class rate over its corpus rate, integer ppm
-    — ``lift = (tf_c / n_c) / (tf / n)`` computed as the shared
+def class_term_lift(docs: DataFrame) -> DataFrame:
+    """Discriminative vocabulary per ``lang`` class: for each (class,
+    term), the lift of the term's in-class rate over its corpus rate,
+    integer ppm — ``lift = (tf_c / n_c) / (tf / n)`` computed as the shared
     two-step floor ``((tf_c * 1e6) div tf) * n div n_c`` so every
     intermediate stays inside signed-64 at any corpus size. Returns the
     top 10 terms per class by (lift desc, term asc) among terms with
@@ -697,7 +696,7 @@ def class_term_lift(docs: DataFrame, class_col: str) -> DataFrame:
     from pyspark.sql import Window
 
     toks = docs.select(
-        F.col(class_col).alias("cls"),
+        F.col("lang").alias("cls"),
         F.explode(
             F.filter(
                 F.split(F.lower(F.col("text")), " "),

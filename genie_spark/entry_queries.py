@@ -5789,7 +5789,7 @@ def length_outliers_q(spark, sf_dir):
     group size (datapipe/textstats.py length_outliers)."""
     from .datapipe.textstats import length_outliers
 
-    return length_outliers(_t(spark, sf_dir, "documents"), k_sigma2=2)
+    return length_outliers(_t(spark, sf_dir, "documents"))
 
 
 @_register(
@@ -5938,7 +5938,7 @@ def class_term_lift_q(spark, sf_dir):
     census (datapipe/textstats.py class_term_lift)."""
     from .datapipe.textstats import class_term_lift
 
-    return class_term_lift(_t(spark, sf_dir, "documents"), "lang")
+    return class_term_lift(_t(spark, sf_dir, "documents"))
 
 
 _NOVELTY_SQL = f"""

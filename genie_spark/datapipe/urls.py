@@ -43,12 +43,12 @@ def normalize_url_col(url: Column) -> Column:
     return F.concat(scheme, F.lit("://"), host, path, qpart)
 
 
-def normalize_url_sql(url_expr: str) -> str:
-    """DuckDB twin of :func:`normalize_url_col`."""
-    scheme = f"lower(regexp_extract({url_expr}, '{_SCHEME}', 1))"
-    host = f"lower(regexp_extract({url_expr}, '{_HOST}', 1))"
-    path = f"regexp_replace(regexp_extract({url_expr}, '{_PATH}', 1), '/$', '')"
-    query = f"regexp_extract({url_expr}, '\\?([^#]*)', 1)"
+def normalize_url_sql() -> str:
+    """DuckDB twin of :func:`normalize_url_col` over the ``url`` column."""
+    scheme = f"lower(regexp_extract(url, '{_SCHEME}', 1))"
+    host = f"lower(regexp_extract(url, '{_HOST}', 1))"
+    path = f"regexp_replace(regexp_extract(url, '{_PATH}', 1), '/$', '')"
+    query = "regexp_extract(url, '\\?([^#]*)', 1)"
     kept = (
         f"list_filter(string_split({query}, '&'),"
         f" p -> p <> '' AND NOT starts_with(p, 'utm_'))"

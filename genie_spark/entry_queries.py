@@ -2430,7 +2430,7 @@ def _url_dedup_oracle():
 
     return f"""
 WITH {_url_variants_sql()}
-SELECT {normalize_url_sql('url')} AS norm_url,
+SELECT {normalize_url_sql()} AS norm_url,
        min(vid)::BIGINT AS keep_id,
        count(*)::BIGINT AS n_dups
 FROM variants GROUP BY 1
@@ -2504,7 +2504,7 @@ def _url_latest_oracle():
 
     return f"""
 WITH {_url_variants_sql(with_ts=True)}
-SELECT {normalize_url_sql('url')} AS norm_url,
+SELECT {normalize_url_sql()} AS norm_url,
        max(struct_pack(t := ts, i := vid))['i']::BIGINT AS keep_id,
        count(*)::BIGINT AS n_dups
 FROM variants GROUP BY 1
@@ -2535,7 +2535,7 @@ def _cascade_oracle():
     return f"""
 WITH {_url_variants_sql(with_text=True)},
 kept AS (
-  SELECT {normalize_url_sql('url')} AS norm_url, min(vid) AS keep_id
+  SELECT {normalize_url_sql()} AS norm_url, min(vid) AS keep_id
   FROM variants GROUP BY 1
 ),
 docs2 AS (
@@ -2609,7 +2609,7 @@ def _cascade_cc_oracle():
     return f"""
 WITH RECURSIVE {_url_variants_sql(with_text=True)},
 kept AS (
-  SELECT {normalize_url_sql('url')} AS norm_url, min(vid) AS keep_id
+  SELECT {normalize_url_sql()} AS norm_url, min(vid) AS keep_id
   FROM variants GROUP BY 1
 ),
 docs2 AS (
@@ -3149,7 +3149,7 @@ def _curation_report_oracle():
     return f"""
 WITH {_url_variants_sql(with_text=True)},
 kept AS (
-  SELECT {normalize_url_sql('url')} AS norm_url, min(vid) AS keep_id
+  SELECT {normalize_url_sql()} AS norm_url, min(vid) AS keep_id
   FROM variants GROUP BY 1
 ),
 s1 AS (SELECT v.vid, v.text FROM variants v JOIN kept k ON v.vid = k.keep_id),

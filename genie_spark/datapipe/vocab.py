@@ -58,6 +58,11 @@ def _spaced_chars(word) -> "F.Column":
     return F.concat(F.lit(" "), F.regexp_replace(word, "(.)", "$1 "))
 
 
+# The registry's merge count: the SQL twins are built at it, and the Spark
+# entries pass it to bpe_learn_merges / bpe_encode_stats.
+BPE_MERGES = 6
+
+
 def _apply_merge(seq, l, r):
     """Two-pass leftmost-nonoverlapping replace of `` l r `` -> `` lr ``
     (Column form; all args Columns)."""
@@ -122,11 +127,13 @@ def bpe_learn_merges(docs: DataFrame, merges: int = 6) -> DataFrame:
     return merge_rows
 
 
-def bpe_sql_chain(merges: int = 6) -> str:
-    """DuckDB twin of :func:`bpe_learn_merges` over ``documents``: emits
-    ``bwf/bsq0/../bsq{merges}`` + per-round ``bpc{i}/btp{i}`` CTEs and a
-    final ``bmerges`` with the merge-table rows. All MATERIALIZED (each
-    round references the previous sequence table several times)."""
+def bpe_sql_chain() -> str:
+    """DuckDB twin of :func:`bpe_learn_merges` over ``documents`` at
+    ``BPE_MERGES``: emits ``bwf/bsq0/../bsq{merges}`` + per-round
+    ``bpc{i}/btp{i}`` CTEs and a final ``bmerges`` with the merge-table
+    rows. All MATERIALIZED (each round references the previous sequence
+    table several times)."""
+    merges = BPE_MERGES
     parts = [
         """bwf AS MATERIALIZED (
   SELECT word, count(*)::BIGINT AS cnt FROM (
@@ -239,10 +246,11 @@ def bpe_encode_stats(
     )
 
 
-def bpe_encode_sql(merges: int = 6) -> str:
-    """DuckDB twin of :func:`bpe_encode_stats` over ``documents``,
-    composing on the ``btp{i}`` merge CTEs of :func:`bpe_sql_chain`:
-    emits ``benc0..benc{merges}/bstat``."""
+def bpe_encode_sql() -> str:
+    """DuckDB twin of :func:`bpe_encode_stats` over ``documents`` at
+    ``BPE_MERGES``, composing on the ``btp{i}`` merge CTEs of
+    :func:`bpe_sql_chain`: emits ``benc0..benc{merges}/bstat``."""
+    merges = BPE_MERGES
     parts = [
         """benc0 AS MATERIALIZED (
   SELECT ' ' || regexp_replace(replace(lower(text), ' ', ' | '),

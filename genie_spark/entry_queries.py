@@ -5501,14 +5501,11 @@ def collocations_q(spark, sf_dir):
 
 # -- Tokenizer vocabulary induction (distributed BPE) ------------------------
 
-_BPE_MERGES = 6
-
-
 def _bpe_sql() -> str:
     from .datapipe.vocab import bpe_sql_chain
 
     return f"""
-WITH {bpe_sql_chain(_BPE_MERGES)}
+WITH {bpe_sql_chain()}
 SELECT step, "left", "right", merged, pair_cnt FROM bmerges
 """
 
@@ -5522,11 +5519,9 @@ def bpe_merges_q(spark, sf_dir):
     the merge application — no driver loop over data, no collect; the
     merge table (step, left, right, merged, pair_cnt) is the artifact
     a tokenizer ships (datapipe/vocab.py bpe_learn_merges)."""
-    from .datapipe.vocab import bpe_learn_merges
+    from .datapipe.vocab import BPE_MERGES, bpe_learn_merges
 
-    return bpe_learn_merges(
-        _t(spark, sf_dir, "documents"), merges=_BPE_MERGES
-    )
+    return bpe_learn_merges(_t(spark, sf_dir, "documents"), merges=BPE_MERGES)
 
 
 ORACLES["bpe_merges"] = _bpe_sql()
@@ -5536,8 +5531,8 @@ def _bpe_encode_sql() -> str:
     from .datapipe.vocab import bpe_encode_sql, bpe_sql_chain
 
     return f"""
-WITH {bpe_sql_chain(_BPE_MERGES)},
-{bpe_encode_sql(_BPE_MERGES)}
+WITH {bpe_sql_chain()},
+{bpe_encode_sql()}
 SELECT n_docs, n_symbols_before, n_symbols_after,
        ((n_symbols_after * 1000000) // n_symbols_before)::BIGINT
          AS compression_ppm
@@ -5553,11 +5548,11 @@ def bpe_encode_stats_q(spark, sf_dir):
     ppm, one row. The train→apply composition is the full tokenizer
     lifecycle as distributed plans (datapipe/vocab.py
     bpe_encode_stats)."""
-    from .datapipe.vocab import bpe_encode_stats, bpe_learn_merges
+    from .datapipe.vocab import BPE_MERGES, bpe_encode_stats, bpe_learn_merges
 
     docs = _t(spark, sf_dir, "documents")
-    mt = bpe_learn_merges(docs, merges=_BPE_MERGES)
-    return bpe_encode_stats(docs, mt, merges=_BPE_MERGES)
+    mt = bpe_learn_merges(docs, merges=BPE_MERGES)
+    return bpe_encode_stats(docs, mt, merges=BPE_MERGES)
 
 
 ORACLES["bpe_encode_stats"] = _bpe_encode_sql()

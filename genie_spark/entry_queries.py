@@ -2732,24 +2732,25 @@ def redact_contacts_q(spark, sf_dir):
     )
 
 
-def _grams_sql(k: int) -> str:
-    """DuckDB expression: distinct word ``k``-grams of list column ``w``
-    with the whole-text fallback for short docs — the twin of
-    ``dedup.shingles_col(text, k)``."""
+_DECONTAM_N = 8
+
+
+def _grams_sql() -> str:
+    """DuckDB expression: distinct word ``_DECONTAM_N``-grams of list
+    column ``w`` with the whole-text fallback for short docs — the twin of
+    ``dedup.shingles_col(text, _DECONTAM_N)``."""
+    k = _DECONTAM_N
     return (
         f"CASE WHEN len(w) >= {k} THEN list_distinct(list_transform("
         f"range(1, len(w) - {k - 2}), i -> array_to_string("
         f"list_slice(w, i, i + {k - 1}), ' ')))"
         f" ELSE [array_to_string(w, ' ')] END"
     )
-
-
-_DECONTAM_N = 8
 _DECONTAM_ORACLE = f"""
 WITH tw AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-tg AS (SELECT doc_id, unnest({_grams_sql(_DECONTAM_N)}) AS gram FROM tw),
+tg AS (SELECT doc_id, unnest({_grams_sql()}) AS gram FROM tw),
 ev AS (SELECT list_slice(w, 1, 12) AS w FROM tw WHERE doc_id % 37 = 0),
-eg AS (SELECT DISTINCT unnest({_grams_sql(_DECONTAM_N)}) AS gram FROM ev)
+eg AS (SELECT DISTINCT unnest({_grams_sql()}) AS gram FROM ev)
 SELECT tg.doc_id::BIGINT AS doc_id,
        count(DISTINCT tg.gram)::BIGINT AS n_hit_grams
 FROM tg JOIN eg USING (gram) GROUP BY 1
@@ -5207,9 +5208,9 @@ def _bloom_decontaminate_sql() -> str:
 
     return f"""
 WITH tw AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-cg AS (SELECT DISTINCT unnest({_grams_sql(_DECONTAM_N)}) AS gram FROM tw),
+cg AS (SELECT DISTINCT unnest({_grams_sql()}) AS gram FROM tw),
 ev AS (SELECT list_slice(w, 1, 12) AS w FROM tw WHERE doc_id % 37 = 0),
-eg AS (SELECT DISTINCT unnest({_grams_sql(_DECONTAM_N)}) AS gram FROM ev),
+eg AS (SELECT DISTINCT unnest({_grams_sql()}) AS gram FROM ev),
 {bloom_sql_chain()},
 {bloom_probe_sql()},
 tot AS (SELECT count(*)::BIGINT AS n_probe_grams FROM cg),

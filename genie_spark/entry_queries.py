@@ -17,7 +17,7 @@ from __future__ import annotations
 import os
 from typing import Callable, Dict
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .canonicalize import ASOF_EPOCH
@@ -57,6 +57,19 @@ _TRIPLES_SQL = f"""
   prd AS (SELECT DISTINCT l_orderkey, l_returnflag, l_partkey FROM lineitem
           WHERE l_quantity > {_QTY})
 """
+
+
+def _target_sro(spark: SparkSession, sf_dir: str, *extra: Column) -> DataFrame:
+    """The Spark side of ``_TRIPLES_SQL``'s ``trg``: lineitem shipped
+    before ``_CUT`` as ``(s, r, o)`` = (l_orderkey, l_returnflag,
+    l_partkey), then the ``extra`` columns. Not deduplicated."""
+    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") < _CUT)
+    return li.select(
+        F.col("l_orderkey").alias("s"),
+        F.col("l_returnflag").alias("r"),
+        F.col("l_partkey").alias("o"),
+        *extra,
+    )
 
 
 def _pred_target_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3746,13 +3759,7 @@ def kg_fact_intervals_q(spark, sf_dir):
     latest-wins fusion discards."""
     from .canonicalize import fact_intervals
 
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") < _CUT)
-    assertions = li.select(
-        F.col("l_orderkey").alias("s"),
-        F.col("l_returnflag").alias("r"),
-        F.col("l_partkey").alias("o"),
-        F.col("l_shipdate").alias("ts"),
-    )
+    assertions = _target_sro(spark, sf_dir, F.col("l_shipdate").alias("ts"))
     out = fact_intervals(assertions)
     return out.select(
         F.col("s").cast("bigint").alias("s"), "r",
@@ -3804,14 +3811,8 @@ def kg_asof_snapshot_q(spark, sf_dir):
     (canonicalize.asof_snapshot)."""
     from .canonicalize import asof_snapshot, fact_intervals
 
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") < _CUT)
     iv = fact_intervals(
-        li.select(
-            F.col("l_orderkey").alias("s"),
-            F.col("l_returnflag").alias("r"),
-            F.col("l_partkey").alias("o"),
-            F.col("l_shipdate").alias("ts"),
-        )
+        _target_sro(spark, sf_dir, F.col("l_shipdate").alias("ts"))
     )
     out = asof_snapshot(iv)
     return out.select(
@@ -3851,13 +3852,7 @@ def kg_fuse_latest_q(spark, sf_dir):
     epoch seconds (bigint) for cross-engine value identity."""
     from .canonicalize import fuse_latest
 
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") < _CUT)
-    assertions = li.select(
-        F.col("l_orderkey").alias("s"),
-        F.col("l_returnflag").alias("r"),
-        F.col("l_partkey").alias("o"),
-        F.col("l_shipdate").alias("ts"),
-    )
+    assertions = _target_sro(spark, sf_dir, F.col("l_shipdate").alias("ts"))
     out = fuse_latest(assertions)
     return out.select(
         F.col("s").cast("bigint").alias("s"),
@@ -3957,16 +3952,7 @@ def kg_negative_samples_q(spark, sf_dir):
     the draw is h60-deterministic (rerun- and partition-stable)."""
     from .datapipe.graph import negative_samples
 
-    li = _t(spark, sf_dir, "lineitem")
-    trg = (
-        li.filter(F.col("l_shipdate") < _CUT)
-        .select(
-            F.col("l_orderkey").alias("s"),
-            F.col("l_returnflag").alias("r"),
-            F.col("l_partkey").alias("o"),
-        )
-        .distinct()
-    )
+    trg = _target_sro(spark, sf_dir).distinct()
     out = negative_samples(trg, k=_NEG_K)
     return out.select(
         F.col("s").cast("bigint").alias("s"),
@@ -3996,16 +3982,7 @@ def kg_relation_profile_q(spark, sf_dir):
     ingredient) — one partial-aggregatable groupBy on relation."""
     from .datapipe.graph import relation_profile
 
-    li = _t(spark, sf_dir, "lineitem")
-    trg = (
-        li.filter(F.col("l_shipdate") < _CUT)
-        .select(
-            F.col("l_orderkey").alias("s"),
-            F.col("l_returnflag").alias("r"),
-            F.col("l_partkey").alias("o"),
-        )
-        .distinct()
-    )
+    trg = _target_sro(spark, sf_dir).distinct()
     return relation_profile(trg)
 
 
@@ -4187,13 +4164,7 @@ def kg_fuse_vote_q(spark, sf_dir):
     distinct object, never the fact table."""
     from .canonicalize import fuse_vote
 
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") < _CUT)
-    assertions = li.select(
-        F.col("l_orderkey").alias("s"),
-        F.col("l_returnflag").alias("r"),
-        F.col("l_partkey").alias("o"),
-    )
-    out = fuse_vote(assertions)
+    out = fuse_vote(_target_sro(spark, sf_dir))
     return out.select(
         F.col("s").cast("bigint").alias("s"),
         "r",
@@ -4674,13 +4645,7 @@ def kg_constraint_violations_q(spark, sf_dir):
     violation-sized output."""
     from .datapipe.graph import constraint_violations
 
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") < _CUT)
-    triples = li.select(
-        F.col("l_orderkey").alias("s"),
-        F.col("l_returnflag").alias("r"),
-        F.col("l_partkey").alias("o"),
-    )
-    out = constraint_violations(triples, ["N", "R"])
+    out = constraint_violations(_target_sro(spark, sf_dir), ["N", "R"])
     return out.select(
         F.col("s").cast("bigint").alias("s"),
         "r",
@@ -4767,11 +4732,9 @@ def kg_evidence_q(spark, sf_dir):
     combines."""
     from .canonicalize import triple_evidence
 
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") < _CUT)
-    assertions = li.select(
-        F.col("l_orderkey").alias("s"),
-        F.col("l_returnflag").alias("r"),
-        F.col("l_partkey").alias("o"),
+    assertions = _target_sro(
+        spark,
+        sf_dir,
         F.col("l_shipdate").alias("ts"),
         F.concat(F.lit("sup_"), F.col("l_suppkey").cast("string")).alias("src"),
     )
@@ -4818,14 +4781,9 @@ def kg_fuse_weighted_q(spark, sf_dir):
     distinct object."""
     from .canonicalize import fuse_weighted
 
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") < _CUT)
-    assertions = li.select(
-        F.col("l_orderkey").alias("s"),
-        F.col("l_returnflag").alias("r"),
-        F.col("l_partkey").alias("o"),
-        F.col("l_quantity").cast("long").alias("w"),
+    out = fuse_weighted(
+        _target_sro(spark, sf_dir, F.col("l_quantity").cast("long").alias("w"))
     )
-    out = fuse_weighted(assertions)
     return out.select(
         F.col("s").cast("bigint").alias("s"),
         "r",

@@ -377,10 +377,11 @@ def _salted_cosine_pairs(
     **carry: Column,
 ) -> DataFrame:
     """The blocked self-join behind every embedding pair operator: pairs
-    of ``vec_id`` values ``id_a < id_b`` sharing a ``block`` value whose EXACT cosine reaches
-    ``threshold`` (the DuckDB twins compare the same unrounded value; only
-    the reported cosine is rounded to 6dp). Returns ``(id_a, id_b,
-    <name>_a, <name>_b for each carry column, cosine)``.
+    of ``vec_id`` values ``id_a < id_b`` sharing a ``block`` value whose
+    EXACT ``embedding`` cosine reaches ``threshold`` (the DuckDB twins
+    compare the same unrounded value; only the reported cosine is rounded
+    to 6dp). Returns ``(id_a, id_b, <name>_a, <name>_b for each carry
+    column, cosine)``.
 
     ``salt`` splits each block's pair generation across salt×|blocks|
     join keys (standard salting: a-side keyed by a deterministic id

@@ -55,9 +55,9 @@ BLOOM_BITS, BLOOM_K = 1 << 16, 5
 
 def minhash_distinct_sketch(items: DataFrame, buckets: int = 256) -> DataFrame:
     """The sketch itself: ``(bucket, vmin)`` — per-bucket minimum of the
-    bucket-stripped hash of the ``t`` column. ``buckets`` must be a power of two (bucket =
-    low bits, value = high bits, so value stays uniform on
-    ``[0, 2^60/buckets)``).
+    bucket-stripped hash of the ``t`` column. ``buckets`` must be a power
+    of two (bucket = low bits, value = high bits, so value stays uniform
+    on ``[0, 2^60/buckets)``).
 
     Scale shape: one partial-aggregated groupBy (min combines map-side)
     from N rows to ``buckets`` rows — the distinct-count answer without
@@ -126,7 +126,7 @@ def distinct_sketch_sql() -> str:
     ``dsk_e``."""
     buckets = DSK_BUCKETS
     shift = buckets.bit_length() - 1
-    extra, rp, m2r = _dsk_params(buckets)
+    extra, rp, _ = _dsk_params(buckets)
     h = h60_sql("t")
     return f"""dsk_h AS (SELECT {h} AS h FROM tk),
 dsk_b AS (SELECT h & {buckets - 1} AS bucket, min(h >> {shift}) AS vmin
@@ -147,10 +147,10 @@ def cms_sketch(
     items: DataFrame, depth: int = 4, width: int = 1024
 ) -> DataFrame:
     """Count-min sketch of the ``t`` column's item frequencies:
-    ``(j, b, cnt)`` cells,
-    ``depth x width`` rows total. Row ``j`` hashes each item to bucket
-    ``affine_mix(h60(item), j) mod width`` — one md5 per item, then
-    pure-arithmetic derived hashes per row (the MinHash-family trick).
+    ``(j, b, cnt)`` cells, ``depth x width`` rows total. Row ``j`` hashes
+    each item to bucket ``affine_mix(h60(item), j) mod width`` — one md5
+    per item, then pure-arithmetic derived hashes per row (the
+    MinHash-family trick).
 
     Scale shape: one row-local explode to ``depth`` cells per item,
     then ONE partial-aggregated groupBy to ``depth*width`` rows — the

@@ -1,10 +1,10 @@
-"""Every defaulted parameter of a ``genie_spark`` function, constructor or
-method must be passed by some call site in the repo, with a value other
-than its default.
+"""Every parameter of a ``genie_spark`` function, constructor or method
+must take two different values among its call sites, and every defaulted
+one must be passed a value other than its default.
 
-A default that no caller overrides is a constant wearing an option's
-clothes: it is a configuration no test, oracle or benchmark has ever run.
-The census here is pure ``ast`` (no Spark):
+A parameter every caller sets to the same value is a constant wearing an
+option's clothes: the other values are configurations no test, oracle or
+benchmark has ever run. The census here is pure ``ast`` (no Spark):
 
 * the definitions are the top-level ``def``s of every ``genie_spark``
   module, the ``__init__`` of every top-level class (matched by the class
@@ -12,24 +12,41 @@ The census here is pure ``ast`` (no Spark):
   name, ``x.m(...)``); a method's leading ``self``/``cls`` is not a
   parameter;
 * a call matches a function or class by its last name (``f(...)`` or
-  ``m.f(...)``), and its positional arguments map onto the parameters in
-  order;
-* an argument whose ``ast`` equals the parameter's default (the same
-  literal, the same constant name) does not pass it;
-* a call with ``*args`` or ``**kwargs`` counts as passing every parameter;
+  ``m.f(...)``); its positional arguments map onto the parameters in
+  order, its keywords by name, and a parameter it leaves out takes its
+  default;
+* a ``*args`` at position i may carry every positional parameter from i
+  on, a ``**kwargs`` every parameter no explicit argument binds: such a
+  parameter's value at that call is unknown;
 * call sites are every ``.py`` file of the repo (library, scripts,
-  ``perfbench/``, ``tests/``, ``examples/``).
+  ``perfbench/``, ``tests/``, ``examples/``); tests count as callers.
 
-Matching by name only ever adds callers: a collision such as
-``F.transform`` can mark a parameter as passed, never invent a finding.
+Two rules read that census:
+
+* ``test_every_parameter_takes_two_values``: a parameter is one-valued
+  when every call site gives it the same constant — a literal (what
+  ``ast.literal_eval`` accepts, negated numbers included) or a module
+  constant name such as ``SIMHASH_BITS`` — compared by ``ast``;
+* ``test_every_defaulted_parameter_is_passed``: a defaulted parameter is
+  unset when every call site gives it its default's ``ast`` (an argument
+  spelling out the default does not set the option).
+
+Matching by name only adds call sites, so a collision such as
+``F.transform`` can hide a finding, never invent one for a definition
+that has real callers.
 
 Deployment settings (table names, paths, URIs, write modes) are kept as
-options on purpose: they are listed in ``EXEMPT`` with their reason, as
-are the parameters only the frozen benchmark harness sets.
+options on purpose: they are listed in ``EXEMPT`` and ``ONE_VALUE_EXEMPT``
+with their reason, as are the parameters only the frozen benchmark
+harness sets.
 
-A second ``ast`` check asks the same of whole modules: every ``genie_spark``
-module must be imported by some non-test file, or be listed in
-``UNREACHED_EXEMPT`` with its reason.
+Two more ``ast`` checks: every ``genie_spark`` module must be imported by
+some non-test file, or be listed in ``UNREACHED_EXEMPT`` with its reason;
+and every name a ``genie_spark`` module imports must be read
+(``test_every_import_is_used``).
+
+``python3 tests/test_options.py`` prints both parameter censuses per
+module (unset/exempt and one-valued/exempt) and the unused imports.
 """
 from __future__ import annotations
 

@@ -51,10 +51,9 @@ def stratified_sample(
     default_fraction: float = 0.0,
 ) -> DataFrame:
     """Per-language sampling rates: ``fractions[lang]`` of each ``lang``
-    stratum survives, unlisted strata get
-    ``default_fraction``. One row-local CASE over the hash-uniform — the
-    idiomatic replacement for ``sampleBy`` (whose output depends on
-    partition layout)."""
+    stratum survives, unlisted strata get ``default_fraction``. One
+    row-local CASE over the hash-uniform — the idiomatic replacement for
+    ``sampleBy`` (whose output depends on partition layout)."""
     frac = F.lit(float(default_fraction))
     for k, v in sorted(fractions.items()):
         frac = F.when(F.col("lang") == k, F.lit(float(v))).otherwise(frac)
@@ -195,8 +194,8 @@ def group_cap(df: DataFrame) -> DataFrame:
     rank shuffle keys on the group — a skewed mega-domain bounds at its
     own row count and is then cut to 50. For quantile-grade skew,
     pre-filter with an approximate per-group count and
-    :func:`stratified_sample` first; the exact window pass then runs on the bounded survivor
-    set."""
+    :func:`stratified_sample` first; the exact window pass then runs on
+    the bounded survivor set."""
     from pyspark.sql import Window
 
     key = h60_salted(F.col("doc_id").cast("string"), F.lit("cap"))

@@ -217,11 +217,13 @@ _CONSTANT_NAME = re.compile(r"_?[A-Z][A-Z0-9_]*")
 def _constant(expr: ast.expr | None) -> bool:
     """A literal (``ast.literal_eval`` accepts it: numbers, negated numbers,
     strings, ``None``, containers of those) or a module constant name."""
+    if expr is None:
+        return False
     if isinstance(expr, ast.Name):
         return bool(_CONSTANT_NAME.fullmatch(expr.id))
     try:
         ast.literal_eval(expr)
-    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+    except (ValueError, TypeError):
         return False
     return True
 

@@ -10,6 +10,15 @@ Python loops with the metric aggregations from :mod:`genie_spark.metrics`.
 The per-dataset configuration shapes of configs/evaluation/results_full.yaml
 map directly: ``num_bootstrap_samples`` is the evaluator field; the
 recall-only FewRel block (:76-80) is ``metrics.micro_metrics(recall_only=True)``.
+
+Every score comes from one counts aggregation
+(``metrics._eval_counts``: per-relation rows plus one micro marker row),
+so an unbootstrapped :func:`evaluate_dataset` is ONE action — micro and
+target-relation macro read from the single row of
+:func:`metrics.micro_macro_metrics` — and its input (in a pipeline: the
+extracted-output scan, its groupBy and the join with the gold pages) is
+executed once, not once per metric. The bootstrapped micro path keeps
+its own action.
 """
 
 from __future__ import annotations
@@ -22,6 +31,7 @@ from .kilt import filter_triples_on_relations
 from .metrics import (
     bootstrap_micro_multinomial,
     macro_metrics,
+    micro_macro_metrics,
     micro_metrics,
     per_relation_metrics,
 )
@@ -74,8 +84,15 @@ def evaluate_dataset(
     num_bootstrap_samples: Optional[int] = None,
 ) -> Dict[str, object]:
     """One results_full.yaml dataset block: micro (optionally
-    bootstrapped) + macro, keyed like the reference's evaluator names."""
-    out: Dict[str, object] = {}
-    out["micro"] = evaluate_micro(df, num_bootstrap_samples=num_bootstrap_samples)
-    out["macro"], _ = evaluate_macro(df)
-    return out
+    bootstrapped) + macro, keyed like the reference's evaluator names.
+    Unbootstrapped, both come from one action over ``df``."""
+    if num_bootstrap_samples is None:
+        row = micro_macro_metrics(df, target_relations_only=True).first()
+        return {
+            "micro": {m: float(row[m]) for m in _METRICS},
+            "macro": {m: float(row[f"macro_{m}"]) for m in _METRICS},
+        }
+    return {
+        "micro": evaluate_micro(df, num_bootstrap_samples=num_bootstrap_samples),
+        "macro": evaluate_macro(df)[0],
+    }

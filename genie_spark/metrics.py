@@ -24,18 +24,25 @@ from .datapipe.hashes import affine_mix, h60
 from .triples import triple_key_col
 
 
-
 def _counts(df: DataFrame) -> DataFrame:
     """Per-sample n_correct / n_pred / n_target (reference
-    triplet_set_f1.py:14-20). Set semantics via array_distinct +
-    array_intersect on flat s␞r␞o string keys: string element type takes
-    Spark's fast hash-set intersect path, while struct elements fall back
-    to interpreted ordering (~2× slower measured at sf0.1)."""
-    p = F.array_distinct(triple_key_col(F.col("pred")))
-    t = F.array_distinct(triple_key_col(F.col("target")))
-    return df.withColumn("n_correct", F.size(F.array_intersect(p, t))).withColumn(
-        "n_pred", F.size(p)
-    ).withColumn("n_target", F.size(t))
+    triplet_set_f1.py:14-20), the form the bootstrap resamples. Set
+    semantics via array_distinct + array_intersect on flat s␞r␞o string
+    keys: string element type takes Spark's fast hash-set intersect path,
+    while struct elements fall back to interpreted ordering (~2× slower
+    measured at sf0.1)."""
+    n_correct, n_pred, n_target = _key_set_counts(F.col("pred"), F.col("target"))
+    return df.withColumn("n_correct", n_correct).withColumn(
+        "n_pred", n_pred
+    ).withColumn("n_target", n_target)
+
+
+def _key_set_counts(pred: Column, target: Column):
+    """(n_correct, n_pred, n_target) of one sample over its distinct
+    triple keys."""
+    p = F.array_distinct(triple_key_col(pred))
+    t = F.array_distinct(triple_key_col(target))
+    return F.size(F.array_intersect(p, t)), F.size(p), F.size(t)
 
 
 def _prf(correct: Column, pred: Column, target: Column):
@@ -50,81 +57,139 @@ def _prf(correct: Column, pred: Column, target: Column):
     return precision, recall, f1
 
 
-def micro_metrics(df: DataFrame, recall_only: bool = False) -> DataFrame:
-    """A1 — global micro precision / recall / F1: one row
-    (precision, recall, f1, n_correct, n_pred, n_target).
-
-    ``recall_only`` is the FewRel evaluation mode (reference
-    configs/evaluation/results_full.yaml:76-80): FewRel annotates exactly
-    one gold triple per sample, so extra predicted facts cannot be judged
-    — precision and F1 are suppressed and only (recall, n_correct,
-    n_target) is reported."""
-    agg = _counts(df).agg(
-        F.sum("n_correct").alias("n_correct"),
-        F.sum("n_pred").alias("n_pred"),
-        F.sum("n_target").alias("n_target"),
-    )
-    p, r, f1 = _prf(F.col("n_correct"), F.col("n_pred"), F.col("n_target"))
-    if recall_only:
-        return agg.select(r.alias("recall"), "n_correct", "n_target")
-    return agg.select(
-        p.alias("precision"), r.alias("recall"), f1.alias("f1"),
-        "n_correct", "n_pred", "n_target",
-    )
+_COUNT_COLS = ("n_correct", "n_pred", "n_target")
 
 
-def _per_relation_counts(df: DataFrame) -> DataFrame:
-    """Per-relation micro counts: restrict both sets to each relation that
-    appears in either side of a sample, then count (reference
-    MacroMetricsEvaluator, evaluators.py:65-147).
+def _eval_counts(df: DataFrame) -> DataFrame:
+    """The one counts aggregation every triple-set metric reads:
+    (is_micro, rel, n_correct, n_pred, n_target).
+
+    * ``is_micro = false``: one row per relation appearing on either side
+      of some sample — the per-relation micro counts (reference
+      MacroMetricsEvaluator, evaluators.py:65-147).
+    * ``is_micro = true``, ``rel`` NULL: one row, the micro counts
+      summed from one marker per sample carrying that sample's key-set
+      counts (:func:`_key_set_counts`, reference triplet_set_f1.py:14-20).
+
+    The key is ``(is_micro, rel)`` because a relation can itself be NULL.
+    The micro counts ride as their own marker instead of being summed
+    from the per-relation rows, because the two set semantics differ
+    where keys collide: two structs whose fields contain the ␞ separator
+    can share one ``s␞r␞o`` key (one micro triple, two per-relation ones).
 
     Shape: per row, emit one (rel, is_correct, is_pred, is_target)
-    contribution per triple occurrence — the row-local intersect does the
-    set logic, then a SINGLE explode + groupBy(rel) aggregates. Map-side
-    partial agg means the shuffle carries |distinct rels| × partitions
-    counter rows, independent of data size. (An earlier form re-filtered
-    both arrays per candidate relation — O(rels × |arrays|) interpreted
-    HOF work per row, ~15× slower at sf0.1.) The intersect runs on flat
-    string keys (fast path, see _counts). All THREE contributions derive
-    rel from the struct field itself — the intersection is the pred
-    structs whose key appears in the target keys, so a rel recovered by
-    re-splitting the joined key (which disagrees with x['r'] when a field
-    contains the separator or is NULL) can never split one relation's
-    counts across groups."""
+    contribution per triple occurrence plus the marker — the row-local
+    intersect does the set logic, then a SINGLE explode + groupBy
+    aggregates. Map-side partial agg means the shuffle carries
+    (|distinct rels| + 1) × partitions counter rows, independent of data
+    size. (An earlier form re-filtered both arrays per candidate
+    relation — O(rels × |arrays|) interpreted HOF work per row, ~15×
+    slower at sf0.1.) The intersect runs on flat string keys (fast path,
+    see _counts). All THREE per-relation contributions derive rel from
+    the struct field itself — the intersection is the pred structs whose
+    key appears in the target keys, so a rel recovered by re-splitting
+    the joined key (which disagrees with x['r'] when a field contains the
+    separator or is NULL) can never split one relation's counts across
+    groups. A sample whose ``pred`` or ``target`` is NULL rather than an
+    empty array emits nothing."""
     p = F.array_distinct(F.col("pred"))
     t = F.array_distinct(F.col("target"))
     t_keys = triple_key_col(t)
     one_key = lambda x: F.element_at(triple_key_col(F.array(x)), 1)
     both = F.filter(p, lambda x: F.array_contains(t_keys, one_key(x)))
 
-    def tagged(rel_col):
-        def make(c, np_, nt):
-            return F.struct(
-                rel_col.alias("rel"),
-                F.lit(c).alias("c"),
-                F.lit(np_).alias("np"),
-                F.lit(nt).alias("nt"),
-            )
-        return make
+    def tagged(is_micro, rel, c, np_, nt):
+        # F.lit passes a Column through: the marker's counts are Columns
+        return F.struct(
+            F.lit(is_micro).alias("is_micro"),
+            rel.alias("rel"),
+            F.lit(c).alias("c"),
+            F.lit(np_).alias("np"),
+            F.lit(nt).alias("nt"),
+        )
 
     # the intersect + triple-key HOFs below are interpreted and
     # compute-bound; spread the (byte-light, AQE-coalesced) eval frame to
     # the core count so the per-row set logic parallelizes
     df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    marker = tagged(
+        True,
+        F.lit(None).cast("string"),
+        *_key_set_counts(F.col("pred"), F.col("target")),
+    )
     contrib = df.select(
         F.explode(
             F.concat(
-                F.transform(both, lambda x: tagged(x["r"])(1, 0, 0)),
-                F.transform(p, lambda x: tagged(x["r"])(0, 1, 0)),
-                F.transform(t, lambda x: tagged(x["r"])(0, 0, 1)),
+                F.array(marker),
+                F.transform(both, lambda x: tagged(False, x["r"], 1, 0, 0)),
+                F.transform(p, lambda x: tagged(False, x["r"], 0, 1, 0)),
+                F.transform(t, lambda x: tagged(False, x["r"], 0, 0, 1)),
             )
         ).alias("e")
     )
-    return contrib.groupBy(F.col("e.rel").alias("rel")).agg(
+    return contrib.groupBy(
+        F.col("e.is_micro").alias("is_micro"), F.col("e.rel").alias("rel")
+    ).agg(
         F.sum("e.c").alias("n_correct"),
         F.sum("e.np").alias("n_pred"),
         F.sum("e.nt").alias("n_target"),
     )
+
+
+def _per_relation_counts(df: DataFrame) -> DataFrame:
+    """Per-relation micro counts (rel, n_correct, n_pred, n_target): the
+    ``is_micro = false`` rows of :func:`_eval_counts`."""
+    return _eval_counts(df).filter(~F.col("is_micro")).drop("is_micro")
+
+
+def micro_macro_metrics(df: DataFrame, target_relations_only: bool) -> DataFrame:
+    """Micro and macro scores in ONE aggregation over
+    :func:`_eval_counts`: one row (precision, recall, f1, n_correct,
+    n_pred, n_target, macro_precision, macro_recall, macro_f1,
+    n_relations). :func:`micro_metrics` and :func:`macro_metrics` are
+    selects over this row, and ``evaluation.evaluate_dataset`` reads
+    both halves from one action.
+
+    The micro half sums the marker row; the macro half averages the
+    per-relation scores over the averaging set — relations with ≥1
+    TARGET occurrence when ``target_relations_only`` (reference
+    MacroMetricsEvaluator, evaluators.py:84-87: all_relations =
+    unq_target_rels, so a hallucinated pred-only relation does not add a
+    zero-F1 group to the mean), else relations appearing on either side
+    (stricter, and the semantics the round-1 oracles pinned)."""
+    is_micro = F.col("is_micro")
+    averaged = ~is_micro
+    if target_relations_only:
+        averaged = averaged & (F.col("n_target") > 0)
+    p, r, f1 = _prf(F.col("n_correct"), F.col("n_pred"), F.col("n_target"))
+    tot = _eval_counts(df).agg(
+        *[F.sum(F.when(is_micro, F.col(c))).alias(c) for c in _COUNT_COLS],
+        F.avg(F.when(averaged, p)).alias("macro_precision"),
+        F.avg(F.when(averaged, r)).alias("macro_recall"),
+        F.avg(F.when(averaged, f1)).alias("macro_f1"),
+        F.count(F.when(averaged, F.lit(1))).alias("n_relations"),
+    )
+    p, r, f1 = _prf(F.col("n_correct"), F.col("n_pred"), F.col("n_target"))
+    return tot.select(
+        p.alias("precision"), r.alias("recall"), f1.alias("f1"), *_COUNT_COLS,
+        "macro_precision", "macro_recall", "macro_f1", "n_relations",
+    )
+
+
+def micro_metrics(df: DataFrame, recall_only: bool = False) -> DataFrame:
+    """A1 — global micro precision / recall / F1: one row
+    (precision, recall, f1, n_correct, n_pred, n_target), selected from
+    :func:`micro_macro_metrics`.
+
+    ``recall_only`` is the FewRel evaluation mode (reference
+    configs/evaluation/results_full.yaml:76-80): FewRel annotates exactly
+    one gold triple per sample, so extra predicted facts cannot be judged
+    — precision and F1 are suppressed and only (recall, n_correct,
+    n_target) is reported."""
+    scores = micro_macro_metrics(df, target_relations_only=False)
+    if recall_only:
+        return scores.select("recall", "n_correct", "n_target")
+    return scores.select("precision", "recall", "f1", *_COUNT_COLS)
 
 
 def macro_metrics(
@@ -133,26 +198,14 @@ def macro_metrics(
 ) -> DataFrame:
     """A2 — per-relation micro scores + unweighted macro mean
     (evaluation.py:67-78). Returns one row: (macro_precision,
-    macro_recall, macro_f1, n_relations).
+    macro_recall, macro_f1, n_relations), selected from
+    :func:`micro_macro_metrics`.
 
-    ``target_relations_only`` selects the reference's averaging set —
-    MacroMetricsEvaluator restricts to relations with ≥1 TARGET
-    occurrence (evaluators.py:84-87: all_relations = unq_target_rels), so
-    a hallucinated pred-only relation does not add a zero-F1 group to the
-    mean. The default (False) averages over relations appearing on either
-    side — stricter, and the semantics the round-1 oracles pinned."""
-    per_rel = _per_relation_counts(df)
-    if target_relations_only:
-        per_rel = per_rel.filter(F.col("n_target") > 0)
-    p, r, f1 = _prf(F.col("n_correct"), F.col("n_pred"), F.col("n_target"))
-    scored = per_rel.select(
-        "rel", p.alias("precision"), r.alias("recall"), f1.alias("f1")
-    )
-    return scored.agg(
-        F.avg("precision").alias("macro_precision"),
-        F.avg("recall").alias("macro_recall"),
-        F.avg("f1").alias("macro_f1"),
-        F.count("*").alias("n_relations"),
+    ``target_relations_only`` selects the reference's averaging set (see
+    :func:`micro_macro_metrics`); the default (False) averages over
+    relations appearing on either side."""
+    return micro_macro_metrics(df, target_relations_only).select(
+        "macro_precision", "macro_recall", "macro_f1", "n_relations"
     )
 
 
@@ -162,7 +215,7 @@ def per_relation_metrics(df: DataFrame) -> DataFrame:
     p, r, f1 = _prf(F.col("n_correct"), F.col("n_pred"), F.col("n_target"))
     return per_rel.select(
         "rel", p.alias("precision"), r.alias("recall"), f1.alias("f1"),
-        "n_correct", "n_pred", "n_target",
+        *_COUNT_COLS,
     )
 
 

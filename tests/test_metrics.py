@@ -387,3 +387,104 @@ def test_calibration_bins_rejects_bad_bins():
 
     with _pytest.raises(ValueError, match="bins"):
         calibration_bins(None, bins=7)
+
+
+def _twin_scores(rows):
+    """Pure-Python micro (key-set) and target-relation macro (struct-set
+    per relation) scores of (id, pred, target) rows, the reference's
+    evaluator semantics."""
+    def key(t):
+        return "␞".join("␀" if f is None else f for f in t)
+
+    def prf(c, p, t):
+        pr = 0.0 if p == 0 else c / p
+        rc = 0.0 if t == 0 else c / t
+        return pr, rc, 0.0 if pr + rc == 0 else 2 * pr * rc / (pr + rc)
+
+    c = p = t = 0
+    rel = {}
+    for _, pred, target in rows:
+        pk, tk = {key(x) for x in pred}, {key(x) for x in target}
+        c, p, t = c + len(pk & tk), p + len(pk), t + len(tk)
+        ps, ts = set(pred), set(target)
+        tkeys = {key(x) for x in ts}
+        for x in ps:
+            n = rel.setdefault(x[1], [0, 0, 0])
+            n[0] += key(x) in tkeys
+            n[1] += 1
+        for x in ts:
+            rel.setdefault(x[1], [0, 0, 0])[2] += 1
+    scored = [prf(*n) for n in rel.values() if n[2] > 0]
+    macro = [sum(s[i] for s in scored) / len(scored) for i in range(3)]
+    return prf(c, p, t), macro
+
+
+def test_one_pass_evaluation_matches_each_metric(spark):
+    """evaluate_dataset's single aggregation gives exactly what
+    micro_metrics and macro_metrics(target_relations_only=True) give, and
+    both match the Python twin, on the edge cases where the micro key
+    set and the per-relation struct sets part: fields holding the ␞
+    separator (two structs, one key), NULL relations, duplicate triples,
+    empty preds and a pred-only relation."""
+    from genie_spark.evaluation import evaluate_dataset
+
+    rows = [
+        (1, [t("a␞b", "r1", "c"), t("a", "b␞r1", "c")], [t("a␞b", "r1", "c")]),
+        (2, [t("x", None, "y"), t("x", None, "y")], [t("x", None, "y"), t("u", "r2", "v")]),
+        (3, [], [t("p", "r2", "q"), t("p", "r2", "q")]),
+        (4, [t("m", "r3", "n")], []),
+        (5, [t("s", None, "o"), t("s", "r2", None)], [t("s", "r2", None)]),
+    ]
+    df = spark.createDataFrame(rows, SCHEMA)
+    got = evaluate_dataset(df)
+    micro = micro_metrics(df).first()
+    macro = macro_metrics(df, target_relations_only=True).first()
+    assert got["micro"] == {m: micro[m] for m in ("precision", "recall", "f1")}
+    assert got["macro"] == {m: macro[f"macro_{m}"] for m in ("precision", "recall", "f1")}
+    (mp, mr, mf), (ap, ar, af) = _twin_scores(rows)
+    assert (micro["precision"], micro["recall"], micro["f1"]) == pytest.approx((mp, mr, mf))
+    assert (macro["macro_precision"], macro["macro_recall"], macro["macro_f1"]) == pytest.approx(
+        (ap, ar, af)
+    )
+    # sample 1's collision makes the two semantics differ: one micro
+    # triple, two per-relation ones
+    assert (micro["n_correct"], micro["n_pred"], micro["n_target"]) == (3, 5, 5)
+    assert sum(r["n_pred"] for r in per_relation_metrics(df).collect()) == 6
+
+
+def test_evaluate_dataset_is_one_action(spark, tmp_path):
+    """An unbootstrapped evaluate_dataset over a pipeline-shaped input
+    (extracted-output scan, groupBy(url), join with the gold pages) runs
+    its input once: at most six jobs, where a micro action plus a macro
+    action ran ten."""
+    from genie_spark.evaluation import evaluate_dataset
+
+    tri = "array<struct<s:string,r:string,o:string>>"
+    spark.createDataFrame(
+        [(f"u{i % 7}", i % 4, [t(f"s{i}", f"r{i % 3}", "o")]) for i in range(40)],
+        f"url string, chunk int, pred_triples {tri}",
+    ).write.partitionBy("chunk").parquet(str(tmp_path / "extracted"))
+    spark.createDataFrame(
+        [(f"u{i}", "en", [t(f"s{i}", f"r{i % 3}", "o")]) for i in range(9)],
+        f"url string, lang string, gold {tri}",
+    ).write.parquet(str(tmp_path / "pages"))
+    extracted = spark.read.parquet(str(tmp_path / "extracted"))
+    pred = extracted.groupBy("url").agg(F.flatten(F.collect_list("pred_triples")).alias("pred"))
+    df = (
+        spark.read.parquet(str(tmp_path / "pages"))
+        .filter(F.col("lang") == "en")
+        .select("url", F.col("gold").alias("target"))
+        .join(pred, "url", "left")
+        .withColumn("pred", F.coalesce("pred", F.array().cast(tri)))
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("evaluate-dataset", "one evaluate_dataset")
+    try:
+        got = evaluate_dataset(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("evaluate-dataset")
+    assert len(jobs) <= 6, f"evaluate_dataset ran {len(jobs)} jobs"
+    assert got["micro"]["precision"] == micro_metrics(df).first()["precision"]
+

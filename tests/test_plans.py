@@ -86,8 +86,9 @@ def test_surface_to_id_broadcasts(spark):
 
 
 def test_micro_metrics_no_join_single_agg(spark):
-    """A1 is one partial+final aggregate over row-local intersections —
-    no join, no explode."""
+    """A1 is a select over the shared counts aggregation (row-local
+    intersections, one explode, one partial+final aggregate pair) and
+    joins nothing itself: the only join is the input's pred⨝target."""
     import genie_spark.entry_queries as eq
     from genie_spark.metrics import micro_metrics
 

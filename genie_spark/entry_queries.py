@@ -2172,17 +2172,17 @@ tot AS (SELECT sum(n)::BIGINT AS n,
         FROM cm)
 SELECT n, agree,
        ((agree * 1000000) // n)::BIGINT AS po_ppm,
-       (s // greatest((n * n) // 1000000, 1))::BIGINT AS pe_ppm,
-       ((agree * n - s) // greatest((n * n - s) // 1000000, 1))::BIGINT
+       ((s::HUGEINT * 1000000) // greatest(n * n, 1))::BIGINT AS pe_ppm,
+       (((agree * n - s)::HUGEINT * 1000000) // greatest(n * n - s, 1))::BIGINT
          AS kappa_ppm
 FROM tot CROSS JOIN sx
 """,
 )
 def cohen_kappa_q(spark, sf_dir):
     """Cohen's kappa of the lang-ID labeler vs gold — chance-corrected
-    agreement as one row, integer-exact via the cleared rational form
-    with the ppm scale applied to the denominator so intermediates stay
-    inside signed-64 at ~3e9 rows (metrics.py cohen_kappa)."""
+    agreement as one row, integer-exact via the cleared rational form,
+    the ppm-scaled numerator widened to DECIMAL(38,0) / HUGEINT so the
+    quotient is exact at every N (metrics.py cohen_kappa)."""
     from .metrics import cohen_kappa
 
     return cohen_kappa(_lang_eval_df(spark, sf_dir))

@@ -549,10 +549,12 @@ def cohen_kappa(df: DataFrame) -> DataFrame:
     """Cohen's kappa of :func:`confusion_matrix` (inter-annotator /
     classifier-vs-gold chance-corrected agreement) as ONE row: (n, agree, po_ppm, pe_ppm,
     kappa_ppm). Integer-exact via the cleared form
-    ``kappa = (agree·N − Σ t_k·p_k) / (N² − Σ t_k·p_k)``; the ppm
-    scaling divides the DENOMINATOR by 1e6 first (identical formula in
-    the DuckDB twin) so no intermediate exceeds N² — signed-64-safe to
-    N ≈ 3e9 rows. Everything derives from the class-domain-sized
+    ``kappa = (agree·N − Σ t_k·p_k) / (N² − Σ t_k·p_k)``, scaled as
+    ``(num · 1e6) div den``: the counts stay signed-64 (N² fits to
+    N ≈ 3e9 rows) and only the scaled numerator widens to DECIMAL(38,0)
+    (HUGEINT in the DuckDB twin), so the quotient is exact at every N —
+    dividing the denominator by 1e6 first instead truncates it to 0
+    below N = 1000. Everything derives from the class-domain-sized
     confusion census."""
     cm = confusion_matrix(df)
     tt = cm.groupBy(F.col("true_cls").alias("cls")).agg(
@@ -582,8 +584,11 @@ def cohen_kappa(df: DataFrame) -> DataFrame:
         "n",
         "agree",
         F.expr("(agree * 1000000L) div n").alias("po_ppm"),
-        F.expr("s div greatest((n * n) div 1000000L, 1L)").alias("pe_ppm"),
         F.expr(
-            "(agree * n - s) div greatest((n * n - s) div 1000000L, 1L)"
+            "CAST(s AS DECIMAL(38,0)) * 1000000 div greatest(n * n, 1L)"
+        ).alias("pe_ppm"),
+        F.expr(
+            "CAST(agree * n - s AS DECIMAL(38,0)) * 1000000"
+            " div greatest(n * n - s, 1L)"
         ).alias("kappa_ppm"),
     )

@@ -488,3 +488,38 @@ def test_evaluate_dataset_is_one_action(spark, tmp_path):
     assert len(jobs) <= 6, f"evaluate_dataset ran {len(jobs)} jobs"
     assert got["micro"]["precision"] == micro_metrics(df).first()["precision"]
 
+
+def test_cohen_kappa_ppm_is_exact_at_small_n(spark):
+    """pe_ppm and kappa_ppm are the truncated quotients ``num·1e6 div
+    den`` at any N. Below N = 1000, scaling the denominator down by 1e6
+    first truncated it to 0 (then clamped to 1), returning the unscaled
+    numerator: at the registry's N = 500 that was kappa_ppm -1438
+    instead of -8984."""
+    import __spark_entry__ as entry
+    from genie_spark.metrics import cohen_kappa
+
+    def expected(cells):
+        n = sum(cells.values())
+        agree = sum(v for (a, b), v in cells.items() if a == b)
+        classes = {c for pair in cells for c in pair}
+        tt = {k: sum(v for (a, _), v in cells.items() if a == k) for k in classes}
+        pp = {k: sum(v for (_, b), v in cells.items() if b == k) for k in classes}
+        s = sum(tt[k] * pp[k] for k in classes)
+
+        def div(num, den):  # truncates toward zero, as Spark div and DuckDB //
+            q = abs(num) * 1_000_000 // den
+            return -q if num < 0 else q
+
+        return n, agree, div(s, n * n), div(agree * n - s, n * n - s)
+
+    cells = {("en", "en"): 3, ("en", "de"): 4, ("de", "en"): 5, ("de", "de"): 1, ("fr", "de"): 2}
+    df = spark.createDataFrame(
+        [(a, b) for (a, b), v in cells.items() for _ in range(v)], ["lang", "lang_guess"]
+    )
+    r = cohen_kappa(df).first()
+    assert (r["n"], r["agree"], r["pe_ppm"], r["kappa_ppm"]) == expected(cells)
+    assert r["kappa_ppm"] < 0
+
+    # the registry entry at its default scale (SF_DEFAULT): 500 documents
+    reg = entry.queries()["cohen_kappa"](spark, entry.SF_DEFAULT).first()
+    assert (reg["n"], reg["agree"], reg["pe_ppm"], reg["kappa_ppm"]) == (500, 177, 359752, -8984)

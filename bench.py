@@ -189,9 +189,6 @@ HEADLINE = [
     "link_prior",
     "kg_constraint_violations",
     "kg_communities",
-    "sketch_distinct",
-    "cms_heavy_hitters",
-    "bloom_decontaminate",
     "kg_kcore",
     "kg_sssp",
     "kg_random_walks",
@@ -200,15 +197,12 @@ HEADLINE = [
     "collocations",
     "bpe_merges",
     "bpe_encode_stats",
-    "sketch_distinct_by_source",
-    "sketch_quantiles_by_source",
     "dedup_jaccard_prefix",
     "dedup_tfidf_cosine",
     "length_outliers",
     "kg_bgp_match",
     "kg_bgp_optional",
     "kg_bgp_negation",
-    "bloom_join_prune",
     "dedup_incremental",
     "auc_eval",
     "leakage_safe_split",

@@ -5034,207 +5034,6 @@ ORACLES["distant_supervision_sentences"] = ORACLES[
 ].replace("{ALIGN_CTES}", _align_sql().strip())
 
 
-# -- Sketches: the approximate-query tier (datapipe/sketches.py) -------------
-#
-# At 100 TB, exact distinct-counts, full key-frequency tables, and raw
-# eval-set broadcasts are the scale bottlenecks these three classic
-# sketches exist to remove. Each query materializes the sketch AND the
-# exact answer side-by-side so the error the approximation trades away
-# is itself part of the audited output; every number is integer
-# arithmetic over the cross-engine h60/affine_mix hash family, so the
-# DuckDB oracle reproduces the sketch contents bit-for-bit.
-
-def _tok_sql() -> str:
-    return (
-        "tokx AS (SELECT unnest(string_split(text, ' ')) AS t FROM documents),\n"
-        "tk AS (SELECT t FROM tokx WHERE t <> '')"
-    )
-
-
-def _tok_df(spark, sf_dir) -> DataFrame:
-    from .datapipe.dedup import spread_for_compute
-
-    docs = spread_for_compute(_t(spark, sf_dir, "documents"))
-    return docs.select(F.explode(F.split("text", " ")).alias("t")).filter(
-        F.col("t") != ""
-    )
-
-
-def _sketch_distinct_sql() -> str:
-    from .datapipe.sketches import DSK_BUCKETS, distinct_sketch_sql
-
-    return f"""
-WITH {_tok_sql()},
-{distinct_sketch_sql()},
-ex AS (SELECT count(DISTINCT t)::BIGINT AS exact_distinct FROM tk)
-SELECT est_distinct, exact_distinct,
-       ((abs(est_distinct - exact_distinct) * 1000000) // exact_distinct)::BIGINT AS err_ppm,
-       {DSK_BUCKETS}::BIGINT AS n_buckets
-FROM dsk_e, ex
-"""
-
-
-@_register("sketch_distinct", None)
-def sketch_distinct_q(spark, sf_dir):
-    """Corpus vocabulary size by min-hash sketch vs exact, one row with
-    the realized error in ppm. The sketch side is ONE partial-agg
-    groupBy down to 256 (bucket, min) rows — the distinct-count shape
-    that survives 100 TB (count-distinct shuffles every distinct value;
-    the sketch is duplication-insensitive and mergeable). The exact
-    side rides along as the audit (datapipe/sketches.py
-    minhash_distinct_sketch)."""
-    from .datapipe.sketches import (
-        DSK_BUCKETS,
-        distinct_estimate,
-        minhash_distinct_sketch,
-    )
-
-    tok = _tok_df(spark, sf_dir)
-    est = distinct_estimate(
-        minhash_distinct_sketch(tok, DSK_BUCKETS), DSK_BUCKETS
-    )
-    exact = tok.agg(F.count_distinct("t").cast("bigint").alias("exact_distinct"))
-    return est.crossJoin(exact).select(
-        "est_distinct",
-        "exact_distinct",
-        F.expr(
-            "(abs(est_distinct - exact_distinct) * 1000000L) div exact_distinct"
-        ).alias("err_ppm"),
-        F.lit(DSK_BUCKETS).cast("bigint").alias("n_buckets"),
-    )
-
-
-ORACLES["sketch_distinct"] = _sketch_distinct_sql()
-
-
-_CMS_TOP = 20
-
-
-def _cms_heavy_hitters_sql() -> str:
-    from .datapipe.hashes import affine_mix_sql, h60_sql
-    from .datapipe.sketches import CMS_DEPTH, CMS_WIDTH, cms_sql_chain
-
-    mix = affine_mix_sql("(" + h60_sql("t") + ")", "j")
-    return f"""
-WITH {_tok_sql()},
-{cms_sql_chain()},
-top AS (SELECT t, count(*)::BIGINT AS exact_cnt FROM tk GROUP BY t
-        ORDER BY exact_cnt DESC, t LIMIT {_CMS_TOP}),
-pc AS (SELECT top.t, top.exact_cnt, j::INT AS j, ({mix}) % {CMS_WIDTH} AS b
-       FROM top, range({CMS_DEPTH}) r(j))
-SELECT pc.t AS token, pc.exact_cnt,
-       min(c.cnt)::BIGINT AS cms_cnt,
-       (min(c.cnt) - pc.exact_cnt)::BIGINT AS overcount
-FROM pc JOIN cms_cells c ON c.j = pc.j AND c.b = pc.b
-GROUP BY 1, 2
-"""
-
-
-@_register("cms_heavy_hitters", None)
-def cms_heavy_hitters_q(spark, sf_dir):
-    """Count-min-sketch frequency estimates for the exact top-20 tokens,
-    with the realized one-sided overcount per token. The sketch is a
-    4x1024-cell table built by one partial-agg groupBy (mergeable by
-    cellwise sum) and broadcast to the probe join — the hot-key answer
-    whose state never grows with key cardinality (datapipe/sketches.py
-    cms_sketch/cms_estimate). The exact top-20 rides along as audit;
-    ties broken by token so both engines pick the same set."""
-    from .datapipe.sketches import CMS_DEPTH, CMS_WIDTH, cms_estimate, cms_sketch
-
-    tok = _tok_df(spark, sf_dir)
-    sk = cms_sketch(tok, CMS_DEPTH, CMS_WIDTH)
-    top = (
-        tok.groupBy("t")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("exact_cnt"))
-        .orderBy(F.desc("exact_cnt"), F.asc("t"))
-        .limit(_CMS_TOP)
-    )
-    est = cms_estimate(sk, top.select("t"), CMS_DEPTH, CMS_WIDTH)
-    return top.join(est, "t").select(
-        F.col("t").alias("token"),
-        "exact_cnt",
-        "cms_cnt",
-        (F.col("cms_cnt") - F.col("exact_cnt")).cast("bigint").alias("overcount"),
-    )
-
-
-ORACLES["cms_heavy_hitters"] = _cms_heavy_hitters_sql()
-
-
-def _bloom_decontaminate_sql() -> str:
-    from .datapipe.sketches import bloom_probe_sql, bloom_sql_chain
-
-    return f"""
-WITH tw AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-cg AS (SELECT DISTINCT unnest({_grams_sql()}) AS gram FROM tw),
-ev AS (SELECT list_slice(w, 1, 12) AS w FROM tw WHERE doc_id % 37 = 0),
-eg AS (SELECT DISTINCT unnest({_grams_sql()}) AS gram FROM ev),
-{bloom_sql_chain()},
-{bloom_probe_sql()},
-tot AS (SELECT count(*)::BIGINT AS n_probe_grams FROM cg),
-bh AS (SELECT count(*)::BIGINT AS n_bloom_hits FROM bl_hits),
-th AS (SELECT count(*)::BIGINT AS n_true_hits FROM cg JOIN eg USING (gram))
-SELECT n_probe_grams, n_bloom_hits, n_true_hits,
-       (n_bloom_hits - n_true_hits)::BIGINT AS n_false_pos,
-       (((n_bloom_hits - n_true_hits) * 1000000)
-        // (n_probe_grams - n_true_hits))::BIGINT AS fp_ppm
-FROM tot, bh, th
-"""
-
-
-@_register("bloom_decontaminate", None)
-def bloom_decontaminate_q(spark, sf_dir):
-    """Bloom-filter decontamination audit: the eval set (the
-    decontaminate fixture — first-12-word slices of every 37th doc,
-    8-grams) is packed into a 2^16-bit / k=5 Bloom bitmap of ~1k
-    62-bit words, and every distinct corpus 8-gram is probed against
-    it. One summary row: probe volume, Bloom hits, exact hits, and the
-    realized false-positive count/rate — no false negatives by
-    construction (asserted in tests). At 100 TB the bitmap's broadcast
-    size is fixed by `bits` alone, vs `decontaminate`'s raw-gram
-    broadcast growing with the eval set (datapipe/sketches.py
-    bloom_bitmap/bloom_hits)."""
-    from .datapipe.dedup import shingles_col
-    from .datapipe.sketches import BLOOM_BITS, BLOOM_K, bloom_bitmap, bloom_hits
-
-    docs = _t(spark, sf_dir, "documents")
-    cg = docs.select(
-        F.explode(shingles_col(F.col("text"), _DECONTAM_N)).alias("gram")
-    ).distinct()
-    eval_docs = docs.filter(F.pmod("doc_id", F.lit(37)) == 0).select(
-        F.array_join(F.slice(F.split("text", " "), 1, 12), " ").alias("text")
-    )
-    eg = eval_docs.select(
-        F.explode(shingles_col(F.col("text"), _DECONTAM_N)).alias("gram")
-    ).distinct()
-    bm = bloom_bitmap(eg, "gram", BLOOM_BITS, BLOOM_K)
-    hits = bloom_hits(cg, "gram", bm, BLOOM_BITS, BLOOM_K)
-    tot = cg.agg(F.count(F.lit(1)).cast("bigint").alias("n_probe_grams"))
-    bh = hits.agg(F.count(F.lit(1)).cast("bigint").alias("n_bloom_hits"))
-    th = cg.join(eg, "gram", "left_semi").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_true_hits")
-    )
-    return (
-        tot.crossJoin(bh)
-        .crossJoin(th)
-        .select(
-            "n_probe_grams",
-            "n_bloom_hits",
-            "n_true_hits",
-            (F.col("n_bloom_hits") - F.col("n_true_hits"))
-            .cast("bigint")
-            .alias("n_false_pos"),
-            F.expr(
-                "((n_bloom_hits - n_true_hits) * 1000000L)"
-                " div (n_probe_grams - n_true_hits)"
-            ).alias("fp_ppm"),
-        )
-    )
-
-
-ORACLES["bloom_decontaminate"] = _bloom_decontaminate_sql()
-
-
 # -- Graph completions: k-core trim, relational SSSP, walk corpus ------------
 
 _KCORE_K, _KCORE_ROUNDS = 2, 8
@@ -5517,138 +5316,6 @@ def bpe_encode_stats_q(spark, sf_dir):
 ORACLES["bpe_encode_stats"] = _bpe_encode_sql()
 
 
-def _sketch_distinct_by_source_sql() -> str:
-    from .datapipe.sketches import distinct_sketch_grouped_sql
-
-    return f"""
-WITH tokx AS (
-  SELECT source, unnest(string_split(text, ' ')) AS t FROM documents),
-tks AS (SELECT source, t FROM tokx WHERE t <> ''),
-{distinct_sketch_grouped_sql()},
-ex AS (SELECT source AS k, count(DISTINCT t)::BIGINT AS exact_distinct
-       FROM tks GROUP BY source)
-SELECT e.k AS source, e.est_distinct, x.exact_distinct,
-       ((abs(e.est_distinct - x.exact_distinct) * 1000000)
-        // x.exact_distinct)::BIGINT AS err_ppm
-FROM dskg_e e JOIN ex x ON x.k = e.k
-"""
-
-
-@_register("sketch_distinct_by_source", None)
-def sketch_distinct_by_source_q(spark, sf_dir):
-    """Per-source distinct-vocabulary estimation — the GROUP BY form of
-    sketch_distinct (distinct tokens per crawl domain, 64 buckets per
-    group). State is 64 rows per group vs the per-group distinct-value
-    shuffle of exact count-distinct; the exact answer rides along as
-    the per-group error audit (datapipe/sketches.py
-    minhash_distinct_sketch_grouped)."""
-    from .datapipe.sketches import (
-        distinct_estimate_grouped,
-        minhash_distinct_sketch_grouped,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "source", F.explode(F.split("text", " ")).alias("t")
-    ).filter(F.col("t") != "")
-    est = distinct_estimate_grouped(minhash_distinct_sketch_grouped(toks))
-    exact = toks.groupBy("source").agg(
-        F.count_distinct("t").cast("bigint").alias("exact_distinct")
-    )
-    return est.join(exact, "source").select(
-        "source",
-        "est_distinct",
-        "exact_distinct",
-        F.expr(
-            "(abs(est_distinct - exact_distinct) * 1000000L)"
-            " div exact_distinct"
-        ).alias("err_ppm"),
-    )
-
-
-ORACLES["sketch_distinct_by_source"] = _sketch_distinct_by_source_sql()
-
-
-def _hist_quantiles_sql() -> str:
-    from .datapipe.sketches import histogram_quantiles_grouped_sql
-
-    return f"""
-WITH dv AS (SELECT source, n_chars FROM documents),
-{histogram_quantiles_grouped_sql()},
-xr AS (
-  SELECT source AS k, n_chars::BIGINT AS v,
-         row_number() OVER (PARTITION BY source ORDER BY n_chars) AS rn,
-         count(*) OVER (PARTITION BY source)::BIGINT AS n
-  FROM dv),
-xe AS (
-  SELECT k,
-         min(CASE WHEN rn = ((50 * n + 99) // 100) THEN v END)::BIGINT
-           AS exact_p50,
-         min(CASE WHEN rn = ((90 * n + 99) // 100) THEN v END)::BIGINT
-           AS exact_p90
-  FROM xr GROUP BY k)
-SELECT e.k AS source, e.est_p50, e.est_p90, x.exact_p50, x.exact_p90,
-       ((abs(e.est_p50 - x.exact_p50) * 1000000) // x.exact_p50)::BIGINT
-         AS err50_ppm,
-       ((abs(e.est_p90 - x.exact_p90) * 1000000) // x.exact_p90)::BIGINT
-         AS err90_ppm
-FROM hq_e e JOIN xe x ON x.k = e.k
-"""
-
-
-@_register("sketch_quantiles_by_source", None)
-def sketch_quantiles_by_source_q(spark, sf_dir):
-    """Per-source approximate p50/p90 document length from a 64-wide
-    integer histogram (bounded state: occupied buckets per group, ONE
-    partial-agg groupBy — no per-group sort of the fact table), with
-    the exact disc-percentile audit riding along
-    (datapipe/sketches.py histogram_quantiles_grouped)."""
-    from pyspark.sql import Window
-
-    from .datapipe.sketches import histogram_quantiles_grouped
-
-    docs = _t(spark, sf_dir, "documents")
-    est = histogram_quantiles_grouped(docs)
-    xr = docs.select(
-        "source",
-        F.col("n_chars").cast("long").alias("v"),
-    ).select(
-        "source",
-        "v",
-        F.row_number()
-        .over(Window.partitionBy("source").orderBy("v"))
-        .alias("rn"),
-        F.count(F.lit(1))
-        .over(Window.partitionBy("source"))
-        .cast("long")
-        .alias("n"),
-    )
-    exact = xr.groupBy("source").agg(
-        F.min(
-            F.expr("CASE WHEN rn = ((50L * n + 99L) div 100L) THEN v END")
-        ).cast("long").alias("exact_p50"),
-        F.min(
-            F.expr("CASE WHEN rn = ((90L * n + 99L) div 100L) THEN v END")
-        ).cast("long").alias("exact_p90"),
-    )
-    return est.join(exact, "source").select(
-        "source",
-        "est_p50",
-        "est_p90",
-        "exact_p50",
-        "exact_p90",
-        F.expr(
-            "(abs(est_p50 - exact_p50) * 1000000L) div exact_p50"
-        ).alias("err50_ppm"),
-        F.expr(
-            "(abs(est_p90 - exact_p90) * 1000000L) div exact_p90"
-        ).alias("err90_ppm"),
-    )
-
-
-ORACLES["sketch_quantiles_by_source"] = _hist_quantiles_sql()
-
-
 def _prefix_jaccard_sql() -> str:
     # the oracle is the EXHAUSTIVE exact-Jaccard join — deliberately NOT a
     # mirror of the prefix-filtered plan, so a wrong prefix bound (lost
@@ -5823,42 +5490,6 @@ def kg_bgp_negation_q(spark, sf_dir):
         [("?sup", "based_in", "?n")],
         negations=[("?sup", "located_in", "?r2")],
     )
-
-
-@_register("bloom_join_prune", None)
-def bloom_join_prune_q(spark, sf_dir):
-    """Bloom runtime-filter join: dim = small parts (p_size <= 12),
-    fact = lineitem pre-filtered row-locally against the broadcast
-    ~260-row bloom bitmap before the exact join. The oracle is the
-    PLAIN join — the gate proves the bloom cut loses no true match
-    (no false negatives by construction)
-    (datapipe/sketches.py bloom_pruned_join)."""
-    from .datapipe.sketches import bloom_pruned_join
-
-    li = _t(spark, sf_dir, "lineitem")
-    dim = _t(spark, sf_dir, "part").filter(F.col("p_size") <= 12).select(
-        "p_partkey", "p_size"
-    )
-    j = bloom_pruned_join(li, dim)
-    return j.agg(
-        F.count(F.lit(1)).cast("long").alias("n_joined"),
-        F.sum(F.expr("cast(floor(l_quantity) as bigint)"))
-        .cast("long")
-        .alias("sum_qty"),
-        F.count_distinct("l_partkey").cast("long").alias("n_keys"),
-    )
-
-
-ORACLES["bloom_join_prune"] = """
-WITH dim AS (SELECT p_partkey FROM part WHERE p_size <= 12),
-joined AS (
-  SELECT l.l_partkey, CAST(floor(l.l_quantity) AS BIGINT) AS q
-  FROM lineitem l JOIN dim d ON d.p_partkey = l.l_partkey)
-SELECT count(*)::BIGINT AS n_joined,
-       sum(q)::BIGINT AS sum_qty,
-       count(DISTINCT l_partkey)::BIGINT AS n_keys
-FROM joined
-"""
 
 
 _TERM_LIFT_SQL = """

@@ -442,18 +442,6 @@ def test_winnow_hash_array_not_reinlined(spark):
     assert plan.count("md5") <= 2, plan[:4000]
 
 
-def test_bloom_probe_broadcasts_bitmap(spark):
-    """bloom_hits must broadcast the (bounded, <= bits/62-row) bitmap —
-    the probe side is never shuffled on content."""
-    from genie_spark.datapipe.sketches import bloom_bitmap, bloom_hits
-
-    docs = _t(spark, "documents").select(F.col("text").alias("g"))
-    bm = bloom_bitmap(docs.limit(50), "g", bits=1 << 14, k=5)
-    tree = _tree(bloom_hits(docs, "g", bm, bits=1 << 14, k=5))
-    assert "BroadcastHashJoin" in tree
-    assert "SortMergeJoin" not in tree
-
-
 def test_entity_summary_broadcasts_relation_freqs(spark):
     """entity_summary's relation-frequency annotate is a broadcast;
     the only shuffle is the subject-keyed window."""
@@ -478,20 +466,6 @@ def test_bpe_argmax_is_top1_not_global_sort(spark):
     tree = _tree(pc.orderBy(F.desc("c"), F.asc("l"), F.asc("r")).limit(1))
     assert "TakeOrderedAndProject" in tree
     assert "\n   Sort " not in tree
-
-
-def test_sketch_builds_have_partial_aggregation(spark):
-    """Distinct/CMS sketch builds: two HashAggregate spans around one
-    Exchange — map-side combine is what bounds the shuffle at 100 TB."""
-    from genie_spark.datapipe.sketches import cms_sketch, minhash_distinct_sketch
-
-    toks = _t(spark, "documents").select(
-        F.explode(F.split("text", " ")).alias("t")
-    )
-    for df in (minhash_distinct_sketch(toks, 256), cms_sketch(toks)):
-        tree = _tree(df)
-        assert tree.count("HashAggregate") >= 2, tree
-        assert tree.count("Exchange") == 1, tree
 
 
 def test_prefix_jaccard_no_global_rank(spark):

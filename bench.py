@@ -114,8 +114,6 @@ HEADLINE = [
     "annotate_id_triples",
     "kilt_filters",
     "topk_per_group",
-    "sessionize",
-    "event_rates_hopping",
     "skew_profile",
     "sentence_split",
     "sentence_split_bounded",

@@ -638,7 +638,7 @@ def fact_intervals(assertions: DataFrame) -> DataFrame:
     start/end qualifiers; bitemporal fact tables) that latest-wins
     fusion (:func:`fuse_latest`) throws away. The islands construction:
     a per-key lag marks object changes, a running sum numbers versions
-    (the sessionize pattern over value changes instead of time gaps),
+    (gaps-and-islands over value changes instead of time gaps),
     one aggregate per version, and a lead over the version-grain frame
     closes each interval at its successor's start.
 

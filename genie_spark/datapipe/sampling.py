@@ -127,59 +127,6 @@ def shuffle_order(df: DataFrame, epoch: int = 0) -> DataFrame:
     return ranked.drop("_sh")
 
 
-def sessionize(events: DataFrame) -> DataFrame:
-    """Gap-based sessionization: consecutive events of the same user
-    belong to one session while the inter-event gap stays ≤ 30
-    minutes; a larger gap starts a new session. The classic
-    two-window formulation: a per-user lag marks session starts, a
-    per-user running sum numbers them. Returns one row per session:
-    ``(user, session_idx, n_events, start_us, end_us, duration_us)``
-    with timestamps as INTEGER epoch microseconds (cross-engine exact —
-    float epoch seconds round differently per engine).
-
-    Determinism: window order is (epoch_us, event id) — same-microsecond
-    events tie-break on the id, so numbering is partition-invariant.
-
-    Scale shape (100 TB event logs): both windows are PARTITIONED BY
-    user — no global sort, no global window; the shuffle keys on the
-    user id and the second window reuses the first's partitioning
-    (one Exchange in the plan). Per-user data must fit a task (true for
-    human-scale activity); for adversarial hot keys production splits
-    the key by (user, day) first — same plan shape, documented here as
-    the standard mitigation."""
-    from pyspark.sql import Window
-
-    # tz-free epoch micros: unix_micros() rejects TIMESTAMP_NTZ (the
-    # parquet type here) and casting NTZ->TZ would apply the session
-    # timezone — timestampdiff against the NTZ epoch matches DuckDB's
-    # epoch_us(ts) on naive timestamps exactly
-    tus = F.expr(
-        "timestampdiff(MICROSECOND, "
-        "TIMESTAMP_NTZ '1970-01-01 00:00:00', `ts`)"
-    )
-    w = Window.partitionBy("user_id").orderBy("tus", "event_id")
-    gap_us = 30 * 60 * 1_000_000
-    ev = events.select(F.col("user_id"), F.col("event_id"), tus.alias("tus"))
-    flagged = ev.withColumn("prev", F.lag("tus").over(w)).withColumn(
-        "ns",
-        F.when(
-            F.col("prev").isNull()
-            | (F.col("tus") - F.col("prev") > F.lit(gap_us)),
-            1,
-        ).otherwise(0),
-    )
-    sess = flagged.withColumn(
-        "session_idx",
-        F.sum("ns").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    return sess.groupBy("user_id", "session_idx").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.min("tus").cast("long").alias("start_us"),
-        F.max("tus").cast("long").alias("end_us"),
-        (F.max("tus") - F.min("tus")).cast("long").alias("duration_us"),
-    )
-
-
 def group_cap(df: DataFrame) -> DataFrame:
     """Deterministic per-``source`` QUOTA cap: keep at most 50 rows per
     source, chosen by the salted-hash order (h60('cap' ␁ id), id) — the
@@ -203,41 +150,4 @@ def group_cap(df: DataFrame) -> DataFrame:
     return (
         df.withColumn("grp_rank", F.row_number().over(w))
         .filter(F.col("grp_rank") <= 50)
-    )
-
-
-def hopping_window_rates(events: DataFrame) -> DataFrame:
-    """Overlapping (hopping) time-window aggregation of the event log:
-    per (window start, event type) the event count and value sum, with
-    30-minute windows advancing every 15 minutes,
-    kept ENGINE-EXACT by doing the window assignment in integer
-    epoch-microsecond arithmetic instead of engine-native window
-    functions (Spark's F.window and DuckDB's time_bucket draw boundaries
-    differently around epoch offsets; the explicit floor math cannot
-    disagree). Each event explodes into the two windows that overlap
-    it, then ONE partial-aggregatable groupBy. Value sums are ppm-quantized
-    integers (determinism discipline: float sums are order-dependent)."""
-    hop_us = 15 * 60 * 1_000_000
-    tus = F.expr(
-        "timestampdiff(MICROSECOND, "
-        "TIMESTAMP_NTZ '1970-01-01 00:00:00', `ts`)"
-    )
-    base = events.select(
-        tus.alias("_tus"),
-        "event_type",
-        F.round(F.col("value") * 1_000_000).cast("long").alias("_v_ppm"),
-    )
-    win = base.select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(1)),
-                lambda i: (F.floor(F.col("_tus") / hop_us) - i) * hop_us,
-            )
-        ).alias("win_start_us"),
-        "event_type",
-        "_v_ppm",
-    )
-    return win.groupBy("win_start_us", "event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum("_v_ppm").cast("long").alias("value_sum_ppm"),
     )

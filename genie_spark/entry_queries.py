@@ -520,80 +520,6 @@ def skew_profile_q(spark, sf_dir):
     return key_skew_profile(keyed)
 
 
-@_register(
-    "event_rates_hopping",
-    """
-WITH hw_b AS (
-  SELECT epoch_us(ts) AS tus, event_type,
-         round(value * 1000000)::BIGINT AS v_ppm
-  FROM events),
-hw_w AS (
-  SELECT ((tus // 900000000) - i) * 900000000 AS win_start_us,
-         event_type, v_ppm
-  FROM hw_b, unnest(generate_series(0, 1)) AS t(i))
-SELECT win_start_us, event_type,
-       count(*)::BIGINT AS n_events,
-       sum(v_ppm)::BIGINT AS value_sum_ppm
-FROM hw_w GROUP BY 1, 2
-""",
-)
-def event_rates_hopping_q(spark, sf_dir):
-    """Hopping-window event aggregation (30-min windows, 15-min hop) in
-    integer epoch-microsecond arithmetic — the batch twin of the
-    streaming windowed rates, engine-exact where native window
-    functions draw boundaries differently. Constant ≤2× explode then
-    ONE partial-agg groupBy; value sums ppm-quantized
-    (datapipe/sampling.py hopping_window_rates)."""
-    from .datapipe.sampling import hopping_window_rates
-
-    return hopping_window_rates(_t(spark, sf_dir, "events"))
-
-
-@_register(
-    "sessionize",
-    """
-WITH se_ev AS (
-  SELECT user_id, event_id, epoch_us(ts) AS tus FROM events),
-se_lag AS (
-  SELECT user_id, event_id, tus,
-         lag(tus) OVER (PARTITION BY user_id ORDER BY tus, event_id) AS prev
-  FROM se_ev),
-se_flag AS (
-  SELECT user_id, event_id, tus,
-         CASE WHEN prev IS NULL OR tus - prev > 1800000000 THEN 1 ELSE 0 END AS ns
-  FROM se_lag),
-se_num AS (
-  SELECT user_id, tus,
-         sum(ns) OVER (PARTITION BY user_id ORDER BY tus, event_id
-                       ROWS UNBOUNDED PRECEDING) AS session_idx
-  FROM se_flag)
-SELECT user_id, session_idx::BIGINT AS session_idx,
-       count(*)::BIGINT AS n_events,
-       min(tus)::BIGINT AS start_us,
-       max(tus)::BIGINT AS end_us,
-       (max(tus) - min(tus))::BIGINT AS duration_us
-FROM se_num GROUP BY 1, 2
-""",
-)
-def sessionize_q(spark, sf_dir):
-    """Gap-based sessionization of the event log (30-min inactivity
-    gap): per-user lag marks session starts, per-user running sum
-    numbers them, one aggregate per session. Both windows PARTITIONED BY
-    user — no global sort; timestamps as integer epoch microseconds for
-    cross-engine exactness (datapipe/sampling.py sessionize)."""
-    from .datapipe.sampling import sessionize
-
-    out = sessionize(_t(spark, sf_dir, "events"))
-    return out.select(
-        "user_id",
-        F.col("session_idx").cast("bigint").alias("session_idx"),
-        "n_events",
-        "start_us",
-        "end_us",
-        "duration_us",
-    )
-
-
 # -- J1-analog: broadcast canonicalization join chain --------------------------
 
 @_register(

@@ -401,17 +401,6 @@ def test_er_edges_blocked_not_all_pairs(spark):
     assert "BroadcastNestedLoopJoin" not in tree
 
 
-def test_sessionize_single_exchange(spark):
-    """Both sessionization windows and the session aggregate must share
-    ONE user-keyed Exchange — the lag window, the running-sum window and
-    the final groupBy all reuse the same hash partitioning."""
-    from genie_spark.datapipe.sampling import sessionize
-
-    df = sessionize(_t(spark, "events"))
-    tree = _tree(df)
-    assert tree.count("Exchange") == 1, tree
-
-
 def test_length_deciles_no_global_sort(spark):
     """Exact deciles must come from the range-partition rank: no global
     Sort over the corpus and no empty-partition-spec Window. The ONE

@@ -193,8 +193,6 @@ HEADLINE = [
     "kg_entity_summary",
     "kg_resource_alloc",
     "collocations",
-    "bpe_merges",
-    "bpe_encode_stats",
     "dedup_jaccard_prefix",
     "dedup_tfidf_cosine",
     "length_outliers",

@@ -5183,65 +5183,6 @@ def collocations_q(spark, sf_dir):
     return collocation_lift(_t(spark, sf_dir, "documents"))
 
 
-# -- Tokenizer vocabulary induction (distributed BPE) ------------------------
-
-def _bpe_sql() -> str:
-    from .datapipe.vocab import bpe_sql_chain
-
-    return f"""
-WITH {bpe_sql_chain()}
-SELECT step, "left", "right", merged, pair_cnt FROM bmerges
-"""
-
-
-@_register("bpe_merges", None)
-def bpe_merges_q(spark, sf_dir):
-    """Distributed BPE vocabulary induction: learn 6 merges over the
-    corpus word-frequency table. Each round is a pure distributed plan
-    — vocabulary-sized row-local pair generation, ONE partial-agg
-    count groupBy, a 1-row TakeOrderedAndProject argmax broadcast into
-    the merge application — no driver loop over data, no collect; the
-    merge table (step, left, right, merged, pair_cnt) is the artifact
-    a tokenizer ships (datapipe/vocab.py bpe_learn_merges)."""
-    from .datapipe.vocab import BPE_MERGES, bpe_learn_merges
-
-    return bpe_learn_merges(_t(spark, sf_dir, "documents"), merges=BPE_MERGES)
-
-
-ORACLES["bpe_merges"] = _bpe_sql()
-
-
-def _bpe_encode_sql() -> str:
-    from .datapipe.vocab import bpe_encode_sql, bpe_sql_chain
-
-    return f"""
-WITH {bpe_sql_chain()},
-{bpe_encode_sql()}
-SELECT n_docs, n_symbols_before, n_symbols_after,
-       ((n_symbols_after * 1000000) // n_symbols_before)::BIGINT
-         AS compression_ppm
-FROM bstat
-"""
-
-
-@_register("bpe_encode_stats", None)
-def bpe_encode_stats_q(spark, sf_dir):
-    """Apply the learned BPE merge table back to the corpus (row-local
-    6-replace map, word boundaries kept as a '|' sentinel no merge can
-    cross) and audit the encoding: symbols before/after + compression
-    ppm, one row. The train→apply composition is the full tokenizer
-    lifecycle as distributed plans (datapipe/vocab.py
-    bpe_encode_stats)."""
-    from .datapipe.vocab import BPE_MERGES, bpe_encode_stats, bpe_learn_merges
-
-    docs = _t(spark, sf_dir, "documents")
-    mt = bpe_learn_merges(docs, merges=BPE_MERGES)
-    return bpe_encode_stats(docs, mt, merges=BPE_MERGES)
-
-
-ORACLES["bpe_encode_stats"] = _bpe_encode_sql()
-
-
 def _prefix_jaccard_sql() -> str:
     # the oracle is the EXHAUSTIVE exact-Jaccard join — deliberately NOT a
     # mirror of the prefix-filtered plan, so a wrong prefix bound (lost

@@ -441,22 +441,6 @@ def test_entity_summary_broadcasts_relation_freqs(spark):
     assert "SortMergeJoin" not in tree
 
 
-def test_bpe_argmax_is_top1_not_global_sort(spark):
-    """Every BPE round's pair argmax must be TakeOrderedAndProject
-    (per-partition top-1 then merge), never a global Sort."""
-    from genie_spark.datapipe.vocab import word_freq
-
-    wf = word_freq(_t(spark, "documents"))
-    pc = (
-        wf.select(F.split("word", "").alias("sy"), "cnt")
-        .groupBy(F.col("sy")[0].alias("l"), F.col("sy")[1].alias("r"))
-        .agg(F.sum("cnt").alias("c"))
-    )
-    tree = _tree(pc.orderBy(F.desc("c"), F.asc("l"), F.asc("r")).limit(1))
-    assert "TakeOrderedAndProject" in tree
-    assert "\n   Sort " not in tree
-
-
 def test_prefix_jaccard_no_global_rank(spark):
     """AllPairs prefix selection must order shingles per doc (window
     partitioned by doc_id), never via a global rank — a range-partition

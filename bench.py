@@ -209,7 +209,6 @@ HEADLINE = [
     "vocab_growth",
     "class_term_lift",
     "dedup_threshold_sweep",
-    "hard_negatives",
     "gate_ablation",
 ]
 

@@ -322,19 +322,13 @@ def embedding_neardup_lsh_pairs(
     (2^4 buckets cut the quadratic term ~4^4×). High-cosine pairs land in
     the same bucket with probability (1 − θ/π)^4, so the recall tradeoff
     is explicit."""
-    return _lsh_cosine_pairs(emb, threshold, dim)
-
-
-def _lsh_cosine_pairs(emb, threshold, dim, **carry) -> DataFrame:
-    """:func:`_salted_cosine_pairs` over ``(vec_id, embedding)`` blocked by
-    the 4-plane hyperplane-LSH bucket."""
     from .similarity import _vec_dim, hyperplane_bucket_col, hyperplanes
 
     planes = hyperplanes(_vec_dim(emb, dim))
     return _salted_cosine_pairs(
         emb,
         hyperplane_bucket_col(F.col("embedding"), planes),
-        threshold, _block_salt(emb, 1 << 4), **carry,
+        threshold, _block_salt(emb, 1 << 4),
     )
 
 
@@ -374,14 +368,12 @@ def _salted_cosine_pairs(
     block: Column,
     threshold: float,
     salt: int,
-    **carry: Column,
 ) -> DataFrame:
     """The blocked self-join behind every embedding pair operator: pairs
     of ``vec_id`` values ``id_a < id_b`` sharing a ``block`` value whose
     EXACT ``embedding`` cosine reaches ``threshold`` (the DuckDB twins
     compare the same unrounded value; only the reported cosine is rounded
-    to 6dp). Returns ``(id_a, id_b, <name>_a, <name>_b for each carry
-    column, cosine)``.
+    to 6dp). Returns ``(id_a, id_b, cosine)``.
 
     ``salt`` splits each block's pair generation across salt×|blocks|
     join keys (standard salting: a-side keyed by a deterministic id
@@ -402,7 +394,6 @@ def _salted_cosine_pairs(
         block.alias("_blk"),
         v.alias("_v"),
         norm_col(v).alias("_n"),
-        *[c.alias(name) for name, c in carry.items()],
     )
     salt = max(1, int(salt))
     a_df = base.withColumn(
@@ -432,11 +423,6 @@ def _salted_cosine_pairs(
         .select(
             F.col("a.vec_id").alias("id_a"),
             F.col("b.vec_id").alias("id_b"),
-            *[
-                F.col(f"{side}.{name}").alias(f"{name}_{side}")
-                for name in carry
-                for side in ("a", "b")
-            ],
             F.round(cos, 6).alias("cosine"),
         )
     )
@@ -1045,19 +1031,4 @@ def vocab_growth(docs: DataFrame) -> DataFrame:
         "decile",
         "n_new_grams",
         F.sum("n_new_grams").over(w).cast("long").alias("cum_grams"),
-    )
-
-
-def hard_negative_pairs(emb: DataFrame, dim: int = None) -> DataFrame:
-    """Hard-negative mining for embedding/contrastive training: pairs
-    that LOOK alike (cosine >= 0.3, found via the same
-    deterministic hyperplane-LSH blocking as the near-dup tier) but
-    carry DIFFERENT labels — exactly the pairs a metric-learning loss
-    needs most. Returns (id_a, id_b, label_a, label_b, cosine).
-
-    Scale shape: identical to embedding_neardup_lsh_pairs (bucketed
-    all-pairs bounded by 2^4 blocking), plus one row-local label
-    inequality — the label ride-along costs nothing."""
-    return _lsh_cosine_pairs(emb, 0.3, dim, label=F.col("label")).filter(
-        F.col("label_a") != F.col("label_b")
     )

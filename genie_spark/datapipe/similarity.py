@@ -6,9 +6,9 @@ Python). Two blocking keys bound the quadratic pair term of the
 embedding pair operators:
 
 - hyperplane LSH: `hyperplane_bucket_col` maps a vector to the sign
-  pattern of its dot products with seeded ±1 planes. Near-dup and hard
-  negatives self-join within a bucket. The plane coefficients are
-  literals, inlined into the DuckDB twin too → bit-identical buckets.
+  pattern of its dot products with seeded ±1 planes. Near-dup
+  self-joins within a bucket. The plane coefficients are literals,
+  inlined into the DuckDB twin too → bit-identical buckets.
 - IVF cells: `ivf_cell_col` assigns each vector its cosine-nearest
   hash-seeded centroid (`ivf_centroids`); SemDeDup
   (`semantic_dedup_survivors`) compares pairs only within a cell.
@@ -174,34 +174,23 @@ def _bucket_expr_sql(planes: List[List[int]]) -> str:
 
 
 def embedding_neardup_lsh_sql() -> str:
-    """DuckDB twin of dedup.embedding_neardup_lsh_pairs: same hyperplane
-    literals, same bucket-blocked all-pairs cosine."""
-    return _lsh_pairs_sql(label=False)
-
-
-def _lsh_pairs_sql(label: bool) -> str:
-    """Twin of ``dedup._lsh_cosine_pairs`` (4 planes over ``EMB_DIM``,
-    cosine 0.3); ``label`` carries the label column and keeps only pairs
-    whose labels differ."""
+    """DuckDB twin of dedup.embedding_neardup_lsh_pairs at the registry's
+    4 planes over ``EMB_DIM`` and cosine 0.3: same hyperplane literals,
+    same bucket-blocked all-pairs cosine."""
     planes = hyperplanes(EMB_DIM)
     dot = "list_sum(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2]))"
-    lbl, lbl_cols, lbl_pred = (
-        (", label", "\n       a.label AS label_a, b.label AS label_b,",
-         "\n  AND a.label <> b.label")
-        if label else ("", "", "")
-    )
     return f"""
 WITH base AS (
-  SELECT vec_id{lbl},
+  SELECT vec_id,
          ({_bucket_expr_sql(planes)})::BIGINT AS bucket,
          list_transform(embedding, x -> x::DOUBLE) AS v,
          sqrt(list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE))) AS n
   FROM embeddings
 )
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,{lbl_cols}
+SELECT a.vec_id AS id_a, b.vec_id AS id_b,
        round({dot} / (a.n * b.n), 6) AS cosine
 FROM base a JOIN base b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE {dot} / (a.n * b.n) >= 0.3{lbl_pred}
+WHERE {dot} / (a.n * b.n) >= 0.3
 """
 
 
@@ -281,9 +270,3 @@ dropped AS (
 SELECT c.vec_id, c.cell FROM cells c
 ANTI JOIN dropped d ON d.vec_id = c.vec_id
 """
-
-
-def hard_negatives_lsh_sql() -> str:
-    """DuckDB twin of dedup.hard_negative_pairs: the
-    embedding_neardup_lsh chain plus the label-inequality predicate."""
-    return _lsh_pairs_sql(label=True)

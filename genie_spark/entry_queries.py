@@ -1125,19 +1125,6 @@ def embedding_neardup_lsh(spark, sf_dir):
     )
 
 
-@_register("hard_negatives", None)
-def hard_negatives_q(spark, sf_dir):
-    """Hard-negative mining for contrastive/embedding training:
-    same-LSH-bucket pairs with cosine >= 0.3 but DIFFERENT labels —
-    the pairs a metric-learning loss needs most. Same corpus-safe
-    blocking as the embedding near-dup tier; the label predicate is a
-    free ride-along (datapipe/dedup.py hard_negative_pairs)."""
-    from .datapipe.dedup import hard_negative_pairs
-    from .datapipe.similarity import EMB_DIM
-
-    return hard_negative_pairs(_t(spark, sf_dir, "embeddings"), dim=EMB_DIM)
-
-
 _IVF_CELLS, _SEMDEDUP_T = 8, 0.3
 
 
@@ -1157,14 +1144,9 @@ def dedup_semantic(spark, sf_dir):
 
 
 def _install_embedding_oracles():
-    from .datapipe.similarity import (
-        embedding_neardup_lsh_sql,
-        hard_negatives_lsh_sql,
-        semantic_dedup_sql,
-    )
+    from .datapipe.similarity import embedding_neardup_lsh_sql, semantic_dedup_sql
 
     ORACLES["embedding_neardup_lsh"] = embedding_neardup_lsh_sql()
-    ORACLES["hard_negatives"] = hard_negatives_lsh_sql()
     ORACLES["dedup_semantic"] = semantic_dedup_sql(
         n_cells=_IVF_CELLS, threshold=_SEMDEDUP_T
     )

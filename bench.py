@@ -200,7 +200,6 @@ HEADLINE = [
     "kg_bgp_optional",
     "kg_bgp_negation",
     "dedup_incremental",
-    "auc_eval",
     "leakage_safe_split",
     "classifier_report",
     "cohen_kappa",

@@ -5483,57 +5483,3 @@ def dedup_incremental_q(spark, sf_dir):
 
 
 ORACLES["dedup_incremental"] = _incr_oracle()
-
-
-# --- ROC-AUC evaluation ------------------------------------------------------
-
-_AUC_SQL = """
-WITH s AS (
-  SELECT l_returnflag AS grp,
-         (year(l_shipdate) - 1992) * 4
-           + CAST(floor(l_quantity) AS BIGINT) // 5 AS score,
-         CASE WHEN l_shipdate >= TIMESTAMP '1996-01-01' THEN 1 ELSE 0 END AS y
-  FROM lineitem),
-cen AS (
-  SELECT grp, score, count(*)::BIGINT AS c, sum(y)::BIGINT AS p
-  FROM s GROUP BY 1, 2),
-r AS (
-  SELECT grp, c, p,
-         coalesce(sum(c) OVER (PARTITION BY grp ORDER BY score
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-  FROM cen),
-a AS (
-  SELECT grp, sum(p * (2 * cum + c + 1))::BIGINT AS r2,
-         sum(p)::BIGINT AS n_pos, sum(c - p)::BIGINT AS n_neg
-  FROM r GROUP BY 1)
-SELECT grp, n_pos, n_neg,
-       ((r2 - n_pos * (n_pos + 1)) * 1000000 // (2 * n_pos * n_neg))::BIGINT
-         AS auc_ppm
-FROM a
-"""
-
-
-@_register("auc_eval", _AUC_SQL)
-def auc_eval_q(spark, sf_dir):
-    """Per-group ROC-AUC via the tie-corrected Mann-Whitney rank sum —
-    the classifier-evaluation primitive, integer-exact in ppm. The
-    "model" is a deterministic weak scorer over lineitem (shipyear
-    signal + quantity noise, heavy ties exercising the midrank math);
-    label = shipped on/after 1996. The ranking window runs over the
-    (group, score) census, never the 60k raw rows
-    (genie_spark/metrics.py auc_by_group)."""
-    from .metrics import auc_by_group
-
-    li = _t(spark, sf_dir, "lineitem")
-    samples = li.select(
-        F.col("l_returnflag").alias("grp"),
-        (
-            (F.year("l_shipdate") - F.lit(1992)) * F.lit(4)
-            + F.expr("CAST(floor(l_quantity) AS BIGINT) div 5L")
-        ).cast("long").alias("score"),
-        F.when(F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"), 1)
-        .otherwise(0)
-        .cast("long")
-        .alias("y"),
-    )
-    return auc_by_group(samples)

@@ -435,60 +435,6 @@ def calibration_bins(samples: DataFrame, bins: int = 10) -> DataFrame:
     )
 
 
-def auc_by_group(samples: DataFrame) -> DataFrame:
-    """Tie-corrected ROC-AUC per ``grp`` of the ``score`` column against
-    the 0/1 label ``y``, integer-exact: the Mann-Whitney
-    rank-sum formulation over the (group, score) census. With midranks
-    doubled to stay integral, 2*midrank(s) = 2*cum_before(s) + c(s) + 1
-    and AUC = (2*sum_pos(midrank) - n_pos*(n_pos+1)) / (2*n_pos*n_neg);
-    reported as floor ppm so the DuckDB oracle is bit-exact. Scores must
-    be integral (floor/scale floats first — the repo-wide determinism
-    discipline).
-
-    Scale shape: ONE partial-aggregated groupBy folds the fact table to
-    the (group, score) census; the ranking window runs over that census
-    (bounded by |groups| x |score domain|), never the raw rows — the
-    same census-window shape as the drift/anomaly monitors. Signed-64
-    bounds: n_pos*n_neg < 2^62/2e6 ~ 2.3e12 per group for the ppm step
-    (sample or pre-aggregate groups beyond ~1.5e6^2 pairs)."""
-    from pyspark.sql import Window
-
-    cen = (
-        samples.select(
-            "grp",
-            F.col("score").cast("long").alias("score"),
-            F.col("y").cast("long").alias("_y"),
-        )
-        .groupBy("grp", "score")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("_c"),
-            F.sum("_y").cast("long").alias("_p"),
-        )
-    )
-    w = (
-        Window.partitionBy("grp")
-        .orderBy("score")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cen = cen.withColumn("_cum", F.coalesce(F.sum("_c").over(w), F.lit(0)))
-    agg = cen.groupBy("grp").agg(
-        F.sum(F.col("_p") * (2 * F.col("_cum") + F.col("_c") + 1))
-        .cast("long")
-        .alias("_r2"),
-        F.sum("_p").cast("long").alias("n_pos"),
-        F.sum(F.col("_c") - F.col("_p")).cast("long").alias("n_neg"),
-    )
-    return agg.select(
-        "grp",
-        "n_pos",
-        "n_neg",
-        F.expr(
-            "(_r2 - n_pos * (n_pos + 1)) * 1000000L"
-            " div (2L * n_pos * n_neg)"
-        ).cast("long").alias("auc_ppm"),
-    )
-
-
 # --- multiclass classifier evaluation ---------------------------------------
 
 def confusion_matrix(df: DataFrame) -> DataFrame:

@@ -183,7 +183,6 @@ HEADLINE = [
     "kg_rule_infer",
     "distant_supervision_sentences",
     "kg_link_prediction",
-    "calibration_bins",
     "link_prior",
     "kg_constraint_violations",
     "kg_communities",

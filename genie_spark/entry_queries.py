@@ -4446,93 +4446,6 @@ ORACLES["kg_link_prediction"] = _lp_oracle_sql()
 
 
 @_register(
-    "calibration_bins",
-    f"""
-WITH cb_pred AS (
-  SELECT l_orderkey AS id, l_returnflag AS r, l_partkey AS o,
-         max(l_quantity::INTEGER) AS qty
-  FROM lineitem WHERE l_quantity > {_QTY} GROUP BY 1, 2, 3
-),
-cb_trg AS (
-  SELECT DISTINCT l_orderkey AS id, l_returnflag AS r, l_partkey AS o
-  FROM lineitem WHERE l_shipdate < TIMESTAMP '{_CUT}'
-),
-cb_s AS (
-  SELECT p.id,
-         count(*)::BIGINT AS n_pred,
-         sum(CASE WHEN t.id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_correct,
-         (sum(least(p.qty - {_QTY}, {_QTY})) * 1000000
-            // (count(*) * {_QTY}))::BIGINT AS conf_ppm
-  FROM cb_pred p
-  LEFT JOIN cb_trg t ON t.id = p.id AND t.r = p.r AND t.o = p.o
-  GROUP BY p.id
-),
-cb_b AS (
-  SELECT least(9, conf_ppm // 100000)::BIGINT AS bin, conf_ppm,
-         (1000000 * n_correct // n_pred)::BIGINT AS acc_ppm
-  FROM cb_s
-)
-SELECT bin, count(*)::BIGINT AS n_samples,
-       (sum(conf_ppm) // count(*))::BIGINT AS mean_conf_ppm,
-       (sum(acc_ppm) // count(*))::BIGINT AS mean_acc_ppm,
-       abs((sum(conf_ppm) // count(*))
-           - (sum(acc_ppm) // count(*)))::BIGINT AS gap_ppm
-FROM cb_b GROUP BY bin
-""",
-)
-def calibration_bins_q(spark, sf_dir):
-    """Extraction-confidence calibration: per-sample confidence (how far
-    predicted items clear the decision threshold, integer ppm) vs
-    per-sample precision, binned into a 10-bin reliability diagram
-    (Guo et al. 2017) — the evaluation-side counterpart of
-    extraction_confidence. All floor-integer arithmetic; one row-local
-    pass to per-sample stats, one counter-sized groupBy to bins."""
-    from .metrics import calibration_bins
-
-    li = _t(spark, sf_dir, "lineitem")
-    pred = (
-        li.filter(F.col("l_quantity") > _QTY)
-        .groupBy(
-            F.col("l_orderkey").alias("id"),
-            F.col("l_returnflag").alias("r"),
-            F.col("l_partkey").alias("o"),
-        )
-        .agg(F.max(F.col("l_quantity").cast("int")).alias("qty"))
-    )
-    trg = (
-        li.filter(F.col("l_shipdate") < _CUT)
-        .select(
-            F.col("l_orderkey").alias("id"),
-            F.col("l_returnflag").alias("r"),
-            F.col("l_partkey").alias("o"),
-        )
-        .distinct()
-        .withColumn("_hit", F.lit(1).cast("long"))
-    )
-    per_sample = (
-        pred.join(trg, ["id", "r", "o"], "left")
-        .groupBy("id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_pred"),
-            F.sum(F.coalesce(F.col("_hit"), F.lit(0).cast("long")))
-            .cast("long")
-            .alias("n_correct"),
-            F.expr(
-                f"sum(least(qty - {_QTY}, {_QTY})) * 1000000L"
-                f" div (count(1) * {_QTY}L)"
-            ).cast("long").alias("conf_ppm"),
-        )
-        .select(
-            "conf_ppm",
-            F.expr("1000000L * n_correct div n_pred")
-            .cast("long")
-            .alias("acc_ppm"),
-        )
-    )
-    return calibration_bins(per_sample, bins=10)
-
-
-@_register(
     "kg_constraint_violations",
     f"""
 WITH cv AS (

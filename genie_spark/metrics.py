@@ -401,40 +401,6 @@ def relation_coverage(df: DataFrame) -> DataFrame:
     return trg.join(prd, "rel", "left_anti")
 
 
-def calibration_bins(samples: DataFrame, bins: int = 10) -> DataFrame:
-    """Reliability-diagram binning — the per-bin ingredients of Expected
-    Calibration Error (Naeini et al. 2015; Guo et al. 2017): samples
-    carry an integer-ppm confidence and an integer-ppm accuracy; each
-    falls into one of ``bins`` equal-width confidence bins, and the bin
-    reports its size, mean confidence, mean accuracy, and |gap| — all in
-    floor-integer ppm so the DuckDB oracle is bit-exact. The scalar ECE
-    is sum(n_samples * gap_ppm) / sum(n_samples) over the output.
-
-    Scale shape: one partial-aggregatable groupBy on a row-local bin id
-    — the shuffle carries ``bins`` counter rows per task, nothing else.
-    """
-    if bins < 1 or 1_000_000 % bins:
-        raise ValueError(f"bins must divide 1000000, got {bins}")
-    width = 1_000_000 // bins
-    b = F.expr(f"least({bins - 1}L, conf_ppm div {width}L)")
-    return (
-        samples.select(
-            b.cast("long").alias("bin"),
-            F.col("conf_ppm").cast("long").alias("_c"),
-            F.col("acc_ppm").cast("long").alias("_a"),
-        )
-        .groupBy("bin")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_samples"),
-            F.expr("sum(_c) div count(1)").cast("long").alias("mean_conf_ppm"),
-            F.expr("sum(_a) div count(1)").cast("long").alias("mean_acc_ppm"),
-            F.abs(
-                F.expr("sum(_c) div count(1)") - F.expr("sum(_a) div count(1)")
-            ).cast("long").alias("gap_ppm"),
-        )
-    )
-
-
 # --- multiclass classifier evaluation ---------------------------------------
 
 def confusion_matrix(df: DataFrame) -> DataFrame:

@@ -357,38 +357,6 @@ def test_evaluation_runner_matches_metric_modules(spark):
     assert set(ds) == {"micro", "macro"}
 
 
-def test_calibration_bins_exact(spark):
-    """Reliability-diagram binning: bin edges, floor-ppm means, |gap|,
-    and the top-edge clamp (conf_ppm == 1e6 lands in the last bin)."""
-    from genie_spark.metrics import calibration_bins
-
-    rows = [
-        (50_000, 100_000),     # bin 0
-        (149_999, 200_000),    # bin 1
-        (150_000, 100_000),    # bin 1
-        (1_000_000, 999_999),  # clamped to bin 9
-    ]
-    df = spark.createDataFrame(rows, ["conf_ppm", "acc_ppm"])
-    got = {r["bin"]: r for r in calibration_bins(df, bins=10).collect()}
-    assert set(got) == {0, 1, 9}
-    assert got[0]["n_samples"] == 1 and got[0]["gap_ppm"] == 50_000
-    b1 = got[1]
-    assert b1["n_samples"] == 2
-    assert b1["mean_conf_ppm"] == (149_999 + 150_000) // 2
-    assert b1["mean_acc_ppm"] == 150_000
-    assert b1["gap_ppm"] == abs(b1["mean_conf_ppm"] - b1["mean_acc_ppm"])
-    assert got[9]["mean_acc_ppm"] == 999_999
-
-
-def test_calibration_bins_rejects_bad_bins():
-    from genie_spark.metrics import calibration_bins
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="bins"):
-        calibration_bins(None, bins=7)
-
-
 def _twin_scores(rows):
     """Pure-Python micro (key-set) and target-relation macro (struct-set
     per relation) scores of (id, pred, target) rows, the reference's

@@ -114,7 +114,6 @@ HEADLINE = [
     "annotate_id_triples",
     "kilt_filters",
     "topk_per_group",
-    "skew_profile",
     "sentence_split",
     "sentence_split_bounded",
     "linearize_roundtrip",

@@ -706,29 +706,3 @@ def asof_snapshot(intervals: DataFrame) -> DataFrame:
         "o",
         (t - F.col("valid_from_epoch")).cast("bigint").alias("valid_for_s"),
     )
-
-
-def key_skew_profile(df: DataFrame) -> DataFrame:
-    """Shuffle-skew diagnosis for a prospective join/agg key ``k``: the
-    20 heaviest keys with count, corpus share (integer ppm) and
-    hot-key ratio (count ÷ mean key load, ppm) — the numbers that decide
-    whether a key needs salting (dedup_triples salt_buckets) or AQE
-    skew-join before a 100 TB shuffle keyed on it. ONE partial-agg
-    groupBy + a TakeOrderedAndProject + two broadcast 1-row joins; never
-    a global sort, never a second scan."""
-    counts = df.groupBy(F.col("k").alias("key")).agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-    totals = counts.agg(
-        F.sum("cnt").cast("long").alias("_total"),
-        F.count(F.lit(1)).cast("long").alias("_nkeys"),
-    )
-    top = counts.orderBy(F.desc("cnt"), F.asc("key")).limit(20)
-    return top.crossJoin(F.broadcast(totals)).select(
-        "key",
-        "cnt",
-        F.expr("cnt * 1000000L div _total").cast("long").alias("share_ppm"),
-        F.expr("cnt * 1000000L * _nkeys div _total").cast("long").alias(
-            "hot_ratio_ppm"
-        ),
-    )

@@ -490,36 +490,6 @@ def topk_per_group(spark, sf_dir):
     )
 
 
-@_register(
-    "skew_profile",
-    f"""
-WITH sk_c AS (
-  SELECT 'P' || l_partkey AS key, count(*)::BIGINT AS cnt
-  FROM lineitem WHERE l_shipdate < TIMESTAMP '{_CUT}'
-  GROUP BY 1),
-sk_t AS (SELECT sum(cnt)::BIGINT AS total, count(*)::BIGINT AS nkeys FROM sk_c)
-SELECT key, cnt,
-       (cnt * 1000000 // total)::BIGINT AS share_ppm,
-       (cnt * 1000000 * nkeys // total)::BIGINT AS hot_ratio_ppm
-FROM sk_c, sk_t
-ORDER BY cnt DESC, key LIMIT 20
-""",
-)
-def skew_profile_q(spark, sf_dir):
-    """Shuffle-skew diagnosis for the triple OBJECT key before the
-    graph-materialize dedup shuffle: top-20 heaviest keys with corpus
-    share and hot-key ratio in integer ppm — the numbers that pick
-    salt_buckets (canonicalize.key_skew_profile: one partial-agg
-    groupBy + TakeOrderedAndProject, no global sort)."""
-    from .canonicalize import key_skew_profile
-
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") < _CUT)
-    keyed = li.select(
-        F.concat(F.lit("P"), F.col("l_partkey").cast("string")).alias("k")
-    )
-    return key_skew_profile(keyed)
-
-
 # -- J1-analog: broadcast canonicalization join chain --------------------------
 
 @_register(

@@ -684,9 +684,11 @@ def class_term_lift(docs: DataFrame) -> DataFrame:
     term), the lift of the term's in-class rate over its corpus rate,
     integer ppm — ``lift = (tf_c / n_c) / (tf / n)`` computed as the shared
     two-step floor ``((tf_c * 1e6) div tf) * n div n_c`` so every
-    intermediate stays inside signed-64 at any corpus size. Returns the
-    top 10 terms per class by (lift desc, term asc) among terms with
-    corpus count >= 5: (cls, t, tf_c, tf, lift_ppm, rank).
+    intermediate stays inside signed-64 at any corpus size. Both token
+    totals count every token: ``n_c`` the class's, ``n`` the corpus's,
+    so the two rates share one census. Returns the top 10 terms per
+    class by (lift desc, term asc) among terms with corpus count >= 5:
+    (cls, t, tf_c, tf, lift_ppm, rank).
 
     Scale shape: ONE corpus explosion feeds both the (class, term) and
     the term census (partial-agg groupBys); token totals are two tiny
@@ -711,7 +713,7 @@ def class_term_lift(docs: DataFrame) -> DataFrame:
         F.col("tf") >= 5
     )
     nc = ct.groupBy("cls").agg(F.sum("tf_c").cast("long").alias("n_c"))
-    na = tt.agg(F.sum("tf").cast("long").alias("n_all"))
+    na = ct.agg(F.sum("tf_c").cast("long").alias("n_all"))
     win = Window.partitionBy("cls").orderBy(
         F.desc("lift_ppm"), F.asc("t")
     )

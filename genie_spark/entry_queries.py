@@ -5233,7 +5233,7 @@ ct AS (SELECT cls, t, count(*)::BIGINT AS tf_c FROM tw GROUP BY 1, 2),
 tt AS (SELECT t, sum(tf_c)::BIGINT AS tf FROM ct GROUP BY 1
        HAVING sum(tf_c) >= 5),
 nc AS (SELECT cls, sum(tf_c)::BIGINT AS n_c FROM ct GROUP BY 1),
-na AS (SELECT sum(tf)::BIGINT AS n_all FROM tt),
+na AS (SELECT sum(tf_c)::BIGINT AS n_all FROM ct),
 lf AS (SELECT ct.cls, ct.t, tf_c, tf,
               (((tf_c * 1000000) // tf) * n_all // n_c)::BIGINT AS lift_ppm
        FROM ct JOIN tt ON tt.t = ct.t

@@ -258,3 +258,42 @@ def test_tfidf_top_terms_ranking(spark):
     assert top[2][0][1] == "cherry" and top[2][0][2] == 2 * 3 * 10**6
     # rank-2 term in doc 0: common (tf=3, idf 1e6)
     assert top[0][1][1] == "common" and top[0][1][2] == 3 * 10**6
+
+
+def test_class_term_lift_matches_python_twin(spark):
+    """Lift = in-class rate over corpus rate, both over every token: the
+    corpus total counts the tokens of rare terms (tf < 5) too, exactly
+    as the class totals do."""
+    from collections import Counter
+
+    from genie_spark.datapipe.textstats import class_term_lift
+
+    rows = [
+        (0, "en", "a a a b b x y"),
+        (1, "en", "a b b q r s"),
+        (2, "de", "a b b b b b u v w"),
+        (3, "de", "a a z z"),
+    ]
+    docs = spark.createDataFrame(rows, ["doc_id", "lang", "text"])
+    got = sorted(
+        (r["cls"], r["t"], r["tf_c"], r["tf"], r["lift_ppm"], r["rank"])
+        for r in class_term_lift(docs).collect()
+    )
+
+    ct = Counter((lang, t) for _i, lang, text in rows for t in text.split())
+    tf, n_c = Counter(), Counter()
+    for (cls, t), c in ct.items():
+        tf[t] += c
+        n_c[cls] += c
+    n = sum(ct.values())
+    ranked = {}
+    for (cls, t), c in ct.items():
+        if tf[t] >= 5:
+            lift = (c * 1_000_000 // tf[t]) * n // n_c[cls]
+            ranked.setdefault(cls, []).append((-lift, t, c))
+    want = sorted(
+        (cls, t, c, tf[t], -neg, rank)
+        for cls, terms in ranked.items()
+        for rank, (neg, t, c) in enumerate(sorted(terms)[:10], 1)
+    )
+    assert got == want

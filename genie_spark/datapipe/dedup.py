@@ -25,11 +25,11 @@ def words_col(text: Column) -> Column:
     return F.split(text, " ")
 
 
-def shingles_col(text: Column, k: int = 3) -> Column:
-    """Word k-shingles as an array<string> — row-local, no shuffle.
-    Docs shorter than k words yield a single whole-text shingle so every
-    doc participates in dedup."""
-    w = words_col(text)
+def shingles_col(k: int = 3) -> Column:
+    """Word k-shingles of the ``text`` column as an array<string> —
+    row-local, no shuffle. Docs shorter than k words yield a single
+    whole-text shingle so every doc participates in dedup."""
+    w = words_col(F.col("text"))
     n = F.size(w)
     make = F.transform(
         F.sequence(F.lit(1), n - F.lit(k - 1)),
@@ -118,7 +118,7 @@ def minhash_signatures(
 ) -> DataFrame:
     return spread_for_compute(docs).select(
         F.col(id_col),
-        minhash_signature_col(shingles_col(F.col("text")), num_hashes).alias("sig"),
+        minhash_signature_col(shingles_col(), num_hashes).alias("sig"),
     )
 
 
@@ -229,7 +229,7 @@ def ngram_jaccard_pairs(
     contributes at most max_df·(max_df−1)/2 pairs. ``max_df=None``
     preserves the exact-Jaccard semantics for small corpora."""
     sh = spread_for_compute(docs).select(
-        F.col("doc_id"), F.explode(shingles_col(F.col("text"))).alias("shingle")
+        F.col("doc_id"), F.explode(shingles_col()).alias("shingle")
     ).distinct()
     if max_df is not None:
         rare = (
@@ -264,17 +264,18 @@ def ngram_jaccard_pairs(
 SIMHASH_BITS = 16
 
 
-def simhash_col(text: Column) -> Column:
-    """Per-doc ``SIMHASH_BITS``-bit SimHash over word tokens: bit i of the
-    signature is the sign of Σ_tokens (±1 by bit i of h60(token)).
-    Row-local HOF aggregate — no explode, no shuffle. Bit positions are
-    unrolled at plan-build time (shift amounts must be literals in Spark).
+def simhash_col() -> Column:
+    """Per-doc ``SIMHASH_BITS``-bit SimHash over the word tokens of the
+    ``text`` column: bit i of the signature is the sign of Σ_tokens (±1
+    by bit i of h60(token)). Row-local HOF aggregate — no explode, no
+    shuffle. Bit positions are unrolled at plan-build time (shift
+    amounts must be literals in Spark).
 
     Each token is md5-hashed ONCE into an array, then the per-bit ±1 fold
     runs over the integer hashes — the earlier form re-evaluated h60 inside
     every bit lambda (16 md5s per token; HOF lambdas get no common-
     subexpression elimination)."""
-    hs = F.transform(words_col(text), lambda t: h60(t))
+    hs = F.transform(words_col(F.col("text")), lambda t: h60(t))
 
     def bit_signs(h: Column) -> Column:
         return F.array(
@@ -307,7 +308,7 @@ def simhash_col(text: Column) -> Column:
 
 def simhash_table(docs: DataFrame) -> DataFrame:
     return spread_for_compute(docs).select(
-        F.col("doc_id"), simhash_col(F.col("text")).alias("simhash")
+        F.col("doc_id"), simhash_col().alias("simhash")
     )
 
 
@@ -448,10 +449,10 @@ def decontaminate(
     (docs shorter than ``n`` words contribute their whole text, so exact
     copies of short eval items are still caught)."""
     tg = spread_for_compute(docs).select(
-        F.col(id_col), F.explode(shingles_col(F.col("text"), n)).alias("gram")
+        F.col(id_col), F.explode(shingles_col(n)).alias("gram")
     )
     eg = eval_docs.select(
-        F.explode(shingles_col(F.col("text"), n)).alias("gram")
+        F.explode(shingles_col(n)).alias("gram")
     ).distinct()
     return (
         tg.join(F.broadcast(eg), "gram")
@@ -524,15 +525,14 @@ def substring_dup_stats(docs: DataFrame, n: int = 8) -> DataFrame:
     )
 
 
-def lines_col(
-    text: Column, line_words: int = 8, split: Optional[str] = None
-) -> Column:
-    """Document → array<string> of "lines", row-local. With ``split``
-    (e.g. ``'\\n'``) this is a delimiter split — the CCNet/RefinedWeb
-    production form over real crawls. Without it, fixed
+def lines_col(line_words: int = 8, split: Optional[str] = None) -> Column:
+    """The ``text`` column → array<string> of "lines", row-local. With
+    ``split`` (e.g. ``'\\n'``) this is a delimiter split — the
+    CCNet/RefinedWeb production form over real crawls. Without it, fixed
     ``line_words``-word chunks stand in for lines (the synthetic corpus
     has no newlines). Both forms have exact DuckDB twins
     (string_split)."""
+    text = F.col("text")
     if split is not None:
         return F.split(text, split, -1)
     w = words_col(text)
@@ -567,7 +567,7 @@ def line_dedup(
     row). Reassembly shuffles kept lines once on the doc id; line order
     is restored via array_sort over (pos, line) structs, not a global
     sort."""
-    lines = lines_col(F.col("text"), line_words, split)
+    lines = lines_col(line_words, split)
     joiner = split if split is not None else " "
     ex = docs.select(
         F.col(id_col), F.posexplode(lines).alias("pos", "line")
@@ -629,7 +629,7 @@ def boilerplate_strip(
     that reuses the df groupBy's hash partitioning (no second content
     shuffle of the corpus text). Reassembly shuffles kept lines once on
     doc id; order restored via array_sort, no global sort."""
-    lines = lines_col(F.col("text"), split=split)
+    lines = lines_col(split=split)
     joiner = split if split is not None else " "
     ex = docs.select(
         F.col(id_col), F.posexplode(lines).alias("pos", "line")
@@ -748,7 +748,7 @@ def prefix_jaccard_pairs(docs: DataFrame) -> DataFrame:
     # with every reference (measured 6.0s -> 7.7s with it)
     sh = docs.select(
         "doc_id",
-        F.explode(shingles_col(F.col("text"))).alias("shingle"),
+        F.explode(shingles_col()).alias("shingle"),
     ).distinct()
     dfq = sh.groupBy("shingle").agg(
         F.count(F.lit(1)).cast("long").alias("df")
@@ -832,7 +832,7 @@ def tfidf_cosine_pairs(docs: DataFrame) -> DataFrame:
     past any cut and the unigram score degenerates, while shingles stay
     rare at any scale (same reason the Jaccard tiers shingle)."""
     toks = spread_for_compute(docs).select(
-        "doc_id", F.explode(shingles_col(F.col("text"), 3)).alias("t")
+        "doc_id", F.explode(shingles_col(3)).alias("t")
     )
     postings = toks.groupBy("t", "doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
@@ -969,14 +969,14 @@ def ngram_novelty(ref_docs: DataFrame, new_docs: DataFrame) -> DataFrame:
     doc gets a defined novelty."""
     refg = (
         spread_for_compute(ref_docs).select(
-            F.explode(shingles_col(F.col("text"))).alias("g")
+            F.explode(shingles_col()).alias("g")
         )
         .distinct()
         .withColumn("seen", F.lit(1))
     )
     newg = spread_for_compute(new_docs).select(
         F.col("doc_id"),
-        F.explode(shingles_col(F.col("text"))).alias("g"),
+        F.explode(shingles_col()).alias("g"),
     )
     per = (
         newg.join(refg, "g", "left")
@@ -1012,7 +1012,7 @@ def vocab_growth(docs: DataFrame) -> DataFrame:
 
     sh = spread_for_compute(docs).select(
         F.col("doc_id"),
-        F.explode(shingles_col(F.col("text"))).alias("g"),
+        F.explode(shingles_col()).alias("g"),
     )
     fs = sh.groupBy("g").agg(F.min("doc_id").cast("long").alias("first_doc"))
     mx = docs.agg((F.max("doc_id") + 1).cast("long").alias("m"))

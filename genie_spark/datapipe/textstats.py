@@ -313,7 +313,7 @@ def fingerprints(docs: DataFrame) -> DataFrame:
     # twice and double every shingle md5 (interpreted HOFs get no CSE)
     mm = F.explode(
         F.transform(
-            F.array(F.transform(shingles_col(F.col("text")), lambda s: h60(s))),
+            F.array(F.transform(shingles_col(), lambda s: h60(s))),
             lambda h: F.struct(
                 F.array_min(h).alias("mn"), F.array_max(h).alias("mx")
             ),

@@ -2629,7 +2629,7 @@ _DECONTAM_N = 8
 def _grams_sql() -> str:
     """DuckDB expression: distinct word ``_DECONTAM_N``-grams of list
     column ``w`` with the whole-text fallback for short docs — the twin of
-    ``dedup.shingles_col(text, _DECONTAM_N)``."""
+    ``dedup.shingles_col(_DECONTAM_N)``."""
     k = _DECONTAM_N
     return (
         f"CASE WHEN len(w) >= {k} THEN list_distinct(list_transform("
@@ -3112,7 +3112,7 @@ def curation_report_q(spark, sf_dir):
             # null for non-survivors: posexplode_outer still emits their
             # single null marker row — no second pass over the corpus
             F.when(
-                F.col("survives"), lines_col(F.col("text"), _LINE_WORDS)
+                F.col("survives"), lines_col(_LINE_WORDS)
             ).alias("lines"),
         )
     )

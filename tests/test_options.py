@@ -216,11 +216,17 @@ _CONSTANT_NAME = re.compile(r"_?[A-Z][A-Z0-9_]*")
 
 def _constant(expr: ast.expr | None) -> bool:
     """A literal (``ast.literal_eval`` accepts it: numbers, negated numbers,
-    strings, ``None``, containers of those) or a module constant name."""
+    strings, ``None``, containers of those), a module constant name, or a
+    Column built from one literal (``F.col("doc_id")``, ``F.lit(0)``)."""
     if expr is None:
         return False
     if isinstance(expr, ast.Name):
         return bool(_CONSTANT_NAME.fullmatch(expr.id))
+    if (isinstance(expr, ast.Call) and isinstance(expr.func, ast.Attribute)
+            and isinstance(expr.func.value, ast.Name)
+            and expr.func.value.id == "F" and expr.func.attr in ("col", "lit")
+            and len(expr.args) == 1 and not expr.keywords):
+        expr = expr.args[0]
     try:
         ast.literal_eval(expr)
     except (ValueError, TypeError):

@@ -620,11 +620,12 @@ def _emb_arr(kind: str, name, dim: int, mod: int):
     )
 
 
-def _l1(sr, e):
-    """TransE L1 energy ``sum_d |sr[d] - e[d]|`` of two embedding
-    arrays, folded in dim order; ``sr`` is the per-dim s + r sum."""
+def _l1(e):
+    """TransE L1 energy ``sum_d |_sr[d] - e[d]|`` of the ``_sr`` column
+    (the per-dim s + r sum) and the embedding array ``e``, folded in dim
+    order."""
     return F.aggregate(
-        F.zip_with(sr, e, lambda a, b: F.abs(a - b)),
+        F.zip_with(F.col("_sr"), e, lambda a, b: F.abs(a - b)),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
@@ -689,8 +690,8 @@ def transe_energy(
         _emb_arr("e", o_neg, dim, mod).alias("_ne"),
     ).select(
         "s", "r", "o",
-        _l1(F.col("_sr"), F.col("_oe")).cast("long").alias("energy"),
-        _l1(F.col("_sr"), F.col("_ne")).cast("long").alias("energy_neg"),
+        _l1(F.col("_oe")).cast("long").alias("energy"),
+        _l1(F.col("_ne")).cast("long").alias("energy_neg"),
     )
     return staged.select(
         "s", "r", "o", "energy", "energy_neg",
@@ -763,7 +764,7 @@ def link_prediction_ranks(
         )
         .select(
             "s", "r", "o", "_sr",
-            _l1(F.col("_sr"), F.col("_oe")).cast("long").alias("_e_true"),
+            _l1(F.col("_oe")).cast("long").alias("_e_true"),
         )
     )
     ents = (
@@ -783,7 +784,7 @@ def link_prediction_ranks(
         .filter(F.col("e") != F.col("o"))
         .select(
             "s", "r", "o", "e", "_e_true",
-            _l1(F.col("_sr"), F.col("_ce")).cast("long").alias("_ec"),
+            _l1(F.col("_ce")).cast("long").alias("_ec"),
         )
         .groupBy("s", "r", "o")
         .agg(F.sum(beats(F.col("_ec"), F.col("e"))).alias("_n_all"))
@@ -795,7 +796,7 @@ def link_prediction_ranks(
         .filter(F.col("_o_known") != F.col("o"))
         .select(
             "s", "r", "o", "_o_known", "_e_true",
-            _l1(F.col("_sr"), _emb_arr("e", F.col("_o_known"), dim, mod))
+            _l1(_emb_arr("e", F.col("_o_known"), dim, mod))
             .cast("long").alias("_ec"),
         )
         .groupBy("s", "r", "o")

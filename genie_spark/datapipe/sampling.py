@@ -25,12 +25,12 @@ from .hashes import h60_salted, h60_salted_sql
 _GRAIN = 1_000_000
 
 
-def _unit(id_col: Column) -> Column:
+def _unit() -> Column:
     """Deterministic uniform in [0, 1) at 1e-6 grain from (salt "strata",
-    id)."""
-    return F.pmod(h60_salted(id_col.cast("string"), F.lit("strata")), F.lit(_GRAIN)) / float(
-        _GRAIN
-    )
+    ``doc_id``)."""
+    return F.pmod(
+        h60_salted(F.col("doc_id").cast("string"), F.lit("strata")), F.lit(_GRAIN)
+    ) / float(_GRAIN)
 
 
 def unit_sql() -> str:
@@ -57,7 +57,7 @@ def stratified_sample(
     frac = F.lit(float(default_fraction))
     for k, v in sorted(fractions.items()):
         frac = F.when(F.col("lang") == k, F.lit(float(v))).otherwise(frac)
-    return df.filter(_unit(F.col("doc_id")) < frac)
+    return df.filter(_unit() < frac)
 
 
 def split_thresholds(weights: Dict[str, float]):

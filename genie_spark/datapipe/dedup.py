@@ -328,7 +328,7 @@ def embedding_neardup_lsh_pairs(
     planes = hyperplanes(_vec_dim(emb, dim))
     return _salted_cosine_pairs(
         emb,
-        hyperplane_bucket_col(F.col("embedding"), planes),
+        hyperplane_bucket_col(planes),
         threshold, _block_salt(emb, 1 << 4),
     )
 

@@ -63,20 +63,15 @@ def norm_col(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
 
 
-def cosine_col(a: Column, b: Column) -> Column:
-    return dot_col(a, b) / (norm_col(a) * norm_col(b))
-
-
-def hyperplane_bucket_col(
-    vec_col: Column, planes: List[List[int]]
-) -> Column:
-    """array<float> → int bucket: bit p set iff Σ_d vec[d]·planes[p][d] > 0.
-    Row-local; the planes are literals so Catalyst constant-folds them."""
+def hyperplane_bucket_col(planes: List[List[int]]) -> Column:
+    """The ``embedding`` column → int bucket: bit p set iff
+    Σ_d embedding[d]·planes[p][d] > 0. Row-local; the planes are
+    literals so Catalyst constant-folds them."""
     bucket = F.lit(0).cast("long")
     for p, coeffs in enumerate(planes):
         proj = F.aggregate(
             F.zip_with(
-                vec_col,
+                F.col("embedding"),
                 arr_lit(coeffs),
                 lambda x, c: x.cast("double") * c,
             ),
@@ -121,17 +116,19 @@ def ivf_centroids(emb: DataFrame, n_cells: int = 8) -> List[List[float]]:
     return [[float(x) for x in r["embedding"]] for r in rows]
 
 
-def _cent_cos(vec_col: Column, cent: Sequence[float]) -> Column:
-    """Cosine to a centroid literal, rounded to 9dp — the rounding absorbs
-    engine summation-order drift so the argmax (and the DuckDB oracle's)
-    agree bit-for-bit."""
-    return F.round(cosine_col(vec_col, arr_lit(cent)), 9)
+def _cent_cos(cent: Sequence[float]) -> Column:
+    """Cosine of the ``embedding`` column to a centroid literal, rounded
+    to 9dp — the rounding absorbs engine summation-order drift so the
+    argmax (and the DuckDB oracle's) agree bit-for-bit."""
+    v, c = F.col("embedding"), arr_lit(cent)
+    return F.round(dot_col(v, c) / (norm_col(v) * norm_col(c)), 9)
 
 
-def ivf_cell_col(vec_col: Column, centroids: List[List[float]]) -> Column:
-    """Spherical IVF assignment: argmax cosine over centroid literals →
-    cell id (cells must align with the query metric; L2 cells over
-    unnormalized vectors scatter cosine-neighbors — measured recall
+def ivf_cell_col(centroids: List[List[float]]) -> Column:
+    """Spherical IVF assignment of the ``embedding`` column: argmax
+    cosine over centroid literals → cell id (cells must align with the
+    query metric; L2 cells over unnormalized vectors scatter
+    cosine-neighbors — measured recall
     collapse 2/10 vs 8+/10). The n_cells cosines are computed ONCE each
     into a single array and argmax'd via array_position(·, array_max(·)),
     instead of the chained-F.when form whose plan carried every cosine
@@ -139,7 +136,7 @@ def ivf_cell_col(vec_col: Column, centroids: List[List[float]]) -> Column:
     the source of the multi-MiB task binaries flagged in round 1.
     array_position returns the FIRST maximum → ties break to the lower
     cell id (same semantics as the reference strict->keep-first fold)."""
-    cos_arr = F.array(*[_cent_cos(vec_col, c) for c in centroids])
+    cos_arr = F.array(*[_cent_cos(c) for c in centroids])
     return (F.array_position(cos_arr, F.array_max(cos_arr)) - 1).cast("int")
 
 
@@ -226,7 +223,7 @@ def semantic_dedup_survivors(
     cells = spread_for_compute(emb).select(
         F.col("vec_id"),
         F.col("embedding"),
-        ivf_cell_col(F.col("embedding"), centroids).alias("cell"),
+        ivf_cell_col(centroids).alias("cell"),
     )
     pairs = embedding_neardup_pairs(
         cells, block_col="cell", threshold=threshold,

@@ -70,7 +70,7 @@ def curate_pages(
         pages = pages.join(hits, "url", "left_anti")
     if gate:
         # row-local filter form — no join, composes into the scan
-        pages = pages.filter(gate_passed_col(F.col("text")))
+        pages = pages.filter(gate_passed_col())
     if neardup_cc:
         # transitive near-dup clustering over the survivors: MinHash-LSH
         # candidate pairs -> connected components -> keep one page per

@@ -27,10 +27,11 @@ STOPWORDS = {
 TOKEN_PATTERN = "[A-Za-z0-9]+|[^A-Za-z0-9\\s]"  # BPE-ish: word runs or single punct
 
 
-def lang_scores_col(text: Column):
-    """Per-language stopword hit-rate columns. The guess is the argmax
-    (ties → lexicographic language order, deterministic)."""
-    w = F.split(F.lower(text), "\\s+")
+def lang_scores_col():
+    """Per-language stopword hit-rate columns of the ``text`` column. The
+    guess is the argmax (ties → lexicographic language order,
+    deterministic)."""
+    w = F.split(F.lower(F.col("text")), "\\s+")
     n = F.greatest(F.size(w), F.lit(1))
     scores = {}
     for lang, words in STOPWORDS.items():
@@ -42,7 +43,7 @@ def lang_scores_col(text: Column):
 
 def lang_id(docs: DataFrame) -> DataFrame:
     """(id, score_en/de/fr/es, lang_guess)."""
-    scores = lang_scores_col(F.col("text"))
+    scores = lang_scores_col()
     cols = [F.col("doc_id")] + [s.alias(f"score_{l}") for l, s in sorted(scores.items())]
     out = docs.select(*cols)
     guess = F.lit("unknown")
@@ -54,9 +55,11 @@ def lang_id(docs: DataFrame) -> DataFrame:
     return out.withColumn("lang_guess", F.when(best <= 0, "unknown").otherwise(guess))
 
 
-def _quality_cols(t: Column) -> "dict[str, Column]":
-    """The quality feature expressions, keyed by output column name —
-    shared by ``quality_features`` and the single-pass ``quality_gate``."""
+def _quality_cols() -> "dict[str, Column]":
+    """The quality feature expressions of the ``text`` column, keyed by
+    output column name — shared by ``quality_features`` and the
+    single-pass ``quality_gate``."""
+    t = F.col("text")
     n_chars = F.length(t)
     words = F.split(t, "\\s+")
     n_words = F.size(words)
@@ -94,7 +97,7 @@ def _quality_cols(t: Column) -> "dict[str, Column]":
 def quality_features(docs: DataFrame) -> DataFrame:
     """Length / punctuation-ratio / stopword-ratio / mean-word-length
     features + a composite quality score in [0,1]."""
-    cols = _quality_cols(F.col("text"))
+    cols = _quality_cols()
     return docs.select(
         F.col("doc_id"), *[c.alias(name) for name, c in cols.items()]
     )
@@ -118,16 +121,17 @@ def repetition_features(docs: DataFrame) -> DataFrame:
     row-local higher-order functions — zero shuffle, codegen'd, and
     filter-composable (``dup_3gram_frac < 0.2 AND top_word_frac < 0.3``
     prunes at the scan)."""
-    cols = _repetition_cols(F.col("text"))
+    cols = _repetition_cols()
     return docs.select(
         F.col("doc_id"), *[c.alias(name) for name, c in cols.items()]
     )
 
 
-def _repetition_cols(t: Column) -> "dict[str, Column]":
-    """The repetition feature expressions, keyed by output column name —
-    shared by ``repetition_features`` and the single-pass ``quality_gate``."""
-    w = F.split(t, " ")
+def _repetition_cols() -> "dict[str, Column]":
+    """The repetition feature expressions of the ``text`` column, keyed
+    by output column name — shared by ``repetition_features`` and the
+    single-pass ``quality_gate``."""
+    w = F.split(F.col("text"), " ")
     n_words = F.size(w)
 
     def dup_frac(n: int) -> Column:
@@ -221,36 +225,32 @@ def gate_reasons_col(
     stopword_ratio: Column,
     top_word_frac: Column,
     dup_3gram_frac: Column,
-    min_words: int = 20,
-    max_words: int = 90,
-    max_punct_ratio: float = 0.1,
-    min_stopword_ratio: float = 0.02,
-    max_top_word_frac: float = 0.2,
-    max_dup_3gram_frac: float = 0.1,
 ) -> Column:
     """The ordered fail_reasons expression over already-computed feature
-    columns (empty string = passed). Pure Column math, so it composes
-    into selects and scan-predicate filters."""
+    columns (empty string = passed): 20..90 words, punctuation ratio <=
+    0.1, stopword ratio >= 0.02, top-word share <= 0.2, duplicate
+    3-gram fraction <= 0.1. Pure Column math, so it composes into
+    selects and scan-predicate filters."""
     checks = [
-        ("too_short", n_words < min_words),
-        ("too_long", n_words > max_words),
-        ("high_punct", punct_ratio > max_punct_ratio),
-        ("low_stopword", stopword_ratio < min_stopword_ratio),
-        ("top_word", top_word_frac > max_top_word_frac),
-        ("dup_3gram", dup_3gram_frac > max_dup_3gram_frac),
+        ("too_short", n_words < 20),
+        ("too_long", n_words > 90),
+        ("high_punct", punct_ratio > 0.1),
+        ("low_stopword", stopword_ratio < 0.02),
+        ("top_word", top_word_frac > 0.2),
+        ("dup_3gram", dup_3gram_frac > 0.1),
     ]
     return F.concat_ws(
         ";", *[F.when(cond, F.lit(name)) for name, cond in checks]
     )
 
 
-def gate_passed_col(t: Column, **thresholds) -> Column:
-    """Single-expression keep/drop boolean over the raw text column —
+def gate_passed_col() -> Column:
+    """Single-expression keep/drop boolean over the raw ``text`` column —
     the filter form of :func:`quality_gate` for cascade stages that
     only need the verdict (row-local, join-free). Recomputes
     the feature expressions inline; use :func:`quality_gate` when the
     feature values themselves are needed."""
-    cols = {**_quality_cols(t), **_repetition_cols(t)}
+    cols = {**_quality_cols(), **_repetition_cols()}
     return (
         gate_reasons_col(
             n_words=cols["n_words"],
@@ -258,7 +258,6 @@ def gate_passed_col(t: Column, **thresholds) -> Column:
             stopword_ratio=cols["stopword_ratio"],
             top_word_frac=cols["top_word_frac"],
             dup_3gram_frac=cols["dup_3gram_frac"],
-            **thresholds,
         )
         == ""
     )
@@ -277,7 +276,7 @@ def quality_gate(docs: DataFrame) -> DataFrame:
     # reference measurably slows the scan (6.4s vs ~4s at sf0.1).
     # CollapseProject keeps multi-referenced non-trivial aliases
     # materialized, so the outer expressions are cheap column refs.
-    cols = {**_quality_cols(F.col("text")), **_repetition_cols(F.col("text"))}
+    cols = {**_quality_cols(), **_repetition_cols()}
     feat = docs.select(
         F.col("doc_id"), *[c.alias(name) for name, c in cols.items()]
     )

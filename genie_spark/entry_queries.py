@@ -3093,7 +3093,7 @@ def curation_report_q(spark, sf_dir):
     pre = variants.select(
         "vid", "text",
         normalize_url_col(F.col("url")).alias("_nu"),
-        gate_passed_col(F.col("text")).alias("_gate"),
+        gate_passed_col().alias("_gate"),
     )
     w = Window.partitionBy("_nu")
     tagged = (

@@ -28,7 +28,10 @@ _PATH = "^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)"
 _QUERY = "\\?([^#]*)"
 
 
-def normalize_url_col(url: Column) -> Column:
+def normalize_url_col() -> Column:
+    """The ``url`` column normalized: lower-cased scheme and host, no
+    trailing slash, query parameters kept in order minus ``utm_*``."""
+    url = F.col("url")
     scheme = F.lower(F.regexp_extract(url, _SCHEME, 1))
     host = F.lower(F.regexp_extract(url, _HOST, 1))
     path = F.regexp_replace(F.regexp_extract(url, _PATH, 1), "/$", "")
@@ -84,7 +87,7 @@ def dedup_by_url(
     """
     if keep not in ("first", "latest"):
         raise ValueError(f"keep must be 'first' or 'latest', got {keep!r}")
-    cols = [normalize_url_col(F.col("url")).alias("norm_url"), F.col(id_col)]
+    cols = [normalize_url_col().alias("norm_url"), F.col(id_col)]
     if keep == "latest":
         if ts_col is None:
             raise ValueError("keep='latest' requires ts_col")

@@ -3092,7 +3092,7 @@ def curation_report_q(spark, sf_dir):
     # projection), not the post-window (AQE-coalesced) stage
     pre = variants.select(
         "vid", "text",
-        normalize_url_col(F.col("url")).alias("_nu"),
+        normalize_url_col().alias("_nu"),
         gate_passed_col().alias("_gate"),
     )
     w = Window.partitionBy("_nu")

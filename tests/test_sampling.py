@@ -124,7 +124,7 @@ def test_url_normalization_rules(spark):
         ("https://h", "https://h"),
     ]
     df = spark.createDataFrame([(u,) for u, _ in cases], ["url"])
-    got = [r["n"] for r in df.select(normalize_url_col(F.col("url")).alias("n")).collect()]
+    got = [r["n"] for r in df.select(normalize_url_col().alias("n")).collect()]
     assert got == [want for _, want in cases]
 
 

@@ -163,7 +163,7 @@ def rebel_units(df: DataFrame) -> DataFrame:
             F.element_at(en["boundaries"], 2).alias("e"),
         ),
     )
-    units = bounded_units_pos_col(F.col("text"), bounds)
+    units = bounded_units_pos_col(bounds)
 
     def unit_triples(u: Column) -> Column:
         in_span = lambda b: (u["s"] < F.element_at(b, 2)) & (

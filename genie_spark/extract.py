@@ -130,9 +130,10 @@ def split_sentences_bounded_pos(
 # ---------------------------------------------------------------------------
 
 
-def html_to_text_col(html: Column) -> Column:
-    """Column[binary|string] html → Column[string] text; JVM-side only."""
-    text = F.regexp_replace(html.cast("string"), P_CLOSE_PATTERN, "\n")
+def html_to_text_col() -> Column:
+    """The ``html`` column (binary or string) → Column[string] text;
+    JVM-side only."""
+    text = F.regexp_replace(F.col("html").cast("string"), P_CLOSE_PATTERN, "\n")
     text = F.regexp_replace(text, TAG_PATTERN, "")
     text = F.replace(text, F.lit("&lt;"), F.lit("<"))
     text = F.replace(text, F.lit("&gt;"), F.lit(">"))
@@ -159,14 +160,15 @@ def sentences_df(pages: DataFrame) -> DataFrame:
     ).drop("_sents")
 
 
-def bounded_units_pos_col(text: Column, bounds: Column) -> Column:
-    """Column twin of :func:`split_sentences_bounded_pos`: one O(n)
-    aggregate fold per row (accumulator struct(pos, start, acc, out)),
-    entirely JVM-side. ``bounds`` is array<struct<s:long, e:long>>;
-    returns array<struct<unit:string, s:long, e:long>>. Elements are the
+def bounded_units_pos_col(bounds: Column) -> Column:
+    """Column twin of :func:`split_sentences_bounded_pos` over the
+    ``text`` column: one O(n) aggregate fold per row (accumulator
+    struct(pos, start, acc, out)), entirely JVM-side. ``bounds`` is
+    array<struct<s:long, e:long>>; returns
+    array<struct<unit:string, s:long, e:long>>. Elements are the
     paragraph's sentences plus a paragraph-end sentinel that flushes a
     still-blocked accumulation."""
-    paras = F.filter(F.split(text, "\n"), lambda p: F.length(p) > 0)
+    paras = F.filter(F.split(F.col("text"), "\n"), lambda p: F.length(p) > 0)
     elems = F.flatten(
         F.transform(
             paras,
@@ -237,18 +239,14 @@ def bounded_units_pos_col(text: Column, bounds: Column) -> Column:
     return F.aggregate(elems, init, step, lambda st: st["out"])
 
 
-def bounded_units_col(text: Column, bounds: Column) -> Column:
-    """Column twin of :func:`split_sentences_bounded` (units only)."""
-    return F.transform(
-        bounded_units_pos_col(text, bounds), lambda u: u["unit"]
-    )
-
-
 def sentences_bounded_df(pages: DataFrame) -> DataFrame:
     """Annotated pages(…, text, boundaries) → one row per unit
     (…, sent_idx, input) with boundary-aware merging — the KILT-table
-    rebuild path for gold-annotated sources."""
-    units = bounded_units_col(F.col("text"), F.col("boundaries"))
+    rebuild path for gold-annotated sources. The units are the Column
+    twin of :func:`split_sentences_bounded`."""
+    units = F.transform(
+        bounded_units_pos_col(F.col("boundaries")), lambda u: u["unit"]
+    )
     return (
         pages.withColumn("_units", units)
         .select("*", F.posexplode("_units").alias("sent_idx", "input"))

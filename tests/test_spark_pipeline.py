@@ -61,7 +61,7 @@ def test_sentences_df_byte_identical(spark, pages):
 
 
 def test_html_to_text_col_matches_python(spark, pages):
-    df = pages.select("url", "text", html_to_text_col(F.col("html")).alias("derived"))
+    df = pages.select("url", "text", html_to_text_col().alias("derived"))
     for r in df.collect():
         assert r["derived"] == r["text"], r["url"]
 
@@ -364,7 +364,7 @@ def test_bounded_split_byte_identical(spark):
         r["doc_id"]: [tuple(u) for u in r["units"]]
         for r in df.select(
             "doc_id",
-            bounded_units_pos_col(F.col("text"), F.col("boundaries")).alias("units"),
+            bounded_units_pos_col(F.col("boundaries")).alias("units"),
         ).collect()
     }
     for i, text, bounds in rows:

@@ -31,17 +31,17 @@ def _counts(df: DataFrame) -> DataFrame:
     keys: string element type takes Spark's fast hash-set intersect path,
     while struct elements fall back to interpreted ordering (~2× slower
     measured at sf0.1)."""
-    n_correct, n_pred, n_target = _key_set_counts(F.col("pred"), F.col("target"))
+    n_correct, n_pred, n_target = _key_set_counts()
     return df.withColumn("n_correct", n_correct).withColumn(
         "n_pred", n_pred
     ).withColumn("n_target", n_target)
 
 
-def _key_set_counts(pred: Column, target: Column):
-    """(n_correct, n_pred, n_target) of one sample over its distinct
-    triple keys."""
-    p = F.array_distinct(triple_key_col(pred))
-    t = F.array_distinct(triple_key_col(target))
+def _key_set_counts():
+    """(n_correct, n_pred, n_target) of one sample over the distinct
+    triple keys of its ``pred`` and ``target`` columns."""
+    p = F.array_distinct(triple_key_col(F.col("pred")))
+    t = F.array_distinct(triple_key_col(F.col("target")))
     return F.size(F.array_intersect(p, t)), F.size(p), F.size(t)
 
 
@@ -115,7 +115,7 @@ def _eval_counts(df: DataFrame) -> DataFrame:
     marker = tagged(
         True,
         F.lit(None).cast("string"),
-        *_key_set_counts(F.col("pred"), F.col("target")),
+        *_key_set_counts(),
     )
     contrib = df.select(
         F.explode(

@@ -3784,7 +3784,7 @@ def rdf_ntriples_q(spark, sf_dir):
     )
     return nt.select(
         "s", "r", "o_name",
-        ntriple_col(F.col("s"), F.col("r"), F.col("o_name")).alias("ntriple"),
+        ntriple_col(F.col("o_name")).alias("ntriple"),
     )
 
 

@@ -127,10 +127,8 @@ def triple_key_col(col: Column) -> Column:
     )
 
 
-def ntriple_col(
-    s: Column, r: Column, o_literal: Column, base: str = "http://example.org/"
-) -> Column:
-    """Format one (subject, relation, object-literal) assertion as an RDF
+def ntriple_col(o_literal: Column, base: str = "http://example.org/") -> Column:
+    """Format one (``s``, ``r``, object-literal) assertion as an RDF
     N-Triples line (W3C N-Triples: IRI subject/predicate, quoted literal
     object, terminating ' .'). Literal escaping covers backslash and
     double-quote, in that order — the two characters N-Triples requires
@@ -141,7 +139,7 @@ def ntriple_col(
         F.regexp_replace(o_literal, "\\\\", "\\\\\\\\"), '"', '\\\\"'
     )
     return F.concat(
-        F.lit(f"<{base}entity/"), s.cast("string"), F.lit("> "),
-        F.lit(f"<{base}prop/"), r.cast("string"), F.lit("> \""),
+        F.lit(f"<{base}entity/"), F.col("s").cast("string"), F.lit("> "),
+        F.lit(f"<{base}prop/"), F.col("r").cast("string"), F.lit("> \""),
         esc, F.lit('" .'),
     )

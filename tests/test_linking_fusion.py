@@ -91,7 +91,7 @@ def test_ntriple_escapes_quotes_and_backslashes(spark):
 
     df = _df(spark, [(1, "p", 'say "hi" \\ bye')], "s long, r string, o string")
     line = df.select(
-        ntriple_col(F.col("s"), F.col("r"), F.col("o")).alias("nt")
+        ntriple_col(F.col("o")).alias("nt")
     ).collect()[0]["nt"]
     assert line == (
         '<http://example.org/entity/1> <http://example.org/prop/p> '

@@ -21,15 +21,16 @@ from pyspark.sql import functions as F
 from .hashes import h60, minhash_params, minhash_perm
 
 
-def words_col(text: Column) -> Column:
-    return F.split(text, " ")
+def words_col() -> Column:
+    """The ``text`` column split on single spaces."""
+    return F.split(F.col("text"), " ")
 
 
 def shingles_col(k: int = 3) -> Column:
     """Word k-shingles of the ``text`` column as an array<string> —
     row-local, no shuffle. Docs shorter than k words yield a single
     whole-text shingle so every doc participates in dedup."""
-    w = words_col(F.col("text"))
+    w = words_col()
     n = F.size(w)
     make = F.transform(
         F.sequence(F.lit(1), n - F.lit(k - 1)),
@@ -275,7 +276,7 @@ def simhash_col() -> Column:
     runs over the integer hashes — the earlier form re-evaluated h60 inside
     every bit lambda (16 md5s per token; HOF lambdas get no common-
     subexpression elimination)."""
-    hs = F.transform(words_col(F.col("text")), lambda t: h60(t))
+    hs = F.transform(words_col(), lambda t: h60(t))
 
     def bit_signs(h: Column) -> Column:
         return F.array(
@@ -532,10 +533,9 @@ def lines_col(line_words: int = 8, split: Optional[str] = None) -> Column:
     ``line_words``-word chunks stand in for lines (the synthetic corpus
     has no newlines). Both forms have exact DuckDB twins
     (string_split)."""
-    text = F.col("text")
     if split is not None:
-        return F.split(text, split, -1)
-    w = words_col(text)
+        return F.split(F.col("text"), split, -1)
+    w = words_col()
     n_lines_c = F.ceil(F.size(w) / F.lit(float(line_words))).cast("int")
     return F.transform(
         F.sequence(F.lit(0), n_lines_c - 1),
@@ -683,7 +683,7 @@ def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     from .hashes import h60
 
     k, w = 3, 4
-    wd = words_col(F.col("text"))
+    wd = words_col()
     n = F.size(wd)
     grams = F.when(
         n >= k,

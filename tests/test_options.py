@@ -25,8 +25,9 @@ Two rules read that census:
 
 * ``test_every_parameter_takes_two_values``: a parameter is one-valued
   when every call site gives it the same constant — a literal (what
-  ``ast.literal_eval`` accepts, negated numbers included) or a module
-  constant name such as ``SIMHASH_BITS`` — compared by ``ast``;
+  ``ast.literal_eval`` accepts, negated numbers included), a module
+  constant name such as ``SIMHASH_BITS``, or a Column built from one
+  literal such as ``F.col("text")`` — compared by ``ast``;
 * ``test_every_defaulted_parameter_is_passed``: a defaulted parameter is
   unset when every call site gives it its default's ``ast`` (an argument
   spelling out the default does not set the option).

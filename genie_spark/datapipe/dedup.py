@@ -49,25 +49,31 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signature_col(sh: Column, num_hashes: int = 16) -> Column:
-    """array<string> shingles → array<bigint> MinHash signature.
+# The registry's MinHash near-dup configuration: signature length, LSH
+# bands and the estimated-Jaccard cut.
+MINHASH_N, MINHASH_BANDS, MINHASH_T = 16, 4, 0.5
+
+
+def minhash_signature_col(sh: Column) -> Column:
+    """array<string> shingles → array<bigint> MinHash signature of
+    ``MINHASH_N`` hashes.
     Row-local, no explode, no shuffle. Each shingle is md5-hashed ONCE
-    (h60) into a pre-hashed array, then expanded to its num_hashes affine
+    (h60) into a pre-hashed array, then expanded to its MINHASH_N affine
     permutations, and the signature is an elementwise-min fold over those
     per-shingle rows. The nesting is the point: higher-order functions are
     interpreted (no codegen, no common-subexpression elimination), so the
-    earlier form — num_hashes separate ``array_min(transform(base, ...))``
+    earlier form — MINHASH_N separate ``array_min(transform(base, ...))``
     terms sharing a ``base`` Column — inlined the md5 into every term and
-    paid num_hashes md5 evaluations per shingle (~25 s single-task at
+    paid MINHASH_N md5 evaluations per shingle (~25 s single-task at
     sf0.1; this form ~16× fewer md5s)."""
-    params = minhash_params(num_hashes)
+    params = minhash_params(MINHASH_N)
     hashed = F.transform(sh, lambda s: h60(s))
     perms = F.transform(
         hashed,
         lambda h: F.array(*[minhash_perm(h, a, b, c) for (a, b, c) in params]),
     )
     zero = F.array(
-        *[F.lit((1 << 63) - 1).cast("long") for _ in range(num_hashes)]
+        *[F.lit((1 << 63) - 1).cast("long") for _ in range(MINHASH_N)]
     )
     return F.aggregate(
         perms, zero, lambda acc, x: F.zip_with(acc, x, lambda a, b: F.least(a, b))
@@ -107,37 +113,31 @@ def spread_for_compute(docs: DataFrame) -> DataFrame:
     return docs
 
 
-# The registry's MinHash near-dup configuration: signature length, LSH
-# bands and the estimated-Jaccard cut.
-MINHASH_N, MINHASH_BANDS, MINHASH_T = 16, 4, 0.5
-
-
 def minhash_signatures(
     docs: DataFrame,
     id_col: str = "doc_id",
-    num_hashes: int = 16,
 ) -> DataFrame:
     return spread_for_compute(docs).select(
         F.col(id_col),
-        minhash_signature_col(shingles_col(), num_hashes).alias("sig"),
+        minhash_signature_col(shingles_col()).alias("sig"),
     )
 
 
 def banded_keys(
     sigs: DataFrame,
     id_col: str = "doc_id",
-    bands: int = 4,
-    rows_per_band: int = 4,
 ) -> DataFrame:
-    """(id, band, bkey) LSH band keys from a signature table — the
+    """(id, band, bkey) LSH band keys from a signature table
+    (``MINHASH_BANDS`` bands of ``MINHASH_N // MINHASH_BANDS`` rows) — the
     materialized form IS the near-dup index a production pipeline keeps
     between runs (see :func:`incremental_lsh_matches`). Row-local
     explode at the scan, no shuffle."""
+    rows_per_band = MINHASH_N // MINHASH_BANDS
     return sigs.select(
         F.col(id_col),
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(MINHASH_BANDS - 1)),
                 lambda b: F.struct(
                     b.alias("band"),
                     F.md5(
@@ -158,14 +158,12 @@ def banded_keys(
 def lsh_candidate_pairs(
     sigs: DataFrame,
     id_col: str = "doc_id",
-    bands: int = 4,
-    rows_per_band: int = 4,
 ) -> DataFrame:
     """Banded LSH: docs sharing any full band collide. Output (id_a, id_b)
     with id_a < id_b, distinct. Shuffle keys are (band, band_hash) — short
     rows; hot buckets (boilerplate-heavy corpora) are handled by AQE skew
     join at scale."""
-    banded = banded_keys(sigs, id_col, bands, rows_per_band)
+    banded = banded_keys(sigs, id_col)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -183,16 +181,13 @@ def lsh_candidate_pairs(
 def minhash_jaccard_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 4,
     threshold: float = 0.5,
 ) -> DataFrame:
     """MinHash+LSH near-dup pipeline: signatures → banded candidates →
     signature-estimated Jaccard ≥ threshold. Returns
     (id_a, id_b, est_jaccard)."""
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(docs, id_col=id_col, num_hashes=num_hashes).cache()
-    cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band)
+    sigs = minhash_signatures(docs, id_col=id_col).cache()
+    cands = lsh_candidate_pairs(sigs, id_col)
     sa = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
     est = (
@@ -205,7 +200,7 @@ def minhash_jaccard_pairs(
                     lambda m: m,
                 )
             )
-            / F.lit(float(num_hashes)),
+            / F.lit(float(MINHASH_N)),
         )
         .filter(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", F.round("est_jaccard", 6).alias("est_jaccard"))
@@ -904,15 +899,12 @@ def incremental_lsh_matches(
     the per-batch cost |batch| band rows against a bucket-pruned read;
     that is not implemented. Within-batch duplicates are a separate
     (tiny) lsh_candidate_pairs over the batch alone, by policy."""
-    rows_per_band = MINHASH_N // MINHASH_BANDS
-    sig_old = minhash_signatures(index_docs, num_hashes=MINHASH_N)
-    sig_new = minhash_signatures(batch_docs, num_hashes=MINHASH_N)
-    bo = banded_keys(
-        sig_old, bands=MINHASH_BANDS, rows_per_band=rows_per_band
-    ).select(F.col("doc_id").alias("old_id"), "band", "bkey")
-    bn = banded_keys(
-        sig_new, bands=MINHASH_BANDS, rows_per_band=rows_per_band
-    ).select(
+    sig_old = minhash_signatures(index_docs)
+    sig_new = minhash_signatures(batch_docs)
+    bo = banded_keys(sig_old).select(
+        F.col("doc_id").alias("old_id"), "band", "bkey"
+    )
+    bn = banded_keys(sig_new).select(
         F.col("doc_id").alias("new_id"), "band", "bkey"
     )
     cand = bn.join(bo, ["band", "bkey"]).select("new_id", "old_id").distinct()

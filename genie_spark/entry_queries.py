@@ -970,10 +970,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     from .datapipe.dedup import minhash_jaccard_pairs
 
     return minhash_jaccard_pairs(
-        _t(spark, sf_dir, "documents"),
-        num_hashes=MINHASH_N,
-        bands=MINHASH_BANDS,
-        threshold=MINHASH_T,
+        _t(spark, sf_dir, "documents"), threshold=MINHASH_T
     )
 
 
@@ -1139,10 +1136,7 @@ def dedup_components(spark, sf_dir):
     from .datapipe.graph import components_with_singletons
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_jaccard_pairs(
-        docs, num_hashes=MINHASH_N, bands=MINHASH_BANDS,
-        threshold=MINHASH_T,
-    )
+    pairs = minhash_jaccard_pairs(docs, threshold=MINHASH_T)
     return components_with_singletons(
         docs.select("doc_id"), pairs, "doc_id"
     )
@@ -1179,10 +1173,7 @@ def dedup_cluster_sizes(spark, sf_dir):
     from .datapipe.graph import components_with_singletons
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_jaccard_pairs(
-        docs, num_hashes=MINHASH_N, bands=MINHASH_BANDS,
-        threshold=MINHASH_T,
-    )
+    pairs = minhash_jaccard_pairs(docs, threshold=MINHASH_T)
     comp = components_with_singletons(docs.select("doc_id"), pairs, "doc_id")
     sizes = comp.groupBy("component").agg(
         F.count(F.lit(1)).cast("long").alias("sz")
@@ -1220,10 +1211,7 @@ def dedup_threshold_sweep_q(spark, sf_dir):
     engines (datapipe/dedup.py minhash_jaccard_pairs at threshold 0)."""
     from .datapipe.dedup import minhash_jaccard_pairs
 
-    est = minhash_jaccard_pairs(
-        _t(spark, sf_dir, "documents"),
-        num_hashes=MINHASH_N, bands=MINHASH_BANDS, threshold=0.0,
-    )
+    est = minhash_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.0)
     th = F.explode(
         F.expr("array(" + ", ".join(f"{t}L" for t in _SWEEP_PPM) + ")")
     ).alias("t_ppm")
@@ -1262,10 +1250,7 @@ def leakage_safe_split(spark, sf_dir):
     from .datapipe.sampling import assign_split
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_jaccard_pairs(
-        docs, num_hashes=MINHASH_N, bands=MINHASH_BANDS,
-        threshold=MINHASH_T,
-    )
+    pairs = minhash_jaccard_pairs(docs, threshold=MINHASH_T)
     comp = components_with_singletons(docs.select("doc_id"), pairs, "doc_id")
     out = assign_split(
         comp, {"train": 0.8, "val": 0.1, "test": 0.1},
@@ -2454,12 +2439,7 @@ def dedup_cascade(spark, sf_dir):
     survivors = variants.join(
         kept, variants["vid"] == kept["keep_id"], "left_semi"
     ).select(F.col("vid").alias("doc_id"), "text")
-    return minhash_jaccard_pairs(
-        survivors,
-        num_hashes=MINHASH_N,
-        bands=MINHASH_BANDS,
-        threshold=MINHASH_T,
-    )
+    return minhash_jaccard_pairs(survivors, threshold=MINHASH_T)
 
 
 ORACLES["dedup_cascade"] = _cascade_oracle()
@@ -2482,10 +2462,7 @@ def dedup_cascade_cc(spark, sf_dir):
     survivors = variants.join(
         kept, variants["vid"] == kept["keep_id"], "left_semi"
     ).select(F.col("vid").alias("doc_id"), "text")
-    pairs = minhash_jaccard_pairs(
-        survivors, num_hashes=MINHASH_N, bands=MINHASH_BANDS,
-        threshold=MINHASH_T,
-    )
+    pairs = minhash_jaccard_pairs(survivors, threshold=MINHASH_T)
     lab = components_with_singletons(
         survivors.select("doc_id"), pairs, "doc_id"
     )

@@ -311,17 +311,17 @@ def simhash_table(docs: DataFrame) -> DataFrame:
 def embedding_neardup_lsh_pairs(
     emb: DataFrame,
     threshold: float = 0.95,
-    dim: int = None,
 ) -> DataFrame:
     """Embedding near-dup with a REAL blocking key: vectors are bucketed
-    by the deterministic 4-plane hyperplane-LSH signature first, then the
-    all-pairs cosine runs within buckets only — the corpus-safe default
+    by the deterministic 4-plane hyperplane-LSH signature over the
+    ``EMB_DIM`` dimensions first, then the all-pairs cosine runs within
+    buckets only — the corpus-safe default
     (2^4 buckets cut the quadratic term ~4^4×). High-cosine pairs land in
     the same bucket with probability (1 − θ/π)^4, so the recall tradeoff
     is explicit."""
-    from .similarity import _vec_dim, hyperplane_bucket_col, hyperplanes
+    from .similarity import hyperplane_bucket_col, hyperplanes
 
-    planes = hyperplanes(_vec_dim(emb, dim))
+    planes = hyperplanes()
     return _salted_cosine_pairs(
         emb,
         hyperplane_bucket_col(planes),

@@ -30,6 +30,10 @@ from pyspark.sql import functions as F
 # The vector width of the ``embeddings`` table.
 EMB_DIM = 64
 
+# SemDeDup's cosine bar: a vector with a neighbour at least this close
+# and a smaller id in its cell is dropped.
+SEMDEDUP_T = 0.3
+
 
 def _plane_sign(plane: int, dim: int) -> int:
     """Deterministic ±1 coefficient from md5 (seed 42) — reproducible
@@ -38,9 +42,10 @@ def _plane_sign(plane: int, dim: int) -> int:
     return 1 if int(h[:2], 16) % 2 == 0 else -1
 
 
-def hyperplanes(dim: int) -> List[List[int]]:
-    """4 × dim ±1 matrix; inline these constants into both engines."""
-    return [[_plane_sign(p, d) for d in range(dim)] for p in range(4)]
+def hyperplanes() -> List[List[int]]:
+    """4 × ``EMB_DIM`` ±1 matrix; inline these constants into both
+    engines."""
+    return [[_plane_sign(p, d) for d in range(EMB_DIM)] for p in range(4)]
 
 
 def arr_lit(vals: Sequence[float]) -> Column:
@@ -80,16 +85,6 @@ def hyperplane_bucket_col(planes: List[List[int]]) -> Column:
         )
         bucket = bucket + F.when(proj > 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0).cast("long"))
     return bucket
-
-
-def _vec_dim(emb: DataFrame, dim) -> int:
-    """Resolve the ``embedding`` dimensionality. Callers should pass
-    ``dim`` (schema metadata or pipeline config) — the fallback probe runs
-    one extra Spark job at plan-build time, which a 100-TB plan should
-    not."""
-    if dim is not None:
-        return int(dim)
-    return len(emb.select("embedding").first()[0])
 
 
 # ---------------------------------------------------------------------------
@@ -174,7 +169,7 @@ def embedding_neardup_lsh_sql() -> str:
     """DuckDB twin of dedup.embedding_neardup_lsh_pairs at the registry's
     4 planes over ``EMB_DIM`` and cosine 0.3: same hyperplane literals,
     same bucket-blocked all-pairs cosine."""
-    planes = hyperplanes(EMB_DIM)
+    planes = hyperplanes()
     dot = "list_sum(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2]))"
     return f"""
 WITH base AS (
@@ -205,7 +200,6 @@ WHERE {dot} / (a.n * b.n) >= 0.3
 def semantic_dedup_survivors(
     emb: DataFrame,
     centroids: List[List[float]],
-    threshold: float = 0.95,
 ) -> DataFrame:
     """Vectors that SURVIVE semantic dedup: assign each vector its
     cluster (argmax cosine over the centroid literals, ties to the lower
@@ -215,7 +209,8 @@ def semantic_dedup_survivors(
     cosine-≥-threshold neighbor with a smaller id. Keep-lowest-id is the
     deterministic stand-in for the paper's keep-one-per-group policy —
     it needs no extra pass over the pair set and both engines agree on
-    it bit-for-bit. Returns ``(id, cell)``."""
+    it bit-for-bit. The threshold is ``SEMDEDUP_T``. Returns
+    ``(id, cell)``."""
     from .dedup import _block_salt, embedding_neardup_pairs, spread_for_compute
 
     # cell assignment is n_cells × dim interpreted HOF ops per row —
@@ -226,17 +221,14 @@ def semantic_dedup_survivors(
         ivf_cell_col(centroids).alias("cell"),
     )
     pairs = embedding_neardup_pairs(
-        cells, block_col="cell", threshold=threshold,
+        cells, block_col="cell", threshold=SEMDEDUP_T,
         salt=_block_salt(emb, len(centroids)),
     )
     dropped = pairs.select(F.col("id_b").alias("vec_id")).distinct()
     return cells.join(dropped, "vec_id", "left_anti").select("vec_id", "cell")
 
 
-def semantic_dedup_sql(
-    n_cells: int = 8,
-    threshold: float = 0.95,
-) -> str:
+def semantic_dedup_sql(n_cells: int = 8) -> str:
     """DuckDB twin of :func:`semantic_dedup_survivors` — data-derived
     hash-seeded centroids (same pick as :func:`ivf_centroids`), the same
     9dp-rounded argmax assignment, within-cell pairs whose exact cosine
@@ -262,7 +254,7 @@ cells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rnk = 1),
 dropped AS (
   SELECT DISTINCT b.vec_id
   FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE {_cos_sql("a.embedding", "b.embedding")} >= {threshold}
+  WHERE {_cos_sql("a.embedding", "b.embedding")} >= {SEMDEDUP_T}
 )
 SELECT c.vec_id, c.cell FROM cells c
 ANTI JOIN dropped d ON d.vec_id = c.vec_id

@@ -1085,14 +1085,13 @@ def embedding_neardup_lsh(spark, sf_dir):
     blocking key, so the within-block all-pairs term is bounded by the
     bucket size, not the corpus size."""
     from .datapipe.dedup import embedding_neardup_lsh_pairs
-    from .datapipe.similarity import EMB_DIM
 
     return embedding_neardup_lsh_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=0.3, dim=EMB_DIM
+        _t(spark, sf_dir, "embeddings"), threshold=0.3
     )
 
 
-_IVF_CELLS, _SEMDEDUP_T = 8, 0.3
+_IVF_CELLS = 8
 
 
 @_register("dedup_semantic", None)
@@ -1107,16 +1106,14 @@ def dedup_semantic(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings")
     cents = ivf_centroids(emb, n_cells=_IVF_CELLS)
-    return semantic_dedup_survivors(emb, cents, threshold=_SEMDEDUP_T)
+    return semantic_dedup_survivors(emb, cents)
 
 
 def _install_embedding_oracles():
     from .datapipe.similarity import embedding_neardup_lsh_sql, semantic_dedup_sql
 
     ORACLES["embedding_neardup_lsh"] = embedding_neardup_lsh_sql()
-    ORACLES["dedup_semantic"] = semantic_dedup_sql(
-        n_cells=_IVF_CELLS, threshold=_SEMDEDUP_T
-    )
+    ORACLES["dedup_semantic"] = semantic_dedup_sql(n_cells=_IVF_CELLS)
 
 
 _install_embedding_oracles()

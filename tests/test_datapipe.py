@@ -180,9 +180,9 @@ def test_neardup_threshold_boundary_matches_oracles(spark):
     assert spark_pairs == duck_pairs == []
 
     cents = ivf_centroids(emb, n_cells=1)  # one cell: the pair is compared
-    survivors = semantic_dedup_survivors(emb, cents, threshold=0.3)
+    survivors = semantic_dedup_survivors(emb, cents)
     spark_surv = sorted(tuple(r) for r in survivors.collect())
-    duck_surv = sorted(con.sql(semantic_dedup_sql(n_cells=1, threshold=0.3)).fetchall())
+    duck_surv = sorted(con.sql(semantic_dedup_sql(n_cells=1)).fetchall())
     assert spark_surv == duck_surv == [(1, 0), (2, 0)]
 
 

@@ -131,10 +131,10 @@ def _jobs_run(spark) -> int:
 
 
 def test_plan_build_fires_no_jobs(spark):
-    """Plan construction must be pure plan analysis: with ``dim`` supplied,
-    the LSH/near-dup builders probe nothing, and extract_pipeline's
-    partition check reads the physical plan instead of df.rdd — no Spark
-    job may fire before the action."""
+    """Plan construction must be pure plan analysis: the LSH/near-dup
+    builders probe nothing, and extract_pipeline's partition check reads
+    the physical plan instead of df.rdd — no Spark job may fire before
+    the action."""
     import __spark_entry__ as entry_mod
     from genie_spark.datapipe.dedup import embedding_neardup_lsh_pairs
     from genie_spark.pipeline import extract_pipeline
@@ -142,7 +142,7 @@ def test_plan_build_fires_no_jobs(spark):
     emb = _t(spark, "embeddings")
     pages = entry_mod._docs_as_pages(_t(spark, "documents"))
     before = _jobs_run(spark)
-    embedding_neardup_lsh_pairs(emb, dim=64)
+    embedding_neardup_lsh_pairs(emb)
     extract_pipeline(spark, pages, ["alpha beta"], ["rel"])
     assert _jobs_run(spark) == before, "plan build ran a Spark job"
 

@@ -350,16 +350,22 @@ def fuzzy_link(
     )
 
 
+# Entity resolution's bars: a mention-entity pair within Levenshtein
+# ER_MAX_DIST is a candidate edge, and blocking drops tokens found in more
+# than FUZZY_BLOCK_DF catalog rows (permissive on the 16-token fixture
+# vocab; the df-cut is the hub-token bound that matters at real
+# vocabulary scale).
+ER_MAX_DIST, FUZZY_BLOCK_DF = 1, 1_000_000
+
+
 def resolve_entities(
     mentions: DataFrame,
     catalog: DataFrame,
-    max_dist: int = 1,
-    max_block_df: int = 1_000_000,
 ) -> DataFrame:
     """Collective entity resolution: transitive clustering over the
     THRESHOLDED fuzzy-candidate graph. Where :func:`fuzzy_link` keeps
     each mention's single best entity, resolution keeps EVERY candidate
-    pair with dist <= max_dist as an edge of a bipartite
+    pair with dist <= ER_MAX_DIST as an edge of a bipartite
     mention-entity graph and runs distributed connected components over
     it — a mention close to two catalog entries merges those entries
     into one cluster (duplicate/near-duplicate catalog listings), and
@@ -381,7 +387,7 @@ def resolve_entities(
     from .datapipe.graph import connected_components
 
     spairs = fuzzy_candidate_strings(
-        mentions, catalog, max_block_df, max_dist=max_dist
+        mentions, catalog, FUZZY_BLOCK_DF, max_dist=ER_MAX_DIST
     )
     # string-level quotient edges: kind-tagged so a mention string that
     # equals a catalog name stays two distinct quotient nodes

@@ -20,7 +20,7 @@ from typing import Callable, Dict
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .canonicalize import ASOF_EPOCH
+from .canonicalize import ASOF_EPOCH, ER_MAX_DIST, FUZZY_BLOCK_DF
 from .datapipe.dedup import MINHASH_BANDS, MINHASH_N, MINHASH_T
 from .datapipe.graph import RULE_MIN_CONF, RULE_MIN_SUP
 
@@ -3499,10 +3499,6 @@ def lm_surprisal_q(spark, sf_dir):
 ORACLES["lm_surprisal"] = _lm_oracle()
 
 
-_FUZZY_BLOCK_DF = 1_000_000  # permissive on the 16-token fixture vocab;
-# the df-cut is the hub-token bound that matters at real vocabulary scale
-
-
 @_register(
     "fuzzy_link",
     f"""
@@ -3519,7 +3515,7 @@ fz_ctok AS (
 ),
 fz_keep AS (
   SELECT tok FROM (SELECT tok, count(*) AS df FROM fz_ctok GROUP BY tok)
-  WHERE df <= {_FUZZY_BLOCK_DF}
+  WHERE df <= {FUZZY_BLOCK_DF}
 ),
 fz_mtok AS (
   SELECT DISTINCT mention_id, tok FROM (
@@ -3560,7 +3556,7 @@ def fuzzy_link_q(spark, sf_dir):
         F.col("p_partkey").alias("mention_id"),
         F.regexp_replace(F.lower("p_name"), "a", "").alias("mention"),
     )
-    out = fuzzy_link(mentions, catalog, max_block_df=_FUZZY_BLOCK_DF)
+    out = fuzzy_link(mentions, catalog, max_block_df=FUZZY_BLOCK_DF)
     return out.select(
         F.col("mention_id").cast("bigint").alias("mention_id"),
         "mention",
@@ -4092,7 +4088,6 @@ def kg_snapshot_diff_q(spark, sf_dir):
     )
 
 
-_ER_MAX_DIST = 1
 
 
 @_register(
@@ -4112,7 +4107,7 @@ er_ctok AS (
 ),
 er_keep AS (
   SELECT tok FROM (SELECT tok, count(*) AS df FROM er_ctok GROUP BY tok)
-  WHERE df <= {_FUZZY_BLOCK_DF}
+  WHERE df <= {FUZZY_BLOCK_DF}
 ),
 er_mtok AS (
   SELECT DISTINCT mention_id, tok FROM (
@@ -4128,7 +4123,7 @@ er_edge0 AS (
   FROM er_cand c
   JOIN er_men n USING (mention_id)
   JOIN er_cat t ON c.id = t.id
-  WHERE levenshtein(n.mention, t.name) <= {_ER_MAX_DIST}
+  WHERE levenshtein(n.mention, t.name) <= {ER_MAX_DIST}
 ),
 er_edges AS (SELECT u, w FROM er_edge0 UNION ALL SELECT w, u FROM er_edge0),
 er_reach(v, rt) AS (
@@ -4149,7 +4144,7 @@ FROM er_verts v LEFT JOIN er_comp c ON c.v = v.node
 def er_clusters_q(spark, sf_dir):
     """Collective entity resolution over the part catalog: mutated
     mentions (every 'a' deleted) edge to EVERY catalog entry within
-    Levenshtein {_ER_MAX_DIST} (thresholded fuzzy candidates, not the
+    Levenshtein ``ER_MAX_DIST`` (thresholded fuzzy candidates, not the
     fuzzy_link argmin), then distributed connected components merge
     duplicate/near-duplicate catalog listings transitively — the
     cluster step fuzzy_link alone cannot do (A~B~C chains). Oracle:
@@ -4164,9 +4159,7 @@ def er_clusters_q(spark, sf_dir):
         F.col("p_partkey").alias("mention_id"),
         F.regexp_replace(F.lower("p_name"), "a", "").alias("mention"),
     )
-    out = resolve_entities(
-        mentions, catalog, max_dist=_ER_MAX_DIST, max_block_df=_FUZZY_BLOCK_DF
-    )
+    out = resolve_entities(mentions, catalog)
     return out.select("node", F.col("component").alias("cluster"))
 
 

@@ -272,7 +272,7 @@ def test_resolve_entities_transitive_merge(spark):
     mentions = _df(spark, [(10, "red box")], "mention_id long, mention string")
     got = {
         r["node"]: r["component"]
-        for r in resolve_entities(mentions, catalog, max_dist=1).collect()
+        for r in resolve_entities(mentions, catalog).collect()
     }
     assert got["M10"] == got["E1"] == got["E2"] == "E1"
     assert got["E3"] == "E3"  # singleton labels itself

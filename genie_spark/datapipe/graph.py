@@ -631,11 +631,14 @@ def _l1(e):
     )
 
 
+# The corrupted-object space of :func:`transe_energy`.
+TRANSE_NEG_MOD = 100_000
+
+
 def transe_energy(
     triples: DataFrame,
     dim: int = 8,
     mod: int = 1000,
-    neg_mod: int = 100_000,
 ) -> DataFrame:
     """TransE energy scoring (Bordes et al. 2013) over deterministic
     hash-embeddings, with a per-triple corrupted-object margin — the
@@ -647,7 +650,7 @@ def transe_energy(
         energy(s, r, o) = sum_d |e_s[d] + e_r[d] - e_o[d]|   (L1)
 
     (entities and relations hash in disjoint kind-salted spaces). The
-    corrupted object is o' = 'neg_' || (h60(s,r,o) % neg_mod) — the
+    corrupted object is o' = 'neg_' || (h60(s,r,o) % TRANSE_NEG_MOD) — the
     filtered-sampling refinement lives in :func:`negative_samples`;
     here the point is the scoring shape. margin = energy(o') -
     energy(o): a real embedding model trains to push it positive.
@@ -670,7 +673,7 @@ def transe_energy(
                     o.cast("string"),
                 )
             )
-            % neg_mod
+            % TRANSE_NEG_MOD
         ).cast("string"),
     )
 

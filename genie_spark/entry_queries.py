@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from .canonicalize import ASOF_EPOCH, ER_MAX_DIST, FUZZY_BLOCK_DF
 from .datapipe.dedup import MINHASH_BANDS, MINHASH_N, MINHASH_T
-from .datapipe.graph import RULE_MIN_CONF, RULE_MIN_SUP
+from .datapipe.graph import RULE_MIN_CONF, RULE_MIN_SUP, TRANSE_NEG_MOD
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: Dict[str, str] = {}
@@ -4209,7 +4209,6 @@ ORACLES["distant_supervision_spans"] = ORACLES[
 
 _TRANSE_DIM = 8
 _TRANSE_MOD = 1000
-_TRANSE_NEG_MOD = 100_000
 
 
 def _transe_emb_sql(kind: str, name_expr: str) -> str:
@@ -4250,9 +4249,7 @@ def kg_transe_energy_q(spark, sf_dir):
         F.col("l_returnflag").alias("r"),
         F.col("l_partkey").cast("string").alias("o"),
     ).distinct().repartition(spark.sparkContext.defaultParallelism)
-    out = transe_energy(
-        triples, dim=_TRANSE_DIM, mod=_TRANSE_MOD, neg_mod=_TRANSE_NEG_MOD
-    )
+    out = transe_energy(triples, dim=_TRANSE_DIM, mod=_TRANSE_MOD)
     return out.select(
         F.col("s").cast("bigint").alias("s"),
         "r",
@@ -4270,7 +4267,7 @@ WITH te AS (
 ),
 te_named AS (
   SELECT s, r, o,
-         'neg_' || ({{H_NEG}} % {_TRANSE_NEG_MOD})::varchar AS o_neg
+         'neg_' || ({{H_NEG}} % {TRANSE_NEG_MOD})::varchar AS o_neg
   FROM te
 )
 SELECT s::BIGINT AS s, r, o::BIGINT AS o,

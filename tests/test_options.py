@@ -27,7 +27,9 @@ Two rules read that census:
   when every call site gives it the same constant — a literal (what
   ``ast.literal_eval`` accepts, negated numbers included), a module
   constant name such as ``SIMHASH_BITS``, or a Column built from one
-  literal such as ``F.col("text")`` — compared by ``ast``;
+  literal such as ``F.col("text")`` — compared by ``ast``, a constant
+  name as the literal it is assigned (``EMB_DIM`` and ``64`` are one
+  value) when every module-level assignment of that name agrees;
 * ``test_every_defaulted_parameter_is_passed``: a defaulted parameter is
   unset when every call site gives it its default's ``ast`` (an argument
   spelling out the default does not set the option).
@@ -77,12 +79,14 @@ EXEMPT: dict[tuple[str, str, str], str] = {
 }
 
 # (module, function, parameter) -> why it stays an option every caller sets
-# to the same value: the unset ones above, and two only perfbench spells out.
+# to the same value: the unset ones above, and three only perfbench spells
+# out.
 ONE_VALUE_EXEMPT: dict[tuple[str, str, str], str] = {
     **EXEMPT,
     ("genie_spark.canonicalize", "write_graph", "mode"):
         "deployment setting: the write mode of the graph sink",
     ("genie_spark.datapipe.graph", "hits_fixed", "dedup_edges"): _PERFBENCH,
+    ("genie_spark.datapipe.graph", "kcore_sql_chain", "k"): _PERFBENCH,
 }
 
 # (module, qualified name, positional parameters, keyword-only parameters,
@@ -215,10 +219,19 @@ def census() -> tuple[int, list[tuple[str, str, str]]]:
 _CONSTANT_NAME = re.compile(r"_?[A-Z][A-Z0-9_]*")
 
 
+def _literal(expr: ast.expr) -> bool:
+    """``ast.literal_eval`` accepts it: numbers, negated numbers, strings,
+    ``None``, containers of those."""
+    try:
+        ast.literal_eval(expr)
+    except (ValueError, TypeError):
+        return False
+    return True
+
+
 def _constant(expr: ast.expr | None) -> bool:
-    """A literal (``ast.literal_eval`` accepts it: numbers, negated numbers,
-    strings, ``None``, containers of those), a module constant name, or a
-    Column built from one literal (``F.col("doc_id")``, ``F.lit(0)``)."""
+    """A literal, a module constant name, or a Column built from one
+    literal (``F.col("doc_id")``, ``F.lit(0)``)."""
     if expr is None:
         return False
     if isinstance(expr, ast.Name):
@@ -228,21 +241,46 @@ def _constant(expr: ast.expr | None) -> bool:
             and expr.func.value.id == "F" and expr.func.attr in ("col", "lit")
             and len(expr.args) == 1 and not expr.keywords):
         expr = expr.args[0]
-    try:
-        ast.literal_eval(expr)
-    except (ValueError, TypeError):
-        return False
-    return True
+    return _literal(expr)
+
+
+def _constant_values() -> dict[str, ast.expr]:
+    """Module constant name -> the literal it is assigned, for every name
+    whose module-level assignments across the repo (``X = 1`` and
+    ``X, Y = 1, 2``) all assign the same literal."""
+    assigned: dict[str, dict[str, ast.expr]] = {}
+    for path in _py_files():
+        for node in ast.parse(path.read_text()).body:
+            if not isinstance(node, ast.Assign):
+                continue
+            for target in node.targets:
+                pairs = ([(target, node.value)]
+                         if not isinstance(target, ast.Tuple)
+                         or not isinstance(node.value, ast.Tuple)
+                         else zip(target.elts, node.value.elts))
+                for t, v in pairs:
+                    if (isinstance(t, ast.Name)
+                            and _CONSTANT_NAME.fullmatch(t.id)):
+                        assigned.setdefault(t.id, {})[ast.dump(v)] = v
+    return {name: v for name, vs in assigned.items() if len(vs) == 1
+            for v in vs.values() if _literal(v)}
 
 
 def one_valued() -> tuple[int, list[tuple[str, str, str]]]:
     """(number of parameters, sorted (module, name, param) that every call
-    site, tests included, sets to the same constant)."""
+    site, tests included, sets to the same constant; a constant name
+    stands for the literal it is assigned)."""
     values = _call_sites()
+    literal = _constant_values()
+
+    def value(v: ast.expr) -> str:
+        return ast.dump(literal.get(v.id, v) if isinstance(v, ast.Name)
+                        else v)
+
     found = sorted(
         key for key, vs in values.items()
         if vs and all(_constant(v) for v in vs)
-        and len({ast.dump(v) for v in vs}) == 1)
+        and len({value(v) for v in vs}) == 1)
     return len(values), found
 
 

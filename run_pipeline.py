@@ -21,9 +21,9 @@ throughput metrics → canonicalize (broadcast joins, skew-aware dedup) →
 graph table partitioned by predicate.
 
 The entity/relation catalogs come from --ent-catalog/--rel-catalog parquet
-dirs (columns: id, name, provenance) or, absent those, are derived
-deterministically from the corpus vocabulary (sandbox mode — no external
-data).
+dirs (given together; columns: id, name, provenance) or, absent both, are
+derived deterministically from the corpus vocabulary (sandbox mode — no
+external data).
 """
 
 from __future__ import annotations
@@ -69,7 +69,7 @@ def load_pages(spark: SparkSession, args) -> DataFrame:
 
 
 def load_catalogs(spark: SparkSession, args, pages: DataFrame):
-    if args.ent_catalog and args.rel_catalog:
+    if args.ent_catalog:
         ents = [
             r["name"]
             for r in spark.read.parquet(args.ent_catalog).select("name").collect()
@@ -167,6 +167,10 @@ def parse_args(argv=None):
     args = ap.parse_args(argv)
     if not args.input or not args.output:
         ap.error("--input and --output are required (CLI or --config)")
+    for ent, rel in (("ent_catalog", "rel_catalog"), ("ent_trie", "rel_trie")):
+        if bool(getattr(args, ent)) != bool(getattr(args, rel)):
+            ap.error(f"--{ent.replace('_', '-')} and --{rel.replace('_', '-')}"
+                     " are given together or not at all")
     return args
 
 
@@ -216,7 +220,7 @@ def main():
         num_return_sequences=args.num_return_sequences,
         length_penalty=args.length_penalty, bos_first=args.bos_first,
         trie_artifacts=(args.ent_trie, args.rel_trie)
-        if args.ent_trie and args.rel_trie else None,
+        if args.ent_trie else None,
         hf_checkpoint=args.hf_checkpoint, hf_device=args.hf_device,
     )
 

@@ -39,3 +39,25 @@ def test_config_rejects_unknown_keys(tmp_path):
 def test_missing_required_still_errors():
     with pytest.raises(SystemExit):
         run_pipeline.parse_args(["--input", "only-input"])
+
+
+@pytest.mark.parametrize("half", [
+    ["--ent-catalog", "/cat/ents"], ["--rel-catalog", "/cat/rels"],
+    ["--ent-trie", "/tries/ent"], ["--rel-trie", "/tries/rel"],
+])
+def test_half_a_catalog_or_trie_pair_errors(half, capsys):
+    """A catalog or trie given without its partner must not be ignored
+    silently (the catalogs would be derived from the corpus instead)."""
+    with pytest.raises(SystemExit):
+        run_pipeline.parse_args(["--input", "i", "--output", "o", *half])
+    assert "are given together" in capsys.readouterr().err
+
+
+def test_full_catalog_and_trie_pairs_parse():
+    args = run_pipeline.parse_args([
+        "--input", "i", "--output", "o",
+        "--ent-catalog", "/cat/ents", "--rel-catalog", "/cat/rels",
+        "--ent-trie", "/tries/ent", "--rel-trie", "/tries/rel",
+    ])
+    assert (args.ent_catalog, args.rel_catalog) == ("/cat/ents", "/cat/rels")
+    assert (args.ent_trie, args.rel_trie) == ("/tries/ent", "/tries/rel")

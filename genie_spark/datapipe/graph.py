@@ -19,41 +19,58 @@ so results do not depend on partitioning and the DuckDB twins
 (``*_sql_chain``, ``closure_sql``) and the registry oracles reproduce
 them exactly.
 
-Lineage policy. A lazily unrolled loop whose step references the
-previous state k times grows its plan as k^i between cuts, so the
-iterative operators cut it with ``localCheckpoint(eager=False)`` through
-:func:`_iterate`. Each cut costs ~0.8 s of driver-side RDD translation
-whatever the data size, so operators whose step references the state
-two to five times (PageRank, k-core, Bellman-Ford) cut every second
-step, where 4 to 25 references between cuts are still cheap; label
-propagation cuts every step. The last step is always cut, so callers get
-a bounded plan. An input a loop re-joins every step, such as its edge
-set, is checkpointed EAGERLY once: under AQE a lazy checkpoint
-re-materializes its subtree at every cut of a plan that uses it
-(pagerank_fixed at sf0.1 went from 20.7 s to 8.4 s with the eager edge
-cut); HITS steps its hub frame through :func:`_iterate` and finishes
-with one authority and one hub step. Only connected components and
-random walks keep their own loops, because each does more than step one
-frame (a convergence probe that raises, an accumulated union); the two
-semi-naive closures share :func:`_semi_naive`. On a real cluster a reliable ``checkpoint``
-directory is the safer cut, because localCheckpoint blocks die with
-their executor.
+Lineage policy. :func:`_iterate` is the one loop that steps and cuts a
+state frame. A lazily unrolled loop whose step references the previous
+state k times grows its plan as k^i between cuts, so a fixed-count loop
+is cut with ``localCheckpoint(eager=False)``. Each cut costs ~0.8 s of
+driver-side RDD translation whatever the data size, so operators whose
+step references the state two to five times (PageRank, k-core,
+Bellman-Ford) cut every second step, where 4 to 25 references between
+cuts are still cheap; label propagation and HITS cut every step. The
+last step is always cut, so callers get a bounded plan. A loop that runs
+to convergence (connected components and the two semi-naive closures)
+names a boolean Column over its state that marks what a step changed.
+Every step is then cut EAGERLY on a frame that observes the count of
+changed rows (``DataFrame.observe``), so the cut's own job reports
+convergence and no probe job runs; the loop ends after the first step
+that changes nothing. The closures flag their last round's additions
+``_new`` and grow only those, which keeps them semi-naive. An input a
+loop re-joins every step, such as its edge set, is checkpointed EAGERLY
+once: under AQE a lazy checkpoint re-materializes its subtree at every
+cut of a plan that uses it (pagerank_fixed at sf0.1 went from 20.7 s to
+8.4 s with the eager edge cut). Random walks and :func:`k_hop` unroll
+instead, because every step's frame is part of their output: stepping
+one accumulated frame would re-materialize every earlier step each
+round. On a real cluster a reliable ``checkpoint`` directory is the
+safer cut, because localCheckpoint blocks die with their executor.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 
-def _iterate(state: DataFrame, step, n: int, every: int) -> DataFrame:
-    """``n`` applications of ``step`` to ``state``, cutting the lineage
-    after every ``every``-th step and after the last one (the lineage
-    policy is in the module docstring)."""
+def _iterate(state: DataFrame, step, n: int, every: int,
+             changed: Column | None = None) -> tuple[DataFrame, int | None]:
+    """At most ``n`` applications of ``step`` to ``state`` (the lineage
+    policy is in the module docstring). Without ``changed`` the lineage
+    is cut lazily after every ``every``-th step and after the last one.
+    With ``changed``, a boolean Column over the stepped state, every step
+    is cut eagerly, its cut's job counts the rows where ``changed`` holds,
+    and the loop ends after the first step that counts none. Returns the
+    state and the last count (None when nothing was counted)."""
+    left = None
     for i in range(1, n + 1):
         state = step(state)
-        if i % every == 0 or i == n:
+        if changed is not None:
+            counted = Observation()
+            state = state.observe(counted, F.count_if(changed).alias("n"))
+            state = state.localCheckpoint(eager=True)
+            if (left := counted.get["n"]) == 0:
+                break
+        elif i % every == 0 or i == n:
             state = state.localCheckpoint(eager=False)
-    return state
+    return state, left
 
 
 def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -163,9 +180,9 @@ def connected_components(
     vertex), then labels are pointer-jumped (``lbl := lbl(lbl)``, one
     shuffle keyed on label) — the jump turns O(diameter) rounds into
     O(log n); it stops when a round changes nothing. Each round is two
-    shuffles over the sparse edge list, is cut per round, and its
-    convergence test is one ``isEmpty`` on the changed-labels frame —
-    the loop structure of GraphFrames' connectedComponents."""
+    shuffles over the sparse edge list and one :func:`_iterate` cut,
+    whose own job counts the moved labels — the loop structure of
+    GraphFrames' connectedComponents."""
     sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("w"))
     sym = sym.union(sym.select(F.col("w").alias("u"), F.col("u").alias("w")))
     labels = (
@@ -175,11 +192,11 @@ def connected_components(
     )
     sym = sym.localCheckpoint(eager=False)
 
-    for _ in range(max_rounds):
+    def step(labels):
         # neighbor-min: aggregate each vertex's neighbors' labels, then
         # join back so the TRUE previous label (old_lbl) rides along —
-        # the convergence test below needs it, and this shape has the
-        # same shuffle count as the union+groupBy formulation.
+        # the convergence count needs it, and this shape has the same
+        # shuffle count as the union+groupBy formulation.
         nbr_min = (
             sym.join(labels.withColumnRenamed("id", "w"), "w")
             .groupBy(F.col("u").alias("id"))
@@ -196,24 +213,18 @@ def connected_components(
         jump = stepped.select(
             F.col("id").alias("lbl"), F.col("lbl").alias("lbl2")
         )
-        new = (
-            stepped.join(jump, "lbl", "left")
-            .select(
-                "id",
-                F.least(F.col("lbl"), F.coalesce("lbl2", "lbl")).alias("lbl"),
-                "old_lbl",
-            )
+        return stepped.join(jump, "lbl", "left").select(
+            "id",
+            F.least(F.col("lbl"), F.coalesce("lbl2", "lbl")).alias("lbl"),
+            "old_lbl",
         )
-        new = new.localCheckpoint(eager=True)
-        # convergence = NO label moved this round (labels only decrease,
-        # so post-jump lbl == old_lbl iff both the neighbor step and the
-        # jump were no-ops). A filter over the just-materialized blocks
-        # — no join back to the previous round's frame.
-        done = new.filter(F.col("lbl") != F.col("old_lbl")).isEmpty()
-        labels = new.select("id", "lbl")
-        if done:
-            break
-    else:
+
+    # converged = NO label moved in a round (labels only decrease, so
+    # post-jump lbl == old_lbl iff both the neighbor step and the jump
+    # were no-ops)
+    labels, moved = _iterate(labels, step, max_rounds, every=1,
+                             changed=F.col("lbl") != F.col("old_lbl"))
+    if moved != 0:
         raise RuntimeError(
             f"connected_components did not converge in {max_rounds} rounds"
         )
@@ -355,7 +366,7 @@ def _rank_with_restart(
             )
         )
 
-    pr = _iterate(pr, step, iterations, every=2)
+    pr, _ = _iterate(pr, step, iterations, every=2)
     return pr.select(F.col("v").alias("entity"), F.col("r").alias("rank_fp"))
 
 
@@ -366,25 +377,18 @@ def k_hop(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     min-hop groupBy dedupes multi-path reachability. The lazy unroll is
     linear in the hop count (each frontier feeds only the next), so no
     lineage cuts are needed."""
-    levels = [seeds.select("v").distinct()]
-    for _ in range(2):
-        frontier = levels[-1]
-        nxt = (
+    frontier = seeds.select("v").distinct()
+    out = frontier.select("v", F.lit(0).alias("hop"))
+    for hop in (1, 2):
+        frontier = (
             edges.join(frontier.withColumnRenamed("v", "src"), "src")
             .select(F.col("dst").alias("v"))
             .distinct()
         )
-        levels.append(nxt)
-    tagged = [
-        lvl.select("v", F.lit(i).cast("int").alias("hop"))
-        for i, lvl in enumerate(levels)
-    ]
-    out = tagged[0]
-    for t in tagged[1:]:
-        out = out.union(t)
+        out = out.union(frontier.select("v", F.lit(hop).alias("hop")))
     return out.groupBy(F.col("v").alias("entity")).agg(
         F.min("hop").alias("min_hop")
-    ).select(F.col("entity"), F.col("min_hop"))
+    )
 
 
 def _triangles(edges: DataFrame, src: str, dst: str):
@@ -1002,28 +1006,10 @@ def label_propagation_fixed(
             .select("v", F.col("_w.l").alias("lbl"))
         )
 
-    labels = _iterate(labels, vote, iterations, every=1)
+    labels, _ = _iterate(labels, vote, iterations, every=1)
     return labels.select(
         F.col("v").alias("id"), F.col("lbl").alias("community")
     )
-
-
-def _semi_naive(seen: DataFrame, grow, rounds: int) -> DataFrame:
-    """Semi-naive fixpoint: starting from the checkpointed fact set
-    ``seen`` (also the first delta), each of at most ``rounds`` rounds
-    derives ``new = grow(delta, seen, i)`` from the last round's delta
-    only and unions it into ``seen``; a round that derives nothing ends
-    the loop. ``new`` is checkpointed eagerly because it is used twice,
-    as the next delta and in the union, and its ``count()`` is the
-    convergence probe; the accumulator is cut lazily."""
-    delta = seen
-    for i in range(rounds):
-        new = grow(delta, seen, i).localCheckpoint(eager=True)
-        if new.count() == 0:
-            break
-        seen = seen.union(new).localCheckpoint(eager=False)
-        delta = new
-    return seen
 
 
 def transitive_closure(edges: DataFrame, max_hops: int = 12) -> DataFrame:
@@ -1042,34 +1028,36 @@ def transitive_closure(edges: DataFrame, max_hops: int = 12) -> DataFrame:
     frontier's dst (delta is the small side once the frontier
     stabilizes — at web-KG diameters the closure converges in < 10
     rounds) + one left-anti join against the accumulated closure, both
-    partition-colocatable on the pair key. The loop, its lineage cuts
-    and its one-count() convergence probe are :func:`_semi_naive`'s,
-    shared with :func:`closure_delta`. Dense closures (the
+    partition-colocatable on the pair key. The state is the pair set
+    with the last round's additions flagged ``_new``, stepped by
+    :func:`_iterate` until a round flags nothing. Dense closures (the
     output can be quadratic on hub-heavy graphs) are the caller's
     contract: run it on layered / DAG-ish KGs (ontology subsumption,
     containment hierarchies), not on social graphs."""
-    e = (
-        edges.select("src", "dst")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = edges.select("src", "dst").distinct().localCheckpoint(eager=False)
     e2 = e.select(F.col("src").alias("mid"), F.col("dst").alias("nxt"))
     seen = e.select(
-        "src", "dst", F.lit(1).cast("int").alias("min_hops")
-    ).localCheckpoint(eager=True)
+        "src", "dst", F.lit(1).cast("int").alias("min_hops"),
+        F.lit(True).alias("_new"),
+    )
 
-    # seen starts at hop 1, so round i finds the pairs first reached at
-    # hop i + 2 (BFS order: each pair at its shortest distance)
-    def grow(delta, seen, i):
-        return (
+    # a pair first reached this round is one hop longer than the delta
+    # pair it extends (BFS order: each pair at its shortest distance)
+    def step(seen):
+        delta = seen.filter(F.col("_new"))
+        new = (
             delta.join(e2, delta.dst == F.col("mid"))
-            .select("src", F.col("nxt").alias("dst"))
+            .select("src", F.col("nxt").alias("dst"),
+                    (F.col("min_hops") + 1).alias("min_hops"))
             .distinct()
             .join(seen.select("src", "dst"), ["src", "dst"], "left_anti")
-            .select("src", "dst", F.lit(i + 2).cast("int").alias("min_hops"))
         )
+        return seen.withColumn("_new", F.lit(False)).union(
+            new.withColumn("_new", F.lit(True)))
 
-    return _semi_naive(seen, grow, max_hops - 1)
+    seen, _ = _iterate(seen, step, max_hops - 1, every=1,
+                       changed=F.col("_new"))
+    return seen.select("src", "dst", "min_hops")
 
 
 def closure_sql() -> str:
@@ -1171,23 +1159,24 @@ def closure_delta(
     def not_known(df, known):
         return df.join(known.select("src", "dst"), ["src", "dst"], "left_anti")
 
-    def grow(delta, seen, _i):
+    def step(seen):
         # grow right: delta ∘ all_edges
+        delta = seen.filter(F.col("_new"))
         grown = (
             delta.join(e_all, delta.dst == F.col("mid"))
             .select("src", F.col("nxt").alias("dst"))
             .distinct()
         )
-        return not_known(not_known(grown, old_c), seen)
+        new = not_known(not_known(grown, old_c), seen)
+        return seen.withColumn("_new", F.lit(False)).union(
+            new.withColumn("_new", F.lit(True)))
 
     # round 0: the new edges themselves (minus already-known pairs)
-    seen = _semi_naive(
-        not_known(
-            new_edges.select("src", "dst").distinct(), old_c
-        ).localCheckpoint(eager=True),
-        grow,
-        max_hops,
-    )
+    seen = not_known(
+        new_edges.select("src", "dst").distinct(), old_c
+    ).withColumn("_new", F.lit(True))
+    seen, _ = _iterate(seen, step, max_hops, every=1, changed=F.col("_new"))
+    seen = seen.select("src", "dst")
     # close left: old pairs reaching into any delta pair
     # (x →old u, (u, y) ∈ seen) — one join, then the final dedup
     left = (
@@ -1394,7 +1383,7 @@ def hits_fixed(
 
     # one cut per iteration (on h) bounds the plan; a is cut only once,
     # after the last iteration
-    h = _iterate(
+    h, _ = _iterate(
         verts.select("v", F.lit(10**6).cast("long").alias("r")),
         lambda h: flow(flow(h, "src", "dst"), "dst", "src"),
         iterations - 1, every=1,
@@ -1479,7 +1468,7 @@ def kcore_fixed(edges: DataFrame, k: int = 2, rounds: int = 8) -> DataFrame:
         )
 
     und = _undirected(edges, "src", "dst").localCheckpoint(eager=True)
-    und = _iterate(und, peel, rounds, every=2)
+    und, _ = _iterate(und, peel, rounds, every=2)
     return _undirected_degree(und).select(
         F.col("v").alias("entity"), F.col("deg").alias("core_deg")
     )
@@ -1549,7 +1538,7 @@ def bellman_ford_fixed(
         )
         return dist.union(relaxed).groupBy("v").agg(F.min("d").alias("d"))
 
-    dist = _iterate(dist, relax, rounds, every=2)
+    dist, _ = _iterate(dist, relax, rounds, every=2)
     return dist.select(F.col("v").alias("entity"), F.col("d").alias("dist"))
 
 

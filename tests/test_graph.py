@@ -194,6 +194,38 @@ def test_nonconvergence_raises(spark):
         connected_components(edges, max_rounds=1)
 
 
+def test_convergence_loops_fire_no_probe_job(spark, monkeypatch):
+    """Connected components and both closures read convergence from the
+    count each round's own cut observes: an ``isEmpty`` or ``count`` on a
+    frame would be a separate probe job per round."""
+    from genie_spark.datapipe.graph import closure_delta, transitive_closure
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], ["id_a", "id_b"])
+    chain = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "d")], ["src", "dst"]
+    )
+    new = spark.createDataFrame([("d", "e")], ["src", "dst"])
+
+    def probe(*_args, **_kwargs):
+        raise AssertionError("a convergence loop ran a probe job")
+
+    monkeypatch.setattr(type(pairs), "isEmpty", probe)
+    monkeypatch.setattr(type(pairs), "count", probe)
+    comp = connected_components(pairs)
+    closure = transitive_closure(chain, max_hops=10)
+    delta = closure_delta(closure, new, chain.union(new), max_hops=10)
+    monkeypatch.undo()
+
+    assert _comp_map(comp) == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4}
+    assert {(r["src"], r["dst"]): r["min_hops"] for r in closure.collect()} == {
+        ("a", "b"): 1, ("b", "c"): 1, ("c", "d"): 1,
+        ("a", "c"): 2, ("b", "d"): 2, ("a", "d"): 3,
+    }
+    assert {(r["src"], r["dst"]) for r in delta.collect()} == {
+        ("a", "e"), ("b", "e"), ("c", "e"), ("d", "e"),
+    }
+
+
 def test_common_neighbors_bipartite_sides(spark):
     from genie_spark.datapipe.graph import common_neighbors_bipartite
 

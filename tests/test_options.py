@@ -254,10 +254,11 @@ def _constant_values() -> dict[str, ast.expr]:
             if not isinstance(node, ast.Assign):
                 continue
             for target in node.targets:
-                pairs = ([(target, node.value)]
-                         if not isinstance(target, ast.Tuple)
-                         or not isinstance(node.value, ast.Tuple)
-                         else zip(target.elts, node.value.elts))
+                if (isinstance(target, ast.Tuple)
+                        and isinstance(node.value, ast.Tuple)):
+                    pairs = zip(target.elts, node.value.elts)
+                else:
+                    pairs = [(target, node.value)]
                 for t, v in pairs:
                     if (isinstance(t, ast.Name)
                             and _CONSTANT_NAME.fullmatch(t.id)):

@@ -73,27 +73,24 @@ def main(argv=None) -> dict:
     spark = b.config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    from genie_spark.evaluation import evaluate_macro, evaluate_micro
+    from genie_spark.evaluation import evaluate_dataset
+    from genie_spark.metrics import per_relation_metrics
     from genie_spark.sources import read_relation_set, read_testing_output
 
     df = read_testing_output(spark, args.input)
-    rels = None
     if args.relations:
+        # the reference restricts BOTH sides (evaluation.py:29-30,34-36)
+        from genie_spark.kilt import filter_triples_on_relations
+
         rels = sorted(read_relation_set(spark, args.relations))
+        df = df.withColumn(
+            "pred", filter_triples_on_relations(df["pred"], rels)
+        ).withColumn("target", filter_triples_on_relations(df["target"], rels))
 
-    micro = evaluate_micro(
-        df,
-        relations_to_consider=rels,
-        num_bootstrap_samples=args.bootstrap,
-    )
-    if rels is not None:
-        from genie_spark.evaluation import _restrict
-
-        df = _restrict(df, list(rels))
-    macro, per_rel = evaluate_macro(df)
+    results = evaluate_dataset(df, num_bootstrap_samples=args.bootstrap)
+    per_rel = per_relation_metrics(df).filter("n_target > 0")
 
     os.makedirs(args.output_dir, exist_ok=True)
-    results = {"micro": micro, "macro": macro}
     for name, scores in results.items():
         for metric, score in scores.items():
             line = (

@@ -10,9 +10,11 @@ final merge — i.e. the metric computation is O(rows/cores) with a
 few-KB shuffle regardless of dataset size.
 
 Input convention: an eval DataFrame with one row per sample and two
-array<struct<s,r,o>> columns (``pred`` and ``target``). Per-sample
-intersection counts come from ``array_intersect`` on the normalized key
-form — no join, no shuffle, whole-stage codegen.
+array<struct<s,r,o>> columns (``pred`` and ``target``). Triple sets
+compare as structs, the reference's tuple sets: per sample,
+``array_distinct`` + ``array_intersect`` over the struct arrays — no
+join, no shuffle — and the micro counts are the sum of the per-relation
+counts.
 """
 
 from __future__ import annotations
@@ -21,28 +23,24 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .datapipe.hashes import affine_mix, h60
-from .triples import triple_key_col
+
+
+def _triple_sets():
+    """(pred, target, pred ∩ target) of one sample as distinct struct
+    arrays (reference triplet_set_f1.py:14-20). Struct equality treats
+    two NULL fields as equal, as Python tuple equality does."""
+    p = F.array_distinct(F.col("pred"))
+    t = F.array_distinct(F.col("target"))
+    return p, t, F.array_intersect(p, t)
 
 
 def _counts(df: DataFrame) -> DataFrame:
     """Per-sample n_correct / n_pred / n_target (reference
-    triplet_set_f1.py:14-20), the form the bootstrap resamples. Set
-    semantics via array_distinct + array_intersect on flat s␞r␞o string
-    keys: string element type takes Spark's fast hash-set intersect path,
-    while struct elements fall back to interpreted ordering (~2× slower
-    measured at sf0.1)."""
-    n_correct, n_pred, n_target = _key_set_counts()
-    return df.withColumn("n_correct", n_correct).withColumn(
-        "n_pred", n_pred
-    ).withColumn("n_target", n_target)
-
-
-def _key_set_counts():
-    """(n_correct, n_pred, n_target) of one sample over the distinct
-    triple keys of its ``pred`` and ``target`` columns."""
-    p = F.array_distinct(triple_key_col(F.col("pred")))
-    t = F.array_distinct(triple_key_col(F.col("target")))
-    return F.size(F.array_intersect(p, t)), F.size(p), F.size(t)
+    triplet_set_f1.py:14-20), the form the bootstrap resamples."""
+    p, t, both = _triple_sets()
+    return df.withColumn("n_correct", F.size(both)).withColumn(
+        "n_pred", F.size(p)
+    ).withColumn("n_target", F.size(t))
 
 
 def _prf(correct: Column, pred: Column, target: Column):
@@ -61,85 +59,44 @@ _COUNT_COLS = ("n_correct", "n_pred", "n_target")
 
 
 def _eval_counts(df: DataFrame) -> DataFrame:
-    """The one counts aggregation every triple-set metric reads:
-    (is_micro, rel, n_correct, n_pred, n_target).
+    """The one counts aggregation every triple-set metric reads: one row
+    (rel, n_correct, n_pred, n_target) per relation appearing on either
+    side of some sample — the per-relation micro counts (reference
+    MacroMetricsEvaluator, evaluators.py:65-147).
 
-    * ``is_micro = false``: one row per relation appearing on either side
-      of some sample — the per-relation micro counts (reference
-      MacroMetricsEvaluator, evaluators.py:65-147).
-    * ``is_micro = true``, ``rel`` NULL: one row, the micro counts
-      summed from one marker per sample carrying that sample's key-set
-      counts (:func:`_key_set_counts`, reference triplet_set_f1.py:14-20).
+    Each distinct struct has exactly one ``r`` and ``groupBy`` puts the
+    NULL relations in one group, so the rows partition every sample's
+    sets: the micro counts are their sum. Shape: per row, one tagged
+    (rel, c, np, nt) contribution per distinct triple of the
+    intersection, the pred set and the target set, then a SINGLE
+    explode + groupBy. Map-side partial agg means the shuffle carries
+    |distinct rels| × partitions counter rows, independent of data size.
+    A sample whose ``pred`` or ``target`` is NULL rather than an empty
+    array emits nothing."""
+    p, t, both = _triple_sets()
 
-    The key is ``(is_micro, rel)`` because a relation can itself be NULL.
-    The micro counts ride as their own marker instead of being summed
-    from the per-relation rows, because the two set semantics differ
-    where keys collide: two structs whose fields contain the ␞ separator
-    can share one ``s␞r␞o`` key (one micro triple, two per-relation ones).
-
-    Shape: per row, emit one (rel, is_correct, is_pred, is_target)
-    contribution per triple occurrence plus the marker — the row-local
-    intersect does the set logic, then a SINGLE explode + groupBy
-    aggregates. Map-side partial agg means the shuffle carries
-    (|distinct rels| + 1) × partitions counter rows, independent of data
-    size. (An earlier form re-filtered both arrays per candidate
-    relation — O(rels × |arrays|) interpreted HOF work per row, ~15×
-    slower at sf0.1.) The intersect runs on flat string keys (fast path,
-    see _counts). All THREE per-relation contributions derive rel from
-    the struct field itself — the intersection is the pred structs whose
-    key appears in the target keys, so a rel recovered by re-splitting
-    the joined key (which disagrees with x['r'] when a field contains the
-    separator or is NULL) can never split one relation's counts across
-    groups. A sample whose ``pred`` or ``target`` is NULL rather than an
-    empty array emits nothing."""
-    p = F.array_distinct(F.col("pred"))
-    t = F.array_distinct(F.col("target"))
-    t_keys = triple_key_col(t)
-    one_key = lambda x: F.element_at(triple_key_col(F.array(x)), 1)
-    both = F.filter(p, lambda x: F.array_contains(t_keys, one_key(x)))
-
-    def tagged(is_micro, rel, c, np_, nt):
-        # F.lit passes a Column through: the marker's counts are Columns
-        return F.struct(
-            F.lit(is_micro).alias("is_micro"),
-            rel.alias("rel"),
+    def tagged(c, np_, nt):
+        return lambda x: F.struct(
+            x["r"].alias("rel"),
             F.lit(c).alias("c"),
             F.lit(np_).alias("np"),
             F.lit(nt).alias("nt"),
         )
 
-    # the intersect + triple-key HOFs below are interpreted and
-    # compute-bound; spread the (byte-light, AQE-coalesced) eval frame to
-    # the core count so the per-row set logic parallelizes
-    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    marker = tagged(
-        True,
-        F.lit(None).cast("string"),
-        *_key_set_counts(),
-    )
     contrib = df.select(
         F.explode(
             F.concat(
-                F.array(marker),
-                F.transform(both, lambda x: tagged(False, x["r"], 1, 0, 0)),
-                F.transform(p, lambda x: tagged(False, x["r"], 0, 1, 0)),
-                F.transform(t, lambda x: tagged(False, x["r"], 0, 0, 1)),
+                F.transform(both, tagged(1, 0, 0)),
+                F.transform(p, tagged(0, 1, 0)),
+                F.transform(t, tagged(0, 0, 1)),
             )
         ).alias("e")
     )
-    return contrib.groupBy(
-        F.col("e.is_micro").alias("is_micro"), F.col("e.rel").alias("rel")
-    ).agg(
+    return contrib.groupBy(F.col("e.rel").alias("rel")).agg(
         F.sum("e.c").alias("n_correct"),
         F.sum("e.np").alias("n_pred"),
         F.sum("e.nt").alias("n_target"),
     )
-
-
-def _per_relation_counts(df: DataFrame) -> DataFrame:
-    """Per-relation micro counts (rel, n_correct, n_pred, n_target): the
-    ``is_micro = false`` rows of :func:`_eval_counts`."""
-    return _eval_counts(df).filter(~F.col("is_micro")).drop("is_micro")
 
 
 def micro_macro_metrics(df: DataFrame, target_relations_only: bool) -> DataFrame:
@@ -150,20 +107,18 @@ def micro_macro_metrics(df: DataFrame, target_relations_only: bool) -> DataFrame
     selects over this row, and ``evaluation.evaluate_dataset`` reads
     both halves from one action.
 
-    The micro half sums the marker row; the macro half averages the
-    per-relation scores over the averaging set — relations with ≥1
-    TARGET occurrence when ``target_relations_only`` (reference
+    The micro half sums every relation's counts (0 when no sample holds
+    a triple); the macro half averages the per-relation scores over the
+    averaging set — relations with ≥1 TARGET occurrence when
+    ``target_relations_only`` (reference
     MacroMetricsEvaluator, evaluators.py:84-87: all_relations =
     unq_target_rels, so a hallucinated pred-only relation does not add a
     zero-F1 group to the mean), else relations appearing on either side
     (stricter, and the semantics the round-1 oracles pinned)."""
-    is_micro = F.col("is_micro")
-    averaged = ~is_micro
-    if target_relations_only:
-        averaged = averaged & (F.col("n_target") > 0)
+    averaged = F.col("n_target") > 0 if target_relations_only else F.lit(True)
     p, r, f1 = _prf(F.col("n_correct"), F.col("n_pred"), F.col("n_target"))
     tot = _eval_counts(df).agg(
-        *[F.sum(F.when(is_micro, F.col(c))).alias(c) for c in _COUNT_COLS],
+        *[F.coalesce(F.sum(c), F.lit(0)).alias(c) for c in _COUNT_COLS],
         F.avg(F.when(averaged, p)).alias("macro_precision"),
         F.avg(F.when(averaged, r)).alias("macro_recall"),
         F.avg(F.when(averaged, f1)).alias("macro_f1"),
@@ -211,7 +166,7 @@ def macro_metrics(
 
 def per_relation_metrics(df: DataFrame) -> DataFrame:
     """Per-relation micro P/R/F1 table (the rows A2 averages)."""
-    per_rel = _per_relation_counts(df)
+    per_rel = _eval_counts(df)
     p, r, f1 = _prf(F.col("n_correct"), F.col("n_pred"), F.col("n_target"))
     return per_rel.select(
         "rel", p.alias("precision"), r.alias("recall"), f1.alias("f1"),
@@ -228,7 +183,7 @@ def bucket_metrics(df: DataFrame, train_rel_counts: DataFrame) -> DataFrame:
     ``train_rel_counts``: DataFrame(rel, count) — typically
     ``train.select(explode(...)).groupBy(rel).count()`` (A6).
     """
-    per_rel = _per_relation_counts(df)
+    per_rel = _eval_counts(df)
     buckets = train_rel_counts.select(
         F.col("rel"),
         F.floor(F.log2(F.col("count"))).cast("long").alias("bucket"),
@@ -254,7 +209,7 @@ def zero_shot_metrics(df: DataFrame, rel_groups: DataFrame) -> DataFrame:
     MicroMetricsZSEvaluator, evaluators.py:206-263: groups like
     dropped / ignored / seen). ``rel_groups``: DataFrame(rel, group);
     relations missing from the mapping score under group 'seen'."""
-    per_rel = _per_relation_counts(df)
+    per_rel = _eval_counts(df)
     joined = per_rel.join(F.broadcast(rel_groups), "rel", "left").fillna(
         {"group": "seen"}
     )

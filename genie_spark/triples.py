@@ -110,23 +110,6 @@ def format_triples_col(col: Column) -> Column:
     )
 
 
-def triple_key_col(col: Column) -> Column:
-    """array<struct<s,r,o>> → array<string> of 's␞r␞o' keys — a flat form
-    that survives set ops / hashing identically in Spark and DuckDB.
-    NULL fields map to a sentinel: concat_ws silently SKIPS NULLs, which
-    would let distinct structs (s, NULL, o) and (s, o, NULL) collide on
-    one key and corrupt set counts."""
-    return F.transform(
-        col,
-        lambda t: F.concat_ws(
-            "␞",
-            F.coalesce(t["s"], F.lit("␀")),
-            F.coalesce(t["r"], F.lit("␀")),
-            F.coalesce(t["o"], F.lit("␀")),
-        ),
-    )
-
-
 def ntriple_col(o_literal: Column, base: str = "http://example.org/") -> Column:
     """Format one (``s``, ``r``, object-literal) assertion as an RDF
     N-Triples line (W3C N-Triples: IRI subject/predicate, quoted literal

@@ -158,15 +158,10 @@ def test_drop_ignored_relations_relinearizes(spark, kilt_df):
 
 
 def test_per_relation_counts_null_and_separator_fields(spark):
-    """Rel derivation must come from the struct field for ALL
-    contributions: a NULL field or a field containing the key separator
-    must neither split one relation's counts across groups nor make
-    n_correct exceed n_pred."""
-    from genie_spark.metrics import per_relation_metrics
-
-    def t(s, r, o):
-        return {"s": s, "r": r, "o": o}
-
+    """Triple sets compare as structs: a NULL field or a field containing
+    ␞ or ␀ must neither split one relation's counts across groups, nor
+    make n_correct exceed n_pred or n_target, nor let two different
+    triples match because their joined ``s␞r␞o`` strings are equal."""
     rows = [
         # rel containing the separator, present in both sides
         (1, [t("a", "x␞y", "b")], [t("a", "x␞y", "b")]),
@@ -174,16 +169,24 @@ def test_per_relation_counts_null_and_separator_fields(spark):
         # collide; only one is shared
         (2, [t("a", "rel", None), t("a", None, "rel")], [t("a", "rel", None)]),
     ]
-    df = spark.createDataFrame(
-        rows, "id int, pred array<struct<s:string,r:string,o:string>>, "
-        "target array<struct<s:string,r:string,o:string>>"
-    )
-    out = {r["rel"]: r for r in per_relation_metrics(df).collect()}
+    out = {r["rel"]: r for r in per_relation_metrics(spark.createDataFrame(rows, SCHEMA)).collect()}
     assert out["x␞y"]["n_correct"] == 1 and out["x␞y"]["n_pred"] == 1
     assert out["rel"]["n_correct"] == 1 and out["rel"]["n_pred"] == 1
     for r in out.values():
-        assert r["n_correct"] <= r["n_pred"]
-        assert r["n_correct"] <= r["n_target"] + r["n_pred"]  # sanity
+        assert r["n_correct"] <= min(r["n_pred"], r["n_target"])
+
+    # no equal triple on either row, but equal s␞r␞o strings (with a NULL
+    # field spelled ␀): nothing is correct
+    collide = spark.createDataFrame([
+        (3, [t("a", "x␞y", "b")], [t("a␞x", "y", "b")]),
+        (4, [t("a", None, "b")], [t("a", "␀", "b")]),
+    ], SCHEMA)
+    micro = micro_metrics(collide).first()
+    assert (micro["n_correct"], micro["n_pred"], micro["n_target"]) == (0, 2, 2)
+    per_rel = per_relation_metrics(collide).collect()
+    assert {r["rel"] for r in per_rel} == {"x␞y", "y", None, "␀"}
+    for r in per_rel:
+        assert r["n_correct"] <= min(r["n_pred"], r["n_target"])
 
 
 def test_multinomial_bootstrap_exact_totals(spark):
@@ -315,12 +318,12 @@ def test_sequence_nll_forced_scoring():
 
 
 def test_evaluation_runner_matches_metric_modules(spark):
-    """evaluate_micro/evaluate_macro/evaluate_dataset (the reference's
-    get_metrics + evaluator shapes) must agree with the underlying metric
-    aggregations, honor relation restriction on both sides, and use the
-    target-occurring averaging set for macro."""
-    from genie_spark.evaluation import evaluate_dataset, evaluate_macro, evaluate_micro
-    from genie_spark.metrics import micro_metrics
+    """evaluate_dataset (the reference's get_metrics + evaluator shapes)
+    must agree with the underlying metric aggregations, score a relation
+    restriction of both sides (kilt.filter_triples_on_relations), and use
+    the target-occurring averaging set for macro."""
+    from genie_spark.evaluation import evaluate_dataset
+    from genie_spark.kilt import filter_triples_on_relations
 
     def t(s, r, o):
         return {"s": s, "r": r, "o": o}
@@ -335,65 +338,59 @@ def test_evaluation_runner_matches_metric_modules(spark):
         "target array<struct<s:string,r:string,o:string>>"
     )
 
-    micro = evaluate_micro(df)
+    ds = evaluate_dataset(df)
     base = micro_metrics(df).first()
-    assert micro == {"precision": base["precision"], "recall": base["recall"],
-                     "f1": base["f1"]}
+    assert ds["micro"] == {"precision": base["precision"], "recall": base["recall"],
+                           "f1": base["f1"]}
+    # 'halluc' (pred-only) is not averaged: (r1 + r2 + r3) / 3
+    assert ds["macro"]["recall"] == pytest.approx((1.0 + 0.5 + 0.0) / 3)
+    assert ds["macro"]["precision"] == pytest.approx((1.0 + 1.0 + 0.0) / 3)
 
     # restriction applies to BOTH sides (evaluation.py:34-36)
-    only_r1 = evaluate_micro(df, relations_to_consider=["r1"])
-    assert only_r1["precision"] == 1.0 and only_r1["recall"] == 1.0
+    only_r1 = evaluate_dataset(df.select(
+        filter_triples_on_relations(df["pred"], ["r1"]).alias("pred"),
+        filter_triples_on_relations(df["target"], ["r1"]).alias("target"),
+    ))
+    assert only_r1["micro"] == {"precision": 1.0, "recall": 1.0, "f1": 1.0}
+    assert only_r1["macro"] == {"precision": 1.0, "recall": 1.0, "f1": 1.0}
 
-    macro, per_rel = evaluate_macro(df)
-    rels = {r["rel"] for r in per_rel.collect()}
-    assert rels == {"r1", "r2", "r3"}  # 'halluc' (pred-only) excluded
-    assert macro["recall"] == pytest.approx((1.0 + 0.5 + 0.0) / 3)
-
-    boot = evaluate_micro(df, num_bootstrap_samples=5)
-    for m, (mean, std) in boot.items():
+    boot = evaluate_dataset(df, num_bootstrap_samples=5)
+    assert boot["macro"] == ds["macro"]
+    for m, (mean, std) in boot["micro"].items():
         assert 0.0 <= mean <= 1.0 and std >= 0.0
 
-    ds = evaluate_dataset(df, num_bootstrap_samples=5)
-    assert set(ds) == {"micro", "macro"}
+
+def _prf_py(c, p, t):
+    pr = 0.0 if p == 0 else c / p
+    rc = 0.0 if t == 0 else c / t
+    return pr, rc, 0.0 if pr + rc == 0 else 2 * pr * rc / (pr + rc)
 
 
-def _twin_scores(rows):
-    """Pure-Python micro (key-set) and target-relation macro (struct-set
-    per relation) scores of (id, pred, target) rows, the reference's
-    evaluator semantics."""
-    def key(t):
-        return "␞".join("␀" if f is None else f for f in t)
-
-    def prf(c, p, t):
-        pr = 0.0 if p == 0 else c / p
-        rc = 0.0 if t == 0 else c / t
-        return pr, rc, 0.0 if pr + rc == 0 else 2 * pr * rc / (pr + rc)
-
-    c = p = t = 0
-    rel = {}
+def _twin_counts(rows):
+    """Pure-Python (n_correct, n_pred, n_target) of (id, pred, target)
+    rows, micro and per relation, over plain tuple sets: the reference's
+    semantics (triplet_set_f1.py:14-20, evaluators.py:65-147)."""
+    micro, per_rel = [0, 0, 0], {}
     for _, pred, target in rows:
-        pk, tk = {key(x) for x in pred}, {key(x) for x in target}
-        c, p, t = c + len(pk & tk), p + len(pk), t + len(tk)
         ps, ts = set(pred), set(target)
-        tkeys = {key(x) for x in ts}
-        for x in ps:
-            n = rel.setdefault(x[1], [0, 0, 0])
-            n[0] += key(x) in tkeys
-            n[1] += 1
-        for x in ts:
-            rel.setdefault(x[1], [0, 0, 0])[2] += 1
-    scored = [prf(*n) for n in rel.values() if n[2] > 0]
-    macro = [sum(s[i] for s in scored) / len(scored) for i in range(3)]
-    return prf(c, p, t), macro
+        for i, xs in enumerate((ps & ts, ps, ts)):
+            micro[i] += len(xs)
+            for x in xs:
+                per_rel.setdefault(x[1], [0, 0, 0])[i] += 1
+    return tuple(micro), {r: tuple(n) for r, n in per_rel.items()}
+
+
+def _twin_macro(per_rel, target_relations_only):
+    scored = [_prf_py(*n) for n in per_rel.values() if n[2] > 0 or not target_relations_only]
+    return tuple(sum(s[i] for s in scored) / len(scored) for i in range(3))
 
 
 def test_one_pass_evaluation_matches_each_metric(spark):
     """evaluate_dataset's single aggregation gives exactly what
     micro_metrics and macro_metrics(target_relations_only=True) give, and
-    both match the Python twin, on the edge cases where the micro key
-    set and the per-relation struct sets part: fields holding the ␞
-    separator (two structs, one key), NULL relations, duplicate triples,
-    empty preds and a pred-only relation."""
+    both match the tuple-set twin, on fields holding the ␞ separator,
+    NULL relations, duplicate triples, empty preds and a pred-only
+    relation. Micro is the sum of the per-relation rows."""
     from genie_spark.evaluation import evaluate_dataset
 
     rows = [
@@ -409,21 +406,89 @@ def test_one_pass_evaluation_matches_each_metric(spark):
     macro = macro_metrics(df, target_relations_only=True).first()
     assert got["micro"] == {m: micro[m] for m in ("precision", "recall", "f1")}
     assert got["macro"] == {m: macro[f"macro_{m}"] for m in ("precision", "recall", "f1")}
-    (mp, mr, mf), (ap, ar, af) = _twin_scores(rows)
-    assert (micro["precision"], micro["recall"], micro["f1"]) == pytest.approx((mp, mr, mf))
+    twin_micro, twin_rel = _twin_counts(rows)
+    assert (micro["n_correct"], micro["n_pred"], micro["n_target"]) == twin_micro == (3, 6, 5)
+    assert (micro["precision"], micro["recall"], micro["f1"]) == pytest.approx(_prf_py(*twin_micro))
     assert (macro["macro_precision"], macro["macro_recall"], macro["macro_f1"]) == pytest.approx(
-        (ap, ar, af)
+        _twin_macro(twin_rel, True)
     )
-    # sample 1's collision makes the two semantics differ: one micro
-    # triple, two per-relation ones
-    assert (micro["n_correct"], micro["n_pred"], micro["n_target"]) == (3, 5, 5)
-    assert sum(r["n_pred"] for r in per_relation_metrics(df).collect()) == 6
+    per_rel = per_relation_metrics(df).collect()
+    sums = tuple(sum(r[c] for r in per_rel) for c in ("n_correct", "n_pred", "n_target"))
+    assert sums == twin_micro
+
+
+def test_metrics_match_tuple_set_twin_on_random_table(spark):
+    """A seeded random table whose fields are drawn from a, b, a␞b, ␀,
+    the empty string and NULL (so joined ``s␞r␞o`` strings collide often),
+    with duplicate triples, empty sides and pred-only samples: micro,
+    per-relation and both macro averaging sets equal the tuple-set twin.
+    Everything is read from one collect."""
+    import random
+
+    from genie_spark.metrics import micro_macro_metrics
+
+    rng = random.Random(22)
+    fields = ["a", "b", "a␞b", "␀", "", None]
+
+    def draw(k, rels):
+        return [(rng.choice(fields), rng.choice(rels), rng.choice(fields)) for _ in range(k)]
+
+    rows = []
+    for i in range(300):
+        target = draw(rng.randint(0, 4), fields)
+        target += target[:rng.randint(0, 1)]
+        pred = [rng.choice(target) for _ in range(rng.randint(0, len(target)))]
+        # "c" is a relation only predictions hold
+        rows.append((i, pred + draw(rng.randint(0, 3), fields + ["c"]), target))
+    df = spark.createDataFrame(rows, SCHEMA)
+
+    def scores(target_relations_only, prefix):
+        return micro_macro_metrics(df, target_relations_only).select(
+            *[F.col(c).alias(prefix + c) for c in (
+                "n_correct", "n_pred", "n_target", "precision", "recall", "f1",
+                "macro_precision", "macro_recall", "macro_f1", "n_relations",
+            )]
+        )
+
+    got = (
+        per_relation_metrics(df)
+        .crossJoin(scores(True, "t_"))
+        .crossJoin(scores(False, "e_"))
+        .collect()
+    )
+    twin_micro, twin_rel = _twin_counts(rows)
+    assert {r["rel"]: (r["n_correct"], r["n_pred"], r["n_target"]) for r in got} == twin_rel
+    assert len(got) == len(twin_rel)
+    for r in got:
+        assert (r["precision"], r["recall"], r["f1"]) == pytest.approx(_prf_py(*twin_rel[r["rel"]]))
+
+    def pick(prefix, *names):
+        return tuple(got[0][prefix + n] for n in names)
+
+    for prefix, target_only in (("t_", True), ("e_", False)):
+        assert pick(prefix, "n_correct", "n_pred", "n_target") == twin_micro
+        assert pick(prefix, "precision", "recall", "f1") == pytest.approx(_prf_py(*twin_micro))
+        assert pick(prefix, "macro_precision", "macro_recall", "macro_f1") == pytest.approx(
+            _twin_macro(twin_rel, target_only)
+        )
+        assert got[0][prefix + "n_relations"] == sum(
+            1 for n in twin_rel.values() if n[2] > 0 or not target_only
+        )
+    # the table holds what it is meant to: matches, a pred-only relation,
+    # and different triples whose joined s␞r␞o strings are equal
+    def key(x):
+        return "␞".join("␀" if f is None else f for f in x)
+
+    assert twin_micro[0] > 0 and twin_rel["c"][2] == 0
+    assert any(
+        key(x) == key(y) and x != y for _, pred, target in rows for x in pred for y in target
+    )
 
 
 def test_evaluate_dataset_is_one_action(spark, tmp_path):
     """An unbootstrapped evaluate_dataset over a pipeline-shaped input
     (extracted-output scan, groupBy(url), join with the gold pages) runs
-    its input once: at most six jobs, where a micro action plus a macro
+    its input once: at most five jobs, where a micro action plus a macro
     action ran ten."""
     from genie_spark.evaluation import evaluate_dataset
 
@@ -453,7 +518,7 @@ def test_evaluate_dataset_is_one_action(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup("evaluate-dataset")
-    assert len(jobs) <= 6, f"evaluate_dataset ran {len(jobs)} jobs"
+    assert len(jobs) <= 5, f"evaluate_dataset ran {len(jobs)} jobs"
     assert got["micro"]["precision"] == micro_metrics(df).first()["precision"]
 
 

@@ -192,8 +192,8 @@ def test_iceberg_fallback_paths(spark, tmp_path):
 def test_read_testing_output_feeds_evaluation(spark, tmp_path):
     """The reference's testing_output.json (either key spelling) scans
     straight into the evaluation layer: parsed triple sets, dedup'd,
-    scorable by evaluate_micro."""
-    from genie_spark.evaluation import evaluate_micro
+    scorable by evaluate_dataset."""
+    from genie_spark.evaluation import evaluate_dataset
     from genie_spark.sources import read_testing_output
 
     p = tmp_path / "testing_output.jsonl"
@@ -212,5 +212,5 @@ def test_read_testing_output_feeds_evaluation(spark, tmp_path):
     rows = {r["id"]: r for r in df.collect()}
     assert rows["0"]["input"] == "s1" and rows["1"]["input"] == "s2"
     assert [tuple(t) for t in rows["0"]["pred"]] == [("A", "r", "B")]  # dedup'd
-    scores = evaluate_micro(df)
+    scores = evaluate_dataset(df)["micro"]
     assert scores["precision"] == 0.5 and scores["recall"] == 0.5

@@ -120,3 +120,33 @@ def test_cli_relation_restriction_and_bootstrap(spark, tmp_path, run_files):
     assert 0.0 <= mean <= 1.0 and std >= 0.0
     assert isinstance(results["micro"]["f1"], tuple)
     assert set(results["macro"]) == {"precision", "recall", "f1"}
+
+
+def test_cli_per_relation_table_leaves_out_pred_only_relations(spark, tmp_path):
+    """macro_per_relation.json holds the relations macro averages over:
+    those with a target triple. A relation only ever predicted is left
+    out, though it still counts in micro precision."""
+    lin = " <sub> {} <rel> {} <obj> {} <et>"
+    rows = [
+        {"id": "1", "input": "a",
+         "guess": lin.format("A", "r1", "B") + lin.format("X", "halluc", "Y"),
+         "target": lin.format("A", "r1", "B")},
+        {"id": "2", "input": "b", "guess": lin.format("C", "r2", "D"),
+         "target": lin.format("C", "r2", "D") + lin.format("E", "r2", "F")},
+    ]
+    inp = tmp_path / "testing_output.json"
+    inp.write_text("\n".join(json.dumps(r) for r in rows))
+    out_dir = str(tmp_path / "eval_pred_only")
+    results = evaluate_from_file.main(["--input", str(inp), "--output-dir", out_dir])
+
+    # micro: 2 correct of 3 predicted ('halluc' included), 3 targeted
+    assert results["micro"]["precision"] == pytest.approx(2 / 3)
+    assert results["micro"]["recall"] == pytest.approx(2 / 3)
+    table = json.load(open(os.path.join(out_dir, "macro_per_relation.json")))
+    assert {r["rel"]: (r["n_correct"], r["n_pred"], r["n_target"]) for r in table} == {
+        "r1": (1, 1, 1),
+        "r2": (1, 1, 2),
+    }
+    # macro averages exactly those rows: (1 + 0.5) / 2
+    assert results["macro"]["recall"] == pytest.approx(0.75)
+    assert results["macro"]["precision"] == pytest.approx(1.0)

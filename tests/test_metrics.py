@@ -345,6 +345,9 @@ def test_evaluation_runner_matches_metric_modules(spark):
     # 'halluc' (pred-only) is not averaged: (r1 + r2 + r3) / 3
     assert ds["macro"]["recall"] == pytest.approx((1.0 + 0.5 + 0.0) / 3)
     assert ds["macro"]["precision"] == pytest.approx((1.0 + 1.0 + 0.0) / 3)
+    # the per-relation table evaluate_from_file writes leaves it out too
+    per_rel = per_relation_metrics(df).filter("n_target > 0").collect()
+    assert {r["rel"] for r in per_rel} == {"r1", "r2", "r3"}
 
     # restriction applies to BOTH sides (evaluation.py:34-36)
     only_r1 = evaluate_dataset(df.select(

@@ -31,12 +31,18 @@ from pyspark.sql.functions import broadcast
 def dedup_catalog(catalog: DataFrame) -> DataFrame:
     """J6 (reference genie/utils/utils.py:39-104): drop catalog entries
     whose surface form maps to more than one id — an ambiguous name can't
-    canonicalize. groupBy + filter + semi-join, all stock."""
-    unique_names = (
-        catalog.groupBy("name").count().filter(F.col("count") == 1).select("name")
-    )
-    return catalog.join(broadcast(unique_names), "name", "inner").select(
-        catalog["id"], catalog["name"], catalog["provenance"]
+    canonicalize. One groupBy: a name listed once keeps its row's id and
+    provenance (the min over one row is that row's value); NULL names
+    never link, so they are dropped too."""
+    return (
+        catalog.groupBy("name")
+        .agg(
+            F.expr("count(1) AS _rows"),
+            F.expr("min(id) AS id"),
+            F.expr("min(provenance) AS provenance"),
+        )
+        .filter("_rows = 1 AND name IS NOT NULL")
+        .select("id", "name", "provenance")
     )
 
 
@@ -52,15 +58,10 @@ def surface_to_id(
 
     Input must have columns s, r, o; passes through all other columns.
     """
-    ents = dedup_catalog(ent_catalog).select(
-        F.col("name"), F.col("id"), F.col("provenance")
-    )
-    rels = dedup_catalog(rel_catalog).select(F.col("name"), F.col("id"))
-    e_s = broadcast(ents.select(F.col("name").alias("s"), F.col("id").alias("s_id"),
-                                F.col("provenance").alias("s_provenance")))
-    e_o = broadcast(ents.select(F.col("name").alias("o"), F.col("id").alias("o_id"),
-                                F.col("provenance").alias("o_provenance")))
-    r_r = broadcast(rels.select(F.col("name").alias("r"), F.col("id").alias("r_id")))
+    ents = dedup_catalog(ent_catalog)
+    e_s = broadcast(ents.selectExpr("name AS s", "id AS s_id", "provenance AS s_provenance"))
+    e_o = broadcast(ents.selectExpr("name AS o", "id AS o_id", "provenance AS o_provenance"))
+    r_r = broadcast(dedup_catalog(rel_catalog).selectExpr("name AS r", "id AS r_id"))
     return triples.join(e_s, "s", how).join(r_r, "r", how).join(e_o, "o", how)
 
 
@@ -158,9 +159,8 @@ def materialize_graph(
     per-rank JSONL lineage (genie_base_pl.py:275-297) with a single
     shuffle-sharing groupBy.
     """
-    flat = extracted.select(
-        "url", F.explode_outer("pred_triples").alias("t")
-    ).filter(F.col("t").isNotNull()).select("url", "t.s", "t.r", "t.o")
+    # a NULL triple inlines as a row of NULLs, which the inner joins drop
+    flat = extracted.selectExpr("url", "inline(pred_triples)")
     linked = surface_to_id(flat, ent_catalog, rel_catalog, how="inner")
     if salt_buckets > 1:
         # explicit skew pre-reduction: dedup (triple, url) pairs under a
@@ -174,16 +174,14 @@ def materialize_graph(
     # aggregation-order-dependent — min keeps the graph rows
     # partition-invariant, the invariant the whole decode path holds.
     grouped = linked.groupBy("s_id", "r_id", "o_id").agg(
-        F.min("s").alias("subj_name"),
-        F.min("r").alias("pred_name"),
-        F.min("o").alias("obj_name"),
-        F.countDistinct("url").alias("n_sources"),
-        F.min("url").alias("first_url"),
+        F.expr("min(s) AS subj_name"),
+        F.expr("min(r) AS pred_name"),
+        F.expr("min(o) AS obj_name"),
+        F.expr("count(DISTINCT url) AS n_sources"),
+        F.expr("min(url) AS first_url"),
     )
-    return grouped.select(
-        F.col("s_id").alias("subj"),
-        F.col("r_id").alias("pred"),
-        F.col("o_id").alias("obj"),
+    return grouped.selectExpr(
+        "s_id AS subj", "r_id AS pred", "o_id AS obj",
         "subj_name", "pred_name", "obj_name", "n_sources", "first_url",
     )
 

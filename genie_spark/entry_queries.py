@@ -570,7 +570,7 @@ def linearize_roundtrip(spark, sf_dir):
         .repartition(spark.sparkContext.defaultParallelism)
     )
     lin = triples.withColumn("lin", format_triples_col(F.col("triples")))
-    parsed = lin.withColumn("parsed", parse_triples_col(F.col("lin")))
+    parsed = lin.withColumn("parsed", parse_triples_col("lin"))
     return parsed.select(
         "l_orderkey",
         F.size("parsed").cast("bigint").alias("n_parsed"),

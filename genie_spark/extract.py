@@ -141,23 +141,29 @@ def html_to_text_col() -> Column:
     return F.regexp_replace(text, "\\n+$", "")
 
 
+def _sql_str(value: str) -> str:
+    """``value`` as a Spark SQL string literal: the parser reads a
+    backslash as an escape, so both it and the quote are escaped."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+# the split as one parsed SQL expression: its four higher-order-function
+# lambdas built through the Column API cost ~200 py4j round trips a plan
+_SENTENCES_SQL = (
+    "transform("
+    "filter(flatten(transform("
+    "filter(split(text, '\\n'), p -> length(p) > 0), "
+    f"p -> split(p, {_sql_str(SENT_SPLIT_PATTERN)}))), s -> trim(s) != ''), "
+    f"s -> regexp_replace(concat(s, ' '), {_sql_str(WS_PATTERN)}, ' '))"
+)
+
+
 def sentences_df(pages: DataFrame) -> DataFrame:
     """pages(url, ..., text) → one row per sentence:
     (url, sent_idx, input) with the same semantics as
     :func:`split_sentences`. Pure higher-order functions + one generator
     expression — stays inside whole-stage codegen, no Python."""
-    paras = F.filter(F.split(F.col("text"), "\n"), lambda p: F.length(p) > 0)
-    sents = F.flatten(
-        F.transform(paras, lambda p: F.split(p, SENT_SPLIT_PATTERN))
-    )
-    cleaned = F.transform(
-        F.filter(sents, lambda s: F.trim(s) != F.lit("")),
-        lambda s: F.regexp_replace(F.concat(s, F.lit(" ")), WS_PATTERN, " "),
-    )
-    return pages.withColumn("_sents", cleaned).select(
-        "*",
-        F.posexplode("_sents").alias("sent_idx", "input"),
-    ).drop("_sents")
+    return pages.selectExpr("*", f"posexplode({_SENTENCES_SQL}) AS (sent_idx, input)")
 
 
 def bounded_units_pos_col(bounds: Column) -> Column:

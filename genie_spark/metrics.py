@@ -19,41 +19,51 @@ counts.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .datapipe.hashes import affine_mix, h60
 
 
-def _triple_sets():
-    """(pred, target, pred ∩ target) of one sample as distinct struct
-    arrays (reference triplet_set_f1.py:14-20). Struct equality treats
-    two NULL fields as equal, as Python tuple equality does."""
-    p = F.array_distinct(F.col("pred"))
-    t = F.array_distinct(F.col("target"))
-    return p, t, F.array_intersect(p, t)
+# A sample's triple sets as SQL over its ``pred`` and ``target`` columns
+# (reference triplet_set_f1.py:14-20): distinct struct arrays and their
+# intersection. Struct equality treats two NULL fields as equal, as Python
+# tuple equality does. The metrics below build their expressions as SQL
+# text: a higher-order-function lambda built through the Column API costs
+# dozens of py4j round trips, parsed SQL costs one.
+_PRED = "array_distinct(pred)"
+_TARGET = "array_distinct(target)"
+_BOTH = f"array_intersect({_PRED}, {_TARGET})"
 
 
 def _counts(df: DataFrame) -> DataFrame:
     """Per-sample n_correct / n_pred / n_target (reference
     triplet_set_f1.py:14-20), the form the bootstrap resamples."""
-    p, t, both = _triple_sets()
-    return df.withColumn("n_correct", F.size(both)).withColumn(
-        "n_pred", F.size(p)
-    ).withColumn("n_target", F.size(t))
+    return df.selectExpr(
+        "*", f"size({_BOTH}) AS n_correct", f"size({_PRED}) AS n_pred",
+        f"size({_TARGET}) AS n_target",
+    )
 
 
-def _prf(correct: Column, pred: Column, target: Column):
-    """Zero-division semantics of the reference (triplet_set_recall.py:48-52,
+def _prf(correct: str, pred: str, target: str):
+    """SQL precision, recall and F1 over three count columns, with the
+    zero-division semantics of the reference (triplet_set_recall.py:48-52,
     triplet_set_precision.py / triplet_set_f1.py compute): an empty
     denominator yields 0.0, and F1 is 0.0 when P+R == 0."""
-    precision = F.when(pred == 0, 0.0).otherwise(correct / pred)
-    recall = F.when(target == 0, 0.0).otherwise(correct / target)
-    f1 = F.when(
-        (precision + recall) == 0, 0.0
-    ).otherwise(2 * precision * recall / (precision + recall))
+    precision = f"CASE WHEN {pred} = 0 THEN 0.0D ELSE {correct} / {pred} END"
+    recall = f"CASE WHEN {target} = 0 THEN 0.0D ELSE {correct} / {target} END"
+    f1 = (
+        f"CASE WHEN ({precision}) + ({recall}) = 0 THEN 0.0D"
+        f" ELSE ({precision}) * 2 * ({recall}) / (({precision}) + ({recall})) END"
+    )
     return precision, recall, f1
 
+
+# the three scores as select items over the per-relation count columns
+_SCORES = tuple(
+    f"{e} AS {name}"
+    for e, name in zip(_prf("n_correct", "n_pred", "n_target"), ("precision", "recall", "f1"))
+)
 
 _COUNT_COLS = ("n_correct", "n_pred", "n_target")
 
@@ -69,33 +79,26 @@ def _eval_counts(df: DataFrame) -> DataFrame:
     sets: the micro counts are their sum. Shape: per row, one tagged
     (rel, c, np, nt) contribution per distinct triple of the
     intersection, the pred set and the target set, then a SINGLE
-    explode + groupBy. Map-side partial agg means the shuffle carries
+    inline + groupBy. Map-side partial agg means the shuffle carries
     |distinct rels| × partitions counter rows, independent of data size.
     A sample whose ``pred`` or ``target`` is NULL rather than an empty
     array emits nothing."""
-    p, t, both = _triple_sets()
 
-    def tagged(c, np_, nt):
-        return lambda x: F.struct(
-            x["r"].alias("rel"),
-            F.lit(c).alias("c"),
-            F.lit(np_).alias("np"),
-            F.lit(nt).alias("nt"),
+    def tagged(arr: str, c: int, np_: int, nt: int) -> str:
+        return (
+            f"transform({arr}, x -> named_struct("
+            f"'rel', x.r, 'c', {c}, 'np', {np_}, 'nt', {nt}))"
         )
 
-    contrib = df.select(
-        F.explode(
-            F.concat(
-                F.transform(both, tagged(1, 0, 0)),
-                F.transform(p, tagged(0, 1, 0)),
-                F.transform(t, tagged(0, 0, 1)),
-            )
-        ).alias("e")
+    contrib = df.selectExpr(
+        "inline(concat("
+        f"{tagged(_BOTH, 1, 0, 0)}, {tagged(_PRED, 0, 1, 0)}, {tagged(_TARGET, 0, 0, 1)}"
+        "))"
     )
-    return contrib.groupBy(F.col("e.rel").alias("rel")).agg(
-        F.sum("e.c").alias("n_correct"),
-        F.sum("e.np").alias("n_pred"),
-        F.sum("e.nt").alias("n_target"),
+    return contrib.groupBy("rel").agg(
+        F.sum("c").alias("n_correct"),
+        F.sum("np").alias("n_pred"),
+        F.sum("nt").alias("n_target"),
     )
 
 
@@ -115,18 +118,17 @@ def micro_macro_metrics(df: DataFrame, target_relations_only: bool) -> DataFrame
     unq_target_rels, so a hallucinated pred-only relation does not add a
     zero-F1 group to the mean), else relations appearing on either side
     (stricter, and the semantics the round-1 oracles pinned)."""
-    averaged = F.col("n_target") > 0 if target_relations_only else F.lit(True)
-    p, r, f1 = _prf(F.col("n_correct"), F.col("n_pred"), F.col("n_target"))
-    tot = _eval_counts(df).agg(
-        *[F.coalesce(F.sum(c), F.lit(0)).alias(c) for c in _COUNT_COLS],
-        F.avg(F.when(averaged, p)).alias("macro_precision"),
-        F.avg(F.when(averaged, r)).alias("macro_recall"),
-        F.avg(F.when(averaged, f1)).alias("macro_f1"),
-        F.count(F.when(averaged, F.lit(1))).alias("n_relations"),
+    averaged = "n_target > 0" if target_relations_only else "true"
+    p, r, f1 = _prf("n_correct", "n_pred", "n_target")
+    tot = _eval_counts(df).selectExpr(
+        *[f"coalesce(sum({c}), 0) AS {c}" for c in _COUNT_COLS],
+        f"avg(CASE WHEN {averaged} THEN {p} END) AS macro_precision",
+        f"avg(CASE WHEN {averaged} THEN {r} END) AS macro_recall",
+        f"avg(CASE WHEN {averaged} THEN {f1} END) AS macro_f1",
+        f"count(CASE WHEN {averaged} THEN 1 END) AS n_relations",
     )
-    p, r, f1 = _prf(F.col("n_correct"), F.col("n_pred"), F.col("n_target"))
-    return tot.select(
-        p.alias("precision"), r.alias("recall"), f1.alias("f1"), *_COUNT_COLS,
+    return tot.selectExpr(
+        *_SCORES, *_COUNT_COLS,
         "macro_precision", "macro_recall", "macro_f1", "n_relations",
     )
 
@@ -166,12 +168,7 @@ def macro_metrics(
 
 def per_relation_metrics(df: DataFrame) -> DataFrame:
     """Per-relation micro P/R/F1 table (the rows A2 averages)."""
-    per_rel = _eval_counts(df)
-    p, r, f1 = _prf(F.col("n_correct"), F.col("n_pred"), F.col("n_target"))
-    return per_rel.select(
-        "rel", p.alias("precision"), r.alias("recall"), f1.alias("f1"),
-        *_COUNT_COLS,
-    )
+    return _eval_counts(df).selectExpr("rel", *_SCORES, *_COUNT_COLS)
 
 
 def bucket_metrics(df: DataFrame, train_rel_counts: DataFrame) -> DataFrame:
@@ -197,11 +194,7 @@ def bucket_metrics(df: DataFrame, train_rel_counts: DataFrame) -> DataFrame:
         F.sum("n_target").alias("n_target"),
         F.count("*").alias("n_relations"),
     )
-    p, r, f1 = _prf(F.col("n_correct"), F.col("n_pred"), F.col("n_target"))
-    return agg.select(
-        "bucket", p.alias("precision"), r.alias("recall"), f1.alias("f1"),
-        "n_relations", "n_correct", "n_pred", "n_target",
-    )
+    return agg.selectExpr("bucket", *_SCORES, "n_relations", *_COUNT_COLS)
 
 
 def zero_shot_metrics(df: DataFrame, rel_groups: DataFrame) -> DataFrame:
@@ -218,11 +211,7 @@ def zero_shot_metrics(df: DataFrame, rel_groups: DataFrame) -> DataFrame:
         F.sum("n_pred").alias("n_pred"),
         F.sum("n_target").alias("n_target"),
     )
-    p, r, f1 = _prf(F.col("n_correct"), F.col("n_pred"), F.col("n_target"))
-    return agg.select(
-        "group", p.alias("precision"), r.alias("recall"), f1.alias("f1"),
-        "n_correct", "n_pred", "n_target",
-    )
+    return agg.selectExpr("`group`", *_SCORES, *_COUNT_COLS)
 
 
 def _distributed_rank(df: DataFrame, id_col, out_col: str = "j"):
@@ -318,8 +307,8 @@ def bootstrap_micro_multinomial(
         F.sum(F.col("n_pred") * F.col("wt")).alias("p"),
         F.sum(F.col("n_target") * F.col("wt")).alias("t"),
     )
-    p, r, f1 = _prf(F.col("c"), F.col("p"), F.col("t"))
-    scored = per_run.select(p.alias("precision"), r.alias("recall"), f1.alias("f1"))
+    p, r, f1 = _prf("c", "p", "t")
+    scored = per_run.selectExpr(f"{p} AS precision", f"{r} AS recall", f"{f1} AS f1")
     stats = scored.agg(
         F.avg("precision").alias("ap"), F.stddev_samp("precision").alias("sp"),
         F.avg("recall").alias("ar"), F.stddev_samp("recall").alias("sr"),

@@ -166,12 +166,8 @@ def read_testing_output(spark: SparkSession, path: str) -> DataFrame:
     return raw.select(
         "id",
         F.coalesce("raw_input", "input").alias("input"),
-        parse_triples_col(
-            F.coalesce(F.col("guess"), F.col("prediction"), F.lit(""))
-        ).alias("pred"),
-        parse_triples_col(
-            F.coalesce(F.col("raw_output"), F.col("target"), F.lit(""))
-        ).alias("target"),
+        parse_triples_col("coalesce(guess, prediction, '')").alias("pred"),
+        parse_triples_col("coalesce(raw_output, target, '')").alias("target"),
     )
 
 

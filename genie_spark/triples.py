@@ -64,27 +64,24 @@ def format_linearization(triples: Sequence[Tuple[str, str, str]]) -> str:
 # ---------------------------------------------------------------------------
 
 
-def parse_triples_col(col: Column) -> Column:
-    """Column[string] → Column[array<struct<s,r,o>>], same semantics as
+def parse_triples_col(text_sql: str) -> Column:
+    """The string column the SQL expression ``text_sql`` names →
+    Column[array<struct<s,r,o>>], same semantics as
     :func:`parse_linearization`, expressed with higher-order functions so it
-    stays inside whole-stage codegen (no UDF)."""
-    parts = F.filter(
-        F.transform(F.split(col, TAG_SPLIT_PATTERN), lambda x: F.trim(x)),
-        lambda x: x != F.lit(""),
+    stays inside whole-stage codegen (no UDF). One parsed SQL string:
+    built through the Column API, its three lambdas cost ~240 py4j round
+    trips a plan."""
+    parts = (
+        f"filter(transform(split({text_sql}, '{TAG_SPLIT_PATTERN}'), x -> trim(x)), "
+        "x -> x != '')"
     )
-    n = F.size(parts)
-    triples = F.when(
-        n >= 3,
-        F.transform(
-            F.sequence(F.lit(0), n - F.lit(3), F.lit(3)),
-            lambda i: F.struct(
-                F.element_at(parts, i + 1).alias("s"),
-                F.element_at(parts, i + 2).alias("r"),
-                F.element_at(parts, i + 3).alias("o"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<s:string,r:string,o:string>>"))
-    return F.array_distinct(triples)
+    return F.expr(
+        f"array_distinct(CASE WHEN size({parts}) >= 3"
+        f" THEN transform(sequence(0, size({parts}) - 3, 3), i -> named_struct("
+        f"'s', element_at({parts}, i + 1), 'r', element_at({parts}, i + 2),"
+        f" 'o', element_at({parts}, i + 3)))"
+        " ELSE CAST(array() AS array<struct<s:string,r:string,o:string>>) END)"
+    )
 
 
 def format_triples_col(col: Column) -> Column:

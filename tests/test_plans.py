@@ -78,10 +78,10 @@ def test_surface_to_id_broadcasts(spark):
     )
     rels = spark.createDataFrame([("P1", "R", "en_title")], ["id", "name", "provenance"])
     plan = _tree(surface_to_id(triples, ents, rels))
-    # 3 fact-side lookups (s, r, o) + 3 dimension-internal dedup semi-joins
-    # (dedup_catalog; the entity dedup subtree appears twice, once per use).
-    # All broadcast — the fact side never shuffles for any of them.
-    assert plan.count("BroadcastHashJoin") == 6, plan
+    # 3 fact-side lookups (s, r, o); dedup_catalog is an aggregation
+    # over the dimension, not a join. All broadcast — the fact side never
+    # shuffles for any of them.
+    assert plan.count("BroadcastHashJoin") == 3, plan
     assert "SortMergeJoin" not in plan
 
 

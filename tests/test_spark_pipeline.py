@@ -79,7 +79,7 @@ def test_parse_triples_col_matches_python(spark):
         " <sub> \xa0 <rel> x <obj> y <et>",  # NBSP-only field survives
     ]
     df = spark.createDataFrame([(s,) for s in lins], ["lin"]).withColumn(
-        "triples", parse_triples_col(F.col("lin"))
+        "triples", parse_triples_col("lin")
     )
     for r in df.collect():
         got = [(t["s"], t["r"], t["o"]) for t in r["triples"]]

@@ -40,10 +40,15 @@ def _docs_as_pages(docs: DataFrame) -> DataFrame:
 
 def _corpus_catalogs(docs: DataFrame) -> tuple[list[str], list[str]]:
     """Deterministic closed-world catalog from the corpus vocabulary:
-    words of length ≥ 4 are entity names, length-3 words are relations."""
+    words of length ≥ 4 are entity names, length-3 words are relations.
+    Words containing '<' are excluded: '<' opens every tag of the
+    linearization grammar, and the redaction stage writes <EMAIL>/<URL>
+    tokens — neither may become a catalog name (the rule of
+    sources.read_catalog F10). oracle_twin.corpus_catalog is the
+    pure-Python twin."""
     words = (
         docs.select(F.explode(F.split("text", " ")).alias("w"))
-        .filter(F.length("w") >= 3)
+        .filter((F.length("w") >= 3) & ~F.col("w").contains("<"))
         .distinct()
         .collect()
     )

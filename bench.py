@@ -465,27 +465,22 @@ def _hw_worker_setup(sf_dir: str) -> None:
     global _HW_CTX
     import duckdb
 
-    from genie_spark.constraints import TagCodes
-    from genie_spark.decode import DeterministicScorer
     from genie_spark.extract import split_sentences
-    from genie_spark.tokenizer import WordTokenizer
-    from genie_spark.trie import trie_from_names
+    from genie_spark.oracle_twin import corpus_catalog
+    from genie_spark.pipeline import default_stack_factory
 
     rows = duckdb.sql(
         "SELECT text FROM read_parquet('"
         + os.path.join(sf_dir, "documents.parquet")
         + "') ORDER BY doc_id LIMIT 2000"
     ).fetchall()
-    words = sorted({w for (t,) in rows for w in t.split() if len(w) >= 3})
-    ents = [w for w in words if len(w) >= 4]
-    rels = [w for w in words if len(w) == 3]
-    tok = WordTokenizer(ents + rels)
+    ents, rels = corpus_catalog(t for (t,) in rows)
     sents = []
     for (t,) in rows:
         sents.extend(split_sentences(t.replace(" the ", ". the ")))
     _HW_CTX = (
-        sents, tok, TagCodes(tok), trie_from_names(ents, tok),
-        trie_from_names(rels, tok), DeterministicScorer(tok),
+        sents,
+        *default_stack_factory({"ent_names": ents, "rel_names": rels}),
     )
 
 

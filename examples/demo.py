@@ -7,7 +7,8 @@ schema, run constrained generation over ad-hoc sentences with a beam
 width larger than the returned count, and map surface forms to
 catalog ids (and back, with unmapped statuses). Everything runs
 sandbox-local with the deterministic scorer; on a cluster pass
-``hf_checkpoint=...`` to GenieExtractor for the transformer path.
+``stack_factory=functools.partial(pipeline.hf_stack_factory,
+checkpoint=..., device=...)`` to GenieExtractor for the transformer path.
 
     python examples/demo.py
 """

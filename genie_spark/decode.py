@@ -231,28 +231,6 @@ class DeterministicScorer:
         return out
 
 
-class UniformScorer:
-    """Constraint-only ablation scorer: every allowed token scores 0, so
-    the output is determined purely by the grammar + tries + beam-search
-    tiebreak (lowest token id first). Useful as a baseline separating
-    what the CONSTRAINTS contribute from what the model contributes —
-    and, being a distinct module-level class, as the picklable
-    scorer_factory the pipeline tests inject to prove scorer selection
-    reaches executors."""
-
-    def __init__(self, tokenizer):
-        self.tok = tokenizer
-
-    def context(self, text):
-        return None
-
-    def advance(self, ctx, ptr, token):
-        return ptr
-
-    def score(self, ctx, tokens, state, allowed, ptr=None):
-        return [0.0] * len(allowed)
-
-
 class HFSeq2SeqScorer:  # pragma: no cover - needs torch/transformers
     """GPU production scorer: wraps a HF encoder-decoder checkpoint.
 

@@ -25,35 +25,38 @@ execution environments.
 from __future__ import annotations
 
 import os
-from typing import List, Optional, Tuple
+from typing import Iterable, List, Optional, Tuple
 
 Row = Tuple[str, int, Optional[str], Optional[str], Optional[str]]
 
 
+def corpus_catalog(texts: Iterable[str]) -> Tuple[List[str], List[str]]:
+    """Pure-Python twin of __spark_entry__._corpus_catalogs: words split
+    on single spaces, length >= 4 are entity names, length 3 relations,
+    and no word containing '<' is a name."""
+    vocab = sorted(
+        {w for t in texts for w in t.split(" ") if len(w) >= 3 and "<" not in w}
+    )
+    return [w for w in vocab if len(w) >= 4], [w for w in vocab if len(w) == 3]
+
+
 def _twin_stack(sf_dir: str):
-    """Shared single-process context: docs + the decode stack built over
-    the corpus-derived catalog (twin of __spark_entry__._corpus_catalogs
-    feeding pipeline._worker_setup)."""
+    """Shared single-process context: docs + the decode stack
+    pipeline.default_stack_factory builds over the corpus-derived catalog
+    (twin of __spark_entry__._corpus_catalogs feeding
+    pipeline._worker_setup)."""
     import duckdb
 
-    from .constraints import TagCodes
-    from .decode import DeterministicScorer
-    from .tokenizer import WordTokenizer
-    from .trie import trie_from_names
+    from .pipeline import default_stack_factory
 
     docs = duckdb.sql(
         "SELECT doc_id, text, lang, source FROM read_parquet('"
         + os.path.join(sf_dir, "documents.parquet")
         + "') ORDER BY doc_id"
     ).fetchall()
-    # catalog derivation: split on single space, length >= 3, over ALL docs
-    words = sorted({w for (_, t, _, _) in docs for w in t.split(" ") if len(w) >= 3})
-    ents = sorted({w for w in words if len(w) >= 4})
-    rels = sorted({w for w in words if len(w) == 3})
-    tok = WordTokenizer(ents + rels)
-    codes = TagCodes(tok)
-    ent_t, rel_t = trie_from_names(ents, tok), trie_from_names(rels, tok)
-    return docs, tok, codes, ent_t, rel_t, DeterministicScorer(tok)
+    ents, rels = corpus_catalog(t for (_, t, _, _) in docs)
+    stack = default_stack_factory({"ent_names": ents, "rel_names": rels})
+    return (docs, *stack)
 
 
 # oracle_sql() may be invoked repeatedly (per-query drivers); the twin

@@ -71,10 +71,9 @@ _WORKER_CACHE: dict = {}
 
 def default_stack_factory(payload: dict):
     """Build the decode stack in WordTokenizer space (the sandbox/oracle
-    path). ``payload["scorer_factory"]``, when present, is a picklable
-    ``tokenizer -> scorer`` callable replacing DeterministicScorer — the
-    pluggable-scorer seam (reference analog: the model object handed to
-    evaluate.py:35-66 is the scorer)."""
+    path) with the DeterministicScorer. Prebuilt CSR arrays in the
+    payload (``trie_artifacts``) are WordTokenizer-space ids, so only
+    this factory reads them."""
     tok = WordTokenizer(payload["ent_names"] + payload["rel_names"])
     codes = TagCodes(tok)
     if "ent_trie" in payload:
@@ -86,27 +85,25 @@ def default_stack_factory(payload: dict):
     else:
         ent = trie_from_names(payload["ent_names"], tok)
         rel = trie_from_names(payload["rel_names"], tok)
-    make_scorer = payload.get("scorer_factory")
-    scorer = make_scorer(tok) if make_scorer else DeterministicScorer(tok)
-    return tok, codes, ent, rel, scorer
+    return tok, codes, ent, rel, DeterministicScorer(tok)
 
 
-def hf_stack_factory(payload: dict):
+def hf_stack_factory(payload: dict, checkpoint: str, device: str):
     """Build the decode stack in the HF checkpoint's OWN id space — the
     production path (reference flagship: model.sample,
     genie_base_pl.py:435-555, with tag ids derived from the model's BART
     tokenizer, ie_prefix_constraints.py:94-131). The tokenizer adapter
     derives TagCodes from the checkpoint's tokenizer and the tries are
     re-encoded through it, so constraint masks, beam tokens, and
-    decoder_input_ids all live in one id space. Raises in this sandbox
-    (no torch/transformers) — the wiring is exercised by the fake-BPE
+    decoder_input_ids all live in one id space. Ship it as
+    ``GenieExtractor(stack_factory=functools.partial(hf_stack_factory,
+    checkpoint=..., device=...))``. Raises in this sandbox (no
+    torch/transformers) — the wiring is exercised by the fake-BPE
     adapter tests."""
     from .decode import HFSeq2SeqScorer
     from .hf_adapter import HFTokenizerAdapter
 
-    scorer = HFSeq2SeqScorer(
-        payload["hf_checkpoint"], device=payload.get("hf_device", "cuda")
-    )
+    scorer = HFSeq2SeqScorer(checkpoint, device=device)
     tok = HFTokenizerAdapter(scorer.tokenizer)
     codes = TagCodes(tok)
     ent = trie_from_names(payload["ent_names"], tok)
@@ -139,8 +136,7 @@ def _worker_setup(payload: dict):
     if hit is not None:
         return hit
     _keep_zip_directories()
-    factory = payload.get("stack_factory") or default_stack_factory
-    stack = factory(payload)
+    stack = payload["stack_factory"](payload)
     _WORKER_CACHE.clear()  # one active schema per worker; avoid leaks
     _WORKER_CACHE[key] = stack
     return _WORKER_CACHE[key]
@@ -185,10 +181,7 @@ class GenieExtractor:
         bos_first: bool = False,
         num_return_sequences: Optional[int] = None,
         trie_artifacts: Optional[tuple] = None,
-        scorer_factory=None,
-        hf_checkpoint: Optional[str] = None,
-        hf_device: str = "cuda",
-        stack_factory=None,
+        stack_factory=default_stack_factory,
         constrained: bool = True,
     ):
         """``constrained=False`` switches to FREE generation — the
@@ -200,25 +193,27 @@ class GenieExtractor:
         so output need not be well-formed and names need not be catalog
         entries.
 
-        Scorer selection (executor-side, shipped via the broadcast):
+        ``stack_factory`` chooses the decode stack: a picklable
+        ``payload -> (tok, codes, ent_trie, rel_trie, scorer)`` callable
+        that each executor's Python worker runs once, on the broadcast
+        payload (catalog names, plus the artifact arrays when
+        ``trie_artifacts`` is given). The reference analog is the model
+        object handed to evaluate.py:35-66.
 
-        * default — DeterministicScorer over WordTokenizer (sandbox/oracle
-          path).
-        * ``scorer_factory`` — a picklable ``tokenizer -> scorer``
-          callable built per worker in WordTokenizer space (mock/custom
-          scorers).
-        * ``hf_checkpoint`` — the production path: each worker loads the
-          HF seq2seq checkpoint and builds the WHOLE stack (TagCodes,
-          tries, beams) in that model's tokenizer id space via
+        * ``default_stack_factory`` (default) — DeterministicScorer over
+          WordTokenizer (sandbox/oracle path).
+        * ``functools.partial(hf_stack_factory, checkpoint=...,
+          device=...)`` — the production path: each worker loads the HF
+          seq2seq checkpoint and builds the WHOLE stack (TagCodes, tries,
+          beams) in that model's tokenizer id space via
           hf_adapter.HFTokenizerAdapter, matching the reference's
-          model.sample flagship (genie_base_pl.py:435-555). Mutually
-          exclusive with trie_artifacts (artifact token ids are
-          WordTokenizer-space) and scorer_factory.
-        * ``stack_factory`` — full custom control: a picklable
-          ``payload -> (tok, codes, ent_trie, rel_trie, scorer)``
-          callable (e.g. toy_bpe.toy_bpe_stack_factory, the executable
-          reference for the adapter contract). Mutually exclusive with
-          all of the above.
+          model.sample flagship (genie_base_pl.py:435-555).
+        * ``toy_bpe.toy_bpe_stack_factory`` — the executable reference for
+          the adapter contract where no checkpoint can load.
+
+        Factories other than the default rebuild the tries in their own
+        id space from the payload's names, so they ignore the artifact
+        arrays.
         """
         self.num_beams = num_beams
         # search width vs returned beams (reference hf_generation_params:
@@ -230,23 +225,6 @@ class GenieExtractor:
         self.length_penalty = length_penalty
         self.bos_first = bos_first
         self.constrained = constrained
-        if hf_checkpoint is not None and (
-            trie_artifacts is not None or scorer_factory is not None
-        ):
-            raise ValueError(
-                "hf_checkpoint builds its own tokenizer-space stack; it "
-                "cannot be combined with trie_artifacts or scorer_factory"
-            )
-        if stack_factory is not None and (
-            hf_checkpoint is not None
-            or scorer_factory is not None
-            or trie_artifacts is not None
-        ):
-            raise ValueError(
-                "stack_factory supplies the whole decode stack; it cannot "
-                "be combined with hf_checkpoint / scorer_factory / "
-                "trie_artifacts"
-            )
         if trie_artifacts is not None:
             # preloaded S10 artifacts (save_trie_artifacts): names come
             # from the companion jsonl, the CSR arrays broadcast as-is —
@@ -269,35 +247,20 @@ class GenieExtractor:
         payload = {
             "ent_names": sorted(set(ent_names)),
             "rel_names": sorted(set(rel_names)),
+            "stack_factory": stack_factory,
             **extra,
         }
-        if stack_factory is not None:
-            payload["stack_factory"] = stack_factory
-        elif hf_checkpoint is not None:
-            payload["stack_factory"] = hf_stack_factory
-            payload["hf_checkpoint"] = hf_checkpoint
-            payload["hf_device"] = hf_device
-        elif scorer_factory is not None:
-            payload["scorer_factory"] = scorer_factory
-
-        def _qual(fn):
-            return f"{fn.__module__}.{getattr(fn, '__qualname__', repr(fn))}"
-
-        # the key must separate stacks that share a catalog but differ in
-        # scorer/checkpoint, or worker reuse would serve the wrong scorer
-        stack_id = (
-            (stack_factory and _qual(stack_factory))
-            or hf_checkpoint
-            or (scorer_factory and _qual(scorer_factory))
-            or "default"
-        )
         # Hash the FULL name lists: a catalog refresh that preserves counts
         # and the first-N sorted names must still produce a distinct key, or
         # a reused Python worker would serve stale tries (silent wrong
         # triples). One md5 over the joined byte string is microseconds even
         # at ~6M names, and — unlike Python's salted hash() — stable across
-        # driver processes.
+        # driver processes. The factory's pickle (a module-level function
+        # pickles as its qualified name, a partial with its bound
+        # arguments) separates stacks that share a catalog, or worker
+        # reuse would serve the wrong scorer.
         import hashlib
+        import pickle
 
         catalog_digest = hashlib.md5()
         for name in payload["ent_names"]:
@@ -311,7 +274,7 @@ class GenieExtractor:
             len(payload["ent_names"]),
             len(payload["rel_names"]),
             catalog_digest.hexdigest(),
-            stack_id,
+            hashlib.md5(pickle.dumps(stack_factory)).hexdigest(),
         )
         self._bc = spark.sparkContext.broadcast(payload)
 

@@ -33,11 +33,11 @@ import json
 import os
 import sys
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def build_session(args) -> SparkSession:
@@ -79,18 +79,20 @@ def load_catalogs(spark: SparkSession, args, pages: DataFrame):
             for r in spark.read.parquet(args.rel_catalog).select("name").collect()
         ]
         return ents, rels
-    # closed-world catalog from the corpus vocabulary (deterministic).
-    # Words containing '<' are excluded: '<' is the tag-grammar char and
-    # the redaction stage introduces <EMAIL>/<URL> tokens — neither may
-    # ever become a catalog name (same rule as sources.read_catalog F10).
-    words = (
-        pages.select(F.explode(F.split("text", " ")).alias("w"))
-        .filter((F.length("w") >= 3) & (~F.col("w").contains("<")))
-        .distinct()
-        .collect()
-    )
-    vocab = sorted(r["w"] for r in words)
-    return [w for w in vocab if len(w) >= 4], [w for w in vocab if len(w) == 3]
+    import __spark_entry__ as entry_mod
+
+    return entry_mod._corpus_catalogs(pages)
+
+
+def stack_factory_for(args):
+    """The decode-stack factory GenieExtractor ships to the executors:
+    the checkpoint's own stack with --hf-checkpoint, else the default."""
+    from genie_spark.pipeline import default_stack_factory, hf_stack_factory
+
+    if args.hf_checkpoint:
+        return partial(hf_stack_factory, checkpoint=args.hf_checkpoint,
+                       device=args.hf_device)
+    return default_stack_factory
 
 
 def parse_args(argv=None):
@@ -221,7 +223,7 @@ def main():
         length_penalty=args.length_penalty, bos_first=args.bos_first,
         trie_artifacts=(args.ent_trie, args.rel_trie)
         if args.ent_trie else None,
-        hf_checkpoint=args.hf_checkpoint, hf_device=args.hf_device,
+        stack_factory=stack_factory_for(args),
     )
 
     def process(chunked_pages: DataFrame) -> DataFrame:

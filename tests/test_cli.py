@@ -61,3 +61,17 @@ def test_full_catalog_and_trie_pairs_parse():
     ])
     assert (args.ent_catalog, args.rel_catalog) == ("/cat/ents", "/cat/rels")
     assert (args.ent_trie, args.rel_trie) == ("/tries/ent", "/tries/rel")
+
+
+def test_stack_factory_for_args():
+    """--hf-checkpoint/--hf-device bind into an hf_stack_factory partial;
+    without them the default stack ships."""
+    from genie_spark.pipeline import default_stack_factory, hf_stack_factory
+
+    base = ["--input", "i", "--output", "o"]
+    f = run_pipeline.stack_factory_for(run_pipeline.parse_args(
+        [*base, "--hf-checkpoint", "ckpt", "--hf-device", "cpu"]))
+    assert (f.func, f.args, f.keywords) == (
+        hf_stack_factory, (), {"checkpoint": "ckpt", "device": "cpu"})
+    f = run_pipeline.stack_factory_for(run_pipeline.parse_args(base))
+    assert f is default_stack_factory

@@ -13,27 +13,19 @@ splitting as [Ġ<, tag, >]). What IS fully tested here:
 * end-to-end constrained beam search in a NON-WordTokenizer id space —
   multi-piece names walked through the trie cursor, EOS→'<' swap,
   grammar well-formedness, catalog closure of every emitted name;
-* scorer_factory plumbing: a non-default scorer injected through
+* stack-factory plumbing: a non-default stack shipped through
   GenieExtractor's broadcast reaches the executors (mapInPandas output
-  matches the driver-side twin of that scorer and differs from the
-  default scorer's output).
+  matches the driver-side twin of that stack), and the worker-cache key
+  separates stacks that share a catalog.
 """
 
-import re
+from functools import partial
 
 import pytest
-from pyspark.sql import functions as F
 
 from genie_spark.constraints import TagCodes
-from genie_spark.decode import (
-    INVALID_LOG_PROB,
-    DeterministicScorer,
-    UniformScorer,
-    generate_for_text,
-    top_valid_prediction,
-)
+from genie_spark.decode import INVALID_LOG_PROB, generate_for_text
 from genie_spark.hf_adapter import HFTokenizerAdapter, TagIdContractError
-from genie_spark.tokenizer import WordTokenizer
 from genie_spark.trie import trie_from_names
 from genie_spark.triples import parse_linearization
 
@@ -176,50 +168,8 @@ def test_bos_first_in_bpe_space(adapter):
 
 
 # ---------------------------------------------------------------------------
-# scorer_factory plumbing through the distributed pipeline
+# stack-factory plumbing through the distributed pipeline
 # ---------------------------------------------------------------------------
-
-
-def _driver_twin(texts, ents, rels, scorer_cls):
-    ents, rels = sorted(set(ents)), sorted(set(rels))
-    tok = WordTokenizer(ents + rels)
-    codes = TagCodes(tok)
-    ent_t, rel_t = trie_from_names(ents, tok), trie_from_names(rels, tok)
-    scorer = scorer_cls(tok)
-    return {
-        t: top_valid_prediction(
-            generate_for_text(t, scorer, tok, codes, ent_t, rel_t, num_beams=2)
-        )
-        for t in texts
-    }
-
-
-def test_scorer_factory_reaches_executors(spark):
-    """GenieExtractor(scorer_factory=UniformScorer) must build the
-    injected scorer on the executors: pipeline output matches the
-    driver-side UniformScorer twin and differs from the default
-    DeterministicScorer output (so the selection demonstrably took
-    effect), while the default path's goldens stay covered by
-    test_spark_pipeline."""
-    from genie_spark.pipeline import GenieExtractor
-
-    texts = [
-        "Albert Einstein was born in Zurich.",
-        "Mileva Maric lived in Switzerland.",
-        "the photon spouse Zurich story.",
-    ]
-    df = spark.createDataFrame([(t,) for t in texts], ["input"])
-
-    uni = GenieExtractor(
-        spark, ENTS, RELS, num_beams=2, scorer_factory=UniformScorer
-    ).transform(df)
-    got_uni = {r["input"]: r["prediction"] for r in uni.collect()}
-    assert got_uni == _driver_twin(texts, ENTS, RELS, UniformScorer)
-
-    default = GenieExtractor(spark, ENTS, RELS, num_beams=2).transform(df)
-    got_def = {r["input"]: r["prediction"] for r in default.collect()}
-    assert got_def == _driver_twin(texts, ENTS, RELS, DeterministicScorer)
-    assert got_uni != got_def, "injected scorer produced the default output"
 
 
 def test_toy_bpe_stack_runs_distributed(spark):
@@ -278,11 +228,58 @@ def test_adapter_decode_strips_only_0x20(adapter):
     assert adapter.decode(adapter.encode("Zurich")) == "Zurich"
 
 
-def test_hf_checkpoint_exclusive_with_other_stacks(spark):
-    from genie_spark.pipeline import GenieExtractor
+def test_cache_key_separates_bound_checkpoints(spark):
+    """The worker-cache key hashes the pickled stack factory, so two
+    extractors over one catalog that differ only in the checkpoint bound
+    into hf_stack_factory get different keys, and equal factories the
+    same key. Driver-side only: no factory runs."""
+    from genie_spark.pipeline import GenieExtractor, hf_stack_factory
+    from genie_spark.toy_bpe import toy_bpe_stack_factory
 
-    with pytest.raises(ValueError, match="hf_checkpoint"):
-        GenieExtractor(
-            spark, ENTS, RELS, hf_checkpoint="some/ckpt",
-            scorer_factory=UniformScorer,
+    def key(factory):
+        ex = GenieExtractor(spark, ENTS, RELS, stack_factory=factory)
+        return ex._bc.value["cache_key"]
+
+    def hf(checkpoint):
+        return partial(hf_stack_factory, checkpoint=checkpoint, device="cpu")
+
+    ka, kb = key(hf("a")), key(hf("b"))
+    assert ka[:3] == kb[:3], "same catalog"
+    assert ka != kb
+    assert key(hf("a")) == ka
+    assert key(toy_bpe_stack_factory) == key(toy_bpe_stack_factory)
+    assert key(toy_bpe_stack_factory) != key(hf("a"))
+
+
+def test_stacks_sharing_a_catalog_keep_their_own_output(spark):
+    """The default and the toy-BPE stack over the SAME catalog, run in
+    turn through one Spark session on one partition (so reused Python
+    workers see both keys): each run equals the driver-side twin of its
+    own factory, and the two stacks' beams differ, so a worker serving
+    the other stack's cached build would fail."""
+    from genie_spark.pipeline import GenieExtractor, default_stack_factory
+    from genie_spark.toy_bpe import toy_bpe_stack_factory
+
+    texts = [
+        "Albert Einstein was born in Zurich.",
+        "Mileva Maric married Albert Einstein in Switzerland.",
+    ]
+    df = spark.createDataFrame([(t,) for t in texts], ["input"]).repartition(1)
+    payload = {"ent_names": sorted(set(ENTS)), "rel_names": sorted(set(RELS))}
+
+    def beams(rows):
+        return {t: [(b["text"], b["log_prob"]) for b in bs] for t, bs in rows}
+
+    twins = {}
+    for factory in (default_stack_factory, toy_bpe_stack_factory):
+        tok, codes, ent_t, rel_t, scorer = factory(payload)
+        twins[factory] = beams(
+            (t, generate_for_text(t, scorer, tok, codes, ent_t, rel_t, num_beams=2))
+            for t in texts
         )
+    assert twins[default_stack_factory] != twins[toy_bpe_stack_factory]
+    for factory in (default_stack_factory, toy_bpe_stack_factory,
+                    default_stack_factory):
+        ex = GenieExtractor(spark, ENTS, RELS, num_beams=2, stack_factory=factory)
+        got = beams((r["input"], r["beams"]) for r in ex.transform(df).collect())
+        assert got == twins[factory], factory.__name__

@@ -407,6 +407,21 @@ def test_extractor_accepts_trie_artifacts(spark, tmp_path):
     assert key(loaded) == key(base)
 
 
+def test_corpus_catalog_leaves_out_tag_open_words(spark):
+    """A corpus word containing '<' (a redacted <EMAIL>, a stray x<y) is
+    never a catalog name: its trie path would begin with the tag-open
+    token. The Spark rule and its pure-Python twin agree."""
+    import __spark_entry__ as entry_mod
+    from genie_spark.oracle_twin import corpus_catalog
+
+    texts = ["mail <EMAIL> to Zurich now", "see <URL> and x<y for the spouse"]
+    docs = spark.createDataFrame([(t,) for t in texts], ["text"])
+    ents, rels = entry_mod._corpus_catalogs(docs)
+    assert [n for n in ents + rels if "<" in n] == []
+    assert "Zurich" in ents and "see" in rels
+    assert (ents, rels) == corpus_catalog(texts)
+
+
 def test_worker_cache_key_hashes_full_catalog(spark):
     """Two catalogs with equal ent/rel counts and identical first-100
     sorted entity names (differing only beyond position 100) must get
